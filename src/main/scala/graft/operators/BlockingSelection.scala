@@ -134,12 +134,9 @@ object BlockingSelection {
     // (-count, negMarginal, name) argmin — replacing 2 distributed
     // anti-join+count jobs PER STEP. 0 disables; oversized coverage
     // falls back to the distributed loop below.
-    val driverCap = spark.conf.getOption("graft.blocksel.driverFinishRows")
-      .orElse(spark.conf.getOption("spark.graft.blocksel.driverFinishRows"))
-      .map(_.toLong).getOrElse(1000000L)
-    val nCovP = covP.count()
-    val nCovN = covN.count()
-    if (driverCap > 0 && nCovP <= driverCap && nCovN <= driverCap) {
+    val driverCap = DriverFinish.cap(spark, "blocksel.driverFinishRows")
+    if (driverCap > 0 && covP.count() <= driverCap &&
+        covN.count() <= driverCap) {
       val pRows = covP.collect().map(r => (r.getString(0), (r.get(1), r.get(2))))
       val nRows = covN.collect().map(r => (r.getString(0), (r.get(1), r.get(2))))
       val pByFam = pRows.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
@@ -265,9 +262,7 @@ object BlockingSelection {
     // table is truth-sized by contract, so under the bounded-collect cap
     // the per-step anti-join + count jobs replay in-process from one
     // collect — identical marginals and (-count, name) argmin.
-    val driverCap = spark.conf.getOption("graft.blocksel.driverFinishRows")
-      .orElse(spark.conf.getOption("spark.graft.blocksel.driverFinishRows"))
-      .map(_.toLong).getOrElse(1000000L)
+    val driverCap = DriverFinish.cap(spark, "blocksel.driverFinishRows")
     if (driverCap > 0 && cov.count() <= driverCap) {
       val byFam = cov.collect().map(r => (r.getString(0), (r.get(1), r.get(2))))
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap

@@ -106,9 +106,7 @@ object CenterClustering {
     // row cap, never data-sized); 0 disables; non-atomic id types fall
     // back to the distributed loop.
     val spark = edges.sparkSession
-    val driverCap = spark.conf.getOption("graft.centers.driverFinishEdges")
-      .orElse(spark.conf.getOption("spark.graft.centers.driverFinishEdges"))
-      .map(_.toLong).getOrElse(1000000L)
+    val driverCap = DriverFinish.cap(spark, "centers.driverFinishEdges")
     val idCmp: Option[(Any, Any) => Int] = {
       import org.apache.spark.sql.types._
       canon.schema("la").dataType match {

@@ -99,9 +99,7 @@ object ConnectedComponents {
     // LAST few rounds (where per-round fixed cost dominates a tiny
     // frontier). Bounded like every other driver-side fold here (FS EM,
     // IVF fit): the cap is a hard row bound, never data-sized; 0 disables.
-    val driverCap = spark.conf.getOption("graft.cc.driverFinishEdges")
-      .orElse(spark.conf.getOption("spark.graft.cc.driverFinishEdges"))
-      .map(_.toLong).getOrElse(1000000L)
+    val driverCap = DriverFinish.cap(spark, "cc.driverFinishEdges")
 
     def driverFinish(frontier: DataFrame): DataFrame = {
       val collected = frontier.select(col("src"), col("dst")).collect()

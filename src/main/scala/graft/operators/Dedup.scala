@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   *                             shuffle on the hash, map-side combinable)
   *  - [[ngramJaccardPairs]]  — token-set Jaccard over blocked pairs
   *                             (verification-grade; quadratic per block,
-  *                             3-tier capped/salted/dropped like every
-  *                             other pair generator)
+  *                             blocks routed by [[Tiers]])
   *  - [[minhashLshPairs]]    — MinHash banding over token shingles
   *                             (sub-quadratic candidate generation; the
   *                             100 TB-scale path)
@@ -34,15 +33,6 @@ object Dedup {
   private def jaccardOf(ta: Column, tb: Column): Column =
     size(array_intersect(ta, tb)).cast("double") /
       size(array_union(ta, tb)).cast("double")
-
-  /** Rows of `banded` whose band bucket holds ≤ cap members: groupBy +
-    * join-back sizing (map-side combinable; the join is AQE-skew-
-    * splittable, unlike a window count — see minhashLshPairs notes). */
-  private def underCap(banded: DataFrame, bucketCap: Int): DataFrame =
-    banded.join(
-      banded.groupBy(col("key")).agg(count(lit(1)).as("n"))
-        .where(col("n") <= bucketCap),
-      "key")
 
   /** Exact dedup: (id, canonical_id, content_hash); canonical = min id of
     * the identical-content group. */
@@ -69,22 +59,13 @@ object Dedup {
       concat_ws("\u0001", blockCols.map(col): _*).as("bk"))
 
   /** Token-set Jaccard >= tau over pairs blocked by `blockCols` — quadratic
-    * PER BLOCK by construction, so it carries the same 3-tier skew policy
-    * as every other pair generator here (a hot block — e.g. blocking on
-    * `lang` alone over a monolingual crawl — must never land on one
-    * reducer):
+    * PER BLOCK by construction, so it carries the three-tier policy of
+    * [[Tiers]] (a hot block — e.g. blocking on `lang` alone over a
+    * monolingual crawl — must never land on one reducer). Dropping is
+    * OPT-IN (`hardCap` defaults to `Int.MaxValue`); a run that sets a
+    * finite cap must evaluate [[droppedNgramBuckets]] with the same
+    * arguments alongside.
     *
-    *  1. blocks <= `bucketCap`: plain equi-self-join on the block key;
-    *  2. `bucketCap` < n <= `hardCap`: salted grid self-join
-    *     ([[Linkage.saltedSelfJoin]]) — the block's n²/2 pair work is
-    *     sharded across saltGroups(saltGroups+1)/2 reducers, losslessly;
-    *  3. n > `hardCap`: dropped — OPT-IN (`hardCap` defaults to
-    *     `Int.MaxValue`, so no caller loses pairs without asking) and
-    *     never silent: a run that sets a finite cap must evaluate
-    *     [[droppedNgramBuckets]] with the same arguments alongside.
-    *
-    * Sizing is groupBy (map-side partial combine) + join-back, not a
-    * window count (a window buffers the whole hot block in ONE task).
     * Both tiers emit bare (ia, ib) candidates and share ONE verification
     * join back to the token sets (same shape as [[minhashLshPairs]] —
     * replicating variable-length token arrays through the salted grid
@@ -95,36 +76,17 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], tau: Double, bucketCap: Int = 500,
       hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
-    // base feeds the 3-tier candidate generator (sizing + join-back) and
-    // both verification sides — materialize the tokenization once
+    // base feeds the tier sizing, the join-back and both verification
+    // sides — materialize the tokenization once
     val base = ngramBase(docs, idCol, textCol, blockCols)
       .localCheckpoint(eager = false)
-    blockedCandidates(base, bucketCap, hardCap, saltGroups)
+    Tiers.pairs(base, Seq("bk"), "id", bucketCap, hardCap, saltGroups)
+      .select(col("id_a").as("ia"), col("id_b").as("ib"))
       .join(base.select(col("id").as("ia"), col("toks").as("ta")), "ia")
       .join(base.select(col("id").as("ib"), col("toks").as("tb")), "ib")
       .select(col("ia"), col("ib"),
         jaccardOf(col("ta"), col("tb")).as("jaccard"))
       .where(col("jaccard") >= tau)
-  }
-
-  /** The shared 3-tier (plain / salted-lossless / dropped) candidate
-    * generator over a `(id, bk)` base — bare (ia, ib) pairs; token
-    * verification joins back on the primary key so variable-length
-    * payloads never ride through the salted grid. */
-  private def blockedCandidates(base: DataFrame, bucketCap: Int,
-      hardCap: Int, saltGroups: Int): DataFrame = {
-    val sized = base.groupBy(col("bk")).agg(count(lit(1)).as("n"))
-    val keyed = base.select(col("bk"), col("id")).join(sized, "bk")
-    val good = keyed.where(col("n") <= bucketCap)
-    val cold = good.select(col("bk"), col("id").as("ia"))
-      .join(good.select(col("bk"), col("id").as("ib")), "bk")
-      .where(col("ia") < col("ib"))
-      .select(col("ia"), col("ib"))
-    val hot = keyed.where(col("n") > bucketCap && col("n") <= hardCap)
-      .select(col("bk").as("key"), col("id").as("url"))
-    val hotPairs = Linkage.saltedSelfJoin(hot, saltGroups)
-      .select(col("url_a").as("ia"), col("url_b").as("ib"))
-    cold.union(hotPairs)
   }
 
   /** ASYMMETRIC containment dedup — catches the near-SUBSET duplicates
@@ -138,11 +100,10 @@ object Dedup {
     * which side is the quote. Jaccard rides along for triage (a pair
     * with high max-containment and low Jaccard IS the quote shape).
     *
-    * Same 3-tier skew contract and verification-join shape as
-    * [[ngramJaccardPairs]] (shared [[blockedCandidates]]); zero-token
-    * documents are excluded up front — containment of an empty set is
-    * undefined, and Spark's NaN-ordering would otherwise smuggle 0/0
-    * pairs through the threshold. A finite `hardCap` requires evaluating
+    * Same [[Tiers]] candidates and verification-join shape as
+    * [[ngramJaccardPairs]]; zero-token documents are excluded up front —
+    * containment of an empty set is undefined, and Spark's NaN-ordering
+    * would otherwise smuggle 0/0 pairs through the threshold. A finite `hardCap` requires evaluating
     * [[droppedNgramBuckets]] alongside (same args), as everywhere. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], tau: Double, bucketCap: Int = 500,
@@ -151,7 +112,8 @@ object Dedup {
       .where(size(col("toks")) > 0)
       // same 4-consumer shape as [[ngramJaccardPairs]] — tokenize once
       .localCheckpoint(eager = false)
-    blockedCandidates(base, bucketCap, hardCap, saltGroups)
+    Tiers.pairs(base, Seq("bk"), "id", bucketCap, hardCap, saltGroups)
+      .select(col("id_a").as("ia"), col("id_b").as("ib"))
       .join(base.select(col("id").as("ia"), col("toks").as("ta")), "ia")
       .join(base.select(col("id").as("ib"), col("toks").as("tb")), "ib")
       .select(col("ia"), col("ib"),
@@ -168,9 +130,7 @@ object Dedup {
     * [[Linkage.droppedBuckets]] / [[droppedMinhashBuckets]]). */
   def droppedNgramBuckets(docs: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], hardCap: Int): DataFrame =
-    ngramBase(docs, idCol, textCol, blockCols)
-      .groupBy(col("bk")).agg(count(lit(1)).as("n"))
-      .where(col("n") > hardCap)
+    Tiers.overCap(ngramBase(docs, idCol, textCol, blockCols), Seq("bk"), hardCap)
 
   /** (id, key) band rows from an already-computed `(id, sig)` frame —
     * the banding step alone, shared by the classic k-lane signature
@@ -226,7 +186,7 @@ object Dedup {
     * exact token-set Jaccard ≥ tau. */
   private def verifiedJaccardPairs(base: DataFrame, banded: DataFrame,
       bucketCap: Int, tau: Double): DataFrame = {
-    // `banded` feeds the sizing aggregate AND the join-back (underCap), and
+    // `banded` feeds the sizing aggregate AND the join-back, and
     // `base` feeds BOTH sides of the verification join — without a
     // materialization each consumer re-runs the whole signature /
     // tokenization pass (the sha256 MinHash scan is the operator's single
@@ -235,7 +195,8 @@ object Dedup {
     // token array), never pair-sized (guide §1.2 step 1 / §5).
     val bandedM = banded.localCheckpoint(eager = false)
     val baseM = base.localCheckpoint(eager = false)
-    val good = underCap(bandedM, bucketCap).select(col("key"), col("id"))
+    val good = Tiers.underCap(bandedM, Seq("key"), bucketCap)
+      .select(col("key"), col("id"))
     val cand = good.select(col("key"), col("id").as("ia"))
       .join(good.select(col("key"), col("id").as("ib")), "key")
       .where(col("ia") < col("ib"))
@@ -254,16 +215,15 @@ object Dedup {
   def droppedMinhashBuckets(docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 16, bands: Int = 4, bucketCap: Int = 500,
       hashFamily: String = "xxhash64"): DataFrame =
-    minhashBanded(docs, idCol, textCol, numHashes, bands, hashFamily)
-      .groupBy(col("key")).agg(count(lit(1)).as("n"))
-      .where(col("n") > bucketCap)
+    Tiers.overCap(minhashBanded(docs, idCol, textCol, numHashes, bands,
+      hashFamily), Seq("key"), bucketCap)
 
   /** MinHash-LSH near-dup candidates over token 2-shingles, verified with
     * exact token-set Jaccard ≥ tau. Candidate generation is the banded
     * equi-join (sub-quadratic); only candidates pay the verification cost.
-    * Band buckets larger than `bucketCap` are dropped (low-information
-    * bands on repetitive corpora would otherwise re-quadratize the join —
-    * same policy as Linkage.candidatePairs, and 4-row bands keep the
+    * Band buckets larger than `bucketCap` are dropped ([[Tiers]] cold and
+    * dropped tiers: low-information bands on repetitive corpora would
+    * otherwise re-quadratize the join, and 4-row bands keep the
     * false-candidate rate at jaccard^4; drops are observable via
     * [[droppedMinhashBuckets]]).
     *
@@ -272,33 +232,18 @@ object Dedup {
     * k-column aggregate, no extra shuffle; the heaviest remaining shuffle
     * is the banded candidate join itself, which is the operator's point.
     *
-    * Bucket sizing is groupBy + join-back rather than a window count:
-    * the window form buffers each band bucket in ONE task (unsplittable —
-    * a degenerate hot band becomes the straggler), while the aggregate
-    * partial-combines map-side and the join-back is a plain equi-join AQE
-    * can skew-split; identical repeated subtrees collapse via exchange
-    * reuse, and the pipeline materializes signatures anyway at scale.
-    *
     * `hashFamily`: `xxhash64` (production, cheapest) or `sha256` — the
     * sha256 family makes every stage (signature, band key, bucket cap,
     * pair join, verification) reproducible in ANSI SQL, which is how the
     * driver gate hash-checks this operator against DuckDB. */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       tau: Double, numHashes: Int = 16, bands: Int = 4,
-      bucketCap: Int = 500, hashFamily: String = "xxhash64",
-      persistBanded: Boolean = false): DataFrame = {
+      bucketCap: Int = 500, hashFamily: String = "xxhash64"): DataFrame = {
     val toksOf = distinctTokens(textCol)
     val base = docs.select(col(idCol).as("id"), toksOf.as("toks"))
-    val banded0 = minhashBanded(docs, idCol, textCol, numHashes, bands, hashFamily)
-    // the banded subtree feeds both the sizing aggregate and the join-back;
-    // persistBanded materializes it ONCE (memory-and-disk) so the signatures
-    // are computed a single time — the shape PLANS.md §2 recommends at scale
-    // (the cache lives until the caller/session clears it)
-    val banded =
-      if (persistBanded)
-        banded0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else banded0
-    verifiedJaccardPairs(base, banded, bucketCap, tau)
+    verifiedJaccardPairs(base,
+      minhashBanded(docs, idCol, textCol, numHashes, bands, hashFamily),
+      bucketCap, tau)
   }
 
   /** MinHash-LSH near-dup candidates from the ONE-PERMUTATION signature —
@@ -325,9 +270,8 @@ object Dedup {
   def droppedOphBuckets(docs: DataFrame, idCol: String, textCol: String,
       bands: Int = 4, bucketCap: Int = 500,
       hashFamily: String = "xxhash64"): DataFrame =
-    ophBanded(docs, idCol, textCol, bands, hashFamily)
-      .groupBy(col("key")).agg(count(lit(1)).as("n"))
-      .where(col("n") > bucketCap)
+    Tiers.overCap(ophBanded(docs, idCol, textCol, bands, hashFamily),
+      Seq("key"), bucketCap)
 
   /** The persistable `(key, id)` MinHash band index of a corpus, with the
     * `bucketCap` cut already applied (over-cap buckets excluded; their
@@ -350,12 +294,12 @@ object Dedup {
   def bandIndex(corpus: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 16, bands: Int = 4, bucketCap: Int = 500,
       hashFamily: String = "xxhash64"): DataFrame =
-    underCap(
-      // underCap consumes the banded frame twice (sizing + join-back):
-      // materialize so the corpus signature pass runs once
+    Tiers.underCap(
+      // the banded frame feeds the sizing and the join-back: materialize
+      // so the corpus signature pass runs once
       minhashBanded(corpus, idCol, textCol, numHashes, bands, hashFamily)
         .localCheckpoint(eager = false),
-      bucketCap)
+      Seq("key"), bucketCap)
       .select(col("key"), col("id"))
 
   /** Incremental near-dup detection against a PREBUILT corpus band index
@@ -671,36 +615,21 @@ object Dedup {
     * contract as [[droppedMinhashBuckets]] / Linkage.droppedBuckets). */
   def droppedSimhashBuckets(docs: DataFrame, idCol: String, textCol: String,
       hardCap: Int = Int.MaxValue, hashFamily: String = "fnv"): DataFrame =
-    simhashBanded(docs, idCol, textCol, hashFamily)
-      .groupBy(col("key")).agg(count(lit(1)).as("n"))
-      .where(col("n") > hardCap)
+    Tiers.overCap(simhashBanded(docs, idCol, textCol, hashFamily),
+      Seq("key"), hardCap)
 
   /** SimHash near-dup pairs: banded signatures (4 bands — two near-dup
     * docs within Hamming distance 3 share ≥1 identical band), then exact
     * Hamming verification via bit_count(xor).
     *
-    * Three-tier skew policy, same shape as Linkage.candidatePairs (a
-    * 15/16-bit band over near-identical votes is a bucket attractor on
-    * boilerplate corpora — the all-zeros key especially — and an uncapped
-    * band join re-quadratizes inside one bucket):
-    *
-    *  1. buckets ≤ `bucketCap`: plain equi-self-join, signatures carried
-    *     through the join (no second lookup);
-    *  2. `bucketCap` < n ≤ `hardCap`: LOSSLESS salted grid self-join
-    *     (Linkage.saltedSelfJoin) over (key, id, sig) — the bucket's
-    *     quadratic work shards across saltGroups² tasks, with the 8-byte
-    *     signature riding through the grid as payload (replication cost
-    *     saltGroups × one scalar; nothing wide ever enters the grid
-    *     shuffle, and no re-attach joins or signature recomputation
-    *     afterwards). Unlike dropping, near-dups inside hot boilerplate
-    *     buckets are KEPT — boilerplate is precisely where SimHash
-    *     near-dups live;
-    *  3. n > `hardCap`: dropped, observably — [[droppedSimhashBuckets]]
-    *     records them (a bucket that big carries no discriminative signal).
-    *
-    * Sizing is groupBy + join-back (map-side-combining aggregate +
-    * AQE-skew-splittable equi-join), not a window count, for the same
-    * straggler reasons as [[minhashLshPairs]].
+    * Three-tier policy of [[Tiers]] (a 15/16-bit band over near-identical
+    * votes is a bucket attractor on boilerplate corpora — the all-zeros
+    * key especially — and an uncapped band join re-quadratizes inside one
+    * bucket). The 8-byte signature rides through both tiers as payload
+    * (replication cost saltGroups × one scalar in the salted grid, and no
+    * re-attach joins or signature recomputation afterwards). The salted
+    * tier KEEPS near-dups inside hot boilerplate buckets — boilerplate is
+    * precisely where SimHash near-dups live.
     *
     * `hashFamily`: `fnv` (production: 64-bit FNV/splitmix token hashes,
     * 4×16-bit bands) or `sha256` (60-bit signature from sha256 token
@@ -712,14 +641,10 @@ object Dedup {
     * which forces every bucket through the grid and must equal the
     * uncapped oracle).
     *
-    * OBSERVABILITY CONTRACT: only tier 3 loses pairs, and dropping is
-    * OPT-IN — `hardCap` defaults to `Int.MaxValue` (lossless: every
-    * over-`bucketCap` bucket routes through the salted grid), so no
-    * caller loses pairs without having asked for a cap. A run that does
-    * set `hardCap` must evaluate [[droppedSimhashBuckets]] with the same
-    * cap alongside this result (same banded subtree; with both in one
-    * application, exchange reuse makes the second pass cheap) — this
-    * result frame alone carries no drop signal. At 100 TB on a
+    * Dropping is OPT-IN (`hardCap` defaults to `Int.MaxValue`). A run
+    * that sets `hardCap` must evaluate [[droppedSimhashBuckets]] with the
+    * same cap alongside this result — this frame alone carries no drop
+    * signal. At 100 TB on a
     * boilerplate-heavy crawl a finite cap (e.g. 100k) is the sane
     * setting: a band bucket that big carries no discriminative signal
     * and its salted grid still costs |bucket|². */
@@ -732,30 +657,12 @@ object Dedup {
     // [[verifiedJaccardPairs]])
     val banded = simhashBanded(docs, idCol, textCol, hashFamily)
       .localCheckpoint(eager = false)
-    val sized = banded.select(col("key")).groupBy(col("key"))
-      .agg(count(lit(1)).as("n"))
-    val keyed = banded.join(sized, "key")
-    // tier 1: plain join, sig rides along
-    val good = keyed.where(col("n") <= bucketCap)
-      .select(col("key"), col("id"), col("sig"))
-    val a = good.select(col("key"), col("id").as("ia"), col("sig").as("siga"))
-    val b = good.select(col("key"), col("id").as("ib"), col("sig").as("sigb"))
-    val cold = a.join(b, "key").where(col("ia") < col("ib"))
-      .select(col("ia"), col("ib"),
-        bit_count(col("siga").bitwiseXOR(col("sigb"))).as("hamming"))
-    // tier 2: salted grid over (key, id, sig) — the 8-byte sig rides
-    // through the grid as payload (replication cost saltGroups × 8 B per
-    // hot row), which beats re-deriving the full-corpus signature column
-    // twice just to re-attach it by id afterwards
-    val hot = keyed
-      .where(col("n") > bucketCap && col("n") <= hardCap)
-      .select(col("key"), col("id").as("url"), col("sig"))
-    val hotPairs = Linkage.saltedSelfJoin(hot, saltGroups, payload = Seq("sig"))
-      .select(col("url_a").as("ia"), col("url_b").as("ib"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
     // a pair can surface from several bands (and from different tiers for
     // different bands) — hamming is identical each time, so distinct is exact
-    cold.union(hotPairs)
+    Tiers.pairs(banded, Seq("key"), "id", bucketCap, hardCap, saltGroups,
+        payload = Seq("sig"))
+      .select(col("id_a").as("ia"), col("id_b").as("ib"),
+        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
   }

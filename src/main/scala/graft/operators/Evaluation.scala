@@ -839,9 +839,7 @@ object Evaluation {
     // every distributed round (2 shuffles + a window + an action each).
     // Bounded collect; 0 disables; id types only need hash/equals.
     val spark = assignment.sparkSession
-    val driverCap = spark.conf.getOption("graft.core.driverFinishEdges")
-      .orElse(spark.conf.getOption("spark.graft.core.driverFinishEdges"))
-      .map(_.toLong).getOrElse(1000000L)
+    val driverCap = DriverFinish.cap(spark, "core.driverFinishEdges")
     val finished: Option[DataFrame] =
       if (driverCap > 0 && b.count() <= driverCap) {
         val rows = b.collect()
@@ -1033,9 +1031,7 @@ object Evaluation {
     // in one collect — replacing O(rounds) wedge-join shuffles. Bounded;
     // 0 disables; id types only need hash/equals.
     val spark = assignment.sparkSession
-    val driverCap = spark.conf.getOption("graft.truss.driverFinishEdges")
-      .orElse(spark.conf.getOption("spark.graft.truss.driverFinishEdges"))
-      .map(_.toLong).getOrElse(1000000L)
+    val driverCap = DriverFinish.cap(spark, "truss.driverFinishEdges")
     if (driverCap > 0 && prev <= driverCap) {
       val rows = cur.collect() // (__gu, __gv, __gc)
       val live = new java.util.HashMap[(Any, Any), Any]() // edge -> cluster

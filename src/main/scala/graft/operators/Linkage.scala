@@ -97,46 +97,15 @@ object Linkage {
   }
 
   /** Stage 3 — candidate pairs: urls sharing any key, url_a < url_b,
-    * deduped. Three-tier skew policy (web blocking keys are Zipfian):
-    *
-    *  1. buckets ≤ `bucketCap`: plain equi-self-join on `key` (AQE
-    *     skew-join splits residual stragglers);
-    *  2. `bucketCap` < n ≤ `hardCap`: SALTED grid self-join
-    *     ([[saltedSelfJoin]]) — a hot bucket's quadratic pair work is
-    *     sharded across `saltGroups`² tasks instead of landing on one
-    *     reducer (the "salted repartitioning" the north rule mandates);
-    *  3. n > `hardCap`: dropped, never silently — [[droppedBuckets]] and
-    *     the pipeline metrics record them (an ultra-hot key carries no
-    *     discriminative signal and would emit ~n²/2 junk pairs).
-    */
+    * deduped, under the three-tier skew policy of [[Tiers]] (web blocking
+    * keys are Zipfian); [[droppedBuckets]] records the dropped tier. */
   def candidatePairs(keys: DataFrame, bucketCap: Int = 200,
       hardCap: Int = 100000, saltGroups: Int = 16,
       distinctPairs: Boolean = true): DataFrame = {
-    // bucket sizing: groupBy (map-side partial combine) + join-back, NOT
-    // a window count — a window buffers each key's rows in one
-    // unsplittable task, which is a straggler on exactly the Zipfian hot
-    // keys this function's tier policy exists for; the join-back is a
-    // plain equi-join AQE can skew-split
     // the key frame feeds the sizing aggregate AND the join-back: callers
-    // often derive it from an expensive pass (sha256 MinHash band keys),
-    // so materialize it once unless it already IS a materialized
-    // checkpoint (adaptive-SNM segments arrive as one)
-    val k = keys.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => keys
-      case _ => keys.localCheckpoint(eager = false)
-    }
-    val sized = k.groupBy(col("key")).agg(count(lit(1)).as("bucket_n"))
-    val keyed = k.join(sized, "key")
-    val good = keyed.where(col("bucket_n") <= bucketCap)
-    val a = good.select(col("key"), col("url").as("url_a"))
-    val b = good.select(col("key"), col("url").as("url_b"))
-    val coldPairs = a.join(b, "key")
-      .where(col("url_a") < col("url_b"))
-      .select(col("url_a"), col("url_b"))
-    val hot = keyed
-      .where(col("bucket_n") > bucketCap && col("bucket_n") <= hardCap)
-      .select(col("key"), col("url"))
-    val all = coldPairs.union(saltedSelfJoin(hot, saltGroups))
+    // often derive it from an expensive pass (sha256 MinHash band keys)
+    val all = Tiers.pairs(checkpointOnce(keys), Seq("key"), "url", bucketCap,
+      hardCap, saltGroups)
     // `distinctPairs = false` is for callers whose key frame is FUNCTIONAL
     // (each url carries exactly one key — e.g. adaptive-SNM segment ids):
     // within a bucket each unordered pair meets exactly once (cold join by
@@ -146,50 +115,20 @@ object Linkage {
     if (distinctPairs) all.distinct() else all
   }
 
-  /** Salted (fragment-replicate grid) self-join: member u of bucket k with
-    * salt g = hash(u) mod G is replicated to grid cells (k, g, j≥g) on the
-    * left and (k, i≤g, g) on the right; cell (k, i, j) joins fragment i ×
-    * fragment j, so each unordered pair meets in exactly one cell and the
-    * bucket's n²/2 work spreads over G(G+1)/2 reducers at replication
-    * cost G. Equi-join on the salted composite key — no reducer ever sees
-    * a whole hot bucket.
-    *
-    * `payload`: extra SCALAR columns of `hot` carried through the grid and
-    * emitted as `<p>_a`/`<p>_b` aligned with the (url_a, url_b) ordering —
-    * replication cost G × the scalar, which beats re-deriving or re-joining
-    * the value per side afterwards (e.g. SimHash signatures in
-    * Dedup.simhashPairs tier 2). */
-  private[operators] def saltedSelfJoin(hot: DataFrame, saltGroups: Int,
-      payload: Seq[String] = Nil): DataFrame = {
-    val g = pmod(xxhash64(col("url")), lit(saltGroups)).cast("int")
-    val pa = payload.map(p => col(p).as(s"${p}_a"))
-    val pb = payload.map(p => col(p).as(s"${p}_b"))
-    val left = hot.select(col("key") +: col("url") +: g.as("g") +: pa: _*)
-      .withColumn("j", explode(sequence(col("g"), lit(saltGroups - 1))))
-      .select(col("key") +: col("g").as("gi") +: col("j").as("gj") +:
-        col("url").as("url_a") +: payload.map(p => col(s"${p}_a")): _*)
-    val right = hot.select(col("key") +: col("url") +: g.as("g") +: pb: _*)
-      .withColumn("i", explode(sequence(lit(0), col("g"))))
-      .select(col("key") +: col("i").as("gi") +: col("g").as("gj") +:
-        col("url").as("url_b") +: payload.map(p => col(s"${p}_b")): _*)
-    val swap = col("url_a") > col("url_b")
-    left.join(right, Seq("key", "gi", "gj"))
-      // same-fragment cell (i == j) holds both sides of every intra-fragment
-      // pair: order by url; cross-fragment pairs meet exactly once
-      .where((col("gi") =!= col("gj") && col("url_a") =!= col("url_b")) ||
-        col("url_a") < col("url_b"))
-      .select(least(col("url_a"), col("url_b")).as("url_a") +:
-        greatest(col("url_a"), col("url_b")).as("url_b") +:
-        payload.flatMap(p => Seq(
-          when(swap, col(s"${p}_b")).otherwise(col(s"${p}_a")).as(s"${p}_a"),
-          when(swap, col(s"${p}_a")).otherwise(col(s"${p}_b")).as(s"${p}_b"))): _*)
-  }
+  /** `df` materialized once by a lazy localCheckpoint, for frames with
+    * several consumers — unless it already IS a materialized checkpoint
+    * (adaptive-SNM segments, or a caller's own checkpoint), which a second
+    * one would only copy. */
+  private[operators] def checkpointOnce(df: DataFrame): DataFrame =
+    df.queryExecution.logical match {
+      case _: org.apache.spark.sql.execution.LogicalRDD => df
+      case _ => df.localCheckpoint(eager = false)
+    }
 
   /** Buckets excluded by `hardCap` with their sizes — the non-silent
     * record of what blocking dropped. */
   def droppedBuckets(keys: DataFrame, hardCap: Int = 100000): DataFrame =
-    keys.groupBy(col("key")).agg(count(lit(1)).as("bucket_n"))
-      .where(col("bucket_n") > hardCap)
+    Tiers.overCap(keys, Seq("key"), hardCap, "bucket_n")
 
   /** Stage 4 — pairwise scoring: composite Jaro-Winkler + Sørensen-Dice on
     * the normalized names (the north-star composite). Pure projection over
@@ -832,9 +771,7 @@ object Linkage {
     // computes the identical matching — replacing the O(log) tail of
     // per-round fixed costs (two windows + two anti-joins + a probe
     // action each). Bounded collect, 0 disables, exotic types fall back.
-    val driverCap = spark.conf.getOption("graft.greedy.driverFinishEdges")
-      .orElse(spark.conf.getOption("spark.graft.greedy.driverFinishEdges"))
-      .map(_.toLong).getOrElse(1000000L)
+    val driverCap = DriverFinish.cap(spark, "greedy.driverFinishEdges")
     def cmpOf(dt: org.apache.spark.sql.types.DataType): Option[(Any, Any) => Int] = {
       import org.apache.spark.sql.types._
       dt match {
@@ -962,9 +899,7 @@ object Linkage {
     // reproduces every group's matching exactly. Bounded collect; 0
     // disables; exotic rid types fall back to the distributed loop.
     val spark = scored.sparkSession
-    val glCap = spark.conf.getOption("graft.greedy.driverFinishEdges")
-      .orElse(spark.conf.getOption("spark.graft.greedy.driverFinishEdges"))
-      .map(_.toLong).getOrElse(1000000L)
+    val glCap = DriverFinish.cap(spark, "greedy.driverFinishEdges")
     def glCmpOf(dt: org.apache.spark.sql.types.DataType): Option[(Any, Any) => Int] = {
       import org.apache.spark.sql.types._
       dt match {
@@ -1160,11 +1095,11 @@ object Linkage {
     *    outranks one sharing 5 of 500).
     *
     * Scale shape: edges are distinct-ed once, then pairs are generated BY
-    * NEIGHBOR with the house 3-tier skew contract — a hub neighbor (a
+    * NEIGHBOR under the three-tier policy of [[Tiers]] — a hub neighbor (a
     * commodity part every supplier ships) is exactly the hot-bucket shape
     * that melts a reducer, so neighbors over `bucketCap` route through the
-    * salted grid ([[saltedSelfJoin]], lossless) and neighbors over
-    * `hardCap` are dropped (opt-in, default lossless; a finite cap
+    * salted grid (lossless) and neighbors over `hardCap` are dropped
+    * (opt-in, default lossless; a finite cap
     * requires evaluating [[droppedBuckets]] on the (neighbor → key) frame
     * alongside — hubs carry little identity signal anyway, which is why
     * capping them is the standard move). The per-pair count then needs NO
@@ -1189,7 +1124,7 @@ object Linkage {
       .distinct()
       .localCheckpoint(eager = false)
     val deg = e.groupBy(col("id")).agg(count(lit(1)).as("__deg"))
-    val sized = e.groupBy(col("nb")).agg(count(lit(1)).as("__n"))
+    val sized = Tiers.sizes(e, Seq("nb"))
     // A pair's common-neighbor count is bounded by min(deg_a, deg_b), so
     // entities with deg < minCommon cannot appear in the output: drop them
     // BEFORE pair generation (provably lossless — the final
@@ -1203,18 +1138,9 @@ object Linkage {
       if (minCommon > 1L)
         e.join(deg.where(col("__deg") >= minCommon).select(col("id")), "id")
       else e
-    val keyed = eligible.join(sized, "nb")
-    val good = keyed.where(col("__n") <= bucketCap)
-    val cold = good.select(col("nb"), col("id").as("url_a"))
-      .join(good.select(col("nb"), col("id").as("url_b")), "nb")
-      .where(col("url_a") < col("url_b"))
-      .select(col("url_a"), col("url_b"))
-    val hot = keyed.where(col("__n") > bucketCap && col("__n") <= hardCap)
-      .select(col("nb").as("key"), col("id").as("url"))
-    val hotPairs = saltedSelfJoin(hot, saltGroups)
-      .select(col("url_a"), col("url_b"))
-    cold.union(hotPairs)
-      .groupBy(col("url_a"), col("url_b"))
+    Tiers.pairs(eligible, Seq("nb"), "id", bucketCap, hardCap, saltGroups,
+        sized = Some(sized))
+      .groupBy(col("id_a").as("url_a"), col("id_b").as("url_b"))
       .agg(count(lit(1)).as("common_neighbors"))
       .where(col("common_neighbors") >= minCommon)
       .join(deg.select(col("id").as("url_a"), col("__deg").as("__da")), "url_a")
@@ -1241,7 +1167,7 @@ object Linkage {
       .where(col("id").isNotNull && col("nb").isNotNull)
       .distinct()
       .localCheckpoint(eager = false)
-    val sized = e.groupBy(col("nb")).agg(count(lit(1)).as("__n"))
+    val sized = Tiers.sizes(e, Seq("nb"))
     // same lossless min(deg) prefilter as [[commonNeighborPairs]]: tier
     // routing stays on unfiltered sizes, only ineligible members leave
     val deg0 = e.groupBy(col("id")).agg(count(lit(1)).as("__deg"))
@@ -1249,21 +1175,12 @@ object Linkage {
       if (minCommon > 1L)
         e.join(deg0.where(col("__deg") >= minCommon).select(col("id")), "id")
       else e
-    val keyed = eligible.join(sized, "nb")
-    val good = keyed.where(col("__n") <= bucketCap)
-    val cold = good.select(col("nb"), col("__n"), col("id").as("url_a"))
-      .join(good.select(col("nb"), col("id").as("url_b")), "nb")
-      .where(col("url_a") < col("url_b"))
-      .select(col("url_a"), col("url_b"), col("__n"))
-    // carry the neighbor degree through the grid as payload
-    val hot = keyed.where(col("__n") > bucketCap && col("__n") <= hardCap)
-      .select(col("nb").as("key"), col("id").as("url"), col("__n"))
-    val hotPairs = saltedSelfJoin(hot, saltGroups, payload = Seq("__n"))
-      .select(col("url_a"), col("url_b"), col("__n_a").as("__n"))
-    cold.union(hotPairs)
-      .groupBy(col("url_a"), col("url_b"))
+    // the neighbor degree rides along as payload
+    Tiers.pairs(eligible, Seq("nb"), "id", bucketCap, hardCap, saltGroups,
+        payload = Seq("n"), sized = Some(sized))
+      .groupBy(col("id_a").as("url_a"), col("id_b").as("url_b"))
       .agg(count(lit(1)).as("common_neighbors"),
-        sum(lit(1.0) / log(col("__n").cast("double"))).as("adamic_adar"))
+        sum(lit(1.0) / log(col("n_a").cast("double"))).as("adamic_adar"))
       .where(col("common_neighbors") >= minCommon)
   }
 

@@ -31,9 +31,8 @@ import org.apache.spark.sql.functions._
   * (w · n ≥ Σw), never by a divided mean, so the cut is exact: no edge's
   * fate depends on double rounding.
   *
-  * Scale shapes: the graph build reuses [[Linkage.candidatePairs]]'s
-  * 3-tier skew policy (plain equi-join ≤ bucketCap, salted fragment-
-  * replicate grid ≤ hardCap, observable drop above); the weight fold is
+  * Scale shapes: the graph build pairs records under the three-tier
+  * policy of [[Tiers]]; the weight fold is
   * one map-side-combining groupBy over (url_a, url_b); WEP adds one 1-row
   * broadcast cross join; WNP adds one node-sum groupBy + two equi-joins.
   * Nothing materializes per-block pair lists on a single reducer.
@@ -47,37 +46,22 @@ object MetaBlocking {
     * Output: (url_a, url_b, cbs: long, blocks_a: long, blocks_b: long,
     * js: double) with url_a < url_b.
     *
-    * Blocks larger than `hardCap` are dropped (observable via
-    * [[Linkage.droppedBuckets]]) and do NOT count toward blocks_a/b, so JS
-    * stays consistent with the graph it describes. Buckets in
-    * (bucketCap, hardCap] route through the salted grid — per-key pair
-    * multiplicity is preserved there (each pair meets exactly once per
-    * shared key), so CBS is identical to the plain-join result
-    * (spec-pinned in MetaBlockingSpec). */
+    * Blocks are routed by [[Tiers]]. Blocks larger than `hardCap` are
+    * dropped (observable via [[Linkage.droppedBuckets]]) and do NOT count
+    * toward blocks_a/b, so JS stays consistent with the graph it
+    * describes. Each tier emits a pair exactly once per shared key, so
+    * CBS does not depend on the tier (spec-pinned in MetaBlockingSpec). */
   def blockingGraph(keys: DataFrame, idCol: String = "url",
       keyCol: String = "key", bucketCap: Int = 200, hardCap: Int = 100000,
       saltGroups: Int = 16): DataFrame = {
     val k = keys.select(col(idCol).as("url"), col(keyCol).as("key"))
-    // bucket sizing via groupBy + join-back (AQE-skew-splittable), same
-    // rationale as Linkage.candidatePairs — never a window count
-    val sized = k.groupBy(col("key")).agg(count(lit(1)).as("bucket_n"))
-    val keyed = k.join(sized, "key")
-    val retained = keyed.where(col("bucket_n") <= hardCap)
-    val good = retained.where(col("bucket_n") <= bucketCap)
-    val a = good.select(col("key"), col("url").as("url_a"))
-    val b = good.select(col("key"), col("url").as("url_b"))
     // one row PER SHARED KEY (no distinct!) — multiplicity IS the signal
-    val coldPairs = a.join(b, "key")
-      .where(col("url_a") < col("url_b"))
-      .select(col("url_a"), col("url_b"))
-    val hot = retained.where(col("bucket_n") > bucketCap)
-      .select(col("key"), col("url"))
-    val perKey = coldPairs.union(
-      Linkage.saltedSelfJoin(hot, saltGroups).select(col("url_a"), col("url_b")))
-    val edges = perKey.groupBy(col("url_a"), col("url_b"))
+    val edges = Tiers.pairs(k, Seq("key"), "url", bucketCap, hardCap, saltGroups)
+      .groupBy(col("url_a"), col("url_b"))
       .agg(count(lit(1)).as("cbs"))
     // per-record retained-block counts for the Jaccard scheme
-    val ent = retained.groupBy(col("url")).agg(count(lit(1)).as("nblocks"))
+    val ent = Tiers.underCap(k, Seq("key"), hardCap)
+      .groupBy(col("url")).agg(count(lit(1)).as("nblocks"))
     edges
       .join(ent.select(col("url").as("url_a"), col("nblocks").as("blocks_a")), "url_a")
       .join(ent.select(col("url").as("url_b"), col("nblocks").as("blocks_b")), "url_b")
@@ -137,7 +121,7 @@ object MetaBlocking {
   def wepPrune(edges0: DataFrame, weightCol: String = "cbs"): DataFrame = {
     // the edge frame feeds the global aggregate AND the filtered scan —
     // callers pass the full blockingGraph pipeline, so materialize once
-    val edges = edges0.localCheckpoint(eager = false)
+    val edges = Linkage.checkpointOnce(edges0)
     val tot = edges.agg(sum(col(weightCol)).as("__wsum"),
       count(lit(1)).as("__wcnt"))
     edges.crossJoin(broadcast(tot))
@@ -156,7 +140,7 @@ object MetaBlocking {
       aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
     // three consumers (both union directions + the join-back) — without a
     // materialization the whole blockingGraph pipeline evaluates thrice
-    val edges = edges0.localCheckpoint(eager = false)
+    val edges = Linkage.checkpointOnce(edges0)
     val und = edges.select(col(aCol).as("__u"), col(weightCol).as("__w"))
       .union(edges.select(col(bCol).as("__u"), col(weightCol).as("__w")))
     val node = und.groupBy(col("__u"))
@@ -190,7 +174,7 @@ object MetaBlocking {
       aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
     require(k >= 1, s"cnpPrune needs k >= 1, got $k")
     // same three-consumer shape as [[wnpPrune]] — materialize once
-    val edges = edges0.localCheckpoint(eager = false)
+    val edges = Linkage.checkpointOnce(edges0)
     val und = edges.select(col(aCol).as("__u"), col(bCol).as("__v"),
         col(weightCol).as("__w"))
       .union(edges.select(col(bCol).as("__u"), col(aCol).as("__v"),

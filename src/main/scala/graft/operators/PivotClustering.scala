@@ -68,9 +68,7 @@ object PivotClustering {
     // scan computes the identical MIS without the per-round join/probe
     // bill. The rank mix is exact 64-bit integer arithmetic on both
     // sides, so the replay is bit-faithful. Bounded collect; 0 disables.
-    val driverCap = spark.conf.getOption("graft.mis.driverFinishRows")
-      .orElse(spark.conf.getOption("spark.graft.mis.driverFinishRows"))
-      .map(_.toLong).getOrElse(1000000L)
+    val driverCap = DriverFinish.cap(spark, "mis.driverFinishRows")
     if (driverCap > 0 &&
         nodes.schema("id").dataType ==
           org.apache.spark.sql.types.LongType) {

@@ -86,13 +86,10 @@ object Pprl {
       .localCheckpoint(eager = false)
     val kb = blockKeys(b, idCol, sigCol, m, bands, bitsPerBand, seed)
       .localCheckpoint(eager = false)
-    def underCap(keys: DataFrame): DataFrame = {
-      val sized = keys.groupBy(col("key")).agg(count(lit(1)).as("n"))
-      keys.join(sized.where(col("n") <= bucketCap), "key")
-        .select(col("key"), col("id"))
-    }
-    val cand = underCap(ka).select(col("key"), col("id").as("id_a"))
-      .join(underCap(kb).select(col("key"), col("id").as("id_b")), "key")
+    val cand = Tiers.underCap(ka, Seq("key"), bucketCap)
+      .select(col("key"), col("id").as("id_a"))
+      .join(Tiers.underCap(kb, Seq("key"), bucketCap)
+        .select(col("key"), col("id").as("id_b")), "key")
       .select(col("id_a"), col("id_b")).distinct()
     cand
       .join(a.select(col(idCol).as("id_a"), col(sigCol).as("__sa")), "id_a")
@@ -108,9 +105,8 @@ object Pprl {
       m: Int, bands: Int = 8, bitsPerBand: Int = 16, seed: Long = 42L,
       bucketCap: Int = 10000): DataFrame = {
     def over(df: DataFrame, side: String): DataFrame =
-      blockKeys(df, idCol, sigCol, m, bands, bitsPerBand, seed)
-        .groupBy(col("key")).agg(count(lit(1)).as("n"))
-        .where(col("n") > bucketCap)
+      Tiers.overCap(blockKeys(df, idCol, sigCol, m, bands, bitsPerBand, seed),
+        Seq("key"), bucketCap)
         .select(lit(side).as("side"), col("key"), col("n"))
     over(a, "a").union(over(b, "b"))
   }

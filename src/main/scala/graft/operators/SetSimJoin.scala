@@ -29,9 +29,8 @@ import org.apache.spark.sql.functions._
   * Nothing collects to the driver; no step is quadratic in the corpus.
   * Residual hot prefix tokens (degenerate corpora — e.g. near-duplicate
   * boilerplate where even the "rarest" token of many records is shared)
-  * get the same 3-tier policy as every other pair generator here:
-  * plain join <= bucketCap < salted grid <= hardCap < dropped (opt-in,
-  * observable via [[droppedPrefixTokens]]).
+  * get the three-tier policy of [[Tiers]] (dropping opt-in, observable
+  * via [[droppedPrefixTokens]]).
   */
 object SetSimJoin {
 
@@ -119,31 +118,19 @@ object SetSimJoin {
     // the prefix frame (explode + df join + per-record rarity sort) feeds
     // the sizing aggregate AND the join-back — materialize it once
     val pre = prefixRows(b, tau).localCheckpoint(eager = false)
-    val sized = pre.groupBy(col("tok")).agg(count(lit(1)).as("n"))
-    val keyed = pre.join(sized, "tok")
     val lenOk = least(col("la"), col("lb")).cast("double") >=
       lit(tau) * greatest(col("la"), col("lb")).cast("double") - lit(1e-9)
-    val good = keyed.where(col("n") <= bucketCap)
-    val cold = good.select(col("tok"), col("id").as("ia"), col("len").as("la"),
-        col("pos").as("pa"))
-      .join(good.select(col("tok"), col("id").as("ib"), col("len").as("lb"),
-        col("pos").as("pb")), "tok")
-      .where(col("ia") < col("ib") && lenOk)
-      .select(col("ia"), col("ib"), col("la"), col("lb"), col("pa"), col("pb"))
-    val hot = keyed.where(col("n") > bucketCap && col("n") <= hardCap)
-      .select(col("tok").as("key"), col("id").as("url"), col("len"), col("pos"))
-    val hotPairs = Linkage.saltedSelfJoin(hot, saltGroups,
-        payload = Seq("len", "pos"))
-      .select(col("url_a").as("ia"), col("url_b").as("ib"),
-        col("len_a").as("la"), col("len_b").as("lb"),
-        col("pos_a").as("pa"), col("pos_b").as("pb"))
-      .where(lenOk)
     // A pair can share SEVERAL prefix tokens (and meet in both tiers via
     // different tokens): ONE groupBy both dedups candidates and finds the
     // first shared token's positions for the positional filter.
     val alpha = ceil((lit(tau) / (1.0 + tau)) *
       (col("la") + col("lb")).cast("double") - lit(1e-9))
-    cold.union(hotPairs)
+    Tiers.pairs(pre, Seq("tok"), "id", bucketCap, hardCap, saltGroups,
+        payload = Seq("len", "pos"))
+      .select(col("id_a").as("ia"), col("id_b").as("ib"),
+        col("len_a").as("la"), col("len_b").as("lb"),
+        col("pos_a").as("pa"), col("pos_b").as("pb"))
+      .where(lenOk)
       .groupBy(col("ia"), col("ib"))
       .agg(min(col("la")).as("la"), min(col("lb")).as("lb"),
         min(col("pa")).as("i"), min(col("pb")).as("j"))
@@ -156,9 +143,8 @@ object SetSimJoin {
     * contract as [[Linkage.droppedBuckets]] / [[Dedup.droppedNgramBuckets]]). */
   def droppedPrefixTokens(docs: DataFrame, idCol: String, textCol: String,
       tau: Double, hardCap: Int): DataFrame =
-    prefixRows(base(docs, idCol, textCol), tau)
-      .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-      .where(col("n") > hardCap)
+    Tiers.overCap(prefixRows(base(docs, idCol, textCol), tau), Seq("tok"),
+      hardCap)
 
   // ------------------------------------------------------------- Ed-Join
 
@@ -189,7 +175,7 @@ object SetSimJoin {
     * and per-record rarest-first prefixes are windows partitioned by
     * (id, gram) / id — both bounded by ONE record's gram count, never by
     * corpus or bucket size; the prefix-element join has rarity-sized
-    * buckets (3-tier salted policy, `droppedEdJoinGrams` companion); the
+    * buckets ([[Tiers]] policy, `droppedEdJoinGrams` companion); the
     * only all-candidate shuffle is the dedup distinct, fed post-length-
     * filter; verification is two primary-key joins + the banded kernel. */
   def edJoinPairs(docs: DataFrame, idCol: String, strCol: String, k: Int,
@@ -207,31 +193,13 @@ object SetSimJoin {
     // windows + df join) feeds the sizing aggregate AND the join-back —
     // without a materialization the whole window pipeline runs twice
     val pre = edPrefixRows(b, k, q).localCheckpoint(eager = false)
-    val sized = pre.groupBy(col("g"), col("occ")).agg(count(lit(1)).as("n"))
-    val keyed = pre.join(sized, Seq("g", "occ"))
-    val lenOk = abs(col("la") - col("lb")) <= k
-    val good = keyed.where(col("n") <= bucketCap)
-    val cold = good.select(col("g"), col("occ"), col("id").as("ia"), col("len").as("la"))
-      .join(good.select(col("g"), col("occ"), col("id").as("ib"), col("len").as("lb")),
-        Seq("g", "occ"))
-      .where(col("ia") < col("ib") && lenOk)
-      .select(col("ia"), col("ib"))
-    val hot = keyed.where(col("n") > bucketCap && col("n") <= hardCap)
-      .select(concat_ws("\u0001", col("g"), col("occ")).as("key"),
-        col("id").as("url"), col("len"))
-    val hotPairs = Linkage.saltedSelfJoin(hot, saltGroups, payload = Seq("len"))
-      .select(col("url_a").as("ia"), col("url_b").as("ib"),
-        col("len_a").as("la"), col("len_b").as("lb"))
-      .where(lenOk)
-      .select(col("ia"), col("ib"))
-    // short tier: strings the gram bound cannot cover — one salted grid
-    val shorts = shortStrings(b, k, q)
-      .select(lit("short").as("key"), col("id").as("url"), col("len"))
-    val shortPairs = Linkage.saltedSelfJoin(shorts, saltGroups, payload = Seq("len"))
-      .select(col("url_a").as("ia"), col("url_b").as("ib"),
-        col("len_a").as("la"), col("len_b").as("lb"))
-      .where(lenOk)
-      .select(col("ia"), col("ib"))
+    val gramPairs = Tiers.pairs(pre, Seq("g", "occ"), "id", bucketCap,
+      hardCap, saltGroups, payload = Seq("len"))
+    // short tier: strings the gram bound cannot cover — one bucket whose
+    // members all take the salted grid (bucketCap 0, no finite hardCap)
+    val shortPairs = Tiers.pairs(
+      shortStrings(b, k, q).select(lit("short").as("key"), col("id"), col("len")),
+      Seq("key"), "id", 0, Int.MaxValue, saltGroups, payload = Seq("len"))
     // Verify BEFORE deduplicating (guide §2.3 "shuffle fewer bytes"):
     // measured at sf0.1, the candidate distinct removed only ~4% of rows
     // (912k → 870k) while paying a full shuffle of the raw candidate
@@ -241,7 +209,9 @@ object SetSimJoin {
     // prefix elements verifies to the same distance, so distinct() on
     // (ia, ib, dist) returns the identical set.
     val verify = graft.functions.levenshtein_capped(col("sa"), col("sb"), k)
-    cold.union(hotPairs).union(shortPairs)
+    gramPairs.union(shortPairs)
+      .where(abs(col("len_a") - col("len_b")) <= k)
+      .select(col("id_a").as("ia"), col("id_b").as("ib"))
       .join(b.select(col("id").as("ia"), col("s").as("sa")), "ia")
       .join(b.select(col("id").as("ib"), col("s").as("sb")), "ib")
       .select(col("ia"), col("ib"), verify.as("dist"))
@@ -280,9 +250,7 @@ object SetSimJoin {
     val b = docs.select(col(idCol).as("id"), col(strCol).as("s"))
       .where(col("s").isNotNull)
       .withColumn("len", length(col("s")))
-    edPrefixRows(b, k, q)
-      .groupBy(col("g"), col("occ")).agg(count(lit(1)).as("n"))
-      .where(col("n") > hardCap)
+    Tiers.overCap(edPrefixRows(b, k, q), Seq("g", "occ"), hardCap)
   }
 
   // --------------------------------------------------- containment join
@@ -435,8 +403,6 @@ object SetSimJoin {
     * the non-silent record of what [[prefixContainmentPairs]] dropped. */
   def droppedContainmentTokens(docs: DataFrame, idCol: String,
       textCol: String, hardCap: Int): DataFrame =
-    base(docs, idCol, textCol)
-      .select(col("id"), explode(col("toks")).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-      .where(col("n") > hardCap)
+    Tiers.overCap(base(docs, idCol, textCol)
+      .select(col("id"), explode(col("toks")).as("tok")), Seq("tok"), hardCap)
 }

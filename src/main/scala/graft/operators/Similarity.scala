@@ -373,30 +373,22 @@ object Similarity {
   def droppedLshBuckets(emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, bands: Int = 4, planesPerBand: Int = 6, seed: Long = 42L,
       hardCap: Int = Int.MaxValue): DataFrame =
-    lshBucketed(emb, idCol, vecCol, dim, bands, planesPerBand, seed)
-      .groupBy(col("key")).agg(count(lit(1)).as("n"))
-      .where(col("n") > hardCap)
+    Tiers.overCap(
+      lshBucketed(emb, idCol, vecCol, dim, bands, planesPerBand, seed),
+      Seq("key"), hardCap)
 
   /** Banded random-hyperplane LSH top-k. Each vector lands in `bands`
     * buckets keyed by the sign pattern of `planesPerBand` projections;
     * candidates = pairs sharing any bucket; exact cosine ranks them.
     * Single shuffle on the bucket key + window per vec_id.
     *
-    * 3-tier skew policy (the same contract as Dedup.simhashPairs /
-    * Linkage.candidatePairs): with b planes a band has only 2^b buckets,
-    * so at 100× corpus growth every bucket is 100× larger and the join
-    * cost Σ bucket² concentrates in the densest sign patterns. Buckets
-    * with n ≤ `bucketCap` take the plain self-join; bucketCap < n ≤
-    * `hardCap` route through the salted grid (Linkage.saltedSelfJoin —
-    * LOSSLESS: the bucket's quadratic cost is spread over
-    * saltGroups·(saltGroups+1)/2 cells instead of one straggler task;
-    * the vector + norm ride as payload, replication cost saltGroups ×
-    * vector bytes per hot row, which beats re-shuffling the corpus to
-    * re-attach them by id); n > `hardCap` is dropped — observable via
-    * [[droppedLshBuckets]], never silent. The default hardCap is
-    * lossless (nothing dropped). Sizing is a key-only groupBy +
-    * join-back (map-side combine; the join-back is an
-    * AQE-skew-splittable equi-join), never a window count.
+    * Three-tier policy of [[Tiers]]: with b planes a band has only 2^b
+    * buckets, so at 100× corpus growth every bucket is 100× larger and
+    * the join cost Σ bucket² concentrates in the densest sign patterns.
+    * The vector and its norm ride through both tiers as payload
+    * (replication cost saltGroups × vector bytes per salted row, which
+    * beats re-shuffling the corpus to re-attach them by id). The default
+    * hardCap is lossless (nothing dropped).
     *
     * OBSERVABILITY CONTRACT: a finite `hardCap` is lossy (recall, not
     * correctness — dropped buckets shrink candidate sets); a production
@@ -405,58 +397,24 @@ object Similarity {
   def lshTopK(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       dim: Int, bands: Int = 4, planesPerBand: Int = 6,
       seed: Long = 42L, bucketCap: Int = 2000,
-      hardCap: Int = Int.MaxValue, saltGroups: Int = 16,
-      persistBanded: Boolean = false): DataFrame = {
-    val all0 = lshBucketed(emb, idCol, vecCol, dim, bands, planesPerBand, seed)
-    // the bucketed subtree feeds both the sizing aggregate and the
-    // candidate join; persistBanded materializes it ONCE (memory-and-disk)
-    // so the hyperplane signatures are computed a single time — the shape
-    // PLANS.md §2 recommends at scale (cache lives until the caller or
-    // session clears it)
-    val all =
-      if (persistBanded)
-        all0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else all0
-    // key-only projection before the sizing aggregate: the embedding never
-    // rides through the count shuffle
-    val sized = all.select(col("key")).groupBy(col("key"))
-      .agg(count(lit(1)).as("n"))
-    val keyed = all.join(sized, "key")
-    // tier 1 — plain self-join for cold buckets. Score INSIDE the bucket
-    // join, then dedup multi-band collisions on (vec_id, neighbor_id)
-    // scalars only. A distinct over the raw pair rows would put both
-    // 64-float vectors in the shuffle key (embedding bytes shuffled again
-    // just to dedup, plus per-row float normalization for grouping);
-    // duplicates here carry identical cos, so max() is exact and the
-    // partial aggregate combines them map-side before the shuffle.
-    val bucketed = keyed.where(col("n") <= bucketCap)
-      .select(col("key"), col("id"), col("v"), col("nrm"))
-    val coldScored = bucketed.select(col("key"), col("id").as("vec_id"),
-        col("v").as("va"), col("nrm").as("na"))
-      .join(bucketed.select(col("key"), col("id").as("neighbor_id"),
-        col("v").as("vb"), col("nrm").as("nb")), "key")
-      .where(col("vec_id") =!= col("neighbor_id"))
-      .select(col("vec_id"), col("neighbor_id"),
-        cosPre(col("va"), col("na"), col("vb"), col("nb")).as("cos"))
-    // tier 2 — salted grid for hot buckets: each canonical (a < b) pair
-    // meets exactly once; cosine is symmetric and cosPre is bit-commutable
-    // (x*y = y*x term-for-term, same fold order), so emitting both
-    // directions from one evaluation is exact
-    val hot = keyed
-      .where(col("n") > bucketCap && col("n") <= hardCap)
-      .select(col("key"), col("id").as("url"), col("v"), col("nrm"))
-    val hotCanon = Linkage.saltedSelfJoin(hot, saltGroups,
+      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
+    // Score each canonical (a < b) pair once, then mirror it: cosPre is
+    // bit-commutable (x*y = y*x term-for-term, same fold order), so both
+    // directions carry the exact cosine. A pair sharing several bands
+    // repeats with identical cos, so max() dedups it exactly on scalars
+    // only (the 64-float vectors never enter the dedup shuffle) and the
+    // partial aggregate combines duplicates map-side.
+    val scored = Tiers.pairs(
+        lshBucketed(emb, idCol, vecCol, dim, bands, planesPerBand, seed),
+        Seq("key"), "id", bucketCap, hardCap, saltGroups,
         payload = Seq("v", "nrm"))
-      .select(col("url_a"), col("url_b"),
+      .select(col("id_a"), col("id_b"),
         cosPre(col("v_a"), col("nrm_a"), col("v_b"), col("nrm_b")).as("cos"))
-    val hotScored = hotCanon
-      .select(col("url_a").as("vec_id"), col("url_b").as("neighbor_id"), col("cos"))
-      .union(hotCanon
-        .select(col("url_b").as("vec_id"), col("url_a").as("neighbor_id"), col("cos")))
-    // tier 3 — n > hardCap buckets never enter either join (dropped;
-    // record = droppedLshBuckets(hardCap))
-    val scored = coldScored.union(hotScored)
-      .groupBy(col("vec_id"), col("neighbor_id"))
+      .select(explode(array(
+          struct(col("id_a").as("vec_id"), col("id_b").as("neighbor_id")),
+          struct(col("id_b").as("vec_id"), col("id_a").as("neighbor_id")))).as("d"),
+        col("cos"))
+      .groupBy(col("d.vec_id").as("vec_id"), col("d.neighbor_id").as("neighbor_id"))
       .agg(max(col("cos")).as("cos"))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)

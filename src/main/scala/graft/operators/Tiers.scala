@@ -1,0 +1,111 @@
+package graft.operators
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** The three-tier blocking policy every symmetric blocking self-join
+  * shares. Members sharing a key form a bucket; a bucket of n members
+  * holds n(n−1)/2 pairs, and web blocking keys are Zipfian, so each
+  * bucket is routed by its size n:
+  *
+  *  1. n ≤ `bucketCap` — cold: plain equi-self-join on the key (AQE
+  *     skew-join splits residual stragglers);
+  *  2. `bucketCap` < n ≤ `hardCap` — salted: fragment-replicate grid
+  *     self-join ([[saltedSelfJoin]]), so a hot bucket's quadratic pair
+  *     work shards across G(G+1)/2 reducers (G = `saltGroups`) instead of
+  *     landing on one, losslessly;
+  *  3. n > `hardCap` — dropped, never silently: [[overCap]] over the same
+  *     members and keys is the record (an ultra-hot key carries no
+  *     discriminative signal and would emit ~n²/2 junk pairs). Operators
+  *     default `hardCap` to `Int.MaxValue` where dropping is opt-in.
+  *
+  * Operators whose policy is a single cap (LSH band caps) keep tiers 1
+  * and 3 only: [[underCap]] and [[overCap]] with that cap.
+  *
+  * Bucket sizing is a groupBy (map-side partial combine) plus a join-back,
+  * never a window count: a window buffers each key's rows in one
+  * unsplittable task — a straggler on exactly the hot keys this policy
+  * exists for — while the join-back is a plain equi-join AQE can
+  * skew-split. `members` feeds both the sizing aggregate and the
+  * join-back, so callers materialize it when it is expensive to derive.
+  */
+private[operators] object Tiers {
+
+  /** (keys…, n): the member count of every bucket. */
+  def sizes(members: DataFrame, keys: Seq[String], n: String = "n"): DataFrame =
+    members.groupBy(keys.map(col): _*).agg(count(lit(1)).as(n))
+
+  /** Members of buckets with n ≤ `cap`, joined with their size `n`. */
+  def underCap(members: DataFrame, keys: Seq[String], cap: Int): DataFrame =
+    members.join(sizes(members, keys).where(col("n") <= cap), keys)
+
+  /** (keys…, n) of the buckets with n > `cap` — the record of what a cap
+    * dropped. */
+  def overCap(members: DataFrame, keys: Seq[String], cap: Int,
+      n: String = "n"): DataFrame =
+    sizes(members, keys, n).where(col(n) > cap)
+
+  /** Canonical pairs (`<id>_a` < `<id>_b`) of members sharing a bucket, one
+    * row per pair per shared bucket, cold and salted tiers unioned. Each
+    * `payload` column rides along as `<p>_a`/`<p>_b`, aligned with the
+    * pair's sides. Cold takes n ≤ min(`bucketCap`, `hardCap`), so no pair
+    * ever comes from a bucket [[overCap]] reports as dropped; when
+    * `hardCap` ≤ `bucketCap` the salted tier is provably empty and is left
+    * out of the plan.
+    *
+    * `sized` routes on bucket sizes computed from another frame (callers
+    * that prune members before pairing but keep the tier of every bucket);
+    * its size column must be named `n`, which may itself be a payload. */
+  def pairs(members: DataFrame, keys: Seq[String], id: String,
+      bucketCap: Int, hardCap: Int, saltGroups: Int,
+      payload: Seq[String] = Nil, sized: Option[DataFrame] = None): DataFrame = {
+    val keyed = members.join(sized.getOrElse(sizes(members, keys)), keys)
+    val n = col("n")
+    val cols = id +: payload
+    def side(s: String) = keyed.where(n <= math.min(bucketCap, hardCap))
+      .select(keys.map(col) ++ cols.map(c => col(c).as(s"${c}_$s")): _*)
+    val cold = side("a").join(side("b"), keys)
+      .where(col(s"${id}_a") < col(s"${id}_b"))
+      .select(cols.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
+    if (hardCap <= bucketCap) cold
+    else cold.union(saltedSelfJoin(
+      keyed.where(n > bucketCap && n <= hardCap),
+      keys, id, payload, saltGroups))
+  }
+
+  /** Salted (fragment-replicate grid) self-join: member u of bucket k with
+    * salt g = hash(u) mod G is replicated to grid cells (k, g, j≥g) on the
+    * left and (k, i≤g, g) on the right; cell (k, i, j) joins fragment i ×
+    * fragment j, so each unordered pair meets in exactly one cell and the
+    * bucket's n²/2 work spreads over G(G+1)/2 reducers at replication
+    * cost G. Equi-join on the salted composite key — no reducer ever sees
+    * a whole hot bucket. Payload is replicated G × per member, which beats
+    * re-deriving or re-joining the value per side afterwards for scalars
+    * and short vectors. */
+  private def saltedSelfJoin(hot: DataFrame, keys: Seq[String], id: String,
+      payload: Seq[String], saltGroups: Int): DataFrame = {
+    val (ia, ib) = (s"${id}_a", s"${id}_b")
+    val g = pmod(xxhash64(col(id)), lit(saltGroups)).cast("int")
+    val left = hot.select(keys.map(col) ++ Seq(col(id), g.as("__g")) ++
+        payload.map(p => col(p).as(s"${p}_a")): _*)
+      .withColumn("__j", explode(sequence(col("__g"), lit(saltGroups - 1))))
+      .select(keys.map(col) ++ Seq(col("__g").as("__gi"), col("__j").as("__gj"),
+        col(id).as(ia)) ++ payload.map(p => col(s"${p}_a")): _*)
+    val right = hot.select(keys.map(col) ++ Seq(col(id), g.as("__g")) ++
+        payload.map(p => col(p).as(s"${p}_b")): _*)
+      .withColumn("__i", explode(sequence(lit(0), col("__g"))))
+      .select(keys.map(col) ++ Seq(col("__i").as("__gi"), col("__g").as("__gj"),
+        col(id).as(ib)) ++ payload.map(p => col(s"${p}_b")): _*)
+    val swap = col(ia) > col(ib)
+    left.join(right, keys ++ Seq("__gi", "__gj"))
+      // same-fragment cell (i == j) holds both sides of every intra-fragment
+      // pair: order by id; cross-fragment pairs meet exactly once
+      .where((col("__gi") =!= col("__gj") && col(ia) =!= col(ib)) ||
+        col(ia) < col(ib))
+      .select(least(col(ia), col(ib)).as(ia) +:
+        greatest(col(ia), col(ib)).as(ib) +:
+        payload.flatMap(p => Seq(
+          when(swap, col(s"${p}_b")).otherwise(col(s"${p}_a")).as(s"${p}_a"),
+          when(swap, col(s"${p}_a")).otherwise(col(s"${p}_b")).as(s"${p}_b"))): _*)
+  }
+}

@@ -78,25 +78,62 @@ class BlockingSpec extends SparkFunSuite {
     assert(pairs == Set((1L, 2L), (2L, 5L)))
   }
 
-  test("blockingProfile tiers and exact pair sums on a hand case") {
+  /** Blocks of urls 1..n: a=2 and d=3 (cold at cap 3), b=4 and e=5
+    * (salted up to hard cap 5), c=6 (dropped) — every tier boundary. */
+  private def tierKeys() = {
     import spark.implicits._
-    // blocks: a=2 (cold), b=4 (salted at cap 3), c=6 (dropped at hard 5)
-    val keys = (
-      (1 to 2).map(i => ("a", i.toLong)) ++
-      (1 to 4).map(i => ("b", i.toLong)) ++
-      (1 to 6).map(i => ("c", i.toLong))
-    ).toDF("key", "url")
-    val row = Linkage.blockingProfile(keys, bucketCap = 3, hardCap = 5)
+    Seq("a" -> 2, "d" -> 3, "b" -> 4, "e" -> 5, "c" -> 6)
+      .flatMap { case (k, n) => (1 to n).map(i => (k, i.toLong)) }
+      .toDF("key", "url")
+  }
+
+  test("blockingProfile tiers and exact pair sums on a hand case") {
+    val row = Linkage.blockingProfile(tierKeys(), bucketCap = 3, hardCap = 5)
       .collect()(0)
-    assert(row.getAs[Long]("n_blocks") == 3L)
-    assert(row.getAs[Long]("n_assignments") == 12L)
+    assert(row.getAs[Long]("n_blocks") == 5L)
+    assert(row.getAs[Long]("n_assignments") == 20L)
     assert(row.getAs[Long]("max_block") == 6L)
-    assert(row.getAs[Long]("blocks_cold") == 1L)
-    assert(row.getAs[Long]("blocks_salted") == 1L)
+    assert(row.getAs[Long]("blocks_cold") == 2L)
+    assert(row.getAs[Long]("blocks_salted") == 2L)
     assert(row.getAs[Long]("blocks_dropped") == 1L)
-    assert(row.getAs[java.math.BigDecimal]("pairs_cold").longValueExact == 1L)
-    assert(row.getAs[java.math.BigDecimal]("pairs_salted").longValueExact == 6L)
+    assert(row.getAs[java.math.BigDecimal]("pairs_cold").longValueExact == 4L)
+    assert(row.getAs[java.math.BigDecimal]("pairs_salted").longValueExact == 16L)
     assert(row.getAs[java.math.BigDecimal]("pairs_dropped").longValueExact == 15L)
+  }
+
+  test("Tiers routes buckets at the cap boundaries; payload follows its side") {
+    val keys = tierKeys().withColumn("tag", concat(lit("t"), col("url")))
+    def allPairs(n: Int) =
+      for (i <- 1L to n.toLong; j <- i + 1 to n.toLong) yield (i, j)
+    def run(bucketCap: Int, hardCap: Int) = {
+      val df = Tiers.pairs(keys, Seq("key"), "url", bucketCap, hardCap,
+        saltGroups = 4, payload = Seq("key", "tag"))
+      val rows = df.collect().toSeq
+      // the grid swaps sides to emit url_a < url_b: each payload must
+      // travel with its own url
+      rows.foreach { r =>
+        assert(r.getLong(0) < r.getLong(1))
+        assert(r.getString(2) == r.getString(3))
+        assert(r.getString(4) == s"t${r.getLong(0)}" &&
+          r.getString(5) == s"t${r.getLong(1)}", r)
+      }
+      val byKey = rows.groupBy(_.getString(2)).map { case (k, rs) =>
+        k -> rs.map(r => (r.getLong(0), r.getLong(1))).sorted }
+      (byKey, df.queryExecution.optimizedPlan.toString)
+    }
+    // n = bucketCap (d) is cold; bucketCap+1 (b) and hardCap (e) are
+    // salted; hardCap+1 (c) emits nothing — one row per pair per bucket
+    val (tiered, tieredPlan) = run(bucketCap = 3, hardCap = 5)
+    assert(tiered == Map("a" -> allPairs(2), "d" -> allPairs(3),
+      "b" -> allPairs(4), "e" -> allPairs(5)))
+    assert(tieredPlan.contains("Generate"))
+    assert(Tiers.overCap(keys, Seq("key"), 5).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("c", 6L)))
+    // hardCap <= bucketCap: the salted grid is left out of the plan and
+    // every bucket up to hardCap takes the cold join
+    val (cold, coldPlan) = run(bucketCap = 5, hardCap = 5)
+    assert(cold == tiered)
+    assert(!coldPlan.contains("Generate"))
   }
 
   test("crossCandidatePairs equals the naive A-B key join under the cap") {

@@ -84,8 +84,8 @@ class DedupSpec extends SparkFunSuite {
   }
 
   test("minhashLshPairs recovers near-dups with exact verification") {
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", tau = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val df = Dedup.minhashLshPairs(docs, "doc_id", "text", tau = 0.5)
+    val pairs = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val keys = pairs.map(p => (p._1, p._2)).toSet
     // identical docs share all bands — must be found regardless of block
     assert(keys.contains((1L, 2L)) && keys.contains((1L, 5L)) && keys.contains((2L, 5L)))
@@ -93,6 +93,10 @@ class DedupSpec extends SparkFunSuite {
     // verification step reports the exact token-set jaccard
     pairs.filter(p => Set(p._1, p._2) == Set(1L, 2L))
       .foreach(p => assert(p._3 == 1.0))
+    // the banded frame feeds the bucket sizing and the join-back from one
+    // materialization: the signature never recomputes in the executed plan
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ExistingRDD") && !plan.contains("minhash_sig"), plan)
   }
 
   test("minhashOphLshPairs: identical docs always collide, verification exact, caps observable") {
@@ -287,26 +291,6 @@ class DedupSpec extends SparkFunSuite {
     val full = Dedup.bandIndex(corpus, "doc_id", "text").count()
     val capped = Dedup.bandIndex(corpus, "doc_id", "text", bucketCap = 1).count()
     assert(capped < full)
-  }
-
-  test("minhashLshPairs persistBanded: identical pairs, single banding pass") {
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", tau = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val persisted = Dedup.minhashLshPairs(docs, "doc_id", "text", tau = 0.5,
-      persistBanded = true)
-    val got = persisted.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == pairs)
-    // the banded subtree is served from a materialization, not recomputed:
-    // the internal lazy localCheckpoint surfaces as an ExistingRDD scan
-    // (and with persistBanded the cache sits beneath it); either way the
-    // signature expression must not appear in the executed plan at all
-    val plan = persisted.queryExecution.executedPlan.toString
-    assert(plan.contains("InMemoryTableScan") || plan.contains("ExistingRDD"),
-      s"expected materialized banded frame in plan:\n$plan")
-    assert(!plan.contains("minhash_sig"),
-      s"banding must not recompute in the executed plan:\n$plan")
-    spark.sharedState.cacheManager.clearCache()
   }
 
   test("nearDupGroups closes pairs transitively, singletons self-canonical") {

@@ -127,24 +127,6 @@ class SimilaritySpec extends SparkFunSuite {
     }
   }
 
-  test("lshTopK persistBanded: identical top-k, bucketed frame cached") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val plain = Similarity.lshTopK(emb, "vec_id", "embedding", k = 3, dim = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-      .toSet
-    val persisted = Similarity.lshTopK(emb, "vec_id", "embedding", k = 3,
-      dim = 64, persistBanded = true)
-    val got = persisted.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-    assert(got == plain)
-    // both consumers of the bucketed subtree (sizing + candidate join)
-    // read the cache — the hyperplane signatures are computed once
-    val plan = persisted.queryExecution.executedPlan.toString
-    assert(plan.contains("InMemoryTableScan"),
-      s"expected cached bucketed frame in plan:\n$plan")
-    spark.sharedState.cacheManager.clearCache()
-  }
-
   test("ivfTopK achieves useful recall vs brute force on real embeddings") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val brute = Similarity.bruteForceTopK(emb, "vec_id", "embedding", k = 3)

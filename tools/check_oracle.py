@@ -2,11 +2,21 @@
 compare each query's parquet output against its DuckDB oracle SQL —
 columns sorted by name, rows fully sorted, values compared exactly.
 
-Usage: python3 tools/check_oracle.py [sfDir] [outDir]
+Usage: python3 tools/check_oracle.py [sfDir] [outDir] [--against otherOutDir]
 (run `sbt -batch "runMain graft.Verify <sfDir> <outDir>"` first)
+
+With --against, each query's output in outDir is compared with the same
+query's output in otherOutDir (another graft.Verify run, e.g. of the parent
+commit) by the same exact comparison, instead of with the oracle; the
+reports then show that run's values as `duck`.
 """
 import duckdb, json, sys, os, math
 
+against = None
+if '--against' in sys.argv:
+    i = sys.argv.index('--against')
+    against = sys.argv[i + 1]
+    del sys.argv[i:i + 2]
 sf = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
 out = sys.argv[2] if len(sys.argv) > 2 else '/tmp/verify_out'
 
@@ -24,9 +34,13 @@ for name, sql in sorted(oracle.items()):
     if not os.path.isdir(spark_dir):
         print(f'{name}: MISSING spark output'); fails += 1; continue
     try:
-        duck = con.sql(sql).df()
+        if against:
+            duck = con.sql(f"select * from '{against}/{name}/*.parquet'").df()
+        else:
+            duck = con.sql(sql).df()
     except Exception as e:
-        print(f'{name}: ORACLE SQL ERROR: {e}'); fails += 1; continue
+        src = 'AGAINST OUTPUT' if against else 'ORACLE SQL'
+        print(f'{name}: {src} ERROR: {e}'); fails += 1; continue
     spark = con.sql(f"select * from '{spark_dir}/*.parquet'").df()
     dcols, scols = sorted(duck.columns), sorted(spark.columns)
     if dcols != scols:
