@@ -122,87 +122,35 @@ object BlockingSelection {
     val totalPos = pos.count()
     val totalNeg = neg.count()
 
+    // Per step, the marginal counts come from [[marginals]]: counted on
+    // the driver when the coverage table fits the driver-finish cap, else
+    // by one anti-join + count in Spark. Both give the same counts, so
+    // the selection is the same.
+    val capRows = DriverFinish.cap(spark, "blocksel.driverFinishRows")
+    val margPOf = marginals(covP, capRows)
+    val margNOf = marginals(covN, capRows)
     var selected = Vector.empty[(Int, String, Long, Long, Long, Long)]
     var spentNeg = 0L
     var cumPos = 0L
-    // Scale-adaptive DRIVER FINISH (the greedyMatches / CC pattern): the
-    // per-step marginal recount is a pure function of the two coverage
-    // tables, which are LABEL-sized by contract (labels are samples by
-    // nature — the doc's "nothing here touches corpus pairs"). Under the
-    // bounded-collect cap the whole greedy selection replays in-process
-    // from ONE collect per side — identical marginals, identical
-    // (-count, negMarginal, name) argmin — replacing 2 distributed
-    // anti-join+count jobs PER STEP. 0 disables; oversized coverage
-    // falls back to the distributed loop below.
-    val driverCap = DriverFinish.cap(spark, "blocksel.driverFinishRows")
-    if (driverCap > 0 && covP.count() <= driverCap &&
-        covN.count() <= driverCap) {
-      val pRows = covP.collect().map(r => (r.getString(0), (r.get(1), r.get(2))))
-      val nRows = covN.collect().map(r => (r.getString(0), (r.get(1), r.get(2))))
-      val pByFam = pRows.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val nByFam = nRows.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val coveredP = new java.util.HashSet[(Any, Any)]()
-      val coveredN = new java.util.HashSet[(Any, Any)]()
-      var step = 1
-      var done = false
-      while (!done && step <= maxTerms) {
-        val picked = selected.map(_._2).toSet
-        def marg(byFam: Map[String, Array[(Any, Any)]],
-            covered: java.util.HashSet[(Any, Any)]): Map[String, Long] =
-          byFam.collect { case (f, prs) if !picked.contains(f) =>
-            f -> prs.count(p => !covered.contains(p)).toLong
-          }
-        val margP = marg(pByFam, coveredP)
-        val margN = marg(nByFam, coveredN)
-        val feasible = margP.toSeq.filter { case (f, p) =>
-          p > 0 && spentNeg + margN.getOrElse(f, 0L) <= maxNegCovered
-        }
-        if (feasible.isEmpty) done = true
-        else {
-          val (f, p) = feasible.minBy { case (name, cnt) =>
-            (-cnt, margN.getOrElse(name, 0L), name)
-          }
-          val n = margN.getOrElse(f, 0L)
-          pByFam.getOrElse(f, Array.empty).foreach(coveredP.add)
-          nByFam.getOrElse(f, Array.empty).foreach(coveredN.add)
-          cumPos += p
-          spentNeg += n
-          selected :+= ((step, f, p, cumPos, n, spentNeg))
-          step += 1
-        }
+    var step = 1
+    var done = false
+    while (!done && step <= maxTerms) {
+      val picked = selected.map(_._2)
+      val margP = margPOf(picked)
+      val margN = margNOf(picked)
+      val feasible = margP.toSeq.filter { case (f, _) =>
+        spentNeg + margN.getOrElse(f, 0L) <= maxNegCovered
       }
-    } else {
-      var step = 1
-      var done = false
-      while (!done && step <= maxTerms) {
-        val picked = selected.map(_._2)
-        def remaining(cov: DataFrame) = {
-          if (picked.isEmpty) cov
-          else {
-            val covered = cov.where(col("family").isin(picked: _*))
-              .select("pa", "pb").distinct()
-            cov.where(!col("family").isin(picked: _*))
-              .join(covered, Seq("pa", "pb"), "left_anti")
-          }
+      if (feasible.isEmpty) done = true
+      else {
+        val (f, p) = feasible.minBy { case (name, cnt) =>
+          (-cnt, margN.getOrElse(name, 0L), name)
         }
-        val margP = remaining(covP).groupBy("family").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val margN = remaining(covN).groupBy("family").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val feasible = margP.toSeq.filter { case (f, p) =>
-          p > 0 && spentNeg + margN.getOrElse(f, 0L) <= maxNegCovered
-        }
-        if (feasible.isEmpty) done = true
-        else {
-          val (f, p) = feasible.minBy { case (name, cnt) =>
-            (-cnt, margN.getOrElse(name, 0L), name)
-          }
-          val n = margN.getOrElse(f, 0L)
-          cumPos += p
-          spentNeg += n
-          selected :+= ((step, f, p, cumPos, n, spentNeg))
-          step += 1
-        }
+        val n = margN.getOrElse(f, 0L)
+        cumPos += p
+        spentNeg += n
+        selected :+= ((step, f, p, cumPos, n, spentNeg))
+        step += 1
       }
     }
     covP.unpersist(); covN.unpersist(); pos.unpersist(); neg.unpersist()
@@ -219,8 +167,37 @@ object BlockingSelection {
     val rows = selected.map { case (s, f, p, cp, n, cn) =>
       Row(s, f, p, cp, n, cn, totalPos, totalNeg)
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    DriverFinish.frame(spark, schema, rows, slices = 1)
   }
+
+  /** Step function of the greedy loops: for the families picked so far,
+    * each other family's count of coverage rows (family, pa, pb) whose
+    * pair no picked family covers. Families with a zero count are left
+    * out (never picked). Under the driver-finish cap ([[DriverFinish]])
+    * the label-sized table is collected once and counted in memory;
+    * otherwise each step is one anti-join + count job. */
+  private def marginals(cov: DataFrame,
+      cap: Long): Seq[String] => Map[String, Long] =
+    DriverFinish.collected(cov, cap) match {
+      case Some(rows) =>
+        val byFam = rows.groupBy(_.getString(0)).view
+          .mapValues(_.map(r => (r.get(1), r.get(2)))).toMap
+        picked => {
+          val covered = picked.flatMap(f => byFam.getOrElse(f, Array.empty[(Any, Any)])).toSet
+          byFam.collect { case (f, prs) if !picked.contains(f) =>
+            f -> prs.count(p => !covered(p)).toLong
+          }.filter(_._2 > 0)
+        }
+      case None =>
+        picked => {
+          val remaining = if (picked.isEmpty) cov
+            else cov.where(!col("family").isin(picked: _*))
+              .join(cov.where(col("family").isin(picked: _*))
+                .select("pa", "pb").distinct(), Seq("pa", "pb"), "left_anti")
+          remaining.groupBy("family").count().collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+        }
+    }
 
   def greedySelection(keyed: DataFrame, truePairs: DataFrame,
       budget: BigDecimal, maxSchemes: Int): DataFrame = {
@@ -255,63 +232,25 @@ object BlockingSelection {
       .cache()
     val totalTruth = truth.count()
 
+    // the step loop of [[learnScheme]], with one coverage table and the
+    // volume budget as the feasibility filter
+    val marginalsOf = marginals(cov,
+      DriverFinish.cap(spark, "blocksel.driverFinishRows"))
     var selected = Vector.empty[(Int, String, Long, Long, BigDecimal, BigDecimal)]
     var spent = BigDecimal(0)
     var coveredSoFar = 0L
-    // same scale-adaptive DRIVER FINISH as [[learnScheme]]: the coverage
-    // table is truth-sized by contract, so under the bounded-collect cap
-    // the per-step anti-join + count jobs replay in-process from one
-    // collect — identical marginals and (-count, name) argmin.
-    val driverCap = DriverFinish.cap(spark, "blocksel.driverFinishRows")
-    if (driverCap > 0 && cov.count() <= driverCap) {
-      val byFam = cov.collect().map(r => (r.getString(0), (r.get(1), r.get(2))))
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val covered = new java.util.HashSet[(Any, Any)]()
-      var step = 1
-      var done = false
-      while (!done && step <= maxSchemes) {
-        val picked = selected.map(_._2).toSet
-        // the distributed groupBy emits NO row for a family whose
-        // remaining marginal is zero — mirror that (zero-marginal
-        // families are never picked)
-        val marginals = byFam.collect {
-          case (f, prs) if !picked.contains(f) =>
-            f -> prs.count(p => !covered.contains(p)).toLong
-        }.toSeq.filter { case (f, m) =>
-          m > 0 && spent + volumes(f) <= budget
-        }
-        if (marginals.isEmpty) done = true
-        else {
-          val (f, m) = marginals.minBy { case (name, cnt) => (-cnt, name) }
-          byFam.getOrElse(f, Array.empty).foreach(covered.add)
-          spent += volumes(f)
-          coveredSoFar += m
-          selected :+= ((step, f, m, coveredSoFar, volumes(f), spent))
-          step += 1
-        }
-      }
-    } else {
-      var step = 1
-      var done = false
-      while (!done && step <= maxSchemes) {
-        val picked = selected.map(_._2)
-        val coveredPairs = if (picked.isEmpty) null
-          else cov.where(col("family").isin(picked: _*))
-            .select("pa", "pb").distinct()
-        val remaining0 = cov.where(!col("family").isin(picked: _*))
-        val remaining = if (coveredPairs == null) remaining0
-          else remaining0.join(coveredPairs, Seq("pa", "pb"), "left_anti")
-        val marginals = remaining.groupBy("family").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1))
-          .filter { case (f, _) => spent + volumes(f) <= budget }
-        if (marginals.isEmpty) done = true
-        else {
-          val (f, m) = marginals.minBy { case (name, cnt) => (-cnt, name) }
-          spent += volumes(f)
-          coveredSoFar += m
-          selected :+= ((step, f, m, coveredSoFar, volumes(f), spent))
-          step += 1
-        }
+    var step = 1
+    var done = false
+    while (!done && step <= maxSchemes) {
+      val feasible = marginalsOf(selected.map(_._2)).toSeq
+        .filter { case (f, _) => spent + volumes(f) <= budget }
+      if (feasible.isEmpty) done = true
+      else {
+        val (f, m) = feasible.minBy { case (name, cnt) => (-cnt, name) }
+        spent += volumes(f)
+        coveredSoFar += m
+        selected :+= ((step, f, m, coveredSoFar, volumes(f), spent))
+        step += 1
       }
     }
     cov.unpersist()
@@ -327,7 +266,6 @@ object BlockingSelection {
     val rows = selected.map { case (s, f, m, c, v, cv) =>
       Row(s, f, m, c, v.bigDecimal, cv.bigDecimal, totalTruth)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema)
+    DriverFinish.frame(spark, schema, rows, slices = 1)
   }
 }

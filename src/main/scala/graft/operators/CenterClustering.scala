@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Center and merge-center clustering (Hassanzadeh, Chiang, Lee, Miller —
   * "Framework for Evaluating Clustering Algorithms in Duplicate
@@ -95,35 +96,20 @@ object CenterClustering {
       .union(alive0.select(col("lb").as("id"))).distinct()
     var alive = alive0
 
-    // Scale-adaptive DRIVER FINISH (same contract as
-    // [[ConnectedComponents]]'s): when the alive-edge frontier fits a
-    // bounded driver buffer, replay the PINNED SEQUENTIAL SCAN (the
-    // definition at the top of this file) over the collected frontier +
-    // current states. The parallel rounds are proven ≡ that scan, so
-    // finishing sequentially is a cost refactoring, not new semantics —
-    // and it removes the O(log frontier) tail rounds whose per-round
-    // fixed cost dominates a shrinking edge set. Bounded collect (hard
-    // row cap, never data-sized); 0 disables; non-atomic id types fall
-    // back to the distributed loop.
+    // Driver finish ([[DriverFinish]]): the parallel rounds are proven
+    // equal to the pinned sequential scan (the definition at the top of
+    // this file), so once the alive-edge frontier fits, replaying that
+    // scan over the collected frontier and current states removes the
+    // tail rounds without changing the assignment.
     val spark = edges.sparkSession
     val driverCap = DriverFinish.cap(spark, "centers.driverFinishEdges")
-    val idCmp: Option[(Any, Any) => Int] = {
-      import org.apache.spark.sql.types._
-      canon.schema("la").dataType match {
-        case LongType | IntegerType | ShortType | ByteType => Some(
-          (x, y) => java.lang.Long.compare(
-            x.asInstanceOf[Number].longValue, y.asInstanceOf[Number].longValue))
-        case StringType => Some(
-          (x, y) => x.asInstanceOf[String].compareTo(y.asInstanceOf[String]))
-        case DoubleType | FloatType => Some(
-          (x, y) => java.lang.Double.compare(
-            x.asInstanceOf[Number].doubleValue, y.asInstanceOf[Number].doubleValue))
-        case _ => None
-      }
-    }
+    // decreasing similarity, ties by (min id, max id) — la < lb already
+    import DriverFinish.{Asc, Desc}
+    val order = DriverFinish.rowOrdering(canon.schema,
+      "s" -> Desc, "la" -> Asc, "lb" -> Asc)
 
     def sequentialFinish(live: DataFrame): DataFrame = {
-      val cmp = idCmp.get
+      // (la, lb, s) keep their positions in `canon`, so `order` applies
       val rows = live.select(col("la"), col("lb"), col("s"),
         col("ca"), col("cb")).collect()
       val st = new java.util.HashMap[Any, Any]()
@@ -131,18 +117,8 @@ object CenterClustering {
         if (!r.isNullAt(3)) st.put(r.get(0), r.get(3))
         if (!r.isNullAt(4)) st.put(r.get(1), r.get(4))
       }
-      // decreasing similarity, ties by (min id, max id) — la < lb already
-      val sorted = rows.sortWith { (x, y) =>
-        val c0 = java.lang.Double.compare(y.getDouble(2), x.getDouble(2))
-        if (c0 != 0) c0 < 0
-        else {
-          val c1 = cmp(x.get(0), y.get(0))
-          if (c1 != 0) c1 < 0 else cmp(x.get(1), y.get(1)) < 0
-        }
-      }
-      val fired = new scala.collection.mutable.ArrayBuffer[
-        org.apache.spark.sql.Row]()
-      sorted.foreach { r =>
+      val fired = new scala.collection.mutable.ArrayBuffer[Row]()
+      rows.sorted(order.get).foreach { r =>
         val a = r.get(0); val b = r.get(1)
         val ca = st.get(a); val cb = st.get(b)
         val aUn = ca == null; val bUn = cb == null
@@ -150,22 +126,17 @@ object CenterClustering {
         val bCenter = !bUn && cb == b
         if (aUn && bUn) { // new cluster seeded by the smaller id (= la)
           st.put(a, a); st.put(b, a)
-          fired += org.apache.spark.sql.Row(a, a)
-          fired += org.apache.spark.sql.Row(b, a)
+          fired += Row(a, a)
+          fired += Row(b, a)
         } else if (aUn && bCenter) {
-          st.put(a, b); fired += org.apache.spark.sql.Row(a, b)
+          st.put(a, b); fired += Row(a, b)
         } else if (bUn && aCenter) {
-          st.put(b, a); fired += org.apache.spark.sql.Row(b, a)
+          st.put(b, a); fired += Row(b, a)
         } // else: member involved or two centers → the scan skips it
       }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(fired.toSeq,
-          math.max(1, spark.sparkContext.defaultParallelism)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            canon.schema("la").dataType, nullable = true),
-          org.apache.spark.sql.types.StructField("center_id",
-            canon.schema("lb").dataType, nullable = true))))
+      DriverFinish.frame(spark, new StructType()
+        .add("id", canon.schema("la").dataType)
+        .add("center_id", canon.schema("lb").dataType), fired.toSeq)
     }
     var asg = canon.limit(0)
       .select(col("la").as("id"), col("lb").as("center_id"))
@@ -193,7 +164,7 @@ object CenterClustering {
         drained = true
         alive = live
         iter += 1
-      } else if (driverCap > 0 && liveCnt <= driverCap && idCmp.isDefined) {
+      } else if (order.isDefined && DriverFinish.fits(driverCap, liveCnt)) {
         // frontier fits the bounded buffer → sequential finish, done
         asg = materialize(asg.union(sequentialFinish(live)))
         alive = live

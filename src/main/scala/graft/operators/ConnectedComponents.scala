@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Iterative DataFrame-based connected components via alternating
   * large-star / small-star rounds (Kiveris et al., "Connected Components in
@@ -89,20 +91,15 @@ object ConnectedComponents {
       .where(col("src") =!= col("dst"))
       .distinct(), 0)
 
-    // Scale-adaptive DRIVER FINISH (optimization guide §1.2 step 1: the
-    // distributed-algorithm lever): when the canonical edge frontier fits
-    // a bounded driver buffer, one union-find pass computes the identical
-    // min-root assignment — the component partition is a pure function of
-    // the edge set, so finishing on the driver is a cost refactoring, not
-    // new semantics. At 100 TB the loop still runs distributed rounds;
-    // the frontier shrinks geometrically, so the finish replaces only the
-    // LAST few rounds (where per-round fixed cost dominates a tiny
-    // frontier). Bounded like every other driver-side fold here (FS EM,
-    // IVF fit): the cap is a hard row bound, never data-sized; 0 disables.
+    // Driver finish ([[DriverFinish]]): the component partition is a pure
+    // function of the edge set, so one union-find pass over the collected
+    // frontier computes the same min-root assignment as the remaining
+    // rounds. The frontier shrinks geometrically, so at scale the finish
+    // replaces only the last few rounds, where per-round fixed cost
+    // dominates a tiny frontier.
     val driverCap = DriverFinish.cap(spark, "cc.driverFinishEdges")
 
     def driverFinish(frontier: DataFrame): DataFrame = {
-      val collected = frontier.select(col("src"), col("dst")).collect()
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -114,7 +111,7 @@ object ConnectedComponents {
         r
       }
       val nodes = new java.util.HashSet[Long]()
-      collected.foreach { row =>
+      frontier.select(col("src"), col("dst")).collect().foreach { row =>
         val a = row.getLong(0); val b = row.getLong(1)
         nodes.add(a); nodes.add(b)
         val ra = find(a); val rb = find(b)
@@ -122,28 +119,15 @@ object ConnectedComponents {
       }
       // min-root convention: roots ARE min ids (union always keeps the
       // smaller root), so find(x) is the component id directly
-      val rows = new scala.collection.mutable.ArrayBuffer[
-        org.apache.spark.sql.Row](nodes.size())
-      val it = nodes.iterator()
-      while (it.hasNext) {
-        val n = it.next(); rows += org.apache.spark.sql.Row(n, find(n))
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("component",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq,
-          math.max(1, spark.sparkContext.defaultParallelism)), schema)
+      DriverFinish.frame(spark,
+        new StructType().add("id", LongType).add("component", LongType),
+        nodes.asScala.toSeq.map(n => Row(n, find(n))))
     }
 
-    if (driverCap > 0) {
-      // the count doubles as the frontier's materializing action
-      val n0 = edges.count()
-      if (n0 <= driverCap)
-        return Result(driverFinish(edges), 0, Seq(n0))
-    }
+    // the count doubles as the frontier's materializing action
+    lazy val n0 = edges.count()
+    if (DriverFinish.fits(driverCap, n0))
+      return Result(driverFinish(edges), 0, Seq(n0))
 
     var lastSig: (Long, Long) = (-1L, -1L)
     val roundEdges = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -190,7 +174,7 @@ object ConnectedComponents {
       iter += 1
       // mid-loop driver finish: the frontier shrank under the cap — the
       // remaining O(log tail) rounds collapse into one union-find pass
-      if (!done && driverCap > 0 && sig._1 <= driverCap)
+      if (!done && DriverFinish.fits(driverCap, sig._1))
         return Result(driverFinish(edges), iter, roundEdges.toSeq)
     }
     require(done, s"connected components did not converge in $maxIter iterations")

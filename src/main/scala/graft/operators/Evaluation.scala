@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Classifier-style evaluation of pairwise match scores — the ROC view of
   * a linkage scorer (complementing the θ-driven confusion counts of
@@ -831,89 +832,73 @@ object Evaluation {
       .unionAll(intra.select(col("__gv").as("__cu"), col("__gu").as("__cv")))
       .localCheckpoint(eager = true)
 
-    // Scale-adaptive DRIVER FINISH (the house pattern — see
-    // [[ConnectedComponents]]): coreness is a unique integer function of
-    // the edge set (the h-index fixpoint IS coreness), so when the
-    // bidirected edge list fits a bounded driver buffer the classic
-    // O(E) peel computes the identical values in one pass — replacing
-    // every distributed round (2 shuffles + a window + an action each).
-    // Bounded collect; 0 disables; id types only need hash/equals.
+    // Driver finish ([[DriverFinish]]): coreness is a unique integer
+    // function of the edge set (the h-index fixpoint IS coreness), so the
+    // classic O(E) peel over the collected bidirected edge list computes
+    // the same values as every distributed round (2 shuffles + a window +
+    // an action each). Id types only need hash/equals.
     val spark = assignment.sparkSession
-    val driverCap = DriverFinish.cap(spark, "core.driverFinishEdges")
-    val finished: Option[DataFrame] =
-      if (driverCap > 0 && b.count() <= driverCap) {
-        val rows = b.collect()
-        val idx = new java.util.HashMap[Any, Integer]()
-        rows.foreach { r =>
-          idx.computeIfAbsent(r.get(0), _ => Integer.valueOf(idx.size))
-        }
-        val n = idx.size
-        val deg = new Array[Int](n)
-        rows.foreach(r => deg(idx.get(r.get(0))) += 1)
-        val adjStart = new Array[Int](n + 1)
-        var i = 0
-        while (i < n) { adjStart(i + 1) = adjStart(i) + deg(i); i += 1 }
-        val fill = adjStart.clone()
-        val adj = new Array[Int](rows.length)
-        rows.foreach { r =>
-          val u = idx.get(r.get(0)); adj(fill(u)) = idx.get(r.get(1))
-          fill(u) += 1
-        }
-        // Batagelj–Zaveršnik bucket peel: process nodes in nondecreasing
-        // degree; each processed node's coreness is its current degree,
-        // and its unprocessed higher-degree neighbors lose one
-        val core = deg.clone()
-        val maxDeg = if (n == 0) 0 else core.max
-        val bin = new Array[Int](maxDeg + 2)
-        core.foreach(d => bin(d) += 1)
-        var s = 0
-        var d = 0
-        while (d <= maxDeg) { val t = bin(d); bin(d) = s; s += t; d += 1 }
-        val vert = new Array[Int](n)
-        val posv = new Array[Int](n)
-        i = 0
-        while (i < n) {
-          posv(i) = bin(core(i)); vert(posv(i)) = i; bin(core(i)) += 1
-          i += 1
-        }
-        d = maxDeg
-        while (d > 0) { bin(d) = bin(d - 1); d -= 1 }
-        bin(0) = 0
-        i = 0
-        while (i < n) {
-          val v = vert(i)
-          var j = adjStart(v)
-          while (j < adjStart(v + 1)) {
-            val u = adj(j)
-            if (core(u) > core(v)) {
-              val du = core(u); val pu = posv(u)
-              val pw = bin(du); val w = vert(pw)
-              if (u != w) {
-                posv(u) = pw; vert(pu) = w; posv(w) = pu; vert(pw) = u
-              }
-              bin(du) += 1
-              core(u) -= 1
+    val coreCap = DriverFinish.cap(spark, "core.driverFinishEdges")
+    val finished: Option[DataFrame] = DriverFinish.collected(b, coreCap).map { rows =>
+      val idx = new java.util.HashMap[Any, Integer]()
+      rows.foreach { r =>
+        idx.computeIfAbsent(r.get(0), _ => Integer.valueOf(idx.size))
+      }
+      val n = idx.size
+      val deg = new Array[Int](n)
+      rows.foreach(r => deg(idx.get(r.get(0))) += 1)
+      val adjStart = new Array[Int](n + 1)
+      var i = 0
+      while (i < n) { adjStart(i + 1) = adjStart(i) + deg(i); i += 1 }
+      val fill = adjStart.clone()
+      val adj = new Array[Int](rows.length)
+      rows.foreach { r =>
+        val u = idx.get(r.get(0)); adj(fill(u)) = idx.get(r.get(1))
+        fill(u) += 1
+      }
+      // Batagelj–Zaveršnik bucket peel: process nodes in nondecreasing
+      // degree; each processed node's coreness is its current degree,
+      // and its unprocessed higher-degree neighbors lose one
+      val core = deg.clone()
+      val maxDeg = if (n == 0) 0 else core.max
+      val bin = new Array[Int](maxDeg + 2)
+      core.foreach(d => bin(d) += 1)
+      var s = 0
+      var d = 0
+      while (d <= maxDeg) { val t = bin(d); bin(d) = s; s += t; d += 1 }
+      val vert = new Array[Int](n)
+      val posv = new Array[Int](n)
+      i = 0
+      while (i < n) {
+        posv(i) = bin(core(i)); vert(posv(i)) = i; bin(core(i)) += 1
+        i += 1
+      }
+      d = maxDeg
+      while (d > 0) { bin(d) = bin(d - 1); d -= 1 }
+      bin(0) = 0
+      i = 0
+      while (i < n) {
+        val v = vert(i)
+        var j = adjStart(v)
+        while (j < adjStart(v + 1)) {
+          val u = adj(j)
+          if (core(u) > core(v)) {
+            val du = core(u); val pu = posv(u)
+            val pw = bin(du); val w = vert(pw)
+            if (u != w) {
+              posv(u) = pw; vert(pu) = w; posv(w) = pu; vert(pw) = u
             }
-            j += 1
+            bin(du) += 1
+            core(u) -= 1
           }
-          i += 1
+          j += 1
         }
-        val outRows = new scala.collection.mutable.ArrayBuffer[
-          org.apache.spark.sql.Row](n)
-        val it = idx.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          outRows += org.apache.spark.sql.Row(e.getKey, core(e.getValue).toLong)
-        }
-        Some(spark.createDataFrame(
-          spark.sparkContext.parallelize(outRows.toSeq,
-            math.max(1, spark.sparkContext.defaultParallelism)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__cid",
-              b.schema("__cu").dataType, nullable = true),
-            org.apache.spark.sql.types.StructField("__ch",
-              org.apache.spark.sql.types.LongType, nullable = true)))))
-      } else None
+        i += 1
+      }
+      DriverFinish.frame(spark, new StructType()
+          .add("__cid", b.schema("__cu").dataType).add("__ch", LongType),
+        idx.asScala.toSeq.map { case (id, k) => Row(id, core(k).toLong) })
+    }
 
     var h = finished.getOrElse(b.groupBy(col("__cu").as("__cid"))
       .agg(count(lit(1)).as("__ch"))
@@ -1022,17 +1007,14 @@ object Evaluation {
       aCol, bCol).localCheckpoint(eager = true)
     var prev = cur.count()
 
-    // Scale-adaptive DRIVER FINISH (the house pattern — see
-    // [[ConnectedComponents]]): the maximal k-truss is a UNIQUE subgraph
-    // of the edge set (peeling is confluent — deletions depend only on
-    // the current edge set, never order), so when the intra-cluster edge
-    // list fits a bounded driver buffer, an in-process peel over
-    // adjacency sets computes the identical survivors + final supports
-    // in one collect — replacing O(rounds) wedge-join shuffles. Bounded;
-    // 0 disables; id types only need hash/equals.
+    // Driver finish ([[DriverFinish]]): the maximal k-truss is a UNIQUE
+    // subgraph of the edge set (peeling is confluent — deletions depend
+    // only on the current edge set, never order), so an in-process peel
+    // over adjacency sets of the collected intra-cluster edges computes
+    // the same survivors and final supports as O(rounds) wedge-join
+    // shuffles. Id types only need hash/equals.
     val spark = assignment.sparkSession
-    val driverCap = DriverFinish.cap(spark, "truss.driverFinishEdges")
-    if (driverCap > 0 && prev <= driverCap) {
+    if (DriverFinish.fits(DriverFinish.cap(spark, "truss.driverFinishEdges"), prev)) {
       val rows = cur.collect() // (__gu, __gv, __gc)
       val live = new java.util.HashMap[(Any, Any), Any]() // edge -> cluster
       val adj = new java.util.HashMap[Any, java.util.HashSet[Any]]()
@@ -1071,27 +1053,11 @@ object Evaluation {
           }
         }
       }
-      val outRows = new scala.collection.mutable.ArrayBuffer[
-        org.apache.spark.sql.Row](live.size())
-      val it2 = live.entrySet().iterator()
-      while (it2.hasNext) {
-        val e = it2.next()
-        outRows += org.apache.spark.sql.Row(e.getValue, e.getKey._1,
-          e.getKey._2, support(e.getKey._1, e.getKey._2))
-      }
       val sch = cur.schema
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(outRows.toSeq,
-          math.max(1, spark.sparkContext.defaultParallelism)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(clusterCol,
-            sch("__gc").dataType, nullable = true),
-          org.apache.spark.sql.types.StructField(aCol,
-            sch("__gu").dataType, nullable = true),
-          org.apache.spark.sql.types.StructField(bCol,
-            sch("__gv").dataType, nullable = true),
-          org.apache.spark.sql.types.StructField("support",
-            org.apache.spark.sql.types.LongType, nullable = true))))
+      return DriverFinish.frame(spark, new StructType()
+          .add(clusterCol, sch("__gc").dataType).add(aCol, sch("__gu").dataType)
+          .add(bCol, sch("__gv").dataType).add("support", LongType),
+        live.asScala.toSeq.map { case ((u, v), c) => Row(c, u, v, support(u, v)) })
     }
 
     var iter = 0

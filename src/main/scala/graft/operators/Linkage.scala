@@ -134,16 +134,25 @@ object Linkage {
     * the normalized names (the north-star composite). Pure projection over
     * the candidate pairs joined with the (url → name) side — both joins are
     * equi-joins on url. */
-  def score(pairs: DataFrame, extracted: DataFrame): DataFrame = {
+  def score(pairs: DataFrame, extracted: DataFrame): DataFrame =
+    composite(withNames(pairs, extracted))
+
+  /** The candidate pairs with both sides' normalized names joined on as
+    * `name_a` / `name_b` — the two url equi-joins every scorer runs. */
+  private def withNames(pairs: DataFrame, extracted: DataFrame): DataFrame = {
     val names = extracted.select(col("url"), col("name_norm"))
     pairs
       .join(names.withColumnRenamed("url", "url_a").withColumnRenamed("name_norm", "name_a"), "url_a")
       .join(names.withColumnRenamed("url", "url_b").withColumnRenamed("name_norm", "name_b"), "url_b")
+  }
+
+  /** (url_a, url_b, jw, dice, score) over [[withNames]] output. */
+  private def composite(named: DataFrame): DataFrame =
+    named
       .select(col("url_a"), col("url_b"),
         jaro_winkler_sim(col("name_a"), col("name_b")).as("jw"),
         sorensen_dice_sim(col("name_a"), col("name_b")).as("dice"))
       .withColumn("score", col("jw") + col("dice"))
-  }
 
   /** Stage 4 (alternative) — Fellegi-Sunter comparison vectors for the
     * candidate pairs: banded similarity indicators over the normalized
@@ -162,13 +171,8 @@ object Linkage {
     * `otherwise(0)`), which [[FellegiSunter.fit]] requires.
     * Output: (url_a, url_b, g0, g1, g2). */
   val fsGammaCols: Seq[String] = Seq("g0", "g1", "g2")
-  def fsComparisonVectors(pairs: DataFrame, extracted: DataFrame): DataFrame = {
-    val names = extracted.select(col("url"), col("name_norm"))
-    pairs
-      .join(names.withColumnRenamed("url", "url_a")
-        .withColumnRenamed("name_norm", "name_a"), "url_a")
-      .join(names.withColumnRenamed("url", "url_b")
-        .withColumnRenamed("name_norm", "name_b"), "url_b")
+  def fsComparisonVectors(pairs: DataFrame, extracted: DataFrame): DataFrame =
+    withNames(pairs, extracted)
       .select(col("url_a"), col("url_b"),
         jaro_winkler_sim(col("name_a"), col("name_b")).as("__jw"),
         sorensen_dice_sim(col("name_a"), col("name_b")).as("__dice"))
@@ -176,7 +180,6 @@ object Linkage {
         when(col("__jw") >= 0.95, lit(1L)).otherwise(lit(0L)).as("g0"),
         when(col("__jw") >= 0.88, lit(1L)).otherwise(lit(0L)).as("g1"),
         when(col("__dice") >= 0.85, lit(1L)).otherwise(lit(0L)).as("g2"))
-  }
 
   /** Stage 4 (pre-filtered) — [[score]] behind a TWO-tier admission
     * filter at the same `maxDist`:
@@ -197,20 +200,10 @@ object Linkage {
     * (PipelinePlanSpec asserts the plan order), so pruned pairs never
     * evaluate a kernel beyond their rejection tier. */
   def scoreWithPrefilter(pairs: DataFrame, extracted: DataFrame,
-      maxDist: Int): DataFrame = {
-    val names = extracted.select(col("url"), col("name_norm"))
-    pairs
-      .join(names.withColumnRenamed("url", "url_a")
-        .withColumnRenamed("name_norm", "name_a"), "url_a")
-      .join(names.withColumnRenamed("url", "url_b")
-        .withColumnRenamed("name_norm", "name_b"), "url_b")
+      maxDist: Int): DataFrame =
+    composite(withNames(pairs, extracted)
       .where(bag_within(col("name_a"), col("name_b"), maxDist) &&
-        levenshtein_within(col("name_a"), col("name_b"), maxDist))
-      .select(col("url_a"), col("url_b"),
-        jaro_winkler_sim(col("name_a"), col("name_b")).as("jw"),
-        sorensen_dice_sim(col("name_a"), col("name_b")).as("dice"))
-      .withColumn("score", col("jw") + col("dice"))
-  }
+        levenshtein_within(col("name_a"), col("name_b"), maxDist)))
 
   /** Stage 5 — matched pairs at threshold θ. */
   def matches(scored: DataFrame, theta: Double): DataFrame =
@@ -763,57 +756,28 @@ object Linkage {
       .localCheckpoint(eager = false)
     var matched = cur.limit(0)
 
-    // Scale-adaptive DRIVER FINISH (the [[CenterClustering]] /
-    // [[ConnectedComponents]] pattern): the distributed rounds are proven
-    // ≡ the sequential greedy scan, so once the surviving pair set fits a
-    // bounded driver buffer, ONE in-process replay of the pinned order
-    // (score DESC, leftId, rightId; accept when both endpoints free)
-    // computes the identical matching — replacing the O(log) tail of
-    // per-round fixed costs (two windows + two anti-joins + a probe
-    // action each). Bounded collect, 0 disables, exotic types fall back.
+    // Driver finish ([[DriverFinish]]): the rounds are proven equal to the
+    // sequential greedy scan, so once the surviving pairs fit, one replay
+    // of the pinned order (score DESC, leftId, rightId; accept when both
+    // endpoints are free) computes the same matching without the tail of
+    // rounds (two windows, two anti-joins and a probe action each).
     val driverCap = DriverFinish.cap(spark, "greedy.driverFinishEdges")
-    def cmpOf(dt: org.apache.spark.sql.types.DataType): Option[(Any, Any) => Int] = {
-      import org.apache.spark.sql.types._
-      dt match {
-        case LongType | IntegerType | ShortType | ByteType => Some(
-          (x, y) => java.lang.Long.compare(
-            x.asInstanceOf[Number].longValue, y.asInstanceOf[Number].longValue))
-        case StringType => Some(
-          (x, y) => x.asInstanceOf[String].compareTo(y.asInstanceOf[String]))
-        case DoubleType | FloatType => Some(
-          (x, y) => java.lang.Double.compare(
-            x.asInstanceOf[Number].doubleValue, y.asInstanceOf[Number].doubleValue))
-        case _ => None
-      }
-    }
-    val cmpL = cmpOf(cur.schema(leftId).dataType)
-    val cmpR = cmpOf(cur.schema(rightId).dataType)
-    val cmpS = cmpOf(cur.schema(scoreCol).dataType)
-    val driverOk = cmpL.isDefined && cmpR.isDefined && cmpS.isDefined
+    import DriverFinish.{Asc, Desc}
+    val order = DriverFinish.rowOrdering(cur.schema,
+      scoreCol -> Desc, leftId -> Asc, rightId -> Asc)
 
     def sequentialFinish(df: DataFrame): DataFrame = {
-      val (cl, cr, cs) = (cmpL.get, cmpR.get, cmpS.get)
-      val rows = df.collect()
-      val sorted = rows.sortWith { (x, y) =>
-        val c0 = cs(y.get(2), x.get(2)) // score DESC
-        if (c0 != 0) c0 < 0
-        else {
-          val c1 = cl(x.get(0), y.get(0))
-          if (c1 != 0) c1 < 0 else cr(x.get(1), y.get(1)) < 0
-        }
-      }
+      // a round's anti-joins move their key column first, so restore the
+      // (leftId, rightId, scoreCol) positions `order` and `matched` use
+      val pairs = df.select(col(leftId), col(rightId), col(scoreCol))
       val usedL = new java.util.HashSet[Any]()
       val usedR = new java.util.HashSet[Any]()
-      val fired = new scala.collection.mutable.ArrayBuffer[
-        org.apache.spark.sql.Row]()
-      sorted.foreach { r =>
-        if (!usedL.contains(r.get(0)) && !usedR.contains(r.get(1))) {
-          usedL.add(r.get(0)); usedR.add(r.get(1)); fired += r
-        }
+      val fired = pairs.collect().sorted(order.get).filter { r =>
+        val free = !usedL.contains(r.get(0)) && !usedR.contains(r.get(1))
+        if (free) { usedL.add(r.get(0)); usedR.add(r.get(1)) }
+        free
       }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(fired.toSeq,
-          math.max(1, spark.sparkContext.defaultParallelism)), df.schema)
+      DriverFinish.frame(spark, pairs.schema, fired.toSeq)
     }
 
     var iter = 0
@@ -822,7 +786,7 @@ object Linkage {
     while (!drained && !finished && iter < maxIter) {
       val n = cur.count() // doubles as the drain probe and the cap check
       if (n == 0L) drained = true
-      else if (driverOk && driverCap > 0 && n <= driverCap) {
+      else if (order.isDefined && DriverFinish.fits(driverCap, n)) {
         matched = matched.union(sequentialFinish(cur))
         finished = true
       } else {
@@ -889,65 +853,36 @@ object Linkage {
     // (CenterClustering's) truncates lineage AND resets carried stats so
     // rounds don't compound plan statistics.
     var cur = CenterClustering.materialize(cand)
-    var matched = cand.limit(0)
 
-    // Scale-adaptive DRIVER FINISH ([[greedyMatches]]' pattern, scoped
-    // per group pair): within each (ga, gb) the rounds ≡ the sequential
-    // greedy scan in (s DESC, rl, rr) order with per-group endpoint
-    // bookkeeping; groups are independent, so one pass over the globally
-    // (s DESC, rl, rr)-sorted candidates with per-group used-sets
-    // reproduces every group's matching exactly. Bounded collect; 0
-    // disables; exotic rid types fall back to the distributed loop.
+    // Driver finish ([[DriverFinish]], [[greedyMatches]]' replay scoped per
+    // group pair): within each (ga, gb) the rounds equal the sequential
+    // greedy scan in (s DESC, rl, rr) order; group pairs are independent,
+    // so one pass over the globally sorted candidates with per-group-pair
+    // endpoint sets reproduces every group pair's matching.
     val spark = scored.sparkSession
-    val glCap = DriverFinish.cap(spark, "greedy.driverFinishEdges")
-    def glCmpOf(dt: org.apache.spark.sql.types.DataType): Option[(Any, Any) => Int] = {
-      import org.apache.spark.sql.types._
-      dt match {
-        case LongType | IntegerType | ShortType | ByteType => Some(
-          (x, y) => java.lang.Long.compare(
-            x.asInstanceOf[Number].longValue, y.asInstanceOf[Number].longValue))
-        case StringType => Some(
-          (x, y) => x.asInstanceOf[String].compareTo(y.asInstanceOf[String]))
-        case DoubleType | FloatType => Some(
-          (x, y) => java.lang.Double.compare(
-            x.asInstanceOf[Number].doubleValue, y.asInstanceOf[Number].doubleValue))
-        case _ => None
-      }
-    }
-    val cmpRl = glCmpOf(cur.schema("rl").dataType)
-    val cmpRr = glCmpOf(cur.schema("rr").dataType)
-    var finished = false
-    if (glCap > 0 && cmpRl.isDefined && cmpRr.isDefined &&
-        cur.count() <= glCap) {
-      val (crl, crr) = (cmpRl.get, cmpRr.get)
+    import DriverFinish.{Asc, Desc}
+    val replayed = for {
+      order <- DriverFinish.rowOrdering(cur.schema,
+        "s" -> Desc, "rl" -> Asc, "rr" -> Asc)
+      rows <- DriverFinish.collected(cur,
+        DriverFinish.cap(spark, "greedy.driverFinishEdges"))
+    } yield {
       // rows: (ga, gb, rl, rr, s)
-      val sorted = cur.collect().sortWith { (x, y) =>
-        val c0 = java.lang.Double.compare(y.getDouble(4), x.getDouble(4))
-        if (c0 != 0) c0 < 0
-        else {
-          val c1 = crl(x.get(2), y.get(2))
-          if (c1 != 0) c1 < 0 else crr(x.get(3), y.get(3)) < 0
-        }
-      }
       val usedL = new java.util.HashSet[(Any, Any, Any)]()
       val usedR = new java.util.HashSet[(Any, Any, Any)]()
-      val fired = new scala.collection.mutable.ArrayBuffer[
-        org.apache.spark.sql.Row]()
-      sorted.foreach { r =>
+      val fired = rows.sorted(order).filter { r =>
         val kl = (r.get(0), r.get(1), r.get(2))
         val kr = (r.get(0), r.get(1), r.get(3))
-        if (!usedL.contains(kl) && !usedR.contains(kr)) {
-          usedL.add(kl); usedR.add(kr); fired += r
-        }
+        val free = !usedL.contains(kl) && !usedR.contains(kr)
+        if (free) { usedL.add(kl); usedR.add(kr) }
+        free
       }
-      matched = spark.createDataFrame(
-        spark.sparkContext.parallelize(fired.toSeq,
-          math.max(1, spark.sparkContext.defaultParallelism)), cur.schema)
-      finished = true
+      DriverFinish.frame(spark, cur.schema, fired.toSeq)
     }
+    var matched = replayed.getOrElse(cand.limit(0))
 
     var iter = 0
-    var drained = finished || cur.isEmpty
+    var drained = replayed.isDefined || cur.isEmpty
     while (!drained && iter < maxIter) {
       val best = cur
         .withColumn("rn_l", row_number().over(

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Correlation clustering of a match graph by deterministic pivots
   * (KwikCluster: Ailon-Charikar-Newman's 3-approximation for correlation
@@ -61,50 +62,32 @@ object PivotClustering {
       .localCheckpoint(eager = false)
     var mis = active.limit(0)
 
-    // Scale-adaptive DRIVER FINISH (the house pattern — see
-    // [[ConnectedComponents]]): the parallel local-minimum rounds are
-    // proven ≡ the sequential greedy MIS in rank order, so when graph +
-    // node set fit a bounded driver buffer, one in-process replay of that
-    // scan computes the identical MIS without the per-round join/probe
-    // bill. The rank mix is exact 64-bit integer arithmetic on both
-    // sides, so the replay is bit-faithful. Bounded collect; 0 disables.
+    // Driver finish ([[DriverFinish]]): the parallel local-minimum rounds
+    // are proven equal to the sequential greedy MIS in rank order, so when
+    // graph + node set fit, one replay of that scan computes the same MIS
+    // without the per-round join/probe bill. The rank mix is exact 64-bit
+    // integer arithmetic on both sides, so the replay is bit-faithful.
     val driverCap = DriverFinish.cap(spark, "mis.driverFinishRows")
-    if (driverCap > 0 &&
-        nodes.schema("id").dataType ==
-          org.apache.spark.sql.types.LongType) {
-      val nEdges = sym.count()
-      val nNodes = active.count()
-      if (nEdges + nNodes <= driverCap) {
-        val adj = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
-        sym.select(col("u"), col("v")).collect().foreach { r =>
-          adj.computeIfAbsent(r.getLong(0),
-            _ => new java.util.ArrayList[Long]()).add(r.getLong(1))
-        }
-        def rkOf(id: Long): (Long, Long) =
-          ((id * 1103515245L + 12345L) % 2147483648L, id)
-        val order = active.select(col("id")).collect()
-          .map(_.getLong(0)).sortBy(rkOf)
-        val dominated = new java.util.HashSet[Long]()
-        val pivots = new scala.collection.mutable.ArrayBuffer[
-          org.apache.spark.sql.Row]()
-        order.foreach { n =>
-          if (!dominated.contains(n)) {
-            pivots += org.apache.spark.sql.Row(n)
-            val nb = adj.get(n)
-            if (nb != null) {
-              val it = nb.iterator()
-              while (it.hasNext) dominated.add(it.next())
-            }
-          }
-        }
-        val ids = spark.createDataFrame(
-          spark.sparkContext.parallelize(pivots.toSeq,
-            math.max(1, spark.sparkContext.defaultParallelism)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType, nullable = true))))
-        return ids.select(col("id"), rank(col("id")).as("rk"))
+    if (nodes.schema("id").dataType == LongType &&
+        DriverFinish.fits(driverCap, sym.count() + active.count())) {
+      val adj = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
+      sym.select(col("u"), col("v")).collect().foreach { r =>
+        adj.computeIfAbsent(r.getLong(0),
+          _ => new java.util.ArrayList[Long]()).add(r.getLong(1))
       }
+      def rkOf(id: Long): (Long, Long) =
+        ((id * 1103515245L + 12345L) % 2147483648L, id)
+      val order = active.select(col("id")).collect()
+        .map(_.getLong(0)).sortBy(rkOf)
+      val dominated = new java.util.HashSet[Long]()
+      val pivots = order.filter { n =>
+        val free = !dominated.contains(n)
+        if (free) Option(adj.get(n)).foreach(dominated.addAll)
+        free
+      }
+      val ids = DriverFinish.frame(spark,
+        new StructType().add("id", LongType), pivots.toSeq.map(Row(_)))
+      return ids.select(col("id"), rank(col("id")).as("rk"))
     }
 
     var iter = 0

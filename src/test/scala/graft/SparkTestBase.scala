@@ -22,6 +22,12 @@ object SparkTestBase {
 
 abstract class SparkFunSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Runs `f` with the session conf `key` set to `value`, then unsets it. */
+  def withConf[A](key: String, value: String)(f: => A): A = {
+    spark.conf.set(key, value)
+    try f finally spark.conf.unset(key)
+  }
 }
 
 /** CSV vector loading (simple format: no quoted fields; values contain no

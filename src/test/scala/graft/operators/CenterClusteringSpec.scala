@@ -157,6 +157,18 @@ class CenterClusteringSpec extends SparkFunSuite {
     assert(runMerge(edges) == seqMergeCenters(edges))
   }
 
+  test("driver finish: -0.0/0.0 similarity ties follow SQL order at every cap") {
+    // SQL sorts -0.0 == 0.0, so the two edges tie and (1,3) scans first
+    // by (min id, max id): 1 becomes the center, 3 its member, and (2,3)
+    // is skipped. Ordering 0.0 above -0.0 would seed 2 instead.
+    val es = Seq((2L, 3L, 0.0), (1L, 3L, -0.0))
+    val want = seqCenters(es.map { case (a, b, s) => (a, b, s + 0.0) })
+    assert(want == Map(1L -> 1L, 3L -> 1L, 2L -> 2L))
+    for (cap <- Seq("0", "1", "1000000"))
+      assert(withConf("graft.centers.driverFinishEdges", cap)(runCenters(es))
+        == want, s"cap $cap")
+  }
+
   test("parallel-edge dedup keeps max sim; isolated singletons covered") {
     val es = Seq((1L, 2L, 0.3), (2L, 1L, 0.9), (1L, 2L, 0.1), (5L, 5L, 1.0))
     val got = runCenters(es)

@@ -1,0 +1,71 @@
+package graft.operators
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
+
+import graft.SparkFunSuite
+
+/** The shared driver-finish policy: the checked conf lookup, the gate,
+  * and comparators that sort as Spark SQL's ORDER BY does (checked
+  * against Spark's own sort of the same values). */
+class DriverFinishSpec extends SparkFunSuite {
+
+  import spark.implicits._
+
+  private val key = "cc.driverFinishEdges"
+
+  test("driver finish cap: default, both spellings, 0 disables the gate") {
+    assert(DriverFinish.cap(spark, key) == DriverFinish.DefaultCap)
+    assert(withConf(s"graft.$key", "7")(DriverFinish.cap(spark, key)) == 7L)
+    assert(withConf(s"spark.graft.$key", "9")(DriverFinish.cap(spark, key)) == 9L)
+    assert(DriverFinish.fits(5L, 5L) && !DriverFinish.fits(5L, 6L))
+    assert(!DriverFinish.fits(0L, sys.error("a disabled gate must not count")))
+  }
+
+  test("driver finish cap: a non-numeric value is rejected with its key") {
+    val e = intercept[IllegalArgumentException](
+      withConf(s"graft.$key", "lots")(DriverFinish.cap(spark, key)))
+    assert(e.getMessage.contains(s"graft.$key") && e.getMessage.contains("lots"))
+  }
+
+  test("driver finish cap: a negative value is rejected with its key") {
+    val e = intercept[IllegalArgumentException](
+      withConf(s"spark.graft.$key", "-1")(DriverFinish.cap(spark, key)))
+    assert(e.getMessage.contains(s"spark.graft.$key"))
+  }
+
+  test("driver finish order: strings, doubles and nulls sort as Spark SQL sorts") {
+    // BMP letters, both sides of the surrogate block (U+D7FF, U+E000,
+    // U+FF21, U+FFFF), astral code points (U+1F600, U+10000), prefixes
+    val strs = Seq("a", "", "ab", "\uD7FF", "\uE000", "\uFF21", "\uFFFF",
+      "\uD83D\uDE00", "\uD83D\uDE00a", "\uD800\uDC00", null)
+    val sparkStrs = strs.toDF("v").orderBy($"v").collect().map(_.getString(0))
+    val strOrd = DriverFinish.ordering(StringType).get
+    assert(strs.sorted(strOrd) == sparkStrs.toSeq)
+    // by UTF-16 unit the astral code point would sort below U+FF21
+    assert(strOrd.lt("\uFF21", "\uD83D\uDE00"))
+
+    val doubles = Seq(0.0, -0.0, Double.NaN, Double.NegativeInfinity, 1.5,
+      Double.PositiveInfinity, -2.0)
+    val dblOrd = DriverFinish.ordering(DoubleType).get
+    assert(dblOrd.compare(-0.0, 0.0) == 0)
+    assert(dblOrd.compare(Double.NaN, Double.PositiveInfinity) > 0)
+    // -0.0 and 0.0 tie, so compare with the sign of zero dropped
+    def unsigned(ds: Seq[Any]) = ds.map(d => (d.asInstanceOf[Double] + 0.0).toString)
+    val sparkDoubles = doubles.toDF("v").orderBy($"v").collect().map(_.getDouble(0))
+    assert(unsigned(doubles.sorted(dblOrd)) == unsigned(sparkDoubles.toSeq))
+
+    assert(DriverFinish.ordering(DecimalType(10, 2)).isEmpty)
+    assert(DriverFinish.ordering(BinaryType).isEmpty)
+  }
+
+  test("driver finish row order: directions, tie-breaks, unsupported keys") {
+    val schema = new StructType().add("s", DoubleType).add("id", StringType)
+    import DriverFinish.{Asc, Desc}
+    val ord = DriverFinish.rowOrdering(schema, "s" -> Desc, "id" -> Asc).get
+    val rows = Seq(Row(0.0, "b"), Row(-0.0, "a"), Row(1.0, "z"), Row(null, "c"))
+    assert(rows.sorted(ord).map(_.getString(1)) == Seq("z", "a", "b", "c"))
+    assert(DriverFinish.rowOrdering(
+      schema.add("d", DateType), "s" -> Desc, "d" -> Asc).isEmpty)
+  }
+}

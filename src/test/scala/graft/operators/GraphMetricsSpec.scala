@@ -358,24 +358,35 @@ class GraphMetricsSpec extends SparkFunSuite {
     assert(got.length == 7 && got.forall(_ == 0L))
   }
 
+  /** Random clustered graph: n nodes, node i in cluster `c{i % clusters}`,
+    * m random edges; returns (assignment, raw edges, canonical intra-
+    * cluster edges). */
+  private def randomGraph(seed: Int, n: Int, clusters: Int, m: Int)
+      : (Seq[(Long, String)], Seq[(Long, Long)], Seq[(Long, Long)]) = {
+    val rng = new scala.util.Random(seed)
+    val asgSeq = (1 to n).map(i => (i.toLong, s"c${i % clusters}"))
+    val cluster = asgSeq.toMap
+    val edgeSeq = Seq.fill(m)((rng.nextInt(n) + 1L, rng.nextInt(n) + 1L))
+    val canon = edgeSeq
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+      .filter { case (a, b) => a != b && cluster(a) == cluster(b) }
+      .distinct
+    (asgSeq, edgeSeq, canon)
+  }
+
+  private def checkCores(seed: Int): Unit = {
+    val n = 36
+    val (asgSeq, edgeSeq, canon) = randomGraph(seed, n, 3, 150)
+    val ref = peelCores((1 to n).map(_.toLong), canon)
+    val got = Evaluation.coreNumbers(
+        asgSeq.toDF("id", "cluster_id").repartition(5),
+        edgeSeq.toDF("url_a", "url_b").repartition(7))
+      .select("id", "core_number").as[(Long, Long)].collect().toMap
+    assert(got == ref, s"seed $seed")
+  }
+
   test("coreNumbers matches sequential peeling on random graphs") {
-    for (seed <- Seq(3, 11, 42)) {
-      val rng = new scala.util.Random(seed)
-      val n = 36
-      val asgSeq = (1 to n).map(i => (i.toLong, s"c${i % 3}"))
-      val cluster = asgSeq.toMap
-      val edgeSeq = Seq.fill(150)((rng.nextInt(n) + 1L, rng.nextInt(n) + 1L))
-      val canon = edgeSeq
-        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-        .filter { case (a, b) => a != b && cluster(a) == cluster(b) }
-        .distinct
-      val ref = peelCores((1 to n).map(_.toLong), canon)
-      val got = Evaluation.coreNumbers(
-          asgSeq.toDF("id", "cluster_id").repartition(5),
-          edgeSeq.toDF("url_a", "url_b").repartition(7))
-        .select("id", "core_number").as[(Long, Long)].collect().toMap
-      assert(got == ref, s"seed $seed")
-    }
+    Seq(3, 11, 42).foreach(checkCores)
   }
 
   test("coreNumbers: clique minus one edge — uniform high core") {
@@ -429,25 +440,27 @@ class GraphMetricsSpec extends SparkFunSuite {
     intercept[IllegalArgumentException](Evaluation.trussEdges(asg, e, 2))
   }
 
-  test("trussEdges matches sequential peeling on random graphs") {
-    for (seed <- Seq(5, 23)) {
-      val rng = new scala.util.Random(seed)
-      val n = 30
-      val asgSeq = (1 to n).map(i => (i.toLong, s"c${i % 2}"))
-      val cluster = asgSeq.toMap
-      val edgeSeq = Seq.fill(160)((rng.nextInt(n) + 1L, rng.nextInt(n) + 1L))
-      val canon = edgeSeq
-        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-        .filter { case (a, b) => a != b && cluster(a) == cluster(b) }
-        .distinct
-      for (k <- Seq(3, 4)) {
-        val ref = peelTruss(canon, k)
-        val got = Evaluation.trussEdges(
-            asgSeq.toDF("id", "cluster_id").repartition(5),
-            edgeSeq.toDF("url_a", "url_b").repartition(7), k)
-          .select("url_a", "url_b").as[(Long, Long)].collect().toSet
-        assert(got == ref, s"seed $seed k $k")
-      }
+  private def checkTruss(seed: Int): Unit = {
+    val (asgSeq, edgeSeq, canon) = randomGraph(seed, 30, 2, 160)
+    for (k <- Seq(3, 4)) {
+      val ref = peelTruss(canon, k)
+      val got = Evaluation.trussEdges(
+          asgSeq.toDF("id", "cluster_id").repartition(5),
+          edgeSeq.toDF("url_a", "url_b").repartition(7), k)
+        .select("url_a", "url_b").as[(Long, Long)].collect().toSet
+      assert(got == ref, s"seed $seed k $k")
     }
+  }
+
+  test("trussEdges matches sequential peeling on random graphs") {
+    Seq(5, 23).foreach(checkTruss)
+  }
+
+  test("driver finish: coreNumbers and trussEdges at cap 0 and the default equal peeling") {
+    // cap 0 forces the distributed rounds; unset is the default cap
+    withConf("graft.core.driverFinishEdges", "0")(checkCores(42))
+    checkCores(42)
+    withConf("graft.truss.driverFinishEdges", "0")(checkTruss(23))
+    checkTruss(23)
   }
 }

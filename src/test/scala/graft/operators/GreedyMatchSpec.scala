@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
@@ -33,26 +34,77 @@ class GreedyMatchSpec extends SparkFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
-  test("parallel rounds equal sequential greedy on random scores") {
+  private lazy val randomPairs: Seq[(Long, Long, Double)] = {
     val rnd = new scala.util.Random(7)
-    val pairs = (for {
+    (for {
       l <- 0L until 40L
       r <- 0L until 40L
       if rnd.nextDouble() < 0.2
     } yield (l, r, math.rint(rnd.nextDouble() * 100) / 10.0)).toSeq
-    assert(run(pairs) == sequentialGreedy(pairs))
   }
 
-  test("adversarial descending chain serializes but stays exact") {
-    // a1-b1 10, b1-a2 9, a2-b2 8, ... greedy takes every OTHER pair
-    val pairs = (0 until 20).flatMap { i =>
+  // a1-b1 10, b1-a2 9, a2-b2 8, ... greedy takes every OTHER pair
+  private lazy val chainPairs: Seq[(Long, Long, Double)] =
+    (0 until 20).flatMap { i =>
       Seq((i.toLong, i.toLong, 100.0 - 2 * i),
         ((i + 1).toLong, i.toLong, 99.0 - 2 * i))
     }
-    val expected = sequentialGreedy(pairs)
-    assert(run(pairs) == expected)
+
+  private val capKey = "graft.greedy.driverFinishEdges"
+
+  test("parallel rounds equal sequential greedy on random scores") {
+    assert(run(randomPairs) == sequentialGreedy(randomPairs))
+  }
+
+  test("adversarial descending chain serializes but stays exact") {
+    val expected = sequentialGreedy(chainPairs)
+    assert(run(chainPairs) == expected)
     // the chain's greedy matching is exactly the even layer
     assert(expected == (0 until 20).map(i => (i.toLong, i.toLong)).toSet)
+  }
+
+  test("driver finish at cap 0, a mid-loop cap and the default equals sequential greedy") {
+    // cap 0 runs only the distributed rounds; the small cap runs rounds
+    // until the surviving pairs fit, then replays the rest on the driver
+    for ((name, pairs, smallCap) <- Seq(
+        ("random", randomPairs, "60"), ("chain", chainPairs, "12"))) {
+      val want = sequentialGreedy(pairs)
+      assert(withConf(capKey, "0")(run(pairs)) == want, s"$name: rounds")
+      assert(withConf(capKey, smallCap)(run(pairs)) == want, s"$name: mid-loop")
+      assert(run(pairs) == want, s"$name: default cap")
+    }
+  }
+
+  /** Sequential greedy over Spark SQL's own sort (score DESC, id_l, id_r):
+    * the reference for scores and ids whose Java and SQL orders differ. */
+  private def sqlOrderGreedy(df: DataFrame): Set[(Any, Any)] = {
+    val takenL = mutable.Set.empty[Any]
+    val takenR = mutable.Set.empty[Any]
+    df.orderBy(col("score").desc, col("id_l"), col("id_r")).collect()
+      .map(r => (r.get(0), r.get(1)))
+      .filter { case (l, r) =>
+        val free = !takenL(l) && !takenR(r)
+        if (free) { takenL += l; takenR += r }
+        free
+      }.toSet
+  }
+
+  test("driver finish: -0.0/0.0 score ties and non-BMP ids follow SQL order at every cap") {
+    import spark.implicits._
+    // SQL sorts -0.0 == 0.0, so the tie breaks on id_r
+    val zeros = Seq((1L, 11L, 0.0), (1L, 10L, -0.0)).toDF("id_l", "id_r", "score")
+    // U+FF21 sorts before U+1F600 by code point (SQL's UTF-8 byte order)
+    // but after it by UTF-16 code unit (java.lang.String.compareTo)
+    val (bmp, astral) = ("\uFF21", "\uD83D\uDE00")
+    val strs = Seq(("x", bmp, 1.0), ("x", astral, 1.0), ("y", bmp, 0.5))
+      .toDF("id_l", "id_r", "score")
+    assert(sqlOrderGreedy(zeros) == Set((1L, 10L)))
+    assert(sqlOrderGreedy(strs) == Set(("x", bmp)))
+    for (df <- Seq(zeros, strs); cap <- Seq("0", "1", "1000000")) {
+      val got = withConf(capKey, cap)(Linkage.greedyMatches(df).collect())
+        .map(r => (r.get(0), r.get(1))).toSet
+      assert(got == sqlOrderGreedy(df), s"cap $cap")
+    }
   }
 
   test("score ties break by (id_l, id_r) like the sequential order") {

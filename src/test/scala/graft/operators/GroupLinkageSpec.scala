@@ -41,32 +41,62 @@ class GroupLinkageSpec extends SparkFunSuite {
     }
   }
 
-  test("matches the sequential per-group-pair reference on random input") {
+  private lazy val groupsL = (0L until 4L).map(g =>
+    g -> (0 until 6).map(i => g * 100 + i.toLong)).toMap
+  private lazy val groupsR = (0L until 4L).map(g =>
+    g -> (0 until 5).map(i => 1000 + g * 100 + i.toLong)).toMap
+  private lazy val randomScores: Seq[(Long, Long, Double)] = {
     val rng = new scala.util.Random(97)
-    val groupsL = (0L until 4L).map(g =>
-      g -> (0 until 6).map(i => g * 100 + i.toLong)).toMap
-    val groupsR = (0L until 4L).map(g =>
-      g -> (0 until 5).map(i => 1000 + g * 100 + i.toLong)).toMap
-    val allL = groupsL.values.flatten.toSeq
-    val allR = groupsR.values.flatten.toSeq
-    val scores = (for {
-      l <- allL; r <- allR
+    for {
+      l <- groupsL.values.flatten.toSeq; r <- groupsR.values.flatten.toSeq
       if rng.nextDouble() < 0.3
-    } yield (l, r, math.rint(rng.nextDouble() * 50) / 10.0)).toSeq
+    } yield (l, r, math.rint(rng.nextDouble() * 50) / 10.0)
+  }
 
+  /** groupLinkage over the random fixture vs the sequential reference. */
+  private def checkRandom(): Unit = {
     val left = groupsL.toSeq.flatMap { case (g, ms) => ms.map(m => (g, m)) }
       .toDF("gid", "rid")
     val right = groupsR.toSeq.flatMap { case (g, ms) => ms.map(m => (g, m)) }
       .toDF("gid", "rid")
-    val scored = scores.toDF("id_l", "id_r", "score")
+    val scored = randomScores.toDF("id_l", "id_r", "score")
 
     val got = Linkage.groupLinkage(left, right, scored)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(4), r.getDouble(5), r.getDouble(6)))).toMap
     val ref = refSim(groupsL.view.mapValues(_.toSeq).toMap,
-      groupsR.view.mapValues(_.toSeq).toMap, scores)
+      groupsR.view.mapValues(_.toSeq).toMap, randomScores)
     assert(got.keySet == ref.keySet)
     for (k <- ref.keys) assert(got(k) == ref(k), s"group pair $k")
+  }
+
+  private val capKey = "graft.greedy.driverFinishEdges"
+
+  test("matches the sequential per-group-pair reference on random input") {
+    checkRandom()
+  }
+
+  test("driver finish at cap 0 and the default equals the sequential reference") {
+    withConf(capKey, "0")(checkRandom()) // distributed rounds only
+    checkRandom()
+  }
+
+  test("driver finish: tied non-BMP and BMP rids follow SQL order at every cap") {
+    // x ties between U+FF21 and U+1F600. SQL orders by code point, so the
+    // sequential scan gives x U+FF21 first and y, whose only candidate is
+    // U+FF21, stays unmatched. UTF-16 order would give x U+1F600 and then
+    // match y as well (n_matched 2, matched_sum 1.5).
+    val (bmp, astral) = ("\uFF21", "\uD83D\uDE00")
+    val left = Seq((7L, "x"), (7L, "y")).toDF("gid", "rid")
+    val right = Seq((9L, bmp), (9L, astral)).toDF("gid", "rid")
+    val scored = Seq(("x", bmp, 1.0), ("x", astral, 1.0), ("y", bmp, 0.5))
+      .toDF("id_l", "id_r", "score")
+    for (cap <- Seq("0", "1", "1000000")) {
+      val row = withConf(capKey, cap)(
+        Linkage.groupLinkage(left, right, scored).collect()).toSeq
+      assert(row.map(r => (r.getLong(4), r.getDouble(5))) == Seq((1L, 1.0)),
+        s"cap $cap")
+    }
   }
 
   test("hand case: perfect sub-match and the normalization formula") {

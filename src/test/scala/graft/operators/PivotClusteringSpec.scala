@@ -41,14 +41,28 @@ class PivotClusteringSpec extends SparkFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  private def randomEdges(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    (for {
+      u <- 0L until 60L; v <- (u + 1) until 60L
+      if rnd.nextDouble() < 0.06
+    } yield (u, v)).toSeq
+  }
+
   test("parallel rounds equal sequential KwikCluster on random graphs") {
     for (seed <- Seq(1, 2, 3)) {
-      val rnd = new scala.util.Random(seed)
-      val edges = (for {
-        u <- 0L until 60L; v <- (u + 1) until 60L
-        if rnd.nextDouble() < 0.06
-      } yield (u, v)).toSeq
+      val edges = randomEdges(seed)
       assert(run(edges) == sequentialKwik(edges), s"seed $seed")
+    }
+  }
+
+  test("driver finish at cap 0 and the default equals sequential KwikCluster") {
+    for (seed <- Seq(1, 2, 3)) {
+      val edges = randomEdges(seed)
+      val want = sequentialKwik(edges)
+      assert(withConf("graft.mis.driverFinishRows", "0")(run(edges)) == want,
+        s"seed $seed: rounds")
+      assert(run(edges) == want, s"seed $seed: default cap")
     }
   }
 
