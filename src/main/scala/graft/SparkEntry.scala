@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions._
+import graft.operators.Frames
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -40,16 +41,6 @@ object SparkEntry {
     val n = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < n) df.repartition(n) else df
   }
-
-  /** Materialize a frame consumed by MULTIPLE actions within ONE query
-    * (the fit-then-score shape: a model fit collects sufficient
-    * statistics — action #1 — and the scoring projection re-reads the
-    * same pair frame — action #2). A lazy localCheckpoint computes the
-    * upstream kernel join once; later consumers read the stored blocks
-    * (guide §1.2 step 1 / §5 — don't compute things twice; same
-    * within-query materialization contract as the operators' internal
-    * checkpoints, never persisted across bench runs). */
-  private def mat(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
   /** Customer self-pairs blocked on nationkey (blocking key ≙ §7.2). */
   private def customerPairs(s: SparkSession, dir: String): DataFrame = {
@@ -1448,13 +1439,13 @@ object SparkEntry {
         .select(id.as("nid"), (id * 7919L % 211L).as("bk"),
           substring(col("c_name"), 16, 3).as("sfx"))
       // the negative join feeds the budget count AND learnScheme's
-      // coverage passes — one lazy checkpoint computes it once
-      val neg = cn.select(col("nid").as("pa"), col("bk"), col("sfx").as("sa"))
+      // coverage passes
+      val neg = Frames.shared(cn
+        .select(col("nid").as("pa"), col("bk"), col("sfx").as("sa"))
         .join(cn.select(col("nid").as("pb"), col("bk"), col("sfx").as("sb")),
           "bk")
         .where(col("pa") < col("pb") && col("sa") =!= col("sb"))
-        .select(col("pa"), col("pb"))
-        .localCheckpoint(eager = false)
+        .select(col("pa"), col("pb")))
       val budget = neg.count() / 8
       graft.operators.BlockingSelection.learnScheme(keyed, pos, neg,
         budget, maxTerms = 3)
@@ -1826,10 +1817,10 @@ object SparkEntry {
       val supp = s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("id"), col("s_name").as("name"),
           col("s_nationkey").as("bk"))
-      // symmetricBestMatches consumes the scored frame twice (one argmax
-      // window per side) — materialize the kernel-scored pairs once
-      val scored = mat(graft.operators.Linkage.linkTables(cust, supp, "id",
-        "name", "bk", theta = 1.0, bucketPairCap = 1000000L))
+      // symmetricBestMatches reads the scored frame twice (one argmax
+      // window per side)
+      val scored = Frames.shared(graft.operators.Linkage.linkTables(cust,
+        supp, "id", "name", "bk", theta = 1.0, bucketPairCap = 1000000L))
       graft.operators.Linkage.symmetricBestMatches(scored)
     }),
 
@@ -1938,7 +1929,8 @@ object SparkEntry {
     // pattern counts — so the fit is hash-grade, not just the scoring
     // projection.
     "q_fellegi_sunter" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir))
+      // the model fit and the scoring pass both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir))
       val model = graft.operators.FellegiSunter.fit(pairs, fsGammas, iters = 15)
       graft.operators.FellegiSunter.classify(
         graft.operators.FellegiSunter.score(pairs, fsGammas, model),
@@ -1949,7 +1941,8 @@ object SparkEntry {
     // comparison patterns, each with its count and fitted posterior/lr —
     // the model-sanity view read before trusting per-pair scores.
     "q_fs_pattern_table" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir))
+      // the model fit and the pattern table both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir))
       val model = graft.operators.FellegiSunter.fit(pairs, fsGammas, iters = 15)
       graft.operators.FellegiSunter.patternTable(pairs, fsGammas, model)
     }),
@@ -1960,7 +1953,8 @@ object SparkEntry {
     // model as a from-scratch fit over all pairs — at per-batch cost.
     // The oracle is exactly q_fellegi_sunter's unrolled EM.
     "q_fs_incremental" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir))
+      // the old and the batch split both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir))
       val old = pairs.where(pmod(col("ka") + col("kb"), lit(3)) =!= 0)
       val batch = pairs.where(pmod(col("ka") + col("kb"), lit(3)) === 0)
       val cDir = java.nio.file.Files
@@ -1993,7 +1987,8 @@ object SparkEntry {
     // re-runs the full 15-iteration EM and performs the SAME single
     // division per fitted ratio, so every factor is hash-grade.
     "q_fs_waterfall" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir))
+      // the model fit and the waterfall both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir))
       val model = graft.operators.FellegiSunter.fit(pairs, fsGammas, iters = 15)
       graft.operators.FellegiSunter.waterfall(pairs, fsGammas, model)
     }),
@@ -2038,7 +2033,8 @@ object SparkEntry {
     // comparisons (bin e = ⌊log₂ lr⌋ without ever calling log), zero
     // bins included, open tails as sentinel bins.
     "q_match_weight_hist" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir))
+      // the model fit and the scoring pass both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir))
       val model = graft.operators.FellegiSunter.fit(pairs, fsGammas, iters = 15)
       graft.operators.FellegiSunter.matchWeightHistogram(
         graft.operators.FellegiSunter.score(pairs, fsGammas, model),
@@ -2050,7 +2046,8 @@ object SparkEntry {
     // shares, and the pinned-order share ratio — the monitoring table a
     // PSI/KL alarm reads run-over-run.
     "q_score_drift" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir))
+      // the model fit and the scoring pass both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir))
       val model = graft.operators.FellegiSunter.fit(pairs, fsGammas, iters = 15)
       val scored = graft.operators.FellegiSunter.score(pairs, fsGammas, model)
       graft.operators.FellegiSunter.histogramDrift(
@@ -2074,14 +2071,16 @@ object SparkEntry {
     }),
 
     "q_supervised_score" -> ((s, dir) => {
-      val pairs = mat(supervisedPairs(s, dir))
+      // the model fit and the scoring pass both read the pairs
+      val pairs = Frames.shared(supervisedPairs(s, dir))
       val m = graft.operators.SupervisedWeights.fit(pairs,
         fsGammas, "t", eta = 0.5, iters = 15)
       graft.operators.SupervisedWeights.score(pairs, fsGammas, m)
     }),
 
     "q_fellegi_sunter_persisted" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir))
+      // the model fit and the scoring pass both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir))
       val model = graft.operators.FellegiSunter.fit(pairs, fsGammas, iters = 15)
       val mDir = java.nio.file.Files
         .createTempDirectory("graft_fs_model").toString
@@ -2099,7 +2098,8 @@ object SparkEntry {
     // re-derives the same thresholds from its own EM re-fit via ordered
     // error-mass folds over all 2^k patterns.
     "q_fellegi_sunter_calibrated" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir))
+      // the model fit and the scoring pass both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir))
       val model = graft.operators.FellegiSunter.fit(pairs, fsGammas, iters = 15)
       val (up, lo) = graft.operators.FellegiSunter.calibrate(model,
         mu = 0.08, lambdaErr = 0.25)
@@ -2113,7 +2113,8 @@ object SparkEntry {
     // per-partition top-k), and the oracle replays the same EM + margin
     // ordering with LIMIT.
     "q_fs_uncertain" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir))
+      // the model fit and the scoring pass both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir))
       val model = graft.operators.FellegiSunter.fit(pairs, fsGammas, iters = 15)
       graft.operators.FellegiSunter.uncertaintySample(
         graft.operators.FellegiSunter.score(pairs, fsGammas, model), k = 100)
@@ -2125,7 +2126,8 @@ object SparkEntry {
     // likelihoods (Splink's null level). The oracle replays the filtered
     // EM and the null-aware scoring projection.
     "q_fs_missing" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir).withColumn("g2",
+      // the model fit and the scoring pass both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir).withColumn("g2",
         when((col("ka") + col("kb")) % 7 === 0, lit(null).cast("long"))
           .otherwise(col("g2"))))
       val model = graft.operators.FellegiSunter.fit(
@@ -2252,7 +2254,8 @@ object SparkEntry {
     }),
 
     "q_fellegi_sunter_levels" -> ((s, dir) => {
-      val pairs = mat(fsLevelPairs(s, dir))
+      // the model fit and the scoring pass both read the pairs
+      val pairs = Frames.shared(fsLevelPairs(s, dir))
       val model = graft.operators.FellegiSunter.fitLevels(pairs,
         Seq("g0", "g1", "g2"), Seq(3, 3, 2), iters = 15)
       graft.operators.FellegiSunter.scoreLevels(pairs,
@@ -2264,7 +2267,8 @@ object SparkEntry {
     // than on a common one — pairs agreeing on g1 get lr scaled by
     // u1 / tf(segment). The oracle replays the EM AND the tf join.
     "q_fellegi_sunter_tf" -> ((s, dir) => {
-      val pairs = mat(fsGammaPairs(s, dir, withSeg = true))
+      // the model fit and the scoring pass both read the pairs
+      val pairs = Frames.shared(fsGammaPairs(s, dir, withSeg = true))
       val model = graft.operators.FellegiSunter.fit(pairs, fsGammas, iters = 15)
       val tf = graft.operators.FellegiSunter.termFrequencies(
         s.read.parquet(s"$dir/customer.parquet"), "c_mktsegment")
@@ -2425,15 +2429,12 @@ object SparkEntry {
     // suspected. Oracle: the same recursive-CTE CC plus an argmin
     // window over the scored edges.
     "q_weakest_links" -> ((s, dir) => {
-      // scored feeds both CC and the weakest-link fold — materialize the
-      // (small) surviving edge set once instead of re-scoring the blocked
-      // pair explosion per consumer
-      val scored = customerPairs(s, dir)
+      // scored feeds both CC and the weakest-link fold
+      val scored = Frames.shared(customerPairs(s, dir)
         .where(col("na") =!= col("nb") &&
           levenshtein_sim(col("na"), col("nb")) >= 0.94)
         .select(col("ka"), col("kb"),
-          levenshtein_sim(col("na"), col("nb")).as("score"))
-        .localCheckpoint(eager = false)
+          levenshtein_sim(col("na"), col("nb")).as("score")))
       val asg = graft.operators.ConnectedComponents.run(
         scored.select(col("ka"), col("kb")))
       graft.operators.Linkage.weakestLinks(scored, asg, "id",
@@ -2452,13 +2453,12 @@ object SparkEntry {
     // are intra-cluster by construction so only true near misses
     // survive.
     "q_near_misses" -> ((s, dir) => {
-      // scored feeds CC AND the near-miss queue — materialize once
-      val scored = customerPairs(s, dir)
+      // scored feeds CC AND the near-miss queue
+      val scored = Frames.shared(customerPairs(s, dir)
         .where(col("na") =!= col("nb") &&
           levenshtein_sim(col("na"), col("nb")) >= 0.88)
         .select(col("ka"), col("kb"),
-          levenshtein_sim(col("na"), col("nb")).as("score"))
-        .localCheckpoint(eager = false)
+          levenshtein_sim(col("na"), col("nb")).as("score")))
       val cc = graft.operators.ConnectedComponents.run(
         scored.where(col("score") >= 0.94).select(col("ka"), col("kb")))
       val asg = s.read.parquet(s"$dir/customer.parquet")
@@ -3209,11 +3209,10 @@ object SparkEntry {
     "q_dedup_groups_incremental" -> ((s, dir) => {
       val d = spread(s.read.parquet(s"$dir/documents.parquet"))
       // the LSH pair frame feeds BOTH the base-corpus CC and the batch
-      // addEdges — materialize it once instead of re-running the sha256
-      // signature + banded-join pipeline per consumer
-      val pairs = graft.operators.Dedup.minhashLshPairs(d, "doc_id", "text",
-        tau = 0.5, hashFamily = "sha256").select(col("ia"), col("ib"))
-        .localCheckpoint(eager = false)
+      // addEdges
+      val pairs = Frames.shared(graft.operators.Dedup.minhashLshPairs(d,
+        "doc_id", "text", tau = 0.5, hashFamily = "sha256")
+        .select(col("ia"), col("ib")))
       val baseEdges = pairs
         .where(pmod(col("ia"), lit(2)) === 0)
         .where(pmod(col("ib"), lit(2)) === 0)

@@ -96,27 +96,24 @@ object BlockingSelection {
     val spark = keyed.sparkSession
     val base = keyed.select(col(keyed.columns(0)).as("family"),
       col(keyed.columns(1)).as("__id"), col(keyed.columns(2)).as("__key"))
-    // the term pool feeds FOUR coverage joins (pa/pb × pos/neg) — one
-    // lazy checkpoint stops the conjunction self-join evaluating per use
-    val all = (if (includeConjunctions) base.union(conjunctions(base))
-      else base).localCheckpoint(eager = false)
+    // the term pool feeds FOUR coverage joins (pa/pb × pos/neg)
+    val all = Frames.shared(
+      if (includeConjunctions) base.union(conjunctions(base)) else base)
 
     def pairsOf(df: DataFrame) = df
       .select(col(df.columns(0)).as("pa"), col(df.columns(1)).as("pb"))
       .distinct()
-    def coverage(pairs: DataFrame) = pairs
+    // a coverage table feeds every step's marginal counts
+    def coverage(pairs: DataFrame) = Frames.shared(pairs
       .join(all.select(col("family"), col("__id").as("pa"), col("__key")),
         Seq("pa"))
       .join(all.select(col("family"), col("__id").as("pb"), col("__key")),
         Seq("family", "pb", "__key"))
-      .select("family", "pa", "pb").distinct()
-      .cache()
+      .select("family", "pa", "pb").distinct())
 
-    // the label frames each feed a coverage join AND a total count — cache
-    // them (label-sized by nature) so the caller's pair-generation joins
-    // run once, not once per consumer
-    val pos = pairsOf(posPairs).cache()
-    val neg = pairsOf(negPairs).cache()
+    // the label frames each feed a coverage join AND a total count
+    val pos = Frames.shared(pairsOf(posPairs))
+    val neg = Frames.shared(pairsOf(negPairs))
     val covP = coverage(pos)
     val covN = coverage(neg)
     val totalPos = pos.count()
@@ -153,7 +150,6 @@ object BlockingSelection {
         step += 1
       }
     }
-    covP.unpersist(); covN.unpersist(); pos.unpersist(); neg.unpersist()
 
     val schema = StructType(Seq(
       StructField("step", IntegerType, nullable = false),
@@ -205,11 +201,10 @@ object BlockingSelection {
     val spark = keyed.sparkSession
     val k = keyed.select(col(keyed.columns(0)).as("family"),
       col(keyed.columns(1)).as("__id"), col(keyed.columns(2)).as("__key"))
-    // truth feeds the coverage join AND the total count — materialize the
-    // caller's (typically join-derived) label frame once
-    val truth = truePairs.select(col(truePairs.columns(0)).as("pa"),
-      col(truePairs.columns(1)).as("pb")).distinct()
-      .localCheckpoint(eager = false)
+    // truth feeds the coverage join AND the total count
+    val truth = Frames.shared(truePairs.select(
+      col(truePairs.columns(0)).as("pa"), col(truePairs.columns(1)).as("pb"))
+      .distinct())
 
     // cost: Σ C(block, 2) per family, decimal(38,0) (n can be 10^12)
     val volumes = k.groupBy("family", "__key")
@@ -222,14 +217,14 @@ object BlockingSelection {
       .map(r => r.getString(0) -> BigDecimal(r.getDecimal(1)))
       .toMap
 
-    // gain table: (family, pa, pb) = this family co-blocks that true pair
-    val cov = truth
+    // gain table: (family, pa, pb) = this family co-blocks that true pair;
+    // it feeds every step's marginal counts
+    val cov = Frames.shared(truth
       .join(k.select(col("family"), col("__id").as("pa"), col("__key")),
         Seq("pa"))
       .join(k.select(col("family"), col("__id").as("pb"), col("__key")),
         Seq("family", "pb", "__key"))
-      .select("family", "pa", "pb").distinct()
-      .cache()
+      .select("family", "pa", "pb").distinct())
     val totalTruth = truth.count()
 
     // the step loop of [[learnScheme]], with one coverage table and the
@@ -253,7 +248,6 @@ object BlockingSelection {
         step += 1
       }
     }
-    cov.unpersist()
 
     val schema = StructType(Seq(
       StructField("step", IntegerType, nullable = false),

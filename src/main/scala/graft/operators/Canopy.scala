@@ -49,11 +49,11 @@ object Canopy {
     val half = pairs
       .select(col(iaCol).as("u"), col(ibCol).as("v"), col(simCol).as("s"))
       .where(col("u") =!= col("v") && col("s") >= t1Loose)
-    // symmetric, deduped (max sim wins if the caller sent both directions)
-    val sym = half
+    // symmetric, deduped (max sim wins if the caller sent both directions);
+    // feeds the node set, the tight graph and the loose claims
+    val sym = Frames.shared(half
       .union(half.select(col("v").as("u"), col("u").as("v"), col("s")))
-      .groupBy(col("u"), col("v")).agg(max(col("s")).as("s"))
-      .localCheckpoint(eager = false)
+      .groupBy(col("u"), col("v")).agg(max(col("s")).as("s")))
     val nodes = sym.select(col("u").as("id")).distinct()
     val tight = sym.where(col("s") >= t2Tight).select(col("u"), col("v"))
 

@@ -44,34 +44,9 @@ import org.apache.spark.sql.types.StructType
   * InferWindowGroupLimit bounds every map task to one row per node before
   * the shuffle), and a self-aggregated mutuality check — no global sort
   * of the edge list anywhere (the ORDER lives inside per-node windows).
-  * Rounds localCheckpoint to truncate lineage, as every iterative
-  * operator here does. */
+  * The alive edges and the assignment are round state that each round
+  * joins back to itself, so they are materialized by [[Frames.round]]. */
 object CenterClustering {
-
-  /** Materialize a round frame: truncate lineage AND reset plan
-    * statistics. A bare localCheckpoint carries the ORIGIN plan's
-    * estimated sizeInBytes into its LogicalRDD, and an iterative loop
-    * that JOINS the previous round's checkpoint roughly SQUARES that
-    * estimate every round — by round ~20 the BigInt sizeInBytes carries
-    * ~2^20 bits and Catalyst's stats visitor burns minutes of driver CPU
-    * (and OOMs soon after). Rebuilding the frame from the checkpointed
-    * RDD drops the origin stats back to defaults, so every round plans
-    * with O(1)-size statistics. The Row round-trip is irrelevant here:
-    * these are state frames (≤ edges rows), not the corpus. */
-  private[operators] def materialize(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
-  /** [[materialize]] whose materializing action doubles as a count probe:
-    * ONE job yields both the checkpointed frame and its row count, so the
-    * round loop's drain check costs no extra job (the former shape paid a
-    * separate isEmpty action per round). */
-  private def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-    val ck = df.localCheckpoint(eager = false)
-    val n = ck.count()
-    (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), n)
-  }
 
   /** Center clustering over a scored edge list.
     *
@@ -88,7 +63,7 @@ object CenterClustering {
       .where(col("la") =!= col("lb") && col("s").isNotNull)
       .groupBy(col("la"), col("lb")).agg(max(col("s")).as("s"))
 
-    val (alive0, alive0Cnt) = materializeCounted(canon)
+    val (alive0, alive0Cnt) = Frames.round(canon)
     // derive the node set from the MATERIALIZED frame — deriving it from
     // `canon` would re-evaluate the whole upstream edge pipeline (the
     // caller's kernel join) a second time just to list ids
@@ -156,17 +131,15 @@ object CenterClustering {
       // the materializing count doubles as the drain probe (ONE job per
       // round for both), and a drained round short-circuits before paying
       // for the (empty) fire/merge plans
-      val (live, liveCnt) = materializeCounted(
+      val (live, liveCnt) = Frames.round(
         st.where(!(aMember || bMember || (aCenter && bCenter))))
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[centers] round ${iter + 1}: live=$liveCnt")
       if (liveCnt == 0L) {
         drained = true
         alive = live
         iter += 1
       } else if (order.isDefined && DriverFinish.fits(driverCap, liveCnt)) {
         // frontier fits the bounded buffer → sequential finish, done
-        asg = materialize(asg.union(sequentialFinish(live)))
+        asg = Frames.round(asg.union(sequentialFinish(live)))._1
         alive = live
         drained = true
         iter += 1
@@ -201,10 +174,10 @@ object CenterClustering {
       // action per round is the drain probe — non-progress surfaces as
       // the loud maxIter require below
       val fired = joins.union(newClusters)
-      asg = materialize(asg.union(fired))
-      // `live` is already eagerly materialized above — the next round's
+      asg = Frames.round(asg.union(fired))._1
+      // `live` is already materialized above — the next round's
       // state is a cheap projection over its checkpointed blocks, so a
-      // second per-round checkpoint (one more eager job + block set) would
+      // second per-round checkpoint (one more job + block set) would
       // buy nothing.
       alive = live.select(col("la"), col("lb"), col("s"))
       iter += 1
@@ -232,11 +205,10 @@ object CenterClustering {
   def mergeCenters(edges: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", simCol: String = "sim",
       maxIter: Int = 200): DataFrame = {
-    // the edge frame feeds BOTH the centers() run and the merge-edge
-    // derivation below — one lazy checkpoint evaluates the caller's
-    // (typically kernel-join) pipeline once instead of twice
-    val e0 = edges.localCheckpoint(eager = false)
-    val asg = materialize(centers(e0, aCol, bCol, simCol, maxIter))
+    // the edge frame feeds BOTH the centers() run and the merge edges
+    val e0 = Frames.shared(edges)
+    // the assignment feeds the center ids, the member edges and the labels
+    val asg = Frames.round(centers(e0, aCol, bCol, simCol, maxIter))._1
     val centerIds = asg.where(col("id") === col("center_id"))
       .select(col("id").as("c"))
     val canon = e0.select(

@@ -18,15 +18,16 @@ import scala.jdk.CollectionConverters._
   * statistics — and per-round materialization truncates the growing
   * lineage (SURVEY.md §4.2 watch item).
   *
-  * Fault tolerance at cluster scale: `localCheckpoint` stores blocks on
+  * Fault tolerance at cluster scale: a round is materialized by
+  * [[Frames.shared]] by default, whose local checkpoint stores blocks on
   * executors — losing one executor mid-iteration truncates lineage with no
   * recompute path and kills the job. Set `graft.cc.checkpointDir` (or pass
   * `checkpointDir`) to materialize each round to reliable storage
   * (parquet) instead: an explicit write+readback is one pass over the
   * round's edges (unlike RDD reliable checkpoint, which recomputes the
   * plan a second time to write it), survives executor loss, and makes the
-  * loop resumable from the last completed round. In-sandbox (and for
-  * small/medium graphs) the default localCheckpoint is the faster choice.
+  * loop resumable from the last completed round. For small and medium
+  * graphs the default local checkpoint is the faster choice.
   */
 object ConnectedComponents {
 
@@ -71,17 +72,17 @@ object ConnectedComponents {
       .orElse(spark.conf.getOption("spark.graft.cc.checkpointDir"))
       .orElse(spark.conf.getOption("graft.cc.checkpointDir"))
 
-    // Materialize a round: truncate lineage and give AQE fresh statistics.
-    // Reliable mode keeps every round on durable storage (executor-loss
-    // safe); local mode keeps blocks on executors (fast, sandbox default).
+    // Materialize a round: the round's edges feed its signature, the
+    // frontier gate and the next round. Reliable mode keeps every round on
+    // durable storage (executor-loss safe); the default is [[Frames]].
     def materialize(df: DataFrame, round: Int): DataFrame = dir match {
       case Some(d) =>
         val path = s"$d/cc_round_$round"
         df.write.mode("overwrite").parquet(path)
         spark.read.parquet(path)
-      // non-eager: the convergence-signature aggregate right after is the
+      // the convergence-signature aggregate right after is the
       // materializing action, so each round submits ONE job, not two
-      case None => df.localCheckpoint(eager = false)
+      case None => Frames.shared(df)
     }
 
     val Seq(c0, c1) = edges0.columns.take(2).toSeq
@@ -287,8 +288,7 @@ object ConnectedComponents {
     * count + one argmax fold (min(struct(-cnt, label)) — no window) +
     * one left join back to the node set; lineage depth is `rounds`
     * (small by design — communities stabilize in a handful of rounds;
-    * the caller picks the budget, and each round is materialized through
-    * the same localCheckpoint-free plan CC uses at these depths). */
+    * the caller picks the budget, so rounds are not materialized). */
   def labelPropagation(edges0: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds must be in [1,20], got $rounds")
     val Seq(e0, e1) = edges0.columns.take(2).toSeq

@@ -76,10 +76,8 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], tau: Double, bucketCap: Int = 500,
       hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
-    // base feeds the tier sizing, the join-back and both verification
-    // sides — materialize the tokenization once
-    val base = ngramBase(docs, idCol, textCol, blockCols)
-      .localCheckpoint(eager = false)
+    // base feeds the tier sizing, the join-back and both verification sides
+    val base = Frames.shared(ngramBase(docs, idCol, textCol, blockCols))
     Tiers.pairs(base, Seq("bk"), "id", bucketCap, hardCap, saltGroups)
       .select(col("id_a").as("ia"), col("id_b").as("ib"))
       .join(base.select(col("id").as("ia"), col("toks").as("ta")), "ia")
@@ -108,10 +106,9 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], tau: Double, bucketCap: Int = 500,
       hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
-    val base = ngramBase(docs, idCol, textCol, blockCols)
-      .where(size(col("toks")) > 0)
-      // same 4-consumer shape as [[ngramJaccardPairs]] — tokenize once
-      .localCheckpoint(eager = false)
+    // same 4-consumer shape as [[ngramJaccardPairs]]
+    val base = Frames.shared(ngramBase(docs, idCol, textCol, blockCols)
+      .where(size(col("toks")) > 0))
     Tiers.pairs(base, Seq("bk"), "id", bucketCap, hardCap, saltGroups)
       .select(col("id_a").as("ia"), col("id_b").as("ib"))
       .join(base.select(col("id").as("ia"), col("toks").as("ta")), "ia")
@@ -186,15 +183,10 @@ object Dedup {
     * exact token-set Jaccard ≥ tau. */
   private def verifiedJaccardPairs(base: DataFrame, banded: DataFrame,
       bucketCap: Int, tau: Double): DataFrame = {
-    // `banded` feeds the sizing aggregate AND the join-back, and
-    // `base` feeds BOTH sides of the verification join — without a
-    // materialization each consumer re-runs the whole signature /
-    // tokenization pass (the sha256 MinHash scan is the operator's single
-    // most expensive stage). One lazy localCheckpoint each computes them
-    // exactly once; both frames are per-document-sized (id + band key /
-    // token array), never pair-sized (guide §1.2 step 1 / §5).
-    val bandedM = banded.localCheckpoint(eager = false)
-    val baseM = base.localCheckpoint(eager = false)
+    // `banded` feeds the sizing aggregate AND the join-back
+    val bandedM = Frames.shared(banded)
+    // `base` feeds BOTH sides of the verification join
+    val baseM = Frames.shared(base)
     val good = Tiers.underCap(bandedM, Seq("key"), bucketCap)
       .select(col("key"), col("id"))
     val cand = good.select(col("key"), col("id").as("ia"))
@@ -295,10 +287,9 @@ object Dedup {
       numHashes: Int = 16, bands: Int = 4, bucketCap: Int = 500,
       hashFamily: String = "xxhash64"): DataFrame =
     Tiers.underCap(
-      // the banded frame feeds the sizing and the join-back: materialize
-      // so the corpus signature pass runs once
-      minhashBanded(corpus, idCol, textCol, numHashes, bands, hashFamily)
-        .localCheckpoint(eager = false),
+      // the banded frame feeds the sizing and the join-back
+      Frames.shared(
+        minhashBanded(corpus, idCol, textCol, numHashes, bands, hashFamily)),
       Seq("key"), bucketCap)
       .select(col("key"), col("id"))
 
@@ -652,11 +643,8 @@ object Dedup {
       maxHamming: Int = 3, hashFamily: String = "fnv",
       bucketCap: Int = 500, hardCap: Int = Int.MaxValue,
       saltGroups: Int = 16): DataFrame = {
-    // the banded frame feeds the sizing aggregate and the join-back —
-    // materialize so the SimHash signature pass runs once (same shape as
-    // [[verifiedJaccardPairs]])
-    val banded = simhashBanded(docs, idCol, textCol, hashFamily)
-      .localCheckpoint(eager = false)
+    // the banded frame feeds the sizing aggregate and the join-back
+    val banded = Frames.shared(simhashBanded(docs, idCol, textCol, hashFamily))
     // a pair can surface from several bands (and from different tiers for
     // different bands) — hamming is identical each time, so distinct is exact
     Tiers.pairs(banded, Seq("key"), "id", bucketCap, hardCap, saltGroups,

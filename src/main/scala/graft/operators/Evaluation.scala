@@ -64,13 +64,10 @@ object Evaluation {
       .agg(count(lit(1)).as("n"), sum(col("__t")).as("t"))
     // distributed cumulative (descending score): range partition + local
     // running sums + broadcast per-partition exclusive offsets
-    // two consumers (offset counts + the cumsum join) — cut the lineage
-    // so the pair scan + label join + score groupBy run ONCE, not twice
-    // (the adaptiveSortedNeighborhoodPairs discipline)
-    val parts = perScore.repartitionByRange(p, col("score").desc)
+    // two consumers: the offset counts and the cumsum join
+    val parts = Frames.shared(perScore.repartitionByRange(p, col("score").desc)
       .sortWithinPartitions(col("score").desc)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(eager = false)
+      .withColumn("__pid", spark_partition_id()))
     val counts = parts.groupBy(col("__pid"))
       .agg(sum(col("n")).as("__pn"), sum(col("t")).as("__pt"))
     val offsets = counts
@@ -808,9 +805,9 @@ object Evaluation {
     * Scale shapes: the bidirected intra-cluster edge list is built once
     * and reused every round ([[intraClusterEdges]] normalization:
     * dedup'd, self-loops out, cross-cluster edges out); per-round state
-    * is one (id, h) frame, materialized (localCheckpoint, non-eager — the
+    * is one (id, h) frame, materialized by [[Frames.shared]] (the
     * convergence aggregate right after is the single action per round)
-    * to truncate lineage exactly like [[ConnectedComponents]]. The
+    * exactly like [[ConnectedComponents]]. The
     * H-operator's window partitions by node id, so its cost is bounded
     * by max degree, not cluster size; a 10^7-degree hub serializes one
     * task for its own sort (AQE cannot split a window partition) — on
@@ -827,10 +824,10 @@ object Evaluation {
       maxIter: Int = 200): DataFrame = {
     val intra = intraClusterEdges(assignment, edges, idCol, clusterCol,
       aCol, bCol)
-    // bidirected edge list, fixed across rounds — materialize once
-    val b = intra.select(col("__gu").as("__cu"), col("__gv").as("__cv"))
-      .unionAll(intra.select(col("__gv").as("__cu"), col("__gu").as("__cv")))
-      .localCheckpoint(eager = true)
+    // bidirected edge list, read by the finish and by every round
+    val b = Frames.shared(intra
+      .select(col("__gu").as("__cu"), col("__gv").as("__cv"))
+      .unionAll(intra.select(col("__gv").as("__cu"), col("__gu").as("__cv"))))
 
     // Driver finish ([[DriverFinish]]): coreness is a unique integer
     // function of the edge set (the h-index fixpoint IS coreness), so the
@@ -900,9 +897,9 @@ object Evaluation {
         idx.asScala.toSeq.map { case (id, k) => Row(id, core(k).toLong) })
     }
 
-    var h = finished.getOrElse(b.groupBy(col("__cu").as("__cid"))
-      .agg(count(lit(1)).as("__ch"))
-      .localCheckpoint(eager = true))
+    // round state: the empty probe and the first round's two joins
+    var h = finished.getOrElse(Frames.shared(b.groupBy(col("__cu").as("__cid"))
+      .agg(count(lit(1)).as("__ch"))))
     var iter = 0
     var done = finished.isDefined || h.isEmpty // edgeless: nothing to do
     while (!done && iter < maxIter) {
@@ -916,10 +913,10 @@ object Evaluation {
           row_number().over(w).cast("long").as("__crn"))
         .groupBy(col("__cid"))
         .agg(max(least(col("__crn"), col("__chv"))).as("__chh"))
-      val next = h.join(hidx, Seq("__cid"), "left")
+      // round state: the change count and the next round's two joins
+      val next = Frames.shared(h.join(hidx, Seq("__cid"), "left")
         .select(col("__cid"), col("__ch").as("__cold"),
-          least(col("__ch"), coalesce(col("__chh"), lit(0L))).as("__ch"))
-        .localCheckpoint(eager = false)
+          least(col("__ch"), coalesce(col("__chh"), lit(0L))).as("__ch")))
       // single action per round: materializes `next` AND counts changes
       val changed = next.agg(
         sum(when(col("__ch") =!= col("__cold"), 1L).otherwise(0L)))
@@ -991,10 +988,9 @@ object Evaluation {
     * are no-ops — which is also what makes the unrolled-SQL oracle
     * exact with any generous round budget). Deterministic: deletions
     * depend only on the current edge set, never on order. One action
-    * per round (the surviving-edge count), lineage truncated per round
-    * (the coreNumbers localCheckpoint pattern), rounds bounded by
-    * `maxIter` (each round deletes ≥ 1 edge or stops, so ≤ |E| rounds;
-    * in practice a handful).
+    * per round (the surviving-edge count), each round materialized by
+    * [[Frames.shared]], rounds bounded by `maxIter` (each round deletes
+    * ≥ 1 edge or stops, so ≤ |E| rounds; in practice a handful).
     *
     * Output: (cluster, u, v, support) — the surviving edges with their
     * final (converged) support, support ≥ k−2 by construction. */
@@ -1003,8 +999,9 @@ object Evaluation {
       aCol: String = "url_a", bCol: String = "url_b",
       maxIter: Int = 10000): DataFrame = {
     require(k >= 3, s"k must be >= 3, got $k")
-    var cur = intraClusterEdges(assignment, edges, idCol, clusterCol,
-      aCol, bCol).localCheckpoint(eager = true)
+    // read by the count, the finish and the first round's support join
+    var cur = Frames.shared(intraClusterEdges(assignment, edges, idCol,
+      clusterCol, aCol, bCol))
     var prev = cur.count()
 
     // Driver finish ([[DriverFinish]]): the maximal k-truss is a UNIQUE
@@ -1063,10 +1060,11 @@ object Evaluation {
     var iter = 0
     var done = prev == 0L
     while (!done && iter < maxIter) {
-      val next = cur.join(edgeSupport(cur), Seq("__gu", "__gv"), "left")
+      // round state: the count and the next round's support join
+      val next = Frames.shared(cur
+        .join(edgeSupport(cur), Seq("__gu", "__gv"), "left")
         .where(coalesce(col("__sup"), lit(0L)) >= k - 2)
-        .select(col("__gu"), col("__gv"), col("__gc"))
-        .localCheckpoint(eager = false)
+        .select(col("__gu"), col("__gv"), col("__gc")))
       val n = next.count() // the round's single action; materializes next
       cur = next
       done = n == prev

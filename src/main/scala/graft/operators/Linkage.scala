@@ -104,7 +104,7 @@ object Linkage {
       distinctPairs: Boolean = true): DataFrame = {
     // the key frame feeds the sizing aggregate AND the join-back: callers
     // often derive it from an expensive pass (sha256 MinHash band keys)
-    val all = Tiers.pairs(checkpointOnce(keys), Seq("key"), "url", bucketCap,
+    val all = Tiers.pairs(Frames.shared(keys), Seq("key"), "url", bucketCap,
       hardCap, saltGroups)
     // `distinctPairs = false` is for callers whose key frame is FUNCTIONAL
     // (each url carries exactly one key — e.g. adaptive-SNM segment ids):
@@ -114,16 +114,6 @@ object Linkage {
     // remove nothing (guide §2.4: a distinct on already-unique data).
     if (distinctPairs) all.distinct() else all
   }
-
-  /** `df` materialized once by a lazy localCheckpoint, for frames with
-    * several consumers — unless it already IS a materialized checkpoint
-    * (adaptive-SNM segments, or a caller's own checkpoint), which a second
-    * one would only copy. */
-  private[operators] def checkpointOnce(df: DataFrame): DataFrame =
-    df.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => df
-      case _ => df.localCheckpoint(eager = false)
-    }
 
   /** Buckets excluded by `hardCap` with their sizes — the non-silent
     * record of what blocking dropped. */
@@ -351,7 +341,7 @@ object Linkage {
     * broadcast per-partition offsets (a P-row exclusive prefix sum — the
     * only single-partition window runs over ≤ P metadata rows).
     * Returns (idCol, sortKeyCol, __rnk) with __rnk contiguous from 1. */
-  private[graft] def globalRanked(df: DataFrame, idCol: String,
+  private[operators] def globalRanked(df: DataFrame, idCol: String,
       sortKeyCol: String, partitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
     val p = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
@@ -373,8 +363,9 @@ object Linkage {
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String, sortKeyCol: String,
       window: Int, partitions: Int = 0): DataFrame = {
     require(window >= 2, s"sorted-neighborhood window must be >= 2, got $window")
-    val ranked = globalRanked(df, idCol, sortKeyCol, partitions)
-      .select(col(idCol), col("__rnk"))
+    // both join sides read the ranks: one evaluation keeps them consistent
+    val ranked = Frames.shared(globalRanked(df, idCol, sortKeyCol, partitions)
+      .select(col(idCol), col("__rnk")))
     val b = window - 1
     val l = ranked.select(col(idCol).as(s"${idCol}_a"), col("__rnk").as("rank_a"),
       expr(s"__rnk div $b").as("__bucket"))
@@ -412,8 +403,8 @@ object Linkage {
       sim: (Column, Column) => Column = jaro_winkler_sim(_, _),
       bucketCap: Int = 200, hardCap: Int = 100000, saltGroups: Int = 16,
       partitions: Int = 0): DataFrame = {
-    val segments = adaptiveSegmentKeysForProbe(df, idCol, sortKeyCol, theta,
-      sim, partitions)
+    val segments = adaptiveSegmentKeys(df, idCol, sortKeyCol, theta, sim,
+      partitions)
     // segment keys are FUNCTIONAL (each record belongs to exactly one
     // segment), so candidate pairs are unique by construction — skip the
     // pair-volume dedup shuffle (guide §2.4)
@@ -422,18 +413,16 @@ object Linkage {
       .select(col("url_a").as(s"${idCol}_a"), col("url_b").as(s"${idCol}_b"))
   }
 
-  /** The segment-key derivation of [[adaptiveSortedNeighborhoodPairs]]
-    * exposed for sub-stage probing/tests (same contract, returns the
-    * (url, key) frame fed to [[candidatePairs]]). */
-  private[graft] def adaptiveSegmentKeysForProbe(df: DataFrame, idCol: String,
-      sortKeyCol: String, theta: Double,
-      sim: (Column, Column) => Column = jaro_winkler_sim(_, _),
-      partitions: Int = 0): DataFrame = {
+  /** The segment-key derivation of [[adaptiveSortedNeighborhoodPairs]]:
+    * the (url, key) frame fed to [[candidatePairs]]. */
+  private def adaptiveSegmentKeys(df: DataFrame, idCol: String,
+      sortKeyCol: String, theta: Double, sim: (Column, Column) => Column,
+      partitions: Int): DataFrame = {
     require(theta > 0.0 && theta <= 1.0, s"theta must be in (0,1], got $theta")
     val spark = df.sparkSession
     val p = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
-    val ranked = globalRanked(df, idCol, sortKeyCol, partitions)
-      .localCheckpoint(eager = false)
+    // both sides of the adjacency join read the ranks
+    val ranked = Frames.shared(globalRanked(df, idCol, sortKeyCol, partitions))
     val prev = ranked.select((col("__rnk") + 1).as("__rnk"),
       col(sortKeyCol).as("__prev"))
     val flagged = ranked.join(prev, Seq("__rnk"), "left")
@@ -442,28 +431,22 @@ object Linkage {
           .otherwise(when(sim(col("__prev"), col(sortKeyCol)) < theta, lit(1L))
             .otherwise(lit(0L))))
     // distributed prefix sum of the boundary flags = segment id per row
-    val parts = flagged
+    // the per-partition counts AND the offset join-back read the flags
+    val parts = Frames.shared(flagged
       .repartitionByRange(p, col("__rnk"))
       .sortWithinPartitions(col("__rnk"))
-      .withColumn("__pid", spark_partition_id())
-      // same shape as [[globalRanked]]: counts + offset join-back — run
-      // the adjacency-similarity flags and the range sort once
-      .localCheckpoint(eager = false)
+      .withColumn("__pid", spark_partition_id()))
     val counts = parts.groupBy(col("__pid")).agg(sum(col("__b")).as("__n"))
     val offsets = counts.withColumn("__offset",
       coalesce(sum(col("__n")).over(
         W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
       .select(col("__pid"), col("__offset"))
-    val segments = parts.join(broadcast(offsets), "__pid")
+    // candidatePairs reads its key frame twice (sizing + join-back)
+    Frames.shared(parts.join(broadcast(offsets), "__pid")
       .withColumn("__seg", col("__offset") +
         sum(col("__b")).over(W.partitionBy("__pid").orderBy(col("__rnk"))))
       .select(col(idCol).as("url"),
-        concat(lit("seg:"), col("__seg")).as("key"))
-      // candidatePairs consumes its key frame twice (sizing + join-back);
-      // materialize the segment derivation once (the contract its doc
-      // comment assumes of callers)
-      .localCheckpoint(eager = false)
-    segments
+        concat(lit("seg:"), col("__seg")).as("key")))
   }
 
   /** DYNAMIC BLOCKING (hierarchical key extension — the McNeill-Kardes-
@@ -752,8 +735,9 @@ object Linkage {
       rightId: String = "id_r", scoreCol: String = "score",
       maxIter: Int = 1000): DataFrame = {
     val spark = scored.sparkSession
-    var cur = scored.select(col(leftId), col(rightId), col(scoreCol))
-      .localCheckpoint(eager = false)
+    // round state: the count probe, the finish and the round's joins
+    var cur = Frames.shared(
+      scored.select(col(leftId), col(rightId), col(scoreCol)))
     var matched = cur.limit(0)
 
     // Driver finish ([[DriverFinish]]): the rounds are proven equal to the
@@ -790,13 +774,13 @@ object Linkage {
         matched = matched.union(sequentialFinish(cur))
         finished = true
       } else {
-        val best = symmetricBestMatches(cur, leftId, rightId, scoreCol)
-          .localCheckpoint(eager = false)
+        // feeds the matching and both anti-joins
+        val best = Frames.shared(
+          symmetricBestMatches(cur, leftId, rightId, scoreCol))
         matched = matched.union(best)
-        cur = cur
+        cur = Frames.shared(cur
           .join(best.select(col(leftId)), Seq(leftId), "left_anti")
-          .join(best.select(col(rightId)), Seq(rightId), "left_anti")
-          .localCheckpoint(eager = false)
+          .join(best.select(col(rightId)), Seq(rightId), "left_anti"))
         iter += 1
       }
     }
@@ -849,10 +833,10 @@ object Linkage {
     // greedy 1:1 rounds, scoped per (ga, gb): accept edges that are the
     // best surviving edge of BOTH endpoints within their group pair
     // (score DESC, opposite-rid ASC tie-break — greedyMatches' contract),
-    // then drop every edge touching an accepted endpoint. materialize()
-    // (CenterClustering's) truncates lineage AND resets carried stats so
-    // rounds don't compound plan statistics.
-    var cur = CenterClustering.materialize(cand)
+    // then drop every edge touching an accepted endpoint. The candidates
+    // are round state joined back to themselves: [[Frames.round]].
+    val (cand0, nCand) = Frames.round(cand)
+    var cur = cand0
 
     // Driver finish ([[DriverFinish]], [[greedyMatches]]' replay scoped per
     // group pair): within each (ga, gb) the rounds equal the sequential
@@ -882,7 +866,7 @@ object Linkage {
     var matched = replayed.getOrElse(cand.limit(0))
 
     var iter = 0
-    var drained = replayed.isDefined || cur.isEmpty
+    var drained = replayed.isDefined || nCand == 0L
     while (!drained && iter < maxIter) {
       val best = cur
         .withColumn("rn_l", row_number().over(
@@ -893,14 +877,16 @@ object Linkage {
             .orderBy(col("s").desc, col("rl"))))
         .where(col("rn_l") === 1 && col("rn_r") === 1)
         .select(col("ga"), col("gb"), col("rl"), col("rr"), col("s"))
-      val bestCk = CenterClustering.materialize(best)
-      matched = CenterClustering.materialize(matched.union(bestCk))
-      cur = CenterClustering.materialize(cur
+      // feeds the matching and both anti-joins
+      val bestCk = Frames.round(best)._1
+      matched = Frames.round(matched.union(bestCk))._1
+      val (next, nNext) = Frames.round(cur
         .join(bestCk.select(col("ga"), col("gb"), col("rl")),
           Seq("ga", "gb", "rl"), "left_anti")
         .join(bestCk.select(col("ga"), col("gb"), col("rr")),
           Seq("ga", "gb", "rr"), "left_anti"))
-      drained = cur.isEmpty
+      cur = next
+      drained = nNext == 0L
       iter += 1
     }
     require(drained, s"groupLinkage did not drain in $maxIter rounds")
@@ -1047,17 +1033,12 @@ object Linkage {
       hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
     // The distinct edge frame fans out to FIVE consumers (deg, sized, the
-    // eligibility join, and the two final degree joins) — without a
-    // materialization each one re-evaluates the whole upstream pipeline
-    // (for winnowing/CDC callers that is the full sha256 fingerprint
-    // pass, measured 4 extra recomputes in the physical plan). One lazy
-    // localCheckpoint computes it exactly once (guide §5 "cut lineage" /
-    // §1.2 step 1: don't compute things twice).
-    val e = edges
+    // eligibility join, and the two final degree joins); for winnowing/CDC
+    // callers each would re-run the full sha256 fingerprint pass.
+    val e = Frames.shared(edges
       .select(col(entityCol).as("id"), col(neighborCol).as("nb"))
       .where(col("id").isNotNull && col("nb").isNotNull)
-      .distinct()
-      .localCheckpoint(eager = false)
+      .distinct())
     val deg = e.groupBy(col("id")).agg(count(lit(1)).as("__deg"))
     val sized = Tiers.sizes(e, Seq("nb"))
     // A pair's common-neighbor count is bounded by min(deg_a, deg_b), so
@@ -1096,12 +1077,11 @@ object Linkage {
       neighborCol: String, minCommon: Long = 1L, bucketCap: Int = 1000,
       hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
     require(minCommon >= 1)
-    // same single-materialization rationale as [[commonNeighborPairs]]
-    val e = edges
+    // same consumers as [[commonNeighborPairs]]' edge frame
+    val e = Frames.shared(edges
       .select(col(entityCol).as("id"), col(neighborCol).as("nb"))
       .where(col("id").isNotNull && col("nb").isNotNull)
-      .distinct()
-      .localCheckpoint(eager = false)
+      .distinct())
     val sized = Tiers.sizes(e, Seq("nb"))
     // same lossless min(deg) prefilter as [[commonNeighborPairs]]: tier
     // routing stays on unfiltered sizes, only ineligible members leave
@@ -1250,17 +1230,16 @@ object Linkage {
     * mirror over truth classes. */
   def bCubed(assignments: DataFrame, clusterCol: String = "cluster_id",
       truthCol: String = "truth_id"): (Double, Double, Double) = {
-    val stats = bCubedStats(assignments, clusterCol, truthCol).cache()
-    try {
-      val n = assignments.count().toDouble
-      def fold(side: String): Double = stats.where(col("side") === side)
-        .agg(sum(col("sum_ni2").cast("double") / col("n_g").cast("double")))
-        .head().getDouble(0) / n
-      val p = fold("cluster")
-      val r = fold("truth")
-      val f1 = if (p + r == 0) 0.0 else 2 * p * r / (p + r)
-      (p, r, f1)
-    } finally stats.unpersist()
+    // both folds read the stats
+    val stats = Frames.shared(bCubedStats(assignments, clusterCol, truthCol))
+    val n = assignments.count().toDouble
+    def fold(side: String): Double = stats.where(col("side") === side)
+      .agg(sum(col("sum_ni2").cast("double") / col("n_g").cast("double")))
+      .head().getDouble(0) / n
+    val p = fold("cluster")
+    val r = fold("truth")
+    val f1 = if (p + r == 0) 0.0 else 2 * p * r / (p + r)
+    (p, r, f1)
   }
 
   /** MUC link-based metric (Vilain et al., MUC-6 1995) of a predicted

@@ -119,9 +119,8 @@ object MetaBlocking {
     * by blocking long before that bound matters). One count+sum aggregate
     * reduced to a single row, broadcast back over the edges. */
   def wepPrune(edges0: DataFrame, weightCol: String = "cbs"): DataFrame = {
-    // the edge frame feeds the global aggregate AND the filtered scan —
-    // callers pass the full blockingGraph pipeline, so materialize once
-    val edges = Linkage.checkpointOnce(edges0)
+    // the edge frame feeds the global aggregate AND the filtered scan
+    val edges = Frames.shared(edges0)
     val tot = edges.agg(sum(col(weightCol)).as("__wsum"),
       count(lit(1)).as("__wcnt"))
     edges.crossJoin(broadcast(tot))
@@ -138,9 +137,8 @@ object MetaBlocking {
     * map-side combinable, no windows. */
   def wnpPrune(edges0: DataFrame, weightCol: String = "cbs",
       aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
-    // three consumers (both union directions + the join-back) — without a
-    // materialization the whole blockingGraph pipeline evaluates thrice
-    val edges = Linkage.checkpointOnce(edges0)
+    // three consumers: both union directions and the join-back
+    val edges = Frames.shared(edges0)
     val und = edges.select(col(aCol).as("__u"), col(weightCol).as("__w"))
       .union(edges.select(col(bCol).as("__u"), col(weightCol).as("__w")))
     val node = und.groupBy(col("__u"))
@@ -173,8 +171,8 @@ object MetaBlocking {
   def cnpPrune(edges0: DataFrame, k: Int, weightCol: String = "cbs",
       aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
     require(k >= 1, s"cnpPrune needs k >= 1, got $k")
-    // same three-consumer shape as [[wnpPrune]] — materialize once
-    val edges = Linkage.checkpointOnce(edges0)
+    // same three-consumer shape as [[wnpPrune]]
+    val edges = Frames.shared(edges0)
     val und = edges.select(col(aCol).as("__u"), col(bCol).as("__v"),
         col(weightCol).as("__w"))
       .union(edges.select(col(bCol).as("__u"), col(aCol).as("__v"),

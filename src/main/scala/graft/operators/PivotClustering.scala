@@ -58,8 +58,9 @@ object PivotClustering {
   private[operators] def greedyMis(sym: DataFrame, nodes: DataFrame,
       maxIter: Int): DataFrame = {
     val spark = sym.sparkSession
-    var active = nodes.select(col("id"), rank(col("id")).as("rk"))
-      .localCheckpoint(eager = false)
+    // read by the size gate, the replay and every round's joins
+    var active = Frames.shared(
+      nodes.select(col("id"), rank(col("id")).as("rk")))
     var mis = active.limit(0)
 
     // Driver finish ([[DriverFinish]]): the parallel local-minimum rounds
@@ -98,18 +99,19 @@ object PivotClustering {
         .join(active.select(col("id").as("u")), "u")
         .join(active.select(col("id").as("v"), col("rk").as("__rkv")), "v")
         .groupBy(col("u")).agg(min(col("__rkv")).as("__mn"))
-      val pivots = active.join(nbrMin, active("id") === nbrMin("u"), "left")
+      // feeds the MIS union, the domination join and the active update
+      val pivots = Frames.shared(active
+        .join(nbrMin, active("id") === nbrMin("u"), "left")
         .where(col("__mn").isNull || col("rk") < col("__mn"))
-        .select(col("id"), col("rk"))
-        .localCheckpoint(eager = false)
+        .select(col("id"), col("rk")))
       mis = mis.union(pivots)
       val dominated = sym
         .join(pivots.select(col("id").as("v")), "v")
         .select(col("u").as("id")).distinct()
-      active = active
+      // round state: the drain probe and the next round's two joins
+      active = Frames.shared(active
         .join(pivots.select(col("id")), Seq("id"), "left_anti")
-        .join(dominated, Seq("id"), "left_anti")
-        .localCheckpoint(eager = false)
+        .join(dominated, Seq("id"), "left_anti"))
       drained = active.isEmpty
       iter += 1
     }
@@ -126,10 +128,9 @@ object PivotClustering {
     val half = edges0
       .select(col(c0).as("u"), col(c1).as("v"))
       .where(col("u") =!= col("v"))
-    // symmetric, deduped, and lineage-truncated once: every round re-reads it
-    val sym = half.union(half.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(eager = false)
+    // symmetric and deduped once: the node set and every round re-read it
+    val sym = Frames.shared(
+      half.union(half.select(col("v").as("u"), col("u").as("v"))).distinct())
 
     val mis = greedyMis(sym, sym.select(col("u").as("id")).distinct(), maxIter)
 

@@ -76,16 +76,14 @@ object Pprl {
   def linkTables(a0: DataFrame, b0: DataFrame, idCol: String, sigCol: String,
       m: Int, theta: Double, bands: Int = 8, bitsPerBand: Int = 16,
       seed: Long = 42L, bucketCap: Int = 10000): DataFrame = {
-    // each side's (id, CLK) frame feeds its band-key derivation (itself
-    // consumed twice by the sizing + join-back) AND the Dice verification
-    // join — callers typically compute the CLK encoding inline, so
-    // materialize each side once (per-record-sized frames)
-    val a = a0.localCheckpoint(eager = false)
-    val b = b0.localCheckpoint(eager = false)
-    val ka = blockKeys(a, idCol, sigCol, m, bands, bitsPerBand, seed)
-      .localCheckpoint(eager = false)
-    val kb = blockKeys(b, idCol, sigCol, m, bands, bitsPerBand, seed)
-      .localCheckpoint(eager = false)
+    // each side's (id, CLK) frame feeds its band keys AND the Dice join
+    val a = Frames.shared(a0)
+    val b = Frames.shared(b0)
+    // each side's band keys feed the sizing aggregate AND the join-back
+    val ka = Frames.shared(blockKeys(a, idCol, sigCol, m, bands, bitsPerBand,
+      seed))
+    val kb = Frames.shared(blockKeys(b, idCol, sigCol, m, bands, bitsPerBand,
+      seed))
     val cand = Tiers.underCap(ka, Seq("key"), bucketCap)
       .select(col("key"), col("id").as("id_a"))
       .join(Tiers.underCap(kb, Seq("key"), bucketCap)

@@ -79,9 +79,8 @@ object SetSimJoin {
       tau: Double, bucketCap: Int = 10000, hardCap: Int = Int.MaxValue,
       saltGroups: Int = 16): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0, 1], got $tau")
-    // tokenization feeds the prefix derivation AND both verification
-    // sides — materialize once (the Dedup.verifiedJaccardPairs shape)
-    val b = base(docs, idCol, textCol).localCheckpoint(eager = false)
+    // tokenization feeds the prefix derivation AND both verification sides
+    val b = Frames.shared(base(docs, idCol, textCol))
     jaccardCandidates(b, tau, bucketCap, hardCap, saltGroups)
       .join(b.select(col("id").as("ia"), col("toks").as("ta")), "ia")
       .join(b.select(col("id").as("ib"), col("toks").as("tb")), "ib")
@@ -115,9 +114,8 @@ object SetSimJoin {
     * distinct) was already being paid. */
   private[operators] def jaccardCandidates(b: DataFrame, tau: Double,
       bucketCap: Int, hardCap: Int, saltGroups: Int): DataFrame = {
-    // the prefix frame (explode + df join + per-record rarity sort) feeds
-    // the sizing aggregate AND the join-back — materialize it once
-    val pre = prefixRows(b, tau).localCheckpoint(eager = false)
+    // the prefix frame feeds the sizing aggregate AND the join-back
+    val pre = Frames.shared(prefixRows(b, tau))
     val lenOk = least(col("la"), col("lb")).cast("double") >=
       lit(tau) * greatest(col("la"), col("lb")).cast("double") - lit(1e-9)
     // A pair can share SEVERAL prefix tokens (and meet in both tiers via
@@ -183,16 +181,13 @@ object SetSimJoin {
       saltGroups: Int = 16): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(q >= 1, s"q must be >= 1, got $q")
-    val b = docs.select(col(idCol).as("id"), col(strCol).as("s"))
+    // feeds the prefix derivation, the short tier, and both verifications
+    val b = Frames.shared(docs
+      .select(col(idCol).as("id"), col(strCol).as("s"))
       .where(col("s").isNotNull)
-      .withColumn("len", length(col("s")))
-      // feeds the prefix derivation, the short tier, and both
-      // verification joins — materialize the (id, s, len) frame once
-      .localCheckpoint(eager = false)
-    // the (g, occ) prefix frame (gram explode + occurrence and rarity
-    // windows + df join) feeds the sizing aggregate AND the join-back —
-    // without a materialization the whole window pipeline runs twice
-    val pre = edPrefixRows(b, k, q).localCheckpoint(eager = false)
+      .withColumn("len", length(col("s"))))
+    // the (g, occ) prefix frame feeds the sizing aggregate AND the join-back
+    val pre = Frames.shared(edPrefixRows(b, k, q))
     val gramPairs = Tiers.pairs(pre, Seq("g", "occ"), "id", bucketCap,
       hardCap, saltGroups, payload = Seq("len"))
     // short tier: strings the gram bound cannot cover — one bucket whose
@@ -289,13 +284,11 @@ object SetSimJoin {
       textCol: String, tau: Double, bucketCap: Int = 10000,
       hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0, 1], got $tau")
-    // tokenization feeds the prefix probes, the inverted index, the mask
-    // frame, and the verification joins — materialize once; likewise the
-    // prefix probes feed both the cold join and the hot-tier fan-out
-    val b = base(docs, idCol, textCol).localCheckpoint(eager = false)
-    val probes = prefixRows(b, tau)
-      .select(col("tok"), col("id").as("qid"))
-      .localCheckpoint(eager = false)
+    // tokenization feeds the probes, the index, the masks and verification
+    val b = Frames.shared(base(docs, idCol, textCol))
+    // the prefix probes feed both the cold join and the hot-tier fan-out
+    val probes = Frames.shared(prefixRows(b, tau)
+      .select(col("tok"), col("id").as("qid")))
     val index = b.select(col("id"), explode(col("toks")).as("tok"))
     val sized = index.groupBy(col("tok")).agg(count(lit(1)).as("n"))
 
@@ -322,8 +315,7 @@ object SetSimJoin {
         transform(toks, t => element_at(bitOf, t)),
         lit(0L), (acc, x) => acc.bitwiseOR(x))
       // the mask frame feeds the probe join AND the candidate re-attach
-      val bm = b.select(col("id"), maskOf(col("toks")).as("m"))
-        .localCheckpoint(eager = false)
+      val bm = Frames.shared(b.select(col("id"), maskOf(col("toks")).as("m")))
       val probesM = probes.join(bm.select(col("id").as("qid"),
         col("m").as("mq")), "qid")
       val keyed = index.join(sized, "tok")

@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   * unsplittable task — a straggler on exactly the hot keys this policy
   * exists for — while the join-back is a plain equi-join AQE can
   * skew-split. `members` feeds both the sizing aggregate and the
-  * join-back, so callers materialize it when it is expensive to derive.
+  * join-back, so callers pass it through [[Frames.shared]] when it is
+  * expensive to derive.
   */
 private[operators] object Tiers {
 

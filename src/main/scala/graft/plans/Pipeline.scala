@@ -28,8 +28,9 @@ import graft.operators.Linkage
   *
   * Cluster mode: set `spark.graft.cc.checkpointDir` (read as
   * `graft.cc.checkpointDir` from the session conf) so the clustering
-  * stage's iterative rounds land on reliable storage instead of executor
-  * localCheckpoint blocks — see [[graft.operators.ConnectedComponents]].
+  * stage's iterative rounds land on reliable storage instead of the
+  * executor blocks of [[graft.operators.Frames]] — see
+  * [[graft.operators.ConnectedComponents]].
   */
 object Pipeline {
 

@@ -52,6 +52,25 @@ class BlockingSpec extends SparkFunSuite {
     assert(p2.nonEmpty)
   }
 
+  test("sortedNeighborhood output does not depend on exchange reuse or AQE") {
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    val df = rng.shuffle((1L to 300L).map(i => (i, s"k${rng.nextInt(40)}")))
+      .toDF("id", "sk").repartition(7)
+    def pairs() = Linkage.sortedNeighborhoodPairs(df, "id", "sk", 4,
+        partitions = 5)
+      .select("id_a", "id_b", "rank_a", "rank_b").as[(Long, Long, Long, Long)]
+      .collect().toSet
+    val default = pairs()
+    assert(default.size == 3 * 300 - 6) // w−1 successors of each rank
+    withConf("spark.sql.exchange.reuse", "false") {
+      assert(pairs() == default, "AQE on, no exchange reuse")
+      withConf("spark.sql.adaptive.enabled", "false") {
+        assert(pairs() == default, "AQE off, no exchange reuse")
+      }
+    }
+  }
+
   // ------------------------------------------------------- two-corpus linkage
 
   test("tokenBlockKeys emits one key per distinct qualifying token") {

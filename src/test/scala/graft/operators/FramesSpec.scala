@@ -1,0 +1,131 @@
+package graft.operators
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+
+import graft.SparkFunSuite
+
+/** The materialization policy: a shared frame is evaluated once for all
+  * of its consumers, an existing checkpoint is not copied, a round is
+  * materialized and counted by one job with a plan estimate that does not
+  * compound across rounds, and no code outside [[Frames]] materializes on
+  * its own. */
+class FramesSpec extends SparkFunSuite {
+
+  /** `n` rows (id, key) whose every evaluation ticks the returned
+    * accumulator once per row, whichever of the two columns is read. */
+  private def counted(n: Long) = {
+    val acc = spark.sparkContext.longAccumulator
+    val tick = udf { (x: Long) => acc.add(1L); x }.asNondeterministic()
+    val df = spark.range(0L, n, 1L, 8).select(tick(col("id")).as("id"))
+      .select(col("id"), (col("id") % 1000L).as("key"))
+    (df, acc)
+  }
+
+  /** Runs `f`, returning its value and the number of jobs it started. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    var jobs = 0
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        synchronized(jobs += 1)
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      ListenerBusDrain(sc)
+      (a, l.synchronized(jobs))
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("shared: a sizing aggregate, its join-back and a second action evaluate the upstream once") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val n = 200000L
+    val (up, acc) = counted(n)
+    val s = Frames.shared(up)
+    val joined = s.join(Tiers.sizes(s, Seq("key")), "key").count()
+    val again = s.count()
+    assert(joined == n && again == n)
+    assert(acc.value == n)
+
+    // the same consumers over the plain frame evaluate it per consumer
+    val (plain, plainAcc) = counted(n)
+    plain.join(Tiers.sizes(plain, Seq("key")), "key").count()
+    assert(plainAcc.value > n)
+  }
+
+  test("shared: an already-checkpointed input comes back with the same plan") {
+    val (up, _) = counted(100L)
+    val s = Frames.shared(up)
+    assert(s.queryExecution.logical.isInstanceOf[LogicalRDD])
+    assert(Frames.shared(s).queryExecution.logical eq s.queryExecution.logical)
+    val own = up.localCheckpoint(eager = false)
+    assert(Frames.shared(own).queryExecution.logical eq own.queryExecution.logical)
+  }
+
+  test("round: one job materializes and counts, and the plan estimate does not grow over 10 rounds") {
+    val (up, acc) = counted(1000L)
+    val ((r, n), jobs) = jobsOf(Frames.round(up))
+    assert(n == 1000L && acc.value == 1000L)
+    // the same jobs as counting the materialized frame: no eager job
+    val (again, countJobs) = jobsOf(r.count())
+    assert(again == 1000L && acc.value == 1000L && jobs == countJobs)
+    val (_, plainJobs) = withConf("spark.sql.adaptive.enabled", "false") {
+      jobsOf(Frames.round(counted(10L)._1))
+    }
+    assert(plainJobs == 1)
+
+    // the centers loop: alive edges annotated by two joins with the
+    // assignment, the assignment grown by a union, both round state
+    def rounds(mat: DataFrame => DataFrame): Seq[BigInt] = {
+      val edges = spark.range(0L, 200L)
+        .select(col("id").as("la"), (col("id") + 1L).as("lb"),
+          (col("id") % 7L).cast("double").as("s"))
+      var alive = mat(edges)
+      var asg = mat(edges.limit(0).select(col("la").as("id"),
+        col("lb").as("center_id")))
+      (1 to 10).map { i =>
+        val st = alive
+          .join(asg.select(col("id").as("la"), col("center_id").as("ca")),
+            Seq("la"), "left")
+          .join(asg.select(col("id").as("lb"), col("center_id").as("cb")),
+            Seq("lb"), "left")
+        val size = st.queryExecution.optimizedPlan.stats.sizeInBytes
+        alive = mat(st.where(col("la") % 10L =!= i).select("la", "lb", "s"))
+        asg = mat(asg.union(alive.where(col("la") % 10L === i)
+          .select(col("la").as("id"), col("la").as("center_id"))))
+        size
+      }
+    }
+    val viaRound = rounds(df => Frames.round(df)._1)
+    assert(viaRound.forall(_ == viaRound.head))
+    // a bare checkpoint keeps the estimate it came from, which compounds
+    val viaShared = rounds(Frames.shared)
+    assert(viaShared.sliding(2).forall { case Seq(a, b) => b > a })
+    assert(viaShared.last > viaRound.head)
+  }
+
+  test("no materialization outside Frames in the main sources") {
+    val call = raw"\.localCheckpoint\(|\.cache\(\)|\.persist\(".r
+    val hits = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .flatMap { p: Path =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if call.findFirstIn(line).isDefined =>
+            (p.getFileName.toString, s"$p:${i + 1}")
+        }
+      }
+    assert(hits.exists(_._1 == "Frames.scala"))
+    val outside = hits.filterNot(h => Set("Frames.scala", "Bench.scala")(h._1))
+    assert(outside.isEmpty,
+      outside.map(_._2).mkString("materialized outside Frames: ", ", ", ""))
+  }
+}
