@@ -170,11 +170,15 @@ object BlockingSelection {
     * each other family's count of coverage rows (family, pa, pb) whose
     * pair no picked family covers. Families with a zero count are left
     * out (never picked). Under the driver-finish cap ([[DriverFinish]])
-    * the label-sized table is collected once and counted in memory;
-    * otherwise each step is one anti-join + count job. */
+    * the label-sized table is collected once and its pairs counted in a
+    * hash set — only for ids whose JVM equality is SQL equality
+    * ([[DriverFinish.hashable]]); otherwise each step is one anti-join +
+    * count job. */
   private def marginals(cov: DataFrame,
-      cap: Long): Seq[String] => Map[String, Long] =
-    DriverFinish.collected(cov, cap) match {
+      cap: Long): Seq[String] => Map[String, Long] = {
+    val hashable = Seq("pa", "pb")
+      .forall(c => DriverFinish.hashable(cov.schema(c).dataType))
+    (if (hashable) DriverFinish.collected(cov, cap) else None) match {
       case Some(rows) =>
         val byFam = rows.groupBy(_.getString(0)).view
           .mapValues(_.map(r => (r.get(1), r.get(2)))).toMap
@@ -194,6 +198,7 @@ object BlockingSelection {
             .map(r => r.getString(0) -> r.getLong(1)).toMap
         }
     }
+  }
 
   def greedySelection(keyed: DataFrame, truePairs: DataFrame,
       budget: BigDecimal, maxSchemes: Int): DataFrame = {

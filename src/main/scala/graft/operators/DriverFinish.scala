@@ -25,6 +25,9 @@ import org.apache.spark.sql.types._
   *    first ascending and last descending — so its tie-breaks are the
   *    rounds' window tie-breaks. A type without a comparator here keeps
   *    the operator on its distributed rounds.
+  *  - Equality: a replay that hashes collected values does so only for
+  *    types whose JVM equality is SQL equality ([[hashable]]); other
+  *    types keep the operator on its distributed rounds too.
   *  - Hand-back: the driver's rows return as a DataFrame ([[frame]]) in
   *    the caller's schema.
   *
@@ -76,6 +79,16 @@ private[operators] object DriverFinish {
       if (x == null) { if (y == null) 0 else -1 }
       else if (y == null) 1
       else c(x, y))
+  }
+
+  /** Whether JVM equality of one atomic type's collected values is SQL
+    * equality, so a replay may hash them: integral, string, boolean, date
+    * and timestamp values. Binary values are arrays compared by reference
+    * and a NaN double never equals itself, while SQL joins match both. */
+  def hashable(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | ShortType | ByteType | StringType |
+        BooleanType | DateType | TimestampType | TimestampNTZType => true
+    case _ => false
   }
 
   /** Sort direction of one [[rowOrdering]] key. */

@@ -10,7 +10,9 @@ import scala.jdk.CollectionConverters._
   * a linkage scorer (complementing the θ-driven confusion counts of
   * [[Linkage.thresholdSweep]] and the model-driven μ/λ calibration of
   * [[FellegiSunter.calibrate]]) plus the pay-as-you-go recall curve of a
-  * PROGRESSIVE pair generator.
+  * PROGRESSIVE pair generator, and the cluster-agreement metrics of a
+  * predicted partition against a reference one (B-cubed, MUC, ARI, pair
+  * counting, information).
   *
   * Everything here is label-driven: `labeled` carries the true pairs
   * (id_a, id_b) and the scored/ordered pair frame is the classifier
@@ -230,6 +232,17 @@ object Evaluation {
             col("__ntrue").cast("double")).as("recall"))
   }
 
+  /** The (cluster, truth) contingency table every cluster-level
+    * metric below starts from: one row per non-empty cell, `(__g, __t,
+    * __ni)` with `__ni` its record count (one map-side-combined groupBy). */
+  private def contingency(assignments: DataFrame, clusterCol: String,
+      truthCol: String): DataFrame =
+    assignments.groupBy(col(clusterCol).as("__g"), col(truthCol).as("__t"))
+      .agg(count(lit(1)).as("__ni"))
+
+  /** 2·C(x,2) = x·(x−1), decimal-exact. */
+  private def pairs2(c: Column): Column = c.cast(dec) * (c.cast(dec) - 1)
+
   /** Cluster-LEVEL evaluation of a predicted partition against a truth
     * partition (Menestrina-Whang-Garcia-Molina, "Evaluating entity
     * resolution results", VLDB 2010): where pairwise F1 / B³ weight by
@@ -256,15 +269,13 @@ object Evaluation {
     * gmd_splits, gmd_merges, gmd). */
   def clusterMetrics(assignment: DataFrame, clusterCol: String = "cluster_id",
       truthCol: String = "truth_id"): DataFrame = {
-    val ni = assignment
-      .select(col(clusterCol).as("__c"), col(truthCol).as("__t"))
-      .groupBy(col("__c"), col("__t")).agg(count(lit(1)).as("__n"))
-    val pred = ni.groupBy(col("__c"))
-      .agg(sum(col("__n")).as("__np"), count(lit(1)).as("__kp"))
+    val ni = contingency(assignment, clusterCol, truthCol)
+    val pred = ni.groupBy(col("__g"))
+      .agg(sum(col("__ni")).as("__np"), count(lit(1)).as("__kp"))
     val tru = ni.groupBy(col("__t"))
-      .agg(sum(col("__n")).as("__nt"), count(lit(1)).as("__kt"))
-    val exact = ni.join(pred, "__c").join(tru, "__t")
-      .where(col("__n") === col("__np") && col("__n") === col("__nt"))
+      .agg(sum(col("__ni")).as("__nt"), count(lit(1)).as("__kt"))
+    val exact = ni.join(pred, "__g").join(tru, "__t")
+      .where(col("__ni") === col("__np") && col("__ni") === col("__nt"))
       .agg(count(lit(1)).as("n_exact"))
     val aggP = pred.agg(count(lit(1)).as("n_pred"),
       sum(col("__kp") - 1).as("gmd_splits"), sum(col("__np")).as("n_records"))
@@ -307,6 +318,312 @@ object Evaluation {
         ((col("cluster_size") * col("n_clusters")).cast("double") /
           col("__total").cast("double")).as("frac_records"))
   }
+
+  /** B-cubed sufficient statistics: for records carrying a predicted
+    * cluster id and a reference (truth) partition id, emit one row per
+    * predicted cluster and one per truth class — (side, gid, n_g,
+    * sum_ni2) where sum_ni2 = Σ over the opposite partition of the
+    * squared intersection size. ALL-INTEGER aggregates (count + sum of
+    * products), so the frame is exactly reproducible regardless of
+    * partitioning — the hash-gradable face of B-cubed; [[bCubed]] folds
+    * it into the scalar metrics. Shapes: two partial-combined groupBys
+    * over the (cluster, truth) contingency counts. */
+  def bCubedStats(assignments: DataFrame, clusterCol: String = "cluster_id",
+      truthCol: String = "truth_id"): DataFrame = {
+    val ni = contingency(assignments, clusterCol, truthCol)
+    def side(name: String, g: String): DataFrame = ni.groupBy(col(g))
+      .agg(sum(col("__ni")).as("n_g"),
+        sum(col("__ni") * col("__ni")).as("sum_ni2"))
+      .select(lit(name).as("side"), col(g).cast("string").as("gid"),
+        col("n_g"), col("sum_ni2"))
+    side("cluster", "__g").union(side("truth", "__t"))
+  }
+
+  /** B-cubed precision / recall / F1 (Bagga & Baldwin 1998) of a predicted
+    * clustering vs a reference partition — the standard CLUSTER-level ER
+    * metric next to pairwise F1 (B³ rewards correctly-sized clusters,
+    * penalizing both over-merging and over-splitting per record):
+    * precision = (1/N) Σ_records |C(r) ∩ T(r)| / |C(r)|, which reduces to
+    * (1/N) Σ_clusters sum_ni2 / n_g over [[bCubedStats]]; recall is the
+    * mirror over truth classes. */
+  def bCubed(assignments: DataFrame, clusterCol: String = "cluster_id",
+      truthCol: String = "truth_id"): (Double, Double, Double) = {
+    // both folds read the stats
+    val stats = Frames.shared(bCubedStats(assignments, clusterCol, truthCol))
+    val n = assignments.count().toDouble
+    def fold(side: String): Double = stats.where(col("side") === side)
+      .agg(sum(col("sum_ni2").cast("double") / col("n_g").cast("double")))
+      .head().getDouble(0) / n
+    val p = fold("cluster")
+    val r = fold("truth")
+    val f1 = if (p + r == 0) 0.0 else 2 * p * r / (p + r)
+    (p, r, f1)
+  }
+
+  /** MUC link-based metric (Vilain et al., MUC-6 1995) of a predicted
+    * clustering vs a reference partition — the third classic ER/coref
+    * metric next to [[bCubedStats]] (mention-weighted) and
+    * [[adjustedRandStats]] (chance-corrected pair counting): MUC counts
+    * the MINIMUM LINK EDITS to reconcile the two partitions. Recall =
+    * Σ_t (n_t − p_t) / Σ_t (n_t − 1) over truth classes t, where p_t =
+    * #predicted clusters class t is scattered across (links missing to
+    * reunite it); precision mirrors with roles swapped. Singletons carry
+    * zero weight — MUC's known blind spot, which is exactly why the three
+    * metrics ship together.
+    *
+    * One pass to the contingency counts (map-side combining groupBy),
+    * then two class-count aggregates folded to one row each and a 1-row
+    * broadcast cross join; the numerators/denominators are exact 64-bit
+    * integers, P/R one exact division each (null when the denominator is
+    * 0 — all classes singleton = no evidence), f1 pinned to
+    * 2·p·r/(p+r), 0.0 when p + r = 0, null if either side is null. */
+  def mucStats(assignments: DataFrame, clusterCol: String = "cluster_id",
+      truthCol: String = "truth_id"): DataFrame = {
+    val ni = contingency(assignments, clusterCol, truthCol)
+    val byT = ni.groupBy(col("__t"))
+      .agg(sum(col("__ni")).as("n"), count(lit(1)).as("p"))
+      .agg(sum(col("n") - col("p")).as("recall_num"),
+        sum(col("n") - 1).as("recall_den"))
+    val byG = ni.groupBy(col("__g"))
+      .agg(sum(col("__ni")).as("n"), count(lit(1)).as("q"))
+      .agg(sum(col("n") - col("q")).as("precision_num"),
+        sum(col("n") - 1).as("precision_den"))
+    byG.crossJoin(broadcast(byT))
+      .withColumn("muc_precision", when(col("precision_den") > 0,
+        col("precision_num").cast("double") / col("precision_den").cast("double")))
+      .withColumn("muc_recall", when(col("recall_den") > 0,
+        col("recall_num").cast("double") / col("recall_den").cast("double")))
+      .withColumn("muc_f1",
+        when(col("muc_precision").isNull || col("muc_recall").isNull,
+          lit(null).cast("double"))
+          .when(col("muc_precision") + col("muc_recall") > 0,
+            lit(2.0) * col("muc_precision") * col("muc_recall") /
+              (col("muc_precision") + col("muc_recall")))
+          .otherwise(lit(0.0)))
+  }
+
+  /** Adjusted Rand Index (Hubert & Arabie 1985) of a predicted clustering
+    * vs a reference partition — the chance-corrected pair-counting metric
+    * next to [[bCubed]] (ARI = 0 for a random clustering, 1 for a perfect
+    * one, negative for worse-than-chance). One row: (n, s_ij, s_a, s_b,
+    * ari) where s_ij = Σ C(n_ij,2) over the contingency cells, s_a / s_b
+    * the marginal pair sums, and
+    *   ari = (2·N·s_ij − 2·s_a·s_b) / (N·(s_a+s_b) − 2·s_a·s_b),
+    * N = C(n,2) — the formula cleared of fractions so everything up to
+    * the final division is INTEGER arithmetic. Pair sums are folded in
+    * decimal(38,0) (long products overflow at ~3e9 records — the
+    * [[Linkage.blockingQuality]] lesson); the cleared products stay exact to
+    * n ≈ 10^9 and the one double division is the only rounding anywhere.
+    * NULL when the denominator is 0 (both partitions trivial — all
+    * singletons or one block: chance correction is undefined).
+    *
+    * Shapes: one groupBy over the (cluster, truth) contingency counts,
+    * two marginal groupBys over THAT (cell-count-sized) frame, three
+    * 1-row aggregates cross-joined — no window, no collect beyond the
+    * 1-row frames Spark folds itself. */
+  def adjustedRandStats(assignments: DataFrame,
+      clusterCol: String = "cluster_id",
+      truthCol: String = "truth_id"): DataFrame = {
+    val ni = contingency(assignments, clusterCol, truthCol)
+    val sij = ni.agg(sum(pairs2(col("__ni"))).as("s2_ij"),
+      sum(col("__ni")).as("__n"))
+    val sa = ni.groupBy(col("__g")).agg(sum(col("__ni")).as("__na"))
+      .agg(sum(pairs2(col("__na"))).as("s2_a"))
+    val sb = ni.groupBy(col("__t")).agg(sum(col("__ni")).as("__nb"))
+      .agg(sum(pairs2(col("__nb"))).as("s2_b"))
+    // s2_* carry 2·ΣC(·,2); N2 = 2·C(n,2) = n·(n−1). Substituting into
+    // the cleared form and scaling numerator and denominator to a common
+    // factor of 8: ari = 2·(N2·s2_ij − s2_a·s2_b) /
+    // (N2·(s2_a+s2_b) − 2·s2_a·s2_b) — every term a decimal INTEGER, no
+    // intermediate division anywhere.
+    sij.crossJoin(broadcast(sa)).crossJoin(broadcast(sb))
+      .withColumn("__num",
+        lit(2).cast(dec) * (col("__n").cast(dec) * (col("__n").cast(dec) - 1)
+          * col("s2_ij") - col("s2_a") * col("s2_b")))
+      .withColumn("__den",
+        col("__n").cast(dec) * (col("__n").cast(dec) - 1)
+          * (col("s2_a") + col("s2_b")) - lit(2).cast(dec) * col("s2_a")
+          * col("s2_b"))
+      .select(col("__n").cast("long").as("n"),
+        (col("s2_ij") / 2).cast("long").as("s_ij"),
+        (col("s2_a") / 2).cast("long").as("s_a"),
+        (col("s2_b") / 2).cast("long").as("s_b"),
+        when(col("__den") =!= 0,
+          col("__num").cast("double") / col("__den").cast("double"))
+          .as("ari"))
+  }
+
+  /** Partition-agreement metrics that complete the pair-counting family
+    * beside [[adjustedRandStats]] / [[bCubedStats]] / [[mucStats]]: the
+    * raw pair confusion counts (tp/fp/fn/tn), the UNADJUSTED Rand index
+    * (Rand 1971), the Fowlkes-Mallows index (Fowlkes & Mallows 1983,
+    * FM = tp / sqrt((tp+fp)·(tp+fn)) = the geometric mean of pairwise
+    * precision and recall), and the Talburt-Wang index (Talburt 2011,
+    * TW = sqrt(|A|·|B|) / V with V = #non-empty contingency overlaps —
+    * the ER-textbook metric that needs NO pair counts at all, only
+    * cluster counts, so it stays meaningful on singleton-heavy linkage
+    * output where MUC goes null).
+    *
+    * Same shapes and exactness discipline as [[adjustedRandStats]]: one
+    * contingency groupBy, two marginal groupBys over the cell-sized
+    * frame, three 1-row aggregates broadcast-cross-joined; pair sums
+    * folded in decimal(38,0) (long products overflow at ~3e9 records),
+    * every count exact, and the only rounding is the final double
+    * division / sqrt (sqrt is IEEE-correctly-rounded, so any engine
+    * replaying the same integer inputs reproduces the doubles bit-exactly).
+    * rand_index is null when n < 2 (no pairs to count); fowlkes_mallows
+    * is null when either side has no intra-cluster pair (precision or
+    * recall undefined); talburt_wang is null only on an empty input.
+    *
+    * Also emits the unit-cost Generalized Merge Distance (Menestrina,
+    * Whang & Garcia-Molina, VLDB 2010) — the EDIT distance between the
+    * two partitions: transforming clusters→truth takes exactly
+    * `gmd_splits` = V − |A| splits (each cluster spanning k truth cells
+    * needs k−1 splits; Σ(k−1) = V − |A|) followed by
+    * `gmd_merges` = V − |B| merges (the V fragments then assemble into
+    * the |B| truth clusters), so `gmd` = 2V − |A| − |B|, all integer —
+    * 0 iff the partitions are identical. Unlike pair-counting metrics
+    * GMD is linear in clusters, not pairs, so it never saturates on a
+    * singleton-heavy corpus. */
+  def partitionAgreementStats(assignments: DataFrame,
+      clusterCol: String = "cluster_id",
+      truthCol: String = "truth_id"): DataFrame = {
+    val ni = contingency(assignments, clusterCol, truthCol)
+    val cells = ni.agg(sum(pairs2(col("__ni"))).as("s2_ij"),
+      sum(col("__ni")).as("__n"), count(lit(1)).as("v"))
+    val sa = ni.groupBy(col("__g")).agg(sum(col("__ni")).as("__na"))
+      .agg(sum(pairs2(col("__na"))).as("s2_a"), count(lit(1)).as("ca"))
+    val sb = ni.groupBy(col("__t")).agg(sum(col("__ni")).as("__nb"))
+      .agg(sum(pairs2(col("__nb"))).as("s2_b"), count(lit(1)).as("cb"))
+    val n2 = col("__n").cast(dec) * (col("__n").cast(dec) - 1) // 2·C(n,2)
+    cells.crossJoin(broadcast(sa)).crossJoin(broadcast(sb))
+      .select(
+        col("__n").cast("long").as("n"), col("ca"), col("cb"), col("v"),
+        (col("s2_ij") / 2).cast("long").as("tp"),
+        ((col("s2_a") - col("s2_ij")) / 2).cast("long").as("fp"),
+        ((col("s2_b") - col("s2_ij")) / 2).cast("long").as("fn"),
+        ((n2 - col("s2_a") - col("s2_b") + col("s2_ij")) / 2).cast("long")
+          .as("tn"),
+        when(n2 > 0,
+          (lit(2).cast(dec) * col("s2_ij") + n2 - col("s2_a") - col("s2_b"))
+            .cast("double") / n2.cast("double")).as("rand_index"),
+        when(col("s2_a") > 0 && col("s2_b") > 0,
+          (col("s2_ij") / 2).cast("double") /
+            sqrt((col("s2_a") / 2).cast("double") *
+              (col("s2_b") / 2).cast("double"))).as("fowlkes_mallows"),
+        when(col("v") > 0,
+          sqrt(col("ca").cast("double") * col("cb").cast("double")) /
+            col("v").cast("double")).as("talburt_wang"),
+        (col("v") - col("ca")).as("gmd_splits"),
+        (col("v") - col("cb")).as("gmd_merges"),
+        (lit(2L) * col("v") - col("ca") - col("cb")).as("gmd"))
+  }
+
+  /** Count-of-counts sufficient statistics for the INFORMATION-THEORETIC
+    * cluster-agreement family (variation of information, NMI, V-measure
+    * — [[informationMetrics]] folds the scalars). Entropies depend on the
+    * partitions only through the MULTISETS of cell/cluster/truth sizes,
+    * and a multiset of sizes compresses to (size, how-many-groups) rows —
+    * at web scale billions of clusters collapse to the handful of
+    * distinct sizes they take, which is what makes the histogram the
+    * right persistence/gate face. Output: one row per
+    * (side ∈ cell|cluster|truth, group_size) with its group count —
+    * ALL-INTEGER (the house gate discipline: ln() is libm-dependent
+    * across engines, so logs never touch a hash-gated face; compare
+    * [[graft.operators.TextAnalysis]]'s log-free idf).
+    *
+    * Shapes: one contingency groupBy, two marginal groupBys over the
+    * cell-sized frame, three count-of-counts groupBys over THOSE (all
+    * map-side combinable) — nothing pair-shaped anywhere. */
+  def informationStats(assignments: DataFrame,
+      clusterCol: String = "cluster_id",
+      truthCol: String = "truth_id"): DataFrame = {
+    val ni = contingency(assignments, clusterCol, truthCol)
+    def hist(sized: DataFrame, c: String, side: String): DataFrame =
+      sized.groupBy(col(c).as("group_size"))
+        .agg(count(lit(1)).as("n_groups"))
+        .select(lit(side).as("side"), col("group_size"), col("n_groups"))
+    hist(ni, "__ni", "cell")
+      .unionAll(hist(ni.groupBy(col("__g"))
+        .agg(sum(col("__ni")).as("__na")), "__na", "cluster"))
+      .unionAll(hist(ni.groupBy(col("__t"))
+        .agg(sum(col("__ni")).as("__nb")), "__nb", "truth"))
+  }
+
+  /** Scalar information-theoretic agreement metrics folded from
+    * [[informationStats]] — the third metric family beside pair counting
+    * ([[adjustedRandStats]] / [[partitionAgreementStats]]) and link
+    * editing ([[mucStats]] / GMD): entropy-based scores are the ones
+    * that stay discriminative when cluster sizes are wildly skewed
+    * (pair counts are dominated by the largest cluster's C(n,2); bits
+    * are not). One row:
+    *  - `h_cluster`, `h_truth`, `h_joint` — partition entropies in nats
+    *    (H = ln n − Σ n_g·ln n_g / n, folded over the size histogram);
+    *  - `mi` = H(A) + H(B) − H(A,B), clamped at ≥ 0 (the analytic value
+    *    is non-negative; floating summation may land ulps below);
+    *  - `vi` = 2·H(A,B) − H(A) − H(B) (Meilă 2003), clamped at ≥ 0 —
+    *    the METRIC on partitions: 0 iff identical, triangle inequality
+    *    holds, so drift between runs is comparable across corpora;
+    *  - `nmi` = MI / ((H(A)+H(B))/2) — arithmetic-mean normalization;
+    *  - `homogeneity` = 1 − H(B|A)/H(B), `completeness` = 1 − H(A|B)/H(A),
+    *    `v_measure` = their harmonic mean (Rosenberg & Hirschberg 2007).
+    *  Degenerate normalizers yield NULL, never a fake score (the
+    *  [[graphMetrics]] density/centralisation discipline;
+    *  sklearn's 0-or-1 conventions at the same spots are arbitrary):
+    *  `nmi` NULL when H(A)+H(B) = 0, `homogeneity` NULL when H(B) = 0,
+    *  `completeness` NULL when H(A) = 0, `v_measure` NULL when either
+    *  parent is NULL or hom+comp = 0.
+    *
+    * The fold runs as ONE aggregate over the histogram (model-sized —
+    * the scalars are driver-safe but never leave the plan), with Σ
+    * counts decimal-exact and ln() applied only at the final scalar
+    * step. NOT hash-gate-faced (ln is libm-dependent across engines);
+    * spec-pinned in sbt instead, where analytic fixtures are exact. */
+  def informationMetrics(assignments: DataFrame,
+      clusterCol: String = "cluster_id",
+      truthCol: String = "truth_id"): DataFrame = {
+    val st = informationStats(assignments, clusterCol, truthCol)
+    // Σ n_groups·size (= n, identical per side) and Σ n_groups·size·ln(size)
+    // per side; ln(1) = 0 exactly, so singleton mass drops out analytically.
+    val agg = st.groupBy(col("side"))
+      .agg(sum(col("n_groups") * col("group_size")).as("__tot"),
+        sum(col("n_groups").cast("double") *
+          col("group_size").cast("double") *
+          log(col("group_size").cast("double"))).as("__slog"))
+    def side(sideName: String, h: String): DataFrame =
+      agg.where(col("side") === sideName)
+        .select(col("__tot").as(s"__n_$h"), col("__slog").as(s"__s_$h"))
+    val j = side("cell", "ij").crossJoin(broadcast(side("cluster", "a")))
+      .crossJoin(broadcast(side("truth", "b")))
+    val n = col("__n_ij").cast("double")
+    def entropy(slog: Column): Column = log(n) - slog / n
+    val withH = j
+      .withColumn("h_cluster", entropy(col("__s_a")))
+      .withColumn("h_truth", entropy(col("__s_b")))
+      .withColumn("h_joint", entropy(col("__s_ij")))
+      .withColumn("mi", greatest(lit(0.0),
+        col("h_cluster") + col("h_truth") - col("h_joint")))
+      .withColumn("vi", greatest(lit(0.0),
+        lit(2.0) * col("h_joint") - col("h_cluster") - col("h_truth")))
+    withH.select(
+      col("__n_ij").cast("long").as("n"),
+      col("h_cluster"), col("h_truth"), col("h_joint"),
+      col("mi"), col("vi"),
+      when(col("h_cluster") + col("h_truth") > 0,
+        col("mi") / ((col("h_cluster") + col("h_truth")) / 2.0)).as("nmi"),
+      when(col("h_truth") > 0, // 1 − H(B|A)/H(B), H(B|A) = H(AB) − H(A)
+        lit(1.0) - (col("h_joint") - col("h_cluster")) / col("h_truth"))
+        .as("homogeneity"),
+      when(col("h_cluster") > 0,
+        lit(1.0) - (col("h_joint") - col("h_truth")) / col("h_cluster"))
+        .as("completeness"))
+      .withColumn("v_measure",
+        when(col("homogeneity").isNotNull && col("completeness").isNotNull &&
+          col("homogeneity") + col("completeness") > 0,
+          lit(2.0) * col("homogeneity") * col("completeness") /
+            (col("homogeneity") + col("completeness"))))
+  }
+
 
   /** Assign the global 1-based emission rank that makes a pair frame
     * progressive: pairs are ordered by (`orderCol` ASC, `tieCol` ASC) —

@@ -4,7 +4,7 @@ import graft.SparkFunSuite
 
 /** Pins [[Linkage.adaptiveSortedNeighborhoodPairs]] to its sequential
   * definition (sort, cut where adjacent-key similarity < θ, pair within
-  * segments) and [[Linkage.mucStats]] to the published MUC worked
+  * segments) and [[Evaluation.mucStats]] to the published MUC worked
   * example. */
 class AdaptiveSnmSpec extends SparkFunSuite {
 
@@ -70,19 +70,19 @@ class AdaptiveSnmSpec extends SparkFunSuite {
     // truth {a,b,c}{d}; predicted {a,b}{c,d} → P = R = F1 = 0.5
     val a = Seq(("a", "g1", "t1"), ("b", "g1", "t1"), ("c", "g2", "t1"),
       ("d", "g2", "t2")).toDF("id", "cluster_id", "truth_id")
-    val r1 = Linkage.mucStats(a).head()
+    val r1 = Evaluation.mucStats(a).head()
     assert(r1.getAs[Double]("muc_precision") == 0.5)
     assert(r1.getAs[Double]("muc_recall") == 0.5)
     assert(r1.getAs[Double]("muc_f1") == 0.5)
     // perfect clustering
     val b = Seq(("a", "x", "t1"), ("b", "x", "t1"), ("c", "y", "t2"),
       ("d", "y", "t2")).toDF("id", "cluster_id", "truth_id")
-    val r2 = Linkage.mucStats(b).head()
+    val r2 = Evaluation.mucStats(b).head()
     assert(r2.getAs[Double]("muc_precision") == 1.0 &&
       r2.getAs[Double]("muc_recall") == 1.0 && r2.getAs[Double]("muc_f1") == 1.0)
     // all singletons → no link evidence → nulls
     val c = Seq(("a", "x", "t1"), ("b", "y", "t2")).toDF("id", "cluster_id", "truth_id")
-    val r3 = Linkage.mucStats(c).head()
+    val r3 = Evaluation.mucStats(c).head()
     assert(r3.isNullAt(r3.fieldIndex("muc_precision")))
     assert(r3.isNullAt(r3.fieldIndex("muc_f1")))
   }

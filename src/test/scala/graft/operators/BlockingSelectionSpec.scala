@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.SparkFunSuite
@@ -126,6 +127,29 @@ class BlockingSelectionSpec extends SparkFunSuite {
       val dist = withCap("0")(learned(negBudget))
       assert(drv == dist, s"learnScheme maxNegCovered=$negBudget")
     }
+  }
+
+  test("driver finish: binary ids select the same at cap 0 and the default cap") {
+    // binary ids are arrays on the JVM, equal only by reference: a replay
+    // hashing them would never see a pair as covered, so both operators
+    // must keep binary ids on the anti-join loop
+    def bin(df: DataFrame, cs: String*) = cs.foldLeft(df)((d, c) =>
+      d.withColumn(c, col(c).cast("string").cast("binary")))
+    def selected(budget: Long) = BlockingSelection.greedySelection(
+      bin(keyed, "id"), bin(truth, "pa", "pb"), BigDecimal(budget), 3)
+      .collect().map(_.toSeq).toSeq
+    def learnedBin(budget: Long) = BlockingSelection.learnScheme(
+      bin(dnfKeys, "id"), bin(dnfPos, "pa", "pb"), bin(dnfNeg, "pa", "pb"),
+      budget, 3).collect().map(_.toSeq).toSeq
+    def atCap0[A](f: => A): A = withConf("graft.blocksel.driverFinishRows", "0")(f)
+    for (budget <- Seq(1000L, 25L)) {
+      val dflt = selected(budget)
+      assert(dflt == atCap0(selected(budget)), s"greedySelection budget=$budget")
+      assert(dflt.map(_(1)) == rows(budget).map(_._2).toSeq)
+    }
+    val dflt = learnedBin(10L)
+    assert(dflt == atCap0(learnedBin(10L)))
+    assert(dflt.map(_(1)) == learned(10L).map(_._2))
   }
 
   test("learnScheme: conjunction keys are per-record combinations") {

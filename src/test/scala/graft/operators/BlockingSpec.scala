@@ -217,17 +217,17 @@ class BlockingSpec extends SparkFunSuite {
       (4L, "B", "y"), (5L, "B", "z")).toDF("id", "cluster_id", "truth_id")
     // per record |C∩T|/|C|: 2/3, 2/3, 1/3, 1/2, 1/2 → P = (2/3+2/3+1/3+1/2+1/2)/5
     // per record |C∩T|/|T|: 2/2, 2/2, 1/2, 1/2, 1/1 → R = (1+1+.5+.5+1)/5 = 0.8
-    val (p, r, f1) = Linkage.bCubed(asg)
+    val (p, r, f1) = Evaluation.bCubed(asg)
     assert(math.abs(p - (2.0/3 + 2.0/3 + 1.0/3 + 0.5 + 0.5) / 5) < 1e-12)
     assert(math.abs(r - 0.8) < 1e-12)
     assert(math.abs(f1 - 2 * p * r / (p + r)) < 1e-12)
     // perfect clustering → all three metrics 1.0
     val perfect = Seq((1L, "A", "x"), (2L, "A", "x"), (3L, "B", "y"))
       .toDF("id", "cluster_id", "truth_id")
-    assert(Linkage.bCubed(perfect) == ((1.0, 1.0, 1.0)))
+    assert(Evaluation.bCubed(perfect) == ((1.0, 1.0, 1.0)))
     // stats frame is integer-exact and partition-independent
-    val s1 = Linkage.bCubedStats(asg).collect().map(_.toSeq).toSet
-    val s2 = Linkage.bCubedStats(asg.repartition(7)).collect().map(_.toSeq).toSet
+    val s1 = Evaluation.bCubedStats(asg).collect().map(_.toSeq).toSet
+    val s2 = Evaluation.bCubedStats(asg.repartition(7)).collect().map(_.toSeq).toSet
     assert(s1 == s2)
     assert(s1.contains(Seq("cluster", "A", 3L, 5L)))  // 2² + 1² = 5
   }
@@ -242,21 +242,21 @@ class BlockingSpec extends SparkFunSuite {
       (1L, "A", "x"), (2L, "A", "x"), (3L, "A", "y"),
       (4L, "B", "y"), (5L, "B", "y"), (6L, "B", "z"))
       .toDF("id", "cluster_id", "truth_id")
-    val r = Linkage.adjustedRandStats(asg).collect().head
+    val r = Evaluation.adjustedRandStats(asg).collect().head
     assert(r.getLong(0) == 6L && r.getLong(1) == 2L &&
       r.getLong(2) == 6L && r.getLong(3) == 4L)
     assert(r.getDouble(4) == 12.0 / 102.0)
     // identical partitions → 1.0
     val perfect = Seq((1L, "A", "x"), (2L, "A", "x"), (3L, "B", "y"))
       .toDF("id", "cluster_id", "truth_id")
-    assert(Linkage.adjustedRandStats(perfect).collect().head.getDouble(4) == 1.0)
+    assert(Evaluation.adjustedRandStats(perfect).collect().head.getDouble(4) == 1.0)
     // all singletons both sides → chance correction undefined → NULL
     val triv = Seq((1L, "A", "x"), (2L, "B", "y"))
       .toDF("id", "cluster_id", "truth_id")
-    assert(Linkage.adjustedRandStats(triv).collect().head.isNullAt(4))
+    assert(Evaluation.adjustedRandStats(triv).collect().head.isNullAt(4))
     // partition-independent
-    val a = Linkage.adjustedRandStats(asg.repartition(7)).collect().head.toSeq
-    val b = Linkage.adjustedRandStats(asg.coalesce(1)).collect().head.toSeq
+    val a = Evaluation.adjustedRandStats(asg.repartition(7)).collect().head.toSeq
+    val b = Evaluation.adjustedRandStats(asg.coalesce(1)).collect().head.toSeq
     assert(a == b)
   }
 
@@ -274,7 +274,7 @@ class BlockingSpec extends SparkFunSuite {
       (1L, "A", "x"), (2L, "A", "x"), (3L, "A", "y"),
       (4L, "B", "y"), (5L, "B", "y"))
       .toDF("id", "cluster_id", "truth_id")
-    val r = Linkage.partitionAgreementStats(asg).collect().head
+    val r = Evaluation.partitionAgreementStats(asg).collect().head
     assert(r.getLong(0) == 5L && r.getLong(1) == 2L && r.getLong(2) == 2L &&
       r.getLong(3) == 3L)
     assert(r.getLong(4) == 2L && r.getLong(5) == 2L && r.getLong(6) == 2L &&
@@ -287,29 +287,29 @@ class BlockingSpec extends SparkFunSuite {
     // identical partitions → all three indexes 1.0, edit distance 0
     val perfect = Seq((1L, "A", "x"), (2L, "A", "x"), (3L, "B", "y"))
       .toDF("id", "cluster_id", "truth_id")
-    val p = Linkage.partitionAgreementStats(perfect).collect().head
+    val p = Evaluation.partitionAgreementStats(perfect).collect().head
     assert(p.getDouble(8) == 1.0 && p.getDouble(9) == 1.0 &&
       p.getDouble(10) == 1.0)
     assert(p.getAs[Long]("gmd") == 0L)
     // pure refinement (clusters split truth): only merges, no splits
     val refined = Seq((1L, "A", "x"), (2L, "B", "x"), (3L, "C", "y"))
       .toDF("id", "cluster_id", "truth_id")
-    val rf = Linkage.partitionAgreementStats(refined).collect().head
+    val rf = Evaluation.partitionAgreementStats(refined).collect().head
     assert(rf.getAs[Long]("gmd_splits") == 0L &&
       rf.getAs[Long]("gmd_merges") == 1L && rf.getAs[Long]("gmd") == 1L)
     // all singletons both sides: no intra pairs → FM null, Rand = 1
     // (every pair truly negative), TW = sqrt(n·n)/n = 1
     val triv = Seq((1L, "A", "x"), (2L, "B", "y"))
       .toDF("id", "cluster_id", "truth_id")
-    val t = Linkage.partitionAgreementStats(triv).collect().head
+    val t = Evaluation.partitionAgreementStats(triv).collect().head
     assert(t.isNullAt(9) && t.getDouble(8) == 1.0 && t.getDouble(10) == 1.0)
     // single row: no pairs at all → Rand null too
     val one = Seq((1L, "A", "x")).toDF("id", "cluster_id", "truth_id")
-    val o = Linkage.partitionAgreementStats(one).collect().head
+    val o = Evaluation.partitionAgreementStats(one).collect().head
     assert(o.isNullAt(8) && o.isNullAt(9) && o.getDouble(10) == 1.0)
     // partition-independent
-    val a2 = Linkage.partitionAgreementStats(asg.repartition(7)).collect().head.toSeq
-    val b2 = Linkage.partitionAgreementStats(asg.coalesce(1)).collect().head.toSeq
+    val a2 = Evaluation.partitionAgreementStats(asg.repartition(7)).collect().head.toSeq
+    val b2 = Evaluation.partitionAgreementStats(asg.coalesce(1)).collect().head.toSeq
     assert(a2 == b2)
   }
 

@@ -14,7 +14,7 @@ class InformationMetricsSpec extends SparkFunSuite {
   import spark.implicits._
 
   private def metricsRow(pairs: Seq[(String, String)]) =
-    Linkage.informationMetrics(
+    Evaluation.informationMetrics(
       pairs.zipWithIndex.map { case ((c, t), i) => (i.toLong, c, t) }
         .toDF("id", "cluster_id", "truth_id")).head()
 
@@ -23,7 +23,7 @@ class InformationMetricsSpec extends SparkFunSuite {
     val df = Seq(("A", "a"), ("A", "a"), ("A", "b"), ("B", "b"))
       .toDF("cluster_id", "truth_id")
       .withColumn("id", monotonically_increasing_id())
-    val got = Linkage.informationStats(df)
+    val got = Evaluation.informationStats(df)
       .as[(String, Long, Long)].collect().toSet
     assert(got == Set(
       ("cell", 2L, 1L), ("cell", 1L, 2L),     // one size-2 cell, two size-1
@@ -85,7 +85,7 @@ class InformationMetricsSpec extends SparkFunSuite {
       val hB = entropy(rows.groupBy(_._3).view.mapValues(_.size).toMap)
       val hJ = entropy(rows.groupBy(r => (r._2, r._3)).view
         .mapValues(_.size).toMap)
-      val r = Linkage.informationMetrics(
+      val r = Evaluation.informationMetrics(
         rows.toDF("id", "cluster_id", "truth_id").repartition(7)).head()
       assert(math.abs(r.getAs[Double]("h_cluster") - hA) < 1e-12)
       assert(math.abs(r.getAs[Double]("h_truth") - hB) < 1e-12)

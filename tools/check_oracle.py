@@ -8,7 +8,10 @@ Usage: python3 tools/check_oracle.py [sfDir] [outDir] [--against otherOutDir]
 With --against, each query's output in outDir is compared with the same
 query's output in otherOutDir (another graft.Verify run, e.g. of the parent
 commit) by the same exact comparison, instead of with the oracle; the
-reports then show that run's values as `duck`.
+reports then show that run's values as `duck`. It also lists the
+oracle_sql.json keys whose SQL text differs between the two runs (added,
+removed or changed); that list is a report only and does not count as a
+failure.
 """
 import duckdb, json, sys, os, math
 
@@ -77,5 +80,14 @@ for name, sql in sorted(oracle.items()):
         print(f'{name}: {bad} value diffs'); fails += 1
     else:
         print(f'{name}: OK ({len(duck)} rows, cols {scols})')
+if against and os.path.exists(f'{against}/oracle_sql.json'):
+    other = json.load(open(f'{against}/oracle_sql.json'))
+    changed = sorted(k for k in oracle.keys() | other.keys()
+                     if oracle.get(k) != other.get(k))
+    for k in changed:
+        how = ('ADDED' if k not in other else 'REMOVED' if k not in oracle
+               else 'CHANGED')
+        print(f'{k}: ORACLE SQL {how}')
+    print(f'ORACLE SQL DIFFERS: {len(changed)} key(s)', *changed)
 print('FAILURES:', fails)
 sys.exit(1 if fails else 0)
