@@ -1140,7 +1140,7 @@ private[graft] object BlockingGates {
       val c = s.read.parquet(s"$dir/customer.parquet")
       graft.operators.Linkage.dynamicBlockKeys(c, "c_custkey",
         Seq(col("c_mktsegment"), col("c_nationkey"),
-          substring(col("c_name"), -1, 1)), cap = 100L)
+          substring(col("c_name"), -1, 1)), cap = 100L).out
     },
       // Dynamic blocking: three sizing CTEs (one per depth), coarsest
       // fitting depth wins, never-fitting records excluded.

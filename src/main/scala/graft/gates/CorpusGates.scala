@@ -584,7 +584,7 @@ private[graft] object CorpusGates {
         concat(substring(col("nn"), 1, 5), lit("x"), expr("substring(nn, 7)")),
         512, 4, "k7").as("sig"))
       graft.operators.Pprl.linkTables(a, b, "id", "sig",
-        m = 512, theta = 0.5)
+        m = 512, theta = 0.5).out
     },
       // PPRL linkage: both sides' bit sets, sampled-bit band keys with the
       // positions inlined (same splitmix sample as Pprl.samplePositions),

@@ -427,7 +427,7 @@ private[graft] object DedupGates {
     // q_dedup_minhash_lsh — the fingerprint-bound corpus's scale path.
     Gate("q_dedup_minhash_oph", (s, dir) => graft.operators.Dedup.minhashOphLshPairs(
       spread(s.read.parquet(s"$dir/documents.parquet")), "doc_id", "text",
-      tau = 0.5, bands = 4, bucketCap = 500, hashFamily = "sha256"),
+      tau = 0.5, bands = 4, bucketCap = 500, hashFamily = "sha256").out,
       // OPH dedup end-to-end: the SAME dens CTEs, banded 4×4 in bin order
       // (string_agg ORDER BY bin == the Spark side's element_at order),
       // then the standard sized/good/cand/verify tail at tau = 0.5.
@@ -642,7 +642,7 @@ private[graft] object DedupGates {
     // 1+2 are lossless; hardCap stays at its lossless default here).
     Gate("q_dedup_ngram_jaccard", (s, dir) => graft.operators.Dedup.ngramJaccardPairs(
       spread(s.read.parquet(s"$dir/documents.parquet")), "doc_id", "text",
-      Seq("lang", "source"), tau = 0.5, bucketCap = 8, saltGroups = 8),
+      Seq("lang", "source"), tau = 0.5, bucketCap = 8, saltGroups = 8).out,
       dedupNgramOracle(None)),
 
     // Asymmetric containment dedup (Broder's second resemblance): both
@@ -652,7 +652,7 @@ private[graft] object DedupGates {
     // so the 3-tier path is exercised at gate scale.
     Gate("q_dedup_containment", (s, dir) => graft.operators.Dedup.containmentPairs(
       spread(s.read.parquet(s"$dir/documents.parquet")), "doc_id", "text",
-      Seq("lang", "source"), tau = 0.8, bucketCap = 8, saltGroups = 8),
+      Seq("lang", "source"), tau = 0.8, bucketCap = 8, saltGroups = 8).out,
       // containment both directions, zero-token docs excluded, max-side
       // threshold — tier-blind brute force over the same blocks.
       """WITH base AS (
@@ -677,13 +677,13 @@ private[graft] object DedupGates {
         |WHERE greatest(containment_a, containment_b) >= 0.8""".stripMargin),
 
     // the lossy tier-3 cut, oracle-mirrored: blocks > hardCap=13 members
-    // are dropped (their record is Dedup.droppedNgramBuckets — DedupSpec
-    // pins the pairs-dropped <-> buckets-reported correspondence); the
-    // oracle folds the same cut via a block-size CTE.
+    // are dropped (their record is the call's `dropped` — DedupSpec pins
+    // the pairs-dropped <-> buckets-reported correspondence); the oracle
+    // folds the same cut via a block-size CTE.
     Gate("q_dedup_ngram_capped", (s, dir) => graft.operators.Dedup.ngramJaccardPairs(
       s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
       Seq("lang", "source"), tau = 0.5, bucketCap = 8, hardCap = 13,
-      saltGroups = 8),
+      saltGroups = 8).out,
       dedupNgramOracle(Some(13))),
 
     // TF-IDF cosine pair scoring (Cohen et al. 2003 hybrid
@@ -817,7 +817,7 @@ private[graft] object DedupGates {
     Gate("q_edjoin", (s, dir) => graft.operators.SetSimJoin.edJoinPairs(
       s.read.parquet(s"$dir/customer.parquet").where(col("c_custkey") % 3 === 0)
         .select(col("c_custkey").as("id"), col("c_name")),
-      "id", "c_name", k = 2, q = 2, bucketCap = 200, saltGroups = 8),
+      "id", "c_name", k = 2, q = 2, bucketCap = 200, saltGroups = 8).out,
       // Ed-Join oracle: tier-blind brute force, DuckDB builtin levenshtein.
       """SELECT a.c_custkey AS ia, b.c_custkey AS ib,
         |       CAST(levenshtein(a.c_name, b.c_name) AS INT) AS dist
@@ -836,7 +836,7 @@ private[graft] object DedupGates {
     // sf0.1; the Spark side scales sub-quadratically and doesn't need it.
     Gate("q_setsim_join", (s, dir) => graft.operators.SetSimJoin.prefixJaccardPairs(
       s.read.parquet(s"$dir/documents.parquet").where(col("doc_id") % 2 === 0),
-      "doc_id", "text", tau = 0.95, bucketCap = 40, saltGroups = 8),
+      "doc_id", "text", tau = 0.95, bucketCap = 40, saltGroups = 8).out,
       // Prefix-filter join oracle: tier-blind brute force — ALL pairs of the
       // subsampled corpus, exact distinct-token Jaccard, threshold at a
       // DOUBLE-cast tau. The prefix/length/salt machinery is lossless below
@@ -866,7 +866,7 @@ private[graft] object DedupGates {
       .prefixContainmentPairs(
         s.read.parquet(s"$dir/documents.parquet")
           .where(col("doc_id") % 2 === 0),
-        "doc_id", "text", tau = 0.8, bucketCap = 40, saltGroups = 8),
+        "doc_id", "text", tau = 0.8, bucketCap = 40, saltGroups = 8).out,
       // tier-blind brute-force max-containment truth over the %2 slice.
       """WITH d AS (
         |  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
@@ -977,7 +977,7 @@ private[graft] object DedupGates {
     // unique) — the final keep-one-per-group dedup decision
     Gate("q_dedup_groups", (s, dir) => graft.operators.Dedup.nearDupGroups(
       spread(s.read.parquet(s"$dir/documents.parquet")), "doc_id", "text",
-      tau = 0.5, hashFamily = "sha256"),
+      tau = 0.5, hashFamily = "sha256").out,
       nearDupGroupsOracle),
 
     // incremental clustering: CC over the even-doc edges first (the
@@ -1031,7 +1031,7 @@ private[graft] object DedupGates {
       val batch = d.where(pmod(col("doc_id"), lit(2)) === 1)
       val idxDir = tempTree("graft_band_index")
       graft.operators.Dedup.bandIndex(corpus, "doc_id", "text",
-        hashFamily = "sha256").write.mode("overwrite").parquet(idxDir)
+        hashFamily = "sha256").out.write.mode("overwrite").parquet(idxDir)
       graft.operators.Dedup.minhashLshIncrementalIndexed(
         s.read.parquet(idxDir), corpus, batch, "doc_id", "text",
         tau = 0.5, hashFamily = "sha256")
@@ -1112,7 +1112,7 @@ private[graft] object DedupGates {
     // this gate passes the finite cap explicitly, oracle-mirrored).
     Gate("q_dedup_simhash", (s, dir) => graft.operators.Dedup.simhashPairs(
       spread(s.read.parquet(s"$dir/documents.parquet")), "doc_id", "text",
-      maxHamming = 8, hashFamily = "sha256", hardCap = 100000),
+      maxHamming = 8, hashFamily = "sha256", hardCap = 100000).out,
       dedupSimhashOracle(Some(100000))),
 
     // SimHash salted tier losslessness proof: bucketCap=1 forces EVERY
@@ -1122,7 +1122,7 @@ private[graft] object DedupGates {
     Gate("q_dedup_simhash_salted", (s, dir) => graft.operators.Dedup.simhashPairs(
       spread(s.read.parquet(s"$dir/documents.parquet")), "doc_id", "text",
       maxHamming = 8, hashFamily = "sha256",
-      bucketCap = 1, hardCap = 1000000000, saltGroups = 8),
+      bucketCap = 1, hardCap = 1000000000, saltGroups = 8).out,
       dedupSimhashOracle(None)),
 
     // LSH band planner: every (bands, rows) factoring of numHashes scored

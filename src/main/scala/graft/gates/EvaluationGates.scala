@@ -26,7 +26,7 @@ private[graft] object EvaluationGates {
       .select(col("s_suppkey").as("id"), col("s_name").as("name"),
         col("s_nationkey").as("bk"))
     val scored = graft.operators.Linkage.linkTables(cust, supp, "id",
-      "name", "bk", theta = 1.0, bucketPairCap = 1000000L)
+      "name", "bk", theta = 1.0, bucketPairCap = 1000000L).out
     val labeled = cust
       .select(col("id").as("id_l"), substring(col("name"), -9, 9).as("__sfx"))
       .join(supp.select(col("id").as("id_r"),

@@ -363,7 +363,7 @@ private[graft] object GraphGates {
     // at both sf, so both flag values are load-bearing.
     Gate("q_bridge_edges", (s, dir) => {
       val (asg, edges) = matchGraph(s, dir)
-      graft.operators.Evaluation.bridgeEdges(asg, edges)
+      graft.operators.Evaluation.bridgeEdges(asg, edges).out
     },
       // bridges: per excluded edge, a recursive reachability walk over the
       // remaining intra edges; the edge is a bridge iff its far endpoint
@@ -404,7 +404,7 @@ private[graft] object GraphGates {
     // Tarjan pass with q_bridge_edges' operator.
     Gate("q_articulation", (s, dir) => {
       val (asg, edges) = matchGraph(s, dir)
-      graft.operators.Evaluation.articulationRecords(asg, edges)
+      graft.operators.Evaluation.articulationRecords(asg, edges).out
     },
       // articulation: per edge-incident record x, walk from its smallest
       // neighbor avoiding x; x cuts iff some neighbor stays unreached.

@@ -144,7 +144,7 @@ private[graft] object SimilarityGates {
     // candidate join, cosine, and top-k window all hash-checked.
     Gate("q_ann_lsh", (s, dir) => graft.operators.Similarity.lshTopK(
       s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
-      k = 3, dim = 64),
+      k = 3, dim = 64).out,
       annLshOracle),
 
     // LSH salted-tier losslessness proof: bucketCap=1 forces EVERY
@@ -153,7 +153,7 @@ private[graft] object SimilarityGates {
     // loses and invents nothing (ANN analogue of q_dedup_simhash_salted).
     Gate("q_ann_lsh_salted", (s, dir) => graft.operators.Similarity.lshTopK(
       s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
-      k = 3, dim = 64, bucketCap = 1, saltGroups = 8),
+      k = 3, dim = 64, bucketCap = 1, saltGroups = 8).out,
       // the salted-tier run must reproduce the PLAIN-tier oracle exactly
       // (the 2000-bucket cut in annLshOracle never bites at gate SFs, so
       // the oracle is the uncapped candidate set either way)
@@ -170,7 +170,7 @@ private[graft] object SimilarityGates {
     Gate("q_ann_multiprobe", (s, dir) => graft.operators.Similarity
       .lshMultiProbeTopK(
         s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
-        k = 3, dim = 64),
+        k = 3, dim = 64).out,
       // Multi-probe LSH oracle: integer band signatures re-derived with the
       // planes inlined, probe keys = sig plus every single-bit xor, then
       // the probe-index join / pair distinct / cosine / top-k window —
@@ -291,7 +291,7 @@ private[graft] object SimilarityGates {
       val emb = spread(s.read.parquet(s"$dir/embeddings.parquet"))
       graft.operators.Similarity.recallAtK(
         graft.operators.Similarity.lshTopK(emb, "vec_id", "embedding",
-          k = 3, dim = 64),
+          k = 3, dim = 64).out,
         graft.operators.Similarity.bruteForceTopK(emb, "vec_id", "embedding",
           k = 3))
     },

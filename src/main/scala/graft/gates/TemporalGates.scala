@@ -243,7 +243,7 @@ private[graft] object TemporalGates {
             (floor(col("value")).cast("long") + 1L) * 60000000L)
             .as("end_us"))
       graft.operators.Temporal.intervalCandidates(e, "id", "start_us",
-        "end_us", bucketWidth = 600000000L, partitionCols = Seq("user_id"))
+        "end_us", bucketWidth = 600000000L, partitionCols = Seq("user_id")).out
     },
       // interval join: brute-force θ-join over the same validity windows
       // (epoch_us == unix_micros, floor(value) cast exact in both engines)
@@ -275,7 +275,7 @@ private[graft] object TemporalGates {
           (col("c_custkey") * 69621L % 200000L).as("lon"))
       graft.operators.Spatial.gridCandidates(c, "id", "lat", "lon",
         radius = 30000L, cellSize = 50000L, partitionCols = Seq("nk"),
-        bucketCap = 60)
+        bucketCap = 60).out
     },
       // spatial grid blocking: tier-blind brute-force Chebyshev θ-join per
       // nation over the same integer-minted points (grid is lossless by

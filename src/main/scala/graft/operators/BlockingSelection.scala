@@ -172,13 +172,11 @@ object BlockingSelection {
     * out (never picked). Under the driver-finish cap ([[DriverFinish]])
     * the label-sized table is collected once and its pairs counted in a
     * hash set — only for ids whose JVM equality is SQL equality
-    * ([[DriverFinish.hashable]]); otherwise each step is one anti-join +
+    * ([[DriverFinish.collected]]); otherwise each step is one anti-join +
     * count job. */
   private def marginals(cov: DataFrame,
       cap: Long): Seq[String] => Map[String, Long] = {
-    val hashable = Seq("pa", "pb")
-      .forall(c => DriverFinish.hashable(cov.schema(c).dataType))
-    (if (hashable) DriverFinish.collected(cov, cap) else None) match {
+    DriverFinish.collected(cov, Seq("pa", "pb"), cap) match {
       case Some(rows) =>
         val byFam = rows.groupBy(_.getString(0)).view
           .mapValues(_.map(r => (r.get(1), r.get(2)))).toMap

@@ -137,7 +137,8 @@ object CenterClustering {
         drained = true
         alive = live
         iter += 1
-      } else if (order.isDefined && DriverFinish.fits(driverCap, liveCnt)) {
+      } else if (order.isDefined &&
+          DriverFinish.fitsHashed(canon, Seq("la", "lb"), driverCap, liveCnt)) {
         // frontier fits the bounded buffer → sequential finish, done
         asg = Frames.round(asg.union(sequentialFinish(live)))._1
         alive = live

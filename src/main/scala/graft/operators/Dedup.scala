@@ -46,9 +46,9 @@ object Dedup {
   }
 
   /** (id, distinct whitespace tokens, composite block key) base frame
-    * shared by [[ngramJaccardPairs]] and [[droppedNgramBuckets]]. Block
-    * keys are joined with U+0001 (a non-printable byte real key columns
-    * never contain) — a printable separator like ' ' would merge distinct
+    * of [[ngramJaccardPairs]] and [[containmentPairs]]. Block keys are
+    * joined with U+0001 (a non-printable byte real key columns never
+    * contain) — a printable separator like ' ' would merge distinct
     * blocks whenever a key value itself contains it, e.g. (lang='en',
     * source='a b') vs (lang='en a', source='b'). */
   private def ngramBase(docs: DataFrame, idCol: String, textCol: String,
@@ -58,13 +58,23 @@ object Dedup {
       distinctTokens(textCol).as("toks"),
       concat_ws("\u0001", blockCols.map(col): _*).as("bk"))
 
+  /** [[Tiers]] candidates of a shared block base, both sides' token sets
+    * joined on as (ia, ib, ta, tb); `dropped` is the (bk, n) blocks over
+    * `hardCap`. */
+  private def blockedTokenPairs(base: DataFrame, bucketCap: Int,
+      hardCap: Int, saltGroups: Int): Capped =
+    Capped(Tiers.pairs(base, Seq("bk"), "id", bucketCap, hardCap, saltGroups)
+      .select(col("id_a").as("ia"), col("id_b").as("ib"))
+      .join(base.select(col("id").as("ia"), col("toks").as("ta")), "ia")
+      .join(base.select(col("id").as("ib"), col("toks").as("tb")), "ib"),
+      Tiers.overCap(base, Seq("bk"), hardCap))
+
   /** Token-set Jaccard >= tau over pairs blocked by `blockCols` — quadratic
     * PER BLOCK by construction, so it carries the three-tier policy of
     * [[Tiers]] (a hot block — e.g. blocking on `lang` alone over a
     * monolingual crawl — must never land on one reducer). Dropping is
-    * OPT-IN (`hardCap` defaults to `Int.MaxValue`); a run that sets a
-    * finite cap must evaluate [[droppedNgramBuckets]] with the same
-    * arguments alongside.
+    * OPT-IN (`hardCap` defaults to `Int.MaxValue`); `dropped` lists the
+    * (bk, n) blocks a finite cap cut.
     *
     * Both tiers emit bare (ia, ib) candidates and share ONE verification
     * join back to the token sets (same shape as [[minhashLshPairs]] —
@@ -75,17 +85,13 @@ object Dedup {
     * disjoint — no dedup pass needed. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], tau: Double, bucketCap: Int = 500,
-      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
+      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): Capped =
     // base feeds the tier sizing, the join-back and both verification sides
-    val base = Frames.shared(ngramBase(docs, idCol, textCol, blockCols))
-    Tiers.pairs(base, Seq("bk"), "id", bucketCap, hardCap, saltGroups)
-      .select(col("id_a").as("ia"), col("id_b").as("ib"))
-      .join(base.select(col("id").as("ia"), col("toks").as("ta")), "ia")
-      .join(base.select(col("id").as("ib"), col("toks").as("tb")), "ib")
-      .select(col("ia"), col("ib"),
-        jaccardOf(col("ta"), col("tb")).as("jaccard"))
-      .where(col("jaccard") >= tau)
-  }
+    blockedTokenPairs(Frames.shared(ngramBase(docs, idCol, textCol, blockCols)),
+        bucketCap, hardCap, saltGroups)
+      .map(_.select(col("ia"), col("ib"),
+          jaccardOf(col("ta"), col("tb")).as("jaccard"))
+        .where(col("jaccard") >= tau))
 
   /** ASYMMETRIC containment dedup — catches the near-SUBSET duplicates
     * Jaccard structurally misses: a short document quoted whole inside a
@@ -101,33 +107,21 @@ object Dedup {
     * Same [[Tiers]] candidates and verification-join shape as
     * [[ngramJaccardPairs]]; zero-token documents are excluded up front —
     * containment of an empty set is undefined, and Spark's NaN-ordering
-    * would otherwise smuggle 0/0 pairs through the threshold. A finite `hardCap` requires evaluating
-    * [[droppedNgramBuckets]] alongside (same args), as everywhere. */
+    * would otherwise smuggle 0/0 pairs through the threshold (they count
+    * in no `dropped` block size either). */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], tau: Double, bucketCap: Int = 500,
-      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
+      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): Capped =
     // same 4-consumer shape as [[ngramJaccardPairs]]
-    val base = Frames.shared(ngramBase(docs, idCol, textCol, blockCols)
-      .where(size(col("toks")) > 0))
-    Tiers.pairs(base, Seq("bk"), "id", bucketCap, hardCap, saltGroups)
-      .select(col("id_a").as("ia"), col("id_b").as("ib"))
-      .join(base.select(col("id").as("ia"), col("toks").as("ta")), "ia")
-      .join(base.select(col("id").as("ib"), col("toks").as("tb")), "ib")
-      .select(col("ia"), col("ib"),
-        (size(array_intersect(col("ta"), col("tb"))).cast("double") /
-          size(col("ta")).cast("double")).as("containment_a"),
-        (size(array_intersect(col("ta"), col("tb"))).cast("double") /
-          size(col("tb")).cast("double")).as("containment_b"),
-        jaccardOf(col("ta"), col("tb")).as("jaccard"))
-      .where(greatest(col("containment_a"), col("containment_b")) >= tau)
-  }
-
-  /** Blocks excluded by `hardCap` with their sizes — the non-silent record
-    * of what [[ngramJaccardPairs]] dropped (same contract as
-    * [[Linkage.droppedBuckets]] / [[droppedMinhashBuckets]]). */
-  def droppedNgramBuckets(docs: DataFrame, idCol: String, textCol: String,
-      blockCols: Seq[String], hardCap: Int): DataFrame =
-    Tiers.overCap(ngramBase(docs, idCol, textCol, blockCols), Seq("bk"), hardCap)
+    blockedTokenPairs(Frames.shared(ngramBase(docs, idCol, textCol, blockCols)
+        .where(size(col("toks")) > 0)), bucketCap, hardCap, saltGroups)
+      .map(_.select(col("ia"), col("ib"),
+          (size(array_intersect(col("ta"), col("tb"))).cast("double") /
+            size(col("ta")).cast("double")).as("containment_a"),
+          (size(array_intersect(col("ta"), col("tb"))).cast("double") /
+            size(col("tb")).cast("double")).as("containment_b"),
+          jaccardOf(col("ta"), col("tb")).as("jaccard"))
+        .where(greatest(col("containment_a"), col("containment_b")) >= tau))
 
   /** (id, key) band rows from an already-computed `(id, sig)` frame —
     * the banding step alone, shared by the classic k-lane signature
@@ -149,10 +143,12 @@ object Dedup {
         explode(array((0 until bands).map(bnd => col(s"band$bnd")): _*)).as("key"))
   }
 
-  /** (id, band key) rows for the MinHash-LSH banding — shared by
-    * [[minhashLshPairs]] and [[droppedMinhashBuckets]]. */
-  private def minhashBanded(docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bands: Int, hashFamily: String): DataFrame = {
+  /** (id, band key) rows for the MinHash-LSH banding of
+    * [[minhashLshPairs]], [[bandIndex]] and the incremental paths (and
+    * CappedSpec's reference for the drop record). */
+  private[operators] def minhashBanded(docs: DataFrame, idCol: String,
+      textCol: String, numHashes: Int, bands: Int,
+      hashFamily: String): DataFrame = {
     val toksOf = distinctTokens(textCol)
     val base = docs.select(col(idCol).as("id"), toksOf.as("toks"))
     // token-less docs carry no shingle signal: exact dedup owns them
@@ -178,11 +174,11 @@ object Dedup {
   }
 
   /** Shared tail of every banded-LSH dedup path: cap hot buckets
-    * (observably — the caller exposes its own dropped-buckets companion),
+    * (observably — `dropped` is the (key, n) buckets over the cap),
     * self-join under the cap, dedup candidate pairs, then verify with
     * exact token-set Jaccard ≥ tau. */
   private def verifiedJaccardPairs(base: DataFrame, banded: DataFrame,
-      bucketCap: Int, tau: Double): DataFrame = {
+      bucketCap: Int, tau: Double): Capped = {
     // `banded` feeds the sizing aggregate AND the join-back
     val bandedM = Frames.shared(banded)
     // `base` feeds BOTH sides of the verification join
@@ -193,22 +189,14 @@ object Dedup {
       .join(good.select(col("key"), col("id").as("ib")), "key")
       .where(col("ia") < col("ib"))
       .select(col("ia"), col("ib")).distinct()
-    cand
+    Capped(cand
       .join(baseM.select(col("id").as("ia"), col("toks").as("ta")), "ia")
       .join(baseM.select(col("id").as("ib"), col("toks").as("tb")), "ib")
       .select(col("ia"), col("ib"),
         jaccardOf(col("ta"), col("tb")).as("jaccard"))
-      .where(col("jaccard") >= tau)
+      .where(col("jaccard") >= tau),
+      Tiers.overCap(bandedM, Seq("key"), bucketCap))
   }
-
-  /** Band buckets excluded by `bucketCap` with their sizes — the
-    * non-silent record of what the LSH banding dropped (mirrors
-    * Linkage.droppedBuckets: a cap must be observable, never silent). */
-  def droppedMinhashBuckets(docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 16, bands: Int = 4, bucketCap: Int = 500,
-      hashFamily: String = "xxhash64"): DataFrame =
-    Tiers.overCap(minhashBanded(docs, idCol, textCol, numHashes, bands,
-      hashFamily), Seq("key"), bucketCap)
 
   /** MinHash-LSH near-dup candidates over token 2-shingles, verified with
     * exact token-set Jaccard ≥ tau. Candidate generation is the banded
@@ -216,8 +204,8 @@ object Dedup {
     * Band buckets larger than `bucketCap` are dropped ([[Tiers]] cold and
     * dropped tiers: low-information bands on repetitive corpora would
     * otherwise re-quadratize the join, and 4-row bands keep the
-    * false-candidate rate at jaccard^4; drops are observable via
-    * [[droppedMinhashBuckets]]).
+    * false-candidate rate at jaccard^4; [[nearDupGroups]] and
+    * [[bandIndex]] return the dropped buckets of this banding).
     *
     * The whole k-hash signature is ONE fused codegen expression per
     * document ([[graft.functions.MinHashSig]]) — no shingle explode, no
@@ -230,13 +218,18 @@ object Dedup {
     * driver gate hash-checks this operator against DuckDB. */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       tau: Double, numHashes: Int = 16, bands: Int = 4,
-      bucketCap: Int = 500, hashFamily: String = "xxhash64"): DataFrame = {
-    val toksOf = distinctTokens(textCol)
-    val base = docs.select(col(idCol).as("id"), toksOf.as("toks"))
-    verifiedJaccardPairs(base,
+      bucketCap: Int = 500, hashFamily: String = "xxhash64"): DataFrame =
+    minhashCapped(docs, idCol, textCol, tau, numHashes, bands, bucketCap,
+      hashFamily).out
+
+  /** [[minhashLshPairs]] with its dropped (key, n) band buckets. */
+  private def minhashCapped(docs: DataFrame, idCol: String, textCol: String,
+      tau: Double, numHashes: Int, bands: Int, bucketCap: Int,
+      hashFamily: String): Capped =
+    verifiedJaccardPairs(
+      docs.select(col(idCol).as("id"), distinctTokens(textCol).as("toks")),
       minhashBanded(docs, idCol, textCol, numHashes, bands, hashFamily),
       bucketCap, tau)
-  }
 
   /** MinHash-LSH near-dup candidates from the ONE-PERMUTATION signature —
     * identical contract and tail to [[minhashLshPairs]] (banded equi-join,
@@ -245,30 +238,19 @@ object Dedup {
     * [[graft.functions.minhash_sig_oph]]) instead of numHashes times.
     * This is the fingerprint-bound corpus's scale path: the per-document
     * cost of the signature scan drops k-fold while banding, capping, and
-    * verification stay byte-for-byte the same machinery. Drops observable
-    * via [[droppedOphBuckets]]. */
+    * verification stay byte-for-byte the same machinery, and `dropped`
+    * lists the (key, n) band buckets over the cap. */
   def minhashOphLshPairs(docs: DataFrame, idCol: String, textCol: String,
       tau: Double, bands: Int = 4, bucketCap: Int = 500,
-      hashFamily: String = "xxhash64"): DataFrame = {
-    val toksOf = distinctTokens(textCol)
-    val base = docs.select(col(idCol).as("id"), toksOf.as("toks"))
-    verifiedJaccardPairs(base,
+      hashFamily: String = "xxhash64"): Capped =
+    verifiedJaccardPairs(
+      docs.select(col(idCol).as("id"), distinctTokens(textCol).as("toks")),
       ophBanded(docs, idCol, textCol, bands, hashFamily), bucketCap, tau)
-  }
-
-  /** Band buckets excluded by `bucketCap` in [[minhashOphLshPairs]] with
-    * their sizes — the same never-silent cap contract as
-    * [[droppedMinhashBuckets]]. */
-  def droppedOphBuckets(docs: DataFrame, idCol: String, textCol: String,
-      bands: Int = 4, bucketCap: Int = 500,
-      hashFamily: String = "xxhash64"): DataFrame =
-    Tiers.overCap(ophBanded(docs, idCol, textCol, bands, hashFamily),
-      Seq("key"), bucketCap)
 
   /** The persistable `(key, id)` MinHash band index of a corpus, with the
-    * `bucketCap` cut already applied (over-cap buckets excluded; their
-    * record is [[droppedMinhashBuckets]] with the same arguments). This is
-    * the ONE O(corpus) pass of the incremental-dedup shape: build it once,
+    * `bucketCap` cut already applied (over-cap buckets excluded; `dropped`
+    * lists them with their sizes). This is the ONE O(corpus) pass of the
+    * incremental-dedup shape: build it once,
     * write it bucketed/partitioned by `key`, and every incremental batch
     * joins against it via [[minhashLshIncrementalIndexed]] without ever
     * re-banding the corpus.
@@ -285,13 +267,14 @@ object Dedup {
     * two independently-CAPPED indexes silently under-drops. */
   def bandIndex(corpus: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 16, bands: Int = 4, bucketCap: Int = 500,
-      hashFamily: String = "xxhash64"): DataFrame =
-    Tiers.underCap(
-      // the banded frame feeds the sizing and the join-back
-      Frames.shared(
-        minhashBanded(corpus, idCol, textCol, numHashes, bands, hashFamily)),
-      Seq("key"), bucketCap)
-      .select(col("key"), col("id"))
+      hashFamily: String = "xxhash64"): Capped = {
+    // the banded frame feeds the sizing and the join-back
+    val banded = Frames.shared(
+      minhashBanded(corpus, idCol, textCol, numHashes, bands, hashFamily))
+    Capped(Tiers.underCap(banded, Seq("key"), bucketCap)
+      .select(col("key"), col("id")),
+      Tiers.overCap(banded, Seq("key"), bucketCap))
+  }
 
   /** Incremental near-dup detection against a PREBUILT corpus band index
     * (from [[bandIndex]], typically read back from its persisted form):
@@ -338,7 +321,8 @@ object Dedup {
       bands: Int = 4, bucketCap: Int = 500,
       hashFamily: String = "xxhash64"): DataFrame =
     minhashLshIncrementalIndexed(
-      bandIndex(corpus, idCol, textCol, numHashes, bands, bucketCap, hashFamily),
+      bandIndex(corpus, idCol, textCol, numHashes, bands, bucketCap,
+        hashFamily).out,
       corpus, batch, idCol, textCol, tau, numHashes, bands, hashFamily)
 
   /** Pinned-order power by repeated left-fold multiplication — the
@@ -561,18 +545,19 @@ object Dedup {
     * to `canonical_id` = min doc id of its cluster (itself when it has no
     * near-dup). Keep rows where `id == canonical_id`; at 100 TB both
     * pieces keep their audited shapes (banded join + O(log n)
-    * large-star/small-star rounds). */
+    * large-star/small-star rounds). `dropped` is the banding's (key, n)
+    * buckets over `bucketCap`, read from the same materialized banding. */
   def nearDupGroups(docs: DataFrame, idCol: String, textCol: String,
       tau: Double, numHashes: Int = 16, bands: Int = 4,
-      bucketCap: Int = 500, hashFamily: String = "xxhash64"): DataFrame = {
-    val pairs = minhashLshPairs(docs, idCol, textCol, tau, numHashes, bands,
-      bucketCap, hashFamily)
-    val comp = ConnectedComponents.run(pairs.select(col("ia"), col("ib")))
-    docs.select(col(idCol).as("id"))
-      .join(comp, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("id")).as("canonical_id"))
-  }
+      bucketCap: Int = 500, hashFamily: String = "xxhash64"): Capped =
+    minhashCapped(docs, idCol, textCol, tau, numHashes, bands, bucketCap,
+        hashFamily).map { pairs =>
+      val comp = ConnectedComponents.run(pairs.select(col("ia"), col("ib")))
+      docs.select(col(idCol).as("id"))
+        .join(comp, Seq("id"), "left")
+        .select(col("id"),
+          coalesce(col("component"), col("id")).as("canonical_id"))
+    }
 
   /** (id, sig) per tokenful doc — the signature column both SimHash tiers
     * verify against. Token-less docs carry no signal and are excluded
@@ -587,8 +572,8 @@ object Dedup {
       .select(col(idCol).as("id"), sigExpr.as("sig"))
   }
 
-  /** (id, sig, band key) rows for the SimHash banding — shared by
-    * [[simhashPairs]] and [[droppedSimhashBuckets]]. */
+  /** (id, sig, band key) rows for the SimHash banding of
+    * [[simhashPairs]]. */
   private def simhashBanded(docs: DataFrame, idCol: String, textCol: String,
       hashFamily: String): DataFrame = {
     val bandBits = if (hashFamily == "sha256") 15 else 16
@@ -600,14 +585,6 @@ object Dedup {
             shiftrightunsigned(col("sig"), bnd * bandBits).bitwiseAND(lit(mask)))): _*))
           .as("key"))
   }
-
-  /** SimHash band buckets excluded by `hardCap` with their sizes — the
-    * non-silent record of what the banding dropped (same observability
-    * contract as [[droppedMinhashBuckets]] / Linkage.droppedBuckets). */
-  def droppedSimhashBuckets(docs: DataFrame, idCol: String, textCol: String,
-      hardCap: Int = Int.MaxValue, hashFamily: String = "fnv"): DataFrame =
-    Tiers.overCap(simhashBanded(docs, idCol, textCol, hashFamily),
-      Seq("key"), hardCap)
 
   /** SimHash near-dup pairs: banded signatures (4 bands — two near-dup
     * docs within Hamming distance 3 share ≥1 identical band), then exact
@@ -632,27 +609,26 @@ object Dedup {
     * which forces every bucket through the grid and must equal the
     * uncapped oracle).
     *
-    * Dropping is OPT-IN (`hardCap` defaults to `Int.MaxValue`). A run
-    * that sets `hardCap` must evaluate [[droppedSimhashBuckets]] with the
-    * same cap alongside this result — this frame alone carries no drop
-    * signal. At 100 TB on a
+    * Dropping is OPT-IN (`hardCap` defaults to `Int.MaxValue`); `dropped`
+    * lists the (key, n) band buckets a finite cap cut. At 100 TB on a
     * boilerplate-heavy crawl a finite cap (e.g. 100k) is the sane
     * setting: a band bucket that big carries no discriminative signal
     * and its salted grid still costs |bucket|². */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, hashFamily: String = "fnv",
       bucketCap: Int = 500, hardCap: Int = Int.MaxValue,
-      saltGroups: Int = 16): DataFrame = {
+      saltGroups: Int = 16): Capped = {
     // the banded frame feeds the sizing aggregate and the join-back
     val banded = Frames.shared(simhashBanded(docs, idCol, textCol, hashFamily))
     // a pair can surface from several bands (and from different tiers for
     // different bands) — hamming is identical each time, so distinct is exact
-    Tiers.pairs(banded, Seq("key"), "id", bucketCap, hardCap, saltGroups,
-        payload = Seq("sig"))
+    Capped(Tiers.pairs(banded, Seq("key"), "id", bucketCap, hardCap,
+        saltGroups, payload = Seq("sig"))
       .select(col("id_a").as("ia"), col("id_b").as("ib"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .distinct()
-      .where(col("hamming") <= maxHamming)
+      .where(col("hamming") <= maxHamming),
+      Tiers.overCap(banded, Seq("key"), hardCap))
   }
 
   /** Exact cosine near-dup pairs over an embedding column, blocked by

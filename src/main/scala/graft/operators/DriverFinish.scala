@@ -17,17 +17,19 @@ import org.apache.spark.sql.types._
   *  - Gate: [[cap]] reads a row cap from `graft.<key>` or
   *    `spark.graft.<key>` (default 1M rows; 0 disables the finish). An
   *    operator finishes on the driver only when the rows it would
-  *    collect number at most the cap ([[fits]], [[collected]]), so the
-  *    collect is bounded by configuration, never by the data.
+  *    collect number at most the cap ([[fits]], [[fitsHashed]],
+  *    [[collected]]), so the collect is bounded by configuration, never
+  *    by the data.
   *  - Order: a replay that sorts compares values as Spark SQL's ORDER BY
   *    does ([[ordering]], [[rowOrdering]]) — strings by code point (the
   *    UTF-8 byte order), doubles with -0.0 == 0.0 and NaN last, nulls
   *    first ascending and last descending — so its tie-breaks are the
   *    rounds' window tie-breaks. A type without a comparator here keeps
   *    the operator on its distributed rounds.
-  *  - Equality: a replay that hashes collected values does so only for
-  *    types whose JVM equality is SQL equality ([[hashable]]); other
-  *    types keep the operator on its distributed rounds too.
+  *  - Equality: a replay that hashes collected values passes its gate
+  *    through [[fitsHashed]] or [[collected]], which fire only for types
+  *    whose JVM equality is SQL equality ([[hashable]]); other types keep
+  *    the operator on its distributed rounds too.
   *  - Hand-back: the driver's rows return as a DataFrame ([[frame]]) in
   *    the caller's schema.
   *
@@ -55,9 +57,16 @@ private[operators] object DriverFinish {
     * count. */
   def fits(cap: Long, rows: => Long): Boolean = cap > 0 && rows <= cap
 
-  /** The bounded collect: `df`'s rows when they [[fits]] the cap. */
-  def collected(df: DataFrame, cap: Long): Option[Array[Row]] =
-    if (fits(cap, df.count())) Some(df.collect()) else None
+  /** The gate of a replay that hashes the values of `df`'s columns
+    * `hashed`: [[fits]], and every such column's type is [[hashable]]. */
+  def fitsHashed(df: DataFrame, hashed: Seq[String], cap: Long,
+      rows: => Long): Boolean =
+    hashed.forall(c => hashable(df.schema(c).dataType)) && fits(cap, rows)
+
+  /** The bounded collect: `df`'s rows when they pass [[fitsHashed]]. */
+  def collected(df: DataFrame, hashed: Seq[String],
+      cap: Long): Option[Array[Row]] =
+    if (fitsHashed(df, hashed, cap, df.count())) Some(df.collect()) else None
 
   /** Spark SQL's ascending order over one atomic type's values, nulls
     * first; None for types no replay sorts. */
@@ -85,7 +94,7 @@ private[operators] object DriverFinish {
     * equality, so a replay may hash them: integral, string, boolean, date
     * and timestamp values. Binary values are arrays compared by reference
     * and a NaN double never equals itself, while SQL joins match both. */
-  def hashable(dt: DataType): Boolean = dt match {
+  private def hashable(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType | StringType |
         BooleanType | DateType | TimestampType | TimestampNTZType => true
     case _ => false

@@ -779,9 +779,9 @@ object Evaluation {
     * per-bucket work bounded + observable, never corpus-global).
     * Clusters with more than `maxClusterEdges` edges emit nothing here
     * — the group reader stops buffering at the cap, so a monster
-    * cluster costs O(cap) memory, not O(cluster) — and are listed with
-    * exact sizes by [[droppedBridgeClusters]] (same contract as every
-    * capped pair generator in the repo). At real cluster sizes (entity
+    * cluster costs O(cap) memory, not O(cluster) — and `dropped` lists
+    * them as (clusterCol, n_edges) with exact sizes (same contract as
+    * every capped pair generator in the repo). At real cluster sizes (entity
     * clusters are people/pages, not the corpus) the default cap is
     * effectively "never".
     *
@@ -791,7 +791,7 @@ object Evaluation {
   def bridgeEdges(assignment: DataFrame, edges: DataFrame,
       idCol: String = "id", clusterCol: String = "cluster_id",
       aCol: String = "url_a", bCol: String = "url_b",
-      maxClusterEdges: Int = 1 << 20): DataFrame = {
+      maxClusterEdges: Int = 1 << 20): Capped = {
     val intra = intraClusterEdges(assignment, edges, idCol, clusterCol,
       aCol, bCol)
     val outSchema = StructType(Seq(
@@ -799,7 +799,7 @@ object Evaluation {
       intra.schema("__gu").copy(name = aCol),
       intra.schema("__gv").copy(name = bCol),
       StructField("is_bridge", BooleanType, nullable = false)))
-    intra
+    Capped(intra
       .groupByKey { r: Row =>
         val c = r.get(2); if (c == null) "" else c.toString
       }(Encoders.STRING)
@@ -836,18 +836,16 @@ object Evaluation {
             Row(r.get(2), r.get(0), r.get(1), bridge(k))
           }
         }
-      }(Encoders.row(outSchema))
+      }(Encoders.row(outSchema)),
+      overCapClusters(intra, clusterCol, maxClusterEdges))
   }
 
-  /** Companion of [[bridgeEdges]]: the clusters its cap excluded, with
-    * exact intra-edge counts — one map-side-combinable sizing groupBy,
-    * nothing buffered. Empty ⇔ the bridge frame covered every cluster. */
-  def droppedBridgeClusters(assignment: DataFrame, edges: DataFrame,
-      idCol: String = "id", clusterCol: String = "cluster_id",
-      aCol: String = "url_a", bCol: String = "url_b",
-      maxClusterEdges: Int = 1 << 20): DataFrame =
-    intraClusterEdges(assignment, edges, idCol, clusterCol, aCol, bCol)
-      .groupBy(col("__gc")).agg(count(lit(1)).as("n_edges"))
+  /** (clusterCol, n_edges) of the clusters over `maxClusterEdges` — the
+    * ones the per-cluster passes skip, sized exactly by one map-side-
+    * combinable groupBy, nothing buffered. */
+  private def overCapClusters(intra: DataFrame, clusterCol: String,
+      maxClusterEdges: Int): DataFrame =
+    intra.groupBy(col("__gc")).agg(count(lit(1)).as("n_edges"))
       .where(col("n_edges") > maxClusterEdges)
       .select(col("__gc").as(clusterCol), col("n_edges"))
 
@@ -940,21 +938,21 @@ object Evaluation {
     * Same distribution contract as [[bridgeEdges]]: per-cluster
     * iterative Tarjan (ONE shared lowlink pass computes both metrics),
     * groups buffered only to `maxClusterEdges` (+1 detection row),
-    * oversized clusters emit nothing here and are listed by
-    * [[droppedBridgeClusters]]. Output: one row per record incident to
+    * oversized clusters emit nothing here and are listed in `dropped`.
+    * Output: one row per record incident to
     * ≥ 1 intra-cluster edge — an edgeless record can't cut anything —
     * with its flag: (clusterCol, idCol, is_articulation). */
   def articulationRecords(assignment: DataFrame, edges: DataFrame,
       idCol: String = "id", clusterCol: String = "cluster_id",
       aCol: String = "url_a", bCol: String = "url_b",
-      maxClusterEdges: Int = 1 << 20): DataFrame = {
+      maxClusterEdges: Int = 1 << 20): Capped = {
     val intra = intraClusterEdges(assignment, edges, idCol, clusterCol,
       aCol, bCol)
     val outSchema = StructType(Seq(
       intra.schema("__gc").copy(name = clusterCol),
       intra.schema("__gu").copy(name = idCol),
       StructField("is_articulation", BooleanType, nullable = false)))
-    intra
+    Capped(intra
       .groupByKey { r: Row =>
         val c = r.get(2); if (c == null) "" else c.toString
       }(Encoders.STRING)
@@ -1002,7 +1000,8 @@ object Evaluation {
             }
           }
         }
-      }(Encoders.row(outSchema))
+      }(Encoders.row(outSchema)),
+      overCapClusters(intra, clusterCol, maxClusterEdges))
   }
 
   /** Per-cluster triangle census over the verified match graph — the
@@ -1150,10 +1149,10 @@ object Evaluation {
     // function of the edge set (the h-index fixpoint IS coreness), so the
     // classic O(E) peel over the collected bidirected edge list computes
     // the same values as every distributed round (2 shuffles + a window +
-    // an action each). Id types only need hash/equals.
+    // an action each). Ids are hashed, so only hashable id types finish.
     val spark = assignment.sparkSession
     val coreCap = DriverFinish.cap(spark, "core.driverFinishEdges")
-    val finished: Option[DataFrame] = DriverFinish.collected(b, coreCap).map { rows =>
+    val finished = DriverFinish.collected(b, Seq("__cu", "__cv"), coreCap).map { rows =>
       val idx = new java.util.HashMap[Any, Integer]()
       rows.foreach { r =>
         idx.computeIfAbsent(r.get(0), _ => Integer.valueOf(idx.size))
@@ -1326,9 +1325,10 @@ object Evaluation {
     // only on the current edge set, never order), so an in-process peel
     // over adjacency sets of the collected intra-cluster edges computes
     // the same survivors and final supports as O(rounds) wedge-join
-    // shuffles. Id types only need hash/equals.
+    // shuffles. Ids are hashed, so only hashable id types finish.
     val spark = assignment.sparkSession
-    if (DriverFinish.fits(DriverFinish.cap(spark, "truss.driverFinishEdges"), prev)) {
+    if (DriverFinish.fitsHashed(cur, Seq("__gu", "__gv"),
+        DriverFinish.cap(spark, "truss.driverFinishEdges"), prev)) {
       val rows = cur.collect() // (__gu, __gv, __gc)
       val live = new java.util.HashMap[(Any, Any), Any]() // edge -> cluster
       val adj = new java.util.HashMap[Any, java.util.HashSet[Any]]()

@@ -456,8 +456,7 @@ object Linkage {
     * run out. Where [[candidatePairs]]' tier policy trades recall for
     * boundedness on ultra-hot keys, dynamic blocking keeps recall
     * whenever a finer signal exists, and only the records whose FULL key
-    * chain is still over `cap` fall out (observably —
-    * [[droppedDynamicRecords]]).
+    * chain is still over `cap` fall out (observably — `dropped`).
     *
     * Because depth-d keys are prefixes, all members of an over-cap block
     * share every ancestor key, so the whole block descends together —
@@ -469,9 +468,11 @@ object Linkage {
     *
     * @param parts ordered key parts, coarse → fine (e.g. segment, nation,
     *              name prefix). Depth-d key = parts(0..d) joined by ':'.
-    * @return (id, block_key, depth) for every record that settles. */
+    * @return `out`: (id, block_key, depth) for every record that settles;
+    *         `dropped`: (id, block_key, block_n) for every record whose
+    *         full key chain is still over `cap`. */
   def dynamicBlockKeys(records: DataFrame, idCol: String,
-      parts: Seq[Column], cap: Long): DataFrame = {
+      parts: Seq[Column], cap: Long): Capped = {
     require(parts.nonEmpty, "dynamicBlockKeys needs at least one key part")
     val keyed = records.select(
       col(idCol) +: parts.indices.map(d =>
@@ -486,24 +487,18 @@ object Linkage {
     val depth = parts.indices.reverse.foldLeft(lit(-1)) { (acc, d) =>
       when(col(s"__n$d") <= cap, lit(d)).otherwise(acc)
     }
-    sized.withColumn("__d", depth)
+    // a block over `cap` at the finest depth is over it at every depth
+    val last = parts.size - 1
+    Capped(sized.withColumn("__d", depth)
       .where(col("__d") >= 0)
       .withColumn("block_key",
         parts.indices.foldLeft(lit(null).cast("string")) { (acc, d) =>
           when(col("__d") === d, col(s"__k$d")).otherwise(acc)
         })
-      .select(col(idCol), col("block_key"), col("__d").as("depth"))
-  }
-
-  /** Records whose FULL dynamic key chain is still over `cap` — the
-    * non-silent record of what [[dynamicBlockKeys]] excluded. */
-  def droppedDynamicRecords(records: DataFrame, idCol: String,
-      parts: Seq[Column], cap: Long): DataFrame = {
-    val full = records.select(col(idCol),
-      concat_ws(":", parts.map(_.cast("string")): _*).as("__kf"))
-    val sized = full.groupBy(col("__kf")).agg(count(lit(1)).as("block_n"))
-    full.join(sized.where(col("block_n") > cap), "__kf")
-      .select(col(idCol), col("__kf").as("block_key"), col("block_n"))
+      .select(col(idCol), col("block_key"), col("__d").as("depth")),
+      sized.where(col(s"__n$last") > cap)
+        .select(col(idCol), col(s"__k$last").as("block_key"),
+          col(s"__n$last").as("block_n")))
   }
 
   /** Two-corpus candidate pairs: records of LEFT and RIGHT sharing a
@@ -511,36 +506,24 @@ object Linkage {
     * tables, e.g. crawl vs registry; [[candidatePairs]] is the self-join
     * special case). Keys frames are (id, key) like [[candidateKeys]]'s
     * output. Skew policy: the per-key pair product `n_l · n_r` is capped at
-    * `bucketPairCap` — an over-cap key is dropped, never silently
-    * ([[droppedCrossBuckets]]); under the cap, AQE skew-join splitting
+    * `bucketPairCap` — an over-cap key is dropped, never silently (`dropped`
+    * lists it as (key, n_l, n_r)); under the cap, AQE skew-join splitting
     * handles residual imbalance (a two-sided join has no quadratic
     * self-blowup — each key's cost is the product, which the cap bounds).
-    * Output: (id_l, id_r, key), distinct on (id_l, id_r). */
+    * Output: (id_l, id_r), distinct. */
   def crossCandidatePairs(leftKeys: DataFrame, rightKeys: DataFrame,
-      bucketPairCap: Long = 1000000L): DataFrame = {
-    val nl = leftKeys.groupBy(col("key")).agg(count(lit(1)).as("__nl"))
-    val nr = rightKeys.groupBy(col("key")).agg(count(lit(1)).as("__nr"))
-    val good = nl.join(nr, "key")
-      .where(col("__nl") * col("__nr") <= bucketPairCap)
+      bucketPairCap: Long = 1000000L): Capped = {
+    val sized = leftKeys.groupBy(col("key")).agg(count(lit(1)).as("n_l"))
+      .join(rightKeys.groupBy(col("key")).agg(count(lit(1)).as("n_r")), "key")
+    val good = sized.where(col("n_l") * col("n_r") <= bucketPairCap)
       .select(col("key"))
-    leftKeys.toDF("id_l", "key").join(good, "key")
+    Capped(leftKeys.toDF("id_l", "key").join(good, "key")
       .join(rightKeys.toDF("id_r", "key"), "key")
       .select(col("id_l"), col("id_r"))
-      .distinct()
+      .distinct(),
+      sized.where(col("n_l") * col("n_r") > bucketPairCap))
   }
 
-  /** Keys whose cross pair product exceeds the cap, with both sizes —
-    * the non-silent record of what two-corpus blocking dropped. */
-  def droppedCrossBuckets(leftKeys: DataFrame, rightKeys: DataFrame,
-      bucketPairCap: Long = 1000000L): DataFrame =
-    leftKeys.groupBy(col("key")).agg(count(lit(1)).as("n_l"))
-      .join(rightKeys.groupBy(col("key")).agg(count(lit(1)).as("n_r")), "key")
-      .where(col("n_l") * col("n_r") > bucketPairCap)
-
-  /** Two-corpus record linkage end-to-end: blocking join on `keyCol` +
-    * composite JW+Dice scoring of `nameCol`, thresholded at `theta`.
-    * Both inputs carry (idCol, nameCol, keyCol); ids need only be unique
-    * within their own table. Output: (id_l, id_r, jw, dice, score ≥ θ). */
   /** TF-IDF-weighted cosine scoring of candidate pairs (Cohen, Ravikumar
     * & Fienberg 2003's baseline hybrid scorer): tokens weighted by
     * tf · (N+1)/(df+1) — the same log-free RATIONAL idf as
@@ -566,15 +549,7 @@ object Linkage {
     * joins. `pairs` carries (iaCol, ibCol); output (iaCol, ibCol, cosine). */
   def tfidfCosinePairs(docs: DataFrame, idCol: String, textCol: String,
       pairs: DataFrame, iaCol: String = "ia", ibCol: String = "ib"): DataFrame = {
-    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val tf = docs.select(col(idCol).as("id"),
-        explode(TextAnalysis.tokens(col(textCol))).as("term"))
-      .groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val weighted = tf.join(dfreq, "term").crossJoin(broadcast(nDocs))
-      .select(col("id"), col("term"),
-        ((col("tf") * (col("n_docs") + 1)).cast("double") /
-          (col("df") + 1).cast("double")).as("w"))
+    val weighted = TextAnalysis.tfidfWeights(docs, idCol, textCol)
     val vecs = weighted.groupBy(col("id"))
       .agg(sort_array(collect_list(struct(col("term"), col("w")))).as("v"))
       .select(col("id"), col("v"),
@@ -618,15 +593,7 @@ object Linkage {
       pairs: DataFrame, theta: Double, iaCol: String = "ia",
       ibCol: String = "ib"): DataFrame = {
     require(theta > 0.0 && theta <= 1.0, s"theta must be in (0,1], got $theta")
-    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val tf = docs.select(col(idCol).as("id"),
-        explode(TextAnalysis.tokens(col(textCol))).as("term"))
-      .groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val weighted = tf.join(dfreq, "term").crossJoin(broadcast(nDocs))
-      .select(col("id"), col("term"),
-        ((col("tf") * (col("n_docs") + 1)).cast("double") /
-          (col("df") + 1).cast("double")).as("w"))
+    val weighted = TextAnalysis.tfidfWeights(docs, idCol, textCol)
     // norm folded in the same term-sorted order as tfidfCosinePairs
     val norms = weighted
       .groupBy(col("id"))
@@ -656,20 +623,25 @@ object Linkage {
         lit(0.0), (acc, s) => acc + s.getField("__c")).as("soft_tfidf"))
   }
 
+  /** Two-corpus record linkage end-to-end: blocking join on `keyCol` +
+    * composite JW+Dice scoring of `nameCol`, thresholded at `theta`.
+    * Both inputs carry (idCol, nameCol, keyCol); ids need only be unique
+    * within their own table. Output: (id_l, id_r, jw, dice, score ≥ θ);
+    * `dropped` is [[crossCandidatePairs]]' record of over-cap keys. */
   def linkTables(left: DataFrame, right: DataFrame, idCol: String,
       nameCol: String, keyCol: String, theta: Double,
-      bucketPairCap: Long = 1000000L): DataFrame = {
+      bucketPairCap: Long = 1000000L): Capped = {
     val lk = left.select(col(idCol).as("id"), col(keyCol).as("key"))
     val rk = right.select(col(idCol).as("id"), col(keyCol).as("key"))
-    val pairs = crossCandidatePairs(lk, rk, bucketPairCap)
     val ln = left.select(col(idCol).as("id_l"), col(nameCol).as("__name_l"))
     val rn = right.select(col(idCol).as("id_r"), col(nameCol).as("__name_r"))
-    pairs.join(ln, "id_l").join(rn, "id_r")
-      .select(col("id_l"), col("id_r"),
-        jaro_winkler_sim(col("__name_l"), col("__name_r")).as("jw"),
-        sorensen_dice_sim(col("__name_l"), col("__name_r")).as("dice"))
-      .withColumn("score", col("jw") + col("dice"))
-      .where(col("score") >= theta)
+    crossCandidatePairs(lk, rk, bucketPairCap).map(
+      _.join(ln, "id_l").join(rn, "id_r")
+        .select(col("id_l"), col("id_r"),
+          jaro_winkler_sim(col("__name_l"), col("__name_r")).as("jw"),
+          sorensen_dice_sim(col("__name_l"), col("__name_r")).as("dice"))
+        .withColumn("score", col("jw") + col("dice"))
+        .where(col("score") >= theta))
   }
 
   /** Symmetric best match over scored two-corpus pairs: keep (l, r) iff r
@@ -770,7 +742,8 @@ object Linkage {
     while (!drained && !finished && iter < maxIter) {
       val n = cur.count() // doubles as the drain probe and the cap check
       if (n == 0L) drained = true
-      else if (order.isDefined && DriverFinish.fits(driverCap, n)) {
+      else if (order.isDefined &&
+          DriverFinish.fitsHashed(cur, Seq(leftId, rightId), driverCap, n)) {
         matched = matched.union(sequentialFinish(cur))
         finished = true
       } else {
@@ -848,7 +821,7 @@ object Linkage {
     val replayed = for {
       order <- DriverFinish.rowOrdering(cur.schema,
         "s" -> Desc, "rl" -> Asc, "rr" -> Asc)
-      rows <- DriverFinish.collected(cur,
+      rows <- DriverFinish.collected(cur, Seq("ga", "gb", "rl", "rr"),
         DriverFinish.cap(spark, "greedy.driverFinishEdges"))
     } yield {
       // rows: (ga, gb, rl, rr, s)

@@ -72,10 +72,11 @@ object Pprl {
     * identifier — this is the computation a PPRL linkage unit runs.
     * Hot band keys (e.g. the all-zeros key on sparse filters) are capped
     * observably via `bucketCap`, mirroring every other pair generator's
-    * contract; [[droppedKeys]] is the companion. */
+    * contract: `dropped` is the (side, key, n) keys over the cap on
+    * EITHER side. */
   def linkTables(a0: DataFrame, b0: DataFrame, idCol: String, sigCol: String,
       m: Int, theta: Double, bands: Int = 8, bitsPerBand: Int = 16,
-      seed: Long = 42L, bucketCap: Int = 10000): DataFrame = {
+      seed: Long = 42L, bucketCap: Int = 10000): Capped = {
     // each side's (id, CLK) frame feeds its band keys AND the Dice join
     val a = Frames.shared(a0)
     val b = Frames.shared(b0)
@@ -89,23 +90,15 @@ object Pprl {
       .join(Tiers.underCap(kb, Seq("key"), bucketCap)
         .select(col("key"), col("id").as("id_b")), "key")
       .select(col("id_a"), col("id_b")).distinct()
-    cand
+    def over(keys: DataFrame, side: String): DataFrame =
+      Tiers.overCap(keys, Seq("key"), bucketCap)
+        .select(lit(side).as("side"), col("key"), col("n"))
+    Capped(cand
       .join(a.select(col(idCol).as("id_a"), col(sigCol).as("__sa")), "id_a")
       .join(b.select(col(idCol).as("id_b"), col(sigCol).as("__sb")), "id_b")
       .select(col("id_a"), col("id_b"),
         graft.functions.bloom_dice(col("__sa"), col("__sb")).as("dice"))
-      .where(col("dice") >= theta)
-  }
-
-  /** Band keys excluded by `bucketCap` on EITHER side, with their sizes —
-    * the never-silent cap companion of [[linkTables]]. */
-  def droppedKeys(a: DataFrame, b: DataFrame, idCol: String, sigCol: String,
-      m: Int, bands: Int = 8, bitsPerBand: Int = 16, seed: Long = 42L,
-      bucketCap: Int = 10000): DataFrame = {
-    def over(df: DataFrame, side: String): DataFrame =
-      Tiers.overCap(blockKeys(df, idCol, sigCol, m, bands, bitsPerBand, seed),
-        Seq("key"), bucketCap)
-        .select(lit(side).as("side"), col("key"), col("n"))
-    over(a, "a").union(over(b, "b"))
+      .where(col("dice") >= theta),
+      over(ka, "a").union(over(kb, "b")))
   }
 }

@@ -29,14 +29,14 @@ import org.apache.spark.sql.functions._
   * Nothing collects to the driver; no step is quadratic in the corpus.
   * Residual hot prefix tokens (degenerate corpora — e.g. near-duplicate
   * boilerplate where even the "rarest" token of many records is shared)
-  * get the three-tier policy of [[Tiers]] (dropping opt-in, observable
-  * via [[droppedPrefixTokens]]).
+  * get the three-tier policy of [[Tiers]] (dropping opt-in; each join
+  * returns [[Capped]], whose `dropped` lists the over-cap buckets).
   */
 object SetSimJoin {
 
-  /** (id, sorted distinct tokens, len) base frame shared by the join and
-    * its dropped-token companion. Token-less records carry no signal and
-    * are excluded (exact dedup owns them). */
+  /** (id, sorted distinct tokens, len) base frame of the Jaccard and
+    * containment joins. Token-less records carry no signal and are
+    * excluded (exact dedup owns them). */
   private def base(docs: DataFrame, idCol: String, textCol: String) =
     docs.select(
       col(idCol).as("id"),
@@ -67,8 +67,8 @@ object SetSimJoin {
 
   /** Exact token-set Jaccard >= tau self-join: (ia, ib, jaccard) with
     * ia < ib, complete (no pair >= tau missed) unless a finite `hardCap`
-    * is set — in which case [[droppedPrefixTokens]] with the same
-    * arguments records exactly which prefix buckets were excluded.
+    * is set — in which case `dropped` records exactly which (tok, n)
+    * prefix buckets were excluded.
     *
     * The length filter (min len >= tau * max len, a necessary condition
     * for Jaccard >= tau) prunes candidates BEFORE the distinct, so the
@@ -77,17 +77,17 @@ object SetSimJoin {
     * binary rounding can only admit, never prune, a qualifying pair. */
   def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       tau: Double, bucketCap: Int = 10000, hardCap: Int = Int.MaxValue,
-      saltGroups: Int = 16): DataFrame = {
+      saltGroups: Int = 16): Capped = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0, 1], got $tau")
     // tokenization feeds the prefix derivation AND both verification sides
     val b = Frames.shared(base(docs, idCol, textCol))
-    jaccardCandidates(b, tau, bucketCap, hardCap, saltGroups)
+    jaccardCandidates(b, tau, bucketCap, hardCap, saltGroups).map(_
       .join(b.select(col("id").as("ia"), col("toks").as("ta")), "ia")
       .join(b.select(col("id").as("ib"), col("toks").as("tb")), "ib")
       .select(col("ia"), col("ib"),
         (size(array_intersect(col("ta"), col("tb"))).cast("double") /
           size(array_union(col("ta"), col("tb"))).cast("double")).as("jaccard"))
-      .where(col("jaccard") >= tau)
+      .where(col("jaccard") >= tau))
   }
 
   /** Spec window into the candidate set (pre-verification). */
@@ -95,7 +95,7 @@ object SetSimJoin {
       textCol: String, tau: Double, bucketCap: Int = 10000,
       hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame =
     jaccardCandidates(base(docs, idCol, textCol), tau, bucketCap, hardCap,
-      saltGroups)
+      saltGroups).out
 
   /** Deduped (ia, ib) candidates surviving the prefix, length, and
     * POSITIONAL filters — exposed `private[operators]` so the spec can
@@ -111,9 +111,10 @@ object SetSimJoin {
     * bound cannot reach the Jaccard overlap requirement
     * ceil(tau/(1+tau)·(|x|+|y|)) (epsilon-relaxed — only ever admits).
     * The dedup shuffle this rides on (groupBy replacing the former
-    * distinct) was already being paid. */
+    * distinct) was already being paid. `dropped` is the (tok, n) prefix
+    * buckets over `hardCap`. */
   private[operators] def jaccardCandidates(b: DataFrame, tau: Double,
-      bucketCap: Int, hardCap: Int, saltGroups: Int): DataFrame = {
+      bucketCap: Int, hardCap: Int, saltGroups: Int): Capped = {
     // the prefix frame feeds the sizing aggregate AND the join-back
     val pre = Frames.shared(prefixRows(b, tau))
     val lenOk = least(col("la"), col("lb")).cast("double") >=
@@ -123,8 +124,8 @@ object SetSimJoin {
     // first shared token's positions for the positional filter.
     val alpha = ceil((lit(tau) / (1.0 + tau)) *
       (col("la") + col("lb")).cast("double") - lit(1e-9))
-    Tiers.pairs(pre, Seq("tok"), "id", bucketCap, hardCap, saltGroups,
-        payload = Seq("len", "pos"))
+    Capped(Tiers.pairs(pre, Seq("tok"), "id", bucketCap, hardCap,
+        saltGroups, payload = Seq("len", "pos"))
       .select(col("id_a").as("ia"), col("id_b").as("ib"),
         col("len_a").as("la"), col("len_b").as("lb"),
         col("pos_a").as("pa"), col("pos_b").as("pb"))
@@ -133,16 +134,9 @@ object SetSimJoin {
       .agg(min(col("la")).as("la"), min(col("lb")).as("lb"),
         min(col("pa")).as("i"), min(col("pb")).as("j"))
       .where(lit(1) + least(col("la") - col("i"), col("lb") - col("j")) >= alpha)
-      .select(col("ia"), col("ib"))
+      .select(col("ia"), col("ib")),
+      Tiers.overCap(pre, Seq("tok"), hardCap))
   }
-
-  /** Prefix-token buckets excluded by `hardCap` with their sizes — the
-    * non-silent record of what [[prefixJaccardPairs]] dropped (same
-    * contract as [[Linkage.droppedBuckets]] / [[Dedup.droppedNgramBuckets]]). */
-  def droppedPrefixTokens(docs: DataFrame, idCol: String, textCol: String,
-      tau: Double, hardCap: Int): DataFrame =
-    Tiers.overCap(prefixRows(base(docs, idCol, textCol), tau), Seq("tok"),
-      hardCap)
 
   // ------------------------------------------------------------- Ed-Join
 
@@ -173,12 +167,13 @@ object SetSimJoin {
     * and per-record rarest-first prefixes are windows partitioned by
     * (id, gram) / id — both bounded by ONE record's gram count, never by
     * corpus or bucket size; the prefix-element join has rarity-sized
-    * buckets ([[Tiers]] policy, `droppedEdJoinGrams` companion); the
+    * buckets ([[Tiers]] policy, `dropped` lists the over-cap (g, occ, n)
+    * buckets); the
     * only all-candidate shuffle is the dedup distinct, fed post-length-
     * filter; verification is two primary-key joins + the banded kernel. */
   def edJoinPairs(docs: DataFrame, idCol: String, strCol: String, k: Int,
       q: Int = 2, bucketCap: Int = 10000, hardCap: Int = Int.MaxValue,
-      saltGroups: Int = 16): DataFrame = {
+      saltGroups: Int = 16): Capped = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(q >= 1, s"q must be >= 1, got $q")
     // feeds the prefix derivation, the short tier, and both verifications
@@ -204,14 +199,15 @@ object SetSimJoin {
     // prefix elements verifies to the same distance, so distinct() on
     // (ia, ib, dist) returns the identical set.
     val verify = graft.functions.levenshtein_capped(col("sa"), col("sb"), k)
-    gramPairs.union(shortPairs)
+    Capped(gramPairs.union(shortPairs)
       .where(abs(col("len_a") - col("len_b")) <= k)
       .select(col("id_a").as("ia"), col("id_b").as("ib"))
       .join(b.select(col("id").as("ia"), col("s").as("sa")), "ia")
       .join(b.select(col("id").as("ib"), col("s").as("sb")), "ib")
       .select(col("ia"), col("ib"), verify.as("dist"))
       .where(col("dist") <= k)
-      .distinct()
+      .distinct(),
+      Tiers.overCap(pre, Seq("g", "occ"), hardCap))
   }
 
   /** (g, occ, id, len) prefix elements: each record's q·k+1 globally-
@@ -237,16 +233,6 @@ object SetSimJoin {
     * SHORT tier's membership, exposed so its size is observable. */
   def shortStrings(docs: DataFrame, k: Int, q: Int): DataFrame =
     docs.where(col("len") <= q * (k + 1) - 1)
-
-  /** Prefix (gram, occ) buckets excluded by `hardCap` with their sizes —
-    * the non-silent record of what [[edJoinPairs]] dropped. */
-  def droppedEdJoinGrams(docs: DataFrame, idCol: String, strCol: String,
-      k: Int, q: Int = 2, hardCap: Int = Int.MaxValue): DataFrame = {
-    val b = docs.select(col(idCol).as("id"), col(strCol).as("s"))
-      .where(col("s").isNotNull)
-      .withColumn("len", length(col("s")))
-    Tiers.overCap(edPrefixRows(b, k, q), Seq("g", "occ"), hardCap)
-  }
 
   // --------------------------------------------------- containment join
 
@@ -278,11 +264,11 @@ object SetSimJoin {
     * high-df index tokens, governed by the house 3-tier policy on the
     * INDEX token's df — plain <= bucketCap, salted asymmetric grid <=
     * hardCap (probes replicate saltGroups ways, index rows salt by
-    * id-hash — lossless), dropped beyond (observable via
-    * [[droppedContainmentTokens]]). */
+    * id-hash — lossless), dropped beyond (`dropped` lists those (tok, n)
+    * index tokens). */
   def prefixContainmentPairs(docs: DataFrame, idCol: String,
       textCol: String, tau: Double, bucketCap: Int = 10000,
-      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
+      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): Capped = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0, 1], got $tau")
     // tokenization feeds the probes, the index, the masks and verification
     val b = Frames.shared(base(docs, idCol, textCol))
@@ -291,6 +277,9 @@ object SetSimJoin {
       .select(col("tok"), col("id").as("qid")))
     val index = b.select(col("id"), explode(col("toks")).as("tok"))
     val sized = index.groupBy(col("tok")).agg(count(lit(1)).as("n"))
+    val dropped = sized.where(col("n") > hardCap)
+    // no index token `dropped` reports may reach the cold join either
+    val coldCap = math.min(bucketCap, hardCap)
 
     // DENSE-VOCABULARY fast path (optimization guide §2.3 "shuffle fewer
     // bytes" / §1.2 step 1): when the corpus vocabulary fits in 64
@@ -319,7 +308,7 @@ object SetSimJoin {
       val probesM = probes.join(bm.select(col("id").as("qid"),
         col("m").as("mq")), "qid")
       val keyed = index.join(sized, "tok")
-      val cold = keyed.where(col("n") <= bucketCap)
+      val cold = keyed.where(col("n") <= coldCap)
         .join(probesM, "tok")
         .select(col("qid"), col("id"), col("mq"))
       val hotIdx = keyed.where(col("n") > bucketCap && col("n") <= hardCap)
@@ -353,14 +342,14 @@ object SetSimJoin {
           (inter.cast("double") /
             (la + lb - inter).cast("double")).as("jaccard"))
         .where(greatest(col("containment_a"), col("containment_b")) >= tau)
-      return verified.groupBy(col("ia"), col("ib"))
+      return Capped(verified.groupBy(col("ia"), col("ib"))
         .agg(max(col("containment_a")).as("containment_a"),
           max(col("containment_b")).as("containment_b"),
-          max(col("jaccard")).as("jaccard"))
+          max(col("jaccard")).as("jaccard")), dropped)
     }
 
     val keyed = index.join(sized, "tok")
-    val cold = keyed.where(col("n") <= bucketCap)
+    val cold = keyed.where(col("n") <= coldCap)
       .join(probes, "tok")
       .select(col("qid"), col("id"))
     val hotIdx = keyed.where(col("n") > bucketCap && col("n") <= hardCap)
@@ -377,7 +366,7 @@ object SetSimJoin {
       .select(least(col("qid"), col("id")).as("ia"),
         greatest(col("qid"), col("id")).as("ib"))
       .distinct()
-    cand
+    Capped(cand
       .join(b.select(col("id").as("ia"), col("toks").as("ta")), "ia")
       .join(b.select(col("id").as("ib"), col("toks").as("tb")), "ib")
       .select(col("ia"), col("ib"),
@@ -388,13 +377,7 @@ object SetSimJoin {
         (size(array_intersect(col("ta"), col("tb"))).cast("double") /
           size(array_union(col("ta"), col("tb"))).cast("double"))
           .as("jaccard"))
-      .where(greatest(col("containment_a"), col("containment_b")) >= tau)
+      .where(greatest(col("containment_a"), col("containment_b")) >= tau),
+      dropped)
   }
-
-  /** Index tokens excluded by `hardCap` with their occurrence counts —
-    * the non-silent record of what [[prefixContainmentPairs]] dropped. */
-  def droppedContainmentTokens(docs: DataFrame, idCol: String,
-      textCol: String, hardCap: Int): DataFrame =
-    Tiers.overCap(base(docs, idCol, textCol)
-      .select(col("id"), explode(col("toks")).as("tok")), Seq("tok"), hardCap)
 }

@@ -43,6 +43,16 @@ object Similarity {
   private def cosPre(va: Column, na: Column, vb: Column, nb: Column): Column =
     graft.functions.vec_dot(va, vb) / (na * nb)
 
+  /** The `k` best (vec_id, neighbor_id, rank, cos) per vec_id, ties by
+    * neighbor_id. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("vec_id"))
+      .orderBy(col("cos").desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"))
+  }
+
   /** Exact top-k neighbors per vector by cosine (ties broken by neighbor
     * id ascending — deterministic). Output: (vec_id, neighbor_id, rank, cos). */
   def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String,
@@ -54,11 +64,7 @@ object Similarity {
     val scored = a.join(b, col("vec_id") =!= col("neighbor_id"))
       .select(col("vec_id"), col("neighbor_id"),
         cosPre(col("va"), col("na"), col("vb"), col("nb")).as("cos"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"))
+    topK(scored, k)
   }
 
   /** Reciprocal (mutual) top-k matches: the pairs where EACH side ranks
@@ -294,11 +300,7 @@ object Similarity {
       .where(col("vec_id") =!= col("neighbor_id"))
       .select(col("vec_id"), col("neighbor_id"),
         cosPre(col("va"), col("na"), col("vb"), col("nb")).as("cos"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"))
+    topK(scored, k)
   }
 
   /** Fitted centroids as a persistable (cid, centroid) frame. Floats are
@@ -342,8 +344,8 @@ object Similarity {
 
   // ------------------------------------------------------------------ LSH
 
-  /** (id, v, band key) bucket assignment for the hyperplane LSH — shared
-    * by [[lshTopK]] and [[droppedLshBuckets]]. */
+  /** (id, v, band key) bucket assignment for the hyperplane LSH of
+    * [[lshTopK]]. */
   private def lshBucketed(emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, bands: Int, planesPerBand: Int, seed: Long): DataFrame = {
     val planes = hyperplanes(dim, bands, planesPerBand, seed)
@@ -362,21 +364,6 @@ object Similarity {
         explode(array((0 until bands).map(bnd => col(s"band$bnd")): _*)).as("key"))
   }
 
-  /** LSH buckets excluded by `hardCap` (the DROP tier of [[lshTopK]]'s
-    * 3-tier policy) with their sizes — the non-silent record of what the
-    * banding dropped. Dropping costs recall, so measure it
-    * (SimilaritySpec does) — but an over-hard-cap bucket means the band
-    * carries too few planes to discriminate at the corpus's density, and
-    * paying its |bucket|² cost buys near-random candidates anyway; the
-    * scale remedies are more planes per band, or letting the (default,
-    * lossless) salted tier carry it. */
-  def droppedLshBuckets(emb: DataFrame, idCol: String, vecCol: String,
-      dim: Int, bands: Int = 4, planesPerBand: Int = 6, seed: Long = 42L,
-      hardCap: Int = Int.MaxValue): DataFrame =
-    Tiers.overCap(
-      lshBucketed(emb, idCol, vecCol, dim, bands, planesPerBand, seed),
-      Seq("key"), hardCap)
-
   /** Banded random-hyperplane LSH top-k. Each vector lands in `bands`
     * buckets keyed by the sign pattern of `planesPerBand` projections;
     * candidates = pairs sharing any bucket; exact cosine ranks them.
@@ -390,24 +377,29 @@ object Similarity {
     * beats re-shuffling the corpus to re-attach them by id). The default
     * hardCap is lossless (nothing dropped).
     *
-    * OBSERVABILITY CONTRACT: a finite `hardCap` is lossy (recall, not
-    * correctness — dropped buckets shrink candidate sets); a production
-    * run where it can bite must evaluate [[droppedLshBuckets]] alongside
-    * this result — this frame alone carries no drop signal. */
+    * A finite `hardCap` is lossy (recall, not correctness — dropped
+    * buckets shrink candidate sets); `dropped` lists the (key, n) buckets
+    * it cut. Dropping costs recall, so measure it (SimilaritySpec does) —
+    * but an over-hard-cap bucket means the band carries too few planes to
+    * discriminate at the corpus's density, and paying its |bucket|² cost
+    * buys near-random candidates anyway; the scale remedies are more
+    * planes per band, or letting the (default, lossless) salted tier
+    * carry it. */
   def lshTopK(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       dim: Int, bands: Int = 4, planesPerBand: Int = 6,
       seed: Long = 42L, bucketCap: Int = 2000,
-      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
+      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): Capped = {
+    // the bucketing feeds the sizing aggregate and the join-back
+    val bucketed = Frames.shared(
+      lshBucketed(emb, idCol, vecCol, dim, bands, planesPerBand, seed))
     // Score each canonical (a < b) pair once, then mirror it: cosPre is
     // bit-commutable (x*y = y*x term-for-term, same fold order), so both
     // directions carry the exact cosine. A pair sharing several bands
     // repeats with identical cos, so max() dedups it exactly on scalars
     // only (the 64-float vectors never enter the dedup shuffle) and the
     // partial aggregate combines duplicates map-side.
-    val scored = Tiers.pairs(
-        lshBucketed(emb, idCol, vecCol, dim, bands, planesPerBand, seed),
-        Seq("key"), "id", bucketCap, hardCap, saltGroups,
-        payload = Seq("v", "nrm"))
+    val scored = Tiers.pairs(bucketed, Seq("key"), "id", bucketCap, hardCap,
+        saltGroups, payload = Seq("v", "nrm"))
       .select(col("id_a"), col("id_b"),
         cosPre(col("v_a"), col("nrm_a"), col("v_b"), col("nrm_b")).as("cos"))
       .select(explode(array(
@@ -416,11 +408,7 @@ object Similarity {
         col("cos"))
       .groupBy(col("d.vec_id").as("vec_id"), col("d.neighbor_id").as("neighbor_id"))
       .agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"))
+    Capped(topK(scored, k), Tiers.overCap(bucketed, Seq("key"), hardCap))
   }
 
   /** (id, band, sig) integer signatures — the un-stringified face of
@@ -468,12 +456,12 @@ object Similarity {
     * to 2·(planesPerBand+1)·bands times). Index-side skew tiers: plain
     * join for buckets ≤ bucketCap; bucketCap < n ≤ hardCap via an
     * asymmetric salted equi-join (index rows salted by id-hash, probes
-    * replicated saltGroups ways — lossless); n > hardCap dropped,
-    * observable via [[droppedLshBuckets]] (same keys, same contract). */
+    * replicated saltGroups ways — lossless); n > hardCap dropped, and
+    * listed in `dropped` under [[lshTopK]]'s (key, n) schema and keys. */
   def lshMultiProbeTopK(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, dim: Int, bands: Int = 4, planesPerBand: Int = 6,
       probeBits: Int = 1, seed: Long = 42L, bucketCap: Int = 2000,
-      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
+      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): Capped = {
     require(probeBits == 0 || probeBits == 1,
       s"probeBits must be 0 (single-probe) or 1 (1-bit flips), got $probeBits")
     val sigs = lshSigs(emb, idCol, vecCol, dim, bands, planesPerBand, seed)
@@ -490,7 +478,8 @@ object Similarity {
         explode(probeSigs).as("psig"))
       .select(concat(col("band"), lit(":"), col("psig")).as("key"),
         col("qid"))
-    val cold = keyed.where(col("n") <= bucketCap)
+    // no bucket `dropped` reports may reach the cold join either
+    val cold = keyed.where(col("n") <= math.min(bucketCap, hardCap))
       .join(probes, "key")
       .select(col("qid"), col("id"))
     val hotIdx = keyed.where(col("n") > bucketCap && col("n") <= hardCap)
@@ -513,11 +502,7 @@ object Similarity {
         col("nrm").as("nb")), "id")
       .select(col("qid").as("vec_id"), col("id").as("neighbor_id"),
         cosPre(col("va"), col("na"), col("vb"), col("nb")).as("cos"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"))
+    Capped(topK(scored, k), sized.where(col("n") > hardCap))
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher SIGIR'09) — merge

@@ -34,14 +34,12 @@ import org.apache.spark.sql.functions._
   * salted / dropped tiers — a city-center cell with 10^6 venues routes
   * through the salted grid, never one reducer) → two id-keyed
   * equi-joins against the coordinates → one codegen Chebyshev filter.
-  * Run [[droppedGridBuckets]] with the same arguments alongside when a
-  * finite `hardCap` is set — a dropped cell is the spatial analogue of
-  * a stopword block.
+  * The result's `dropped` lists the cells a finite `hardCap` cut — a
+  * dropped cell is the spatial analogue of a stopword block.
   */
 object Spatial {
 
-  /** (key, url) cell-membership frame shared by [[gridCandidates]] and
-    * [[droppedGridBuckets]] — `key` is
+  /** (key, url) cell-membership frame of [[gridCandidates]] — `key` is
     * `partitionCols.mkString(":") : cellLat : cellLon`, `url` the record
     * id (the [[Linkage.candidatePairs]] input schema). Cells are labeled
     * by their south-west corner (x − pmod(x, cellSize): exact long
@@ -81,22 +79,26 @@ object Spatial {
     * coordinate unit. `partitionCols` are additional equality keys
     * (country, category, tenant) ANDed into the blocking. `cellSize`
     * must be ≥ `radius` — that inequality IS the lossless-coverage
-    * proof; smaller cells would need a wider neighbor ring. */
+    * proof; smaller cells would need a wider neighbor ring. `dropped` is
+    * [[Linkage.droppedBuckets]] over the same cell keys: (key, bucket_n)
+    * of the cells over `hardCap`. */
   def gridCandidates(df: DataFrame, idCol: String, latCol: String,
       lonCol: String, radius: Long, cellSize: Long,
       partitionCols: Seq[String] = Nil, bucketCap: Int = 200,
-      hardCap: Int = 100000, saltGroups: Int = 16): DataFrame = {
+      hardCap: Int = 100000, saltGroups: Int = 16): Capped = {
     require(radius >= 0, s"radius must be >= 0, got $radius")
     require(cellSize >= radius,
       s"cellSize ($cellSize) must be >= radius ($radius) — the forward " +
         "half-neighborhood only covers king-move-adjacent cells")
-    val keys = gridKeys(df, idCol, latCol, lonCol, cellSize, partitionCols)
+    // the cell keys feed the pair tiers and the drop record
+    val keys = Frames.shared(
+      gridKeys(df, idCol, latCol, lonCol, cellSize, partitionCols))
     val pairs = Linkage.candidatePairs(keys, bucketCap, hardCap, saltGroups)
     val pts = df
       .where(col(latCol).isNotNull && col(lonCol).isNotNull)
       .select(col(idCol).as("__gid"), col(latCol).cast("long").as("__gla"),
         col(lonCol).cast("long").as("__glo"))
-    pairs
+    Capped(pairs
       .join(pts.select(col("__gid").as("url_a"), col("__gla").as("__laa"),
         col("__glo").as("__loa")), "url_a")
       .join(pts.select(col("__gid").as("url_b"), col("__gla").as("__lab"),
@@ -104,16 +106,7 @@ object Spatial {
       .select(col("url_a").as("id_a"), col("url_b").as("id_b"),
         greatest(abs(col("__laa") - col("__lab")),
           abs(col("__loa") - col("__lob"))).as("d_chebyshev"))
-      .where(col("d_chebyshev") <= radius)
+      .where(col("d_chebyshev") <= radius),
+      Linkage.droppedBuckets(keys, hardCap))
   }
-
-  /** Grid cells excluded by `hardCap` with their sizes — the observable
-    * record of what the cap dropped (the [[Linkage.droppedBuckets]]
-    * contract over the same keys frame). */
-  def droppedGridBuckets(df: DataFrame, idCol: String, latCol: String,
-      lonCol: String, cellSize: Long, partitionCols: Seq[String] = Nil,
-      hardCap: Int = 100000): DataFrame =
-    Linkage.droppedBuckets(
-      gridKeys(df, idCol, latCol, lonCol, cellSize, partitionCols),
-      hardCap)
 }

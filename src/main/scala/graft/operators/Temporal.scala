@@ -37,8 +37,7 @@ import org.apache.spark.sql.functions._
   * count them with a `where` if the pipeline needs the number). */
 object Temporal {
 
-  /** (key, url) cell-membership frame shared by [[intervalCandidates]]
-    * and [[droppedIntervalBuckets]] — `key` is
+  /** (key, url) cell-membership frame of [[intervalCandidates]] — `key` is
     * `partitionCols.mkString(":") : cell`, `url` the record id (the
     * [[Linkage.candidatePairs]] input schema). */
   def intervalKeys(df: DataFrame, idCol: String, startCol: String,
@@ -69,22 +68,23 @@ object Temporal {
     *
     * Scale shape: explode → [[Linkage.candidatePairs]] (cold / salted /
     * dropped tiers, pair distinct) → two id-keyed equi-joins against the
-    * bounds → one codegen overlap filter. Run
-    * [[droppedIntervalBuckets]] with the same arguments alongside — a
-    * dropped cell here means "too many concurrent intervals at one grid
-    * slot", the temporal analogue of a stopword block. */
+    * bounds → one codegen overlap filter. `dropped` is
+    * [[Linkage.droppedBuckets]] over the same cell keys — a dropped cell
+    * here means "too many concurrent intervals at one grid slot", the
+    * temporal analogue of a stopword block. */
   def intervalCandidates(df: DataFrame, idCol: String, startCol: String,
       endCol: String, bucketWidth: Long, partitionCols: Seq[String] = Nil,
       bucketCap: Int = 200, hardCap: Int = 100000,
-      saltGroups: Int = 16): DataFrame = {
-    val keys = intervalKeys(df, idCol, startCol, endCol, bucketWidth,
-      partitionCols)
+      saltGroups: Int = 16): Capped = {
+    // the cell keys feed the pair tiers and the drop record
+    val keys = Frames.shared(intervalKeys(df, idCol, startCol, endCol,
+      bucketWidth, partitionCols))
     val pairs = Linkage.candidatePairs(keys, bucketCap, hardCap, saltGroups)
     val s = col(startCol).cast("long")
     val e = col(endCol).cast("long")
     val bounds = df.where(s.isNotNull && e.isNotNull && e >= s)
       .select(col(idCol).as("__tid"), s.as("__ts"), e.as("__te"))
-    pairs
+    Capped(pairs
       .join(bounds.select(col("__tid").as("url_a"), col("__ts").as("__sa"),
         col("__te").as("__ea")), "url_a")
       .join(bounds.select(col("__tid").as("url_b"), col("__ts").as("__sb"),
@@ -92,18 +92,9 @@ object Temporal {
       .where(col("__sa") <= col("__eb") && col("__sb") <= col("__ea"))
       .select(col("url_a").as("id_a"), col("url_b").as("id_b"),
         (least(col("__ea"), col("__eb")) -
-          greatest(col("__sa"), col("__sb"))).as("overlap"))
+          greatest(col("__sa"), col("__sb"))).as("overlap")),
+      Linkage.droppedBuckets(keys, hardCap))
   }
-
-  /** Grid cells excluded by `hardCap` with their sizes — the observable
-    * record of what the cap dropped (the [[Linkage.droppedBuckets]]
-    * contract over the same keys frame). */
-  def droppedIntervalBuckets(df: DataFrame, idCol: String, startCol: String,
-      endCol: String, bucketWidth: Long, partitionCols: Seq[String] = Nil,
-      hardCap: Int = 100000): DataFrame =
-    Linkage.droppedBuckets(
-      intervalKeys(df, idCol, startCol, endCol, bucketWidth, partitionCols),
-      hardCap)
 
   /** SCD-2 validity-interval construction — master-data versioning from
     * raw observation history: given per-entity observations

@@ -159,19 +159,30 @@ object TextAnalysis {
   def topTfidfTerms(docs: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
     require(k > 0)
+    val scored = tfidfWeights(docs, idCol, textCol)
+      .withColumnRenamed("w", "tfidf")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("id")).orderBy(col("tfidf").desc, col("term").asc)
+    scored.withColumn("term_rank", row_number().over(w))
+      .where(col("term_rank") <= k)
+  }
+
+  /** (id, term, tf, df, w) per distinct (document, token), with the
+    * log-free rational weight w = tf·(N+1)/(df+1) — one exact integer
+    * product and one IEEE division. The one weighting of
+    * [[topTfidfTerms]], [[Linkage.tfidfCosinePairs]] and
+    * [[Linkage.softTfIdfPairs]]. */
+  private[operators] def tfidfWeights(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val tf = docs
       .select(col(idCol).as("id"), explode(tokens(col(textCol))).as("term"))
       .groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val scored = tf.join(dfreq, "term").crossJoin(broadcast(nDocs))
+    tf.join(dfreq, "term").crossJoin(broadcast(nDocs))
       .select(col("id"), col("term"), col("tf"), col("df"),
         ((col("tf") * (col("n_docs") + 1)).cast("double") /
-          (col("df") + 1).cast("double")).as("tfidf"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("tfidf").desc, col("term").asc)
-    scored.withColumn("term_rank", row_number().over(w))
-      .where(col("term_rank") <= k)
+          (col("df") + 1).cast("double")).as("w"))
   }
 
   /** Per-document analysis frame over (idCol, textCol). */

@@ -3,6 +3,15 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+/** An operator's output and the record of what its cap dropped, from one
+  * call. `dropped` filters `n > cap` over the sizing frame the operator
+  * routes on (for [[Tiers]] operators, [[Tiers.overCap]] over the member
+  * frame it already shares), so reading it re-runs none of the keying. */
+final case class Capped(out: DataFrame, dropped: DataFrame) {
+  /** The same drop record under a further transform of `out`. */
+  def map(f: DataFrame => DataFrame): Capped = copy(out = f(out))
+}
+
 /** The three-tier blocking policy every symmetric blocking self-join
   * shares. Members sharing a key form a bucket; a bucket of n members
   * holds n(n−1)/2 pairs, and web blocking keys are Zipfian, so each
@@ -14,10 +23,11 @@ import org.apache.spark.sql.functions._
   *     self-join ([[saltedSelfJoin]]), so a hot bucket's quadratic pair
   *     work shards across G(G+1)/2 reducers (G = `saltGroups`) instead of
   *     landing on one, losslessly;
-  *  3. n > `hardCap` — dropped, never silently: [[overCap]] over the same
-  *     members and keys is the record (an ultra-hot key carries no
-  *     discriminative signal and would emit ~n²/2 junk pairs). Operators
-  *     default `hardCap` to `Int.MaxValue` where dropping is opt-in.
+  *  3. n > `hardCap` — dropped, never silently: the operator returns
+  *     [[Capped]], whose `dropped` is [[overCap]] over the same members
+  *     and keys (an ultra-hot key carries no discriminative signal and
+  *     would emit ~n²/2 junk pairs). Operators default `hardCap` to
+  *     `Int.MaxValue` where dropping is opt-in.
   *
   * Operators whose policy is a single cap (LSH band caps) keep tiers 1
   * and 3 only: [[underCap]] and [[overCap]] with that cap.

@@ -33,10 +33,13 @@ import graft.operators.{Dedup, Packing, Sampling, TextAnalysis}
   *   03 exact      — exact-hash canonicalization, keep one per group
   *   04 neardup    — MinHash-LSH + connected-components groups, keep the
   *                   canonical doc per near-dup cluster; the banding's
-  *                   dropped buckets checkpoint as their own side stage
-  *                   (04_dropped) whose row count lands in metrics (the
-  *                   cap is never silent INSIDE the pipeline, and a
-  *                   resumed run reads the count from the manifest)
+  *                   dropped buckets (the `dropped` of the same
+  *                   [[Dedup.nearDupGroups]] call, read from the banding
+  *                   it already materialized) checkpoint as their own
+  *                   side stage (04_dropped) whose row count lands in
+  *                   metrics (the cap is never silent INSIDE the
+  *                   pipeline, and a resumed run reads the count from the
+  *                   manifest)
   *   05 corpus     — train/val/test split + domain mixture sampling +
   *                   sequence-pack layout, all sha-derived (re-running
   *                   over a grown corpus never reassigns existing docs)
@@ -117,21 +120,22 @@ object CorpusPipeline {
       clean.df.join(groups.withColumnRenamed("id", "doc_id"), "doc_id")
     }
 
+    // planned only by a stage that recomputes: a resumed run plans nothing
+    lazy val nearDup = Dedup.nearDupGroups(exact.df, "doc_id", "text",
+      cfg.tau, cfg.numHashes, cfg.bands, cfg.bucketCap, cfg.hashFamily)
     val fpNd = sha(fpEx + ":neardup")
     val neardup = Pipeline.stage(spark, workDir, "04_neardup", fpNd) {
-      val groups = Dedup.nearDupGroups(exact.df, "doc_id", "text",
-        cfg.tau, cfg.numHashes, cfg.bands, cfg.bucketCap, cfg.hashFamily)
+      val groups = nearDup.out
         .where(col("id") === col("canonical_id")).select(col("id"))
       exact.df.join(groups.withColumnRenamed("id", "doc_id"), "doc_id")
     }
 
     // the banding's dropped buckets are a CHECKPOINTED side stage: a
-    // resumed run reads the count from the manifest instead of re-running
-    // the O(corpus) banding just to recount what was already known
+    // resumed run reads the count from the manifest, and a fresh one
+    // filters the banding 04_neardup already materialized
     val fpDrop = sha(fpEx + ":dropped")
     val droppedStage = Pipeline.stage(spark, workDir, "04_dropped", fpDrop)(
-      Dedup.droppedMinhashBuckets(exact.df, "doc_id", "text",
-        cfg.numHashes, cfg.bands, cfg.bucketCap, cfg.hashFamily))
+      nearDup.dropped)
 
     val fpCor = sha(fpNd + ":corpus")
     val corpus = Pipeline.stage(spark, workDir, "05_corpus", fpCor) {

@@ -159,7 +159,7 @@ class BlockingSpec extends SparkFunSuite {
     import spark.implicits._
     val lk = Seq((1L, "x"), (2L, "x"), (3L, "y"), (4L, "z")).toDF("id", "key")
     val rk = Seq((10L, "x"), (11L, "y"), (12L, "y"), (13L, "w")).toDF("id", "key")
-    val got = Linkage.crossCandidatePairs(lk, rk, bucketPairCap = 100L)
+    val got = Linkage.crossCandidatePairs(lk, rk, bucketPairCap = 100L).out
       .as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 10L), (2L, 10L), (3L, 11L), (3L, 12L)))
   }
@@ -169,8 +169,9 @@ class BlockingSpec extends SparkFunSuite {
     val lk = (1L to 20L).map(i => (i, "hot")).toDF("id", "key")
     val rk = (101L to 120L).map(i => (i, "hot")).toDF("id", "key")
     // product 400 > cap 100 → dropped
-    assert(Linkage.crossCandidatePairs(lk, rk, bucketPairCap = 100L).count() == 0)
-    val dropped = Linkage.droppedCrossBuckets(lk, rk, bucketPairCap = 100L)
+    val capped = Linkage.crossCandidatePairs(lk, rk, bucketPairCap = 100L)
+    assert(capped.out.count() == 0)
+    val dropped = capped.dropped
       .as[(String, Long, Long)].collect().toSeq
     assert(dropped == Seq(("hot", 20L, 20L)))
   }
@@ -179,7 +180,7 @@ class BlockingSpec extends SparkFunSuite {
     import spark.implicits._
     val left = Seq((1L, "acme widgets", "b1"), (2L, "zzz qqq", "b1")).toDF("id", "name", "bk")
     val right = Seq((7L, "acme widgets", "b1"), (8L, "unrelated name", "b2")).toDF("id", "name", "bk")
-    val got = Linkage.linkTables(left, right, "id", "name", "bk", theta = 1.9)
+    val got = Linkage.linkTables(left, right, "id", "name", "bk", theta = 1.9).out
       .select("id_l", "id_r", "score").collect()
     // only the exact-name pair survives θ=1.9 (its score is exactly 2.0)
     assert(got.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 7L)))

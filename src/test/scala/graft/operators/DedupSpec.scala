@@ -24,7 +24,7 @@ class DedupSpec extends SparkFunSuite {
 
   test("ngramJaccardPairs finds near-dups within blocks only") {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      Seq("lang", "source"), tau = 0.5)
+      Seq("lang", "source"), tau = 0.5).out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val keys = pairs.map(p => (p._1, p._2)).toSet
     assert(keys.contains((1L, 2L))) // exact dup: jaccard 1.0
@@ -45,25 +45,25 @@ class DedupSpec extends SparkFunSuite {
       (103L, "unrelated words entirely different", "en", "s2"))
     val d = (hotDocs ++ coldDocs).toDF("doc_id", "text", "lang", "source")
     val plain = Dedup.ngramJaccardPairs(d, "doc_id", "text",
-      Seq("lang", "source"), tau = 0.5)
+      Seq("lang", "source"), tau = 0.5).out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // tier 2: bucketCap=5 routes the hot block through the salted grid —
     // LOSSLESS: identical pair set, identical jaccard values
     val salted = Dedup.ngramJaccardPairs(d, "doc_id", "text",
-      Seq("lang", "source"), tau = 0.5, bucketCap = 5, saltGroups = 4)
+      Seq("lang", "source"), tau = 0.5, bucketCap = 5, saltGroups = 4).out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(salted == plain)
     assert(plain.contains((101L, 102L, 1.0)))
     assert(plain.exists(p => p._1 == 1L && p._2 == 2L)) // hot-block pair survives
     // tier 3: hardCap=10 drops the hot block's pairs…
-    val capped = Dedup.ngramJaccardPairs(d, "doc_id", "text",
+    val cappedRun = Dedup.ngramJaccardPairs(d, "doc_id", "text",
       Seq("lang", "source"), tau = 0.5, bucketCap = 5, hardCap = 10,
       saltGroups = 4)
+    val capped = cappedRun.out
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((101L, 102L))) // only the cold block remains
     // …and the drop is reported with the block key and its size
-    val dropped = Dedup.droppedNgramBuckets(d, "doc_id", "text",
-      Seq("lang", "source"), hardCap = 10).collect()
+    val dropped = cappedRun.dropped.collect()
     assert(dropped.length == 1)
     assert(dropped.head.getString(0) == "en\u0001s1")
     assert(dropped.head.getLong(1) == 30L)
@@ -77,8 +77,8 @@ class DedupSpec extends SparkFunSuite {
       bucketCap = 10)
     assert(pairs.count() == 0)
     // …and the drop is reported with bucket sizes
-    val dropped = Dedup.droppedMinhashBuckets(many, "doc_id", "text",
-      bucketCap = 10).collect()
+    val dropped = Dedup.nearDupGroups(many, "doc_id", "text", tau = 0.5,
+      bucketCap = 10).dropped.collect()
     assert(dropped.length == 4) // one bucket per band, all identical sigs
     assert(dropped.forall(_.getLong(1) == 40L))
   }
@@ -101,7 +101,7 @@ class DedupSpec extends SparkFunSuite {
 
   test("minhashOphLshPairs: identical docs always collide, verification exact, caps observable") {
     // identical token sets → identical OPH signatures → all bands collide
-    val pairs = Dedup.minhashOphLshPairs(docs, "doc_id", "text", tau = 0.5)
+    val pairs = Dedup.minhashOphLshPairs(docs, "doc_id", "text", tau = 0.5).out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val keys = pairs.map(p => (p._1, p._2)).toSet
     assert(keys.contains((1L, 2L)) && keys.contains((1L, 5L)) && keys.contains((2L, 5L)))
@@ -111,12 +111,13 @@ class DedupSpec extends SparkFunSuite {
     // both families agree on the verified-identical pairs (verification is
     // exact Jaccard, so family changes candidates only, never scores)
     val sha = Dedup.minhashOphLshPairs(docs, "doc_id", "text", tau = 0.99,
-      hashFamily = "sha256").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      hashFamily = "sha256").out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(sha == Set((1L, 2L), (1L, 5L), (2L, 5L)))
     // cap: with bucketCap = 0 every bucket is hot → no pairs, all observable
-    assert(Dedup.minhashOphLshPairs(docs, "doc_id", "text", tau = 0.5,
-      bucketCap = 0).count() == 0)
-    assert(Dedup.droppedOphBuckets(docs, "doc_id", "text", bucketCap = 0)
+    val cappedOph = Dedup.minhashOphLshPairs(docs, "doc_id", "text",
+      tau = 0.5, bucketCap = 0)
+    assert(cappedOph.out.count() == 0)
+    assert(cappedOph.dropped
       .agg(sum(col("n"))).head().getLong(0) > 0)
   }
 
@@ -185,23 +186,23 @@ class DedupSpec extends SparkFunSuite {
     // tier 2: buckets over bucketCap route through the salted grid —
     // NOTHING is lost (boilerplate is where simhash near-dups live)
     assert(Dedup.simhashPairs(many, "doc_id", "text", maxHamming = 8,
-      bucketCap = 5, saltGroups = 4).count() == full)
+      bucketCap = 5, saltGroups = 4).out.count() == full)
     // tier 1 alone (cap above the bucket size) agrees
     assert(Dedup.simhashPairs(many, "doc_id", "text", maxHamming = 8,
-      bucketCap = 20).count() == full)
+      bucketCap = 20).out.count() == full)
     // tier 3: buckets over hardCap are dropped…
-    assert(Dedup.simhashPairs(many, "doc_id", "text", maxHamming = 8,
-      bucketCap = 5, hardCap = 10).count() == 0)
+    val cappedRun = Dedup.simhashPairs(many, "doc_id", "text",
+      maxHamming = 8, bucketCap = 5, hardCap = 10)
+    assert(cappedRun.out.count() == 0)
     // …and the drop is reported with bucket sizes, per band — never silent
-    val dropped = Dedup.droppedSimhashBuckets(many, "doc_id", "text",
-      hardCap = 10).collect()
+    val dropped = cappedRun.dropped.collect()
     assert(dropped.length == 4)
     assert(dropped.forall(_.getLong(1) == 20L))
     // both hash families run through the same tiered join
     assert(Dedup.simhashPairs(many, "doc_id", "text", maxHamming = 8,
-      hashFamily = "sha256", bucketCap = 5, hardCap = 10).count() == 0)
+      hashFamily = "sha256", bucketCap = 5, hardCap = 10).out.count() == 0)
     assert(Dedup.simhashPairs(many, "doc_id", "text", maxHamming = 8,
-      hashFamily = "sha256", bucketCap = 5, saltGroups = 4).count() == full)
+      hashFamily = "sha256", bucketCap = 5, saltGroups = 4).out.count() == full)
   }
 
   test("simhash salted tier equals plain tier on mixed near-dup data") {
@@ -213,7 +214,7 @@ class DedupSpec extends SparkFunSuite {
       (5L, base.replace("token10", "altered")),
     ).toDF("doc_id", "text")
     def run(cap: Int) = Dedup.simhashPairs(docs2, "doc_id", "text",
-      maxHamming = 8, bucketCap = cap, saltGroups = 4)
+      maxHamming = 8, bucketCap = cap, saltGroups = 4).out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(run(1) == run(100)) // all-salted == all-plain, hamming included
   }
@@ -227,7 +228,7 @@ class DedupSpec extends SparkFunSuite {
       (2L, "alpha beta gamma", "en a", "b"),
     ).toDF("doc_id", "text", "lang", "source")
     val pairs = Dedup.ngramJaccardPairs(tricky, "doc_id", "text",
-      Seq("lang", "source"), tau = 0.5)
+      Seq("lang", "source"), tau = 0.5).out
     assert(pairs.count() == 0)
   }
 
@@ -236,7 +237,7 @@ class DedupSpec extends SparkFunSuite {
     val near = base.replace("token30", "changed")
     val far = (1 to 60).map(i => s"word$i").mkString(" ")
     val df = Seq((1L, base), (2L, base), (3L, near), (4L, far)).toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairs(df, "doc_id", "text", maxHamming = 8)
+    val pairs = Dedup.simhashPairs(df, "doc_id", "text", maxHamming = 8).out
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L))) // identical: hamming 0
     assert(pairs.contains((1L, 3L)) && pairs.contains((2L, 3L))) // near
@@ -279,7 +280,7 @@ class DedupSpec extends SparkFunSuite {
     // result must be bit-identical to the one-shot operator
     val idxDir = java.nio.file.Files
       .createTempDirectory("band_index_spec").toString
-    Dedup.bandIndex(corpus, "doc_id", "text")
+    Dedup.bandIndex(corpus, "doc_id", "text").out
       .write.mode("overwrite").parquet(idxDir)
     val indexed = Dedup.minhashLshIncrementalIndexed(
       spark.read.parquet(idxDir), corpus, batch, "doc_id", "text", tau = 0.5)
@@ -288,8 +289,8 @@ class DedupSpec extends SparkFunSuite {
     assert(direct.map(p => (p._1, p._2)).contains((1L, 2L)))
     // the index carries the bucket-cap cut: cap 1 excludes every band
     // bucket the two near-identical corpus docs share
-    val full = Dedup.bandIndex(corpus, "doc_id", "text").count()
-    val capped = Dedup.bandIndex(corpus, "doc_id", "text", bucketCap = 1).count()
+    val full = Dedup.bandIndex(corpus, "doc_id", "text").out.count()
+    val capped = Dedup.bandIndex(corpus, "doc_id", "text", bucketCap = 1).out.count()
     assert(capped < full)
   }
 
@@ -305,7 +306,7 @@ class DedupSpec extends SparkFunSuite {
     val c = words.updated(16, "changedB").updated(32, "changedC").mkString(" ")
     val lone = (100 to 140).map(i => s"other$i").mkString(" ")
     val docs = Seq((7L, a), (3L, b), (9L, c), (5L, lone)).toDF("doc_id", "text")
-    val got = Dedup.nearDupGroups(docs, "doc_id", "text", tau = 0.93)
+    val got = Dedup.nearDupGroups(docs, "doc_id", "text", tau = 0.93).out
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got(7L) == 3L && got(3L) == 3L && got(9L) == 3L,
       s"expected one cluster canonical 3, got $got")
@@ -445,13 +446,13 @@ class DedupSpec extends SparkFunSuite {
       (4L, "", "en")                        // zero tokens — excluded
     ).toDF("doc_id", "text", "lang")
     val got = Dedup.containmentPairs(docs, "doc_id", "text", Seq("lang"),
-      tau = 0.9).collect()
+      tau = 0.9).out.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4))).toList
     assert(got == List((1L, 2L, 1.0, 0.25, 0.25)))
     // Jaccard at the same threshold structurally misses the quote shape
     assert(Dedup.ngramJaccardPairs(docs, "doc_id", "text", Seq("lang"),
-      tau = 0.9).count() == 0L)
+      tau = 0.9).out.count() == 0L)
   }
 
   test("containmentPairs: salted hot tier is lossless vs plain blocking") {
@@ -460,7 +461,7 @@ class DedupSpec extends SparkFunSuite {
       (i.toLong, s"tok${i % 5} tok${(i + 1) % 5} common", "en")
     }.toDF("doc_id", "text", "lang")
     def run(cap: Int) = Dedup.containmentPairs(docs, "doc_id", "text",
-      Seq("lang"), tau = 0.5, bucketCap = cap, saltGroups = 4)
+      Seq("lang"), tau = 0.5, bucketCap = cap, saltGroups = 4).out
       .orderBy("ia", "ib").collect().map(_.toSeq).toSeq
     assert(run(1000) == run(3)) // block of 30 forced through the grid
     assert(run(1000).nonEmpty)

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkFunSuite
@@ -67,5 +68,32 @@ class DriverFinishSpec extends SparkFunSuite {
     assert(rows.sorted(ord).map(_.getString(1)) == Seq("z", "a", "b", "c"))
     assert(DriverFinish.rowOrdering(
       schema.add("d", DateType), "s" -> Desc, "d" -> Asc).isEmpty)
+  }
+
+  test("driver finish equality: binary ids give the same output at cap 0 and the default cap") {
+    // binary ids are arrays on the JVM, equal only by reference: a replay
+    // that hashes them must stay on the distributed rounds
+    // (BlockingSelectionSpec pins the blocking-selection replay)
+    def bin(df: DataFrame, cs: String*) = cs.foldLeft(df)((d, c) =>
+      d.withColumn(c, col(c).cast("string").cast("binary")))
+    val edges = bin(Seq((1L, 2L, 0.9), (2L, 3L, 0.8), (1L, 3L, 0.7),
+        (3L, 4L, 0.6), (4L, 5L, 0.5), (5L, 6L, 0.95), (4L, 6L, 0.4))
+      .toDF("url_a", "url_b", "sim"), "url_a", "url_b")
+    val asg = bin((1L to 6L).map(i => (i, 1L)).toDF("id", "cluster_id"), "id")
+    def rows(df: => DataFrame) = df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => new String(b, "UTF-8")
+      case v => v
+    }).toSet
+    def same(key: String)(df: => DataFrame) = {
+      val dflt = rows(df)
+      assert(dflt.nonEmpty && dflt == withConf(s"graft.$key", "0")(rows(df)), key)
+      dflt
+    }
+    same("centers.driverFinishEdges")(
+      CenterClustering.centers(edges, "url_a", "url_b", "sim"))
+    val cores = same("core.driverFinishEdges")(Evaluation.coreNumbers(asg, edges))
+    assert(cores.map(_(2)) == Set(2L))
+    val truss = same("truss.driverFinishEdges")(Evaluation.trussEdges(asg, edges, 3))
+    assert(truss.size == 6) // the two triangles 1-2-3 and 4-5-6
   }
 }

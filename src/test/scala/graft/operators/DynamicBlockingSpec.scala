@@ -6,7 +6,7 @@ import graft.SparkFunSuite
 
 /** Pins [[Linkage.dynamicBlockKeys]]: blocks descend whole, records settle
   * at the COARSEST fitting depth, and never-fitting records are excluded
-  * but observable via [[Linkage.droppedDynamicRecords]]. */
+  * but observable via the result's `dropped`. */
 class DynamicBlockingSpec extends SparkFunSuite {
   import spark.implicits._
 
@@ -22,7 +22,7 @@ class DynamicBlockingSpec extends SparkFunSuite {
   private val parts = Seq(col("p0"), col("p1"), col("p2"))
 
   test("records settle at the coarsest depth whose block fits") {
-    val got = Linkage.dynamicBlockKeys(fixture, "id", parts, cap = 12L)
+    val got = Linkage.dynamicBlockKeys(fixture, "id", parts, cap = 12L).out
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
     val byId = got.map(t => t._1 -> ((t._2, t._3))).toMap
     // p0 block "x" holds 30 > 12 → descend; p1 blocks hold 10 ≤ 12 → depth 1
@@ -34,24 +34,24 @@ class DynamicBlockingSpec extends SparkFunSuite {
   }
 
   test("cap above the root size settles everything at depth 0") {
-    val got = Linkage.dynamicBlockKeys(fixture, "id", parts, cap = 50L)
+    val got = Linkage.dynamicBlockKeys(fixture, "id", parts, cap = 50L).out
     assert(got.where(col("depth") =!= 0).count() == 0)
     assert(got.count() == 50)
   }
 
   test("never-fitting records are observable, not silent") {
-    val dropped = Linkage.droppedDynamicRecords(fixture, "id", parts, cap = 12L)
-      .collect()
+    val blocked = Linkage.dynamicBlockKeys(fixture, "id", parts, cap = 12L)
+    val dropped = blocked.dropped.collect()
     assert(dropped.length == 20)
     assert(dropped.forall(_.getString(1) == "hot:hot:hot"))
     assert(dropped.forall(_.getLong(2) == 20L))
     // settled ∪ dropped = everything: nothing vanishes silently
-    val settled = Linkage.dynamicBlockKeys(fixture, "id", parts, cap = 12L).count()
+    val settled = blocked.out.count()
     assert(settled + dropped.length == 50)
   }
 
   test("tight cap pushes records to the finest depth") {
-    val got = Linkage.dynamicBlockKeys(fixture, "id", parts, cap = 3L)
+    val got = Linkage.dynamicBlockKeys(fixture, "id", parts, cap = 3L).out
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
     // p1 blocks hold 10 > 3; p2 blocks hold 2 ≤ 3 → depth 2 keys
     assert(got.length == 30)

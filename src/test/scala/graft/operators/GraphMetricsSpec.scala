@@ -115,7 +115,7 @@ class GraphMetricsSpec extends SparkFunSuite {
 
   private def bridgeSet(asgDf: org.apache.spark.sql.DataFrame,
       edgeDf: org.apache.spark.sql.DataFrame, cap: Int = 1 << 20) =
-    Evaluation.bridgeEdges(asgDf, edgeDf, maxClusterEdges = cap)
+    Evaluation.bridgeEdges(asgDf, edgeDf, maxClusterEdges = cap).out
       .where(col("is_bridge"))
       .select("url_a", "url_b").as[(Long, Long)].collect().toSet
 
@@ -130,7 +130,7 @@ class GraphMetricsSpec extends SparkFunSuite {
     val pend = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
       .toDF("url_a", "url_b")
     assert(bridgeSet(chainAsg, pend) == Set((3L, 4L)))
-    assert(Evaluation.bridgeEdges(chainAsg, pend).count() == 4L)
+    assert(Evaluation.bridgeEdges(chainAsg, pend).out.count() == 4L)
   }
 
   test("bridgeEdges: duplicates/reversals don't fake a cycle; " +
@@ -179,7 +179,7 @@ class GraphMetricsSpec extends SparkFunSuite {
 
   private def cutSet(asgDf: org.apache.spark.sql.DataFrame,
       edgeDf: org.apache.spark.sql.DataFrame) =
-    Evaluation.articulationRecords(asgDf, edgeDf)
+    Evaluation.articulationRecords(asgDf, edgeDf).out
       .where(col("is_articulation"))
       .select("id").as[Long].collect().toSet
 
@@ -198,7 +198,7 @@ class GraphMetricsSpec extends SparkFunSuite {
     assert(cutSet(asg5, twoTri) == Set(3L))
     assert(bridgeSet(asg5, twoTri) == Set.empty)
     // one row per edge-incident record, flag both ways
-    val all = Evaluation.articulationRecords(asg5, twoTri)
+    val all = Evaluation.articulationRecords(asg5, twoTri).out
       .as[(String, Long, Boolean)].collect().toSet
     assert(all == Set(("A", 1L, false), ("A", 2L, false), ("A", 3L, true),
       ("A", 4L, false), ("A", 5L, false)))
@@ -245,13 +245,13 @@ class GraphMetricsSpec extends SparkFunSuite {
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("url_a", "url_b")
     assert(bridgeSet(asgDf, chain, cap = 3) == Set.empty)
-    val dropped = Evaluation.droppedBridgeClusters(asgDf, chain,
-        maxClusterEdges = 3)
+    val dropped = Evaluation.bridgeEdges(asgDf, chain,
+        maxClusterEdges = 3).dropped
       .as[(String, Long)].collect().toSeq
     assert(dropped == Seq(("A", 4L)))
     // at cap ≥ size nothing drops
-    assert(Evaluation.droppedBridgeClusters(asgDf, chain,
-      maxClusterEdges = 4).count() == 0L)
+    assert(Evaluation.bridgeEdges(asgDf, chain,
+      maxClusterEdges = 4).dropped.count() == 0L)
   }
 
   // ------------------------------------------------------- triangles

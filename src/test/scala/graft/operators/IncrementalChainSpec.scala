@@ -55,7 +55,7 @@ class IncrementalChainSpec extends SparkFunSuite {
       rules = rules)
 
     // ---- run 1, incremental: index built once, batch-proportional work
-    val index = Dedup.bandIndex(corpus0, "id", "text")
+    val index = Dedup.bandIndex(corpus0, "id", "text").out
     val cross = Dedup.minhashLshIncrementalIndexed(
       index, corpus0, batch, "id", "text", tau)
       .select(col("batch_id").as("ia"), col("corpus_id").as("ib"))

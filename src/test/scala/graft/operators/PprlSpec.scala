@@ -64,7 +64,7 @@ class PprlSpec extends SparkFunSuite {
       (s"b$i", n.updated(2, 'x')) }
       .toDF("id", "nn")
       .select(col("id"), clk_sig(col("nn"), 512, 4).as("sig"))
-    val linked = Pprl.linkTables(a, b, "id", "sig", m = 512, theta = 0.6)
+    val linked = Pprl.linkTables(a, b, "id", "sig", m = 512, theta = 0.6).out
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
     // every twin survives; no cross-name pair reaches theta
     val pairs = linked.map(p => (p._1, p._2)).toSet
@@ -81,12 +81,12 @@ class PprlSpec extends SparkFunSuite {
       .select(col("id"), clk_sig(col("nn"), 512, 4).as("sig"))
     val capped = Pprl.linkTables(a, a, "id", "sig", m = 512,
       theta = 0.5, bucketCap = 10)
-    assert(capped.count() == 0)
-    val dropped = Pprl.droppedKeys(a, a, "id", "sig", m = 512, bucketCap = 10)
+    assert(capped.out.count() == 0)
+    val dropped = capped.dropped
     assert(dropped.count() == 16) // 8 bands x 2 sides
     assert(dropped.agg(min(col("n"))).head().getLong(0) == 40L)
     // with the default cap the same input links fully
-    assert(Pprl.linkTables(a, a, "id", "sig", m = 512, theta = 0.5)
+    assert(Pprl.linkTables(a, a, "id", "sig", m = 512, theta = 0.5).out
       .count() == 40L * 40L)
   }
 }

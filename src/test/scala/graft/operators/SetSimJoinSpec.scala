@@ -22,7 +22,7 @@ class SetSimJoinSpec extends SparkFunSuite {
       bucketCap: Int = 10000, hardCap: Int = Int.MaxValue,
       saltGroups: Int = 16) =
     SetSimJoin.prefixJaccardPairs(docs.toDF("id", "text"), "id", "text",
-      tau, bucketCap, hardCap, saltGroups)
+      tau, bucketCap, hardCap, saltGroups).out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
   test("prefix join equals brute force on random corpora at several taus") {
@@ -78,8 +78,9 @@ class SetSimJoinSpec extends SparkFunSuite {
     val capped = run(docs, 0.9, bucketCap = 5, hardCap = 10, saltGroups = 4)
     assert(capped.contains((101L, 102L, 1.0)))
     assert(!capped.exists(p => p._1 <= 30L))
-    val dropped = SetSimJoin.droppedPrefixTokens(
-      docs.toDF("id", "text"), "id", "text", tau = 0.9, hardCap = 10)
+    val dropped = SetSimJoin.prefixJaccardPairs(
+      docs.toDF("id", "text"), "id", "text", tau = 0.9, bucketCap = 5,
+      hardCap = 10, saltGroups = 4).dropped
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(dropped.nonEmpty && dropped.values.forall(_ > 10L))
   }
@@ -148,7 +149,7 @@ class SetSimJoinSpec extends SparkFunSuite {
       bucketCap: Int = 10000, hardCap: Int = Int.MaxValue,
       saltGroups: Int = 16) =
     SetSimJoin.edJoinPairs(docs.toDF("id", "text"), "id", "text",
-      k, q, bucketCap, hardCap, saltGroups)
+      k, q, bucketCap, hardCap, saltGroups).out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
   test("edJoin equals brute force on random corpora at several (k, q)") {
@@ -184,9 +185,9 @@ class SetSimJoinSpec extends SparkFunSuite {
   test("edJoin hardCap drops are observable") {
     val docs = (1L to 30L).map(i => (i, "samesame")) ++
       Seq((101L, "uniqpair"), (102L, "uniqpais"))
-    val dropped = SetSimJoin.droppedEdJoinGrams(
+    val dropped = SetSimJoin.edJoinPairs(
       docs.toDF("id", "text"), "id", "text", k = 1, q = 2, hardCap = 10)
-      .collect()
+      .dropped.collect()
     assert(dropped.nonEmpty && dropped.forall(_.getLong(2) > 10L))
   }
 
@@ -208,7 +209,7 @@ class SetSimJoinSpec extends SparkFunSuite {
       bucketCap: Int = 10000, hardCap: Int = Int.MaxValue,
       saltGroups: Int = 16) =
     SetSimJoin.prefixContainmentPairs(docs.toDF("id", "text"), "id",
-      "text", tau, bucketCap, hardCap, saltGroups)
+      "text", tau, bucketCap, hardCap, saltGroups).out
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("containment join equals brute force on random corpora") {
@@ -229,7 +230,7 @@ class SetSimJoinSpec extends SparkFunSuite {
     val big = (1 to 400).map(i => s"tok$i").mkString(" ")
     val docs = Seq((1L, big), (2L, "tok7 tok9"), (3L, "zzz yyy"))
     val got = SetSimJoin.prefixContainmentPairs(docs.toDF("id", "text"),
-        "id", "text", tau = 1.0)
+        "id", "text", tau = 1.0).out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
     // the subset pair is found with jaccard far below any symmetric bar
     assert(got.map(t => (t._1, t._2)).toSet == Set((1L, 2L)))
@@ -246,8 +247,9 @@ class SetSimJoinSpec extends SparkFunSuite {
     val plain = runContainment(docs, 0.8)
     val salted = runContainment(docs, 0.8, bucketCap = 1, saltGroups = 4)
     assert(salted == plain)
-    val dropped = SetSimJoin.droppedContainmentTokens(
-      docs.toDF("id", "text"), "id", "text", hardCap = 5).collect()
+    val dropped = SetSimJoin.prefixContainmentPairs(
+      docs.toDF("id", "text"), "id", "text", tau = 0.8, hardCap = 5)
+      .dropped.collect()
     assert(dropped.nonEmpty && dropped.forall(_.getLong(1) > 5L))
     intercept[IllegalArgumentException](
       runContainment(docs, 0.0))

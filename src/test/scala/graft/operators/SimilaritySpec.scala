@@ -108,7 +108,7 @@ class SimilaritySpec extends SparkFunSuite {
       .select("vec_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val lsh = Similarity.lshTopK(emb, "vec_id", "embedding", k = 3, dim = 64,
-      bands = 8, planesPerBand = 4)
+      bands = 8, planesPerBand = 4).out
       .select("vec_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute & lsh).size.toDouble / brute.size
@@ -121,7 +121,7 @@ class SimilaritySpec extends SparkFunSuite {
     val bruteCos = Similarity.bruteForceTopK(emb, "vec_id", "embedding", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
     Similarity.lshTopK(emb, "vec_id", "embedding", k = 3, dim = 64,
-      bands = 8, planesPerBand = 4).collect().foreach { r =>
+      bands = 8, planesPerBand = 4).out.collect().foreach { r =>
       val key = (r.getLong(0), r.getLong(1))
       bruteCos.get(key).foreach(c => assert(c == r.getDouble(3)))
     }
@@ -201,31 +201,30 @@ class SimilaritySpec extends SparkFunSuite {
       .toDF("vec_id", "embedding")
     val capped = Similarity.lshTopK(emb, "vec_id", "embedding", k = 3,
       dim = 8, bucketCap = 5, hardCap = 5)
-    assert(capped.count() == 0)
-    val dropped = Similarity.droppedLshBuckets(emb, "vec_id", "embedding",
-      dim = 8, hardCap = 5).collect()
+    assert(capped.out.count() == 0)
+    val dropped = capped.dropped.collect()
     assert(dropped.length == 4) // one bucket per band, all 12 members
     assert(dropped.forall(_.getLong(1) == 12L))
     // with the cap above the bucket size, candidates come back in full
     assert(Similarity.lshTopK(emb, "vec_id", "embedding", k = 3,
-      dim = 8, bucketCap = 12).count() == 12 * 3)
+      dim = 8, bucketCap = 12).out.count() == 12 * 3)
     // default hardCap: the same hot buckets ride the salted tier instead
     // of dropping — full recall with no straggler bucket task
     assert(Similarity.lshTopK(emb, "vec_id", "embedding", k = 3,
-      dim = 8, bucketCap = 5).count() == 12 * 3)
+      dim = 8, bucketCap = 5).out.count() == 12 * 3)
   }
 
   test("lsh salted tier is lossless (bucketCap=1 equals uncapped, bit-exact)") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val plain = Similarity.lshTopK(emb, "vec_id", "embedding", k = 3,
-      dim = 64, bands = 8, planesPerBand = 4, bucketCap = Int.MaxValue)
+      dim = 64, bands = 8, planesPerBand = 4, bucketCap = Int.MaxValue).out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .toSet
     // bucketCap=1 forces EVERY multi-member bucket through the salted
     // grid — the grid loses and invents nothing (the ANN analogue of
     // q_dedup_simhash_salted), including identical ranks and cosines
     val salted = Similarity.lshTopK(emb, "vec_id", "embedding", k = 3,
-      dim = 64, bands = 8, planesPerBand = 4, bucketCap = 1, saltGroups = 4)
+      dim = 64, bands = 8, planesPerBand = 4, bucketCap = 1, saltGroups = 4).out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .toSet
     assert(salted == plain)
@@ -235,14 +234,15 @@ class SimilaritySpec extends SparkFunSuite {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     // no bucket at this scale is anywhere near the default plain-tier cap
     // (so neither the salted tier nor any finite hardCap would engage)…
-    assert(Similarity.droppedLshBuckets(emb, "vec_id", "embedding",
-      dim = 64, bands = 8, planesPerBand = 4, hardCap = 2000).count() == 0)
+    assert(Similarity.lshTopK(emb, "vec_id", "embedding", k = 3,
+      dim = 64, bands = 8, planesPerBand = 4, hardCap = 2000).dropped
+      .count() == 0)
     // …so the capped result is IDENTICAL to an effectively-uncapped run
     val capped = Similarity.lshTopK(emb, "vec_id", "embedding", k = 3,
-      dim = 64, bands = 8, planesPerBand = 4)
+      dim = 64, bands = 8, planesPerBand = 4).out
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val uncapped = Similarity.lshTopK(emb, "vec_id", "embedding", k = 3,
-      dim = 64, bands = 8, planesPerBand = 4, bucketCap = Int.MaxValue)
+      dim = 64, bands = 8, planesPerBand = 4, bucketCap = Int.MaxValue).out
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == uncapped)
   }
@@ -253,7 +253,7 @@ class SimilaritySpec extends SparkFunSuite {
     val planes = Similarity.hyperplanes(64, 4, 6, 42L)
     assert(planes.length == 4 && planes(0).length == 6 && planes(0)(0).length == 64)
     // candidate pair count well below n^2
-    val cand = Similarity.lshTopK(emb, "vec_id", "embedding", k = 1000, dim = 64)
+    val cand = Similarity.lshTopK(emb, "vec_id", "embedding", k = 1000, dim = 64).out
       .count()
     assert(cand < n * n / 4, s"LSH produced near-quadratic candidates: $cand vs ${n * n}")
   }
@@ -261,14 +261,14 @@ class SimilaritySpec extends SparkFunSuite {
   test("multi-probe at probeBits=0 is BIT-identical to single-probe lshTopK") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val single = Similarity.lshTopK(emb, "vec_id", "embedding", k = 3,
-        dim = 64, bands = 8, planesPerBand = 4)
+        dim = 64, bands = 8, planesPerBand = 4).out
       .orderBy("vec_id", "rank").collect().map(_.toSeq).toSeq
     val zero = Similarity.lshMultiProbeTopK(emb, "vec_id", "embedding",
-        k = 3, dim = 64, bands = 8, planesPerBand = 4, probeBits = 0)
+        k = 3, dim = 64, bands = 8, planesPerBand = 4, probeBits = 0).out
       .orderBy("vec_id", "rank").collect().map(_.toSeq).toSeq
     assert(zero == single)
     intercept[IllegalArgumentException](Similarity.lshMultiProbeTopK(emb,
-      "vec_id", "embedding", k = 3, dim = 64, probeBits = 2))
+      "vec_id", "embedding", k = 3, dim = 64, probeBits = 2).out)
   }
 
   test("multi-probe recall >= single-probe recall, scores stay exact") {
@@ -284,9 +284,9 @@ class SimilaritySpec extends SparkFunSuite {
     // fewer planes per band -> sparser single-probe recall; 1-bit probes
     // must recover a visible share of the one-plane-flip misses
     val rSingle = recallOf(Similarity.lshTopK(emb, "vec_id", "embedding",
-      k = 3, dim = 64, bands = 4, planesPerBand = 8))
+      k = 3, dim = 64, bands = 4, planesPerBand = 8).out)
     val rMulti = recallOf(Similarity.lshMultiProbeTopK(emb, "vec_id",
-      "embedding", k = 3, dim = 64, bands = 4, planesPerBand = 8))
+      "embedding", k = 3, dim = 64, bands = 4, planesPerBand = 8).out)
     info(f"single=$rSingle%.3f multi=$rMulti%.3f (bands=4, planes=8)")
     assert(rMulti >= rSingle)
     assert(rMulti > rSingle + 0.05,
@@ -295,7 +295,7 @@ class SimilaritySpec extends SparkFunSuite {
     val bruteCos = Similarity.bruteForceTopK(emb, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
     Similarity.lshMultiProbeTopK(emb, "vec_id", "embedding", k = 3,
-      dim = 64, bands = 4, planesPerBand = 8).collect().foreach { r =>
+      dim = 64, bands = 4, planesPerBand = 8).out.collect().foreach { r =>
       bruteCos.get((r.getLong(0), r.getLong(1)))
         .foreach(c => assert(c == r.getDouble(3)))
     }
@@ -329,15 +329,15 @@ class SimilaritySpec extends SparkFunSuite {
     // bucketCap=1 forces EVERY multi-member index bucket through the
     // asymmetric salted join; result must equal the uncapped plain path
     val plain = Similarity.lshMultiProbeTopK(emb, "vec_id", "embedding",
-        k = 3, dim = 64, bands = 4, planesPerBand = 6)
+        k = 3, dim = 64, bands = 4, planesPerBand = 6).out
       .orderBy("vec_id", "rank").collect().map(_.toSeq).toSeq
     val salted = Similarity.lshMultiProbeTopK(emb, "vec_id", "embedding",
         k = 3, dim = 64, bands = 4, planesPerBand = 6, bucketCap = 1,
-        saltGroups = 8)
+        saltGroups = 8).out
       .orderBy("vec_id", "rank").collect().map(_.toSeq).toSeq
     assert(salted == plain)
     val repart = Similarity.lshMultiProbeTopK(emb.repartition(11), "vec_id",
-        "embedding", k = 3, dim = 64, bands = 4, planesPerBand = 6)
+        "embedding", k = 3, dim = 64, bands = 4, planesPerBand = 6).out
       .orderBy("vec_id", "rank").collect().map(_.toSeq).toSeq
     assert(repart == plain)
   }

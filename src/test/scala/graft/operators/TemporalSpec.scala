@@ -25,7 +25,7 @@ class TemporalSpec extends SparkFunSuite {
     import spark.implicits._
     val df = rows.toDF("id", "grp", "s", "e")
     Temporal.intervalCandidates(df, "id", "s", "e", w,
-        partitionCols = Seq("grp"), bucketCap = bucketCap)
+        partitionCols = Seq("grp"), bucketCap = bucketCap).out
       .as[(Long, Long, Long)].collect().toSet
   }
 
@@ -58,7 +58,7 @@ class TemporalSpec extends SparkFunSuite {
       (5L, "g", Some(9L), Some(3L))             // inverted
     ).toDF("id", "grp", "s", "e")
     val got = Temporal.intervalCandidates(df, "id", "s", "e", 4L,
-      partitionCols = Seq("grp"))
+      partitionCols = Seq("grp")).out
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSet == Set((1L, 2L)))
   }
@@ -81,12 +81,12 @@ class TemporalSpec extends SparkFunSuite {
     import spark.implicits._
     val rows = (1L to 30L).map(i => (i, "g", 0L, 5L)) // all in one cell
     val df = rows.toDF("id", "grp", "s", "e")
-    val dropped = Temporal.droppedIntervalBuckets(df, "id", "s", "e", 100L,
-      partitionCols = Seq("grp"), hardCap = 10)
+    val capped = Temporal.intervalCandidates(df, "id", "s", "e", 100L,
+      partitionCols = Seq("grp"), bucketCap = 5, hardCap = 10)
+    val dropped = capped.dropped
     assert(dropped.count() == 1L &&
       dropped.select("bucket_n").head().getLong(0) == 30L)
-    val pairs = Temporal.intervalCandidates(df, "id", "s", "e", 100L,
-      partitionCols = Seq("grp"), bucketCap = 5, hardCap = 10)
+    val pairs = capped.out
     assert(pairs.count() == 0L)
   }
 
