@@ -343,12 +343,6 @@ case class MongeElkanJw(left: Expression, right: Expression) extends StrSimExpre
     copy(left = l, right = r)
 }
 
-/** Levenshtein distance capped at a compile-time `k`
-  * ([[StrSimKernels.levenshteinCapped]]): the exact code-point distance
-  * when ≤ k, else k+1. Banded O(k·n) DP — the scale-tier edit-distance
-  * pre-filter for candidate pruning at 10^12 pairs (full quadratic scoring
-  * only runs on survivors). `k` must be a foldable non-negative literal so
-  * codegen bakes it into the call site. */
 /** Confusion-weighted edit SIMILARITY (OCR/web-noise comparator):
   * 1 − dist/(2·max(n,m)) with substitution cost 0/1/2 (identical /
   * listed visually-confusable pair / other) and indel cost 2 — the
@@ -389,6 +383,12 @@ case class ConfusionLevDist(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** Levenshtein distance capped at a compile-time `k`
+  * ([[StrSimKernels.levenshteinCapped]]): the exact code-point distance
+  * when ≤ k, else k+1. Banded O(k·n) DP — the scale-tier edit-distance
+  * pre-filter for candidate pruning at 10^12 pairs (full quadratic scoring
+  * only runs on survivors). `k` must be a foldable non-negative literal so
+  * codegen bakes it into the call site. */
 case class LevenshteinCapped(left: Expression, right: Expression, k: Int)
   extends BinaryExpression with Serializable {
   require(k >= 0, s"levenshtein_capped requires k >= 0, got $k")

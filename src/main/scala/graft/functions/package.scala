@@ -468,11 +468,6 @@ package object functions {
   def bloom_dice(a: Column, b: Column): Column =
     wrap(BloomDice(expr(a), expr(b)))
 
-  /** SQL function names → expression builders. One convention everywhere:
-    * every similarity kernel is `<name>_sim` (`levenshtein` alone would
-    * shadow Spark's built-in DISTANCE of the same name, and a mixed
-    * bare/suffixed surface invites silent semantic mixups — the suffix
-    * states these return a [0,1] similarity, not a distance). */
   /** Extract a foldable non-negative integer literal argument, or raise a
     * CLEAR analysis-time error (a non-foldable column/expression would
     * otherwise surface as an obscure eval/cast exception at plan time). */
@@ -507,6 +502,11 @@ package object functions {
       messageParameters = Map(
         "funcName" -> s"`$fn`", "paramName" -> s"`$arg`", "paramType" -> tpe))
 
+  /** SQL function names → expression builders. One convention everywhere:
+    * every similarity kernel is `<name>_sim` (`levenshtein` alone would
+    * shadow Spark's built-in DISTANCE of the same name, and a mixed
+    * bare/suffixed surface invites silent semantic mixups — the suffix
+    * states these return a [0,1] similarity, not a distance). */
   val sqlFunctions: Map[String, Seq[Expression] => Expression] = Map(
     "levenshtein_sim" -> (es => LevenshteinSim(es(0), es(1))),
     "jaro_sim" -> (es => JaroSim(es(0), es(1))),

@@ -183,12 +183,10 @@ object Dedup {
     val bandedM = Frames.shared(banded)
     // `base` feeds BOTH sides of the verification join
     val baseM = Frames.shared(base)
-    val good = Tiers.underCap(bandedM, Seq("key"), bucketCap)
-      .select(col("key"), col("id"))
-    val cand = good.select(col("key"), col("id").as("ia"))
-      .join(good.select(col("key"), col("id").as("ib")), "key")
-      .where(col("ia") < col("ib"))
-      .select(col("ia"), col("ib")).distinct()
+    // hardCap = bucketCap: the cold tier only
+    val cand = Tiers.pairs(bandedM, Seq("key"), "id", bucketCap,
+        hardCap = bucketCap, saltGroups = 1)
+      .select(col("id_a").as("ia"), col("id_b").as("ib")).distinct()
     Capped(cand
       .join(baseM.select(col("id").as("ia"), col("toks").as("ta")), "ia")
       .join(baseM.select(col("id").as("ib"), col("toks").as("tb")), "ib")

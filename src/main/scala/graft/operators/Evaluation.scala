@@ -799,46 +799,54 @@ object Evaluation {
       intra.schema("__gu").copy(name = aCol),
       intra.schema("__gv").copy(name = bCol),
       StructField("is_bridge", BooleanType, nullable = false)))
-    Capped(intra
-      .groupByKey { r: Row =>
-        val c = r.get(2); if (c == null) "" else c.toString
-      }(Encoders.STRING)
-      .flatMapGroups { (_: String, it: Iterator[Row]) =>
-        // buffer at most cap+1 rows: a monster cluster is detected and
-        // skipped without ever materializing past the cap
-        val buf = new scala.collection.mutable.ArrayBuffer[Row]()
-        var over = false
-        while (it.hasNext && !over) {
-          buf += it.next()
-          if (buf.length > maxClusterEdges) over = true
+    val flagged = perCluster(intra, maxClusterEdges, outSchema) {
+      (buf, nodes, eu, ev) =>
+        val bridge = simpleBridges(nodes.length, eu, ev)
+        buf.iterator.zipWithIndex.map { case (r, k) =>
+          Row(r.get(2), r.get(0), r.get(1), bridge(k))
         }
-        if (over) Iterator.empty
+    }
+    Capped(flagged, overCapClusters(intra, clusterCol, maxClusterEdges))
+  }
+
+  /** `f(edges, nodes, eu, ev)` per cluster of `intra`: its (__gu, __gv,
+    * __gc) edge rows, its distinct nodes in first-seen order, and each
+    * edge's endpoints as indices into `nodes` (ids compare by value,
+    * binary ids by content). Clusters are grouped by the SQL value of
+    * `__gc` — the grouping [[overCapClusters]] sizes — and at most
+    * `cap` + 1 rows are buffered: a cluster over the cap is detected and
+    * skipped without ever materializing past it. */
+  private def perCluster(intra: DataFrame, cap: Int, outSchema: StructType)(
+      f: (collection.IndexedSeq[Row], collection.IndexedSeq[Any],
+        Array[Int], Array[Int]) => Iterator[Row]): DataFrame =
+    intra.groupBy(col("__gc"))
+      .as[Row, Row](Encoders.row(intra.select(col("__gc")).schema),
+        Encoders.row(intra.schema))
+      .flatMapGroups { (_: Row, it: Iterator[Row]) =>
+        val buf = new scala.collection.mutable.ArrayBuffer[Row]()
+        while (it.hasNext && buf.length <= cap) buf += it.next()
+        if (buf.length > cap) Iterator.empty
         else {
-          // output rows carry their own source row's cluster, so even if
-          // the string group key aliased two distinct cluster values,
-          // nothing mislabels: aliased clusters are vertex-disjoint
-          // subgraphs and bridges of a disjoint union equal the
-          // per-part runs.
-          val m = buf.length
           val index = new java.util.HashMap[Any, Integer]()
+          val nodes = new scala.collection.mutable.ArrayBuffer[Any]()
           def of(x: Any): Int = {
-            var i = index.get(x)
-            if (i == null) { i = index.size(); index.put(x, i) }
+            val key = x match {
+              case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+              case v => v
+            }
+            var i = index.get(key)
+            if (i == null) { i = nodes.length; index.put(key, i); nodes += x }
             i
           }
+          val m = buf.length
           val eu = new Array[Int](m); val ev = new Array[Int](m)
           var j = 0
           while (j < m) {
             eu(j) = of(buf(j).get(0)); ev(j) = of(buf(j).get(1)); j += 1
           }
-          val bridge = simpleBridges(index.size(), eu, ev)
-          buf.iterator.zipWithIndex.map { case (r, k) =>
-            Row(r.get(2), r.get(0), r.get(1), bridge(k))
-          }
+          f(buf, nodes, eu, ev)
         }
-      }(Encoders.row(outSchema)),
-      overCapClusters(intra, clusterCol, maxClusterEdges))
-  }
+      }(Encoders.row(outSchema))
 
   /** (clusterCol, n_edges) of the clusters over `maxClusterEdges` — the
     * ones the per-cluster passes skip, sized exactly by one map-side-
@@ -952,56 +960,14 @@ object Evaluation {
       intra.schema("__gc").copy(name = clusterCol),
       intra.schema("__gu").copy(name = idCol),
       StructField("is_articulation", BooleanType, nullable = false)))
-    Capped(intra
-      .groupByKey { r: Row =>
-        val c = r.get(2); if (c == null) "" else c.toString
-      }(Encoders.STRING)
-      .flatMapGroups { (_: String, it: Iterator[Row]) =>
-        val buf = new scala.collection.mutable.ArrayBuffer[Row]()
-        var over = false
-        while (it.hasNext && !over) {
-          buf += it.next()
-          if (buf.length > maxClusterEdges) over = true
+    val flagged = perCluster(intra, maxClusterEdges, outSchema) {
+      (buf, nodes, eu, ev) =>
+        val cut = lowlinkPass(nodes.length, eu, ev)._2
+        nodes.iterator.zipWithIndex.map { case (id, k) =>
+          Row(buf.head.get(2), id, cut(k))
         }
-        if (over) Iterator.empty
-        else {
-          val m = buf.length
-          val index = new java.util.LinkedHashMap[Any, Integer]()
-          // each node's cluster comes from ITS OWN first edge row (not
-          // the group's first row): the string group key could in
-          // principle alias two distinct cluster values, and a node's
-          // (id → cluster) binding is the one thing intraClusterEdges
-          // guarantees per row. Aliased clusters sharing one Tarjan run
-          // is harmless — they are vertex-disjoint subgraphs, and
-          // bridges/cuts of a disjoint union equal the per-part runs.
-          val clusterOf = new scala.collection.mutable.ArrayBuffer[Any]()
-          def of(x: Any, c: Any): Int = {
-            var i = index.get(x)
-            if (i == null) {
-              i = index.size(); index.put(x, i); clusterOf += c
-            }
-            i
-          }
-          val eu = new Array[Int](m); val ev = new Array[Int](m)
-          var j = 0
-          while (j < m) {
-            val c = buf(j).get(2)
-            eu(j) = of(buf(j).get(0), c); ev(j) = of(buf(j).get(1), c)
-            j += 1
-          }
-          val cut = lowlinkPass(index.size(), eu, ev)._2
-          val keys = index.keySet().iterator()
-          new Iterator[Row] {
-            var k = 0
-            def hasNext: Boolean = keys.hasNext
-            def next(): Row = {
-              val id = keys.next(); val r = Row(clusterOf(k), id, cut(k))
-              k += 1; r
-            }
-          }
-        }
-      }(Encoders.row(outSchema)),
-      overCapClusters(intra, clusterCol, maxClusterEdges))
+    }
+    Capped(flagged, overCapClusters(intra, clusterCol, maxClusterEdges))
   }
 
   /** Per-cluster triangle census over the verified match graph — the

@@ -535,11 +535,6 @@ object FellegiSunter {
     LevelModel(lambda, grid("m"), grid("u"))
   }
 
-  /** The Fellegi-Sunter decision rule (the other half of the 1969 paper):
-    * band the likelihood ratio into `link` (lr ≥ upperLr) / `possible`
-    * (the clerical-review band) / `non_link` (lr ≤ lowerLr). In production
-    * the thresholds are chosen from target false-match/false-non-match
-    * rates; here they are caller-supplied. Pure projection. */
   /** Match-weight histogram — the Splink-style diagnostic view of a
     * scored pair population: likelihood ratios binned by POWERS OF TWO
     * (bin e covers [2ᵉ, 2ᵉ⁺¹); Splink's "match weight" axis is log₂(lr),
@@ -606,6 +601,11 @@ object FellegiSunter {
           .as("share_ratio"))
   }
 
+  /** The Fellegi-Sunter decision rule (the other half of the 1969 paper):
+    * band the likelihood ratio into `link` (lr ≥ upperLr) / `possible`
+    * (the clerical-review band) / `non_link` (lr ≤ lowerLr). In production
+    * the thresholds are chosen from target false-match/false-non-match
+    * rates; here they are caller-supplied. Pure projection. */
   def classify(scored: DataFrame, upperLr: Double, lowerLr: Double,
       lrCol: String = "lr"): DataFrame = {
     require(lowerLr <= upperLr,

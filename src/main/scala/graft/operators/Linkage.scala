@@ -220,30 +220,6 @@ object Linkage {
     (clusters, cc)
   }
 
-  /** Sorted-neighborhood blocking (Hernández-Stolfo): order records by a
-    * sort key and emit every pair within `window` consecutive positions —
-    * the classic complement to hash blocking (equi-key buckets miss pairs
-    * whose keys differ in a low-order character; a sorted neighborhood
-    * catches them, at O(n·w) candidate cost).
-    *
-    * Scale design — NO single-partition window anywhere:
-    *  1. global order is established by `repartitionByRange` on
-    *     (sortKey, id) (range exchange, the same shape as a distributed
-    *     sort) + per-partition sort;
-    *  2. the global rank is `per-partition row_number + partition offset`,
-    *     where the offsets come from a P-row count aggregate prefix-summed
-    *     by a window over partition IDs — P rows is planner-metadata-sized,
-    *     and the offset frame is broadcast back (never collected);
-    *  3. neighborhood pairs are a BANDED EQUI-JOIN on `rank div (w-1)`:
-    *     each right row also offers its predecessor bucket, so a pair at
-    *     rank distance ≤ w-1 meets in exactly one bucket cell — candidate
-    *     generation is a plain shuffle join, never a cross product and
-    *     never a giant window state.
-    *
-    * `idCol` must be unique per record (it is the rank tie-break, making
-    * the rank — and therefore the pair set — deterministic and
-    * partitioning-independent). Output: (<id>_a, <id>_b, rank_a, rank_b)
-    * with rank_a < rank_b; ranks are 1-based in (sortKey, id) order. */
   /** Suffix-array blocking keys (Aizawa & Oyama 2005): every suffix of the
     * normalized key value with length >= `minLen` becomes a blocking key,
     * so records agreeing on any TAIL of the key ("1 Main St Apt 4" vs
@@ -272,9 +248,8 @@ object Linkage {
       explode(transform(
         sequence(lit(1), greatest(length(col("k")) - lit(minLen) + 1, lit(1))),
         i => col("k").substr(i, length(col("k"))))).as("suffix"))
-    val sized = sufs.groupBy(col("suffix")).agg(count(lit(1)).as("n"))
-      .where(col("n") <= maxBlockSize)
-    sufs.join(sized, "suffix").select(col("id"), col("suffix"))
+    Tiers.underCap(sufs, Seq("suffix"), maxBlockSize)
+      .select(col("id"), col("suffix"))
   }
 
   /** Token blocking (the schema-agnostic ER baseline — Papadakis et al.):
@@ -317,7 +292,7 @@ object Linkage {
     * [[candidatePairs]] key schema (key, url). */
   def blockingProfile(keys: DataFrame, bucketCap: Int = 200,
       hardCap: Int = 100000): DataFrame = {
-    val sized = keys.groupBy(col("key")).agg(count(lit(1)).as("n"))
+    val sized = Tiers.sizes(keys, Seq("key"))
     val pairs2 = col("n").cast("decimal(38,0)") *
       (col("n") - 1).cast("decimal(38,0)")
     sized.agg(
@@ -360,6 +335,30 @@ object Linkage {
       .select(col(idCol), col(sortKeyCol), col("__rnk"))
   }
 
+  /** Sorted-neighborhood blocking (Hernández-Stolfo): order records by a
+    * sort key and emit every pair within `window` consecutive positions —
+    * the classic complement to hash blocking (equi-key buckets miss pairs
+    * whose keys differ in a low-order character; a sorted neighborhood
+    * catches them, at O(n·w) candidate cost).
+    *
+    * Scale design — NO single-partition window anywhere:
+    *  1. global order is established by `repartitionByRange` on
+    *     (sortKey, id) (range exchange, the same shape as a distributed
+    *     sort) + per-partition sort;
+    *  2. the global rank is `per-partition row_number + partition offset`,
+    *     where the offsets come from a P-row count aggregate prefix-summed
+    *     by a window over partition IDs — P rows is planner-metadata-sized,
+    *     and the offset frame is broadcast back (never collected);
+    *  3. neighborhood pairs are a BANDED EQUI-JOIN on `rank div (w-1)`:
+    *     each right row also offers its predecessor bucket, so a pair at
+    *     rank distance ≤ w-1 meets in exactly one bucket cell — candidate
+    *     generation is a plain shuffle join, never a cross product and
+    *     never a giant window state.
+    *
+    * `idCol` must be unique per record (it is the rank tie-break, making
+    * the rank — and therefore the pair set — deterministic and
+    * partitioning-independent). Output: (<id>_a, <id>_b, rank_a, rank_b)
+    * with rank_a < rank_b; ranks are 1-based in (sortKey, id) order. */
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String, sortKeyCol: String,
       window: Int, partitions: Int = 0): DataFrame = {
     require(window >= 2, s"sorted-neighborhood window must be >= 2, got $window")
@@ -1004,31 +1003,9 @@ object Linkage {
   def commonNeighborPairs(edges: DataFrame, entityCol: String,
       neighborCol: String, minCommon: Long = 1L, bucketCap: Int = 1000,
       hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
-    require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
-    // The distinct edge frame fans out to FIVE consumers (deg, sized, the
-    // eligibility join, and the two final degree joins); for winnowing/CDC
-    // callers each would re-run the full sha256 fingerprint pass.
-    val e = Frames.shared(edges
-      .select(col(entityCol).as("id"), col(neighborCol).as("nb"))
-      .where(col("id").isNotNull && col("nb").isNotNull)
-      .distinct())
-    val deg = e.groupBy(col("id")).agg(count(lit(1)).as("__deg"))
-    val sized = Tiers.sizes(e, Seq("nb"))
-    // A pair's common-neighbor count is bounded by min(deg_a, deg_b), so
-    // entities with deg < minCommon cannot appear in the output: drop them
-    // BEFORE pair generation (provably lossless — the final
-    // `common_neighbors >= minCommon` filter would discard every pair they
-    // touch anyway). Tier routing and the dropped-bucket record stay on the
-    // UNFILTERED bucket sizes (`sized` above), so which buckets are
-    // cold/salted/dropped is unchanged — only ineligible members leave the
-    // buckets. On high-minCommon workloads (shared-span winnowing) this
-    // shrinks the quadratic bucket explosion by orders of magnitude.
-    val eligible =
-      if (minCommon > 1L)
-        e.join(deg.where(col("__deg") >= minCommon).select(col("id")), "id")
-      else e
-    Tiers.pairs(eligible, Seq("nb"), "id", bucketCap, hardCap, saltGroups,
-        sized = Some(sized))
+    val (pairs, deg) = neighborPairs(edges, entityCol, neighborCol,
+      minCommon, bucketCap, hardCap, saltGroups, payload = Nil)
+    pairs
       .groupBy(col("id_a").as("url_a"), col("id_b").as("url_b"))
       .agg(count(lit(1)).as("common_neighbors"))
       .where(col("common_neighbors") >= minCommon)
@@ -1049,27 +1026,48 @@ object Linkage {
   def adamicAdarPairs(edges: DataFrame, entityCol: String,
       neighborCol: String, minCommon: Long = 1L, bucketCap: Int = 1000,
       hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
-    require(minCommon >= 1)
-    // same consumers as [[commonNeighborPairs]]' edge frame
-    val e = Frames.shared(edges
-      .select(col(entityCol).as("id"), col(neighborCol).as("nb"))
-      .where(col("id").isNotNull && col("nb").isNotNull)
-      .distinct())
-    val sized = Tiers.sizes(e, Seq("nb"))
-    // same lossless min(deg) prefilter as [[commonNeighborPairs]]: tier
-    // routing stays on unfiltered sizes, only ineligible members leave
-    val deg0 = e.groupBy(col("id")).agg(count(lit(1)).as("__deg"))
-    val eligible =
-      if (minCommon > 1L)
-        e.join(deg0.where(col("__deg") >= minCommon).select(col("id")), "id")
-      else e
     // the neighbor degree rides along as payload
-    Tiers.pairs(eligible, Seq("nb"), "id", bucketCap, hardCap, saltGroups,
-        payload = Seq("n"), sized = Some(sized))
+    val (pairs, _) = neighborPairs(edges, entityCol, neighborCol,
+      minCommon, bucketCap, hardCap, saltGroups, payload = Seq("n"))
+    pairs
       .groupBy(col("id_a").as("url_a"), col("id_b").as("url_b"))
       .agg(count(lit(1)).as("common_neighbors"),
         sum(lit(1.0) / log(col("n_a").cast("double"))).as("adamic_adar"))
       .where(col("common_neighbors") >= minCommon)
+  }
+
+  /** The body [[commonNeighborPairs]] and [[adamicAdarPairs]] share:
+    * ([[Tiers.pairs]] of entities by shared neighbor, one row per pair per
+    * shared neighbor, with `payload`; the (id, __deg) entity degrees). */
+  private def neighborPairs(edges: DataFrame, entityCol: String,
+      neighborCol: String, minCommon: Long, bucketCap: Int, hardCap: Int,
+      saltGroups: Int, payload: Seq[String]): (DataFrame, DataFrame) = {
+    require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
+    // The distinct edge frame fans out to up to FIVE consumers (deg, sized,
+    // the eligibility join, and commonNeighborPairs' two final degree
+    // joins); for winnowing/CDC callers each would re-run the full sha256
+    // fingerprint pass.
+    val e = Frames.shared(edges
+      .select(col(entityCol).as("id"), col(neighborCol).as("nb"))
+      .where(col("id").isNotNull && col("nb").isNotNull)
+      .distinct())
+    val deg = e.groupBy(col("id")).agg(count(lit(1)).as("__deg"))
+    val sized = Tiers.sizes(e, Seq("nb"))
+    // A pair's common-neighbor count is bounded by min(deg_a, deg_b), so
+    // entities with deg < minCommon cannot appear in the output: drop them
+    // BEFORE pair generation (provably lossless — the final
+    // `common_neighbors >= minCommon` filter would discard every pair they
+    // touch anyway). Tier routing and the dropped-bucket record stay on the
+    // UNFILTERED bucket sizes (`sized` above), so which buckets are
+    // cold/salted/dropped is unchanged — only ineligible members leave the
+    // buckets. On high-minCommon workloads (shared-span winnowing) this
+    // shrinks the quadratic bucket explosion by orders of magnitude.
+    val eligible =
+      if (minCommon > 1L)
+        e.join(deg.where(col("__deg") >= minCommon).select(col("id")), "id")
+      else e
+    (Tiers.pairs(eligible, Seq("nb"), "id", bucketCap, hardCap, saltGroups,
+        payload, sized = Some(sized)), deg)
   }
 
   /** Candidate-pair PROVENANCE across blocking key families — the audit
@@ -1083,24 +1081,20 @@ object Linkage {
     * Per-(family, key) blocks over `bucketCap` are excluded (the cold
     * tier's own rule — provenance describes the pairs the pipeline would
     * actually generate); feed hot families through [[candidatePairs]]'
-    * salted tiers separately if their pairs matter. Shapes: one sizing
-    * groupBy + join-back, one equi-self-join per qualifying block, one
-    * pair-keyed groupBy whose collect_set is bounded by the family count
-    * (sorted and comma-joined — a flat string, pinned order,
+    * salted tiers separately if their pairs matter. Shapes: [[Tiers.pairs]]
+    * with `hardCap = bucketCap` (its cold tier only) on (family, key)
+    * blocks, one pair-keyed groupBy whose collect_set is bounded by the
+    * family count (sorted and comma-joined — a flat string, pinned order,
     * hash-reproducible and join-friendly downstream). */
   def pairProvenance(keys: DataFrame, bucketCap: Int = 200,
       familyCol: String = "family", keyCol: String = "key",
       idCol: String = "url"): DataFrame = {
     require(bucketCap >= 1, s"bucketCap must be >= 1, got $bucketCap")
-    val sized = keys.groupBy(col(familyCol), col(keyCol))
-      .agg(count(lit(1)).as("__n")).where(col("__n") <= bucketCap)
-      .select(col(familyCol), col(keyCol))
-    val good = keys.join(sized, Seq(familyCol, keyCol))
-    val a = good.select(col(familyCol), col(keyCol), col(idCol).as("url_a"))
-    val b = good.select(col(familyCol), col(keyCol), col(idCol).as("url_b"))
-    a.join(b, Seq(familyCol, keyCol)).where(col("url_a") < col("url_b"))
-      .groupBy(col("url_a"), col("url_b"))
-      .agg(array_join(sort_array(collect_set(col(familyCol))), ",")
+    Tiers.pairs(keys.select(col(familyCol), col(keyCol), col(idCol)),
+        Seq(familyCol, keyCol), idCol, bucketCap, hardCap = bucketCap,
+        saltGroups = 1, payload = Seq(familyCol))
+      .groupBy(col(s"${idCol}_a").as("url_a"), col(s"${idCol}_b").as("url_b"))
+      .agg(array_join(sort_array(collect_set(col(s"${familyCol}_a"))), ",")
         .as("families"), count(lit(1)).as("n_keys"))
   }
 

@@ -284,22 +284,6 @@ object Profiling {
         .otherwise(col("raw_estimate")))
   }
 
-  /** HLL OVERLAP estimation — [[columnValueOverlap]]'s 100 TB shape:
-    * exact schema matching joins the distinct value sets (a corpus-scale
-    * shuffle per column pair); this face needs only the ≤ 2^p-row
-    * REGISTER tables of each side. Per (col_a, col_b) pair:
-    * union registers = bucket-wise max (the HLL merge property), then
-    * raw estimates est_a / est_b / est_union and inclusion-exclusion
-    * `inter_est` = est_a + est_b − est_union, `jaccard_est` =
-    * max(0, inter) / est_union (inclusion-exclusion can go slightly
-    * negative on near-disjoint sets — clamped at the jaccard face,
-    * reported raw in inter_est so the noise is visible). All doubles are
-    * single pinned IEEE expressions over exact integers (raw-estimate
-    * discipline, no ln) — hash-gate-safe; accuracy is the standard
-    * 1.04/√m per term, spec-pinned against exact overlap in sbt.
-    *
-    * Shapes: each register table fans out |otherSide| times (model-sized
-    * — registers, not data), one groupBy-max merge, one fold per pair. */
   /** Bucket-wise-max merged registers for every (col_a, col_b) pair —
     * the union sketches. Model-sized: registers × |otherSide| columns. */
   private def mergedPairRegisters(regsA: DataFrame,

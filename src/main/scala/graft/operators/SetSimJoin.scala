@@ -261,11 +261,9 @@ object SetSimJoin {
     * 100 TB shape: probe volume = prefix rows (Jaccard-join sized);
     * index volume = one row per token occurrence (the same inverted
     * index a search engine shuffles); candidate cost concentrates in
-    * high-df index tokens, governed by the house 3-tier policy on the
-    * INDEX token's df — plain <= bucketCap, salted asymmetric grid <=
-    * hardCap (probes replicate saltGroups ways, index rows salt by
-    * id-hash — lossless), dropped beyond (`dropped` lists those (tok, n)
-    * index tokens). */
+    * high-df index tokens, routed by [[Tiers.probe]] on the INDEX
+    * token's df (`dropped` lists the (tok, n) index tokens over
+    * `hardCap`). */
   def prefixContainmentPairs(docs: DataFrame, idCol: String,
       textCol: String, tau: Double, bucketCap: Int = 10000,
       hardCap: Int = Int.MaxValue, saltGroups: Int = 16): Capped = {
@@ -276,10 +274,9 @@ object SetSimJoin {
     val probes = Frames.shared(prefixRows(b, tau)
       .select(col("tok"), col("id").as("qid")))
     val index = b.select(col("id"), explode(col("toks")).as("tok"))
-    val sized = index.groupBy(col("tok")).agg(count(lit(1)).as("n"))
-    val dropped = sized.where(col("n") > hardCap)
-    // no index token `dropped` reports may reach the cold join either
-    val coldCap = math.min(bucketCap, hardCap)
+    def candidates(prb: DataFrame, payload: Seq[String]): Capped =
+      Tiers.probe(index, prb, Seq("tok"), "id", "qid", bucketCap, hardCap,
+        saltGroups, payload)
 
     // DENSE-VOCABULARY fast path (optimization guide §2.3 "shuffle fewer
     // bytes" / §1.2 step 1): when the corpus vocabulary fits in 64
@@ -292,6 +289,7 @@ object SetSimJoin {
     // cuts the dedup exchange from the full candidate volume to the
     // result volume. Vocabulary probing is one map-combinable distinct
     // count; vocab > 64 takes the general array path below, identically.
+    val sized = Tiers.sizes(index, Seq("tok"))
     val vocab: Array[String] =
       if (sized.limit(65).count() <= 64)
         sized.select(col("tok")).collect().map(_.getString(0)).sorted
@@ -307,28 +305,14 @@ object SetSimJoin {
       val bm = Frames.shared(b.select(col("id"), maskOf(col("toks")).as("m")))
       val probesM = probes.join(bm.select(col("id").as("qid"),
         col("m").as("mq")), "qid")
-      val keyed = index.join(sized, "tok")
-      val cold = keyed.where(col("n") <= coldCap)
-        .join(probesM, "tok")
-        .select(col("qid"), col("id"), col("mq"))
-      val hotIdx = keyed.where(col("n") > bucketCap && col("n") <= hardCap)
-        .withColumn("salt", pmod(xxhash64(col("id")), lit(saltGroups)))
-      val hotPrb = probesM
-        .join(sized.where(col("n") > bucketCap && col("n") <= hardCap)
-          .select(col("tok")), "tok")
-        .select(col("tok"), col("qid"), col("mq"),
-          explode(array((0 until saltGroups).map(g => lit(g)): _*)).as("salt"))
-      val hot = hotIdx.join(hotPrb, Seq("tok", "salt"))
-        .select(col("qid"), col("id"), col("mq"))
-      val withMasks = cold.unionAll(hot)
-        .where(col("qid") =!= col("id"))
-        .join(bm.select(col("id"), col("m").as("mi")), "id")
       val inter = expr("bit_count(mq & mi)")
       val la = expr("bit_count(mq)")
       val lb = expr("bit_count(mi)")
       // verify INLINE before the dedup shuffle; values are the exact
       // integer counts the array path produces, divided in the same order
-      val verified = withMasks
+      candidates(probesM, Seq("mq")).map(_
+        .where(col("qid") =!= col("id"))
+        .join(bm.select(col("id"), col("m").as("mi")), "id")
         .select(least(col("qid"), col("id")).as("ia"),
           greatest(col("qid"), col("id")).as("ib"),
           when(col("qid") < col("id"),
@@ -342,31 +326,15 @@ object SetSimJoin {
           (inter.cast("double") /
             (la + lb - inter).cast("double")).as("jaccard"))
         .where(greatest(col("containment_a"), col("containment_b")) >= tau)
-      return Capped(verified.groupBy(col("ia"), col("ib"))
+        .groupBy(col("ia"), col("ib"))
         .agg(max(col("containment_a")).as("containment_a"),
           max(col("containment_b")).as("containment_b"),
-          max(col("jaccard")).as("jaccard")), dropped)
-    }
-
-    val keyed = index.join(sized, "tok")
-    val cold = keyed.where(col("n") <= coldCap)
-      .join(probes, "tok")
-      .select(col("qid"), col("id"))
-    val hotIdx = keyed.where(col("n") > bucketCap && col("n") <= hardCap)
-      .withColumn("salt", pmod(xxhash64(col("id")), lit(saltGroups)))
-    val hotPrb = probes
-      .join(sized.where(col("n") > bucketCap && col("n") <= hardCap)
-        .select(col("tok")), "tok")
-      .select(col("tok"), col("qid"),
-        explode(array((0 until saltGroups).map(g => lit(g)): _*)).as("salt"))
-    val hot = hotIdx.join(hotPrb, Seq("tok", "salt"))
-      .select(col("qid"), col("id"))
-    val cand = cold.unionAll(hot)
+          max(col("jaccard")).as("jaccard")))
+    } else candidates(probes, Nil).map(_
       .where(col("qid") =!= col("id"))
       .select(least(col("qid"), col("id")).as("ia"),
         greatest(col("qid"), col("id")).as("ib"))
       .distinct()
-    Capped(cand
       .join(b.select(col("id").as("ia"), col("toks").as("ta")), "ia")
       .join(b.select(col("id").as("ib"), col("toks").as("tb")), "ib")
       .select(col("ia"), col("ib"),
@@ -377,7 +345,6 @@ object SetSimJoin {
         (size(array_intersect(col("ta"), col("tb"))).cast("double") /
           size(array_union(col("ta"), col("tb"))).cast("double"))
           .as("jaccard"))
-      .where(greatest(col("containment_a"), col("containment_b")) >= tau),
-      dropped)
+      .where(greatest(col("containment_a"), col("containment_b")) >= tau))
   }
 }

@@ -136,12 +136,6 @@ object Similarity {
 
   // ------------------------------------------------------------------ IVF
 
-  /** Spherical-k-means coarse quantizer fit on a deterministic bounded
-    * sample. The sample (≤ `sampleN` vectors, picked by hash order so it is
-    * corpus-wide and reproducible) is collected to the driver — the model
-    * is O(nCentroids × dim) like MLlib's KMeans; the DATA never is. Lloyd
-    * iterations run in a fixed order in double precision, so the returned
-    * centroids are bit-deterministic for a given (input, seed). */
   /** Public fit entry for the fit-once/probe-many shape: fit the coarse
     * quantizer once, persist it via [[saveIvf]], and every later probe job
     * [[loadCentroids]] instead of re-collecting the sample and re-running
@@ -152,6 +146,12 @@ object Similarity {
     fitCentroids(emb.select(col(idCol).as("id"), col(vecCol).as("v")),
       nCentroids, iters, sampleN, seed, hashOrder)
 
+  /** Spherical-k-means coarse quantizer fit on a deterministic bounded
+    * sample. The sample (≤ `sampleN` vectors, picked by hash order so it is
+    * corpus-wide and reproducible) is collected to the driver — the model
+    * is O(nCentroids × dim) like MLlib's KMeans; the DATA never is. Lloyd
+    * iterations run in a fixed order in double precision, so the returned
+    * centroids are bit-deterministic for a given (input, seed). */
   private[operators] def fitCentroids(base: DataFrame, nCentroids: Int,
       iters: Int, sampleN: Int, seed: Long,
       hashOrder: String = "xxhash64"): Array[Array[Float]] = {
@@ -453,11 +453,9 @@ object Similarity {
     * by two primary-key equi-joins for one cosine per UNIQUE pair
     * (lshTopK instead scores per collision and max-dedups — equal
     * results, but under a probe fan-out that would score each pair up
-    * to 2·(planesPerBand+1)·bands times). Index-side skew tiers: plain
-    * join for buckets ≤ bucketCap; bucketCap < n ≤ hardCap via an
-    * asymmetric salted equi-join (index rows salted by id-hash, probes
-    * replicated saltGroups ways — lossless); n > hardCap dropped, and
-    * listed in `dropped` under [[lshTopK]]'s (key, n) schema and keys. */
+    * to 2·(planesPerBand+1)·bands times). Index-side skew tiers are
+    * [[Tiers.probe]]'s; `dropped` lists the buckets over `hardCap` under
+    * [[lshTopK]]'s (key, n) schema and keys. */
   def lshMultiProbeTopK(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, dim: Int, bands: Int = 4, planesPerBand: Int = 6,
       probeBits: Int = 1, seed: Long = 42L, bucketCap: Int = 2000,
@@ -467,8 +465,6 @@ object Similarity {
     val sigs = lshSigs(emb, idCol, vecCol, dim, bands, planesPerBand, seed)
     val index = sigs.select(
       concat(col("band"), lit(":"), col("sig")).as("key"), col("id"))
-    val sized = index.groupBy(col("key")).agg(count(lit(1)).as("n"))
-    val keyed = index.join(sized, "key")
     val probeSigs =
       if (probeBits == 0) array(col("sig"))
       else array(col("sig") +: (0 until planesPerBand).map(j =>
@@ -478,31 +474,20 @@ object Similarity {
         explode(probeSigs).as("psig"))
       .select(concat(col("band"), lit(":"), col("psig")).as("key"),
         col("qid"))
-    // no bucket `dropped` reports may reach the cold join either
-    val cold = keyed.where(col("n") <= math.min(bucketCap, hardCap))
-      .join(probes, "key")
-      .select(col("qid"), col("id"))
-    val hotIdx = keyed.where(col("n") > bucketCap && col("n") <= hardCap)
-      .withColumn("salt", pmod(xxhash64(col("id")), lit(saltGroups)))
-    val hotPrb = probes
-      .join(sized.where(col("n") > bucketCap && col("n") <= hardCap)
-        .select(col("key")), "key")
-      .select(col("key"), col("qid"),
-        explode(array((0 until saltGroups).map(g => lit(g)): _*)).as("salt"))
-    val hot = hotIdx.join(hotPrb, Seq("key", "salt"))
-      .select(col("qid"), col("id"))
-    val cand = cold.unionAll(hot)
-      .where(col("qid") =!= col("id")).distinct()
     val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
       graft.functions.vec_norm(col(vecCol)).as("nrm"))
-    val scored = cand
-      .join(base.select(col("id").as("qid"), col("v").as("va"),
-        col("nrm").as("na")), "qid")
-      .join(base.select(col("id"), col("v").as("vb"),
-        col("nrm").as("nb")), "id")
-      .select(col("qid").as("vec_id"), col("id").as("neighbor_id"),
-        cosPre(col("va"), col("na"), col("vb"), col("nb")).as("cos"))
-    Capped(topK(scored, k), sized.where(col("n") > hardCap))
+    Tiers.probe(index, probes, Seq("key"), "id", "qid", bucketCap, hardCap,
+        saltGroups).map { cand =>
+      val scored = cand.select(col("qid"), col("id"))
+        .where(col("qid") =!= col("id")).distinct()
+        .join(base.select(col("id").as("qid"), col("v").as("va"),
+          col("nrm").as("na")), "qid")
+        .join(base.select(col("id"), col("v").as("vb"),
+          col("nrm").as("nb")), "id")
+        .select(col("qid").as("vec_id"), col("id").as("neighbor_id"),
+          cosPre(col("va"), col("na"), col("vb"), col("nb")).as("cos"))
+      topK(scored, k)
+    }
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher SIGIR'09) — merge

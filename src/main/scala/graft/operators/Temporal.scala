@@ -96,28 +96,6 @@ object Temporal {
       Linkage.droppedBuckets(keys, hardCap))
   }
 
-  /** SCD-2 validity-interval construction — master-data versioning from
-    * raw observation history: given per-entity observations
-    * (id, ts, attribute values), collapse CONSECUTIVE runs of identical
-    * values into versions (id, values…, version, valid_from, valid_to)
-    * where valid_from = the run's first observation timestamp, valid_to =
-    * the next version's valid_from (NULL for the current version — the
-    * open interval), version = 1-based change ordinal. The output feeds
-    * [[intervalCandidates]] directly: temporal linkage wants versions,
-    * not observations, and A-value → B-value → A-value history yields
-    * THREE versions (this is run-length encoding over time, not a
-    * group-by on values).
-    *
-    * Pinned order: observations sort by (ts, values… as strings) inside
-    * the entity — simultaneous contradictory observations get a
-    * deterministic order instead of a nondeterministic winner; exact
-    * duplicate rows collapse into their run harmlessly. Null timestamps
-    * are out of scope (excluded, pinned); null values participate as
-    * values (a NULL-valued run is a version like any other).
-    *
-    * Scale shape: two windows (lag-change flag, running sum) and one
-    * lead, ALL partitioned by entity id — entities are the parallelism
-    * unit, nothing global; the groupBy is map-side combinable. */
   /** Distributed point-in-time (as-of) join — for each probe row
     * (id, ts, …) attach the LATEST version of that entity with
     * version-ts <= probe-ts: the lookup every temporal-linkage pipeline
@@ -206,6 +184,28 @@ object Temporal {
         col("__last.__vts").as(outTs): _*)
   }
 
+  /** SCD-2 validity-interval construction — master-data versioning from
+    * raw observation history: given per-entity observations
+    * (id, ts, attribute values), collapse CONSECUTIVE runs of identical
+    * values into versions (id, values…, version, valid_from, valid_to)
+    * where valid_from = the run's first observation timestamp, valid_to =
+    * the next version's valid_from (NULL for the current version — the
+    * open interval), version = 1-based change ordinal. The output feeds
+    * [[intervalCandidates]] directly: temporal linkage wants versions,
+    * not observations, and A-value → B-value → A-value history yields
+    * THREE versions (this is run-length encoding over time, not a
+    * group-by on values).
+    *
+    * Pinned order: observations sort by (ts, values… as strings) inside
+    * the entity — simultaneous contradictory observations get a
+    * deterministic order instead of a nondeterministic winner; exact
+    * duplicate rows collapse into their run harmlessly. Null timestamps
+    * are out of scope (excluded, pinned); null values participate as
+    * values (a NULL-valued run is a version like any other).
+    *
+    * Scale shape: two windows (lag-change flag, running sum) and one
+    * lead, ALL partitioned by entity id — entities are the parallelism
+    * unit, nothing global; the groupBy is map-side combinable. */
   def scd2Intervals(obs: DataFrame, idCol: String, tsCol: String,
       valueCols: Seq[String]): DataFrame = {
     require(valueCols.nonEmpty, "need at least one tracked value column")

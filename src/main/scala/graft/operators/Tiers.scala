@@ -30,7 +30,13 @@ final case class Capped(out: DataFrame, dropped: DataFrame) {
   *     `Int.MaxValue` where dropping is opt-in.
   *
   * Operators whose policy is a single cap (LSH band caps) keep tiers 1
-  * and 3 only: [[underCap]] and [[overCap]] with that cap.
+  * and 3 only: [[pairs]] with `hardCap = bucketCap`, or [[underCap]] and
+  * [[overCap]] with that cap.
+  *
+  * Asymmetric joins (a probe frame against an inverted index) route on
+  * the INDEX side's key sizes only, with the same three tiers:
+  * [[probe]]. Salting — the id-hash salt and its G-way replication —
+  * happens in this module and nowhere else.
   *
   * Bucket sizing is a groupBy (map-side partial combine) plus a join-back,
   * never a window count: a window buffers each key's rows in one
@@ -82,6 +88,45 @@ private[operators] object Tiers {
     else cold.union(saltedSelfJoin(
       keyed.where(n > bucketCap && n <= hardCap),
       keys, id, payload, saltGroups))
+  }
+
+  /** Probe rows joined with the index members sharing their key, one row
+    * per (probe, index member, shared key): (keys…, `probeId`, `indexId`,
+    * `probePayload`…). Only the index side is sized ([[sizes]] per key),
+    * and each key is routed by its index size n:
+    *
+    *  1. n ≤ min(`bucketCap`, `hardCap`) — cold: plain equi-join;
+    *  2. `bucketCap` < n ≤ `hardCap` — salted: index rows take the salt
+    *     pmod(xxhash64(id), G), probe rows are replicated G ways
+    *     (G = `saltGroups`), and the join is on (keys, salt), so a hot
+    *     key's probe × index work spreads over G reducers, losslessly;
+    *     when `hardCap` ≤ `bucketCap` this tier is left out of the plan;
+    *  3. n > `hardCap` — dropped: the returned record is [[overCap]] of
+    *     the index.
+    *
+    * `indexId` and `probeId` must differ. Callers dedup (a pair sharing
+    * several keys repeats) and verify. */
+  def probe(index: DataFrame, probes: DataFrame, keys: Seq[String],
+      indexId: String, probeId: String, bucketCap: Int, hardCap: Int,
+      saltGroups: Int, probePayload: Seq[String] = Nil): Capped = {
+    require(indexId != probeId, s"index and probe ids share the name $indexId")
+    val sized = sizes(index, keys)
+    val keyed = index.join(sized, keys)
+    val n = col("n")
+    val out = (keys ++ Seq(probeId, indexId) ++ probePayload).map(col)
+    val cold = keyed.where(n <= math.min(bucketCap, hardCap))
+      .join(probes, keys).select(out: _*)
+    val joined = if (hardCap <= bucketCap) cold else {
+      val hot = n > bucketCap && n <= hardCap
+      val idx = keyed.where(hot)
+        .withColumn("__salt", pmod(xxhash64(col(indexId)), lit(saltGroups)))
+      val prb = probes.join(sized.where(hot).select(keys.map(col): _*), keys)
+        .select((keys ++ (probeId +: probePayload)).map(col) :+
+          explode(array((0 until saltGroups).map(g => lit(g)): _*))
+            .as("__salt"): _*)
+      cold.unionAll(idx.join(prb, keys :+ "__salt").select(out: _*))
+    }
+    Capped(joined, overCap(index, keys, hardCap))
   }
 
   /** Salted (fragment-replicate grid) self-join: member u of bucket k with

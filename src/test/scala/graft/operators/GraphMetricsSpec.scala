@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
@@ -252,6 +253,55 @@ class GraphMetricsSpec extends SparkFunSuite {
     // at cap ≥ size nothing drops
     assert(Evaluation.bridgeEdges(asgDf, chain,
       maxClusterEdges = 4).dropped.count() == 0L)
+  }
+
+  test("bridgeEdges/articulationRecords: a null and an empty-string cluster " +
+      "are grouped apart; null-cluster edges are out") {
+    // "" holds chain 1-2-3, null holds chain 4-5-6: 2 edges each, 4
+    // together, cap 3
+    val asgDf = Seq((1L, ""), (2L, ""), (3L, ""), (4L, null), (5L, null),
+      (6L, null)).toDF("id", "cluster_id")
+    val e = Seq((1L, 2L), (2L, 3L), (4L, 5L), (5L, 6L)).toDF("url_a", "url_b")
+    val bridges = Evaluation.bridgeEdges(asgDf, e, maxClusterEdges = 3)
+    assert(bridges.out.as[(String, Long, Long, Boolean)].collect().toSet ==
+      Set(("", 1L, 2L, true), ("", 2L, 3L, true)))
+    assert(bridges.dropped.count() == 0L)
+    val cuts = Evaluation.articulationRecords(asgDf, e, maxClusterEdges = 3)
+    assert(cuts.out.as[(String, Long, Boolean)].collect().toSet ==
+      Set(("", 1L, false), ("", 2L, true), ("", 3L, false)))
+    assert(cuts.dropped.count() == 0L)
+  }
+
+  test("bridgeEdges/articulationRecords: binary cluster and record ids " +
+      "give the flags of the same ids as strings") {
+    // A: cycle 1-2-3 + pendant 3-4; B: chain 5-6-7
+    val asgDf = Seq((1L, "A"), (2L, "A"), (3L, "A"), (4L, "A"), (5L, "B"),
+      (6L, "B"), (7L, "B")).toDF("id", "cluster_id")
+    val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (5L, 6L), (6L, 7L))
+      .toDF("url_a", "url_b")
+    val bin = (c: String) => col(c).cast("string").cast("binary")
+    val hexId = (c: String) => hex(bin(c))
+    def flags(asg: org.apache.spark.sql.DataFrame,
+        edges: org.apache.spark.sql.DataFrame, ids: String => Column) = (
+      Evaluation.bridgeEdges(asg, edges).out
+        .select(col("cluster_id").cast("string"), ids("url_a"), ids("url_b"),
+          col("is_bridge"))
+        .as[(String, String, String, Boolean)].collect().toSet,
+      Evaluation.articulationRecords(asg, edges).out
+        .select(col("cluster_id").cast("string"), ids("id"),
+          col("is_articulation"))
+        .as[(String, String, Boolean)].collect().toSet)
+    val byString = flags(asgDf, e, c => col(c).cast("string"))
+    assert(byString._1.count(_._4) == 3 && byString._2.count(_._3) == 2)
+    val binCluster = asgDf.withColumn("cluster_id", col("cluster_id").cast("binary"))
+    assert(flags(binCluster, e, c => col(c).cast("string")) == byString)
+    // binary record ids too, compared through their hex form
+    val hexAsg = asgDf.select(hexId("id").as("id"), col("cluster_id"))
+    val hexEdges = e.select(hexId("url_a").as("url_a"), hexId("url_b").as("url_b"))
+    val binAsg = binCluster.withColumn("id", bin("id"))
+    val binEdges = e.select(bin("url_a").as("url_a"), bin("url_b").as("url_b"))
+    assert(flags(binAsg, binEdges, c => hex(col(c))) ==
+      flags(hexAsg, hexEdges, col))
   }
 
   // ------------------------------------------------------- triangles
