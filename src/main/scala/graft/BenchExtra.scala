@@ -14,7 +14,13 @@ import org.apache.spark.sql.SparkSession
   * Usage:
   *   runMain graft.BenchExtra q_weakest_links q_truss ...
   *   runMain graft.BenchExtra --explain-dir plans/r06 --suffix _before q_truss
-  *   runMain graft.BenchExtra --repeat 2 q_truss
+  *   runMain graft.BenchExtra --repeat 6 q_truss
+  *
+  * Timing discards JIT warm-up: a query is re-run until two consecutive
+  * samples agree within 10% (at most `--repeat` runs), and the median and
+  * IQR of the samples from that agreeing pair on are reported; the median
+  * is the value in the JSON `queries` map. A query that never settles
+  * reports its last sample, marked `unsettled`.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -58,19 +64,40 @@ object BenchExtra {
         val w = new java.io.PrintWriter(s"$d/$name$suffix.txt")
         try w.write(plan) finally w.close()
       }
-      val times = (1 to repeat).map { _ =>
+      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      while (times.length < repeat && settledAt(times).isEmpty) {
         spark.sparkContext.setJobDescription(name)
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
+        times += (System.nanoTime() - t0) / 1e9
       }
       spark.sparkContext.setJobDescription(null)
-      results(name) = times
-      println(f"TIMED $name%-34s ${times.map(t => f"$t%.2f").mkString(" ")}")
+      val settled = settledAt(times)
+      val kept = times.drop(settled.getOrElse(times.length - 1)).toSeq
+      results(name) = kept
+      val stats = if (kept.isEmpty) "" else f"  median ${quantile(kept, 0.5)}%.2f IQR " +
+        f"${quantile(kept, 0.75) - quantile(kept, 0.25)}%.2f over ${kept.length}" +
+        (if (settled.isEmpty) " unsettled" else "")
+      println(f"TIMED $name%-34s ${times.map(t => f"$t%.2f").mkString(" ")}$stats")
     }
     val js = results.collect { case (k, v) if v.nonEmpty =>
-      "\"" + k + "\":" + v.min }.mkString("{", ",", "}")
+      "\"" + k + "\":" + quantile(v, 0.5) }.mkString("{", ",", "}")
     println(s"""{"metric":"subset","unit":"sec","queries":$js,"sf":"$sfDir","cpus":$cpus}""")
     spark.stop()
+  }
+
+  /** Index of the first of the first two consecutive samples within 10% of
+    * each other: the samples before it are warm-up. */
+  private def settledAt(times: collection.Seq[Double]): Option[Int] =
+    (1 until times.length).find(i =>
+      math.abs(times(i) - times(i - 1)) <= 0.1 * math.max(times(i), times(i - 1)))
+      .map(_ - 1)
+
+  /** Linear-interpolation quantile of a non-empty sample. */
+  private def quantile(xs: Seq[Double], q: Double): Double = {
+    val s = xs.sorted
+    val pos = q * (s.length - 1)
+    val lo = pos.toInt
+    s(lo) + (s(math.min(lo + 1, s.length - 1)) - s(lo)) * (pos - lo)
   }
 }

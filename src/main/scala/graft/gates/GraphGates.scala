@@ -632,7 +632,10 @@ private[graft] object GraphGates {
       // recursive peel: each iteration recomputes naive common-neighbor
       // support over the PREVIOUS round's edges and keeps support >= k-2;
       // rounds emit only when something was removed, so max(iter) is the
-      // fixpoint (monotone peeling).
+      // fixpoint (monotone peeling). A round that peels every edge emits
+      // nothing, so max(iter) then names the unpeeled round: the final
+      // support >= k-2 filter drops nothing at a non-empty fixpoint and
+      // every row in that case.
       s"""WITH RECURSIVE pairs AS (
         |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
         |  FROM customer a JOIN customer b
@@ -688,6 +691,7 @@ private[graft] object GraphGates {
         |  CAST(coalesce(tsup.s, 0) AS BIGINT) AS support
         |FROM truss t
         |JOIN asg au ON t.u = au.id
-        |LEFT JOIN tsup ON tsup.u = t.u AND tsup.v = t.v""".stripMargin),
+        |LEFT JOIN tsup ON tsup.u = t.u AND tsup.v = t.v
+        |WHERE coalesce(tsup.s, 0) >= 1""".stripMargin),
   )
 }

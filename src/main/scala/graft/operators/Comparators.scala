@@ -60,7 +60,9 @@ object Comparators {
   }
 
   /** Arity 3 phonetic string comparison: 2 = byte-exact, 1 = same
-    * American Soundex key ([[Phonetic.soundexKey]]), 0 = else. */
+    * American Soundex key ([[Phonetic.soundexKey]]), 0 = else. Library
+    * surface: a comparator for caller-built FS comparison vectors; no
+    * pipeline stage or gate uses it. */
   def phoneticLevels(a: Column, b: Column): Column =
     guarded(a, b)(
       when(a === b, 2L)
@@ -83,7 +85,10 @@ object Comparators {
 
   /** Arity bands.size + 2 numeric comparison by ABSOLUTE difference:
     * top = exact, then one level per widening band (|a−b| ≤ bandᵢ),
-    * 0 = outside all bands. `bands` strictly increasing. */
+    * 0 = outside all bands. `bands` strictly increasing. Library surface:
+    * the absolute-difference sibling of [[numericPctLevels]], for
+    * caller-built FS comparison vectors; no pipeline stage or gate uses
+    * it. */
   def numericAbsLevels(a: Column, b: Column, bands: Seq[Double]): Column =
     bandedLevels(a, b, abs(a - b), bands)
 

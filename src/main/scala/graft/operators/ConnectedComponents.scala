@@ -48,7 +48,8 @@ object ConnectedComponents {
     * maxIter ≥ 2·log₂(expected nodes) + slack: 50 covers n ≈ 2^22 chains
     * and any real web graph (whose effective diameter is tiny — empirically
     * < 10 rounds); for a 10^12-node adversarially-chained graph raise it
-    * to ~90 via this helper. */
+    * to ~90 via this helper. Library surface: for callers that pass
+    * `maxIter`; no pipeline stage calls it. */
   def maxIterFor(expectedNodes: Long): Int =
     2 * (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, expectedNodes))) + 10
 

@@ -520,7 +520,9 @@ object FellegiSunter {
       fields.map(j => byKey(("u", j, -1))).toIndexedSeq)
   }
 
-  /** Load a [[LevelModel]] persisted by [[saveLevelModel]] — bit-exact. */
+  /** Load a [[LevelModel]] persisted by [[saveLevelModel]] — bit-exact.
+    * Library surface: the score-only job's half of the multi-level model
+    * round trip; no pipeline stage persists a LevelModel. */
   def loadLevelModel(spark: org.apache.spark.sql.SparkSession,
       path: String): LevelModel = {
     val (lambda, byKey) = collectParams(spark, path)

@@ -21,8 +21,13 @@ import graft.functions.{bag_within, jaro_winkler_sim, levenshtein_within, sorens
   *    discriminative signal and would quadratically explode the pair
   *    count); the drop is observable in the metrics output, never silent.
   *  - The pair self-join is an equi-join on the bucket key with AQE skew
-  *    handling; pair dedup is a groupBy on (url_a, url_b), partial
-  *    aggregation makes it map-side combining.
+  *    handling. Each page's `name_norm` rides through it as payload, so
+  *    pair dedup is a groupBy on (url_a, url_b, name_norm_a, name_norm_b)
+  *    (partial aggregation makes it map-side combining) and scoring joins
+  *    no names back. Because the names are grouping columns, a match
+  *    filter chained lazily onto [[score]] is pushed below the dedup into
+  *    the blocking join's condition: only pairs that clear θ are shuffled
+  *    for dedup (PipelinePlanSpec asserts the plan).
   *  - html (BINARY) is never read by any stage after extraction — column
   *    pruning keeps it out of every shuffle (verified in PipelinePlanSpec).
   */
@@ -68,44 +73,71 @@ object Linkage {
     * explode → k-column min-agg form paid a full shuffle of every shingle
     * row for nothing. `hashFamily` as in [[Dedup.minhashLshPairs]]:
     * `xxhash64` for production, `sha256` for the ANSI-SQL-reproducible
-    * variant the driver gate hash-checks against DuckDB. */
+    * variant gate q_minhash_band_keys checks against DuckDB. Output:
+    * (url, key). */
   def minhashBandKeys(extracted: DataFrame, numHashes: Int = 12,
       bands: Int = 6, shingleK: Int = 3,
-      hashFamily: String = "xxhash64"): DataFrame = {
+      hashFamily: String = "xxhash64"): DataFrame =
+    bandKeys(extracted, Nil, numHashes, bands, shingleK, hashFamily)
+
+  /** (url, key, `carry`…): the band keys of [[minhashBandKeys]] with the
+    * `carry` columns of `extracted` riding along in the same projection. */
+  private def bandKeys(extracted: DataFrame, carry: Seq[String],
+      numHashes: Int, bands: Int, shingleK: Int,
+      hashFamily: String): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
-    val sig = extracted.select(col("url"),
+    val carried = carry.map(col)
+    val sig = extracted.select(col("url") +: carried :+
       graft.functions.minhash_sig_chars(col("name_norm"), shingleK, numHashes,
-        hashFamily).as("sig"))
-    val bandKeys = (0 until bands).map { b =>
+        hashFamily).as("sig"): _*)
+    val bandCols = (0 until bands).map { b =>
       val elems = (0 until rows).map(r => element_at(col("sig"), b * rows + r + 1))
       val h =
         if (hashFamily == "sha256") sha2(concat_ws("|", elems: _*), 256)
         else xxhash64(elems: _*)
       concat(lit(s"mh$b:"), h).as(s"band$b")
     }
-    sig.select(col("url") +: bandKeys: _*)
-      .select(col("url"), explode(array((0 until bands).map(b => col(s"band$b")): _*)).as("key"))
+    sig.select((col("url") +: carried) ++ bandCols: _*)
+      .select(col("url") +:
+        explode(array((0 until bands).map(b => col(s"band$b")): _*)).as("key") +:
+        carried: _*)
   }
 
   /** Stage 2b — full candidate key set: normalized-url key ∪ MinHash band
-    * keys. Output: (url, key). */
+    * keys, each row carrying its page's normalized name for scoring.
+    * Output: (url, key, name_norm). `name_norm` is a function of `url`
+    * (one extracted row per url), the precondition [[candidatePairs]]
+    * states for carried columns. */
   def candidateKeys(extracted: DataFrame, numHashes: Int = 12, bands: Int = 6,
       shingleK: Int = 3): DataFrame = {
-    val urlKeys = extracted.select(col("url"), concat(lit("host:"), col("block_key")).as("key"))
-    urlKeys.union(minhashBandKeys(extracted, numHashes, bands, shingleK))
+    val urlKeys = extracted.select(col("url"),
+      concat(lit("host:"), col("block_key")).as("key"), col("name_norm"))
+    urlKeys.union(bandKeys(extracted, Seq("name_norm"), numHashes, bands,
+      shingleK, "xxhash64"))
   }
 
   /** Stage 3 — candidate pairs: urls sharing any key, url_a < url_b,
     * deduped, under the three-tier skew policy of [[Tiers]] (web blocking
-    * keys are Zipfian); [[droppedBuckets]] records the dropped tier. */
+    * keys are Zipfian); [[droppedBuckets]] records the dropped tier.
+    *
+    * Every column of `keys` other than `url` and `key` is carried as
+    * [[Tiers.pairs]] payload: over [[candidateKeys]] the output is
+    * (url_a, url_b, name_norm_a, name_norm_b), over a bare (url, key)
+    * frame it is (url_a, url_b). Precondition: each carried column is a
+    * function of `url`, so the dedup over all output columns removes the
+    * same duplicates as one over (url_a, url_b). The dedup stays a
+    * `distinct()` over every column — with the payload as grouping
+    * columns, a later filter on it (the match threshold) is pushed below
+    * the dedup, which `dropDuplicates("url_a", "url_b")` would block. */
   def candidatePairs(keys: DataFrame, bucketCap: Int = 200,
       hardCap: Int = 100000, saltGroups: Int = 16,
       distinctPairs: Boolean = true): DataFrame = {
+    val payload = keys.columns.toSeq.filterNot(Set("url", "key"))
     // the key frame feeds the sizing aggregate AND the join-back: callers
     // often derive it from an expensive pass (sha256 MinHash band keys)
     val all = Tiers.pairs(Frames.shared(keys), Seq("key"), "url", bucketCap,
-      hardCap, saltGroups)
+      hardCap, saltGroups, payload)
     // `distinctPairs = false` is for callers whose key frame is FUNCTIONAL
     // (each url carries exactly one key — e.g. adaptive-SNM segment ids):
     // within a bucket each unordered pair meets exactly once (cold join by
@@ -121,20 +153,28 @@ object Linkage {
     Tiers.overCap(keys, Seq("key"), hardCap, "bucket_n")
 
   /** Stage 4 — pairwise scoring: composite Jaro-Winkler + Sørensen-Dice on
-    * the normalized names (the north-star composite). Pure projection over
-    * the candidate pairs joined with the (url → name) side — both joins are
-    * equi-joins on url. */
+    * the normalized names (the north-star composite). A pure projection
+    * over pairs that carry their names ([[candidatePairs]] over
+    * [[candidateKeys]]); bare (url_a, url_b) pairs get the names from
+    * `extracted` by two url equi-joins ([[withNames]]).
+    * Output: (url_a, url_b, jw, dice, score). */
   def score(pairs: DataFrame, extracted: DataFrame): DataFrame =
     composite(withNames(pairs, extracted))
 
-  /** The candidate pairs with both sides' normalized names joined on as
-    * `name_a` / `name_b` — the two url equi-joins every scorer runs. */
-  private def withNames(pairs: DataFrame, extracted: DataFrame): DataFrame = {
-    val names = extracted.select(col("url"), col("name_norm"))
-    pairs
-      .join(names.withColumnRenamed("url", "url_a").withColumnRenamed("name_norm", "name_a"), "url_a")
-      .join(names.withColumnRenamed("url", "url_b").withColumnRenamed("name_norm", "name_b"), "url_b")
-  }
+  /** The candidate pairs with both sides' normalized names as `name_a` /
+    * `name_b`: the carried `name_norm_a` / `name_norm_b` renamed, or, for
+    * bare pairs (hand-built pair frames, `03_pairs` checkpoints written
+    * before the names were carried), joined on from `extracted` by url. */
+  private def withNames(pairs: DataFrame, extracted: DataFrame): DataFrame =
+    if (Seq("name_norm_a", "name_norm_b").forall(pairs.columns.contains))
+      pairs.withColumnRenamed("name_norm_a", "name_a")
+        .withColumnRenamed("name_norm_b", "name_b")
+    else {
+      val names = extracted.select(col("url"), col("name_norm"))
+      pairs
+        .join(names.withColumnRenamed("url", "url_a").withColumnRenamed("name_norm", "name_a"), "url_a")
+        .join(names.withColumnRenamed("url", "url_b").withColumnRenamed("name_norm", "name_b"), "url_b")
+    }
 
   /** (url_a, url_b, jw, dice, score) over [[withNames]] output. */
   private def composite(named: DataFrame): DataFrame =
@@ -156,7 +196,7 @@ object Linkage {
     * agreement implies loose), which the naive-FS independence
     * assumption tolerates: EM still drives every u toward 0 and the
     * posterior split survives (LinkageSpec pins F1 ≥ 0.9 on the planted
-    * corpus). Same two equi-joins as [[score]]; gammas are
+    * corpus). Names as in [[score]] ([[withNames]]); gammas are
     * null-absorbing by construction (every `when` carries an
     * `otherwise(0)`), which [[FellegiSunter.fit]] requires.
     * Output: (url_a, url_b, g0, g1, g2). */

@@ -185,16 +185,6 @@ object TextAnalysis {
           (col("df") + 1).cast("double")).as("w"))
   }
 
-  /** Per-document analysis frame over (idCol, textCol). */
-  def analyze(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(
-      col(idCol),
-      tokenCount(col(textCol)).as("n_tokens"),
-      qualityScore(col(textCol)).as("quality"),
-      langId(col(textCol)).as("lang_id"),
-      graft.functions.min_kgram_hash(col(textCol), 16).as("fingerprint"),
-      graft.functions.simhash64(col(textCol)).as("simhash"))
-
   // ------------------------------------ char-trigram LM scoring (CCNet/DSIR)
 
   /** Character-trigram language-model counts — the MODEL frame for

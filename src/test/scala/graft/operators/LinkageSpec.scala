@@ -141,6 +141,44 @@ class LinkageSpec extends SparkFunSuite {
     assert(dropped == naive(keys.where(col("key") =!= "hot")))
   }
 
+  test("candidatePairs carries each side's name: same url pairs as bare keys, names as joined") {
+    val ex = Linkage.extract(pagesDF)
+    val keys = Linkage.candidateKeys(ex)
+    assert(keys.columns.toSeq == Seq("url", "key", "name_norm"))
+    val names = ex.select("url", "name_norm").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    // cap 1 sends every bucket through the salted grid, whose sides swap
+    for ((cap, salt) <- Seq((200, 16), (1, 4))) {
+      val carried = Linkage.candidatePairs(keys, bucketCap = cap,
+        hardCap = 100000, saltGroups = salt)
+      assert(carried.columns.toSeq == Seq("url_a", "url_b", "name_norm_a", "name_norm_b"))
+      val rows = carried.collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+      val bare = Linkage.candidatePairs(keys.select("url", "key"), bucketCap = cap,
+        hardCap = 100000, saltGroups = salt)
+      assert(bare.columns.toSeq == Seq("url_a", "url_b"))
+      val bareSet = bare.collect().map(r => (r.getString(0), r.getString(1))).toSet
+      assert(rows.nonEmpty)
+      assert(rows.length == bareSet.size, s"cap $cap: a url pair repeats")
+      assert(rows.map(r => (r._1, r._2)).toSet == bareSet, s"cap $cap")
+      rows.foreach { case (a, b, na, nb) =>
+        assert(na == names(a) && nb == names(b), s"cap $cap: ($a, $b) got ($na, $nb)")
+      }
+    }
+  }
+
+  test("scoring over bare pairs (url joins) equals scoring over carried names") {
+    val ex = Linkage.extract(pagesDF)
+    val carried = Linkage.candidatePairs(Linkage.candidateKeys(ex))
+    val bare = carried.select("url_a", "url_b")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rows(Linkage.score(carried, ex)) == rows(Linkage.score(bare, ex)))
+    assert(rows(Linkage.fsComparisonVectors(carried, ex)) ==
+      rows(Linkage.fsComparisonVectors(bare, ex)))
+    val pre = rows(Linkage.scoreWithPrefilter(carried, ex, maxDist = 6))
+    assert(pre.nonEmpty && pre == rows(Linkage.scoreWithPrefilter(bare, ex, maxDist = 6)))
+  }
+
   test("hot-bucket dropping is observable, not silent") {
     val ex = Linkage.extract(pagesDF)
     val keys = Linkage.candidateKeys(ex)

@@ -147,14 +147,6 @@ class TextAnalysisSpec extends SparkFunSuite {
     assert(k2.groupBy("id").count().agg(max("count")).head().getLong(0) <= 2)
   }
 
-  test("analyze frame has the full signature set over documents") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val out = TextAnalysis.analyze(docs, "doc_id", "text")
-    assert(out.columns.toSeq ==
-      Seq("doc_id", "n_tokens", "quality", "lang_id", "fingerprint", "simhash"))
-    assert(out.count() == docs.count())
-  }
-
   // ------------------------------------------------- char-trigram LM
 
   test("charTrigramCounts: hand-checked multiplicities, short docs ignored") {

@@ -80,7 +80,21 @@ class PipelinePlanSpec extends SparkFunSuite {
         a.executedPlan
       case p => p
     }
-    val s = plan.toString
+    // collect() stops at AQE query-stage boundaries, so flatten manually.
+    def flat(p: org.apache.spark.sql.execution.SparkPlan):
+        Seq[org.apache.spark.sql.execution.SparkPlan] = {
+      val inner = p match {
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          Seq(q.plan)
+        case _ => Nil
+      }
+      p +: (p.children ++ inner).flatMap(flat)
+    }
+    // root-first, one line per node with all its expressions: a projection
+    // folded into an aggregate's result expressions (the pair dedup's) is
+    // printed by `toString` as output attributes only
+    val s = flat(plan).map(p => s"${p.nodeName} ${p.expressions.mkString(", ")}")
+      .mkString("\n")
     // the kernel projection exists, and the banded filter sits in its
     // SUBTREE (plans print root-first: projection line above filter line)
     assert(s.contains("jaro_winkler_sim") && s.contains("levenshtein_within"), s)
@@ -94,16 +108,6 @@ class PipelinePlanSpec extends SparkFunSuite {
       s"bag tier is not ahead of the banded DP:\n$s")
     // wherever the prefilter is evaluated (plain Filter or pushed into a
     // join condition), nothing BELOW it evaluates a composite kernel.
-    // collect() stops at AQE query-stage boundaries, so flatten manually.
-    def flat(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val inner = p match {
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          Seq(q.plan)
-        case _ => Nil
-      }
-      p +: (p.children ++ inner).flatMap(flat)
-    }
     val evalChildren = flat(plan).collect {
       case f: org.apache.spark.sql.execution.FilterExec
           if f.condition.toString.contains("levenshtein_within") => f.children
@@ -123,6 +127,32 @@ class PipelinePlanSpec extends SparkFunSuite {
     assert(pre.nonEmpty)
     pre.foreach { case (k, v) => assert(full(k) == v) }
     assert(pre.length < full.size, "prefilter pruned nothing on this corpus")
+  }
+
+  test("match threshold is pushed below the pair dedup into the blocking join") {
+    val pages = spark.read.parquet(pagesPath)
+    val ex = Linkage.extract(pages)
+    val matched = Linkage.matches(
+      Linkage.score(Linkage.candidatePairs(Linkage.candidateKeys(ex)), ex), 1.6)
+    val plan = matched.queryExecution.optimizedPlan
+    val dedups = plan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
+          if a.groupingExpressions.exists(_.references.exists(_.name == "name_norm_a")) => a
+    }
+    assert(dedups.size == 1, s"expected one pair dedup:\n$plan")
+    // the kernels run under the dedup (so only pairs clearing θ reach its
+    // exchange), and the threshold is not re-applied above it
+    assert(dedups.head.child.treeString.contains("jaro_winkler_sim"),
+      s"threshold not pushed below the dedup:\n$plan")
+    val above = plan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
+    }.filterNot(f => dedups.head.child.exists(_ eq f))
+    assert(above.forall(!_.condition.toString.contains("jaro_winkler_sim")),
+      s"threshold filter left above the dedup:\n$plan")
+    // and the result is the filter applied after the dedup
+    val bare = Linkage.candidatePairs(Linkage.candidateKeys(ex)).select("url_a", "url_b")
+    val late = Linkage.matches(Linkage.score(bare, ex), 1.6).collect().toSet
+    assert(late.nonEmpty && matched.collect().toSet == late)
   }
 
   test("partition-count stability: candidate pair join respects shuffle partitions") {
