@@ -843,7 +843,7 @@ private[graft] object BlockingGates {
     // sorted-neighborhood blocking (Hernández-Stolfo): every pair within
     // w consecutive positions of the (c_name, c_custkey) order — the
     // complement of hash blocking. Spark side: range-partitioned global
-    // rank (per-partition row_number + broadcast offsets — no
+    // rank (a distributed running sum, Frames.runningSums — no
     // single-partition window) + banded equi-join on rank div (w-1);
     // oracle: one row_number window + a rank-distance self-join.
     Gate("q_sorted_neighborhood", (s, dir) => {

@@ -188,10 +188,10 @@ private[graft] object EvaluationGates {
 
     // ROC operating curve of the two-corpus linkage scorer vs
     // suffix-equality truth: one row per distinct score (cumulative
-    // tp/fp, exact tpr/fpr divisions). The cumulative counts use the
-    // distributed range-partition + broadcast-offset prefix sum — no
-    // corpus-sized single-partition window (PipelinePlanSpec-checked
-    // discipline), while the oracle can afford the plain window.
+    // tp/fp, exact tpr/fpr divisions). The cumulative counts are one
+    // distributed running sum (Frames.runningSums) — no corpus-sized
+    // single-partition window (PipelinePlanSpec-checked discipline),
+    // while the oracle can afford the plain window.
     Gate("q_roc_curve", (s, dir) => {
       val (scored, labeled) = linkage(s, dir)
       graft.operators.Evaluation.rocCurve(scored, labeled)
@@ -199,7 +199,7 @@ private[graft] object EvaluationGates {
       // ROC curve: same flagged-score derivation as q_threshold_sweep, one
       // cell per distinct score, cumulative tp/fp by a descending-score
       // window (the oracle can afford the single-partition window the
-      // Spark side replaces with range partition + broadcast offsets).
+      // Spark side replaces with a distributed running sum).
       s"""WITH $linkTablesCtes,
         |base AS (
         |  SELECT id_l, id_r, jw + dice AS score
@@ -375,8 +375,8 @@ private[graft] object EvaluationGates {
     // Pay-as-you-go (progressive) recall curve: sorted-neighborhood
     // pairs consumed in (window-distance, rank) order, recall banked at
     // four pair budgets — the curve that justifies early-stopping a
-    // 10^12-pair progressive-ER job. Rank assignment is the distributed
-    // globalRanked discipline; the per-budget counts are one exploded
+    // 10^12-pair progressive-ER job. Rank assignment is a distributed
+    // running sum; the per-budget counts are one exploded
     // map-side-combined pass (thresholdSweep-shaped).
     Gate("q_progressive_recall", (s, dir) => {
       val c = s.read.parquet(s"$dir/customer.parquet")

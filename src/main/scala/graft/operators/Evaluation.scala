@@ -23,10 +23,9 @@ import scala.jdk.CollectionConverters._
   * each value bit-for-bit.
   *
   * Scale design: NO single-partition window over anything corpus-sized.
-  * Cumulative counts use the [[Linkage.globalRanked]] discipline — range
-  * partition on the order key, per-partition running sums, and a P-row
-  * broadcast exclusive-prefix frame (the only unpartitioned window runs
-  * over ≤ P planner-metadata rows). */
+  * Cumulative counts and ranks are [[Frames.runningSums]] — a range
+  * partition on the order key, a P-row collect of each partition's sums,
+  * and per-partition running sums plus offsets, read from one RDD. */
 object Evaluation {
 
   private val dec = "decimal(38,0)"
@@ -46,17 +45,14 @@ object Evaluation {
     *    no positives/negatives is "no evidence", not a rate).
     *
     * Plan shape: one left join to flag labels, one map-side-combinable
-    * groupBy(score) to score-level cells, then the distributed prefix
-    * sum: `repartitionByRange(score DESC)` + per-partition running sums +
-    * broadcast P-row offsets. The score-level frame is
+    * groupBy(score) to score-level cells, then one [[Frames.runningSums]]
+    * of `n` and `t` in descending score order, whose totals are P and N:
+    * they enter the rates as literals. The score-level frame is
     * |distinct scores|-sized — already far below the pair count — and
     * nothing above it is windowed. */
   def rocCurve(scored: DataFrame, labeled: DataFrame,
       aCol: String = "id_l", bCol: String = "id_r",
       scoreCol: String = "score", partitions: Int = 0): DataFrame = {
-    val spark = scored.sparkSession
-    val p = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
     val flagged = scored.select(col(aCol), col(bCol), col(scoreCol))
       .join(labeled.select(col(aCol), col(bCol), lit(1L).as("__t"))
         .distinct(), Seq(aCol, bCol), "left")
@@ -64,36 +60,15 @@ object Evaluation {
         coalesce(col("__t"), lit(0L)).as("__t"))
     val perScore = flagged.groupBy(col("score"))
       .agg(count(lit(1)).as("n"), sum(col("__t")).as("t"))
-    // distributed cumulative (descending score): range partition + local
-    // running sums + broadcast per-partition exclusive offsets
-    // two consumers: the offset counts and the cumsum join
-    val parts = Frames.shared(perScore.repartitionByRange(p, col("score").desc)
-      .sortWithinPartitions(col("score").desc)
-      .withColumn("__pid", spark_partition_id()))
-    val counts = parts.groupBy(col("__pid"))
-      .agg(sum(col("n")).as("__pn"), sum(col("t")).as("__pt"))
-    val offsets = counts
-      .withColumn("__on", coalesce(sum(col("__pn")).over(
-        W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__ot", coalesce(sum(col("__pt")).over(
-        W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__on"), col("__ot"))
-    // totals from the CELL-sized frame (exact integer sums — identical
-    // to folding the rows, without a second pass over the pair join)
-    val totals = parts.agg(sum(col("t")).as("__P"),
-      (sum(col("n")) - sum(col("t"))).as("__N"))
-    parts.join(broadcast(offsets), "__pid")
-      .withColumn("__cn", col("__on") + sum(col("n")).over(
-        W.partitionBy("__pid").orderBy(col("score").desc)))
-      .withColumn("tp", col("__ot") + sum(col("t")).over(
-        W.partitionBy("__pid").orderBy(col("score").desc)))
-      .withColumn("fp", col("__cn") - col("tp"))
-      .crossJoin(broadcast(totals))
-      .select(col("score"), col("n"), col("t"), col("tp"), col("fp"),
-        when(col("__P") > 0,
-          col("tp").cast("double") / col("__P").cast("double")).as("tpr"),
-        when(col("__N") > 0,
-          col("fp").cast("double") / col("__N").cast("double")).as("fpr"))
+    val (cum, totals) = Frames.runningSums(perScore,
+      Seq("score" -> DriverFinish.Desc),
+      Seq("__cn" -> col("n"), "tp" -> col("t")), partitions)
+    val Seq(pairs, pos) = totals
+    val neg = pairs - pos
+    val fp = col("__cn") - col("tp")
+    cum.select(col("score"), col("n"), col("t"), col("tp"), fp.as("fp"),
+      when(lit(pos > 0), col("tp").cast("double") / pos.toDouble).as("tpr"),
+      when(lit(neg > 0), fp.cast("double") / neg.toDouble).as("fpr"))
   }
 
   /** Exact area under the ROC curve from a [[rocCurve]] frame — the
@@ -628,20 +603,17 @@ object Evaluation {
   /** Assign the global 1-based emission rank that makes a pair frame
     * progressive: pairs are ordered by (`orderCol` ASC, `tieCol` ASC) —
     * e.g. sorted-neighborhood window distance then left rank — where
-    * `tieCol` must be unique per row (it pins the rank, making the curve
-    * deterministic and partitioning-independent). Distributed via
-    * [[Linkage.globalRanked]] (range partition + broadcast offsets — no
-    * corpus-sized window). Output: input columns + `rank`. */
+    * (`orderCol`, `tieCol`) must be unique per row (it pins the rank,
+    * making the curve deterministic and partitioning-independent); a
+    * duplicated key raises. The rank is a [[Frames.runningSums]] of 1
+    * over the pair frame itself — no corpus-sized window, no join-back.
+    * Output: input columns + `rank`. */
   def progressiveRank(pairs: DataFrame, orderCol: Column,
       tieCol: Column, partitions: Int = 0): DataFrame = {
-    val keyed = pairs
-      .withColumn("__ord", orderCol.cast("double"))
-      .withColumn("__tie", tieCol.cast("long"))
-    val ranked = Linkage.globalRanked(
-        keyed.select(col("__tie"), col("__ord")), "__tie", "__ord",
-        partitions)
-      .select(col("__tie"), col("__rnk").as("rank"))
-    keyed.join(ranked, "__tie").drop("__ord", "__tie")
+    Frames.runningSums(pairs.withColumn("__ord", orderCol.cast("double"))
+        .withColumn("__tie", tieCol.cast("long")),
+      Seq("__ord" -> DriverFinish.Asc, "__tie" -> DriverFinish.Asc),
+      Seq("rank" -> lit(1L)), partitions)._1.drop("__ord", "__tie")
   }
 
   /** Canonical intra-cluster edge set shared by [[nodeDegrees]] and

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
+
+import DriverFinish.{Desc, Direction}
 
 /** The one materialization policy. A frame read by several consumers (a
   * sizing aggregate and its join-back, both sides of a self-join, a fit
@@ -26,7 +29,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Both keep their blocks on the executors, not on reliable storage;
   * [[ConnectedComponents]] keeps its own `checkpointDir` mode for
   * executor loss. Each call site says in one line why its frame has
-  * several consumers. */
+  * several consumers. [[runningSums]], the one distributed prefix sum,
+  * rebuilds its frame from one RDD as [[round]] does. */
 private[graft] object Frames {
 
   /** `df` computed at most once for all of its consumers. */
@@ -41,5 +45,64 @@ private[graft] object Frames {
     val ck = df.localCheckpoint(eager = false)
     val n = ck.count()
     (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), n)
+  }
+
+  /** Inclusive running sums of `df` in the global `order` (column names
+    * with their direction; nulls order as in ORDER BY): each
+    * `(name, weight)` of `sums` becomes a long column `name`, the sum of
+    * `weight` over this row and every row before it. Returns the frame
+    * and each sum's total.
+    *
+    * `df` is range partitioned on `order` into `partitions` parts (0: the
+    * session's shuffle partitions), sorted within each, and its RDD taken
+    * once. One job collects each partition's sums (P rows); a second pass
+    * over the same RDD adds each partition's offset to its local running
+    * sums. Both read one shuffle whose bounds were sampled once, so the
+    * sums do not depend on AQE, exchange reuse, caching or the partition
+    * count, and every consumer of the frame reads the same rows.
+    *
+    * Preconditions: `order` is unique per row — the first job rejects two
+    * adjacent equal keys (equal keys share a range partition), compared
+    * as [[DriverFinish.rowOrdering]]; a key type without such an ordering
+    * goes unchecked. A null weight or a sum past the long range fails the
+    * job, as an ANSI `sum` does. */
+  private[operators] def runningSums(df: DataFrame,
+      order: Seq[(String, Direction)], sums: Seq[(String, Column)],
+      partitions: Int = 0): (DataFrame, Seq[Long]) = {
+    val spark = df.sparkSession
+    val p = if (partitions > 0) partitions
+      else spark.sessionState.conf.numShufflePartitions
+    val keys = order.map { case (c, d) => if (d == Desc) col(c).desc else col(c).asc }
+    val sorted = df.select(col("*") +: sums.map { case (n, w) => w.cast("long").as(n) }: _*)
+      .repartitionByRange(p, keys: _*).sortWithinPartitions(keys: _*)
+    val schema = sorted.schema
+    val idx = sums.map { case (n, _) => schema.fieldIndex(n) }.toArray
+    val same = DriverFinish.rowOrdering(schema, order: _*)
+    val unique = s"order key (${order.map(_._1).mkString(", ")}) must be unique per row"
+    val rows = sorted.rdd
+    val partSums = rows.mapPartitions { it =>
+      val s = new Array[Long](idx.length)
+      var prev: Row = null
+      it.foreach { r =>
+        same.foreach(o => require(prev == null || o.compare(prev, r) != 0, unique))
+        prev = r
+        idx.indices.foreach(k => s(k) = Math.addExact(s(k), r.getLong(idx(k))))
+      }
+      Iterator.single(s)
+    }.collect()
+    val offsets = partSums.scanLeft(new Array[Long](idx.length))((a, b) =>
+      a.zip(b).map { case (x, y) => Math.addExact(x, y) })
+    val out = rows.mapPartitionsWithIndex { (i, it) =>
+      val acc = offsets(i).clone()
+      it.map { r =>
+        val v = r.toSeq.toArray
+        idx.indices.foreach { k =>
+          acc(k) = Math.addExact(acc(k), r.getLong(idx(k)))
+          v(idx(k)) = acc(k)
+        }
+        Row.fromSeq(v.toSeq)
+      }
+    }
+    (spark.createDataFrame(out, schema), offsets.last.toSeq)
   }
 }

@@ -351,30 +351,6 @@ object Linkage {
         / lit(2)).cast("decimal(38,0)").as("pairs_dropped"))
   }
 
-  /** Distributed global rank over (sortKeyCol, idCol) order WITHOUT a
-    * single-partition window: range partition, rank within partition, add
-    * broadcast per-partition offsets (a P-row exclusive prefix sum — the
-    * only single-partition window runs over ≤ P metadata rows).
-    * Returns (idCol, sortKeyCol, __rnk) with __rnk contiguous from 1. */
-  private[operators] def globalRanked(df: DataFrame, idCol: String,
-      sortKeyCol: String, partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
-    val sorted = df.select(col(idCol), col(sortKeyCol))
-      .repartitionByRange(p, col(sortKeyCol), col(idCol))
-      .sortWithinPartitions(col(sortKeyCol), col(idCol))
-      .withColumn("__pid", spark_partition_id())
-    val counts = sorted.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
-    val offsets = counts.withColumn("__offset",
-      coalesce(sum(col("__n")).over(
-        W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    sorted.join(broadcast(offsets), "__pid")
-      .withColumn("__rnk", col("__offset") +
-        row_number().over(W.partitionBy("__pid").orderBy(col(sortKeyCol), col(idCol))))
-      .select(col(idCol), col(sortKeyCol), col("__rnk"))
-  }
-
   /** Sorted-neighborhood blocking (Hernández-Stolfo): order records by a
     * sort key and emit every pair within `window` consecutive positions —
     * the classic complement to hash blocking (equi-key buckets miss pairs
@@ -382,14 +358,11 @@ object Linkage {
     * catches them, at O(n·w) candidate cost).
     *
     * Scale design — NO single-partition window anywhere:
-    *  1. global order is established by `repartitionByRange` on
-    *     (sortKey, id) (range exchange, the same shape as a distributed
-    *     sort) + per-partition sort;
-    *  2. the global rank is `per-partition row_number + partition offset`,
-    *     where the offsets come from a P-row count aggregate prefix-summed
-    *     by a window over partition IDs — P rows is planner-metadata-sized,
-    *     and the offset frame is broadcast back (never collected);
-    *  3. neighborhood pairs are a BANDED EQUI-JOIN on `rank div (w-1)`:
+    *  1. the global rank is a [[Frames.runningSums]] of 1 in
+    *     (sortKey, id) order: one range exchange and a per-partition sort,
+    *     a P-row collect of the partition sizes, then each partition's
+    *     local row numbers plus its offset, all read from one RDD;
+    *  2. neighborhood pairs are a BANDED EQUI-JOIN on `rank div (w-1)`:
     *     each right row also offers its predecessor bucket, so a pair at
     *     rank distance ≤ w-1 meets in exactly one bucket cell — candidate
     *     generation is a plain shuffle join, never a cross product and
@@ -397,14 +370,15 @@ object Linkage {
     *
     * `idCol` must be unique per record (it is the rank tie-break, making
     * the rank — and therefore the pair set — deterministic and
-    * partitioning-independent). Output: (<id>_a, <id>_b, rank_a, rank_b)
-    * with rank_a < rank_b; ranks are 1-based in (sortKey, id) order. */
+    * partitioning-independent); a duplicated (sortKey, id) row raises.
+    * Output: (<id>_a, <id>_b, rank_a, rank_b) with rank_a < rank_b; ranks
+    * are 1-based in (sortKey, id) order. */
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String, sortKeyCol: String,
       window: Int, partitions: Int = 0): DataFrame = {
     require(window >= 2, s"sorted-neighborhood window must be >= 2, got $window")
-    // both join sides read the ranks: one evaluation keeps them consistent
-    val ranked = Frames.shared(globalRanked(df, idCol, sortKeyCol, partitions)
-      .select(col(idCol), col("__rnk")))
+    val (ranked, _) = Frames.runningSums(df.select(col(idCol), col(sortKeyCol)),
+      Seq(sortKeyCol -> DriverFinish.Asc, idCol -> DriverFinish.Asc),
+      Seq("__rnk" -> lit(1L)), partitions)
     val b = window - 1
     val l = ranked.select(col(idCol).as(s"${idCol}_a"), col("__rnk").as("rank_a"),
       expr(s"__rnk div $b").as("__bucket"))
@@ -425,10 +399,11 @@ object Linkage {
     * exactly where the sort order says records cluster. Equal keys can
     * never be split (sim = 1 ≥ θ for any valid θ).
     *
-    * Scale shape: one [[globalRanked]] pass, ONE equi-self-join on rank
-    * (rank = rank+1) for adjacency — no corpus-sized window — then a
-    * second broadcast-offset prefix sum turns boundary flags into segment
-    * ids, and the within-segment pairing is delegated to
+    * Scale shape: one [[Frames.runningSums]] of 1 ranks the records, ONE
+    * equi-self-join on rank (rank = rank+1) flags adjacency — no
+    * corpus-sized window — then a second running sum, of the boundary
+    * flags in rank order, turns them into segment ids, and the
+    * within-segment pairing is delegated to
     * [[candidatePairs]], inheriting the full 3-tier (plain / salted-grid /
     * observable-drop) skew contract: a degenerate sort key that lumps the
     * corpus into one segment becomes a salted grid or an observable drop,
@@ -458,34 +433,21 @@ object Linkage {
       sortKeyCol: String, theta: Double, sim: (Column, Column) => Column,
       partitions: Int): DataFrame = {
     require(theta > 0.0 && theta <= 1.0, s"theta must be in (0,1], got $theta")
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
-    // both sides of the adjacency join read the ranks
-    val ranked = Frames.shared(globalRanked(df, idCol, sortKeyCol, partitions))
+    val (ranked, _) = Frames.runningSums(df.select(col(idCol), col(sortKeyCol)),
+      Seq(sortKeyCol -> DriverFinish.Asc, idCol -> DriverFinish.Asc),
+      Seq("__rnk" -> lit(1L)), partitions)
     val prev = ranked.select((col("__rnk") + 1).as("__rnk"),
       col(sortKeyCol).as("__prev"))
     val flagged = ranked.join(prev, Seq("__rnk"), "left")
-      .withColumn("__b",
+      .select(col(idCol), col("__rnk"),
         when(col("__prev").isNull, lit(1L)) // rank 1 opens segment 1
           .otherwise(when(sim(col("__prev"), col(sortKeyCol)) < theta, lit(1L))
-            .otherwise(lit(0L))))
-    // distributed prefix sum of the boundary flags = segment id per row
-    // the per-partition counts AND the offset join-back read the flags
-    val parts = Frames.shared(flagged
-      .repartitionByRange(p, col("__rnk"))
-      .sortWithinPartitions(col("__rnk"))
-      .withColumn("__pid", spark_partition_id()))
-    val counts = parts.groupBy(col("__pid")).agg(sum(col("__b")).as("__n"))
-    val offsets = counts.withColumn("__offset",
-      coalesce(sum(col("__n")).over(
-        W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    // candidatePairs reads its key frame twice (sizing + join-back)
-    Frames.shared(parts.join(broadcast(offsets), "__pid")
-      .withColumn("__seg", col("__offset") +
-        sum(col("__b")).over(W.partitionBy("__pid").orderBy(col("__rnk"))))
-      .select(col(idCol).as("url"),
-        concat(lit("seg:"), col("__seg")).as("key")))
+            .otherwise(lit(0L))).as("__b"))
+    // the running sum of the boundary flags is the segment id of each row
+    val (segments, _) = Frames.runningSums(flagged,
+      Seq("__rnk" -> DriverFinish.Asc), Seq("__seg" -> col("__b")), partitions)
+    segments.select(col(idCol).as("url"),
+      concat(lit("seg:"), col("__seg")).as("key"))
   }
 
   /** DYNAMIC BLOCKING (hierarchical key extension — the McNeill-Kardes-

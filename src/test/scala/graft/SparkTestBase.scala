@@ -23,10 +23,13 @@ object SparkTestBase {
 abstract class SparkFunSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
 
-  /** Runs `f` with the session conf `key` set to `value`, then unsets it. */
+  /** Runs `f` with the session conf `key` set to `value`, then restores
+    * the value it had (a key the session was built with, such as the
+    * shuffle partitions, keeps its value for later suites). */
   def withConf[A](key: String, value: String)(f: => A): A = {
+    val before = spark.conf.getOption(key)
     spark.conf.set(key, value)
-    try f finally spark.conf.unset(key)
+    try f finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
 

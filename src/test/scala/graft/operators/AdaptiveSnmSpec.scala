@@ -62,6 +62,17 @@ class AdaptiveSnmSpec extends SparkFunSuite {
     val rows = (0L until 60L).map(i =>
       i -> s"${words(rnd.nextInt(words.size))} ${words(rnd.nextInt(words.size))}")
     assert(run(rows, 0.8) == reference(rows, 0.8))
+
+    // 3,000 keys read from a cache over 8 input partitions: range
+    // sampling no longer takes every row
+    import spark.implicits._
+    val many = (0L until 3000L).map(i =>
+      i -> Seq.fill(6)(('a' + rnd.nextInt(26)).toChar).mkString)
+    val cached = many.toDF("id", "name").repartition(8).cache()
+    val got = Linkage.adaptiveSortedNeighborhoodPairs(cached, "id", "name", 0.8)
+      .as[(Long, Long)].collect().toSet
+    cached.unpersist()
+    assert(got == reference(many, 0.8))
   }
 
   test("mucStats matches the MUC worked example and edge cases") {

@@ -69,6 +69,43 @@ class BlockingSpec extends SparkFunSuite {
         assert(pairs() == default, "AQE off, no exchange reuse")
       }
     }
+
+    // 3,000 rows: range sampling no longer takes every row; the input is
+    // read from a cache and from a local checkpoint
+    val n = 3000L
+    val big = spark.range(0L, n, 1L, 8)
+      .select(col("id"), xxhash64(col("id")).as("sk"))
+    val order = big.as[(Long, Long)].collect().sortBy(_.swap).map(_._1).toSeq
+    val expected = expectedPairs(order, 3)
+    for ((input, in) <- Seq("cached" -> big.cache(),
+        "checkpointed" -> big.localCheckpoint())) {
+      for (aqe <- Seq("true", "false"); reuse <- Seq("true", "false");
+          p <- Seq("1", "7", "64")) {
+        val got = withConf("spark.sql.adaptive.enabled", aqe) {
+          withConf("spark.sql.exchange.reuse", reuse) {
+            withConf("spark.sql.shuffle.partitions", p) {
+              Linkage.sortedNeighborhoodPairs(in, "id", "sk", 3)
+                .select("id_a", "id_b").as[(Long, Long)].collect()
+            }
+          }
+        }
+        val setting = s"$input, AQE $aqe, reuse $reuse, $p partitions"
+        val size = got.length
+        assert(size == 2 * n - 3, setting)
+        assert(got.toSet == expected, setting)
+      }
+    }
+    big.unpersist()
+  }
+
+  test("sortedNeighborhood rejects a duplicated (sortKey, id) row") {
+    import spark.implicits._
+    val df = Seq((1L, "a"), (2L, "b"), (1L, "a"), (3L, "c")).toDF("id", "sk")
+    val e = intercept[Exception] {
+      Linkage.sortedNeighborhoodPairs(df, "id", "sk", 2, partitions = 2)
+        .collect()
+    }
+    assert(e.getMessage.contains("order key (sk, id) must be unique per row"))
   }
 
   // ------------------------------------------------------- two-corpus linkage

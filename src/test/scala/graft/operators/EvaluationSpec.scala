@@ -93,6 +93,22 @@ class EvaluationSpec extends SparkFunSuite {
     val b = Evaluation.rocCurve(scored.repartition(2), labeled, partitions = 9)
       .collect().toSet
     assert(a == b && a.nonEmpty)
+
+    // 3,000 distinct scores read from a cache over 8 input partitions:
+    // range sampling no longer takes every score
+    import spark.implicits._
+    val many = (1L to 3000L).map(i =>
+      (i, i + 9000L, rng.nextInt(1000000) / 1e6, rng.nextInt(2)))
+    val (s2, l2) = scoredFrame(many)
+    val cached = s2.repartition(8).cache()
+    val ref = refRoc(many.map(r => (r._3, r._4)))
+    for (p <- Seq(2, 9)) {
+      val got = Evaluation.rocCurve(cached, l2, partitions = p)
+        .select("score", "tp", "fp").as[(Double, Long, Long)]
+        .collect().sortBy(-_._1).toSeq
+      assert(got == ref, s"$p partitions")
+    }
+    cached.unpersist()
   }
 
   // ------------------------------------------- PR curve + average precision
@@ -196,6 +212,30 @@ class EvaluationSpec extends SparkFunSuite {
       .orderBy("rank").select("id_a", "rank").as[(Long, Long)]
       .collect().toSeq
     assert(got == Seq((30L, 1L), (20L, 2L), (40L, 3L), (10L, 4L)))
+
+    // 3,000 pairs read from a cache over 8 input partitions: the ranks
+    // are exactly 1..n in (order, tie) order
+    val n = 3000L
+    val cached = spark.range(0L, n, 1L, 8)
+      .select(col("id").as("id_a"), xxhash64(col("id")).as("h"))
+      .cache()
+    val ranks = Evaluation.progressiveRank(cached, col("h") % 7L, col("h"))
+      .select("id_a", "rank").as[(Long, Long)].collect()
+    val byOrder = cached.as[(Long, Long)].collect()
+      .sortBy { case (_, h) => ((h % 7L).toDouble, h) }.map(_._1).toSeq
+    cached.unpersist()
+    assert(ranks.sortBy(_._2).toSeq == byOrder.zip(1L to n))
+  }
+
+  test("progressiveRank rejects a duplicated (order, tie) row") {
+    import spark.implicits._
+    val pairs = Seq((10L, 11L, 1.0, 7L), (20L, 21L, 1.0, 7L),
+      (30L, 31L, 2.0, 7L)).toDF("id_a", "id_b", "wd", "tie")
+    val e = intercept[Exception] {
+      Evaluation.progressiveRank(pairs, col("wd"), col("tie"), partitions = 2)
+        .collect()
+    }
+    assert(e.getMessage.contains("order key (__ord, __tie) must be unique per row"))
   }
 
   // --------------------------------------------------- cluster-level eval

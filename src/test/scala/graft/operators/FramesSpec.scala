@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -113,19 +114,52 @@ class FramesSpec extends SparkFunSuite {
     assert(viaShared.last > viaRound.head)
   }
 
-  test("no materialization outside Frames in the main sources") {
-    val call = raw"\.localCheckpoint\(|\.cache\(\)|\.persist\(".r
-    val hits = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+  /** (file name, path:line) of each line of the Scala sources under
+    * `root` that `re` finds. */
+  private def scan(root: String, re: Regex): List[(String, String)] =
+    Files.walk(Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toList
       .flatMap { p: Path =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if call.findFirstIn(line).isDefined =>
+          case (line, i) if re.findFirstIn(line).isDefined =>
             (p.getFileName.toString, s"$p:${i + 1}")
         }
       }
+
+  test("no materialization outside Frames in the main sources") {
+    val hits = scan("src/main/scala",
+      raw"\.localCheckpoint\(|\.cache\(\)|\.persist\(".r)
     assert(hits.exists(_._1 == "Frames.scala"))
     val outside = hits.filterNot(h => Set("Frames.scala", "Bench.scala")(h._1))
     assert(outside.isEmpty,
       outside.map(_._2).mkString("materialized outside Frames: ", ", ", ""))
+
+    // a prefix sum keyed by spark_partition_id() reads one range exchange
+    // per consumer; the operators use Frames.runningSums instead
+    val pid = scan("src/main/scala/graft/operators", raw"spark_partition_id\(".r)
+    assert(pid.isEmpty,
+      pid.map(_._2).mkString("spark_partition_id in operators: ", ", ", ""))
+  }
+
+  test("runningSums: inclusive sums in the global order, totals, and a loud overflow") {
+    import spark.implicits._
+    val df = spark.range(0L, 1000L, 1L, 8)
+      .select(col("id"), (col("id") % 3L).as("w"))
+    val (out, totals) = Frames.runningSums(df,
+      Seq("id" -> DriverFinish.Desc), Seq("one" -> lit(1L), "cw" -> col("w")),
+      partitions = 5)
+    val got = out.select("id", "w", "one", "cw").as[(Long, Long, Long, Long)]
+      .collect().sortBy(-_._1).toSeq
+    val ids = (999L to 0L by -1L)
+    val cw = ids.map(_ % 3L).scanLeft(0L)(_ + _).tail
+    assert(got == ids.indices.map(i => (ids(i), ids(i) % 3L, i + 1L, cw(i))))
+    assert(totals == Seq(1000L, cw.last))
+
+    val big = Seq((1L, Long.MaxValue), (2L, 1L)).toDF("id", "w")
+    val e = intercept[Exception] {
+      Frames.runningSums(big, Seq("id" -> DriverFinish.Asc),
+        Seq("s" -> col("w")), partitions = 1)
+    }
+    assert(e.getMessage.contains("long overflow"))
   }
 }
