@@ -63,11 +63,10 @@ object Dedup {
     * `hardCap`. */
   private def blockedTokenPairs(base: DataFrame, bucketCap: Int,
       hardCap: Int, saltGroups: Int): Capped =
-    Capped(Tiers.pairs(base, Seq("bk"), "id", bucketCap, hardCap, saltGroups)
-      .select(col("id_a").as("ia"), col("id_b").as("ib"))
-      .join(base.select(col("id").as("ia"), col("toks").as("ta")), "ia")
-      .join(base.select(col("id").as("ib"), col("toks").as("tb")), "ib"),
-      Tiers.overCap(base, Seq("bk"), hardCap))
+    Tiers.pairs(base, Seq("bk"), "id", bucketCap, hardCap, saltGroups)
+      .map(_.select(col("id_a").as("ia"), col("id_b").as("ib"))
+        .join(base.select(col("id").as("ia"), col("toks").as("ta")), "ia")
+        .join(base.select(col("id").as("ib"), col("toks").as("tb")), "ib"))
 
   /** Token-set Jaccard >= tau over pairs blocked by `blockCols` — quadratic
     * PER BLOCK by construction, so it carries the three-tier policy of
@@ -184,16 +183,14 @@ object Dedup {
     // `base` feeds BOTH sides of the verification join
     val baseM = Frames.shared(base)
     // hardCap = bucketCap: the cold tier only
-    val cand = Tiers.pairs(bandedM, Seq("key"), "id", bucketCap,
-        hardCap = bucketCap, saltGroups = 1)
-      .select(col("id_a").as("ia"), col("id_b").as("ib")).distinct()
-    Capped(cand
-      .join(baseM.select(col("id").as("ia"), col("toks").as("ta")), "ia")
-      .join(baseM.select(col("id").as("ib"), col("toks").as("tb")), "ib")
-      .select(col("ia"), col("ib"),
-        jaccardOf(col("ta"), col("tb")).as("jaccard"))
-      .where(col("jaccard") >= tau),
-      Tiers.overCap(bandedM, Seq("key"), bucketCap))
+    Tiers.pairs(bandedM, Seq("key"), "id", bucketCap, hardCap = bucketCap,
+        saltGroups = 1)
+      .map(_.select(col("id_a").as("ia"), col("id_b").as("ib")).distinct()
+        .join(baseM.select(col("id").as("ia"), col("toks").as("ta")), "ia")
+        .join(baseM.select(col("id").as("ib"), col("toks").as("tb")), "ib")
+        .select(col("ia"), col("ib"),
+          jaccardOf(col("ta"), col("tb")).as("jaccard"))
+        .where(col("jaccard") >= tau))
   }
 
   /** MinHash-LSH near-dup candidates over token 2-shingles, verified with
@@ -620,13 +617,12 @@ object Dedup {
     val banded = Frames.shared(simhashBanded(docs, idCol, textCol, hashFamily))
     // a pair can surface from several bands (and from different tiers for
     // different bands) — hamming is identical each time, so distinct is exact
-    Capped(Tiers.pairs(banded, Seq("key"), "id", bucketCap, hardCap,
-        saltGroups, payload = Seq("sig"))
-      .select(col("id_a").as("ia"), col("id_b").as("ib"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming),
-      Tiers.overCap(banded, Seq("key"), hardCap))
+    Tiers.pairs(banded, Seq("key"), "id", bucketCap, hardCap, saltGroups,
+        payload = Seq("sig"))
+      .map(_.select(col("id_a").as("ia"), col("id_b").as("ib"),
+          bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
+        .distinct()
+        .where(col("hamming") <= maxHamming))
   }
 
   /** Exact cosine near-dup pairs over an embedding column, blocked by

@@ -5,9 +5,10 @@ import org.apache.spark.sql.types._
 
 /** The driver-finish policy of the iterative operators
   * ([[ConnectedComponents]], [[CenterClustering]],
-  * [[Linkage.greedyMatches]], [[Linkage.groupLinkage]],
-  * [[Evaluation.coreNumbers]], [[Evaluation.trussEdges]],
-  * [[PivotClustering]]'s MIS, [[BlockingSelection]]). Each of them has
+  * [[Linkage.greedyMatches]] (which [[Linkage.groupLinkage]] runs on
+  * group-scoped struct ids), [[Evaluation.coreNumbers]],
+  * [[Evaluation.trussEdges]], [[PivotClustering]]'s MIS,
+  * [[BlockingSelection]]). Each of them has
   * distributed rounds that are proven equal to an in-memory algorithm
   * (a sequential scan, a union-find, a peel); once the remaining
   * frontier is small, it collects the frontier and runs that algorithm
@@ -22,10 +23,10 @@ import org.apache.spark.sql.types._
   *    by the data.
   *  - Order: a replay that sorts compares values as Spark SQL's ORDER BY
   *    does ([[ordering]], [[rowOrdering]]) — strings by code point (the
-  *    UTF-8 byte order), doubles with -0.0 == 0.0 and NaN last, nulls
-  *    first ascending and last descending — so its tie-breaks are the
-  *    rounds' window tie-breaks. A type without a comparator here keeps
-  *    the operator on its distributed rounds.
+  *    UTF-8 byte order), doubles with -0.0 == 0.0 and NaN last, structs
+  *    field by field, nulls first ascending and last descending — so its
+  *    tie-breaks are the rounds' window tie-breaks. A type without a
+  *    comparator here keeps the operator on its distributed rounds.
   *  - Equality: a replay that hashes collected values passes its gate
   *    through [[fitsHashed]] or [[collected]], which fire only for types
   *    whose JVM equality is SQL equality ([[hashable]]); other types keep
@@ -68,8 +69,11 @@ private[operators] object DriverFinish {
       cap: Long): Option[Array[Row]] =
     if (fitsHashed(df, hashed, cap, df.count())) Some(df.collect()) else None
 
-  /** Spark SQL's ascending order over one atomic type's values, nulls
-    * first; None for types no replay sorts. */
+  /** Spark SQL's ascending order over one type's values, nulls first;
+    * None for types no replay sorts. Boolean, date, timestamp and decimal
+    * values are `Comparable` on the JVM in their SQL order; a struct
+    * compares its fields in order, each nulls first, and has an ordering
+    * when every field has one. */
   def ordering(dt: DataType): Option[Ordering[Any]] = {
     val cmp: Option[(Any, Any) => Int] = dt match {
       case LongType | IntegerType | ShortType | ByteType => Some((x, y) =>
@@ -82,6 +86,16 @@ private[operators] object DriverFinish {
       })
       case StringType => Some((x, y) =>
         codePointCompare(x.asInstanceOf[String], y.asInstanceOf[String]))
+      case BooleanType | DateType | TimestampType | TimestampNTZType |
+          _: DecimalType => Some((x, y) =>
+        x.asInstanceOf[Comparable[Any]].compareTo(y))
+      case st: StructType =>
+        val fs = st.fields.map(f => ordering(f.dataType))
+        if (fs.exists(_.isEmpty)) None
+        else {
+          val fields = lexicographic(fs.flatten, fs.indices.toArray)
+          Some((x, y) => fields.compare(x.asInstanceOf[Row], y.asInstanceOf[Row]))
+        }
       case _ => None
     }
     cmp.map[Ordering[Any]](c => (x, y) =>
@@ -90,13 +104,16 @@ private[operators] object DriverFinish {
       else c(x, y))
   }
 
-  /** Whether JVM equality of one atomic type's collected values is SQL
+  /** Whether JVM equality of one type's collected values is SQL
     * equality, so a replay may hash them: integral, string, boolean, date
-    * and timestamp values. Binary values are arrays compared by reference
-    * and a NaN double never equals itself, while SQL joins match both. */
+    * and timestamp values, and structs of such fields (a `Row` equals
+    * another when their fields are equal). Binary values are arrays
+    * compared by reference and a NaN double never equals itself, while
+    * SQL joins match both. */
   private def hashable(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType | StringType |
         BooleanType | DateType | TimestampType | TimestampNTZType => true
+    case st: StructType => st.fields.forall(f => hashable(f.dataType))
     case _ => false
   }
 
@@ -115,18 +132,20 @@ private[operators] object DriverFinish {
       ordering(schema(i).dataType).map(o => if (dir == Desc) o.reverse else o)
     }
     if (ords.exists(_.isEmpty)) None
-    else {
-      val os = ords.flatten.toArray
-      Some[Ordering[Row]]((x, y) => {
-        var c = 0
-        var k = 0
-        while (c == 0 && k < os.length) {
-          c = os(k).compare(x.get(idx(k)), y.get(idx(k)))
-          k += 1
-        }
-        c
-      })
+    else Some(lexicographic(ords.flatten.toArray, idx))
+  }
+
+  /** Rows compared on fields `idx`, the k-th by `os(k)`, first difference
+    * wins. */
+  private def lexicographic(os: Array[Ordering[Any]],
+      idx: Array[Int]): Ordering[Row] = (x, y) => {
+    var c = 0
+    var k = 0
+    while (c == 0 && k < os.length) {
+      c = os(k).compare(x.get(idx(k)), y.get(idx(k)))
+      k += 1
     }
+    c
   }
 
   /** The hand-back: driver rows as a DataFrame of `schema`, over

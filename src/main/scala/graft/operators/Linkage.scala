@@ -137,7 +137,7 @@ object Linkage {
     // the key frame feeds the sizing aggregate AND the join-back: callers
     // often derive it from an expensive pass (sha256 MinHash band keys)
     val all = Tiers.pairs(Frames.shared(keys), Seq("key"), "url", bucketCap,
-      hardCap, saltGroups, payload)
+      hardCap, saltGroups, payload).out
     // `distinctPairs = false` is for callers whose key frame is FUNCTIONAL
     // (each url carries exactly one key — e.g. adaptive-SNM segment ids):
     // within a bucket each unordered pair meets exactly once (cold join by
@@ -777,10 +777,15 @@ object Linkage {
     * — Jaccard with a fractional intersection: the matched mass replaces
     * |A ∩ B|. The paper's exact form uses the MAXIMUM bipartite matching;
     * this implementation pins the GREEDY matching (the paper's own
-    * scalable approximation, ≥ 1/2 the optimal weight), computed per
-    * group pair with [[greedyMatches]]' locally-dominant rounds on
-    * (ga, gb)-scoped keys — parallel ≡ sequential per group pair, all
-    * group pairs progress concurrently.
+    * scalable approximation, ≥ 1/2 the optimal weight): one
+    * [[greedyMatches]] call over member ids scoped to their group pair,
+    * struct(ga, gb, rl) and struct(ga, gb, rr). Group pairs share no
+    * scoped endpoint, so all of them progress in the same rounds (and the
+    * same driver finish), each matched exactly as the sequential greedy
+    * scan of its own candidates in (score DESC, rl, rr) order. Struct
+    * equi-joins compare null fields as equal, so records with a null group
+    * id are matched as one group; that group has no size row, so its group
+    * pairs are not in the output.
     *
     * @param left    (gidCol, ridCol) group membership, side A
     * @param right   (gidCol, ridCol) group membership, side B
@@ -799,71 +804,15 @@ object Linkage {
       scoreCol: String = "score", maxIter: Int = 1000): DataFrame = {
     val l = left.select(col(gidCol).as("ga"), col(ridCol).as("rl"))
     val r = right.select(col(gidCol).as("gb"), col(ridCol).as("rr"))
+    // within one group pair, (s DESC, __l, __r) orders as (s DESC, rl, rr)
     val cand = scored.select(col(leftIdCol).as("rl"),
         col(rightIdCol).as("rr"), col(scoreCol).cast("double").as("s"))
       .join(l, "rl").join(r, "rr")
-      .select(col("ga"), col("gb"), col("rl"), col("rr"), col("s"))
-
-    // greedy 1:1 rounds, scoped per (ga, gb): accept edges that are the
-    // best surviving edge of BOTH endpoints within their group pair
-    // (score DESC, opposite-rid ASC tie-break — greedyMatches' contract),
-    // then drop every edge touching an accepted endpoint. The candidates
-    // are round state joined back to themselves: [[Frames.round]].
-    val (cand0, nCand) = Frames.round(cand)
-    var cur = cand0
-
-    // Driver finish ([[DriverFinish]], [[greedyMatches]]' replay scoped per
-    // group pair): within each (ga, gb) the rounds equal the sequential
-    // greedy scan in (s DESC, rl, rr) order; group pairs are independent,
-    // so one pass over the globally sorted candidates with per-group-pair
-    // endpoint sets reproduces every group pair's matching.
-    val spark = scored.sparkSession
-    import DriverFinish.{Asc, Desc}
-    val replayed = for {
-      order <- DriverFinish.rowOrdering(cur.schema,
-        "s" -> Desc, "rl" -> Asc, "rr" -> Asc)
-      rows <- DriverFinish.collected(cur, Seq("ga", "gb", "rl", "rr"),
-        DriverFinish.cap(spark, "greedy.driverFinishEdges"))
-    } yield {
-      // rows: (ga, gb, rl, rr, s)
-      val usedL = new java.util.HashSet[(Any, Any, Any)]()
-      val usedR = new java.util.HashSet[(Any, Any, Any)]()
-      val fired = rows.sorted(order).filter { r =>
-        val kl = (r.get(0), r.get(1), r.get(2))
-        val kr = (r.get(0), r.get(1), r.get(3))
-        val free = !usedL.contains(kl) && !usedR.contains(kr)
-        if (free) { usedL.add(kl); usedR.add(kr) }
-        free
-      }
-      DriverFinish.frame(spark, cur.schema, fired.toSeq)
-    }
-    var matched = replayed.getOrElse(cand.limit(0))
-
-    var iter = 0
-    var drained = replayed.isDefined || nCand == 0L
-    while (!drained && iter < maxIter) {
-      val best = cur
-        .withColumn("rn_l", row_number().over(
-          W.partitionBy(col("ga"), col("gb"), col("rl"))
-            .orderBy(col("s").desc, col("rr"))))
-        .withColumn("rn_r", row_number().over(
-          W.partitionBy(col("ga"), col("gb"), col("rr"))
-            .orderBy(col("s").desc, col("rl"))))
-        .where(col("rn_l") === 1 && col("rn_r") === 1)
-        .select(col("ga"), col("gb"), col("rl"), col("rr"), col("s"))
-      // feeds the matching and both anti-joins
-      val bestCk = Frames.round(best)._1
-      matched = Frames.round(matched.union(bestCk))._1
-      val (next, nNext) = Frames.round(cur
-        .join(bestCk.select(col("ga"), col("gb"), col("rl")),
-          Seq("ga", "gb", "rl"), "left_anti")
-        .join(bestCk.select(col("ga"), col("gb"), col("rr")),
-          Seq("ga", "gb", "rr"), "left_anti"))
-      cur = next
-      drained = nNext == 0L
-      iter += 1
-    }
-    require(drained, s"groupLinkage did not drain in $maxIter rounds")
+      .select(struct(col("ga"), col("gb"), col("rl")).as("__l"),
+        struct(col("ga"), col("gb"), col("rr")).as("__r"), col("s"))
+    val matched = greedyMatches(cand, "__l", "__r", "s", maxIter)
+      .select(col("__l.ga").as("ga"), col("__l.gb").as("gb"),
+        col("__l.rl").as("rl"), col("__r.rr").as("rr"), col("s"))
 
     val sizesL = l.groupBy(col("ga")).agg(count(lit(1)).as("n_l"))
     val sizesR = r.groupBy(col("gb")).agg(count(lit(1)).as("n_r"))
@@ -1069,7 +1018,7 @@ object Linkage {
         e.join(deg.where(col("__deg") >= minCommon).select(col("id")), "id")
       else e
     (Tiers.pairs(eligible, Seq("nb"), "id", bucketCap, hardCap, saltGroups,
-        payload, sized = Some(sized)), deg)
+        payload, sized = Some(sized)).out, deg)
   }
 
   /** Candidate-pair PROVENANCE across blocking key families — the audit
@@ -1094,7 +1043,7 @@ object Linkage {
     require(bucketCap >= 1, s"bucketCap must be >= 1, got $bucketCap")
     Tiers.pairs(keys.select(col(familyCol), col(keyCol), col(idCol)),
         Seq(familyCol, keyCol), idCol, bucketCap, hardCap = bucketCap,
-        saltGroups = 1, payload = Seq(familyCol))
+        saltGroups = 1, payload = Seq(familyCol)).out
       .groupBy(col(s"${idCol}_a").as("url_a"), col(s"${idCol}_b").as("url_b"))
       .agg(array_join(sort_array(collect_set(col(s"${familyCol}_a"))), ",")
         .as("families"), count(lit(1)).as("n_keys"))

@@ -57,7 +57,7 @@ object MetaBlocking {
     val k = keys.select(col(idCol).as("url"), col(keyCol).as("key"))
     // one row PER SHARED KEY (no distinct!) — multiplicity IS the signal
     val edges = Tiers.pairs(k, Seq("key"), "url", bucketCap, hardCap, saltGroups)
-      .groupBy(col("url_a"), col("url_b"))
+      .out.groupBy(col("url_a"), col("url_b"))
       .agg(count(lit(1)).as("cbs"))
     // per-record retained-block counts for the Jaccard scheme
     val ent = Tiers.underCap(k, Seq("key"), hardCap)

@@ -124,18 +124,17 @@ object SetSimJoin {
     // first shared token's positions for the positional filter.
     val alpha = ceil((lit(tau) / (1.0 + tau)) *
       (col("la") + col("lb")).cast("double") - lit(1e-9))
-    Capped(Tiers.pairs(pre, Seq("tok"), "id", bucketCap, hardCap,
-        saltGroups, payload = Seq("len", "pos"))
-      .select(col("id_a").as("ia"), col("id_b").as("ib"),
-        col("len_a").as("la"), col("len_b").as("lb"),
-        col("pos_a").as("pa"), col("pos_b").as("pb"))
-      .where(lenOk)
-      .groupBy(col("ia"), col("ib"))
-      .agg(min(col("la")).as("la"), min(col("lb")).as("lb"),
-        min(col("pa")).as("i"), min(col("pb")).as("j"))
-      .where(lit(1) + least(col("la") - col("i"), col("lb") - col("j")) >= alpha)
-      .select(col("ia"), col("ib")),
-      Tiers.overCap(pre, Seq("tok"), hardCap))
+    Tiers.pairs(pre, Seq("tok"), "id", bucketCap, hardCap, saltGroups,
+        payload = Seq("len", "pos"))
+      .map(_.select(col("id_a").as("ia"), col("id_b").as("ib"),
+          col("len_a").as("la"), col("len_b").as("lb"),
+          col("pos_a").as("pa"), col("pos_b").as("pb"))
+        .where(lenOk)
+        .groupBy(col("ia"), col("ib"))
+        .agg(min(col("la")).as("la"), min(col("lb")).as("lb"),
+          min(col("pa")).as("i"), min(col("pb")).as("j"))
+        .where(lit(1) + least(col("la") - col("i"), col("lb") - col("j")) >= alpha)
+        .select(col("ia"), col("ib")))
   }
 
   // ------------------------------------------------------------- Ed-Join
@@ -189,7 +188,7 @@ object SetSimJoin {
     // members all take the salted grid (bucketCap 0, no finite hardCap)
     val shortPairs = Tiers.pairs(
       shortStrings(b, k, q).select(lit("short").as("key"), col("id"), col("len")),
-      Seq("key"), "id", 0, Int.MaxValue, saltGroups, payload = Seq("len"))
+      Seq("key"), "id", 0, Int.MaxValue, saltGroups, payload = Seq("len")).out
     // Verify BEFORE deduplicating (guide §2.3 "shuffle fewer bytes"):
     // measured at sf0.1, the candidate distinct removed only ~4% of rows
     // (912k → 870k) while paying a full shuffle of the raw candidate
@@ -199,15 +198,14 @@ object SetSimJoin {
     // prefix elements verifies to the same distance, so distinct() on
     // (ia, ib, dist) returns the identical set.
     val verify = graft.functions.levenshtein_capped(col("sa"), col("sb"), k)
-    Capped(gramPairs.union(shortPairs)
+    gramPairs.map(_.union(shortPairs)
       .where(abs(col("len_a") - col("len_b")) <= k)
       .select(col("id_a").as("ia"), col("id_b").as("ib"))
       .join(b.select(col("id").as("ia"), col("s").as("sa")), "ia")
       .join(b.select(col("id").as("ib"), col("s").as("sb")), "ib")
       .select(col("ia"), col("ib"), verify.as("dist"))
       .where(col("dist") <= k)
-      .distinct(),
-      Tiers.overCap(pre, Seq("g", "occ"), hardCap))
+      .distinct())
   }
 
   /** (g, occ, id, len) prefix elements: each record's q·k+1 globally-

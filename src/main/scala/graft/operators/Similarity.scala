@@ -398,17 +398,17 @@ object Similarity {
     // repeats with identical cos, so max() dedups it exactly on scalars
     // only (the 64-float vectors never enter the dedup shuffle) and the
     // partial aggregate combines duplicates map-side.
-    val scored = Tiers.pairs(bucketed, Seq("key"), "id", bucketCap, hardCap,
-        saltGroups, payload = Seq("v", "nrm"))
-      .select(col("id_a"), col("id_b"),
-        cosPre(col("v_a"), col("nrm_a"), col("v_b"), col("nrm_b")).as("cos"))
-      .select(explode(array(
-          struct(col("id_a").as("vec_id"), col("id_b").as("neighbor_id")),
-          struct(col("id_b").as("vec_id"), col("id_a").as("neighbor_id")))).as("d"),
-        col("cos"))
-      .groupBy(col("d.vec_id").as("vec_id"), col("d.neighbor_id").as("neighbor_id"))
-      .agg(max(col("cos")).as("cos"))
-    Capped(topK(scored, k), Tiers.overCap(bucketed, Seq("key"), hardCap))
+    Tiers.pairs(bucketed, Seq("key"), "id", bucketCap, hardCap, saltGroups,
+        payload = Seq("v", "nrm"))
+      .map(p => topK(p
+        .select(col("id_a"), col("id_b"),
+          cosPre(col("v_a"), col("nrm_a"), col("v_b"), col("nrm_b")).as("cos"))
+        .select(explode(array(
+            struct(col("id_a").as("vec_id"), col("id_b").as("neighbor_id")),
+            struct(col("id_b").as("vec_id"), col("id_a").as("neighbor_id")))).as("d"),
+          col("cos"))
+        .groupBy(col("d.vec_id").as("vec_id"), col("d.neighbor_id").as("neighbor_id"))
+        .agg(max(col("cos")).as("cos")), k))
   }
 
   /** (id, band, sig) integer signatures — the un-stringified face of

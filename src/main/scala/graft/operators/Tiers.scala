@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** An operator's output and the record of what its cap dropped, from one
   * call. `dropped` filters `n > cap` over the sizing frame the operator
-  * routes on (for [[Tiers]] operators, [[Tiers.overCap]] over the member
-  * frame it already shares), so reading it re-runs none of the keying. */
+  * routes on (for [[Tiers]] operators, the bucket sizes that
+  * [[Tiers.pairs]] or [[Tiers.probe]] routes on, over the member frame the
+  * operator already shares), so reading it re-runs none of the keying. */
 final case class Capped(out: DataFrame, dropped: DataFrame) {
   /** The same drop record under a further transform of `out`. */
   def map(f: DataFrame => DataFrame): Capped = copy(out = f(out))
@@ -23,11 +24,12 @@ final case class Capped(out: DataFrame, dropped: DataFrame) {
   *     self-join ([[saltedSelfJoin]]), so a hot bucket's quadratic pair
   *     work shards across G(G+1)/2 reducers (G = `saltGroups`) instead of
   *     landing on one, losslessly;
-  *  3. n > `hardCap` — dropped, never silently: the operator returns
-  *     [[Capped]], whose `dropped` is [[overCap]] over the same members
-  *     and keys (an ultra-hot key carries no discriminative signal and
-  *     would emit ~n²/2 junk pairs). Operators default `hardCap` to
-  *     `Int.MaxValue` where dropping is opt-in.
+  *  3. n > `hardCap` — dropped, never silently: [[pairs]] returns
+  *     [[Capped]], whose `dropped` is the (keys…, n) buckets over
+  *     `hardCap`, from the same sizes it routes on (an ultra-hot key
+  *     carries no discriminative signal and would emit ~n²/2 junk pairs).
+  *     Operators default `hardCap` to `Int.MaxValue` where dropping is
+  *     opt-in.
   *
   * Operators whose policy is a single cap (LSH band caps) keep tiers 1
   * and 3 only: [[pairs]] with `hardCap = bucketCap`, or [[underCap]] and
@@ -66,17 +68,19 @@ private[operators] object Tiers {
     * row per pair per shared bucket, cold and salted tiers unioned. Each
     * `payload` column rides along as `<p>_a`/`<p>_b`, aligned with the
     * pair's sides. Cold takes n ≤ min(`bucketCap`, `hardCap`), so no pair
-    * ever comes from a bucket [[overCap]] reports as dropped; when
-    * `hardCap` ≤ `bucketCap` the salted tier is provably empty and is left
-    * out of the plan.
+    * ever comes from a bucket `dropped` reports; when `hardCap` ≤
+    * `bucketCap` the salted tier is provably empty and is left out of the
+    * plan. `dropped` is the (keys…, n) buckets with n > `hardCap`.
     *
     * `sized` routes on bucket sizes computed from another frame (callers
     * that prune members before pairing but keep the tier of every bucket);
-    * its size column must be named `n`, which may itself be a payload. */
+    * its size column must be named `n`, which may itself be a payload.
+    * `dropped` then reads `sized` too, the sizes the tiers were cut on. */
   def pairs(members: DataFrame, keys: Seq[String], id: String,
       bucketCap: Int, hardCap: Int, saltGroups: Int,
-      payload: Seq[String] = Nil, sized: Option[DataFrame] = None): DataFrame = {
-    val keyed = members.join(sized.getOrElse(sizes(members, keys)), keys)
+      payload: Seq[String] = Nil, sized: Option[DataFrame] = None): Capped = {
+    val bucketSizes = sized.getOrElse(sizes(members, keys))
+    val keyed = members.join(bucketSizes, keys)
     val n = col("n")
     val cols = id +: payload
     def side(s: String) = keyed.where(n <= math.min(bucketCap, hardCap))
@@ -84,10 +88,11 @@ private[operators] object Tiers {
     val cold = side("a").join(side("b"), keys)
       .where(col(s"${id}_a") < col(s"${id}_b"))
       .select(cols.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
-    if (hardCap <= bucketCap) cold
-    else cold.union(saltedSelfJoin(
-      keyed.where(n > bucketCap && n <= hardCap),
-      keys, id, payload, saltGroups))
+    val out = if (hardCap <= bucketCap) cold
+      else cold.union(saltedSelfJoin(
+        keyed.where(n > bucketCap && n <= hardCap),
+        keys, id, payload, saltGroups))
+    Capped(out, bucketSizes.where(n > hardCap))
   }
 
   /** Probe rows joined with the index members sharing their key, one row
@@ -126,7 +131,7 @@ private[operators] object Tiers {
             .as("__salt"): _*)
       cold.unionAll(idx.join(prb, keys :+ "__salt").select(out: _*))
     }
-    Capped(joined, overCap(index, keys, hardCap))
+    Capped(joined, sized.where(n > hardCap))
   }
 
   /** Salted (fragment-replicate grid) self-join: member u of bucket k with

@@ -108,6 +108,17 @@ class BlockingSpec extends SparkFunSuite {
     assert(e.getMessage.contains("order key (sk, id) must be unique per row"))
   }
 
+  test("sortedNeighborhood rejects a duplicated (date sortKey, id) row") {
+    import spark.implicits._
+    val df = Seq((1L, "2020-01-01"), (2L, "2020-01-02"), (2L, "2020-01-02"),
+      (3L, "2020-01-03")).toDF("id", "sk").withColumn("sk", to_date(col("sk")))
+    val e = intercept[Exception] {
+      Linkage.sortedNeighborhoodPairs(df, "id", "sk", 2, partitions = 2)
+        .collect()
+    }
+    assert(e.getMessage.contains("order key (sk, id) must be unique per row"))
+  }
+
   // ------------------------------------------------------- two-corpus linkage
 
   test("tokenBlockKeys emits one key per distinct qualifying token") {
@@ -163,7 +174,7 @@ class BlockingSpec extends SparkFunSuite {
       for (i <- 1L to n.toLong; j <- i + 1 to n.toLong) yield (i, j)
     def run(bucketCap: Int, hardCap: Int) = {
       val df = Tiers.pairs(keys, Seq("key"), "url", bucketCap, hardCap,
-        saltGroups = 4, payload = Seq("key", "tag"))
+        saltGroups = 4, payload = Seq("key", "tag")).out
       val rows = df.collect().toSeq
       // the grid swaps sides to emit url_a < url_b: each payload must
       // travel with its own url

@@ -56,8 +56,38 @@ class DriverFinishSpec extends SparkFunSuite {
     val sparkDoubles = doubles.toDF("v").orderBy($"v").collect().map(_.getDouble(0))
     assert(unsigned(doubles.sorted(dblOrd)) == unsigned(sparkDoubles.toSeq))
 
-    assert(DriverFinish.ordering(DecimalType(10, 2)).isEmpty)
     assert(DriverFinish.ordering(BinaryType).isEmpty)
+  }
+
+  test("driver finish order: booleans, dates, timestamps, decimals and structs sort as Spark SQL's orderBy") {
+    def sortsAsSql(dt: DataType, vals: Any*): Unit = {
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(vals.map(Row(_)), 3),
+        new StructType().add("v", dt))
+      val sql = df.orderBy(col("v")).collect().map(_.get(0)).toSeq
+      val ord = DriverFinish.ordering(dt)
+      assert(ord.isDefined, dt)
+      assert(df.collect().map(_.get(0)).toSeq.sorted(ord.get) == sql, dt)
+    }
+    sortsAsSql(BooleanType, true, null, false, true)
+    sortsAsSql(DateType, java.sql.Date.valueOf("2020-01-02"), null,
+      java.sql.Date.valueOf("1969-12-31"), java.sql.Date.valueOf("1900-03-01"))
+    sortsAsSql(TimestampType,
+      java.sql.Timestamp.valueOf("2020-01-01 00:00:00.000002"),
+      java.sql.Timestamp.valueOf("2020-01-01 00:00:00.000001"), null,
+      java.sql.Timestamp.valueOf("1960-06-30 12:00:00"))
+    sortsAsSql(TimestampNTZType,
+      java.time.LocalDateTime.parse("2020-01-01T00:00:00.000002"), null,
+      java.time.LocalDateTime.parse("1960-06-30T12:00:00"))
+    sortsAsSql(DecimalType(10, 2), new java.math.BigDecimal("2.25"), null,
+      new java.math.BigDecimal("-0.01"), new java.math.BigDecimal("-1.50"),
+      new java.math.BigDecimal("0.00"))
+    // fields in order, each nulls first; a null struct before them all
+    sortsAsSql(new StructType().add("a", LongType).add("b", StringType),
+      Row(1L, "b"), Row(null, "a"), Row(1L, null), Row(0L, "\uFFFF"),
+      Row(0L, "\uD83D\uDE00"), null, Row(null, null))
+    assert(DriverFinish.ordering(
+      new StructType().add("a", LongType).add("b", BinaryType)).isEmpty)
   }
 
   test("driver finish row order: directions, tie-breaks, unsupported keys") {
@@ -67,7 +97,7 @@ class DriverFinishSpec extends SparkFunSuite {
     val rows = Seq(Row(0.0, "b"), Row(-0.0, "a"), Row(1.0, "z"), Row(null, "c"))
     assert(rows.sorted(ord).map(_.getString(1)) == Seq("z", "a", "b", "c"))
     assert(DriverFinish.rowOrdering(
-      schema.add("d", DateType), "s" -> Desc, "d" -> Asc).isEmpty)
+      schema.add("d", BinaryType), "s" -> Desc, "d" -> Asc).isEmpty)
   }
 
   test("driver finish equality: binary ids give the same output at cap 0 and the default cap") {

@@ -100,11 +100,37 @@ class GreedyMatchSpec extends SparkFunSuite {
       .toDF("id_l", "id_r", "score")
     assert(sqlOrderGreedy(zeros) == Set((1L, 10L)))
     assert(sqlOrderGreedy(strs) == Set(("x", bmp)))
-    for (df <- Seq(zeros, strs); cap <- Seq("0", "1", "1000000")) {
+    // decimal scores, and ids scoped to a group as struct(g, id) with null
+    // groups: struct equality treats null fields as equal
+    val decimals = randomPairs.toDF("id_l", "id_r", "score")
+      .withColumn("score", col("score").cast("decimal(10,2)"))
+    assert(sqlOrderGreedy(decimals) == sequentialGreedy(randomPairs))
+    val structs = randomPairs.toDF("l", "r", "score").select(
+      struct(when(col("l") % 5 =!= 0, col("l") % 3).as("g"), col("l").as("id"))
+        .as("id_l"),
+      struct(when(col("r") % 4 =!= 0, col("r") % 2).as("g"), col("r").as("id"))
+        .as("id_r"),
+      col("score"))
+    for (df <- Seq(zeros, strs, decimals, structs);
+        cap <- Seq("0", "1", "1000000")) {
       val got = withConf(capKey, cap)(Linkage.greedyMatches(df).collect())
         .map(r => (r.get(0), r.get(1))).toSet
       assert(got == sqlOrderGreedy(df), s"cap $cap")
     }
+  }
+
+  test("driver finish: greedy.driverFinishEdges is read in one place under operators/") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val reads = Files.walk(Paths.get("src/main/scala/graft/operators"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("\"greedy.driverFinishEdges\"") =>
+            s"$p:${i + 1}"
+        }
+      }
+    assert(reads.size == 1, reads.mkString("greedy cap reads: ", ", ", ""))
   }
 
   test("score ties break by (id_l, id_r) like the sequential order") {

@@ -53,13 +53,14 @@ class GroupLinkageSpec extends SparkFunSuite {
     } yield (l, r, math.rint(rng.nextDouble() * 50) / 10.0)
   }
 
-  /** groupLinkage over the random fixture vs the sequential reference. */
-  private def checkRandom(): Unit = {
+  /** groupLinkage over the random fixture (its candidate rows plus
+    * `extra` repeated ones) vs the sequential reference. */
+  private def checkRandom(extra: Seq[(Long, Long, Double)] = Nil): Unit = {
     val left = groupsL.toSeq.flatMap { case (g, ms) => ms.map(m => (g, m)) }
       .toDF("gid", "rid")
     val right = groupsR.toSeq.flatMap { case (g, ms) => ms.map(m => (g, m)) }
       .toDF("gid", "rid")
-    val scored = randomScores.toDF("id_l", "id_r", "score")
+    val scored = (randomScores ++ extra).toDF("id_l", "id_r", "score")
 
     val got = Linkage.groupLinkage(left, right, scored)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
@@ -77,8 +78,40 @@ class GroupLinkageSpec extends SparkFunSuite {
   }
 
   test("driver finish at cap 0 and the default equals the sequential reference") {
-    withConf(capKey, "0")(checkRandom()) // distributed rounds only
-    checkRandom()
+    // 40 candidate rows repeated: a duplicate of a matched pair matches once
+    for (extra <- Seq(Nil, randomScores.take(40))) {
+      withConf(capKey, "0")(checkRandom(extra)) // distributed rounds only
+      withConf(capKey, "1")(checkRandom(extra))
+      checkRandom(extra)
+    }
+  }
+
+  test("driver finish: AQE off and 1, 7 or 64 shuffle partitions give the reference at cap 0 and the default") {
+    withConf("spark.sql.adaptive.enabled", "false") {
+      for (p <- Seq("1", "7", "64")) withConf("spark.sql.shuffle.partitions", p) {
+        withConf(capKey, "0")(checkRandom())
+        checkRandom()
+      }
+    }
+  }
+
+  /** Null group ids on the left: group 7 = {1}, the null group = {2, 3}. */
+  private def nullGroupRows(maxIter: Int): Seq[Seq[Any]] = {
+    val left = Seq((Some(7L), 1L), (None, 2L), (None, 3L)).toDF("gid", "rid")
+    val right = Seq((9L, 11L), (9L, 12L)).toDF("gid", "rid")
+    val scored = Seq((1L, 11L, 1.0), (2L, 12L, 0.8), (3L, 11L, 0.9))
+      .toDF("id_l", "id_r", "score")
+    Linkage.groupLinkage(left, right, scored, maxIter = maxIter)
+      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
+  }
+
+  test("driver finish: a null group id drains at cap 0 and 1 to the default-cap rows") {
+    // the null group is one group: its members are scoped together, and
+    // it has no size row, so only group pair (7, 9) is reported
+    val want = nullGroupRows(1000)
+    assert(want == Seq(Seq(7L, 9L, 1L, 2L, 1L, 1.0, 0.5)))
+    for (cap <- Seq("0", "1"))
+      assert(withConf(capKey, cap)(nullGroupRows(20)) == want, s"cap $cap")
   }
 
   test("driver finish: tied non-BMP and BMP rids follow SQL order at every cap") {

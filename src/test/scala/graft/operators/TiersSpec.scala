@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkFunSuite
 
 /** The asymmetric index/probe tier ([[Tiers.probe]]) against a brute-force
-  * join, and the source scan that keeps salting inside [[Tiers]]. */
+  * join, the drop record of the symmetric [[Tiers.pairs]], and the source
+  * scan that keeps salting inside [[Tiers]]. */
 class TiersSpec extends SparkFunSuite {
 
   import spark.implicits._
@@ -52,6 +53,21 @@ class TiersSpec extends SparkFunSuite {
     val plan = cold.out.queryExecution.optimizedPlan.toString
     assert(!plan.contains("__salt") && !plan.contains("Generate"), plan)
     assert(rows(cold.out) == brute)
+  }
+
+  test("pairs returns its drop record from the sizes it routes on") {
+    val kept = Tiers.pairs(index, Seq("key"), "id", bucketCap = 3,
+      hardCap = 5, saltGroups = 4)
+    assert(kept.dropped.as[(String, Long)].collect().toSeq == Seq(("d", 6L)))
+    assert(kept.out.select("id_a").as[String].collect().toSet ==
+      Set("c1", "s1", "s2", "s3"))
+    // `sized` from the unpruned index routes, and is recorded, even though
+    // the pruned members of d number only 5
+    val pruned = index.where(col("id") =!= "d1")
+    val routed = Tiers.pairs(pruned, Seq("key"), "id", bucketCap = 3,
+      hardCap = 5, saltGroups = 4, sized = Some(Tiers.sizes(index, Seq("key"))))
+    assert(routed.dropped.as[(String, Long)].collect().toSeq == Seq(("d", 6L)))
+    assert(routed.out.where(col("id_a").startsWith("d")).isEmpty)
   }
 
   test("no salting outside Tiers in the main sources") {
