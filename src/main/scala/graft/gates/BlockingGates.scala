@@ -238,7 +238,7 @@ private[graft] object BlockingGates {
     Gate("q_meta_blocking", (s, dir) =>
       graft.operators.MetaBlocking.wepPrune(
         graft.operators.MetaBlocking.blockingGraph(metaKeys(s, dir),
-          idCol = "id", keyCol = "key", bucketCap = 50)),
+          idCol = "id", keyCol = "key", bucketCap = 50).out),
       // Meta-blocking WEP: integer cross-multiplied mean cut over the graph
       // CTEs (sum(cbs) is HUGEINT in DuckDB — the comparison promotes, so
       // the cut is exact on both sides).
@@ -253,7 +253,7 @@ private[graft] object BlockingGates {
     Gate("q_meta_blocking_wnp", (s, dir) =>
       graft.operators.MetaBlocking.wnpPrune(
         graft.operators.MetaBlocking.blockingGraph(metaKeys(s, dir),
-          idCol = "id", keyCol = "key", bucketCap = 50))
+          idCol = "id", keyCol = "key", bucketCap = 50).out)
         .select(col("url_a"), col("url_b"), col("cbs"), col("blocks_a"),
           col("blocks_b"), col("js")),
       // Meta-blocking WNP: per-node mean via both-directions node sums,
@@ -278,7 +278,7 @@ private[graft] object BlockingGates {
     Gate("q_meta_blocking_cnp", (s, dir) =>
       graft.operators.MetaBlocking.cnpPrune(
         graft.operators.MetaBlocking.blockingGraph(metaKeys(s, dir),
-          idCol = "id", keyCol = "key", bucketCap = 50), k = 3),
+          idCol = "id", keyCol = "key", bucketCap = 50).out, k = 3),
       // Meta-blocking CNP: per-node top-k by (weight DESC, opposite id) over
       // both directions, folded back to canonical orientation, semi-joined.
       s"""WITH $metaGraphCtes,

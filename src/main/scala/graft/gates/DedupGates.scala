@@ -503,7 +503,7 @@ private[graft] object DedupGates {
           spread(s.read.parquet(s"$dir/documents.parquet")),
           "doc_id", "text", k = 8, w = 4, hashFamily = "sha256")
           .select(col("doc_id"), col("fp_hash")),
-        "doc_id", "fp_hash", minCommon = 30),
+        "doc_id", "fp_hash", minCommon = 30).out,
       s"""WITH $winnowCtes, e AS (
         |  SELECT DISTINCT doc_id AS id, fp_hash AS nb FROM fp
         |), deg AS (
@@ -614,7 +614,7 @@ private[graft] object DedupGates {
           spread(s.read.parquet(s"$dir/documents.parquet")), "doc_id", "text",
           w = 16, maskBits = 5)
           .select(col("doc_id"), col("chunk_sha")),
-        "doc_id", "chunk_sha", minCommon = 4),
+        "doc_id", "chunk_sha", minCommon = 4).out,
       // shared-chunk pair composition — the q_winnow_pairs fold over the
       // CDC chunk bipartite frame.
       s"""WITH $cdcChunkCtes, e AS (

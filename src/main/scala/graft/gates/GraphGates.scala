@@ -49,7 +49,7 @@ private[graft] object GraphGates {
       val edges = o.join(l, col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("ent"), col("l_partkey").as("nb"))
       graft.operators.Linkage.commonNeighborPairs(edges, "ent", "nb",
-        minCommon = 3, bucketCap = 30, saltGroups = 8)
+        minCommon = 3, bucketCap = 30, saltGroups = 8).out
     },
       // tier-blind brute force over the distinct bipartite edge set; the
       // jaccard denominator in long before the one double division.

@@ -266,9 +266,8 @@ object Dedup {
     // the banded frame feeds the sizing and the join-back
     val banded = Frames.shared(
       minhashBanded(corpus, idCol, textCol, numHashes, bands, hashFamily))
-    Capped(Tiers.underCap(banded, Seq("key"), bucketCap)
-      .select(col("key"), col("id")),
-      Tiers.overCap(banded, Seq("key"), bucketCap))
+    Tiers.capped(banded, Seq("key"), bucketCap)
+      .map(_.select(col("key"), col("id")))
   }
 
   /** Incremental near-dup detection against a PREBUILT corpus band index

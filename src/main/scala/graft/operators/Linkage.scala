@@ -119,7 +119,7 @@ object Linkage {
 
   /** Stage 3 — candidate pairs: urls sharing any key, url_a < url_b,
     * deduped, under the three-tier skew policy of [[Tiers]] (web blocking
-    * keys are Zipfian); [[droppedBuckets]] records the dropped tier.
+    * keys are Zipfian); [[candidateCapped]] also returns the dropped tier.
     *
     * Every column of `keys` other than `url` and `key` is carried as
     * [[Tiers.pairs]] payload: over [[candidateKeys]] the output is
@@ -132,25 +132,26 @@ object Linkage {
     * the dedup, which `dropDuplicates("url_a", "url_b")` would block. */
   def candidatePairs(keys: DataFrame, bucketCap: Int = 200,
       hardCap: Int = 100000, saltGroups: Int = 16,
-      distinctPairs: Boolean = true): DataFrame = {
+      distinctPairs: Boolean = true): DataFrame =
+    candidateCapped(keys, bucketCap, hardCap, saltGroups, distinctPairs).out
+
+  /** [[candidatePairs]] and its (key, bucket_n) buckets over `hardCap`. */
+  private[graft] def candidateCapped(keys: DataFrame, bucketCap: Int,
+      hardCap: Int, saltGroups: Int, distinctPairs: Boolean = true): Capped = {
     val payload = keys.columns.toSeq.filterNot(Set("url", "key"))
     // the key frame feeds the sizing aggregate AND the join-back: callers
     // often derive it from an expensive pass (sha256 MinHash band keys)
     val all = Tiers.pairs(Frames.shared(keys), Seq("key"), "url", bucketCap,
-      hardCap, saltGroups, payload).out
+      hardCap, saltGroups, payload)
     // `distinctPairs = false` is for callers whose key frame is FUNCTIONAL
     // (each url carries exactly one key — e.g. adaptive-SNM segment ids):
     // within a bucket each unordered pair meets exactly once (cold join by
     // url_a < url_b; salted grid by construction) and no pair can span two
     // buckets, so the dedup shuffle would re-hash the full pair volume to
     // remove nothing (guide §2.4: a distinct on already-unique data).
-    if (distinctPairs) all.distinct() else all
+    Capped(if (distinctPairs) all.out.distinct() else all.out,
+      all.dropped.withColumnRenamed("n", "bucket_n"))
   }
-
-  /** Buckets excluded by `hardCap` with their sizes — the non-silent
-    * record of what blocking dropped. */
-  def droppedBuckets(keys: DataFrame, hardCap: Int = 100000): DataFrame =
-    Tiers.overCap(keys, Seq("key"), hardCap, "bucket_n")
 
   /** Stage 4 — pairwise scoring: composite Jaro-Winkler + Sørensen-Dice on
     * the normalized names (the north-star composite). A pure projection
@@ -288,7 +289,7 @@ object Linkage {
       explode(transform(
         sequence(lit(1), greatest(length(col("k")) - lit(minLen) + 1, lit(1))),
         i => col("k").substr(i, length(col("k"))))).as("suffix"))
-    Tiers.underCap(sufs, Seq("suffix"), maxBlockSize)
+    Tiers.capped(sufs, Seq("suffix"), maxBlockSize).out
       .select(col("id"), col("suffix"))
   }
 
@@ -323,27 +324,28 @@ object Linkage {
   /** Blocking-scheme profile — the capacity-planning pass a 100 TB linkage
     * job runs BEFORE committing to a key scheme: how many blocks, how hot
     * is the hottest, and exactly how many candidate pairs each tier of
-    * [[candidatePairs]]' skew policy would generate at the given caps
-    * (cold ≤ bucketCap < salted ≤ hardCap < dropped). Pair counts are
-    * Σ n(n−1)/2 per block in decimal(38,0) — integer-exact far past the
-    * 2^63 pair counts a Zipfian web key can hit, the
+    * [[candidatePairs]]' skew policy would generate at the given caps,
+    * each block in the one tier [[Tiers.pairs]] routes it to. Pair counts
+    * are Σ n(n−1)/2 per block in decimal(38,0) — integer-exact far past
+    * the 2^63 pair counts a Zipfian web key can hit, the
     * [[Evaluation.adjustedRandStats]] overflow lesson applied. One
     * map-side-combined sizing groupBy + one global aggregate; input is the
     * [[candidatePairs]] key schema (key, url). */
   def blockingProfile(keys: DataFrame, bucketCap: Int = 200,
       hardCap: Int = 100000): DataFrame = {
     val sized = Tiers.sizes(keys, Seq("key"))
+    val cold = col("n") <= math.min(bucketCap, hardCap)
     val pairs2 = col("n").cast("decimal(38,0)") *
       (col("n") - 1).cast("decimal(38,0)")
     sized.agg(
       count(lit(1)).as("n_blocks"),
       sum(col("n")).as("n_assignments"),
       max(col("n")).as("max_block"),
-      sum(when(col("n") <= bucketCap, 1L).otherwise(0L)).as("blocks_cold"),
+      sum(when(cold, 1L).otherwise(0L)).as("blocks_cold"),
       sum(when(col("n") > bucketCap && col("n") <= hardCap, 1L)
         .otherwise(0L)).as("blocks_salted"),
       sum(when(col("n") > hardCap, 1L).otherwise(0L)).as("blocks_dropped"),
-      (sum(when(col("n") <= bucketCap, pairs2).otherwise(lit(0)))
+      (sum(when(cold, pairs2).otherwise(lit(0)))
         / lit(2)).cast("decimal(38,0)").as("pairs_cold"),
       (sum(when(col("n") > bucketCap && col("n") <= hardCap, pairs2)
         .otherwise(lit(0))) / lit(2)).cast("decimal(38,0)").as("pairs_salted"),
@@ -782,10 +784,8 @@ object Linkage {
     * struct(ga, gb, rl) and struct(ga, gb, rr). Group pairs share no
     * scoped endpoint, so all of them progress in the same rounds (and the
     * same driver finish), each matched exactly as the sequential greedy
-    * scan of its own candidates in (score DESC, rl, rr) order. Struct
-    * equi-joins compare null fields as equal, so records with a null group
-    * id are matched as one group; that group has no size row, so its group
-    * pairs are not in the output.
+    * scan of its own candidates in (score DESC, rl, rr) order. Records
+    * with a null group id belong to no group and are left out.
     *
     * @param left    (gidCol, ridCol) group membership, side A
     * @param right   (gidCol, ridCol) group membership, side B
@@ -803,7 +803,9 @@ object Linkage {
       leftIdCol: String = "id_l", rightIdCol: String = "id_r",
       scoreCol: String = "score", maxIter: Int = 1000): DataFrame = {
     val l = left.select(col(gidCol).as("ga"), col(ridCol).as("rl"))
+      .where(col("ga").isNotNull)
     val r = right.select(col(gidCol).as("gb"), col(ridCol).as("rr"))
+      .where(col("gb").isNotNull)
     // within one group pair, (s DESC, __l, __r) orders as (s DESC, rl, rr)
     val cand = scored.select(col(leftIdCol).as("rl"),
         col(rightIdCol).as("rr"), col(scoreCol).cast("double").as("s"))
@@ -943,20 +945,19 @@ object Linkage {
     * commodity part every supplier ships) is exactly the hot-bucket shape
     * that melts a reducer, so neighbors over `bucketCap` route through the
     * salted grid (lossless) and neighbors over `hardCap` are dropped
-    * (opt-in, default lossless; a finite cap
-    * requires evaluating [[droppedBuckets]] on the (neighbor → key) frame
-    * alongside — hubs carry little identity signal anyway, which is why
-    * capping them is the standard move). The per-pair count then needs NO
-    * intersection recomputation: each surviving (neighbor, pair) row
-    * contributes 1 to one map-side-combinable groupBy, and degrees join
-    * back on the entity key. Σ common over all pairs = Σ_nb n·(n−1)/2, so
-    * hub capping is also the volume-observability story. */
+    * (opt-in, default lossless; `dropped` is their (nb, n) — hubs carry
+    * little identity signal anyway, which is why capping them is the
+    * standard move). The per-pair count then needs NO intersection
+    * recomputation: each surviving (neighbor, pair) row contributes 1 to
+    * one map-side-combinable groupBy, and degrees join back on the entity
+    * key. Σ common over all pairs = Σ_nb n·(n−1)/2, so hub capping is
+    * also the volume-observability story. */
   def commonNeighborPairs(edges: DataFrame, entityCol: String,
       neighborCol: String, minCommon: Long = 1L, bucketCap: Int = 1000,
-      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
+      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): Capped = {
     val (pairs, deg) = neighborPairs(edges, entityCol, neighborCol,
       minCommon, bucketCap, hardCap, saltGroups, payload = Nil)
-    pairs
+    pairs.map(_
       .groupBy(col("id_a").as("url_a"), col("id_b").as("url_b"))
       .agg(count(lit(1)).as("common_neighbors"))
       .where(col("common_neighbors") >= minCommon)
@@ -965,7 +966,7 @@ object Linkage {
       .select(col("url_a"), col("url_b"), col("common_neighbors"),
         (col("common_neighbors").cast("double") /
           (col("__da") + col("__db") - col("common_neighbors"))
-            .cast("double")).as("neighborhood_jaccard"))
+            .cast("double")).as("neighborhood_jaccard")))
   }
 
   /** Adamic-Adar weighting for the same pairs — Σ_{z ∈ Γ(a)∩Γ(b)}
@@ -973,26 +974,27 @@ object Linkage {
     * libm-dependent across engines, so this face is spec-pinned in sbt
     * (vs hand-computed fixtures), never hash-gate-faced — gate on
     * [[commonNeighborPairs]] instead. Neighbors of degree 1 appear in no
-    * pair; degree-2+ gives ln ≥ ln 2 > 0, so the division is safe. */
+    * pair; degree-2+ gives ln ≥ ln 2 > 0, so the division is safe. Hubs
+    * over `hardCap` are dropped as in [[commonNeighborPairs]]. */
   def adamicAdarPairs(edges: DataFrame, entityCol: String,
       neighborCol: String, minCommon: Long = 1L, bucketCap: Int = 1000,
-      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): DataFrame = {
+      hardCap: Int = Int.MaxValue, saltGroups: Int = 16): Capped = {
     // the neighbor degree rides along as payload
     val (pairs, _) = neighborPairs(edges, entityCol, neighborCol,
       minCommon, bucketCap, hardCap, saltGroups, payload = Seq("n"))
-    pairs
+    pairs.map(_
       .groupBy(col("id_a").as("url_a"), col("id_b").as("url_b"))
       .agg(count(lit(1)).as("common_neighbors"),
         sum(lit(1.0) / log(col("n_a").cast("double"))).as("adamic_adar"))
-      .where(col("common_neighbors") >= minCommon)
+      .where(col("common_neighbors") >= minCommon))
   }
 
   /** The body [[commonNeighborPairs]] and [[adamicAdarPairs]] share:
     * ([[Tiers.pairs]] of entities by shared neighbor, one row per pair per
-    * shared neighbor, with `payload`; the (id, __deg) entity degrees). */
+    * shared neighbor, with `payload`, and the drop record; the degrees). */
   private def neighborPairs(edges: DataFrame, entityCol: String,
       neighborCol: String, minCommon: Long, bucketCap: Int, hardCap: Int,
-      saltGroups: Int, payload: Seq[String]): (DataFrame, DataFrame) = {
+      saltGroups: Int, payload: Seq[String]): (Capped, DataFrame) = {
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
     // The distinct edge frame fans out to up to FIVE consumers (deg, sized,
     // the eligibility join, and commonNeighborPairs' two final degree
@@ -1018,7 +1020,7 @@ object Linkage {
         e.join(deg.where(col("__deg") >= minCommon).select(col("id")), "id")
       else e
     (Tiers.pairs(eligible, Seq("nb"), "id", bucketCap, hardCap, saltGroups,
-        payload, sized = Some(sized)).out, deg)
+        payload, sized = Some(sized)), deg)
   }
 
   /** Candidate-pair PROVENANCE across blocking key families — the audit

@@ -43,32 +43,34 @@ object MetaBlocking {
     * (`idCol`, `keyCol`): one row per unordered co-occurring pair with
     * integer CBS and per-edge-exact JS weights.
     *
-    * Output: (url_a, url_b, cbs: long, blocks_a: long, blocks_b: long,
+    * `out`: (url_a, url_b, cbs: long, blocks_a: long, blocks_b: long,
     * js: double) with url_a < url_b.
     *
     * Blocks are routed by [[Tiers]]. Blocks larger than `hardCap` are
-    * dropped (observable via [[Linkage.droppedBuckets]]) and do NOT count
-    * toward blocks_a/b, so JS stays consistent with the graph it
-    * describes. Each tier emits a pair exactly once per shared key, so
-    * CBS does not depend on the tier (spec-pinned in MetaBlockingSpec). */
+    * dropped — `dropped` is their (key, n) — and do NOT count toward
+    * blocks_a/b, so JS stays consistent with the graph it describes.
+    * Each tier emits a pair exactly once per shared key, so CBS does not
+    * depend on the tier (spec-pinned in MetaBlockingSpec). */
   def blockingGraph(keys: DataFrame, idCol: String = "url",
       keyCol: String = "key", bucketCap: Int = 200, hardCap: Int = 100000,
-      saltGroups: Int = 16): DataFrame = {
+      saltGroups: Int = 16): Capped = {
     val k = keys.select(col(idCol).as("url"), col(keyCol).as("key"))
+    // the block sizes route the pair tiers AND cut the block counts
+    val sized = Tiers.sizes(k, Seq("key"))
     // one row PER SHARED KEY (no distinct!) — multiplicity IS the signal
-    val edges = Tiers.pairs(k, Seq("key"), "url", bucketCap, hardCap, saltGroups)
-      .out.groupBy(col("url_a"), col("url_b"))
-      .agg(count(lit(1)).as("cbs"))
+    val tiered = Tiers.pairs(k, Seq("key"), "url", bucketCap, hardCap,
+      saltGroups, sized = Some(sized))
     // per-record retained-block counts for the Jaccard scheme
-    val ent = Tiers.underCap(k, Seq("key"), hardCap)
+    val ent = k.join(sized.where(col("n") <= hardCap), "key")
       .groupBy(col("url")).agg(count(lit(1)).as("nblocks"))
-    edges
+    tiered.map(_.groupBy(col("url_a"), col("url_b"))
+      .agg(count(lit(1)).as("cbs"))
       .join(ent.select(col("url").as("url_a"), col("nblocks").as("blocks_a")), "url_a")
       .join(ent.select(col("url").as("url_b"), col("nblocks").as("blocks_b")), "url_b")
       .withColumn("js", col("cbs").cast("double") /
         (col("blocks_a") + col("blocks_b") - col("cbs")).cast("double"))
       .select(col("url_a"), col("url_b"), col("cbs"), col("blocks_a"),
-        col("blocks_b"), col("js"))
+        col("blocks_b"), col("js")))
   }
 
   /** Block Filtering (Papadakis et al., "Scaling Entity Resolution to

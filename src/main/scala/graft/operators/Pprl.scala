@@ -85,20 +85,18 @@ object Pprl {
       seed))
     val kb = Frames.shared(blockKeys(b, idCol, sigCol, m, bands, bitsPerBand,
       seed))
-    val cand = Tiers.underCap(ka, Seq("key"), bucketCap)
-      .select(col("key"), col("id").as("id_a"))
-      .join(Tiers.underCap(kb, Seq("key"), bucketCap)
-        .select(col("key"), col("id").as("id_b")), "key")
+    val ca = Tiers.capped(ka, Seq("key"), bucketCap)
+    val cb = Tiers.capped(kb, Seq("key"), bucketCap)
+    val cand = ca.out.select(col("key"), col("id").as("id_a"))
+      .join(cb.out.select(col("key"), col("id").as("id_b")), "key")
       .select(col("id_a"), col("id_b")).distinct()
-    def over(keys: DataFrame, side: String): DataFrame =
-      Tiers.overCap(keys, Seq("key"), bucketCap)
-        .select(lit(side).as("side"), col("key"), col("n"))
     Capped(cand
       .join(a.select(col(idCol).as("id_a"), col(sigCol).as("__sa")), "id_a")
       .join(b.select(col(idCol).as("id_b"), col(sigCol).as("__sb")), "id_b")
       .select(col("id_a"), col("id_b"),
         graft.functions.bloom_dice(col("__sa"), col("__sb")).as("dice"))
       .where(col("dice") >= theta),
-      over(ka, "a").union(over(kb, "b")))
+      ca.dropped.select(lit("a").as("side"), col("key"), col("n"))
+        .union(cb.dropped.select(lit("b").as("side"), col("key"), col("n"))))
   }
 }

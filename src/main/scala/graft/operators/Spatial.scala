@@ -80,8 +80,8 @@ object Spatial {
     * (country, category, tenant) ANDed into the blocking. `cellSize`
     * must be ≥ `radius` — that inequality IS the lossless-coverage
     * proof; smaller cells would need a wider neighbor ring. `dropped` is
-    * [[Linkage.droppedBuckets]] over the same cell keys: (key, bucket_n)
-    * of the cells over `hardCap`. */
+    * the (key, bucket_n) cells over `hardCap`, from the sizes the pair
+    * tiers route on. */
   def gridCandidates(df: DataFrame, idCol: String, latCol: String,
       lonCol: String, radius: Long, cellSize: Long,
       partitionCols: Seq[String] = Nil, bucketCap: Int = 200,
@@ -90,15 +90,12 @@ object Spatial {
     require(cellSize >= radius,
       s"cellSize ($cellSize) must be >= radius ($radius) — the forward " +
         "half-neighborhood only covers king-move-adjacent cells")
-    // the cell keys feed the pair tiers and the drop record
-    val keys = Frames.shared(
-      gridKeys(df, idCol, latCol, lonCol, cellSize, partitionCols))
-    val pairs = Linkage.candidatePairs(keys, bucketCap, hardCap, saltGroups)
+    val keys = gridKeys(df, idCol, latCol, lonCol, cellSize, partitionCols)
     val pts = df
       .where(col(latCol).isNotNull && col(lonCol).isNotNull)
       .select(col(idCol).as("__gid"), col(latCol).cast("long").as("__gla"),
         col(lonCol).cast("long").as("__glo"))
-    Capped(pairs
+    Linkage.candidateCapped(keys, bucketCap, hardCap, saltGroups).map(_
       .join(pts.select(col("__gid").as("url_a"), col("__gla").as("__laa"),
         col("__glo").as("__loa")), "url_a")
       .join(pts.select(col("__gid").as("url_b"), col("__gla").as("__lab"),
@@ -106,7 +103,6 @@ object Spatial {
       .select(col("url_a").as("id_a"), col("url_b").as("id_b"),
         greatest(abs(col("__laa") - col("__lab")),
           abs(col("__loa") - col("__lob"))).as("d_chebyshev"))
-      .where(col("d_chebyshev") <= radius),
-      Linkage.droppedBuckets(keys, hardCap))
+      .where(col("d_chebyshev") <= radius))
   }
 }

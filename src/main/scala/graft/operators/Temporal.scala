@@ -68,23 +68,21 @@ object Temporal {
     *
     * Scale shape: explode → [[Linkage.candidatePairs]] (cold / salted /
     * dropped tiers, pair distinct) → two id-keyed equi-joins against the
-    * bounds → one codegen overlap filter. `dropped` is
-    * [[Linkage.droppedBuckets]] over the same cell keys — a dropped cell
-    * here means "too many concurrent intervals at one grid slot", the
-    * temporal analogue of a stopword block. */
+    * bounds → one codegen overlap filter. `dropped` is the
+    * (key, bucket_n) cells over `hardCap`, from the sizes the pair tiers
+    * route on — a dropped cell here means "too many concurrent intervals
+    * at one grid slot", the temporal analogue of a stopword block. */
   def intervalCandidates(df: DataFrame, idCol: String, startCol: String,
       endCol: String, bucketWidth: Long, partitionCols: Seq[String] = Nil,
       bucketCap: Int = 200, hardCap: Int = 100000,
       saltGroups: Int = 16): Capped = {
-    // the cell keys feed the pair tiers and the drop record
-    val keys = Frames.shared(intervalKeys(df, idCol, startCol, endCol,
-      bucketWidth, partitionCols))
-    val pairs = Linkage.candidatePairs(keys, bucketCap, hardCap, saltGroups)
+    val keys = intervalKeys(df, idCol, startCol, endCol, bucketWidth,
+      partitionCols)
     val s = col(startCol).cast("long")
     val e = col(endCol).cast("long")
     val bounds = df.where(s.isNotNull && e.isNotNull && e >= s)
       .select(col(idCol).as("__tid"), s.as("__ts"), e.as("__te"))
-    Capped(pairs
+    Linkage.candidateCapped(keys, bucketCap, hardCap, saltGroups).map(_
       .join(bounds.select(col("__tid").as("url_a"), col("__ts").as("__sa"),
         col("__te").as("__ea")), "url_a")
       .join(bounds.select(col("__tid").as("url_b"), col("__ts").as("__sb"),
@@ -92,8 +90,7 @@ object Temporal {
       .where(col("__sa") <= col("__eb") && col("__sb") <= col("__ea"))
       .select(col("url_a").as("id_a"), col("url_b").as("id_b"),
         (least(col("__ea"), col("__eb")) -
-          greatest(col("__sa"), col("__sb"))).as("overlap")),
-      Linkage.droppedBuckets(keys, hardCap))
+          greatest(col("__sa"), col("__sb"))).as("overlap")))
   }
 
   /** Distributed point-in-time (as-of) join — for each probe row

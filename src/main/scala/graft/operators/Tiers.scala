@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** An operator's output and the record of what its cap dropped, from one
   * call. `dropped` filters `n > cap` over the sizing frame the operator
   * routes on (for [[Tiers]] operators, the bucket sizes that
-  * [[Tiers.pairs]] or [[Tiers.probe]] routes on, over the member frame the
-  * operator already shares), so reading it re-runs none of the keying. */
+  * [[Tiers.capped]], [[Tiers.pairs]] or [[Tiers.probe]] builds once and
+  * routes on), so reading it re-runs none of the keying. */
 final case class Capped(out: DataFrame, dropped: DataFrame) {
   /** The same drop record under a further transform of `out`. */
   def map(f: DataFrame => DataFrame): Capped = copy(out = f(out))
@@ -24,21 +24,22 @@ final case class Capped(out: DataFrame, dropped: DataFrame) {
   *     self-join ([[saltedSelfJoin]]), so a hot bucket's quadratic pair
   *     work shards across G(G+1)/2 reducers (G = `saltGroups`) instead of
   *     landing on one, losslessly;
-  *  3. n > `hardCap` — dropped, never silently: [[pairs]] returns
-  *     [[Capped]], whose `dropped` is the (keys…, n) buckets over
-  *     `hardCap`, from the same sizes it routes on (an ultra-hot key
+  *  3. n > `hardCap` — dropped, never silently (an ultra-hot key
   *     carries no discriminative signal and would emit ~n²/2 junk pairs).
   *     Operators default `hardCap` to `Int.MaxValue` where dropping is
   *     opt-in.
   *
   * Operators whose policy is a single cap (LSH band caps) keep tiers 1
-  * and 3 only: [[pairs]] with `hardCap = bucketCap`, or [[underCap]] and
-  * [[overCap]] with that cap.
+  * and 3 only: [[pairs]] with `hardCap = bucketCap`, or [[capped]].
   *
   * Asymmetric joins (a probe frame against an inverted index) route on
   * the INDEX side's key sizes only, with the same three tiers:
   * [[probe]]. Salting — the id-hash salt and its G-way replication —
   * happens in this module and nowhere else.
+  *
+  * [[capped]], [[pairs]] and [[probe]] are the three entry points. Each
+  * builds [[sizes]] once and returns [[Capped]], whose `dropped` is the
+  * (keys…, n) buckets over the cap, from the sizes it routed on.
   *
   * Bucket sizing is a groupBy (map-side partial combine) plus a join-back,
   * never a window count: a window buffers each key's rows in one
@@ -51,18 +52,16 @@ final case class Capped(out: DataFrame, dropped: DataFrame) {
 private[operators] object Tiers {
 
   /** (keys…, n): the member count of every bucket. */
-  def sizes(members: DataFrame, keys: Seq[String], n: String = "n"): DataFrame =
-    members.groupBy(keys.map(col): _*).agg(count(lit(1)).as(n))
+  def sizes(members: DataFrame, keys: Seq[String]): DataFrame =
+    members.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
 
-  /** Members of buckets with n ≤ `cap`, joined with their size `n`. */
-  def underCap(members: DataFrame, keys: Seq[String], cap: Int): DataFrame =
-    members.join(sizes(members, keys).where(col("n") <= cap), keys)
-
-  /** (keys…, n) of the buckets with n > `cap` — the record of what a cap
-    * dropped. */
-  def overCap(members: DataFrame, keys: Seq[String], cap: Int,
-      n: String = "n"): DataFrame =
-    sizes(members, keys, n).where(col(n) > cap)
+  /** Members of buckets with n ≤ `cap`, joined with their size `n`; the
+    * (keys…, n) buckets with n > `cap` are `dropped`. */
+  def capped(members: DataFrame, keys: Seq[String], cap: Int): Capped = {
+    val sized = sizes(members, keys)
+    Capped(members.join(sized.where(col("n") <= cap), keys),
+      sized.where(col("n") > cap))
+  }
 
   /** Canonical pairs (`<id>_a` < `<id>_b`) of members sharing a bucket, one
     * row per pair per shared bucket, cold and salted tiers unioned. Each
@@ -106,8 +105,8 @@ private[operators] object Tiers {
     *     (G = `saltGroups`), and the join is on (keys, salt), so a hot
     *     key's probe × index work spreads over G reducers, losslessly;
     *     when `hardCap` ≤ `bucketCap` this tier is left out of the plan;
-    *  3. n > `hardCap` — dropped: the returned record is [[overCap]] of
-    *     the index.
+    *  3. n > `hardCap` — dropped: the returned record is the (keys…, n)
+    *     index buckets over `hardCap`.
     *
     * `indexId` and `probeId` must differ. Callers dedup (a pair sharing
     * several keys repeats) and verify. */

@@ -163,17 +163,19 @@ object Pipeline {
     val keys = stage(spark, workDir, "02_keys", fpKeys)(
       Linkage.candidateKeys(ex.df, cfg.numHashes, cfg.bands, cfg.shingleK))
 
+    // planned only by a stage that recomputes: a resumed run plans nothing
+    lazy val candidates = Linkage.candidateCapped(keys.df, cfg.bucketCap,
+      cfg.hardCap, cfg.saltGroups)
     val fpPairs = sha(fpKeys + ":pairs")
-    val pairs = stage(spark, workDir, "03_pairs", fpPairs)(
-      Linkage.candidatePairs(keys.df, cfg.bucketCap, cfg.hardCap, cfg.saltGroups))
+    val pairs = stage(spark, workDir, "03_pairs", fpPairs)(candidates.out)
 
     // the hardCap's dropped buckets are a CHECKPOINTED side stage (same
     // contract as CorpusPipeline's 04_dropped): a resumed run reads the
-    // count from the manifest instead of re-running the O(corpus) sizing
-    // aggregate just to recount what was already known
+    // count from the manifest, and a fresh one filters the bucket sizes
+    // 03_pairs routed on
     val fpDrop = sha(fpKeys + ":dropped")
     val droppedStage = stage(spark, workDir, "03_dropped", fpDrop)(
-      Linkage.droppedBuckets(keys.df, cfg.hardCap))
+      candidates.dropped)
 
     // scoring: composite JW+Dice projection, or the Fellegi-Sunter path —
     // comparison vectors (04_gammas) → EM fit persisted as a model stage

@@ -168,6 +168,28 @@ class BlockingSpec extends SparkFunSuite {
     assert(row.getAs[java.math.BigDecimal]("pairs_dropped").longValueExact == 15L)
   }
 
+  test("blockingProfile puts each block in one tier when hardCap < bucketCap") {
+    import spark.implicits._
+    val keys = (Seq.fill(4)("k1") ++ Seq.fill(2)("k2")).zipWithIndex
+      .map { case (k, i) => (k, s"u${i % 4}") }.toDF("key", "url")
+    assert(Linkage.blockingProfile(keys, bucketCap = 5, hardCap = 3)
+      .collect().head.toSeq.map(_.toString) ==
+      Seq("2", "6", "4", "1", "0", "1", "1", "0", "6"))
+    for ((bucketCap, hardCap) <- Seq((5, 3), (1, 3), (3, 5), (1, 1), (200, 100000))) {
+      val p = Linkage.blockingProfile(keys, bucketCap, hardCap).collect().head
+      def n(c: String) = p.getAs[Any](c) match {
+        case d: java.math.BigDecimal => d.longValueExact
+        case l: Long => l
+      }
+      val caps = s"bucketCap $bucketCap, hardCap $hardCap"
+      assert(n("blocks_cold") + n("blocks_salted") + n("blocks_dropped") ==
+        n("n_blocks"), caps)
+      // the profile counts the pairs the tiers emit, before the pair dedup
+      assert(n("pairs_cold") + n("pairs_salted") == Linkage.candidatePairs(keys,
+        bucketCap, hardCap, saltGroups = 4, distinctPairs = false).count(), caps)
+    }
+  }
+
   test("Tiers routes buckets at the cap boundaries; payload follows its side") {
     val keys = tierKeys().withColumn("tag", concat(lit("t"), col("url")))
     def allPairs(n: Int) =
@@ -194,7 +216,7 @@ class BlockingSpec extends SparkFunSuite {
     assert(tiered == Map("a" -> allPairs(2), "d" -> allPairs(3),
       "b" -> allPairs(4), "e" -> allPairs(5)))
     assert(tieredPlan.contains("Generate"))
-    assert(Tiers.overCap(keys, Seq("key"), 5).collect()
+    assert(Tiers.sizes(keys, Seq("key")).where(col("n") > 5).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("c", 6L)))
     // hardCap <= bucketCap: the salted grid is left out of the plan and
     // every bucket up to hardCap takes the cold join
@@ -491,13 +513,13 @@ class BlockingSpec extends SparkFunSuite {
       ("b", "p"), // duplicate edge must not double-count
       ("c", "x"),
       ("d", null)).toDF("ent", "nb")
-    val got = Linkage.commonNeighborPairs(edges, "ent", "nb")
+    val got = Linkage.commonNeighborPairs(edges, "ent", "nb").out
       .collect().map(r => (r.getString(0), r.getString(1),
         r.getLong(2), r.getDouble(3))).toList
     assert(got == List(("a", "b", 2L, 2.0 / 4.0)))
     // minCommon prunes below the bar
     assert(Linkage.commonNeighborPairs(edges, "ent", "nb", minCommon = 3)
-      .count() == 0L)
+      .out.count() == 0L)
   }
 
   test("commonNeighborPairs: hub neighbors through the salted grid, lossless") {
@@ -506,16 +528,20 @@ class BlockingSpec extends SparkFunSuite {
     val pair = Seq(("e1", "n1"), ("e2", "n1"))
     val edges = (hub ++ pair).toDF("ent", "nb")
     def run(cap: Int) = Linkage.commonNeighborPairs(edges, "ent", "nb",
-      bucketCap = cap, saltGroups = 4)
+      bucketCap = cap, saltGroups = 4).out
       .orderBy("url_a", "url_b").collect().map(_.toSeq).toSeq
     val plain = run(1000)
     assert(run(3) == plain && plain.size == 190) // C(20,2) hub pairs
     // e1-e2 share hub AND n1
     assert(plain.exists(r => r(0) == "e1" && r(1) == "e2" && r(2) == 2L))
-    // finite hardCap drops the hub; droppedBuckets reports it
+    // finite hardCap drops the hub, and the record names it
     val capped = Linkage.commonNeighborPairs(edges, "ent", "nb",
-      bucketCap = 3, hardCap = 10, saltGroups = 4).collect()
-    assert(capped.length == 1 && capped(0).getLong(2) == 1L)
+      bucketCap = 3, hardCap = 10, saltGroups = 4)
+    val kept = capped.out.collect()
+    assert(kept.length == 1 && kept(0).getLong(2) == 1L)
+    assert(capped.dropped.as[(String, Long)].collect().toSeq == Seq(("hub", 20L)))
+    assert(Linkage.commonNeighborPairs(edges, "ent", "nb", bucketCap = 3,
+      saltGroups = 4).dropped.count() == 0L)
   }
 
   test("adamicAdarPairs: hand-computed weights, grid-tier equal") {
@@ -524,7 +550,7 @@ class BlockingSpec extends SparkFunSuite {
       ("a", "p"), ("b", "p"),               // deg(p) = 2
       ("a", "q"), ("b", "q"), ("c", "q")    // deg(q) = 3
     ).toDF("ent", "nb")
-    val got = Linkage.adamicAdarPairs(edges, "ent", "nb")
+    val got = Linkage.adamicAdarPairs(edges, "ent", "nb").out
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2))
     val ab = got.find(t => t._1 == "a" && t._2 == "b").get
@@ -534,7 +560,7 @@ class BlockingSpec extends SparkFunSuite {
     assert(ac._3 == 1L && math.abs(ac._4 - 1.0 / math.log(3.0)) < 1e-12)
     // hot tier carries the degree payload: same values through the grid
     val grid = Linkage.adamicAdarPairs(edges, "ent", "nb",
-      bucketCap = 1, saltGroups = 4)
+      bucketCap = 1, saltGroups = 4).out
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2))
     assert(grid.toList == got.map(t => (t._1, t._2, t._3)).toList)

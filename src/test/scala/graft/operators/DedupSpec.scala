@@ -424,7 +424,7 @@ class DedupSpec extends SparkFunSuite {
     val docs = Seq((1L, rand(40) + span + rand(40)),
       (2L, rand(30) + span + rand(55))).toDF("doc_id", "text")
     val fps = Dedup.winnowFingerprints(docs, "doc_id", "text", k = 8, w = 4)
-    val shared = Linkage.commonNeighborPairs(fps, "doc_id", "fp_hash")
+    val shared = Linkage.commonNeighborPairs(fps, "doc_id", "fp_hash").out
     assert(shared.count() >= 1L) // the winnowing guarantee
     // partitioning independence of the fingerprint set
     val a = fps.orderBy("doc_id", "fp_hash", "fp_pos").collect().toSeq

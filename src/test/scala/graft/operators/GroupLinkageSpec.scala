@@ -106,12 +106,28 @@ class GroupLinkageSpec extends SparkFunSuite {
   }
 
   test("driver finish: a null group id drains at cap 0 and 1 to the default-cap rows") {
-    // the null group is one group: its members are scoped together, and
-    // it has no size row, so only group pair (7, 9) is reported
+    // records with a null group id are in no group: only (7, 9) is reported
     val want = nullGroupRows(1000)
     assert(want == Seq(Seq(7L, 9L, 1L, 2L, 1L, 1.0, 0.5)))
     for (cap <- Seq("0", "1"))
       assert(withConf(capKey, cap)(nullGroupRows(20)) == want, s"cap $cap")
+  }
+
+  test("driver finish: null-group candidates never reach the greedy rounds") {
+    // both null groups hold 5 records whose candidates form a descending
+    // chain of 9 edges; the distributed rounds would need 5 rounds for it
+    val left = ((Some(7L), 1L) +: (11L to 15L).map(r => (Option.empty[Long], r)))
+      .toDF("gid", "rid")
+    val right = ((Some(9L), 2L) +: (21L to 25L).map(r => (Option.empty[Long], r)))
+      .toDF("gid", "rid")
+    val chain = (0 until 9).map(i =>
+      (11L + (i + 1) / 2, 21L + i / 2, 0.9 - 0.05 * i))
+    val scored = ((1L, 2L, 1.0) +: chain).toDF("id_l", "id_r", "score")
+    def rows(maxIter: Int) = Linkage.groupLinkage(left, right, scored,
+      maxIter = maxIter).collect().map(_.toSeq).toSeq
+    val want = Seq(Seq(7L, 9L, 1L, 1L, 1L, 1.0, 1.0))
+    assert(rows(1000) == want)
+    assert(withConf(capKey, "0")(rows(2)) == want)
   }
 
   test("driver finish: tied non-BMP and BMP rids follow SQL order at every cap") {

@@ -182,7 +182,8 @@ class LinkageSpec extends SparkFunSuite {
   test("hot-bucket dropping is observable, not silent") {
     val ex = Linkage.extract(pagesDF)
     val keys = Linkage.candidateKeys(ex)
-    val droppedAt5 = Linkage.droppedBuckets(keys, 5)
+    val droppedAt5 = Linkage.candidateCapped(keys, bucketCap = 200,
+      hardCap = 5, saltGroups = 16).dropped
     assert(droppedAt5.count() > 0) // hot entities (40 variants) exceed cap 5
     val metricsHasDropped = {
       val work = Files.createTempDirectory("graft-metrics").toString

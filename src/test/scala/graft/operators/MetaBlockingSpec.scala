@@ -22,7 +22,7 @@ class MetaBlockingSpec extends SparkFunSuite {
     (3L, "k4"), (4L, "k4")).toDF("url", "key")
 
   private def graphRows(bucketCap: Int = 200) =
-    MetaBlocking.blockingGraph(keys, bucketCap = bucketCap)
+    MetaBlocking.blockingGraph(keys, bucketCap = bucketCap).out
       .orderBy("url_a", "url_b")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -45,7 +45,7 @@ class MetaBlockingSpec extends SparkFunSuite {
 
   test("WEP keeps edges at or above the integer-exact global mean") {
     // Σw = 6 over 4 edges → keep w·4 ≥ 6, i.e. cbs = 2 edges only
-    val kept = MetaBlocking.wepPrune(MetaBlocking.blockingGraph(keys))
+    val kept = MetaBlocking.wepPrune(MetaBlocking.blockingGraph(keys).out)
       .select("url_a", "url_b").as[(Long, Long)].collect().toSet
     assert(kept == Set((1L, 2L), (2L, 3L)))
   }
@@ -54,13 +54,13 @@ class MetaBlockingSpec extends SparkFunSuite {
     // node sums/degrees: 1→(3,2) mean 1.5; 2→(4,2) mean 2; 3→(4,3) mean 4/3;
     // 4→(1,1) mean 1. (1,2): 2≥1.5 keep; (1,3): 1<1.5 and 3·3<4 drop;
     // (2,3): keep; (3,4): 1·3<4 but 1·1≥1 keep (endpoint 4's only edge).
-    val kept = MetaBlocking.wnpPrune(MetaBlocking.blockingGraph(keys))
+    val kept = MetaBlocking.wnpPrune(MetaBlocking.blockingGraph(keys).out)
       .select("url_a", "url_b").as[(Long, Long)].collect().toSet
     assert(kept == Set((1L, 2L), (2L, 3L), (3L, 4L)))
   }
 
   test("CNP keeps each endpoint's top-k incident edges, pinned tie-break") {
-    val g = MetaBlocking.blockingGraph(keys)
+    val g = MetaBlocking.blockingGraph(keys).out
     // k=1: node1 top = (1,2) w2; node2 tie w2/w2 breaks by opposite id →
     // (1,2); node3 top = (2,3) w2; node4 top = its only edge (3,4).
     // (1,3) is in nobody's top-1 → dropped.
@@ -92,7 +92,7 @@ class MetaBlockingSpec extends SparkFunSuite {
   }
 
   test("blockFilter composes with blockingGraph (filter upstream)") {
-    val g = MetaBlocking.blockingGraph(MetaBlocking.blockFilter(keys))
+    val g = MetaBlocking.blockingGraph(MetaBlocking.blockFilter(keys)).out
       .orderBy("url_a", "url_b")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -104,7 +104,11 @@ class MetaBlockingSpec extends SparkFunSuite {
   test("blocks above hardCap are excluded from edges AND block counts") {
     // k1 (size 3) over hardCap=2: its pairs disappear and the per-record
     // block counts drop accordingly, so JS stays graph-consistent
-    val g = MetaBlocking.blockingGraph(keys, bucketCap = 2, hardCap = 2)
+    val capped = MetaBlocking.blockingGraph(keys, bucketCap = 2, hardCap = 2)
+    // the record is the block the cap removed, with its size
+    assert(capped.dropped.as[(String, Long)].collect().toSeq == Seq(("k1", 3L)))
+    assert(MetaBlocking.blockingGraph(keys).dropped.count() == 0L)
+    val g = capped.out
       .orderBy("url_a", "url_b")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),

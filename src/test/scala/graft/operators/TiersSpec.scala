@@ -44,7 +44,7 @@ class TiersSpec extends SparkFunSuite {
     assert(rows(tiered.out) == brute)
     assert(tiered.out.queryExecution.optimizedPlan.toString.contains("__salt"))
     assert(tiered.dropped.collect().toSeq ==
-      Tiers.overCap(index, Seq("key"), 5).collect().toSeq)
+      Tiers.sizes(index, Seq("key")).where(col("n") > 5).collect().toSeq)
     assert(tiered.dropped.as[(String, Long)].collect().toSeq == Seq(("d", 6L)))
 
     // hardCap <= bucketCap: no salted branch in the plan, same rows
