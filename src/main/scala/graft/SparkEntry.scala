@@ -99,6 +99,46 @@ object SparkEntry {
     """FROM customer a JOIN customer b
       | ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey""".stripMargin
 
+  /** The undirected components walk over a `pairs (ka, kb)` CTE, as the
+    * CTEs that follow it: the symmetric `edges (u, v)`, their `nodes`
+    * and `walk(id, r)`, every node `r` reachable from `id`; `min(r)` per
+    * id is the component of `ConnectedComponents.run`. */
+  private[graft] val componentWalkCtes: String =
+    """edges AS (
+      |  SELECT ka AS u, kb AS v FROM pairs
+      |  UNION ALL SELECT kb, ka FROM pairs
+      |), nodes AS (
+      |  SELECT DISTINCT u AS id FROM edges
+      |), walk(id, r) AS (
+      |  SELECT id, id FROM nodes
+      |  UNION
+      |  SELECT w.id, e.v FROM walk w JOIN edges e ON w.r = e.u
+      |)""".stripMargin
+
+  /** Brute-force mirror of `Linkage.commonNeighborPairs` over a
+    * bipartite `e (id, nb)` CTE, as the rest of the oracle after it:
+    * `deg`, each id's neighbor count, `pr`, the shared-neighbor count of
+    * each id pair (a < b), and the pairs sharing at least `minCommon`
+    * neighbors with their neighborhood Jaccard (the denominator in long
+    * before the one double division). */
+  private[graft] def commonNeighborsSql(minCommon: Int): String =
+    s"""deg AS (
+       |  SELECT id, count(*) AS d FROM e GROUP BY id
+       |), pr AS (
+       |  SELECT a.id AS url_a, b.id AS url_b,
+       |         CAST(count(*) AS BIGINT) AS common_neighbors
+       |  FROM e a JOIN e b ON a.nb = b.nb AND a.id < b.id
+       |  GROUP BY 1, 2
+       |)
+       |SELECT p.url_a, p.url_b, p.common_neighbors,
+       |  CAST(p.common_neighbors AS DOUBLE)
+       |    / CAST(da.d + db.d - p.common_neighbors AS DOUBLE)
+       |    AS neighborhood_jaccard
+       |FROM pr p
+       |JOIN deg da ON p.url_a = da.id
+       |JOIN deg db ON p.url_b = db.id
+       |WHERE p.common_neighbors >= $minCommon""".stripMargin
+
   /** A fresh temp directory named `prefix…`, deleted RECURSIVELY at JVM
     * exit. Gate/bench runs must not accumulate corpus-sized checkpoint
     * trees under the temp dir, but the result frame lazily reads the
@@ -175,6 +215,37 @@ object SparkEntry {
        |  SELECT id, unnest([$bandKeys]) AS key FROM mins
        |)""".stripMargin
   }
+
+  /** The capped candidates of the banded MinHash oracles, as CTEs to
+    * follow [[minhashBandedCteList]]: `sized`, each band key's row count,
+    * `good`, the band rows of the keys of at most 500 rows, and
+    * `cand (ia, ib)`, the distinct pairs sharing a good key. */
+  private[graft] val minhashCandCtes: String =
+    """sized AS (
+      |  SELECT key, count(*) AS n FROM banded GROUP BY key
+      |), good AS (
+      |  SELECT b.id, b.key FROM banded b JOIN sized s USING (key) WHERE s.n <= 500
+      |), cand AS (
+      |  SELECT DISTINCT a.id AS ia, b.id AS ib
+      |  FROM good a JOIN good b ON a.key = b.key AND a.id < b.id
+      |)""".stripMargin
+
+  /** The near-dup groups over a `verified (ia, ib)` CTE, as the CTEs that
+    * follow it: the undirected walk (`uedges`, `unodes`, `walk(id, r)`)
+    * and `comp (id, component)`, the smallest reachable id. */
+  private[graft] val verifiedComponentCtes: String =
+    """uedges AS (
+      |  SELECT ia AS u, ib AS v FROM verified
+      |  UNION ALL SELECT ib, ia FROM verified
+      |), unodes AS (
+      |  SELECT DISTINCT u AS id FROM uedges
+      |), walk(id, r) AS (
+      |  SELECT id, id FROM unodes
+      |  UNION
+      |  SELECT w.id, e.v FROM walk w JOIN uedges e ON w.r = e.u
+      |), comp AS (
+      |  SELECT id, min(r) AS component FROM walk GROUP BY id
+      |)""".stripMargin
 
   /** toks0+sigq CTEs: per-doc quality score over `documents` — the exact
     * q_text_analysis formula, shared by corpusPipelineOracle and the

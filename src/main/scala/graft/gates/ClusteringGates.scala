@@ -1,7 +1,7 @@
 package graft
 package gates
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry._
@@ -11,6 +11,26 @@ import graft.functions._
   * group linkage, canopies, pivot clustering, cluster repair and split,
   * entity ids and the golden-record merges. */
 private[graft] object ClusteringGates {
+
+  /** The match graph of the components gates: nationkey-blocked
+    * customer pairs (ka < kb) of distinct names at normalized-Levenshtein
+    * similarity ≥ 0.94. */
+  private def ccEdges(s: SparkSession, dir: String): DataFrame =
+    customerPairs(s, dir)
+      .where(col("na") =!= col("nb") &&
+        levenshtein_sim(col("na"), col("nb")) >= 0.94)
+      .select(col("ka"), col("kb"))
+
+  /** SQL mirror of [[ccEdges]]: the CTE `pairs (ka, kb)`. */
+  private val ccPairsCte: String =
+    """pairs AS (
+      |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
+      |  FROM customer a JOIN customer b
+      |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
+      |  WHERE a.c_name <> b.c_name
+      |    AND 1.0 - CAST(levenshtein(a.c_name, b.c_name) AS DOUBLE)
+      |        / greatest(length(a.c_name), length(b.c_name)) >= 0.94
+      |)""".stripMargin
 
   /** Unrolled synchronous label propagation: per round, a (dst, label)
     * vote count over the symmetric edge set joined to the PREVIOUS
@@ -34,14 +54,7 @@ private[graft] object ClusteringGates {
          |  FROM l${r - 1} p LEFT JOIN w$r w ON p.id = w.dst
          |)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pairs AS (
-       |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
-       |  FROM customer a JOIN customer b
-       |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-       |  WHERE a.c_name <> b.c_name
-       |    AND 1.0 - CAST(levenshtein(a.c_name, b.c_name) AS DOUBLE)
-       |        / greatest(length(a.c_name), length(b.c_name)) >= 0.94
-       |), edges AS (
+    s"""WITH $ccPairsCte, edges AS (
        |  SELECT ka AS src, kb AS dst FROM pairs
        |  UNION SELECT kb, ka FROM pairs
        |), l0 AS (
@@ -50,6 +63,160 @@ private[graft] object ClusteringGates {
        |$iters
        |SELECT id, label FROM l$rounds""".stripMargin
   }
+
+  /** The center-clustering gates' input: customer ids ≡ 0 (mod 3),
+    * nationkey-blocked, with their normalized-Levenshtein score `s`
+    * ≥ 0.88. */
+  private def centerEdges(s: SparkSession, dir: String): DataFrame = {
+    val c = s.read.parquet(s"$dir/customer.parquet")
+      .where(col("c_custkey") % 3 === 0)
+    val a = c.select(col("c_custkey").as("ia"), col("c_name").as("na"),
+      col("c_nationkey").as("nk"))
+    val b = c.select(col("c_custkey").as("ib"), col("c_name").as("nb"),
+      col("c_nationkey").as("nk"))
+    a.join(b, "nk").where(col("ia") < col("ib"))
+      .select(col("ia"), col("ib"),
+        levenshtein_sim(col("na"), col("nb")).as("s"))
+      .where(col("s") >= 0.88)
+  }
+
+  /** SQL mirror of [[centerEdges]] and of the center rounds over it, as a
+    * `WITH RECURSIVE` list: `edges (la, lb, s)`, `nodes` and the
+    * full-state round replay `st(r, id, ctr)` — every node's center (or
+    * null) per round, each round recomputing the alive edges, each
+    * node's top edge and the fires from the previous round's state, 48
+    * rounds. */
+  private val centerRoundsSql: String = {
+    // the edges still in play: neither end assigned to another center,
+    // and not both ends centers already
+    val alive = """(SELECT e.la, e.lb, e.s, a.ctr AS ca, b.ctr AS cb
+      |      FROM edges e JOIN st a ON a.id = e.la JOIN st b ON b.id = e.lb
+      |      WHERE NOT (a.ctr IS NOT NULL AND a.ctr <> e.la)
+      |        AND NOT (b.ctr IS NOT NULL AND b.ctr <> e.lb)
+      |        AND NOT (a.ctr IS NOT NULL AND a.ctr = e.la AND b.ctr IS NOT NULL AND b.ctr = e.lb)) al""".stripMargin
+    // each unassigned end's alive edges, ranked by (score desc, edge)
+    val top = s"""(SELECT x, y, ycen, ela, elb,
+      |       row_number() OVER (PARTITION BY x ORDER BY s DESC, ela, elb) AS rn
+      |      FROM (SELECT al.la AS x, al.lb AS y, al.s, al.la AS ela, al.lb AS elb,
+      |        (al.cb IS NOT NULL AND al.cb = al.lb) AS ycen
+      |      FROM $alive WHERE al.ca IS NULL
+      |      UNION ALL
+      |      SELECT al.lb, al.la, al.s, al.la, al.lb,
+      |        (al.ca IS NOT NULL AND al.ca = al.la)
+      |      FROM $alive WHERE al.cb IS NULL) q0)""".stripMargin
+    s"""WITH RECURSIVE pr AS (
+      |  SELECT a.c_custkey AS ia, b.c_custkey AS ib, ${levSimSql("a.c_name", "b.c_name")} AS s
+      |  FROM customer a JOIN customer b
+      |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
+      |  WHERE a.c_custkey % 3 = 0 AND b.c_custkey % 3 = 0
+      |), edges AS MATERIALIZED (
+      |  SELECT ia AS la, ib AS lb, s FROM pr WHERE s >= CAST(0.88 AS DOUBLE)
+      |), nodes AS (
+      |  SELECT DISTINCT id FROM (SELECT la AS id FROM edges UNION ALL SELECT lb FROM edges) q
+      |), st(r, id, ctr) AS (
+      |  SELECT 0, id, CAST(NULL AS BIGINT) FROM nodes
+      |  UNION ALL
+      |  SELECT z.r + 1, z.id, z.ctr FROM (
+      |    SELECT a.r, a.id, a.ctr FROM st a WHERE a.ctr IS NOT NULL
+      |    UNION ALL
+      |    SELECT u.r, u.id, f.ctr
+      |    FROM (SELECT r, id FROM st WHERE ctr IS NULL) u
+      |    LEFT JOIN (SELECT x AS id, y AS ctr FROM $top t1 WHERE rn = 1 AND ycen
+      |      UNION ALL
+      |      SELECT CASE part WHEN 0 THEN ela ELSE elb END AS id, ela AS ctr
+      |      FROM (
+      |        SELECT ela, elb FROM $top t2 WHERE rn = 1 AND NOT ycen
+      |        GROUP BY ela, elb HAVING count(*) = 2
+      |      ) seeds CROSS JOIN (VALUES (0), (1)) p(part)) f ON f.id = u.id
+      |  ) z
+      |  WHERE z.r < 48
+      |)""".stripMargin
+  }
+
+  /** The golden-record rules of the golden gates: text longest, lang
+    * mode, source min, n_chars max. */
+  private val goldenRules = Seq("text" -> "longest", "lang" -> "mode",
+    "source" -> "min", "n_chars" -> "max")
+
+  /** SQL mirror of [[goldenRules]] over `documents` clustered by the
+    * expression `component`: the CTEs `j`, `base`, `longest`, `langcnt`
+    * and `langmode`, after `WITH` (the rules are spelled out at
+    * q_golden_records). */
+  private def goldenCtes(component: String): String =
+    s"""WITH j AS (
+      |  SELECT doc_id AS id, $component AS component, text, lang,
+      |         source, n_chars
+      |  FROM documents
+      |), base AS (
+      |  SELECT component, min(id) AS id, count(*) AS n_members,
+      |         min(source) AS source, max(n_chars) AS n_chars
+      |  FROM j GROUP BY component
+      |), longest AS (
+      |  SELECT component, text FROM (
+      |    SELECT component, text, row_number() OVER (
+      |      PARTITION BY component
+      |      ORDER BY length(text) DESC, text) AS rn
+      |    FROM j WHERE text IS NOT NULL) WHERE rn = 1
+      |), langcnt AS (
+      |  SELECT component, lang, count(*) AS cnt FROM j
+      |  WHERE lang IS NOT NULL GROUP BY component, lang
+      |), langmode AS (
+      |  SELECT component, lang FROM (
+      |    SELECT component, lang, row_number() OVER (
+      |      PARTITION BY component ORDER BY cnt DESC, lang) AS rn
+      |    FROM langcnt) WHERE rn = 1
+      |)""".stripMargin
+
+  /** The golden rows over [[goldenCtes]], every line after `indent`. */
+  private def goldenSelect(indent: String): String =
+    Seq("SELECT b.component, b.id, b.n_members, l.text, m.lang, b.source,",
+      "       b.n_chars", "FROM base b",
+      "LEFT JOIN longest l ON b.component = l.component",
+      "LEFT JOIN langmode m ON b.component = m.component")
+      .map(indent + _).mkString("\n")
+
+  /** The golden-records query of [[goldenRules]] clustered by
+    * `component`. */
+  private def goldenSql(component: String): String =
+    goldenCtes(component) + "\n" + goldenSelect("")
+
+  /** The greedy-MIS rounds of pivot clustering, as the recursive CTE
+    * `st(id, rk, mis)` over a symmetric `edges (u, v)` relation and the
+    * `keyed (id, rk)` ranks: each round two window layers flag the
+    * local-min pivots among the still-active nodes and drop the nodes a
+    * pivot dominates; an active node with no active neighbor is a pivot
+    * by the second branch. */
+  private def misRoundsSql(edges: String): String =
+    s"""st(id, rk, mis) AS (
+      |  SELECT id, rk, FALSE FROM keyed
+      |  UNION ALL
+      |  SELECT id, rk, mis FROM (
+      |    SELECT DISTINCT u AS id, rku AS rk, pivu AS mis, dom
+      |    FROM (
+      |      SELECT u, rku, pivu,
+      |        max(CASE WHEN pivv THEN 1 ELSE 0 END)
+      |          OVER (PARTITION BY u) AS dom
+      |      FROM (
+      |        SELECT u, rku, v, rkv,
+      |          rku < min(rkv) OVER (PARTITION BY u) AS pivu,
+      |          rkv < min(rku) OVER (PARTITION BY v) AS pivv
+      |        FROM (
+      |          SELECT e.u, a.rk AS rku, e.v, b.rk AS rkv
+      |          FROM $edges e
+      |          JOIN (SELECT id, rk FROM st WHERE NOT mis) a ON e.u = a.id
+      |          JOIN (SELECT id, rk FROM st WHERE NOT mis) b ON e.v = b.id
+      |        ) r
+      |      ) f
+      |    ) g
+      |    WHERE pivu OR dom = 0
+      |    UNION ALL
+      |    SELECT a2.id, a2.rk, TRUE, 0
+      |    FROM (SELECT id, rk FROM st WHERE NOT mis) a2
+      |    WHERE a2.id NOT IN (
+      |      SELECT e2.u FROM $edges e2
+      |      JOIN (SELECT id FROM st WHERE NOT mis) b2 ON e2.v = b2.id)
+      |  ) z
+      |)""".stripMargin
 
   val all: Seq[Gate] = Seq(
     // Cluster repair from review decisions (the write-back half of the
@@ -194,16 +361,7 @@ private[graft] object ClusteringGates {
     // rounds as a full-state recursive CTE with a 48-round cap
     // (prototyped ≥ 3× the observed fixed point at both SFs).
     Gate("q_center_clusters", (s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-        .where(col("c_custkey") % 3 === 0)
-      val a = c.select(col("c_custkey").as("ia"), col("c_name").as("na"),
-        col("c_nationkey").as("nk"))
-      val b = c.select(col("c_custkey").as("ib"), col("c_name").as("nb"),
-        col("c_nationkey").as("nk"))
-      val edges = a.join(b, "nk").where(col("ia") < col("ib"))
-        .select(col("ia"), col("ib"),
-          levenshtein_sim(col("na"), col("nb")).as("s"))
-        .where(col("s") >= 0.88)
+      val edges = centerEdges(s, dir)
       graft.operators.CenterClustering.centers(edges, "ia", "ib", "s")
     },
       // center clustering: full-state round replay — st carries every
@@ -211,67 +369,7 @@ private[graft] object ClusteringGates {
       // edges / per-node top edge / fires from the previous round's state;
       // 48 rounds ≥ 3× the observed fixed point at both SFs (state is
       // stable after the fixed point, so the cap only costs idle rounds)
-      """WITH RECURSIVE pr AS (
-        |  SELECT a.c_custkey AS ia, b.c_custkey AS ib, CASE WHEN a.c_name = b.c_name THEN CAST(1.0 AS DOUBLE)
-        |       ELSE CAST(1.0 AS DOUBLE) - CAST(levenshtein(a.c_name, b.c_name) AS DOUBLE) /
-        |            CAST(greatest(length(a.c_name), length(b.c_name)) AS DOUBLE) END AS s
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_custkey % 3 = 0 AND b.c_custkey % 3 = 0
-        |), edges AS MATERIALIZED (
-        |  SELECT ia AS la, ib AS lb, s FROM pr WHERE s >= CAST(0.88 AS DOUBLE)
-        |), nodes AS (
-        |  SELECT DISTINCT id FROM (SELECT la AS id FROM edges UNION ALL SELECT lb FROM edges) q
-        |), st(r, id, ctr) AS (
-        |  SELECT 0, id, CAST(NULL AS BIGINT) FROM nodes
-        |  UNION ALL
-        |  SELECT z.r + 1, z.id, z.ctr FROM (
-        |    SELECT a.r, a.id, a.ctr FROM st a WHERE a.ctr IS NOT NULL
-        |    UNION ALL
-        |    SELECT u.r, u.id, f.ctr
-        |    FROM (SELECT r, id FROM st WHERE ctr IS NULL) u
-        |    LEFT JOIN (SELECT x AS id, y AS ctr FROM (SELECT x, y, ycen, ela, elb,
-        |       row_number() OVER (PARTITION BY x ORDER BY s DESC, ela, elb) AS rn
-        |      FROM (SELECT al.la AS x, al.lb AS y, al.s, al.la AS ela, al.lb AS elb,
-        |        (al.cb IS NOT NULL AND al.cb = al.lb) AS ycen
-        |      FROM (SELECT e.la, e.lb, e.s, a.ctr AS ca, b.ctr AS cb
-        |      FROM edges e JOIN st a ON a.id = e.la JOIN st b ON b.id = e.lb
-        |      WHERE NOT (a.ctr IS NOT NULL AND a.ctr <> e.la)
-        |        AND NOT (b.ctr IS NOT NULL AND b.ctr <> e.lb)
-        |        AND NOT (a.ctr IS NOT NULL AND a.ctr = e.la AND b.ctr IS NOT NULL AND b.ctr = e.lb)) al WHERE al.ca IS NULL
-        |      UNION ALL
-        |      SELECT al.lb, al.la, al.s, al.la, al.lb,
-        |        (al.ca IS NOT NULL AND al.ca = al.la)
-        |      FROM (SELECT e.la, e.lb, e.s, a.ctr AS ca, b.ctr AS cb
-        |      FROM edges e JOIN st a ON a.id = e.la JOIN st b ON b.id = e.lb
-        |      WHERE NOT (a.ctr IS NOT NULL AND a.ctr <> e.la)
-        |        AND NOT (b.ctr IS NOT NULL AND b.ctr <> e.lb)
-        |        AND NOT (a.ctr IS NOT NULL AND a.ctr = e.la AND b.ctr IS NOT NULL AND b.ctr = e.lb)) al WHERE al.cb IS NULL) q0) t1 WHERE rn = 1 AND ycen
-        |      UNION ALL
-        |      SELECT CASE part WHEN 0 THEN ela ELSE elb END AS id, ela AS ctr
-        |      FROM (
-        |        SELECT ela, elb FROM (SELECT x, y, ycen, ela, elb,
-        |       row_number() OVER (PARTITION BY x ORDER BY s DESC, ela, elb) AS rn
-        |      FROM (SELECT al.la AS x, al.lb AS y, al.s, al.la AS ela, al.lb AS elb,
-        |        (al.cb IS NOT NULL AND al.cb = al.lb) AS ycen
-        |      FROM (SELECT e.la, e.lb, e.s, a.ctr AS ca, b.ctr AS cb
-        |      FROM edges e JOIN st a ON a.id = e.la JOIN st b ON b.id = e.lb
-        |      WHERE NOT (a.ctr IS NOT NULL AND a.ctr <> e.la)
-        |        AND NOT (b.ctr IS NOT NULL AND b.ctr <> e.lb)
-        |        AND NOT (a.ctr IS NOT NULL AND a.ctr = e.la AND b.ctr IS NOT NULL AND b.ctr = e.lb)) al WHERE al.ca IS NULL
-        |      UNION ALL
-        |      SELECT al.lb, al.la, al.s, al.la, al.lb,
-        |        (al.ca IS NOT NULL AND al.ca = al.la)
-        |      FROM (SELECT e.la, e.lb, e.s, a.ctr AS ca, b.ctr AS cb
-        |      FROM edges e JOIN st a ON a.id = e.la JOIN st b ON b.id = e.lb
-        |      WHERE NOT (a.ctr IS NOT NULL AND a.ctr <> e.la)
-        |        AND NOT (b.ctr IS NOT NULL AND b.ctr <> e.lb)
-        |        AND NOT (a.ctr IS NOT NULL AND a.ctr = e.la AND b.ctr IS NOT NULL AND b.ctr = e.lb)) al WHERE al.cb IS NULL) q0) t2 WHERE rn = 1 AND NOT ycen
-        |        GROUP BY ela, elb HAVING count(*) = 2
-        |      ) seeds CROSS JOIN (VALUES (0), (1)) p(part)) f ON f.id = u.id
-        |  ) z
-        |  WHERE z.r < 48
-        |)
+      s"""$centerRoundsSql
         |SELECT id, COALESCE(ctr, id) AS center_id FROM st WHERE r = 48""".stripMargin),
 
     // Merge-center over the same edge frame: clusters merge wherever any
@@ -279,83 +377,14 @@ private[graft] object ClusteringGates {
     // variant — deterministic under any partitioning; merges still need
     // direct evidence against a center, unlike full transitive closure).
     Gate("q_merge_center", (s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-        .where(col("c_custkey") % 3 === 0)
-      val a = c.select(col("c_custkey").as("ia"), col("c_name").as("na"),
-        col("c_nationkey").as("nk"))
-      val b = c.select(col("c_custkey").as("ib"), col("c_name").as("nb"),
-        col("c_nationkey").as("nk"))
-      val edges = a.join(b, "nk").where(col("ia") < col("ib"))
-        .select(col("ia"), col("ib"),
-          levenshtein_sim(col("na"), col("nb")).as("s"))
-        .where(col("s") >= 0.88)
+      val edges = centerEdges(s, dir)
       graft.operators.CenterClustering.mergeCenters(edges, "ia", "ib", "s")
     },
       // merge-center: the same round replay, then 32-round min-label
       // propagation over assignment edges + every edge touching a center
       // (measured merge-graph diameter 12 at sf0.1 — 32 is a 2.5× margin;
       // label state is stable after convergence, idle rounds are cheap)
-      """WITH RECURSIVE pr AS (
-        |  SELECT a.c_custkey AS ia, b.c_custkey AS ib, CASE WHEN a.c_name = b.c_name THEN CAST(1.0 AS DOUBLE)
-        |       ELSE CAST(1.0 AS DOUBLE) - CAST(levenshtein(a.c_name, b.c_name) AS DOUBLE) /
-        |            CAST(greatest(length(a.c_name), length(b.c_name)) AS DOUBLE) END AS s
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_custkey % 3 = 0 AND b.c_custkey % 3 = 0
-        |), edges AS MATERIALIZED (
-        |  SELECT ia AS la, ib AS lb, s FROM pr WHERE s >= CAST(0.88 AS DOUBLE)
-        |), nodes AS (
-        |  SELECT DISTINCT id FROM (SELECT la AS id FROM edges UNION ALL SELECT lb FROM edges) q
-        |), st(r, id, ctr) AS (
-        |  SELECT 0, id, CAST(NULL AS BIGINT) FROM nodes
-        |  UNION ALL
-        |  SELECT z.r + 1, z.id, z.ctr FROM (
-        |    SELECT a.r, a.id, a.ctr FROM st a WHERE a.ctr IS NOT NULL
-        |    UNION ALL
-        |    SELECT u.r, u.id, f.ctr
-        |    FROM (SELECT r, id FROM st WHERE ctr IS NULL) u
-        |    LEFT JOIN (SELECT x AS id, y AS ctr FROM (SELECT x, y, ycen, ela, elb,
-        |       row_number() OVER (PARTITION BY x ORDER BY s DESC, ela, elb) AS rn
-        |      FROM (SELECT al.la AS x, al.lb AS y, al.s, al.la AS ela, al.lb AS elb,
-        |        (al.cb IS NOT NULL AND al.cb = al.lb) AS ycen
-        |      FROM (SELECT e.la, e.lb, e.s, a.ctr AS ca, b.ctr AS cb
-        |      FROM edges e JOIN st a ON a.id = e.la JOIN st b ON b.id = e.lb
-        |      WHERE NOT (a.ctr IS NOT NULL AND a.ctr <> e.la)
-        |        AND NOT (b.ctr IS NOT NULL AND b.ctr <> e.lb)
-        |        AND NOT (a.ctr IS NOT NULL AND a.ctr = e.la AND b.ctr IS NOT NULL AND b.ctr = e.lb)) al WHERE al.ca IS NULL
-        |      UNION ALL
-        |      SELECT al.lb, al.la, al.s, al.la, al.lb,
-        |        (al.ca IS NOT NULL AND al.ca = al.la)
-        |      FROM (SELECT e.la, e.lb, e.s, a.ctr AS ca, b.ctr AS cb
-        |      FROM edges e JOIN st a ON a.id = e.la JOIN st b ON b.id = e.lb
-        |      WHERE NOT (a.ctr IS NOT NULL AND a.ctr <> e.la)
-        |        AND NOT (b.ctr IS NOT NULL AND b.ctr <> e.lb)
-        |        AND NOT (a.ctr IS NOT NULL AND a.ctr = e.la AND b.ctr IS NOT NULL AND b.ctr = e.lb)) al WHERE al.cb IS NULL) q0) t1 WHERE rn = 1 AND ycen
-        |      UNION ALL
-        |      SELECT CASE part WHEN 0 THEN ela ELSE elb END AS id, ela AS ctr
-        |      FROM (
-        |        SELECT ela, elb FROM (SELECT x, y, ycen, ela, elb,
-        |       row_number() OVER (PARTITION BY x ORDER BY s DESC, ela, elb) AS rn
-        |      FROM (SELECT al.la AS x, al.lb AS y, al.s, al.la AS ela, al.lb AS elb,
-        |        (al.cb IS NOT NULL AND al.cb = al.lb) AS ycen
-        |      FROM (SELECT e.la, e.lb, e.s, a.ctr AS ca, b.ctr AS cb
-        |      FROM edges e JOIN st a ON a.id = e.la JOIN st b ON b.id = e.lb
-        |      WHERE NOT (a.ctr IS NOT NULL AND a.ctr <> e.la)
-        |        AND NOT (b.ctr IS NOT NULL AND b.ctr <> e.lb)
-        |        AND NOT (a.ctr IS NOT NULL AND a.ctr = e.la AND b.ctr IS NOT NULL AND b.ctr = e.lb)) al WHERE al.ca IS NULL
-        |      UNION ALL
-        |      SELECT al.lb, al.la, al.s, al.la, al.lb,
-        |        (al.ca IS NOT NULL AND al.ca = al.la)
-        |      FROM (SELECT e.la, e.lb, e.s, a.ctr AS ca, b.ctr AS cb
-        |      FROM edges e JOIN st a ON a.id = e.la JOIN st b ON b.id = e.lb
-        |      WHERE NOT (a.ctr IS NOT NULL AND a.ctr <> e.la)
-        |        AND NOT (b.ctr IS NOT NULL AND b.ctr <> e.lb)
-        |        AND NOT (a.ctr IS NOT NULL AND a.ctr = e.la AND b.ctr IS NOT NULL AND b.ctr = e.lb)) al WHERE al.cb IS NULL) q0) t2 WHERE rn = 1 AND NOT ycen
-        |        GROUP BY ela, elb HAVING count(*) = 2
-        |      ) seeds CROSS JOIN (VALUES (0), (1)) p(part)) f ON f.id = u.id
-        |  ) z
-        |  WHERE z.r < 48
-        |), fin AS MATERIALIZED (
+      s"""$centerRoundsSql, fin AS MATERIALIZED (
         |  SELECT id, COALESCE(ctr, id) AS c FROM st WHERE r = 48
         |), ctrs AS MATERIALIZED (
         |  SELECT id FROM fin WHERE id = c
@@ -395,41 +424,13 @@ private[graft] object ClusteringGates {
       val assignment = d.select(col("doc_id").as("id"),
         (col("doc_id") % 89).as("component"))
       graft.operators.Canonicalize.goldenRecords(records, assignment, "id",
-        rules = Seq("text" -> "longest", "lang" -> "mode",
-          "source" -> "min", "n_chars" -> "max"))
+        rules = goldenRules)
     },
       // Golden records: canonical id = min(id); text → longest-then-
       // smallest (code-point length on BOTH sides: Spark length() counts
       // code points, DuckDB length() counts code points too); lang → mode
       // with smallest-value tie-break; source → min; n_chars → max.
-      """WITH j AS (
-        |  SELECT doc_id AS id, doc_id % 89 AS component, text, lang,
-        |         source, n_chars
-        |  FROM documents
-        |), base AS (
-        |  SELECT component, min(id) AS id, count(*) AS n_members,
-        |         min(source) AS source, max(n_chars) AS n_chars
-        |  FROM j GROUP BY component
-        |), longest AS (
-        |  SELECT component, text FROM (
-        |    SELECT component, text, row_number() OVER (
-        |      PARTITION BY component
-        |      ORDER BY length(text) DESC, text) AS rn
-        |    FROM j WHERE text IS NOT NULL) WHERE rn = 1
-        |), langcnt AS (
-        |  SELECT component, lang, count(*) AS cnt FROM j
-        |  WHERE lang IS NOT NULL GROUP BY component, lang
-        |), langmode AS (
-        |  SELECT component, lang FROM (
-        |    SELECT component, lang, row_number() OVER (
-        |      PARTITION BY component ORDER BY cnt DESC, lang) AS rn
-        |    FROM langcnt) WHERE rn = 1
-        |)
-        |SELECT b.component, b.id, b.n_members, l.text, m.lang, b.source,
-        |       b.n_chars
-        |FROM base b
-        |LEFT JOIN longest l ON b.component = l.component
-        |LEFT JOIN langmode m ON b.component = m.component""".stripMargin),
+      goldenSql("doc_id % 89")),
 
     // Survivorship provenance: for each canonical field, the smallest
     // member id whose value equals the chosen one — the MDM lineage
@@ -443,40 +444,13 @@ private[graft] object ClusteringGates {
       val assignment = d.select(col("doc_id").as("id"),
         (col("doc_id") % 89).as("component"))
       val golden = graft.operators.Canonicalize.goldenRecords(records,
-        assignment, "id", rules = Seq("text" -> "longest", "lang" -> "mode",
-          "source" -> "min", "n_chars" -> "max"))
+        assignment, "id", rules = goldenRules)
       graft.operators.Canonicalize.goldenProvenance(records, assignment,
         golden, "id", cols = Seq("text", "lang", "source", "n_chars"))
     },
       // golden records + per-field (cluster, value) argmin source joins.
-      """WITH j AS (
-        |  SELECT doc_id AS id, doc_id % 89 AS component, text, lang,
-        |         source, n_chars
-        |  FROM documents
-        |), base AS (
-        |  SELECT component, min(id) AS id, count(*) AS n_members,
-        |         min(source) AS source, max(n_chars) AS n_chars
-        |  FROM j GROUP BY component
-        |), longest AS (
-        |  SELECT component, text FROM (
-        |    SELECT component, text, row_number() OVER (
-        |      PARTITION BY component
-        |      ORDER BY length(text) DESC, text) AS rn
-        |    FROM j WHERE text IS NOT NULL) WHERE rn = 1
-        |), langcnt AS (
-        |  SELECT component, lang, count(*) AS cnt FROM j
-        |  WHERE lang IS NOT NULL GROUP BY component, lang
-        |), langmode AS (
-        |  SELECT component, lang FROM (
-        |    SELECT component, lang, row_number() OVER (
-        |      PARTITION BY component ORDER BY cnt DESC, lang) AS rn
-        |    FROM langcnt) WHERE rn = 1
-        |), g AS (
-        |  SELECT b.component, b.id, b.n_members, l.text, m.lang, b.source,
-        |         b.n_chars
-        |  FROM base b
-        |  LEFT JOIN longest l ON b.component = l.component
-        |  LEFT JOIN langmode m ON b.component = m.component
+      s"""${goldenCtes("doc_id % 89")}, g AS (
+        |${goldenSelect("  ")}
         |), st AS (
         |  SELECT component, text AS v, min(id) AS text_src FROM j
         |  WHERE text IS NOT NULL GROUP BY component, text
@@ -632,46 +606,17 @@ private[graft] object ClusteringGates {
       def asgOf(df: org.apache.spark.sql.DataFrame) =
         df.select(col("doc_id").as("id"),
           floor(col("doc_id") / 16).cast("long").as("component"))
-      val rules = Seq("text" -> "longest", "lang" -> "mode",
-        "source" -> "min", "n_chars" -> "max")
       val oldDocs = d.where(pmod(col("doc_id"), lit(64)) =!= 0)
       val prev = graft.operators.Canonicalize.goldenRecords(
         records.where(pmod(col("id"), lit(64)) =!= 0), asgOf(oldDocs), "id",
-        rules = rules)
+        rules = goldenRules)
       graft.operators.Canonicalize.goldenRecordsIncremental(prev,
-        asgOf(oldDocs), asgOf(d), records, "id", rules = rules)
+        asgOf(oldDocs), asgOf(d), records, "id", rules = goldenRules)
     },
       // incremental ≡ full: the oracle re-derives golden records over the
       // WHOLE corpus at component = doc_id // 16 — same CTE shape as
       // q_golden_records.
-      """WITH j AS (
-        |  SELECT doc_id AS id, doc_id // 16 AS component, text, lang,
-        |         source, n_chars
-        |  FROM documents
-        |), base AS (
-        |  SELECT component, min(id) AS id, count(*) AS n_members,
-        |         min(source) AS source, max(n_chars) AS n_chars
-        |  FROM j GROUP BY component
-        |), longest AS (
-        |  SELECT component, text FROM (
-        |    SELECT component, text, row_number() OVER (
-        |      PARTITION BY component
-        |      ORDER BY length(text) DESC, text) AS rn
-        |    FROM j WHERE text IS NOT NULL) WHERE rn = 1
-        |), langcnt AS (
-        |  SELECT component, lang, count(*) AS cnt FROM j
-        |  WHERE lang IS NOT NULL GROUP BY component, lang
-        |), langmode AS (
-        |  SELECT component, lang FROM (
-        |    SELECT component, lang, row_number() OVER (
-        |      PARTITION BY component ORDER BY cnt DESC, lang) AS rn
-        |    FROM langcnt) WHERE rn = 1
-        |)
-        |SELECT b.component, b.id, b.n_members, l.text, m.lang, b.source,
-        |       b.n_chars
-        |FROM base b
-        |LEFT JOIN longest l ON b.component = l.component
-        |LEFT JOIN langmode m ON b.component = m.component""".stripMargin),
+      goldenSql("doc_id // 16")),
 
     // Source-trust survivorship: the prefer:<priorityCol> rule — each
     // cluster's canonical text comes from its smallest-priority record
@@ -709,29 +654,10 @@ private[graft] object ClusteringGates {
     // transitive clustering (stage: large-star/small-star connected
     // components; exercises graft.operators.ConnectedComponents)
     Gate("q_connected_components", (s, dir) => {
-      val edges = customerPairs(s, dir)
-        .where(col("na") =!= col("nb") &&
-          levenshtein_sim(col("na"), col("nb")) >= 0.94)
-        .select(col("ka"), col("kb"))
+      val edges = ccEdges(s, dir)
       graft.operators.ConnectedComponents.run(edges)
     },
-      """WITH RECURSIVE pairs AS (
-        |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_name <> b.c_name
-        |    AND 1.0 - CAST(levenshtein(a.c_name, b.c_name) AS DOUBLE)
-        |        / greatest(length(a.c_name), length(b.c_name)) >= 0.94
-        |), edges AS (
-        |  SELECT ka AS u, kb AS v FROM pairs
-        |  UNION ALL SELECT kb, ka FROM pairs
-        |), nodes AS (
-        |  SELECT DISTINCT u AS id FROM edges
-        |), walk(id, r) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT w.id, e.v FROM walk w JOIN edges e ON w.r = e.u
-        |)
+      s"""WITH RECURSIVE $ccPairsCte, $componentWalkCtes
         |SELECT id, min(r) AS component FROM walk GROUP BY id""".stripMargin),
 
     // synchronous label propagation (3 pinned rounds, neighbor-majority,
@@ -739,10 +665,7 @@ private[graft] object ClusteringGates {
     // q_connected_components — community structure instead of reach;
     // the oracle unrolls all 3 vote/argmax/carry rounds.
     Gate("q_label_propagation", (s, dir) => {
-      val edges = customerPairs(s, dir)
-        .where(col("na") =!= col("nb") &&
-          levenshtein_sim(col("na"), col("nb")) >= 0.94)
-        .select(col("ka"), col("kb"))
+      val edges = ccEdges(s, dir)
       graft.operators.ConnectedComponents.labelPropagation(edges, rounds = 3)
     },
       lpaOracle(3)),
@@ -842,36 +765,7 @@ private[graft] object ClusteringGates {
         |  FROM nodes
         |), tight AS (
         |  SELECT u, v FROM sym WHERE s >= CAST(0.94 AS DOUBLE)
-        |), st(id, rk, mis) AS (
-        |  SELECT id, rk, FALSE FROM keyed
-        |  UNION ALL
-        |  SELECT id, rk, mis FROM (
-        |    SELECT DISTINCT u AS id, rku AS rk, pivu AS mis, dom
-        |    FROM (
-        |      SELECT u, rku, pivu,
-        |        max(CASE WHEN pivv THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY u) AS dom
-        |      FROM (
-        |        SELECT u, rku, v, rkv,
-        |          rku < min(rkv) OVER (PARTITION BY u) AS pivu,
-        |          rkv < min(rku) OVER (PARTITION BY v) AS pivv
-        |        FROM (
-        |          SELECT e.u, a.rk AS rku, e.v, b.rk AS rkv
-        |          FROM tight e
-        |          JOIN (SELECT id, rk FROM st WHERE NOT mis) a ON e.u = a.id
-        |          JOIN (SELECT id, rk FROM st WHERE NOT mis) b ON e.v = b.id
-        |        ) r
-        |      ) f
-        |    ) g
-        |    WHERE pivu OR dom = 0
-        |    UNION ALL
-        |    SELECT a2.id, a2.rk, TRUE, 0
-        |    FROM (SELECT id, rk FROM st WHERE NOT mis) a2
-        |    WHERE a2.id NOT IN (
-        |      SELECT e2.u FROM tight e2
-        |      JOIN (SELECT id FROM st WHERE NOT mis) b2 ON e2.v = b2.id)
-        |  ) z
-        |), ctr AS (
+        |), ${misRoundsSql("tight")}, ctr AS (
         |  SELECT id, rk FROM st WHERE mis
         |), remn AS (
         |  SELECT t.u AS id, min(p.rk) AS rem
@@ -895,10 +789,7 @@ private[graft] object ClusteringGates {
     // rounds (two window layers per round over the working table) and the
     // min-rank-pivot claim, using the identical LCG rank mix.
     Gate("q_pivot_clusters", (s, dir) => {
-      val edges = customerPairs(s, dir)
-        .where(col("na") =!= col("nb") &&
-          levenshtein_sim(col("na"), col("nb")) >= 0.94)
-        .select(col("ka"), col("kb"))
+      val edges = ccEdges(s, dir)
       graft.operators.PivotClustering.run(edges)
     },
       // Pivot clustering: parallel greedy-MIS rounds replayed in a recursive
@@ -908,14 +799,7 @@ private[graft] object ClusteringGates {
       // neighbor; actives with no active neighbor are pivots by the second
       // branch. rk packs the LCG mix and the id into one BIGINT (ids < 2^31
       // here), matching Spark's (k, id) struct order exactly.
-      """WITH RECURSIVE pairs AS (
-        |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_name <> b.c_name
-        |    AND 1.0 - CAST(levenshtein(a.c_name, b.c_name) AS DOUBLE)
-        |        / greatest(length(a.c_name), length(b.c_name)) >= 0.94
-        |), edges AS (
+      s"""WITH RECURSIVE $ccPairsCte, edges AS (
         |  SELECT ka AS u, kb AS v FROM pairs
         |  UNION ALL SELECT kb, ka FROM pairs
         |), nodes AS (
@@ -924,36 +808,7 @@ private[graft] object ClusteringGates {
         |  SELECT id,
         |    ((id * 1103515245 + 12345) % 2147483648) * 2147483648 + id AS rk
         |  FROM nodes
-        |), st(id, rk, mis) AS (
-        |  SELECT id, rk, FALSE FROM keyed
-        |  UNION ALL
-        |  SELECT id, rk, mis FROM (
-        |    SELECT DISTINCT u AS id, rku AS rk, pivu AS mis, dom
-        |    FROM (
-        |      SELECT u, rku, pivu,
-        |        max(CASE WHEN pivv THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY u) AS dom
-        |      FROM (
-        |        SELECT u, rku, v, rkv,
-        |          rku < min(rkv) OVER (PARTITION BY u) AS pivu,
-        |          rkv < min(rku) OVER (PARTITION BY v) AS pivv
-        |        FROM (
-        |          SELECT e.u, a.rk AS rku, e.v, b.rk AS rkv
-        |          FROM edges e
-        |          JOIN (SELECT id, rk FROM st WHERE NOT mis) a ON e.u = a.id
-        |          JOIN (SELECT id, rk FROM st WHERE NOT mis) b ON e.v = b.id
-        |        ) r
-        |      ) f
-        |    ) g
-        |    WHERE pivu OR dom = 0
-        |    UNION ALL
-        |    SELECT a2.id, a2.rk, TRUE, 0
-        |    FROM (SELECT id, rk FROM st WHERE NOT mis) a2
-        |    WHERE a2.id NOT IN (
-        |      SELECT e2.u FROM edges e2
-        |      JOIN (SELECT id FROM st WHERE NOT mis) b2 ON e2.v = b2.id)
-        |  ) z
-        |), misq AS (
+        |), ${misRoundsSql("edges")}, misq AS (
         |  SELECT id, rk FROM st WHERE mis
         |), claims AS (
         |  SELECT e.u AS id, arg_min(p.id, p.rk) AS claim

@@ -1,7 +1,7 @@
 package graft
 package gates
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry._
@@ -137,6 +137,41 @@ private[graft] object CorpusGates {
        |    SELECT DISTINCT CAST($colExpr AS VARCHAR) AS v FROM $table
        |    WHERE $colExpr IS NOT NULL) z0) z1) z2
        |GROUP BY 2""".stripMargin
+
+  /** The text-standardization gates' input: `(doc_id, raw)`, a string
+    * per document mixing composed and decomposed forms (frag(1) is
+    * DECOMPOSED, e + U+0301, so NFC must compose it), case, accents,
+    * punctuation runs and non-Latin code points. */
+  private def accentRaw(s: SparkSession, dir: String): DataFrame = {
+    val frag = Seq("José", "élise", "MÜLLER", "o'brien", "Ĉapek",
+      "ñoño-中")
+    val sep = Seq("  ", " … ", ", ")
+    val suf = Seq(" (Gmbh)", "", " & SONS.", " ß")
+    def pick(xs: Seq[String], k: Column): Column =
+      element_at(array(xs.map(lit): _*),
+        (pmod(k, lit(xs.size)) + 1).cast("int"))
+    val id = col("doc_id")
+    val raw = concat(lit("  "), pick(frag, id * 3 + 1), pick(sep, id),
+      pick(frag, id * 5 + 2), pick(suf, id))
+    s.read.parquet(s"$dir/documents.parquet").select(id, raw.as("raw"))
+  }
+
+  /** SQL mirror of [[accentRaw]]: the CTE `f (doc_id, raw)` after `WITH`. */
+  private val accentRawSql: String =
+    """WITH f AS (
+      |  SELECT doc_id,
+      |    '  ' || list_extract(['José', 'e' || chr(769) || 'lise', 'MÜLLER',
+      |                          'o''brien', 'Ĉapek', 'ñoño-中'],
+      |                         CAST((doc_id*3+1) % 6 AS INT) + 1)
+      |        || list_extract(['  ', ' … ', ', '],
+      |                        CAST(doc_id % 3 AS INT) + 1)
+      |        || list_extract(['José', 'e' || chr(769) || 'lise', 'MÜLLER',
+      |                         'o''brien', 'Ĉapek', 'ñoño-中'],
+      |                        CAST((doc_id*5+2) % 6 AS INT) + 1)
+      |        || list_extract([' (Gmbh)', '', ' & SONS.', ' ß'],
+      |                        CAST(doc_id % 4 AS INT) + 1) AS raw
+      |  FROM documents
+      |)""".stripMargin
 
   val all: Seq[Gate] = Seq(
     // Pre-linkage column profiling (the Splink profile_columns step):
@@ -862,19 +897,7 @@ private[graft] object CorpusGates {
     // the identical lower/regexp/trim chain — cross-library agreement,
     // not self-replay.
     Gate("q_normalize_text", (s, dir) => {
-      // frag(1) is DECOMPOSED (e + U+0301) — NFC must compose it
-      val frag = Seq("José", "élise", "MÜLLER", "o'brien", "Ĉapek",
-        "ñoño-中")
-      val sep = Seq("  ", " … ", ", ")
-      val suf = Seq(" (Gmbh)", "", " & SONS.", " ß")
-      def pick(xs: Seq[String], k: Column): Column =
-        element_at(array(xs.map(lit): _*),
-          (pmod(k, lit(xs.size)) + 1).cast("int"))
-      val id = col("doc_id")
-      val raw = concat(lit("  "), pick(frag, id * 3 + 1), pick(sep, id),
-        pick(frag, id * 5 + 2), pick(suf, id))
-      s.read.parquet(s"$dir/documents.parquet")
-        .select(id, raw.as("raw"))
+      accentRaw(s, dir)
         .select(col("doc_id"), col("raw"),
           unicode_norm(col("raw"), "NFC").as("nfc"),
           strip_accents(col("raw")).as("stripped"),
@@ -884,20 +907,8 @@ private[graft] object CorpusGates {
       // INDEPENDENT implementations of the same pinned semantics (NFD → drop
       // marks → NFC ≡ ICU transliterator on this palette) — cross-library
       // agreement, not replay. frag[2] is decomposed e + U+0301.
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    '  ' || list_extract(['José', 'e' || chr(769) || 'lise', 'MÜLLER',
-        |                          'o''brien', 'Ĉapek', 'ñoño-中'],
-        |                         CAST((doc_id*3+1) % 6 AS INT) + 1)
-        |        || list_extract(['  ', ' … ', ', '],
-        |                        CAST(doc_id % 3 AS INT) + 1)
-        |        || list_extract(['José', 'e' || chr(769) || 'lise', 'MÜLLER',
-        |                         'o''brien', 'Ĉapek', 'ñoño-中'],
-        |                        CAST((doc_id*5+2) % 6 AS INT) + 1)
-        |        || list_extract([' (Gmbh)', '', ' & SONS.', ' ß'],
-        |                        CAST(doc_id % 4 AS INT) + 1) AS raw
-        |  FROM documents
-        |)
+      // concatenated: stripMargin over the fixture would cut its `||` lines
+      accentRawSql + """
         |SELECT doc_id, raw,
         |  nfc_normalize(raw) AS nfc,
         |  strip_accents(raw) AS stripped,
@@ -936,38 +947,14 @@ private[graft] object CorpusGates {
     // (within-token typos collapse), over the same composed/decomposed
     // accent fixture as q_normalize_text.
     Gate("q_fingerprint_keys", (s, dir) => {
-      val frag = Seq("José", "élise", "MÜLLER", "o'brien", "Ĉapek",
-        "ñoño-中")
-      val sep = Seq("  ", " … ", ", ")
-      val suf = Seq(" (Gmbh)", "", " & SONS.", " ß")
-      def pick(xs: Seq[String], k: Column): Column =
-        element_at(array(xs.map(lit): _*),
-          (pmod(k, lit(xs.size)) + 1).cast("int"))
-      val id = col("doc_id")
-      val raw = concat(lit("  "), pick(frag, id * 3 + 1), pick(sep, id),
-        pick(frag, id * 5 + 2), pick(suf, id))
-      s.read.parquet(s"$dir/documents.parquet")
-        .select(id, raw.as("raw"))
+      accentRaw(s, dir)
         .select(col("doc_id"), col("raw"),
           fingerprint_key(col("raw")).as("fp"),
           ngram_fingerprint_key(col("raw"), 2).as("fp2"))
     },
       // fingerprint keys: the normalize chain + list ops; the kernel's
       // whole-string short-circuit for len <= n replays as a CASE
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    '  ' || list_extract(['José', 'e' || chr(769) || 'lise', 'MÜLLER',
-        |                          'o''brien', 'Ĉapek', 'ñoño-中'],
-        |                         CAST((doc_id*3+1) % 6 AS INT) + 1)
-        |        || list_extract(['  ', ' … ', ', '],
-        |                        CAST(doc_id % 3 AS INT) + 1)
-        |        || list_extract(['José', 'e' || chr(769) || 'lise', 'MÜLLER',
-        |                         'o''brien', 'Ĉapek', 'ñoño-中'],
-        |                        CAST((doc_id*5+2) % 6 AS INT) + 1)
-        |        || list_extract([' (Gmbh)', '', ' & SONS.', ' ß'],
-        |                        CAST(doc_id % 4 AS INT) + 1) AS raw
-        |  FROM documents
-        |), nm AS (
+      accentRawSql + """, nm AS (
         |  SELECT doc_id, raw,
         |    trim(regexp_replace(lower(strip_accents(nfc_normalize(raw))),
         |         '[^\p{L}\p{Nd}]+', ' ', 'g')) AS norm
@@ -1220,29 +1207,11 @@ private[graft] object CorpusGates {
            |), ex AS (
            |  SELECT s.* FROM scr s JOIN exm USING (doc_id)
            |), ${minhashBandedCteList("ex")},
-           | sized AS (
-           |  SELECT key, count(*) AS n FROM banded GROUP BY key
-           |), good AS (
-           |  SELECT b.id, b.key FROM banded b JOIN sized s USING (key) WHERE s.n <= 500
-           |), cand AS (
-           |  SELECT DISTINCT a.id AS ia, b.id AS ib
-           |  FROM good a JOIN good b ON a.key = b.key AND a.id < b.id
-           |), verified AS (
+           | $minhashCandCtes, verified AS (
            |  SELECT c.ia, c.ib
            |  FROM cand c JOIN base x ON c.ia = x.id JOIN base y ON c.ib = y.id
            |  WHERE $jac >= CAST('0.5' AS DOUBLE)
-           |), uedges AS (
-           |  SELECT ia AS u, ib AS v FROM verified
-           |  UNION ALL SELECT ib, ia FROM verified
-           |), unodes AS (
-           |  SELECT DISTINCT u AS id FROM uedges
-           |), walk(id, r) AS (
-           |  SELECT id, id FROM unodes
-           |  UNION
-           |  SELECT w.id, e.v FROM walk w JOIN uedges e ON w.r = e.u
-           |), comp AS (
-           |  SELECT id, min(r) AS component FROM walk GROUP BY id
-           |), nd AS (
+           |), $verifiedComponentCtes, nd AS (
            |  SELECT e.* FROM ex e LEFT JOIN comp c ON e.doc_id = c.id
            |  WHERE COALESCE(c.component, e.doc_id) = e.doc_id
            |), sp AS (

@@ -135,14 +135,7 @@ private[graft] object DedupGates {
   private def minhashLshOracle: String = {
     val jac = tokenJaccardSql
     minhashDocBandedCtes() + "," + s"""
-       | sized AS (
-       |  SELECT key, count(*) AS n FROM banded GROUP BY key
-       |), good AS (
-       |  SELECT b.id, b.key FROM banded b JOIN sized s USING (key) WHERE s.n <= 500
-       |), cand AS (
-       |  SELECT DISTINCT a.id AS ia, b.id AS ib
-       |  FROM good a JOIN good b ON a.key = b.key AND a.id < b.id
-       |)
+       | $minhashCandCtes
        |SELECT c.ia, c.ib, $jac AS jaccard
        |FROM cand c JOIN base x ON c.ia = x.id JOIN base y ON c.ib = y.id
        |WHERE $jac >= 0.5""".stripMargin
@@ -155,29 +148,11 @@ private[graft] object DedupGates {
   private def nearDupGroupsOracle: String = {
     val jac = tokenJaccardSql
     minhashDocBandedCtes(recursive = true) + "," + s"""
-       | sized AS (
-       |  SELECT key, count(*) AS n FROM banded GROUP BY key
-       |), good AS (
-       |  SELECT b.id, b.key FROM banded b JOIN sized s USING (key) WHERE s.n <= 500
-       |), cand AS (
-       |  SELECT DISTINCT a.id AS ia, b.id AS ib
-       |  FROM good a JOIN good b ON a.key = b.key AND a.id < b.id
-       |), verified AS (
+       | $minhashCandCtes, verified AS (
        |  SELECT c.ia, c.ib
        |  FROM cand c JOIN base x ON c.ia = x.id JOIN base y ON c.ib = y.id
        |  WHERE $jac >= 0.5
-       |), uedges AS (
-       |  SELECT ia AS u, ib AS v FROM verified
-       |  UNION ALL SELECT ib, ia FROM verified
-       |), unodes AS (
-       |  SELECT DISTINCT u AS id FROM uedges
-       |), walk(id, r) AS (
-       |  SELECT id, id FROM unodes
-       |  UNION
-       |  SELECT w.id, e.v FROM walk w JOIN uedges e ON w.r = e.u
-       |), comp AS (
-       |  SELECT id, min(r) AS component FROM walk GROUP BY id
-       |)
+       |), $verifiedComponentCtes
        |SELECT d.doc_id AS id, COALESCE(c.component, d.doc_id) AS canonical_id
        |FROM documents d LEFT JOIN comp c ON d.doc_id = c.id""".stripMargin
   }
@@ -435,14 +410,7 @@ private[graft] object DedupGates {
         |  SELECT id, CAST(bin // 4 AS VARCHAR) || ':' ||
         |         sha256(string_agg(h, '|' ORDER BY bin)) AS key
         |  FROM dens GROUP BY id, bin // 4
-        |), sized AS (
-        |  SELECT key, count(*) AS n FROM banded GROUP BY key
-        |), good AS (
-        |  SELECT b.id, b.key FROM banded b JOIN sized s USING (key) WHERE s.n <= 500
-        |), cand AS (
-        |  SELECT DISTINCT a.id AS ia, b.id AS ib
-        |  FROM good a JOIN good b ON a.key = b.key AND a.id < b.id
-        |)
+        |), $minhashCandCtes
         |SELECT c.ia, c.ib, $tokenJaccardSql AS jaccard
         |FROM cand c JOIN base x ON c.ia = x.id JOIN base y ON c.ib = y.id
         |WHERE $tokenJaccardSql >= 0.5""".stripMargin),
@@ -506,22 +474,7 @@ private[graft] object DedupGates {
         "doc_id", "fp_hash", minCommon = 30).out,
       s"""WITH $winnowCtes, e AS (
         |  SELECT DISTINCT doc_id AS id, fp_hash AS nb FROM fp
-        |), deg AS (
-        |  SELECT id, count(*) AS d FROM e GROUP BY id
-        |), pr AS (
-        |  SELECT a.id AS url_a, b.id AS url_b,
-        |         CAST(count(*) AS BIGINT) AS common_neighbors
-        |  FROM e a JOIN e b ON a.nb = b.nb AND a.id < b.id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT p.url_a, p.url_b, p.common_neighbors,
-        |  CAST(p.common_neighbors AS DOUBLE)
-        |    / CAST(da.d + db.d - p.common_neighbors AS DOUBLE)
-        |    AS neighborhood_jaccard
-        |FROM pr p
-        |JOIN deg da ON p.url_a = da.id
-        |JOIN deg db ON p.url_b = db.id
-        |WHERE p.common_neighbors >= 30""".stripMargin),
+        |), ${commonNeighborsSql(30)}""".stripMargin),
 
     // Content-defined chunking (LBFS/FastCDC family): boundaries decided
     // by the sha-u32 of the 16-char window ending at each position
@@ -619,22 +572,7 @@ private[graft] object DedupGates {
       // CDC chunk bipartite frame.
       s"""WITH $cdcChunkCtes, e AS (
         |  SELECT DISTINCT doc_id AS id, chunk_sha AS nb FROM ck
-        |), deg AS (
-        |  SELECT id, count(*) AS d FROM e GROUP BY id
-        |), pr AS (
-        |  SELECT a.id AS url_a, b.id AS url_b,
-        |         CAST(count(*) AS BIGINT) AS common_neighbors
-        |  FROM e a JOIN e b ON a.nb = b.nb AND a.id < b.id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT p.url_a, p.url_b, p.common_neighbors,
-        |  CAST(p.common_neighbors AS DOUBLE)
-        |    / CAST(da.d + db.d - p.common_neighbors AS DOUBLE)
-        |    AS neighborhood_jaccard
-        |FROM pr p
-        |JOIN deg da ON p.url_a = da.id
-        |JOIN deg db ON p.url_b = db.id
-        |WHERE p.common_neighbors >= 4""".stripMargin),
+        |), ${commonNeighborsSql(4)}""".stripMargin),
 
     // token-set Jaccard near-dup over (lang, source) blocks. bucketCap=8
     // routes every real block at sf0.01 (max 16) through the SALTED grid

@@ -77,6 +77,85 @@ private[graft] object EvaluationGates {
       |  FROM pairs p JOIN sums s ON p.id_l = s.id_l AND p.id_r = s.id_r
       |)""".stripMargin
 
+  /** SQL mirror of [[linkage]] as a `WITH` list: [[linkTablesCtes]],
+    * then `base (id_l, id_r, score)` with score = jw + dice, `labeled`,
+    * the suffix-equality truth, and `flag (score, t)`, t = 1 on a true
+    * pair. */
+  private val flagCtes =
+    s"""WITH $linkTablesCtes,
+      |base AS (
+      |  SELECT id_l, id_r, jw + dice AS score
+      |  FROM scored WHERE jw + dice >= 1.0
+      |), labeled AS (
+      |  SELECT DISTINCT c.c_custkey AS id_l, s.s_suppkey AS id_r
+      |  FROM customer c JOIN supplier s
+      |    ON right(c.c_name, 9) = right(s.s_name, 9)
+      |), flag AS (
+      |  SELECT b.score, CASE WHEN l.id_l IS NOT NULL THEN 1 ELSE 0 END AS t
+      |  FROM base b LEFT JOIN labeled l
+      |    ON b.id_l = l.id_l AND b.id_r = l.id_r
+      |)""".stripMargin
+
+  /** [[flagCtes]] and `cells (score, n, t)`: the pair count and the true
+    * pair count of each distinct score, the rocCurve cells. */
+  private val scoreCellsCtes =
+    s"""$flagCtes, cells AS (
+      |  SELECT score, CAST(count(*) AS BIGINT) AS n,
+      |         CAST(sum(t) AS BIGINT) AS t
+      |  FROM flag GROUP BY score
+      |)""".stripMargin
+
+  /** The confusion-weighted edit-distance DP of the confusion gates, as
+    * an oracle over `pairs (id, a, b)`: customer names `a` of every
+    * `every`-th key against the probe expression `b`. The q_nw_sim
+    * window recursion takes min, with indels at 2 and the substitution
+    * cost CASE generated from StrSimKernels.ocrConfusions (one rule
+    * list): 0 on equal chars, 1 on a listed confusable pair, else 2.
+    * `select` projects each pair from its last cell `d.cell`, null when
+    * a = b. */
+  private def confusionDpSql(b: String, every: Int, select: String): String = {
+    val confPairs = graft.strsim.StrSimKernels.ocrConfusions
+      .flatMap { case (x, y) => Seq(s"'$x$y'", s"'$y$x'") }
+      .mkString(", ")
+    val cost = s"""CASE WHEN xa[(t+1)//(m+1)] = xb[(t+1)%(m+1)] THEN 0
+                  |  WHEN (xa[(t+1)//(m+1)] || xb[(t+1)%(m+1)])
+                  |    IN ($confPairs) THEN 1
+                  |  ELSE 2 END""".stripMargin
+    s"""WITH RECURSIVE pairs AS (
+       |  SELECT c_custkey AS id, c_name AS a,
+       |    $b AS b
+       |  FROM customer WHERE c_custkey % $every = 0
+       |), prep AS (
+       |  SELECT id, string_split(a, '') AS xa, string_split(b, '') AS xb,
+       |         length(a) AS n, length(b) AS m
+       |  FROM pairs WHERE a <> b
+       |), dp AS (
+       |  SELECT id, xa, xb, n, m,
+       |         0 AS t, CAST(0 AS BIGINT) AS cell,
+       |         list_transform(range(1, 2*m + 5),
+       |           k -> CAST(NULL AS BIGINT)) AS win
+       |  FROM prep
+       |  UNION ALL
+       |  SELECT id, xa, xb, n, m, t + 1 AS t,
+       |    CASE
+       |      WHEN (t+1) % (m+1) = 0 THEN CAST(2*((t+1) // (m+1)) AS BIGINT)
+       |      WHEN (t+1) // (m+1) = 0 THEN CAST(2*((t+1) % (m+1)) AS BIGINT)
+       |      ELSE least(
+       |        nw[m+3] + ($cost),
+       |        nw[m+4] + 2,
+       |        nw[2*m+4] + 2)
+       |    END AS cell,
+       |    nw AS win
+       |  FROM (SELECT *, win[2:] || [cell] AS nw
+       |        FROM dp WHERE t < (n+1)*(m+1) - 1) q
+       |)
+       |$select
+       |FROM pairs p
+       |LEFT JOIN (SELECT id, cell FROM dp
+       |           WHERE t = (n+1)*(m+1) - 1) d
+       |  ON p.id = d.id""".stripMargin
+  }
+
   /** The cluster-agreement gates' input: customer ids with a predicted
     * partition (segment:nation) and a reference one (name suffix). */
   private def partitions(s: SparkSession, dir: String): DataFrame =
@@ -148,19 +227,7 @@ private[graft] object EvaluationGates {
       // division each (NULL when the denominator is 0), f1 pinned to
       // (2·p)·r/(p+r) with 0.0 at tp=0. θ literals CAST to DOUBLE (DuckDB
       // parses bare decimals as DECIMAL).
-      s"""WITH $linkTablesCtes,
-        |base AS (
-        |  SELECT id_l, id_r, jw + dice AS score
-        |  FROM scored WHERE jw + dice >= 1.0
-        |), labeled AS (
-        |  SELECT DISTINCT c.c_custkey AS id_l, s.s_suppkey AS id_r
-        |  FROM customer c JOIN supplier s
-        |    ON right(c.c_name, 9) = right(s.s_name, 9)
-        |), flag AS (
-        |  SELECT b.score, CASE WHEN l.id_l IS NOT NULL THEN 1 ELSE 0 END AS t
-        |  FROM base b LEFT JOIN labeled l
-        |    ON b.id_l = l.id_l AND b.id_r = l.id_r
-        |), thetas AS (
+      s"""$flagCtes, thetas AS (
         |  SELECT unnest([CAST(1.0 AS DOUBLE), CAST(1.1 AS DOUBLE),
         |    CAST(1.2 AS DOUBLE), CAST(1.3 AS DOUBLE), CAST(1.4 AS DOUBLE),
         |    CAST(1.5 AS DOUBLE), CAST(1.6 AS DOUBLE), CAST(1.7 AS DOUBLE),
@@ -200,23 +267,7 @@ private[graft] object EvaluationGates {
       // cell per distinct score, cumulative tp/fp by a descending-score
       // window (the oracle can afford the single-partition window the
       // Spark side replaces with a distributed running sum).
-      s"""WITH $linkTablesCtes,
-        |base AS (
-        |  SELECT id_l, id_r, jw + dice AS score
-        |  FROM scored WHERE jw + dice >= 1.0
-        |), labeled AS (
-        |  SELECT DISTINCT c.c_custkey AS id_l, s.s_suppkey AS id_r
-        |  FROM customer c JOIN supplier s
-        |    ON right(c.c_name, 9) = right(s.s_name, 9)
-        |), flag AS (
-        |  SELECT b.score, CASE WHEN l.id_l IS NOT NULL THEN 1 ELSE 0 END AS t
-        |  FROM base b LEFT JOIN labeled l
-        |    ON b.id_l = l.id_l AND b.id_r = l.id_r
-        |), cells AS (
-        |  SELECT score, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(t) AS BIGINT) AS t
-        |  FROM flag GROUP BY score
-        |), cum AS (
+      s"""$scoreCellsCtes, cum AS (
         |  SELECT score, n, t,
         |    CAST(sum(t) OVER (ORDER BY score DESC) AS BIGINT) AS tp,
         |    CAST(sum(n) OVER (ORDER BY score DESC) AS BIGINT)
@@ -244,23 +295,7 @@ private[graft] object EvaluationGates {
     },
       // Exact AUC: the Mann-Whitney fold over the same score cells, all
       // integer (HUGEINT mirrors decimal(38,0)), one final division.
-      s"""WITH $linkTablesCtes,
-        |base AS (
-        |  SELECT id_l, id_r, jw + dice AS score
-        |  FROM scored WHERE jw + dice >= 1.0
-        |), labeled AS (
-        |  SELECT DISTINCT c.c_custkey AS id_l, s.s_suppkey AS id_r
-        |  FROM customer c JOIN supplier s
-        |    ON right(c.c_name, 9) = right(s.s_name, 9)
-        |), flag AS (
-        |  SELECT b.score, CASE WHEN l.id_l IS NOT NULL THEN 1 ELSE 0 END AS t
-        |  FROM base b LEFT JOIN labeled l
-        |    ON b.id_l = l.id_l AND b.id_r = l.id_r
-        |), cells AS (
-        |  SELECT score, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(t) AS BIGINT) AS t
-        |  FROM flag GROUP BY score
-        |), cum AS (
+      s"""$scoreCellsCtes, cum AS (
         |  SELECT score, n, t,
         |    CAST(sum(n) OVER (ORDER BY score DESC) AS BIGINT)
         |      - CAST(sum(t) OVER (ORDER BY score DESC) AS BIGINT) AS fp
@@ -294,23 +329,7 @@ private[graft] object EvaluationGates {
       // PR curve: the q_roc_curve cumulative cells projected to
       // precision = tp/(tp+fp) (cumulative n at s — never 0) and
       // recall = tpr (same exact division).
-      s"""WITH $linkTablesCtes,
-        |base AS (
-        |  SELECT id_l, id_r, jw + dice AS score
-        |  FROM scored WHERE jw + dice >= 1.0
-        |), labeled AS (
-        |  SELECT DISTINCT c.c_custkey AS id_l, s.s_suppkey AS id_r
-        |  FROM customer c JOIN supplier s
-        |    ON right(c.c_name, 9) = right(s.s_name, 9)
-        |), flag AS (
-        |  SELECT b.score, CASE WHEN l.id_l IS NOT NULL THEN 1 ELSE 0 END AS t
-        |  FROM base b LEFT JOIN labeled l
-        |    ON b.id_l = l.id_l AND b.id_r = l.id_r
-        |), cells AS (
-        |  SELECT score, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(t) AS BIGINT) AS t
-        |  FROM flag GROUP BY score
-        |), cum AS (
+      s"""$scoreCellsCtes, cum AS (
         |  SELECT score, n, t,
         |    CAST(sum(t) OVER (ORDER BY score DESC) AS BIGINT) AS tp,
         |    CAST(sum(n) OVER (ORDER BY score DESC) AS BIGINT)
@@ -336,23 +355,7 @@ private[graft] object EvaluationGates {
       // order — each term (t/P)·(tp/(tp+fp)) in the operator's pinned op
       // order, summed by a list_reduce left fold seeded with 0.0 (the
       // prepended element), mirroring Spark's aggregate(arr, 0.0, ...).
-      s"""WITH $linkTablesCtes,
-        |base AS (
-        |  SELECT id_l, id_r, jw + dice AS score
-        |  FROM scored WHERE jw + dice >= 1.0
-        |), labeled AS (
-        |  SELECT DISTINCT c.c_custkey AS id_l, s.s_suppkey AS id_r
-        |  FROM customer c JOIN supplier s
-        |    ON right(c.c_name, 9) = right(s.s_name, 9)
-        |), flag AS (
-        |  SELECT b.score, CASE WHEN l.id_l IS NOT NULL THEN 1 ELSE 0 END AS t
-        |  FROM base b LEFT JOIN labeled l
-        |    ON b.id_l = l.id_l AND b.id_r = l.id_r
-        |), cells AS (
-        |  SELECT score, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(t) AS BIGINT) AS t
-        |  FROM flag GROUP BY score
-        |), cum AS (
+      s"""$scoreCellsCtes, cum AS (
         |  SELECT score, n, t,
         |    CAST(sum(t) OVER (ORDER BY score DESC) AS BIGINT) AS tp,
         |    CAST(sum(n) OVER (ORDER BY score DESC) AS BIGINT) AS cn
@@ -725,55 +728,17 @@ private[graft] object EvaluationGates {
       // same brute-force common-neighbor tail as q_common_neighbors.
       // the q_nw_sim DP recursion with min + the confusion cost CASE
       // generated from StrSimKernels.ocrConfusions (one rule list).
-      {
-      val confPairs = graft.strsim.StrSimKernels.ocrConfusions
-        .flatMap { case (x, y) => Seq(s"'$x$y'", s"'$y$x'") }
-        .mkString(", ")
-      val cost = s"""CASE WHEN xa[(t+1)//(m+1)] = xb[(t+1)%(m+1)] THEN 0
-                    |  WHEN (xa[(t+1)//(m+1)] || xb[(t+1)%(m+1)])
-                    |    IN ($confPairs) THEN 1
-                    |  ELSE 2 END""".stripMargin
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT c_custkey AS id, c_name AS a,
-         |    translate(c_name, '015', 'OIS') ||
-         |      (CASE WHEN c_custkey % 2 = 1 THEN 'x' ELSE '' END) AS b
-         |  FROM customer WHERE c_custkey % 17 = 0
-         |), prep AS (
-         |  SELECT id, string_split(a, '') AS xa, string_split(b, '') AS xb,
-         |         length(a) AS n, length(b) AS m
-         |  FROM pairs WHERE a <> b
-         |), dp AS (
-         |  SELECT id, xa, xb, n, m,
-         |         0 AS t, CAST(0 AS BIGINT) AS cell,
-         |         list_transform(range(1, 2*m + 5),
-         |           k -> CAST(NULL AS BIGINT)) AS win
-         |  FROM prep
-         |  UNION ALL
-         |  SELECT id, xa, xb, n, m, t + 1 AS t,
-         |    CASE
-         |      WHEN (t+1) % (m+1) = 0 THEN CAST(2*((t+1) // (m+1)) AS BIGINT)
-         |      WHEN (t+1) // (m+1) = 0 THEN CAST(2*((t+1) % (m+1)) AS BIGINT)
-         |      ELSE least(
-         |        nw[m+3] + ($cost),
-         |        nw[m+4] + 2,
-         |        nw[2*m+4] + 2)
-         |    END AS cell,
-         |    nw AS win
-         |  FROM (SELECT *, win[2:] || [cell] AS nw
-         |        FROM dp WHERE t < (n+1)*(m+1) - 1) q
-         |)
-         |SELECT p.id,
-         |  CAST(coalesce(d.cell, 0) AS BIGINT) AS dist,
-         |  CASE WHEN p.a = p.b THEN CAST(1 AS DOUBLE)
-         |       ELSE CAST(1 AS DOUBLE) - CAST(d.cell AS DOUBLE) /
-         |            (CAST(2 AS DOUBLE) *
-         |             CAST(greatest(length(p.a), length(p.b)) AS DOUBLE))
-         |  END AS sim
-         |FROM pairs p
-         |LEFT JOIN (SELECT id, cell FROM dp
-         |           WHERE t = (n+1)*(m+1) - 1) d
-         |  ON p.id = d.id""".stripMargin
-    }),
+      confusionDpSql(
+        """translate(c_name, '015', 'OIS') ||
+          |      (CASE WHEN c_custkey % 2 = 1 THEN 'x' ELSE '' END)""".stripMargin,
+        17,
+        """SELECT p.id,
+          |  CAST(coalesce(d.cell, 0) AS BIGINT) AS dist,
+          |  CASE WHEN p.a = p.b THEN CAST(1 AS DOUBLE)
+          |       ELSE CAST(1 AS DOUBLE) - CAST(d.cell AS DOUBLE) /
+          |            (CAST(2 AS DOUBLE) *
+          |             CAST(greatest(length(p.a), length(p.b)) AS DOUBLE))
+          |  END AS sim""".stripMargin)),
 
     // OCR-aware comparator levels: four deterministic probe families
     // per sliced customer (identity / last-digit glyph swap / short
@@ -799,61 +764,23 @@ private[graft] object EvaluationGates {
     },
       // probe-family CASE + the same confusion-DP recursion + DuckDB's
       // bit-matching jaro_winkler for the fuzzy band.
-      {
-      val confPairs = graft.strsim.StrSimKernels.ocrConfusions
-        .flatMap { case (x, y) => Seq(s"'$x$y'", s"'$y$x'") }
-        .mkString(", ")
-      val cost = s"""CASE WHEN xa[(t+1)//(m+1)] = xb[(t+1)%(m+1)] THEN 0
-                    |  WHEN (xa[(t+1)//(m+1)] || xb[(t+1)%(m+1)])
-                    |    IN ($confPairs) THEN 1
-                    |  ELSE 2 END""".stripMargin
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT c_custkey AS id, c_name AS a,
-         |    CASE
-         |      WHEN c_custkey % 4 = 0 THEN c_name
-         |      WHEN c_custkey % 4 = 1 THEN
-         |        substr(c_name, 1, length(c_name) - 1) ||
-         |        translate(substr(c_name, length(c_name), 1),
-         |          '0123456789', 'OIZEASGTBg')
-         |      WHEN c_custkey % 4 = 2 THEN c_name || 'xyz'
-         |      ELSE reverse(c_name)
-         |    END AS b
-         |  FROM customer WHERE c_custkey % 13 = 0
-         |), prep AS (
-         |  SELECT id, string_split(a, '') AS xa, string_split(b, '') AS xb,
-         |         length(a) AS n, length(b) AS m
-         |  FROM pairs WHERE a <> b
-         |), dp AS (
-         |  SELECT id, xa, xb, n, m,
-         |         0 AS t, CAST(0 AS BIGINT) AS cell,
-         |         list_transform(range(1, 2*m + 5),
-         |           k -> CAST(NULL AS BIGINT)) AS win
-         |  FROM prep
-         |  UNION ALL
-         |  SELECT id, xa, xb, n, m, t + 1 AS t,
-         |    CASE
-         |      WHEN (t+1) % (m+1) = 0 THEN CAST(2*((t+1) // (m+1)) AS BIGINT)
-         |      WHEN (t+1) // (m+1) = 0 THEN CAST(2*((t+1) % (m+1)) AS BIGINT)
-         |      ELSE least(
-         |        nw[m+3] + ($cost),
-         |        nw[m+4] + 2,
-         |        nw[2*m+4] + 2)
-         |    END AS cell,
-         |    nw AS win
-         |  FROM (SELECT *, win[2:] || [cell] AS nw
-         |        FROM dp WHERE t < (n+1)*(m+1) - 1) q
-         |)
-         |SELECT p.id,
-         |  CAST(CASE WHEN p.a = p.b THEN 3
-         |    WHEN d.cell <= 2 THEN 2
-         |    WHEN jaro_winkler_similarity(p.a, p.b) >= CAST(0.88 AS DOUBLE)
-         |      THEN 1
-         |    ELSE 0 END AS BIGINT) AS gamma
-         |FROM pairs p
-         |LEFT JOIN (SELECT id, cell FROM dp
-         |           WHERE t = (n+1)*(m+1) - 1) d
-         |  ON p.id = d.id""".stripMargin
-    }),
+      confusionDpSql(
+        """CASE
+          |      WHEN c_custkey % 4 = 0 THEN c_name
+          |      WHEN c_custkey % 4 = 1 THEN
+          |        substr(c_name, 1, length(c_name) - 1) ||
+          |        translate(substr(c_name, length(c_name), 1),
+          |          '0123456789', 'OIZEASGTBg')
+          |      WHEN c_custkey % 4 = 2 THEN c_name || 'xyz'
+          |      ELSE reverse(c_name)
+          |    END""".stripMargin,
+        13,
+        """SELECT p.id,
+          |  CAST(CASE WHEN p.a = p.b THEN 3
+          |    WHEN d.cell <= 2 THEN 2
+          |    WHEN jaro_winkler_similarity(p.a, p.b) >= CAST(0.88 AS DOUBLE)
+          |      THEN 1
+          |    ELSE 0 END AS BIGINT) AS gamma""".stripMargin)),
 
     // Information-theoretic agreement family, gate face: count-of-counts
     // sufficient statistics (side × group_size → n_groups) over the SAME

@@ -14,12 +14,34 @@ import graft.operators.Frames
   * date, geo, array, acronym and decay comparators. */
 private[graft] object FellegiSunterGates {
 
-  /** Comparison-vector frame for the Fellegi-Sunter gate: nationkey-blocked
-    * customer pairs with three 0/1 agreement fields. */
   private val fsGammas = Seq("g0", "g1", "g2")
 
+  /** Comparison-vector frame for the Fellegi-Sunter gate: nationkey-blocked
+    * customer pairs with three 0/1 agreement fields, then `extra`. */
   private def fsGammaPairs(s: SparkSession, dir: String,
-      withSeg: Boolean = false): DataFrame = {
+      extra: Column*): DataFrame =
+    fsCustomerPairs(s, dir).select(Seq(col("ka"), col("kb"),
+      when(jaro_winkler_sim(col("na"), col("nb")) >= 0.95, 1L)
+        .otherwise(0L).as("g0"),
+      when(col("sa") === col("sb"), 1L).otherwise(0L).as("g1"),
+      when(floor(col("aa") / 1000.0) === floor(col("ab") / 1000.0), 1L)
+        .otherwise(0L).as("g2")) ++ extra: _*)
+
+  /** SQL mirror of [[fsGammaPairs]]' gammas over customer rows `a`, `b`,
+    * as select items. */
+  private val fsGammaSql =
+    """CAST(CASE WHEN (CASE WHEN a.c_name = b.c_name THEN 1.0
+      |         ELSE jaro_winkler_similarity(a.c_name, b.c_name) END) >= 0.95
+      |         THEN 1 ELSE 0 END AS BIGINT) AS g0,
+      |    CAST(CASE WHEN a.c_mktsegment = b.c_mktsegment
+      |         THEN 1 ELSE 0 END AS BIGINT) AS g1,
+      |    CAST(CASE WHEN floor(a.c_acctbal / 1000.0) = floor(b.c_acctbal / 1000.0)
+      |         THEN 1 ELSE 0 END AS BIGINT) AS g2""".stripMargin
+
+  /** The nationkey-blocked customer pairs (ka < kb) the comparison
+    * frames score: name `na`/`nb`, segment `sa`/`sb` and account balance
+    * `aa`/`ab` of each side. */
+  private def fsCustomerPairs(s: SparkSession, dir: String): DataFrame = {
     val c = spread(s.read.parquet(s"$dir/customer.parquet"))
     val a = c.select(col("c_custkey").as("ka"), col("c_name").as("na"),
       col("c_mktsegment").as("sa"), col("c_acctbal").as("aa"),
@@ -27,54 +49,26 @@ private[graft] object FellegiSunterGates {
     val b = c.select(col("c_custkey").as("kb"), col("c_name").as("nb"),
       col("c_mktsegment").as("sb"), col("c_acctbal").as("ab"),
       col("c_nationkey").as("nk"))
-    val base = Seq(col("ka"), col("kb"),
-      when(jaro_winkler_sim(col("na"), col("nb")) >= 0.95, 1L)
-        .otherwise(0L).as("g0"),
-      when(col("sa") === col("sb"), 1L).otherwise(0L).as("g1"),
-      when(floor(col("aa") / 1000.0) === floor(col("ab") / 1000.0), 1L)
-        .otherwise(0L).as("g2"))
-    val cols = if (withSeg) base :+ col("sa").as("seg_a") else base
-    a.join(b, "nk").where(col("ka") < col("kb")).select(cols: _*)
+    a.join(b, "nk").where(col("ka") < col("kb"))
   }
 
   /** Labeled comparison-vector frame for the supervised-weights gates:
     * the [[fsGammaPairs]] gammas plus a 0/1 label t = last-3-characters
     * name-suffix equality (the same truth family the blocking gates
     * use). */
-  private def supervisedPairs(s: SparkSession, dir: String): DataFrame = {
-    val c = spread(s.read.parquet(s"$dir/customer.parquet"))
-    val a = c.select(col("c_custkey").as("ka"), col("c_name").as("na"),
-      col("c_mktsegment").as("sa"), col("c_acctbal").as("aa"),
-      col("c_nationkey").as("nk"))
-    val b = c.select(col("c_custkey").as("kb"), col("c_name").as("nb"),
-      col("c_mktsegment").as("sb"), col("c_acctbal").as("ab"),
-      col("c_nationkey").as("nk"))
-    a.join(b, "nk").where(col("ka") < col("kb"))
-      .select(col("ka"), col("kb"),
-        when(jaro_winkler_sim(col("na"), col("nb")) >= 0.95, 1L)
-          .otherwise(0L).as("g0"),
-        when(col("sa") === col("sb"), 1L).otherwise(0L).as("g1"),
-        when(floor(col("aa") / 1000.0) === floor(col("ab") / 1000.0), 1L)
-          .otherwise(0L).as("g2"),
-        when(substring(col("na"), -3, 3) === substring(col("nb"), -3, 3), 1L)
-          .otherwise(0L).as("t"))
-  }
+  private def supervisedPairs(s: SparkSession, dir: String): DataFrame =
+    fsGammaPairs(s, dir,
+      when(substring(col("na"), -3, 3) === substring(col("nb"), -3, 3), 1L)
+        .otherwise(0L).as("t"))
 
   /** Multi-level comparison-vector frame for the FS-levels gate: two
     * 3-level gammas (name JW banded at 0.97/0.93; acctbal-bracket
     * distance 0/1/more) plus one binary gamma (segment equality —
     * exercising mixed arity) over nationkey-blocked customer pairs. */
   private def fsLevelPairs(s: SparkSession, dir: String): DataFrame = {
-    val c = spread(s.read.parquet(s"$dir/customer.parquet"))
-    val a = c.select(col("c_custkey").as("ka"), col("c_name").as("na"),
-      col("c_acctbal").as("aa"), col("c_mktsegment").as("sa"),
-      col("c_nationkey").as("nk"))
-    val b = c.select(col("c_custkey").as("kb"), col("c_name").as("nb"),
-      col("c_acctbal").as("ab"), col("c_mktsegment").as("sb"),
-      col("c_nationkey").as("nk"))
     val jw = jaro_winkler_sim(col("na"), col("nb"))
     val d = abs(floor(col("aa") / 1000.0) - floor(col("ab") / 1000.0))
-    a.join(b, "nk").where(col("ka") < col("kb"))
+    fsCustomerPairs(s, dir)
       .select(col("ka"), col("kb"),
         when(jw >= 0.97, 2L).when(jw >= 0.93, 1L).otherwise(0L).as("g0"),
         when(d === 0, 2L).when(d === 1, 1L).otherwise(0L).as("g1"),
@@ -213,6 +207,23 @@ private[graft] object FellegiSunterGates {
          |SELECT ka, kb, $gcols, t, z, p,
          |  CASE WHEN p >= 0.5 THEN 'link' ELSE 'non_link' END AS decision
          |FROM sp""".stripMargin
+  }
+
+  /** The power-of-two bin of a likelihood ratio `lr`, ⌊log₂ lr⌋ clamped
+    * to [minExp − 1, maxExp], as a CASE over exact power-of-2 literals
+    * (decimal expansions of 2^e are finite, so CAST('…' AS DOUBLE) is the
+    * exact double — no log(), no libm). */
+  private def binExpSql(minExp: Int, maxExp: Int): String = {
+    def p2lit(e: Int): String = {
+      val bd = if (e >= 0) BigDecimal(2).pow(e)
+        else BigDecimal(0.5).pow(-e)
+      s"CAST('${bd.underlying.toPlainString}' AS DOUBLE)"
+    }
+    val chain = new StringBuilder(
+      s"CASE WHEN lr >= ${p2lit(maxExp)} THEN $maxExp")
+    for (e <- (minExp until maxExp).reverse)
+      chain.append(s" WHEN lr >= ${p2lit(e)} THEN $e")
+    chain.append(s" ELSE ${minExp - 1} END").toString
   }
 
   /** Unrolled-EM Fellegi-Sunter oracle: re-derives the comparison vectors
@@ -378,16 +389,7 @@ private[graft] object FellegiSunterGates {
       // (decimal expansions of 2^e are finite, so CAST('…' AS DOUBLE) is
       // the exact double — no log(), no libm), zero bins included.
       val (minExp, maxExp) = histogram.get
-      def p2lit(e: Int): String = {
-        val bd = if (e >= 0) BigDecimal(2).pow(e)
-          else BigDecimal(0.5).pow(-e)
-        s"CAST('${bd.underlying.toPlainString}' AS DOUBLE)"
-      }
-      val chain = new StringBuilder(
-        s"CASE WHEN lr >= ${p2lit(maxExp)} THEN $maxExp")
-      for (e <- (minExp until maxExp).reverse)
-        chain.append(s" WHEN lr >= ${p2lit(e)} THEN $e")
-      chain.append(s" ELSE ${minExp - 1} END")
+      val chain = binExpSql(minExp, maxExp)
       s"""WITH ${ctes.mkString(",\n")},
          |sc AS (SELECT w / v AS lr
          |       FROM (SELECT $w AS w, $v AS v
@@ -411,16 +413,7 @@ private[graft] object FellegiSunterGates {
       // ka-parity subsets under ONE fitted model, then exact shares and
       // the pinned-order share ratio per bin.
       val (minExp, maxExp) = drift.get
-      def p2lit(e: Int): String = {
-        val bd = if (e >= 0) BigDecimal(2).pow(e)
-          else BigDecimal(0.5).pow(-e)
-        s"CAST('${bd.underlying.toPlainString}' AS DOUBLE)"
-      }
-      val chain = new StringBuilder(
-        s"CASE WHEN lr >= ${p2lit(maxExp)} THEN $maxExp")
-      for (e <- (minExp until maxExp).reverse)
-        chain.append(s" WHEN lr >= ${p2lit(e)} THEN $e")
-      chain.append(s" ELSE ${minExp - 1} END")
+      val chain = binExpSql(minExp, maxExp)
       s"""WITH ${ctes.mkString(",\n")},
          |sc AS (SELECT ka, w / v AS lr
          |       FROM (SELECT ka, $w AS w, $v AS v
@@ -575,13 +568,7 @@ private[graft] object FellegiSunterGates {
       // pinned (ka, kb) order, top-5.
       s"""WITH pairs AS (
          |  SELECT a.c_custkey AS ka, b.c_custkey AS kb,
-         |    CAST(CASE WHEN (CASE WHEN a.c_name = b.c_name THEN 1.0
-         |         ELSE jaro_winkler_similarity(a.c_name, b.c_name) END) >= 0.95
-         |         THEN 1 ELSE 0 END AS BIGINT) AS g0,
-         |    CAST(CASE WHEN a.c_mktsegment = b.c_mktsegment
-         |         THEN 1 ELSE 0 END AS BIGINT) AS g1,
-         |    CAST(CASE WHEN floor(a.c_acctbal / 1000.0) = floor(b.c_acctbal / 1000.0)
-         |         THEN 1 ELSE 0 END AS BIGINT) AS g2
+         |    $fsGammaSql
          |  $customerPairsSql)
          |SELECT g0, g1, g2, ka, kb, example_rank FROM (
          |  SELECT g0, g1, g2, ka, kb, row_number() OVER (
@@ -643,13 +630,7 @@ private[graft] object FellegiSunterGates {
            |  WHERE CAST($nibbles AS DOUBLE) / 4294967296.0 < CAST('0.25' AS DOUBLE)
            |), pairs AS (
            |  SELECT
-           |    CAST(CASE WHEN (CASE WHEN a.c_name = b.c_name THEN 1.0
-           |         ELSE jaro_winkler_similarity(a.c_name, b.c_name) END) >= 0.95
-           |         THEN 1 ELSE 0 END AS BIGINT) AS g0,
-           |    CAST(CASE WHEN a.c_mktsegment = b.c_mktsegment
-           |         THEN 1 ELSE 0 END AS BIGINT) AS g1,
-           |    CAST(CASE WHEN floor(a.c_acctbal / 1000.0) = floor(b.c_acctbal / 1000.0)
-           |         THEN 1 ELSE 0 END AS BIGINT) AS g2
+           |    $fsGammaSql
            |  FROM samp a JOIN samp b ON a.c_custkey < b.c_custkey
            |)
            |${uRow("g0")} UNION ALL ${uRow("g1")} UNION ALL ${uRow("g2")}""".stripMargin
@@ -673,13 +654,7 @@ private[graft] object FellegiSunterGates {
       }.mkString("\nUNION ALL\n")
       s"""WITH pairs AS (
          |  SELECT
-         |    CAST(CASE WHEN (CASE WHEN a.c_name = b.c_name THEN 1.0
-         |         ELSE jaro_winkler_similarity(a.c_name, b.c_name) END) >= 0.95
-         |         THEN 1 ELSE 0 END AS BIGINT) AS g0,
-         |    CAST(CASE WHEN a.c_mktsegment = b.c_mktsegment
-         |         THEN 1 ELSE 0 END AS BIGINT) AS g1,
-         |    CAST(CASE WHEN floor(a.c_acctbal / 1000.0) = floor(b.c_acctbal / 1000.0)
-         |         THEN 1 ELSE 0 END AS BIGINT) AS g2,
+         |    $fsGammaSql,
          |    CAST(CASE WHEN right(a.c_name, 3) = right(b.c_name, 3)
          |         THEN 1 ELSE 0 END AS BIGINT) AS t
          |  $customerPairsSql
@@ -996,14 +971,7 @@ private[graft] object FellegiSunterGates {
     // pre-pass a production linkage runs before probabilistic scoring.
     // One when-chain projection; the oracle replays the identical CASE.
     Gate("q_rule_cascade", (s, dir) => {
-      val c = spread(s.read.parquet(s"$dir/customer.parquet"))
-      val a = c.select(col("c_custkey").as("ka"), col("c_name").as("na"),
-        col("c_mktsegment").as("sa"), col("c_acctbal").as("aa"),
-        col("c_nationkey").as("nk"))
-      val b = c.select(col("c_custkey").as("kb"), col("c_name").as("nb"),
-        col("c_mktsegment").as("sb"), col("c_acctbal").as("ab"),
-        col("c_nationkey").as("nk"))
-      val pairs = a.join(b, "nk").where(col("ka") < col("kb"))
+      val pairs = fsCustomerPairs(s, dir)
       val jw = jaro_winkler_sim(col("na"), col("nb"))
       graft.operators.Linkage.ruleCascade(pairs, Seq(
           "name_sfx3" -> (substring(col("na"), -3, 3) ===
@@ -1053,7 +1021,7 @@ private[graft] object FellegiSunterGates {
     // u1 / tf(segment). The oracle replays the EM AND the tf join.
     Gate("q_fellegi_sunter_tf", (s, dir) => {
       // the model fit and the scoring pass both read the pairs
-      val pairs = Frames.shared(fsGammaPairs(s, dir, withSeg = true))
+      val pairs = Frames.shared(fsGammaPairs(s, dir, col("sa").as("seg_a")))
       val model = graft.operators.FellegiSunter.fit(pairs, fsGammas, iters = 15)
       val tf = graft.operators.FellegiSunter.termFrequencies(
         s.read.parquet(s"$dir/customer.parquet"), "c_mktsegment")

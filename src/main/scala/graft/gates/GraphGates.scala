@@ -29,6 +29,33 @@ private[graft] object GraphGates {
     (asg, edges)
   }
 
+  /** SQL mirror of [[matchGraph]], opening the oracle's `WITH` list:
+    * `pairs`, `asg` (id → cluster `g`), the normalized edge set (named
+    * `edges`) and its same-cluster subset `intra`, which carries `au.g`
+    * when `withG`. */
+  private def matchGraphSql(recursive: Boolean = false,
+      withG: Boolean = false, minSim: Double = 0.94,
+      edges: String = "e"): String =
+    s"""WITH ${if (recursive) "RECURSIVE " else ""}pairs AS (
+      |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
+      |  FROM customer a JOIN customer b
+      |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
+      |  WHERE a.c_name <> b.c_name
+      |    AND ${levSimSql("a.c_name", "b.c_name")} >= $minSim
+      |), asg AS (
+      |  SELECT c_custkey AS id,
+      |         c_mktsegment || ':' || CAST(c_nationkey AS VARCHAR) AS g
+      |  FROM customer
+      |), $edges AS (
+      |  SELECT DISTINCT least(ka, kb) AS u, greatest(ka, kb) AS v
+      |  FROM pairs WHERE ka <> kb
+      |), intra AS (
+      |  SELECT $edges.u, $edges.v${if (withG) ", au.g" else ""} FROM $edges
+      |  JOIN asg au ON $edges.u = au.id
+      |  JOIN asg av ON $edges.v = av.id
+      |  WHERE au.g = av.g
+      |)""".stripMargin
+
   val all: Seq[Gate] = Seq(
     // label-free dual-system recall estimation: the SAME 0.94 matcher
     // run over two evidence-disjoint blockings (nation key vs a
@@ -53,25 +80,10 @@ private[graft] object GraphGates {
     },
       // tier-blind brute force over the distinct bipartite edge set; the
       // jaccard denominator in long before the one double division.
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT DISTINCT o.o_custkey AS id, l.l_partkey AS nb
         |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |), deg AS (
-        |  SELECT id, count(*) AS d FROM e GROUP BY id
-        |), pr AS (
-        |  SELECT a.id AS url_a, b.id AS url_b,
-        |         CAST(count(*) AS BIGINT) AS common_neighbors
-        |  FROM e a JOIN e b ON a.nb = b.nb AND a.id < b.id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT p.url_a, p.url_b, p.common_neighbors,
-        |  CAST(p.common_neighbors AS DOUBLE)
-        |    / CAST(da.d + db.d - p.common_neighbors AS DOUBLE)
-        |    AS neighborhood_jaccard
-        |FROM pr p
-        |JOIN deg da ON p.url_a = da.id
-        |JOIN deg db ON p.url_b = db.id
-        |WHERE p.common_neighbors >= 3""".stripMargin),
+        |), ${commonNeighborsSql(3)}""".stripMargin),
 
     Gate("q_capture_recapture", (s, dir) => {
       val c = spread(s.read.parquet(s"$dir/customer.parquet"))
@@ -160,16 +172,7 @@ private[graft] object GraphGates {
         |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
         |  WHERE a.c_name <> b.c_name
         |    AND ${levSimSql("a.c_name", "b.c_name")} >= 0.94
-        |), edges AS (
-        |  SELECT ka AS u, kb AS v FROM pairs
-        |  UNION ALL SELECT kb, ka FROM pairs
-        |), nodes AS (
-        |  SELECT DISTINCT u AS id FROM edges
-        |), walk(id, r) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT w.id, e.v FROM walk w JOIN edges e ON w.r = e.u
-        |), comp AS (
+        |), $componentWalkCtes, comp AS (
         |  SELECT id, min(r) AS component FROM walk GROUP BY id
         |), intra AS (
         |  SELECT ca.component AS component, p.ka, p.kb, p.s
@@ -230,16 +233,7 @@ private[graft] object GraphGates {
         |    AND ${levSimSql("a.c_name", "b.c_name")} >= 0.88
         |), pairs AS (
         |  SELECT ka, kb FROM scored WHERE s >= 0.94
-        |), edges AS (
-        |  SELECT ka AS u, kb AS v FROM pairs
-        |  UNION ALL SELECT kb, ka FROM pairs
-        |), nodes AS (
-        |  SELECT DISTINCT u AS id FROM edges
-        |), walk(id, r) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT w.id, e.v FROM walk w JOIN edges e ON w.r = e.u
-        |), comp0 AS (
+        |), $componentWalkCtes, comp0 AS (
         |  SELECT id, min(r) AS component FROM walk GROUP BY id
         |), comp AS (
         |  SELECT c.c_custkey AS id,
@@ -281,25 +275,7 @@ private[graft] object GraphGates {
       // graph QA: normalize edges (least/greatest + distinct), keep only
       // same-cluster edges, degree = endpoint-exploded count, edgeless
       // records coalesce to 0.
-      s"""WITH pairs AS (
-        |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_name <> b.c_name
-        |    AND ${levSimSql("a.c_name", "b.c_name")} >= 0.94
-        |), asg AS (
-        |  SELECT c_custkey AS id,
-        |         c_mktsegment || ':' || CAST(c_nationkey AS VARCHAR) AS g
-        |  FROM customer
-        |), e AS (
-        |  SELECT DISTINCT least(ka, kb) AS u, greatest(ka, kb) AS v
-        |  FROM pairs WHERE ka <> kb
-        |), intra AS (
-        |  SELECT e.u, e.v FROM e
-        |  JOIN asg au ON e.u = au.id
-        |  JOIN asg av ON e.v = av.id
-        |  WHERE au.g = av.g
-        |), deg AS (
+      s"""${matchGraphSql()}, deg AS (
         |  SELECT id, CAST(count(*) AS BIGINT) AS d
         |  FROM (SELECT u AS id FROM intra UNION ALL SELECT v FROM intra)
         |  GROUP BY id
@@ -317,25 +293,7 @@ private[graft] object GraphGates {
     },
       // same graph, cluster level: Σdeg = 2E folds per cluster; density
       // and centralisation mirror the Scala's pinned all-double order.
-      s"""WITH pairs AS (
-        |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_name <> b.c_name
-        |    AND ${levSimSql("a.c_name", "b.c_name")} >= 0.94
-        |), asg AS (
-        |  SELECT c_custkey AS id,
-        |         c_mktsegment || ':' || CAST(c_nationkey AS VARCHAR) AS g
-        |  FROM customer
-        |), e AS (
-        |  SELECT DISTINCT least(ka, kb) AS u, greatest(ka, kb) AS v
-        |  FROM pairs WHERE ka <> kb
-        |), intra AS (
-        |  SELECT e.u, e.v FROM e
-        |  JOIN asg au ON e.u = au.id
-        |  JOIN asg av ON e.v = av.id
-        |  WHERE au.g = av.g
-        |), deg AS (
+      s"""${matchGraphSql()}, deg AS (
         |  SELECT id, CAST(count(*) AS BIGINT) AS d
         |  FROM (SELECT u AS id FROM intra UNION ALL SELECT v FROM intra)
         |  GROUP BY id
@@ -368,25 +326,7 @@ private[graft] object GraphGates {
       // bridges: per excluded edge, a recursive reachability walk over the
       // remaining intra edges; the edge is a bridge iff its far endpoint
       // never appears in its own walk.
-      s"""WITH RECURSIVE pairs AS (
-        |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_name <> b.c_name
-        |    AND ${levSimSql("a.c_name", "b.c_name")} >= 0.94
-        |), asg AS (
-        |  SELECT c_custkey AS id,
-        |         c_mktsegment || ':' || CAST(c_nationkey AS VARCHAR) AS g
-        |  FROM customer
-        |), e AS (
-        |  SELECT DISTINCT least(ka, kb) AS u, greatest(ka, kb) AS v
-        |  FROM pairs WHERE ka <> kb
-        |), intra AS (
-        |  SELECT e.u, e.v, au.g FROM e
-        |  JOIN asg au ON e.u = au.id
-        |  JOIN asg av ON e.v = av.id
-        |  WHERE au.g = av.g
-        |), walk(xu, xv, node) AS (
+      s"""${matchGraphSql(recursive = true, withG = true)}, walk(xu, xv, node) AS (
         |  SELECT u, v, u FROM intra
         |  UNION
         |  SELECT w.xu, w.xv,
@@ -408,25 +348,7 @@ private[graft] object GraphGates {
     },
       // articulation: per edge-incident record x, walk from its smallest
       // neighbor avoiding x; x cuts iff some neighbor stays unreached.
-      s"""WITH RECURSIVE pairs AS (
-        |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_name <> b.c_name
-        |    AND ${levSimSql("a.c_name", "b.c_name")} >= 0.94
-        |), asg AS (
-        |  SELECT c_custkey AS id,
-        |         c_mktsegment || ':' || CAST(c_nationkey AS VARCHAR) AS g
-        |  FROM customer
-        |), e AS (
-        |  SELECT DISTINCT least(ka, kb) AS u, greatest(ka, kb) AS v
-        |  FROM pairs WHERE ka <> kb
-        |), intra AS (
-        |  SELECT e.u, e.v, au.g FROM e
-        |  JOIN asg au ON e.u = au.id
-        |  JOIN asg av ON e.v = av.id
-        |  WHERE au.g = av.g
-        |), nbr AS (
+      s"""${matchGraphSql(recursive = true, withG = true)}, nbr AS (
         |  SELECT u AS x, v AS n FROM intra UNION SELECT v, u FROM intra
         |), seed AS (
         |  SELECT x, min(n) AS n0 FROM nbr GROUP BY x
@@ -505,25 +427,7 @@ private[graft] object GraphGates {
       // triangles: u<v<w three-way self-join over the normalized intra
       // edges (each undirected triangle appears exactly once), wedges as
       // Σ d(d−1)/2 per cluster, the same pinned 3T/W division.
-      s"""WITH pairs AS (
-        |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_name <> b.c_name
-        |    AND ${levSimSql("a.c_name", "b.c_name")} >= 0.94
-        |), asg AS (
-        |  SELECT c_custkey AS id,
-        |         c_mktsegment || ':' || CAST(c_nationkey AS VARCHAR) AS g
-        |  FROM customer
-        |), e AS (
-        |  SELECT DISTINCT least(ka, kb) AS u, greatest(ka, kb) AS v
-        |  FROM pairs WHERE ka <> kb
-        |), intra AS (
-        |  SELECT e.u, e.v, au.g FROM e
-        |  JOIN asg au ON e.u = au.id
-        |  JOIN asg av ON e.v = av.id
-        |  WHERE au.g = av.g
-        |), deg AS (
+      s"""${matchGraphSql(withG = true)}, deg AS (
         |  SELECT id, CAST(count(*) AS BIGINT) AS d
         |  FROM (SELECT u AS id FROM intra UNION ALL SELECT v FROM intra)
         |  GROUP BY id
@@ -563,25 +467,7 @@ private[graft] object GraphGates {
       val (asg, edges) = matchGraph(s, dir)
       graft.operators.Evaluation.coreNumbers(asg, edges)
     },
-      s"""WITH RECURSIVE pairs AS (
-        |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_name <> b.c_name
-        |    AND ${levSimSql("a.c_name", "b.c_name")} >= 0.94
-        |), asg AS (
-        |  SELECT c_custkey AS id,
-        |         c_mktsegment || ':' || CAST(c_nationkey AS VARCHAR) AS g
-        |  FROM customer
-        |), e AS (
-        |  SELECT DISTINCT least(ka, kb) AS u, greatest(ka, kb) AS v
-        |  FROM pairs WHERE ka <> kb
-        |), intra AS (
-        |  SELECT e.u, e.v FROM e
-        |  JOIN asg au ON e.u = au.id
-        |  JOIN asg av ON e.v = av.id
-        |  WHERE au.g = av.g
-        |), b AS (
+      s"""${matchGraphSql(recursive = true)}, b AS (
         |  SELECT u, v FROM intra UNION ALL SELECT v, u FROM intra
         |), deg AS (
         |  SELECT u AS id, CAST(count(*) AS BIGINT) AS h FROM b GROUP BY u
@@ -636,25 +522,7 @@ private[graft] object GraphGates {
       // nothing, so max(iter) then names the unpeeled round: the final
       // support >= k-2 filter drops nothing at a non-empty fixpoint and
       // every row in that case.
-      s"""WITH RECURSIVE pairs AS (
-        |  SELECT a.c_custkey AS ka, b.c_custkey AS kb
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |  WHERE a.c_name <> b.c_name
-        |    AND ${levSimSql("a.c_name", "b.c_name")} >= 0.92
-        |), asg AS (
-        |  SELECT c_custkey AS id,
-        |         c_mktsegment || ':' || CAST(c_nationkey AS VARCHAR) AS g
-        |  FROM customer
-        |), e0 AS (
-        |  SELECT DISTINCT least(ka, kb) AS u, greatest(ka, kb) AS v
-        |  FROM pairs WHERE ka <> kb
-        |), intra AS (
-        |  SELECT e0.u, e0.v FROM e0
-        |  JOIN asg au ON e0.u = au.id
-        |  JOIN asg av ON e0.v = av.id
-        |  WHERE au.g = av.g
-        |), es(iter, u, v) AS (
+      s"""${matchGraphSql(recursive = true, minSim = 0.92, edges = "e0")}, es(iter, u, v) AS (
         |  SELECT 0, u, v FROM intra
         |  UNION ALL
         |  SELECT * FROM (

@@ -1,7 +1,7 @@
 package graft
 package gates
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry._
@@ -16,6 +16,95 @@ private[graft] object KernelGates {
   private val partPairsSql =
     """FROM part a JOIN part b
       | ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey""".stripMargin
+
+  /** The brand-blocked part pairs as the opening CTE of an oracle:
+    * `WITH [RECURSIVE] pairs (ka, kb, na, nb)`, with `filter` (an `AND`
+    * or `WHERE` clause) as a last line when given. */
+  private def partPairsCte(recursive: Boolean = false,
+      filter: String = ""): String = {
+    val last = if (filter.isEmpty) "" else s"\n  $filter"
+    s"""WITH ${if (recursive) "RECURSIVE " else ""}pairs AS (
+       |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
+       |         a.p_name AS na, b.p_name AS nb
+       |  $partPairsSql$last
+       |)""".stripMargin
+  }
+
+  /** The [[partPairsCte]] filter keeping the pairs with ka ≡ 0 (mod `a`)
+    * and kb ≡ 0 (mod `b`). */
+  private def partSample(a: Int, b: Int): String =
+    s"AND a.p_partkey % $a = 0 AND b.p_partkey % $b = 0"
+
+  /** [[partPairsCte]] (its `filter` passed on) and `exploded`, one row
+    * per char of each side with the side flags `ac`/`bc`. */
+  private def bagExplodedSql(filter: String = ""): String =
+    s"""${partPairsCte(filter = filter)}, exploded AS (
+       |  SELECT ka, kb, unnest(string_split(na, '')) AS ch, 1 AS ac, 0 AS bc FROM pairs
+       |  UNION ALL
+       |  SELECT ka, kb, unnest(string_split(nb, '')) AS ch, 0 AS ac, 1 AS bc FROM pairs
+       |)""".stripMargin
+
+  /** [[bagExplodedSql]] and `counts (ka, kb, ch, ca, cb)`, each char's
+    * count on each side of the pair. */
+  private def bagCountsSql(filter: String = ""): String =
+    s"""${bagExplodedSql(filter)}, counts AS (
+       |  SELECT ka, kb, ch, sum(ac) AS ca, sum(cb) AS cb
+       |  FROM (SELECT ka, kb, ch, ac, bc AS cb FROM exploded) GROUP BY ka, kb, ch
+       |)""".stripMargin
+
+  /** The DP gates' input: the nationkey-blocked customer pairs
+    * subsampled on both keys (ka % 17, kb % 5) to keep the oracle's
+    * per-cell recursion tractable. */
+  private def dpPairs(s: SparkSession, dir: String): DataFrame =
+    customerPairs(s, dir).where(col("ka") % 17 === 0 && col("kb") % 5 === 0)
+
+  /** SQL mirror of [[dpPairs]] as the opening CTEs of a DP oracle:
+    * `WITH RECURSIVE pairs (ka, kb, na, nb)` and `prep`, each unequal
+    * pair's code-point arrays `xa`, `xb` and lengths `n`, `m`
+    * (string_split(s, '') indexes by code point in DuckDB, matching the
+    * kernels' decode loop). */
+  private val dpPrepSql: String =
+    s"""WITH RECURSIVE pairs AS (
+       |  SELECT a.c_custkey AS ka, b.c_custkey AS kb,
+       |         a.c_name AS na, b.c_name AS nb
+       |  $customerPairsSql
+       |  AND a.c_custkey % 17 = 0 AND b.c_custkey % 5 = 0
+       |), prep AS (
+       |  SELECT ka, kb, string_split(na, '') AS xa, string_split(nb, '') AS xb,
+       |         length(na) AS n, length(nb) AS m
+       |  FROM pairs WHERE na <> nb
+       |)""".stripMargin
+
+  /** A one-matrix DP oracle over [[dpPrepSql]]: one cell per recursion
+    * step in row-major order u = i*(m+1)+j, with the last 2m+4 cells
+    * carried as a list; for cell u, nw[2m+4] = d[u-1] (left), nw[m+4] =
+    * d[u-(m+1)] (up), nw[m+3] = d[u-(m+2)] (diagonal) and nw[1] =
+    * d[u-(2m+4)] (the i-2, j-2 lookback). `cell` holds the `WHEN`/`ELSE`
+    * arms of cell u = t+1, `sim` the similarity of an unequal pair from
+    * its last cell `d.cell`; equal names score 1.0. */
+  private def windowDpSql(cell: String, sim: String): String =
+    s"""$dpPrepSql, dp AS (
+       |  SELECT ka, kb, xa, xb, n, m,
+       |         0 AS t, CAST(0 AS BIGINT) AS cell,
+       |         list_transform(range(1, 2*m + 5), k -> CAST(NULL AS BIGINT)) AS win
+       |  FROM prep
+       |  UNION ALL
+       |  SELECT ka, kb, xa, xb, n, m, t + 1 AS t,
+       |    CASE
+       |      $cell
+       |    END AS cell,
+       |    nw AS win
+       |  FROM (SELECT *, win[2:] || [cell] AS nw
+       |        FROM dp WHERE t < (n+1)*(m+1) - 1) q
+       |)
+       |SELECT p.ka, p.kb,
+       |  CASE WHEN p.na = p.nb THEN CAST(1.0 AS DOUBLE)
+       |       ELSE $sim
+       |  END AS sim
+       |FROM pairs p
+       |LEFT JOIN (SELECT ka, kb, cell FROM dp
+       |           WHERE t = (n+1)*(m+1) - 1) d
+       |  ON p.ka = d.ka AND p.kb = d.kb""".stripMargin
 
   /** Zobel-Dart letter-group bitmask of an upper-cased char `ch` (bound by
     * the enclosing DuckDB lambda) — groups overlap, mirroring
@@ -32,22 +121,26 @@ private[graft] object KernelGates {
       | + (CASE WHEN ch IN ('S','X','Z') THEN 256 ELSE 0 END)
       | + (CASE WHEN ch IN ('C','S','Z') THEN 512 ELSE 0 END))""".stripMargin
 
+  /** Oracle of the composite-score match pairs over [[bagCountsSql]]
+    * (its `filter` passed on): JW + bag Dice ≥ 1.75, equal names scoring
+    * 1.0 on each kernel. */
+  private def matchPairsSql(filter: String = ""): String =
+    s"""${bagCountsSql(filter)}, sums AS (
+       |  SELECT ka, kb, sum(least(ca, cb)) AS inter, sum(ca) + sum(cb) AS total
+       |  FROM counts GROUP BY ka, kb
+       |)
+       |SELECT p.ka, p.kb
+       |FROM pairs p JOIN sums s ON p.ka = s.ka AND p.kb = s.kb
+       |WHERE (CASE WHEN p.na = p.nb THEN 1.0
+       |            ELSE jaro_winkler_similarity(p.na, p.nb) END
+       |     + CASE WHEN p.na = p.nb THEN 1.0
+       |            ELSE 2.0 * CAST(s.inter AS DOUBLE) / s.total END) >= 1.75""".stripMargin
+
   /** Multiset (bag-of-chars) similarity oracle: explode both strings to
     * per-char counts, then Σmin / Σmax (jaccard) or 2Σmin / (|a|+|b|)
     * (dice). Matches reference strsim.rs:286-344 semantics relationally. */
   private def bagSimSql(simExpr: String): String =
-    s"""WITH pairs AS (
-       |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-       |         a.p_name AS na, b.p_name AS nb
-       |  $partPairsSql
-       |), exploded AS (
-       |  SELECT ka, kb, unnest(string_split(na, '')) AS ch, 1 AS ac, 0 AS bc FROM pairs
-       |  UNION ALL
-       |  SELECT ka, kb, unnest(string_split(nb, '')) AS ch, 0 AS ac, 1 AS bc FROM pairs
-       |), counts AS (
-       |  SELECT ka, kb, ch, sum(ac) AS ca, sum(cb) AS cb
-       |  FROM (SELECT ka, kb, ch, ac, bc AS cb FROM exploded) GROUP BY ka, kb, ch
-       |), sums AS (
+    s"""${bagCountsSql()}, sums AS (
        |  SELECT ka, kb, sum(least(ca, cb)) AS inter,
        |         sum(greatest(ca, cb)) AS uni, sum(ca) + sum(cb) AS total
        |  FROM counts GROUP BY ka, kb
@@ -187,12 +280,7 @@ private[graft] object KernelGates {
       // (sa = sb = '', so it never recurses). M = sum of tombstone masses
       // per pair; sim = 2·M/(n+m) with the kernel's multiply-then-divide
       // IEEE order.
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |  AND a.p_partkey % 41 = 0 AND b.p_partkey % 13 = 0
-         |), seg(ka, kb, sid, sa, sb, mlen) AS (
+      s"""${partPairsCte(recursive = true, filter = partSample(41, 13))}, seg(ka, kb, sid, sa, sb, mlen) AS (
          |  SELECT ka, kb, CAST(1 AS BIGINT), na, nb, 0
          |  FROM pairs WHERE na <> nb AND length(na) > 0 AND length(nb) > 0
          |  UNION ALL
@@ -253,12 +341,7 @@ private[graft] object KernelGates {
       // roMatchMass's caller); the final ratio is max(mass)/patlen — the
       // kernel's pinned best.toDouble / sLen.toDouble (IEEE-equal to the
       // per-window 2M/(S+S)).
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |  AND a.p_partkey % 41 = 0 AND b.p_partkey % 26 = 0
-         |), sides AS (
+      s"""${partPairsCte(recursive = true, filter = partSample(41, 26))}, sides AS (
          |  SELECT ka, kb, na, nb,
          |    CASE WHEN length(na) <= length(nb) THEN na ELSE nb END AS pat,
          |    CASE WHEN length(na) <= length(nb) THEN nb ELSE na END AS txt
@@ -335,18 +418,7 @@ private[graft] object KernelGates {
       // bag distance (integer face) + bag_within at k=4: same relational
       // bag; bagdist = max(|a|,|b|) − Σmin (the Bartolini collapse the
       // kernel uses), byte-equal pairs short-circuit to 0/true.
-      s"""WITH pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |), exploded AS (
-         |  SELECT ka, kb, unnest(string_split(na, '')) AS ch, 1 AS ac, 0 AS bc FROM pairs
-         |  UNION ALL
-         |  SELECT ka, kb, unnest(string_split(nb, '')) AS ch, 0 AS ac, 1 AS bc FROM pairs
-         |), counts AS (
-         |  SELECT ka, kb, ch, sum(ac) AS ca, sum(cb) AS cb
-         |  FROM (SELECT ka, kb, ch, ac, bc AS cb FROM exploded) GROUP BY ka, kb, ch
-         |), sums AS (
+      s"""${bagCountsSql()}, sums AS (
          |  SELECT ka, kb, sum(least(ca, cb)) AS inter FROM counts GROUP BY ka, kb
          |)
          |SELECT p.ka, p.kb,
@@ -381,11 +453,7 @@ private[graft] object KernelGates {
     // ORDERED list_reduce left fold matching the kernel's IEEE sum order.
     Gate("q_monge_elkan", (s, dir) => partPairs(s, dir)
       .select(col("ka"), col("kb"), monge_elkan_jw(col("na"), col("nb")).as("me")),
-      s"""WITH pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |), strs AS (
+      s"""${partPairsCte()}, strs AS (
          |  SELECT ka, kb,
          |    list_filter(string_split_regex(na, '[ \\t\\n\\x0b\\f\\r]+'),
          |      t -> len(t) > 0) AS toks_a,
@@ -427,15 +495,7 @@ private[graft] object KernelGates {
       // integer-exact; the final div/sqrt/mul chain mirrors the kernels'
       // pinned IEEE order (literals CAST to DOUBLE — bare decimals would run
       // the chain in DECIMAL arithmetic and drift an ulp).
-      s"""WITH pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |), exploded AS (
-         |  SELECT ka, kb, unnest(string_split(na, '')) AS ch, 1 AS ac, 0 AS bc FROM pairs
-         |  UNION ALL
-         |  SELECT ka, kb, unnest(string_split(nb, '')) AS ch, 0 AS ac, 1 AS bc FROM pairs
-         |), counts AS (
+      s"""${bagExplodedSql()}, counts AS (
          |  SELECT ka, kb, ch, sum(ac) AS ca, sum(bc) AS cb
          |  FROM exploded GROUP BY ka, kb, ch
          |), sums AS (
@@ -471,8 +531,7 @@ private[graft] object KernelGates {
     // BOTH keys (ka % 17, kb % 5) to keep the per-cell recursion tractable
     // in the oracle at sf0.1 too — measured 206 s for the ka-only subsample
     // (265k pairs × ~361 cells) vs ~40 s and ~53k pairs with both.
-    Gate("q_osa_sim", (s, dir) => customerPairs(s, dir)
-      .where(col("ka") % 17 === 0 && col("kb") % 5 === 0)
+    Gate("q_osa_sim", (s, dir) => dpPairs(s, dir)
       .select(col("ka"), col("kb"), osa_sim(col("na"), col("nb")).as("sim")),
       // OSA: no DuckDB builtin (damerau_levenshtein there is unrestricted),
       // so the oracle replays the FULL restricted DP as a recursive CTE —
@@ -482,48 +541,20 @@ private[graft] object KernelGates {
       // win[m+3] = d[t-(m+2)] (substitution diagonal), win[1] = d[t-(2m+4)]
       // (the i-2,j-2 transposition lookback). string_split(s,'') indexes by
       // CODE POINT in DuckDB, matching the kernel's decode loop.
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT a.c_custkey AS ka, b.c_custkey AS kb,
-         |         a.c_name AS na, b.c_name AS nb
-         |  $customerPairsSql
-         |  AND a.c_custkey % 17 = 0 AND b.c_custkey % 5 = 0
-         |), prep AS (
-         |  SELECT ka, kb, string_split(na, '') AS xa, string_split(nb, '') AS xb,
-         |         length(na) AS n, length(nb) AS m
-         |  FROM pairs WHERE na <> nb
-         |), dp AS (
-         |  SELECT ka, kb, xa, xb, n, m,
-         |         0 AS t, CAST(0 AS BIGINT) AS cell,
-         |         list_transform(range(1, 2*m + 5), k -> CAST(NULL AS BIGINT)) AS win
-         |  FROM prep
-         |  UNION ALL
-         |  SELECT ka, kb, xa, xb, n, m, t + 1 AS t,
-         |    CASE
-         |      WHEN (t+1) % (m+1) = 0 THEN CAST((t+1) // (m+1) AS BIGINT)
-         |      WHEN (t+1) // (m+1) = 0 THEN CAST((t+1) % (m+1) AS BIGINT)
-         |      ELSE least(
-         |        nw[m+4] + 1,
-         |        nw[2*m+4] + 1,
-         |        nw[m+3] + (CASE WHEN xa[(t+1)//(m+1)] = xb[(t+1)%(m+1)]
-         |                        THEN 0 ELSE 1 END),
-         |        CASE WHEN (t+1)//(m+1) > 1 AND (t+1)%(m+1) > 1
-         |              AND xa[(t+1)//(m+1)] = xb[(t+1)%(m+1) - 1]
-         |              AND xa[(t+1)//(m+1) - 1] = xb[(t+1)%(m+1)]
-         |             THEN nw[1] + 1 ELSE NULL END)
-         |    END AS cell,
-         |    nw AS win
-         |  FROM (SELECT *, win[2:] || [cell] AS nw
-         |        FROM dp WHERE t < (n+1)*(m+1) - 1) q
-         |)
-         |SELECT p.ka, p.kb,
-         |  CASE WHEN p.na = p.nb THEN CAST(1.0 AS DOUBLE)
-         |       ELSE CAST(1.0 AS DOUBLE) - CAST(d.cell AS DOUBLE) /
-         |            CAST(greatest(length(p.na), length(p.nb)) AS DOUBLE)
-         |  END AS sim
-         |FROM pairs p
-         |LEFT JOIN (SELECT ka, kb, cell FROM dp
-         |           WHERE t = (n+1)*(m+1) - 1) d
-         |  ON p.ka = d.ka AND p.kb = d.kb""".stripMargin),
+      windowDpSql(
+        """WHEN (t+1) % (m+1) = 0 THEN CAST((t+1) // (m+1) AS BIGINT)
+          |      WHEN (t+1) // (m+1) = 0 THEN CAST((t+1) % (m+1) AS BIGINT)
+          |      ELSE least(
+          |        nw[m+4] + 1,
+          |        nw[2*m+4] + 1,
+          |        nw[m+3] + (CASE WHEN xa[(t+1)//(m+1)] = xb[(t+1)%(m+1)]
+          |                        THEN 0 ELSE 1 END),
+          |        CASE WHEN (t+1)//(m+1) > 1 AND (t+1)%(m+1) > 1
+          |              AND xa[(t+1)//(m+1)] = xb[(t+1)%(m+1) - 1]
+          |              AND xa[(t+1)//(m+1) - 1] = xb[(t+1)%(m+1)]
+          |             THEN nw[1] + 1 ELSE NULL END)""".stripMargin,
+        """CAST(1.0 AS DOUBLE) - CAST(d.cell AS DOUBLE) /
+          |            CAST(greatest(length(p.na), length(p.nb)) AS DOUBLE)""".stripMargin)),
 
     // Alignment family: LCS, Needleman-Wunsch (+1/−1/−1 global),
     // and Smith-Waterman (local, floored) similarities — DuckDB has no
@@ -532,109 +563,41 @@ private[graft] object KernelGates {
     // technique (SW additionally threads the running max through the
     // recursion — the answer is max over ALL cells, not the corner).
     // Same double-key subsample as q_osa_sim keeps the oracles tractable.
-    Gate("q_lcs_sim", (s, dir) => customerPairs(s, dir)
-      .where(col("ka") % 17 === 0 && col("kb") % 5 === 0)
+    Gate("q_lcs_sim", (s, dir) => dpPairs(s, dir)
       .select(col("ka"), col("kb"), lcs_sim(col("na"), col("nb")).as("sim")),
       // LCS: same cell-per-step recursion; borders 0, interior
       // diag+1 on match else max(up, left); sim = 2·L/(n+m).
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT a.c_custkey AS ka, b.c_custkey AS kb,
-         |         a.c_name AS na, b.c_name AS nb
-         |  $customerPairsSql
-         |  AND a.c_custkey % 17 = 0 AND b.c_custkey % 5 = 0
-         |), prep AS (
-         |  SELECT ka, kb, string_split(na, '') AS xa, string_split(nb, '') AS xb,
-         |         length(na) AS n, length(nb) AS m
-         |  FROM pairs WHERE na <> nb
-         |), dp AS (
-         |  SELECT ka, kb, xa, xb, n, m,
-         |         0 AS t, CAST(0 AS BIGINT) AS cell,
-         |         list_transform(range(1, 2*m + 5), k -> CAST(NULL AS BIGINT)) AS win
-         |  FROM prep
-         |  UNION ALL
-         |  SELECT ka, kb, xa, xb, n, m, t + 1 AS t,
-         |    CASE
-         |      WHEN (t+1) % (m+1) = 0 OR (t+1) // (m+1) = 0 THEN CAST(0 AS BIGINT)
-         |      WHEN xa[(t+1)//(m+1)] = xb[(t+1)%(m+1)] THEN nw[m+3] + 1
-         |      ELSE greatest(nw[m+4], nw[2*m+4])
-         |    END AS cell,
-         |    nw AS win
-         |  FROM (SELECT *, win[2:] || [cell] AS nw
-         |        FROM dp WHERE t < (n+1)*(m+1) - 1) q
-         |)
-         |SELECT p.ka, p.kb,
-         |  CASE WHEN p.na = p.nb THEN CAST(1.0 AS DOUBLE)
-         |       ELSE CAST(2.0 AS DOUBLE) * CAST(d.cell AS DOUBLE) /
-         |            CAST(length(p.na) + length(p.nb) AS DOUBLE)
-         |  END AS sim
-         |FROM pairs p
-         |LEFT JOIN (SELECT ka, kb, cell FROM dp
-         |           WHERE t = (n+1)*(m+1) - 1) d
-         |  ON p.ka = d.ka AND p.kb = d.kb""".stripMargin),
+      windowDpSql(
+        """WHEN (t+1) % (m+1) = 0 OR (t+1) // (m+1) = 0 THEN CAST(0 AS BIGINT)
+          |      WHEN xa[(t+1)//(m+1)] = xb[(t+1)%(m+1)] THEN nw[m+3] + 1
+          |      ELSE greatest(nw[m+4], nw[2*m+4])""".stripMargin,
+        """CAST(2.0 AS DOUBLE) * CAST(d.cell AS DOUBLE) /
+          |            CAST(length(p.na) + length(p.nb) AS DOUBLE)""".stripMargin)),
 
-    Gate("q_nw_sim", (s, dir) => customerPairs(s, dir)
-      .where(col("ka") % 17 === 0 && col("kb") % 5 === 0)
+    Gate("q_nw_sim", (s, dir) => dpPairs(s, dir)
       .select(col("ka"), col("kb"),
         needleman_wunsch_sim(col("na"), col("nb")).as("sim")),
       // Needleman-Wunsch: borders −i/−j, interior max(diag±1, up−1,
       // left−1); sim = 0.5 + S/(2·max(n,m)).
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT a.c_custkey AS ka, b.c_custkey AS kb,
-         |         a.c_name AS na, b.c_name AS nb
-         |  $customerPairsSql
-         |  AND a.c_custkey % 17 = 0 AND b.c_custkey % 5 = 0
-         |), prep AS (
-         |  SELECT ka, kb, string_split(na, '') AS xa, string_split(nb, '') AS xb,
-         |         length(na) AS n, length(nb) AS m
-         |  FROM pairs WHERE na <> nb
-         |), dp AS (
-         |  SELECT ka, kb, xa, xb, n, m,
-         |         0 AS t, CAST(0 AS BIGINT) AS cell,
-         |         list_transform(range(1, 2*m + 5), k -> CAST(NULL AS BIGINT)) AS win
-         |  FROM prep
-         |  UNION ALL
-         |  SELECT ka, kb, xa, xb, n, m, t + 1 AS t,
-         |    CASE
-         |      WHEN (t+1) % (m+1) = 0 THEN CAST(-((t+1) // (m+1)) AS BIGINT)
-         |      WHEN (t+1) // (m+1) = 0 THEN CAST(-((t+1) % (m+1)) AS BIGINT)
-         |      ELSE greatest(
-         |        nw[m+3] + (CASE WHEN xa[(t+1)//(m+1)] = xb[(t+1)%(m+1)]
-         |                        THEN 1 ELSE -1 END),
-         |        nw[m+4] - 1,
-         |        nw[2*m+4] - 1)
-         |    END AS cell,
-         |    nw AS win
-         |  FROM (SELECT *, win[2:] || [cell] AS nw
-         |        FROM dp WHERE t < (n+1)*(m+1) - 1) q
-         |)
-         |SELECT p.ka, p.kb,
-         |  CASE WHEN p.na = p.nb THEN CAST(1.0 AS DOUBLE)
-         |       ELSE CAST(0.5 AS DOUBLE) + CAST(d.cell AS DOUBLE) /
-         |            (CAST(2.0 AS DOUBLE) *
-         |             CAST(greatest(length(p.na), length(p.nb)) AS DOUBLE))
-         |  END AS sim
-         |FROM pairs p
-         |LEFT JOIN (SELECT ka, kb, cell FROM dp
-         |           WHERE t = (n+1)*(m+1) - 1) d
-         |  ON p.ka = d.ka AND p.kb = d.kb""".stripMargin),
+      windowDpSql(
+        """WHEN (t+1) % (m+1) = 0 THEN CAST(-((t+1) // (m+1)) AS BIGINT)
+          |      WHEN (t+1) // (m+1) = 0 THEN CAST(-((t+1) % (m+1)) AS BIGINT)
+          |      ELSE greatest(
+          |        nw[m+3] + (CASE WHEN xa[(t+1)//(m+1)] = xb[(t+1)%(m+1)]
+          |                        THEN 1 ELSE -1 END),
+          |        nw[m+4] - 1,
+          |        nw[2*m+4] - 1)""".stripMargin,
+        """CAST(0.5 AS DOUBLE) + CAST(d.cell AS DOUBLE) /
+          |            (CAST(2.0 AS DOUBLE) *
+          |             CAST(greatest(length(p.na), length(p.nb)) AS DOUBLE))""".stripMargin)),
 
-    Gate("q_sw_sim", (s, dir) => customerPairs(s, dir)
-      .where(col("ka") % 17 === 0 && col("kb") % 5 === 0)
+    Gate("q_sw_sim", (s, dir) => dpPairs(s, dir)
       .select(col("ka"), col("kb"),
         smith_waterman_sim(col("na"), col("nb")).as("sim")),
       // Smith-Waterman: borders 0, interior floored at 0, and the RUNNING
       // MAX threaded through the recursion (the answer is max over all
       // cells, not the corner); sim = H*/min(n,m).
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT a.c_custkey AS ka, b.c_custkey AS kb,
-         |         a.c_name AS na, b.c_name AS nb
-         |  $customerPairsSql
-         |  AND a.c_custkey % 17 = 0 AND b.c_custkey % 5 = 0
-         |), prep AS (
-         |  SELECT ka, kb, string_split(na, '') AS xa, string_split(nb, '') AS xb,
-         |         length(na) AS n, length(nb) AS m
-         |  FROM pairs WHERE na <> nb
-         |), dp AS (
+      s"""$dpPrepSql, dp AS (
          |  SELECT ka, kb, xa, xb, n, m,
          |         0 AS t, CAST(0 AS BIGINT) AS cell,
          |         CAST(0 AS BIGINT) AS best,
@@ -674,8 +637,7 @@ private[graft] object KernelGates {
     // full Gotoh recursion as a recursive CTE carrying THREE parallel
     // sliding windows (M/X/Y states), one cell-triple per step; all
     // arithmetic is the kernel's exact half-unit integers.
-    Gate("q_affine_gap_sim", (s, dir) => customerPairs(s, dir)
-      .where(col("ka") % 17 === 0 && col("kb") % 5 === 0)
+    Gate("q_affine_gap_sim", (s, dir) => dpPairs(s, dir)
       .select(col("ka"), col("kb"),
         affine_gap_sim(col("na"), col("nb")).as("sim")),
       // Affine gap (Gotoh): the full three-state recursion replayed with
@@ -684,16 +646,7 @@ private[graft] object KernelGates {
       // of length i in half-units), Y(0,j) = -(j+1), M off-origin = -inf
       // (-1e9 sentinel — never surfaces: best >= -2*max(n,m)). sim = 0.5 +
       // best/(4*max) in exact half-unit integers, matching the kernel.
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT a.c_custkey AS ka, b.c_custkey AS kb,
-         |         a.c_name AS na, b.c_name AS nb
-         |  $customerPairsSql
-         |  AND a.c_custkey % 17 = 0 AND b.c_custkey % 5 = 0
-         |), prep AS (
-         |  SELECT ka, kb, string_split(na, '') AS xa, string_split(nb, '') AS xb,
-         |         length(na) AS n, length(nb) AS m
-         |  FROM pairs WHERE na <> nb
-         |), dp AS (
+      s"""$dpPrepSql, dp AS (
          |  SELECT ka, kb, xa, xb, n, m,
          |         0 AS t,
          |         CAST(0 AS BIGINT) AS cm,
@@ -843,11 +796,7 @@ private[graft] object KernelGates {
       // Spark's array_intersect; except is list_filter + list_contains —
       // then DuckDB's levenshtein (ASCII p_name). The equality CASE mirrors
       // the kernel's byte-equal → 1.0 shortcut (and covers ""/"").
-      s"""WITH pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |), tok AS (
+      s"""${partPairsCte()}, tok AS (
          |  SELECT ka, kb,
          |    array_to_string(list_sort(string_split(trim(na), ' ')), ' ') AS sa,
          |    array_to_string(list_sort(string_split(trim(nb), ' ')), ' ') AS sb,
@@ -882,11 +831,7 @@ private[graft] object KernelGates {
         qgram_sim(col("na"), col("nb"), 2).as("sim")),
       // Q-gram (q=2): gram bags as ±1-weighted rows, profile L1 distance =
       // Σ|Σw| per pair; sim normalization mirrors the kernel's order.
-      s"""WITH pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |), gr AS (
+      s"""${partPairsCte()}, gr AS (
          |  SELECT ka, kb, substr(na, CAST(i AS INT), 2) AS g, 1 AS w
          |  FROM (SELECT ka, kb, na,
          |        unnest(range(1, length(na))) AS i FROM pairs)
@@ -917,11 +862,7 @@ private[graft] object KernelGates {
         token_overlap_sim(col("na"), col("nb")).as("tov")),
       // Token-level Jaccard / overlap: DuckDB list ops over distinct
       // space-split tokens (list_distinct(ta || tb) ≡ Spark array_union).
-      s"""WITH pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |), tok AS (
+      s"""${partPairsCte()}, tok AS (
          |  SELECT ka, kb,
          |    list_distinct(string_split(trim(na), ' ')) AS ta,
          |    list_distinct(string_split(trim(nb), ' ')) AS tb
@@ -954,12 +895,7 @@ private[graft] object KernelGates {
       // sliding-window recursion walks the (n+1)×(m+1) matrix one cell per
       // step. Case fold via upper() ≡ the kernel's ASCII fold on this
       // all-ASCII corpus.
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |  AND a.p_partkey % 41 = 0 AND b.p_partkey % 13 = 0
-         |), prep0 AS (
+      s"""${partPairsCte(recursive = true, filter = partSample(41, 13))}, prep0 AS (
          |  SELECT ka, kb,
          |    list_transform(string_split(upper(na), ''), ch ->
          |      unicode(ch) * 1024 + $editexMaskSql) AS ca,
@@ -1031,12 +967,7 @@ private[graft] object KernelGates {
       // Longest common substring: relational — every substring of the
       // SHORTER side (start × length double unnest), position() containment
       // in the longer, max length per pair; sim = best/max(n,m).
-      s"""WITH pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |  AND a.p_partkey % 17 = 0 AND b.p_partkey % 5 = 0
-         |), prep AS (
+      s"""${partPairsCte(filter = partSample(17, 5))}, prep AS (
          |  SELECT ka, kb,
          |         CASE WHEN length(na) <= length(nb) THEN na ELSE nb END AS s,
          |         CASE WHEN length(na) <= length(nb) THEN nb ELSE na END AS t
@@ -1232,27 +1163,7 @@ private[graft] object KernelGates {
           sorensen_dice_sim(col("na"), col("nb"))).as("score"))
       .where(col("score") >= 1.75)
       .select(col("ka"), col("kb")),
-      s"""WITH pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |), exploded AS (
-         |  SELECT ka, kb, unnest(string_split(na, '')) AS ch, 1 AS ac, 0 AS bc FROM pairs
-         |  UNION ALL
-         |  SELECT ka, kb, unnest(string_split(nb, '')) AS ch, 0 AS ac, 1 AS bc FROM pairs
-         |), counts AS (
-         |  SELECT ka, kb, ch, sum(ac) AS ca, sum(cb) AS cb
-         |  FROM (SELECT ka, kb, ch, ac, bc AS cb FROM exploded) GROUP BY ka, kb, ch
-         |), sums AS (
-         |  SELECT ka, kb, sum(least(ca, cb)) AS inter, sum(ca) + sum(cb) AS total
-         |  FROM counts GROUP BY ka, kb
-         |)
-         |SELECT p.ka, p.kb
-         |FROM pairs p JOIN sums s ON p.ka = s.ka AND p.kb = s.kb
-         |WHERE (CASE WHEN p.na = p.nb THEN 1.0
-         |            ELSE jaro_winkler_similarity(p.na, p.nb) END
-         |     + CASE WHEN p.na = p.nb THEN 1.0
-         |            ELSE 2.0 * CAST(s.inter AS DOUBLE) / s.total END) >= 1.75""".stripMargin),
+      matchPairsSql()),
 
     // levenshtein_within used for its stated purpose: a banded
     // O(k·len) admission filter BELOW the composite projection —
@@ -1271,28 +1182,7 @@ private[graft] object KernelGates {
         .where(col("score") >= 1.75)
         .select(col("url_a").as("ka"), col("url_b").as("kb"))
     },
-      s"""WITH pairs AS (
-         |  SELECT a.p_partkey AS ka, b.p_partkey AS kb,
-         |         a.p_name AS na, b.p_name AS nb
-         |  $partPairsSql
-         |  WHERE levenshtein(a.p_name, b.p_name) <= 8
-         |), exploded AS (
-         |  SELECT ka, kb, unnest(string_split(na, '')) AS ch, 1 AS ac, 0 AS bc FROM pairs
-         |  UNION ALL
-         |  SELECT ka, kb, unnest(string_split(nb, '')) AS ch, 0 AS ac, 1 AS bc FROM pairs
-         |), counts AS (
-         |  SELECT ka, kb, ch, sum(ac) AS ca, sum(cb) AS cb
-         |  FROM (SELECT ka, kb, ch, ac, bc AS cb FROM exploded) GROUP BY ka, kb, ch
-         |), sums AS (
-         |  SELECT ka, kb, sum(least(ca, cb)) AS inter, sum(ca) + sum(cb) AS total
-         |  FROM counts GROUP BY ka, kb
-         |)
-         |SELECT p.ka, p.kb
-         |FROM pairs p JOIN sums s ON p.ka = s.ka AND p.kb = s.kb
-         |WHERE (CASE WHEN p.na = p.nb THEN 1.0
-         |            ELSE jaro_winkler_similarity(p.na, p.nb) END
-         |     + CASE WHEN p.na = p.nb THEN 1.0
-         |            ELSE 2.0 * CAST(s.inter AS DOUBLE) / s.total END) >= 1.75""".stripMargin),
+      matchPairsSql(filter = "WHERE levenshtein(a.p_name, b.p_name) <= 8")),
 
     // Febrl-style deterministic error injection: sha256(id:seed) nibble
     // ranges drive every choice (duplicate?, op, position, replacement

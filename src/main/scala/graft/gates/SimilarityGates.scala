@@ -11,6 +11,17 @@ import graft.functions._
   * dedup. */
 private[graft] object SimilarityGates {
 
+  /** The top-3 tail of the ANN oracles over a `(vec_id, neighbor_id,
+    * cos)` CTE named `from`: ranked by cosine descending, ties to the
+    * smaller neighbor id. */
+  private def top3Sql(from: String): String =
+    s"""ranked AS (
+       |  SELECT vec_id, neighbor_id, cos,
+       |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id ASC) AS rank
+       |  FROM $from
+       |)
+       |SELECT vec_id, neighbor_id, rank, cos FROM ranked WHERE rank <= 3""".stripMargin
+
   /** DuckDB cosine over two 64-dim float list columns — the same strict
     * left folds as the fused CosineSim kernel (pattern proven bit-exact by
     * q_ann_bruteforce). */
@@ -22,18 +33,13 @@ private[graft] object SimilarityGates {
   /** Exact cosine top-3 (the q_ann_bruteforce oracle, factored so
     * q_ann_recall can compose it with the LSH derivation). */
   private val oracleSqlBruteForce: String =
-    """WITH pairs AS (
+    s"""WITH pairs AS (
       |  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
       |    list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
       |    / (sqrt(list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
       |       * sqrt(list_sum(list_transform(range(1, 65), i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))) AS cos
       |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-      |), ranked AS (
-      |  SELECT vec_id, neighbor_id, cos,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-      |  FROM pairs
-      |)
-      |SELECT vec_id, neighbor_id, rank, cos FROM ranked WHERE rank <= 3""".stripMargin
+      |), ${top3Sql("pairs")}""".stripMargin
 
   private def annLshOracle: String = {
     val planes = graft.operators.Similarity.hyperplanes(64, 4, 6, 42L)
@@ -64,12 +70,7 @@ private[graft] object SimilarityGates {
        |    ${cosSql("ea.embedding", "eb.embedding")} AS cos
        |  FROM cand c JOIN embeddings ea ON c.vec_id = ea.vec_id
        |              JOIN embeddings eb ON c.neighbor_id = eb.vec_id
-       |), ranked AS (
-       |  SELECT vec_id, neighbor_id, cos,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-       |  FROM scored
-       |)
-       |SELECT vec_id, neighbor_id, rank, cos FROM ranked WHERE rank <= 3""".stripMargin
+       |), ${top3Sql("scored")}""".stripMargin
   }
 
   private def annIvfOracle: String =
@@ -99,12 +100,7 @@ private[graft] object SimilarityGates {
        |  FROM probes p JOIN assigned a ON p.cid = a.cid AND p.vec_id <> a.neighbor_id
        |  JOIN embeddings ea ON ea.vec_id = p.vec_id
        |  JOIN embeddings eb ON eb.vec_id = a.neighbor_id
-       |), ranked AS (
-       |  SELECT vec_id, neighbor_id, cos,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-       |  FROM scored
-       |)
-       |SELECT vec_id, neighbor_id, rank, cos FROM ranked WHERE rank <= 3""".stripMargin
+       |), ${top3Sql("scored")}""".stripMargin
 
   val all: Seq[Gate] = Seq(
     // brute-force cosine top-k (exact ANN baseline)
@@ -209,12 +205,7 @@ private[graft] object SimilarityGates {
            |    ${cosSql("ea.embedding", "eb.embedding")} AS cos
            |  FROM cand c JOIN embeddings ea ON c.vec_id = ea.vec_id
            |              JOIN embeddings eb ON c.neighbor_id = eb.vec_id
-           |), ranked AS (
-           |  SELECT vec_id, neighbor_id, cos,
-           |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-           |  FROM scored
-           |)
-           |SELECT vec_id, neighbor_id, rank, cos FROM ranked WHERE rank <= 3""".stripMargin
+           |), ${top3Sql("scored")}""".stripMargin
       }),
 
     // Reciprocal-rank fusion (Cormack et al. SIGIR'09): two directed

@@ -180,14 +180,13 @@ object Dedup {
       bucketCap: Int, tau: Double): Capped = {
     // `banded` feeds the sizing aggregate AND the join-back
     val bandedM = Frames.shared(banded)
-    // `base` feeds BOTH sides of the verification join
-    val baseM = Frames.shared(base)
-    // hardCap = bucketCap: the cold tier only
+    // hardCap = bucketCap: the cold tier only. `base` is not shared: the
+    // two verification joins read it through one reused exchange
     Tiers.pairs(bandedM, Seq("key"), "id", bucketCap, hardCap = bucketCap,
         saltGroups = 1)
       .map(_.select(col("id_a").as("ia"), col("id_b").as("ib")).distinct()
-        .join(baseM.select(col("id").as("ia"), col("toks").as("ta")), "ia")
-        .join(baseM.select(col("id").as("ib"), col("toks").as("tb")), "ib")
+        .join(base.select(col("id").as("ia"), col("toks").as("ta")), "ia")
+        .join(base.select(col("id").as("ib"), col("toks").as("tb")), "ib")
         .select(col("ia"), col("ib"),
           jaccardOf(col("ta"), col("tb")).as("jaccard"))
         .where(col("jaccard") >= tau))

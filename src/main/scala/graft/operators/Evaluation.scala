@@ -984,9 +984,7 @@ object Evaluation {
     val dec = "decimal(38,0)"
     val intra = intraClusterEdges(assignment, edges, idCol, clusterCol,
       aCol, bCol)
-    val deg = intra.select(col("__gu").as("__tid"))
-      .unionAll(intra.select(col("__gv").as("__tid")))
-      .groupBy(col("__tid")).agg(count(lit(1)).as("__tdeg"))
+    val (deg, tri) = triangles(intra, Seq("__gc"))
     // wedges per cluster: each edge-incident node appears once per side
     // it touches — distinct to once — then Σ d(d−1)/2 over the cluster
     val wedges = intra.select(col("__gu").as("__tid"), col("__gc"))
@@ -996,34 +994,11 @@ object Evaluation {
       .groupBy(col("__gc"))
       .agg((sum(col("__tdeg").cast(dec) * (col("__tdeg").cast(dec) - 1))
         / 2).cast("long").as("n_wedges"))
-    // orient each edge toward the higher (degree, id); u < v already
-    // holds from normalization, so equal degrees keep the u → v order
-    val keep = col("__du") <= col("__dv")
-    val dirE = intra
-      .join(deg.select(col("__tid").as("__gu"), col("__tdeg").as("__du")),
-        "__gu")
-      .join(deg.select(col("__tid").as("__gv"), col("__tdeg").as("__dv")),
-        "__gv")
-      .select(when(keep, col("__gu")).otherwise(col("__gv")).as("__src"),
-        when(keep, col("__gv")).otherwise(col("__gu")).as("__dst"),
-        when(keep, col("__dv")).otherwise(col("__du")).as("__dd"),
-        col("__gc"))
-    // oriented wedges b ← src → c with rank(b) < rank(c); the closing
-    // edge {b, c}, if present, is oriented b → c by rank consistency
-    val x = dirE.select(col("__src"), col("__dst").as("__b"),
-      col("__dd").as("__db"), col("__gc"))
-    val y = dirE.select(col("__src"), col("__dst").as("__c"),
-      col("__dd").as("__dc"))
-    val tri = x.join(y, Seq("__src"))
-      .where(col("__db") < col("__dc") ||
-        (col("__db") === col("__dc") && col("__b") < col("__c")))
-      .join(dirE.select(col("__src").as("__b"), col("__dst").as("__c")),
-        Seq("__b", "__c"))
-      .groupBy(col("__gc")).agg(count(lit(1)).as("n_triangles"))
+    val nTri = tri.groupBy(col("__gc")).agg(count(lit(1)).as("n_triangles"))
     assignment.select(col(clusterCol)).distinct()
       .join(wedges.withColumnRenamed("__gc", clusterCol), Seq(clusterCol),
         "left")
-      .join(tri.withColumnRenamed("__gc", clusterCol), Seq(clusterCol),
+      .join(nTri.withColumnRenamed("__gc", clusterCol), Seq(clusterCol),
         "left")
       .select(col(clusterCol),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
@@ -1186,26 +1161,31 @@ object Evaluation {
         coalesce(col("__ch"), lit(0L)).as("core_number"))
   }
 
-  /** Per-edge triangle support over a canonical (u < v) edge frame —
-    * degree-oriented wedge enumeration (each triangle found ONCE from
-    * its lowest-degree corner, Σ outdeg² ≈ O(E^1.5) wedge candidates),
-    * then each found triangle credits all three of its edges. Edges in
-    * no triangle are absent (callers coalesce to 0). */
-  private def edgeSupport(cur: DataFrame): DataFrame = {
-    val deg = cur.select(col("__gu").as("__tid"))
-      .unionAll(cur.select(col("__gv").as("__tid")))
+  /** The triangles of a canonical (u < v) edge frame `(__gu, __gv, …)`
+    * by degree-oriented wedge enumeration: each edge is oriented toward
+    * its higher-(degree, id) end (u < v already holds, so equal degrees
+    * keep u → v), and each triangle is found ONCE from its lowest corner
+    * as an oriented wedge b ← src → c with rank(b) < rank(c), closed by
+    * the edge b → c (Σ outdeg² ≈ O(E^1.5) wedge candidates). Returns the
+    * degree frame `(__tid, __tdeg)` and the triangles `(__src, __b, __c,
+    * carry…)`, `carry` taken from the edge src → b. */
+  private def triangles(edges: DataFrame,
+      carry: Seq[String] = Nil): (DataFrame, DataFrame) = {
+    val deg = edges.select(col("__gu").as("__tid"))
+      .unionAll(edges.select(col("__gv").as("__tid")))
       .groupBy(col("__tid")).agg(count(lit(1)).as("__tdeg"))
     val keep = col("__du") <= col("__dv")
-    val dirE = cur
+    val dirE = edges
       .join(deg.select(col("__tid").as("__gu"), col("__tdeg").as("__du")),
         "__gu")
       .join(deg.select(col("__tid").as("__gv"), col("__tdeg").as("__dv")),
         "__gv")
-      .select(when(keep, col("__gu")).otherwise(col("__gv")).as("__src"),
+      .select(Seq(when(keep, col("__gu")).otherwise(col("__gv")).as("__src"),
         when(keep, col("__gv")).otherwise(col("__gu")).as("__dst"),
-        when(keep, col("__dv")).otherwise(col("__du")).as("__dd"))
-    val x = dirE.select(col("__src"), col("__dst").as("__b"),
-      col("__dd").as("__db"))
+        when(keep, col("__dv")).otherwise(col("__du")).as("__dd")) ++
+        carry.map(col): _*)
+    val x = dirE.select(Seq(col("__src"), col("__dst").as("__b"),
+      col("__dd").as("__db")) ++ carry.map(col): _*)
     val y = dirE.select(col("__src"), col("__dst").as("__c"),
       col("__dd").as("__dc"))
     val tri = x.join(y, Seq("__src"))
@@ -1213,7 +1193,15 @@ object Evaluation {
         (col("__db") === col("__dc") && col("__b") < col("__c")))
       .join(dirE.select(col("__src").as("__b"), col("__dst").as("__c")),
         Seq("__b", "__c"))
-      .select(col("__src"), col("__b"), col("__c"))
+      .select(Seq(col("__src"), col("__b"), col("__c")) ++ carry.map(col): _*)
+    (deg, tri)
+  }
+
+  /** Per-edge triangle support over a canonical (u < v) edge frame: each
+    * of its [[triangles]] credits all three of its edges. Edges in no
+    * triangle are absent (callers coalesce to 0). */
+  private def edgeSupport(cur: DataFrame): DataFrame = {
+    val (_, tri) = triangles(cur)
     tri.select(least(col("__src"), col("__b")).as("__gu"),
         greatest(col("__src"), col("__b")).as("__gv"))
       .unionAll(tri.select(least(col("__src"), col("__c")).as("__gu"),

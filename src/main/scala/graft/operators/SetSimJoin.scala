@@ -286,13 +286,14 @@ object SetSimJoin {
     // (tiny vocab ⇒ every token hot ⇒ candidates ≈ probes × df) this
     // cuts the dedup exchange from the full candidate volume to the
     // result volume. Vocabulary probing is one map-combinable distinct
-    // count; vocab > 64 takes the general array path below, identically.
-    val sized = Tiers.sizes(index, Seq("tok"))
+    // collect of at most 65 tokens; vocab > 64 takes the general array
+    // path below, identically.
+    val probed = Tiers.sizes(index, Seq("tok")).select(col("tok"))
+      .limit(65).collect()
     val vocab: Array[String] =
-      if (sized.limit(65).count() <= 64)
-        sized.select(col("tok")).collect().map(_.getString(0)).sorted
+      if (probed.length <= 64) probed.map(_.getString(0)).sorted
       else Array.empty
-    if (vocab.nonEmpty && vocab.length <= 64) {
+    if (vocab.nonEmpty) {
       val bitOf = map(vocab.toIndexedSeq.zipWithIndex.flatMap { case (t, i) =>
         Seq(lit(t), lit(1L << i))
       }: _*)

@@ -24,6 +24,18 @@ class GateRegistrySpec extends AnyFunSuite {
     assert(empty.isEmpty, s"empty oracle SQL: ${empty.mkString(", ")}")
   }
 
+  test("oracle SQL text is pinned: sha256 over the oracles sorted by name") {
+    // Moves only with a deliberate oracle change, recorded in CHANGES.md
+    // with the names of the oracles whose text changed.
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (name, sql) =>
+      md.update(s"$name\n$sql\n".getBytes("UTF-8"))
+    }
+    val digest = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    assert(digest ==
+      "47c27cddab30c9e816c696f24c5808527aa3caf4594b94e3ec818a989c28a6ca")
+  }
+
   test("every gate name matches q_[a-z0-9_]+") {
     val bad = names.filterNot(_.matches("q_[a-z0-9_]+"))
     assert(bad.isEmpty, s"bad gate names: ${bad.mkString(", ")}")

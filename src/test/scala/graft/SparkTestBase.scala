@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,6 +32,38 @@ abstract class SparkFunSuite extends AnyFunSuite {
     val before = spark.conf.getOption(key)
     spark.conf.set(key, value)
     try f finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Runs `f`, returning its value and the number of jobs it started. */
+  def jobsOf[A](f: => A): (A, Int) = {
+    val (a, ids) = jobQueriesOf(f)
+    (a, ids.size)
+  }
+
+  /** Runs `f`, returning its value and the number of SQL queries whose
+    * jobs it started (an action's query counts once, however many jobs
+    * its stages and incremental takes need; a plan built without running
+    * counts zero). */
+  def queriesOf[A](f: => A): (A, Int) = {
+    val (a, ids) = jobQueriesOf(f)
+    (a, ids.distinct.size)
+  }
+
+  /** `f`'s value and the SQL execution id of each job it started. */
+  private def jobQueriesOf[A](f: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val ids = scala.collection.mutable.ArrayBuffer[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized(
+        ids += String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      ListenerBusDrain(sc)
+      (a, l.synchronized(ids.toList))
+    } finally sc.removeSparkListener(l)
   }
 }
 

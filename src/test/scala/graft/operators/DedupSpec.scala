@@ -99,6 +99,29 @@ class DedupSpec extends SparkFunSuite {
     assert(plan.contains("ExistingRDD") && !plan.contains("minhash_sig"), plan)
   }
 
+  test("minhashLshPairs checkpoints the banding only; rows unchanged") {
+    // a 30-token document and five one-token edits of it
+    val words = (1 to 30).map(i => s"w$i")
+    val near = ((0L, words) +: (1L to 5L).map(i =>
+        (i, words.updated(i.toInt * 5, s"x$i"))))
+      .map { case (i, ws) => (i, ws.mkString(" ")) }.toDF("doc_id", "text")
+    val df = Dedup.minhashLshPairs(near, "doc_id", "text", tau = 0.5,
+      hashFamily = "sha256")
+    // the verification joins read the token frame through one exchange,
+    // so only the banding (sizing aggregate + join-back) is a checkpoint
+    val rdds = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }
+    assert(rdds.distinct.size == 1, df.queryExecution.optimizedPlan)
+    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1),
+      r.getDouble(2))).toSet
+    // doc 1's edit breaks every band it shares; the others pair up with
+    // exact token-set Jaccard 29/31 (with doc 0) or 28/32
+    val expected = for {
+      a <- Seq(0L, 2L, 3L, 4L); b <- Seq(2L, 3L, 4L, 5L) if a < b
+    } yield (a, b, if (a == 0L) 29.0 / 31.0 else 28.0 / 32.0)
+    assert(rows == expected.toSet)
+  }
+
   test("minhashOphLshPairs: identical docs always collide, verification exact, caps observable") {
     // identical token sets → identical OPH signatures → all bands collide
     val pairs = Dedup.minhashOphLshPairs(docs, "doc_id", "text", tau = 0.5).out

@@ -5,8 +5,6 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -28,23 +26,6 @@ class FramesSpec extends SparkFunSuite {
     val df = spark.range(0L, n, 1L, 8).select(tick(col("id")).as("id"))
       .select(col("id"), (col("id") % 1000L).as("key"))
     (df, acc)
-  }
-
-  /** Runs `f`, returning its value and the number of jobs it started. */
-  private def jobsOf[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    var jobs = 0
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        synchronized(jobs += 1)
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try {
-      val a = f
-      ListenerBusDrain(sc)
-      (a, l.synchronized(jobs))
-    } finally sc.removeSparkListener(l)
   }
 
   test("shared: a sizing aggregate, its join-back and a second action evaluate the upstream once") {

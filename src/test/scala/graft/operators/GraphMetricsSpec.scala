@@ -471,33 +471,44 @@ class GraphMetricsSpec extends SparkFunSuite {
     // two triangles sharing edge (2,3): shared edge has support 2, the
     // others 1. k=4 removes the outer edges, which strands the shared
     // edge next round — the cascade must run to the fixpoint, not stop
-    // after one pass.
-    val asg = (1L to 5L).map((_, "A")).toDF("id", "cluster_id")
-    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
-      .toDF("url_a", "url_b")
-    val k3 = Evaluation.trussEdges(asg, e, k = 3)
-      .select("url_a", "url_b").as[(Long, Long)].collect().toSet
-    assert(k3 == Set((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)))
-    assert(Evaluation.trussEdges(asg, e, k = 4).count() == 0L)
-    // a K5 survives k=5 (every edge closes 3 triangles), dies at k=6
-    val asg5 = (1L to 5L).map((_, "A")).toDF("id", "cluster_id")
-    val e5 = (for { u <- 1L to 5L; v <- (u + 1) to 5L } yield (u, v))
-      .toDF("url_a", "url_b")
-    val t5 = Evaluation.trussEdges(asg5, e5, k = 5)
-    assert(t5.count() == 10L &&
-      t5.select("support").as[Long].collect().forall(_ == 3L))
-    assert(Evaluation.trussEdges(asg5, e5, k = 6).count() == 0L)
-    intercept[IllegalArgumentException](Evaluation.trussEdges(asg, e, 2))
+    // after one pass. Cap 0 runs the distributed rounds and their
+    // triangle support; the default cap runs the driver finish.
+    def bowtie(): Unit = {
+      val asg = (1L to 5L).map((_, "A")).toDF("id", "cluster_id")
+      val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
+        .toDF("url_a", "url_b")
+      val k3 = Evaluation.trussEdges(asg, e, k = 3)
+        .select("url_a", "url_b", "support").as[(Long, Long, Long)]
+        .collect().toSet
+      assert(k3 == Set((1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 2L),
+        (2L, 4L, 1L), (3L, 4L, 1L)))
+      assert(Evaluation.trussEdges(asg, e, k = 4).count() == 0L)
+      // a K5 survives k=5 (every edge closes 3 triangles), dies at k=6
+      val asg5 = (1L to 5L).map((_, "A")).toDF("id", "cluster_id")
+      val e5 = (for { u <- 1L to 5L; v <- (u + 1) to 5L } yield (u, v))
+        .toDF("url_a", "url_b")
+      val t5 = Evaluation.trussEdges(asg5, e5, k = 5)
+      assert(t5.count() == 10L &&
+        t5.select("support").as[Long].collect().forall(_ == 3L))
+      assert(Evaluation.trussEdges(asg5, e5, k = 6).count() == 0L)
+      intercept[IllegalArgumentException](Evaluation.trussEdges(asg, e, 2))
+    }
+    withConf("graft.truss.driverFinishEdges", "0")(bowtie())
+    bowtie()
   }
 
   private def checkTruss(seed: Int): Unit = {
     val (asgSeq, edgeSeq, canon) = randomGraph(seed, 30, 2, 160)
     for (k <- Seq(3, 4)) {
-      val ref = peelTruss(canon, k)
+      val kept = peelTruss(canon, k)
+      def nb(x: Long) = kept.collect { case (a, b) if a == x => b
+                                       case (a, b) if b == x => a }
+      val ref = kept.map { case (u, v) => (u, v, (nb(u) & nb(v)).size.toLong) }
       val got = Evaluation.trussEdges(
           asgSeq.toDF("id", "cluster_id").repartition(5),
           edgeSeq.toDF("url_a", "url_b").repartition(7), k)
-        .select("url_a", "url_b").as[(Long, Long)].collect().toSet
+        .select("url_a", "url_b", "support").as[(Long, Long, Long)]
+        .collect().toSet
       assert(got == ref, s"seed $seed k $k")
     }
   }

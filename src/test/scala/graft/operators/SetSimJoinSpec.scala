@@ -254,4 +254,27 @@ class SetSimJoinSpec extends SparkFunSuite {
     intercept[IllegalArgumentException](
       runContainment(docs, 0.0))
   }
+
+  test("dense vocabulary is probed by one query; rows equal the array path") {
+    val rnd = new Random(5)
+    val vocab = Vector("a", "b", "c", "d", "e", "f", "g", "h")
+    val docs = (1L to 40L).map { i =>
+      (i, Seq.fill(1 + rnd.nextInt(5))(vocab(rnd.nextInt(vocab.size)))
+        .mkString(" "))
+    }
+    // 65 tokens of its own take the vocabulary past 64, onto the array
+    // path, and pair with no other document
+    val pad = (100L, (1 to 65).map(i => s"pad$i").mkString(" "))
+    def rows(c: Capped) = c.out.collect().map(r => (r.getLong(0),
+      r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toSet
+    // two queries: the probes' lazy checkpoint runs its broadcast (and,
+    // under AQE, its shuffle stages) when it is planned, and the
+    // vocabulary probe is the other
+    val (dense, queries) = queriesOf(SetSimJoin.prefixContainmentPairs(
+      docs.toDF("id", "text"), "id", "text", tau = 0.8))
+    assert(queries == 2)
+    val array = SetSimJoin.prefixContainmentPairs(
+      (docs :+ pad).toDF("id", "text"), "id", "text", tau = 0.8)
+    assert(rows(dense).nonEmpty && rows(dense) == rows(array))
+  }
 }
