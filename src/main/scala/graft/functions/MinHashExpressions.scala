@@ -430,17 +430,30 @@ object MinHashKernels {
   }
 }
 
+/** The hash family names. An entry point that takes a family accepts its
+  * production family (`xxhash64` or `fnv`, fixed per entry point) and
+  * `sha256`, which Spark and ANSI SQL compute bit-equally, so an output
+  * built on it can be checked against a SQL oracle. */
+object HashFamily {
+  /** `true` for `sha256`, `false` for `production`; any other name is
+    * rejected. */
+  def isSha256(family: String, production: String): Boolean = {
+    require(family == "sha256" || family == production,
+      s"hash family must be $production or sha256, got '$family'")
+    family == "sha256"
+  }
+}
+
 /** Base for the fused MinHash signature expressions: unary, deterministic,
   * null-intolerant, single static kernel call inside whole-stage codegen. */
 abstract class MinHashSigExpression extends UnaryExpression with Serializable {
   def family: String
   def numHashes: Int
-  require(family == "xxhash64" || family == "sha256",
-    s"unknown minhash family: $family")
+  protected val sha: Boolean = HashFamily.isSha256(family, "xxhash64")
   MinHashKernels.requireLanes(numHashes)
   override def nullIntolerant: Boolean = true
   override def dataType: DataType =
-    if (family == "sha256") ArrayType(StringType, containsNull = false)
+    if (sha) ArrayType(StringType, containsNull = false)
     else ArrayType(LongType, containsNull = false)
 }
 
@@ -460,9 +473,9 @@ case class MinHashSig(child: Expression, numHashes: Int, family: String)
       s"$prettyName requires array<string>, got ${t.catalogString}")
   }
   private val kernelMethod =
-    if (family == "sha256") "sigTokensSha" else "sigTokensXx"
+    if (sha) "sigTokensSha" else "sigTokensXx"
   override protected def nullSafeEval(v: Any): Any =
-    if (family == "sha256") MinHashKernels.sigTokensSha(v.asInstanceOf[ArrayData], numHashes)
+    if (sha) MinHashKernels.sigTokensSha(v.asInstanceOf[ArrayData], numHashes)
     else MinHashKernels.sigTokensXx(v.asInstanceOf[ArrayData], numHashes)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => s"""
@@ -484,9 +497,9 @@ case class MinHashSigChars(child: Expression, shingleK: Int, numHashes: Int,
       s"$prettyName requires string, got ${t.catalogString}")
   }
   private val kernelMethod =
-    if (family == "sha256") "sigCharsSha" else "sigCharsXx"
+    if (sha) "sigCharsSha" else "sigCharsXx"
   override protected def nullSafeEval(v: Any): Any =
-    if (family == "sha256")
+    if (sha)
       MinHashKernels.sigCharsSha(v.asInstanceOf[UTF8String], shingleK, numHashes)
     else MinHashKernels.sigCharsXx(v.asInstanceOf[UTF8String], shingleK, numHashes)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -505,13 +518,12 @@ case class MinHashSigChars(child: Expression, shingleK: Int, numHashes: Int,
   * shared sentinel signature). */
 case class MinHashSigOph(child: Expression, family: String)
     extends UnaryExpression with Serializable {
-  require(family == "xxhash64" || family == "sha256",
-    s"unknown minhash family: $family")
+  private val sha = HashFamily.isSha256(family, "xxhash64")
   override def prettyName: String = "minhash_sig_oph"
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def dataType: DataType =
-    if (family == "sha256") ArrayType(StringType, containsNull = false)
+    if (sha) ArrayType(StringType, containsNull = false)
     else ArrayType(LongType, containsNull = false)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -519,9 +531,9 @@ case class MinHashSigOph(child: Expression, family: String)
       s"$prettyName requires array<string>, got ${t.catalogString}")
   }
   private val kernelMethod =
-    if (family == "sha256") "sigTokensShaOph" else "sigTokensXxOph"
+    if (sha) "sigTokensShaOph" else "sigTokensXxOph"
   override protected def nullSafeEval(v: Any): Any =
-    if (family == "sha256")
+    if (sha)
       MinHashKernels.sigTokensShaOph(v.asInstanceOf[ArrayData])
     else MinHashKernels.sigTokensXxOph(v.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

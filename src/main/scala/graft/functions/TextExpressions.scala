@@ -8,9 +8,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.strsim.TextKernels
 
-/** Catalyst expressions for the text-analysis kernels (same design as
-  * [[StrSimExpression]]: deterministic, null-intolerant, single static call
-  * inside whole-stage codegen). */
+/** Catalyst expressions for the one-string text-analysis kernels (same
+  * design as [[StrPairExpression]]: deterministic, null-intolerant, single
+  * static call inside whole-stage codegen). */
 abstract class TextHashExpression extends UnaryExpression with Serializable {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
@@ -97,8 +97,9 @@ case class MetaphoneKey(child: Expression) extends TextHashExpression {
 }
 
 /** Match Rating Approach codex ([[graft.strsim.TextKernels.mraCodex]]) —
-  * fourth phonetic key; pair with [[MraSimilarity]]/[[MraMatch]], not
-  * plain key equality. Pinned variant documented on the kernel. */
+  * fourth phonetic key; pair with `mra_similarity`/`mra_match`
+  * ([[StrPairKernel.mraSimilarity]]), not plain key equality. Pinned
+  * variant documented on the kernel. */
 case class MraCodex(child: Expression) extends TextHashExpression {
   override def prettyName: String = "mra_codex"
   override def dataType: DataType = StringType
@@ -107,70 +108,6 @@ case class MraCodex(child: Expression) extends TextHashExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.strsim.TextKernels.mraCodex($c)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** Shared shape of the two binary MRA expressions: (string, string) in,
-  * NULL out when MRA declares "no comparison" (codex length gap >= 3) —
-  * the kernel signals it with -1, mapped to NULL here (same
-  * sentinel-to-NULL pattern as DamerauLevenshteinSim's long-input
-  * policy). */
-abstract class MraBinaryExpression
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with Serializable {
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType) {
-      TypeCheckResult.TypeCheckSuccess
-    } else {
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string) arguments, got " +
-          s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-    }
-}
-
-/** MRA comparison rating 0..6 ([[graft.strsim.TextKernels.mraSimilarity]]);
-  * NULL = the published "no comparison" gate. */
-case class MraSimilarity(left: Expression, right: Expression)
-  extends MraBinaryExpression {
-  override def prettyName: String = "mra_similarity"
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val v = TextKernels.mraSimilarity(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-    if (v < 0) null else v
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |${ev.value} = graft.strsim.TextKernels.mraSimilarity($a, $b);
-         |if (${ev.value} < 0) { ${ev.isNull} = true; }
-       """.stripMargin)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** MRA match decision ([[graft.strsim.TextKernels.mraMatch]]): rating >=
-  * the combined-codex-length minimum; NULL = "no comparison". */
-case class MraMatch(left: Expression, right: Expression)
-  extends MraBinaryExpression {
-  override def prettyName: String = "mra_match"
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val v = TextKernels.mraMatch(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-    if (v < 0) null else v == 1
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("mraR")
-      s"""
-         |int $r = graft.strsim.TextKernels.mraMatch($a, $b);
-         |if ($r < 0) { ${ev.isNull} = true; } else { ${ev.value} = ($r == 1); }
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** Min rolling-hash document fingerprint over byte k-grams. */

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.GraftShims
+import org.apache.spark.sql.types.DoubleType
 
 /** Public Column API for the strsim kernels (the Spark-native analogue of
   * `polars_strsim/__init__.py`'s five exported functions, extended to the
@@ -20,79 +21,85 @@ import org.apache.spark.sql.graft.GraftShims
   * (`polars_strsim/utils.py:34-43`): a bare string names a column.
   * Literals broadcast via `lit(...)` (the reference's length-1 Series
   * broadcast, strsim.rs:61-66, is native to relational expressions).
+  *
+  * Adding a string-pair kernel: write its static method in
+  * `graft.strsim.StrSimKernels` (or `TextKernels`), add one `bind` entry
+  * to [[StrPairKernel$]] naming it, and one Column function below that
+  * calls `pair`. The entry drives codegen, interpreted eval and the SQL
+  * registration in [[sqlFunctions]].
   */
 package object functions {
+
+  import StrPairKernel._
 
   private def col(name: String): Column = org.apache.spark.sql.functions.col(name)
   private def wrap(e: Expression): Column = GraftShims.column(e)
   private def expr(c: Column): Expression = GraftShims.expression(c)
+  private def pair(k: StrPairKernel, a: Column, b: Column, args: Any*): Column =
+    wrap(k(expr(a), expr(b), args: _*))
 
-  def levenshtein_sim(a: Column, b: Column): Column = wrap(LevenshteinSim(expr(a), expr(b)))
+  def levenshtein_sim(a: Column, b: Column): Column = pair(levenshtein, a, b)
   def levenshtein_sim(a: String, b: String): Column = levenshtein_sim(col(a), col(b))
 
-  def jaro_sim(a: Column, b: Column): Column = wrap(JaroSim(expr(a), expr(b)))
+  def jaro_sim(a: Column, b: Column): Column = pair(jaro, a, b)
   def jaro_sim(a: String, b: String): Column = jaro_sim(col(a), col(b))
 
-  def jaro_winkler_sim(a: Column, b: Column): Column = wrap(JaroWinklerSim(expr(a), expr(b)))
+  def jaro_winkler_sim(a: Column, b: Column): Column = pair(jaroWinkler, a, b)
   def jaro_winkler_sim(a: String, b: String): Column = jaro_winkler_sim(col(a), col(b))
 
-  def jaccard_sim(a: Column, b: Column): Column = wrap(JaccardSim(expr(a), expr(b)))
+  def jaccard_sim(a: Column, b: Column): Column = pair(jaccard, a, b)
   def jaccard_sim(a: String, b: String): Column = jaccard_sim(col(a), col(b))
 
-  def sorensen_dice_sim(a: Column, b: Column): Column = wrap(SorensenDiceSim(expr(a), expr(b)))
+  def sorensen_dice_sim(a: Column, b: Column): Column = pair(sorensenDice, a, b)
   def sorensen_dice_sim(a: String, b: String): Column = sorensen_dice_sim(col(a), col(b))
 
-  def damerau_levenshtein_sim(a: Column, b: Column): Column =
-    wrap(DamerauLevenshteinSim(expr(a), expr(b)))
+  def damerau_levenshtein_sim(a: Column, b: Column): Column = pair(damerauLevenshtein, a, b)
   def damerau_levenshtein_sim(a: String, b: String): Column =
     damerau_levenshtein_sim(col(a), col(b))
 
-  def hamming_sim(a: Column, b: Column): Column = wrap(HammingSim(expr(a), expr(b)))
+  def hamming_sim(a: Column, b: Column): Column = pair(hamming, a, b)
   def hamming_sim(a: String, b: String): Column = hamming_sim(col(a), col(b))
 
   /** Overlap (Szymkiewicz-Simpson) coefficient over code-point bags:
     * Σmin / min(|a|,|b|) — the containment scorer of the Jaccard family. */
-  def overlap_sim(a: Column, b: Column): Column = wrap(OverlapSim(expr(a), expr(b)))
+  def overlap_sim(a: Column, b: Column): Column = pair(overlap, a, b)
   def overlap_sim(a: String, b: String): Column = overlap_sim(col(a), col(b))
 
   /** Bag-cosine similarity over per-code-point counts (string kernel; the
     * embedding-vector cosine is [[cosine_sim]]). */
-  def cosine_bag_sim(a: Column, b: Column): Column = wrap(CosineBagSim(expr(a), expr(b)))
+  def cosine_bag_sim(a: Column, b: Column): Column = pair(cosineBag, a, b)
   def cosine_bag_sim(a: String, b: String): Column = cosine_bag_sim(col(a), col(b))
 
   /** Normalized optimal-string-alignment (restricted Damerau-Levenshtein)
     * similarity: transposition-aware at linear memory — never NULL, unlike
     * [[damerau_levenshtein_sim]]'s quadratic-cap policy. */
-  def osa_sim(a: Column, b: Column): Column = wrap(OsaSim(expr(a), expr(b)))
+  def osa_sim(a: Column, b: Column): Column = pair(osa, a, b)
   def osa_sim(a: String, b: String): Column = osa_sim(col(a), col(b))
 
   /** Normalized LCS similarity: 2·|LCS|/(|a|+|b|) over code points —
     * order-preserving overlap that charges nothing for unmatched
     * interleaved material (middle names, titles). */
-  def lcs_sim(a: Column, b: Column): Column = wrap(LcsSim(expr(a), expr(b)))
+  def lcs_sim(a: Column, b: Column): Column = pair(lcs, a, b)
   def lcs_sim(a: String, b: String): Column = lcs_sim(col(a), col(b))
 
   /** Needleman-Wunsch global-alignment similarity (match +1, mismatch −1,
     * gap −1; 0.5 + S/(2·max len)) — rewards matches, not only charging
     * edits: long shared runs dominate scattered mismatches. */
-  def needleman_wunsch_sim(a: Column, b: Column): Column =
-    wrap(NeedlemanWunschSim(expr(a), expr(b)))
+  def needleman_wunsch_sim(a: Column, b: Column): Column = pair(needlemanWunsch, a, b)
   def needleman_wunsch_sim(a: String, b: String): Column =
     needleman_wunsch_sim(col(a), col(b))
 
   /** Smith-Waterman local-alignment similarity (best local window over
     * min(|a|,|b|)) — 1.0 on exact substring containment; the scorer for
     * one-side-truncated fields. */
-  def smith_waterman_sim(a: Column, b: Column): Column =
-    wrap(SmithWatermanSim(expr(a), expr(b)))
+  def smith_waterman_sim(a: Column, b: Column): Column = pair(smithWaterman, a, b)
   def smith_waterman_sim(a: String, b: String): Column =
     smith_waterman_sim(col(a), col(b))
 
   /** Normalized q-gram profile similarity (Ukkonen): 1 − Σ|Δcount|/(nA+nB)
     * over code-point q-grams, q a 1..3 literal — the cheap edit-distance
     * lower-bound pre-filter (lev ≥ d/(2q)). */
-  def qgram_sim(a: Column, b: Column, q: Int): Column =
-    wrap(QgramSim(expr(a), expr(b), q))
+  def qgram_sim(a: Column, b: Column, q: Int): Column = pair(qgram, a, b, q)
   def qgram_sim(a: String, b: String, q: Int): Column =
     qgram_sim(col(a), col(b), q)
 
@@ -101,20 +108,19 @@ package object functions {
     * deletions; 1 − dist/(2·max len)) — the edit-distance view of
     * phonetic matching, where [[nysiis_key]]/Soundex give only the
     * blocking-key view. */
-  def editex_sim(a: Column, b: Column): Column = wrap(EditexSim(expr(a), expr(b)))
+  def editex_sim(a: Column, b: Column): Column = pair(editex, a, b)
   def editex_sim(a: String, b: String): Column = editex_sim(col(a), col(b))
 
   /** Longest-common-substring similarity: |longest contiguous shared
     * run|/max(|a|,|b|) — strict under proper containment where
     * [[smith_waterman_sim]] saturates at 1.0. */
-  def lcsstr_sim(a: Column, b: Column): Column = wrap(LcsStrSim(expr(a), expr(b)))
+  def lcsstr_sim(a: Column, b: Column): Column = pair(lcsstr, a, b)
   def lcsstr_sim(a: String, b: String): Column = lcsstr_sim(col(a), col(b))
 
   /** Affine-gap (Gotoh) global alignment similarity: match +1, mismatch
     * −1, gap of length L costs 1 + 0.5·(L−1) — one long gap beats many
     * scattered ones, unlike the unit-gap [[needleman_wunsch_sim]]. */
-  def affine_gap_sim(a: Column, b: Column): Column =
-    wrap(AffineGapSim(expr(a), expr(b)))
+  def affine_gap_sim(a: Column, b: Column): Column = pair(affineGap, a, b)
   def affine_gap_sim(a: String, b: String): Column = affine_gap_sim(col(a), col(b))
 
   /** Bag similarity over code-point multisets: Σmin/max(|a|,|b|). Bag
@@ -122,14 +128,13 @@ package object functions {
     * is a sound (and the cheapest) admission filter in front of
     * `levenshtein_sim(a,b) >= θ` — below [[qgram_sim]] in the pre-filter
     * stack. */
-  def bag_sim(a: Column, b: Column): Column = wrap(BagSim(expr(a), expr(b)))
+  def bag_sim(a: Column, b: Column): Column = pair(bag, a, b)
   def bag_sim(a: String, b: String): Column = bag_sim(col(a), col(b))
 
   /** Ratcliff-Obershelp (gestalt) similarity — Python difflib's
     * SequenceMatcher.ratio (without junk heuristics): 2·M/(|a|+|b|) over
     * recursively matched longest-common-substring blocks. */
-  def ratcliff_obershelp_sim(a: Column, b: Column): Column =
-    wrap(RatcliffObershelpSim(expr(a), expr(b)))
+  def ratcliff_obershelp_sim(a: Column, b: Column): Column = pair(ratcliffObershelp, a, b)
   def ratcliff_obershelp_sim(a: String, b: String): Column =
     ratcliff_obershelp_sim(col(a), col(b))
 
@@ -137,8 +142,7 @@ package object functions {
     * best-window variant): max gestalt ratio between the shorter string
     * and any same-length code-point window of the longer — 1.0 on
     * verbatim containment ("ibm" in "ibm corporation"). */
-  def partial_ratcliff_sim(a: Column, b: Column): Column =
-    wrap(PartialRatcliffSim(expr(a), expr(b)))
+  def partial_ratcliff_sim(a: Column, b: Column): Column = pair(partialRatcliff, a, b)
   def partial_ratcliff_sim(a: String, b: String): Column =
     partial_ratcliff_sim(col(a), col(b))
 
@@ -146,15 +150,13 @@ package object functions {
     * substitutions between visually-confusable characters (O↔0, l↔1,
     * S↔5, …) cost half a regular edit; see
     * [[graft.strsim.StrSimKernels.ocrConfusions]]. */
-  def confusion_lev_sim(a: Column, b: Column): Column =
-    wrap(ConfusionLevSim(expr(a), expr(b)))
+  def confusion_lev_sim(a: Column, b: Column): Column = pair(confusionLevSim, a, b)
   def confusion_lev_sim(a: String, b: String): Column =
     confusion_lev_sim(col(a), col(b))
 
   /** Raw confusion-weighted edit distance (integer; 2× Levenshtein when
     * no confusable pair participates). */
-  def confusion_lev_dist(a: Column, b: Column): Column =
-    wrap(ConfusionLevDist(expr(a), expr(b)))
+  def confusion_lev_dist(a: Column, b: Column): Column = pair(confusionLevDist, a, b)
   def confusion_lev_dist(a: String, b: String): Column =
     confusion_lev_dist(col(a), col(b))
 
@@ -173,7 +175,7 @@ package object functions {
   /** Tversky index over code-point bags with literal weights α (a-only
     * mass) and β (b-only mass): α=β=1 is Jaccard, α=β=0.5 is Dice. */
   def tversky_sim(a: Column, b: Column, alpha: Double, beta: Double): Column =
-    wrap(TverskySim(expr(a), expr(b), alpha, beta))
+    pair(tversky, a, b, alpha, beta)
 
   // Token-ratio compositions are built at the CATALYST level (not the
   // Column functions API): Column-API nodes are UnresolvedFunction wrappers
@@ -186,7 +188,7 @@ package object functions {
     def key(e: Expression): Expression = new ArrayJoin(
       new ArraySort(new StringSplit(new StringTrim(e), Literal("\\s+"))),
       Literal(" "))
-    LevenshteinSim(key(a), key(b))
+    levenshtein(key(a), key(b))
   }
 
   private def tokenSetRatioExpr(a: Expression, b: Expression): Expression = {
@@ -206,8 +208,8 @@ package object functions {
     val s1 = new StringTrim(ConcatWs(Seq(Literal(" "), s0, da)))
     val s2 = new StringTrim(ConcatWs(Seq(Literal(" "), s0, db)))
     If(Or(IsNull(a), IsNull(b)), Literal.create(null, DoubleType),
-      Greatest(Seq(LevenshteinSim(s0, s1), LevenshteinSim(s0, s2),
-        LevenshteinSim(s1, s2))))
+      Greatest(Seq(levenshtein(s0, s1), levenshtein(s0, s2),
+        levenshtein(s1, s2))))
   }
 
   /** Token-level Jaccard: |ta ∩ tb| / |ta ∪ tb| over DISTINCT whitespace
@@ -271,30 +273,27 @@ package object functions {
 
   /** Monge-Elkan token similarity with Jaro-Winkler inner kernel
     * (asymmetric; mean over a's tokens of the best JW match in b). */
-  def monge_elkan_jw(a: Column, b: Column): Column = wrap(MongeElkanJw(expr(a), expr(b)))
+  def monge_elkan_jw(a: Column, b: Column): Column = pair(mongeElkanJw, a, b)
   def monge_elkan_jw(a: String, b: String): Column = monge_elkan_jw(col(a), col(b))
 
   /** Exact code-point Levenshtein distance when ≤ k, else k+1 (banded
     * O(k·n) DP — the edit-distance pre-filter tier). */
-  def levenshtein_capped(a: Column, b: Column, k: Int): Column =
-    wrap(LevenshteinCapped(expr(a), expr(b), k))
+  def levenshtein_capped(a: Column, b: Column, k: Int): Column = pair(levenshteinCapped, a, b, k)
 
   /** `true` iff code-point Levenshtein distance ≤ k (banded kernel). */
-  def levenshtein_within(a: Column, b: Column, k: Int): Column =
-    wrap(LevenshteinWithin(expr(a), expr(b), k))
+  def levenshtein_within(a: Column, b: Column, k: Int): Column = pair(levenshteinWithin, a, b, k)
 
   /** Bag distance (integer face of [[bag_sim]]): max(|a|,|b|) − Σmin over
     * code-point multisets — a Levenshtein lower bound at sorted-merge
     * cost. */
-  def bag_dist(a: Column, b: Column): Column = wrap(BagDist(expr(a), expr(b)))
+  def bag_dist(a: Column, b: Column): Column = pair(bagDist, a, b)
   def bag_dist(a: String, b: String): Column = bag_dist(col(a), col(b))
 
   /** `true` iff bag distance ≤ k — the tier-0 admission filter in front
     * of [[levenshtein_within]] (same k): bag distance lower-bounds edit
     * distance, so a bag rejection is a sound Levenshtein rejection and
     * the banded DP only runs on bag survivors. */
-  def bag_within(a: Column, b: Column, k: Int): Column =
-    wrap(BagWithin(expr(a), expr(b), k))
+  def bag_within(a: Column, b: Column, k: Int): Column = pair(bagWithin, a, b, k)
 
   /** 64-bit SimHash over whitespace tokens (near-dup signature). */
   def simhash64(c: Column): Column = wrap(SimHash64(expr(c)))
@@ -403,14 +402,13 @@ package object functions {
 
   /** MRA comparison rating 0..6; NULL when MRA declares "no comparison"
     * (codex length gap >= 3). */
-  def mra_similarity(a: Column, b: Column): Column =
-    wrap(MraSimilarity(expr(a), expr(b)))
+  def mra_similarity(a: Column, b: Column): Column = pair(mraSimilarity, a, b)
   def mra_similarity(a: String, b: String): Column =
     mra_similarity(col(a), col(b))
 
   /** MRA decision: rating >= the combined-codex-length minimum; NULL =
     * "no comparison". */
-  def mra_match(a: Column, b: Column): Column = wrap(MraMatch(expr(a), expr(b)))
+  def mra_match(a: Column, b: Column): Column = pair(mraMatch, a, b)
   def mra_match(a: String, b: String): Column = mra_match(col(a), col(b))
 
   /** Gopher-style repetition counters (array<long> of 6 — line instances,
@@ -502,111 +500,87 @@ package object functions {
       messageParameters = Map(
         "funcName" -> s"`$fn`", "paramName" -> s"`$arg`", "paramType" -> tpe))
 
-  /** SQL function names → expression builders. One convention everywhere:
-    * every similarity kernel is `<name>_sim` (`levenshtein` alone would
-    * shadow Spark's built-in DISTANCE of the same name, and a mixed
-    * bare/suffixed surface invites silent semantic mixups — the suffix
-    * states these return a [0,1] similarity, not a distance). */
-  val sqlFunctions: Map[String, Seq[Expression] => Expression] = Map(
-    "levenshtein_sim" -> (es => LevenshteinSim(es(0), es(1))),
-    "jaro_sim" -> (es => JaroSim(es(0), es(1))),
-    "jaro_winkler_sim" -> (es => JaroWinklerSim(es(0), es(1))),
-    "jaccard_sim" -> (es => JaccardSim(es(0), es(1))),
-    "sorensen_dice_sim" -> (es => SorensenDiceSim(es(0), es(1))),
-    "damerau_levenshtein_sim" -> (es => DamerauLevenshteinSim(es(0), es(1))),
-    "hamming_sim" -> (es => HammingSim(es(0), es(1))),
-    "monge_elkan_jw" -> (es => MongeElkanJw(es(0), es(1))),
-    // composed (not bespoke) kernels — SQL and Column paths share the one
-    // catalyst-level composition
-    "token_sort_ratio" -> (es => tokenSortRatioExpr(es(0), es(1))),
-    "token_set_ratio" -> (es => tokenSetRatioExpr(es(0), es(1))),
-    "overlap_sim" -> (es => OverlapSim(es(0), es(1))),
-    "cosine_bag_sim" -> (es => CosineBagSim(es(0), es(1))),
-    "osa_sim" -> (es => OsaSim(es(0), es(1))),
-    "lcs_sim" -> (es => LcsSim(es(0), es(1))),
-    "needleman_wunsch_sim" -> (es => NeedlemanWunschSim(es(0), es(1))),
-    "smith_waterman_sim" -> (es => SmithWatermanSim(es(0), es(1))),
-    "editex_sim" -> (es => EditexSim(es(0), es(1))),
-    "lcsstr_sim" -> (es => LcsStrSim(es(0), es(1))),
-    "affine_gap_sim" -> (es => AffineGapSim(es(0), es(1))),
-    "bag_sim" -> (es => BagSim(es(0), es(1))),
-    "ratcliff_obershelp_sim" -> (es => RatcliffObershelpSim(es(0), es(1))),
-    "partial_ratcliff_sim" -> (es => PartialRatcliffSim(es(0), es(1))),
-    "confusion_lev_sim" -> (es => ConfusionLevSim(es(0), es(1))),
-    "confusion_lev_dist" -> (es => ConfusionLevDist(es(0), es(1))),
-    // alpha/beta must be foldable non-negative numeric literals:
-    //   tversky_sim(a, b, 0.25, 0.75)
-    "tversky_sim" -> (es => TverskySim(es(0), es(1),
-      litDouble(es(2), "tversky_sim", "alpha"),
-      litDouble(es(3), "tversky_sim", "beta"))),
-    // q must be a foldable 1..3 int literal: qgram_sim(a, b, 2)
-    "qgram_sim" -> (es => QgramSim(es(0), es(1),
-      litInt(es(2), "qgram_sim", "q"))),
-    // token-level set scorers — shared catalyst compositions
-    "token_jaccard_sim" -> (es => tokenJaccardExpr(es(0), es(1))),
-    "token_overlap_sim" -> (es => tokenOverlapExpr(es(0), es(1))),
-    // k must be a foldable non-negative int literal:
-    //   levenshtein_capped(a, b, 2) / levenshtein_within(a, b, 2)
-    "levenshtein_capped" -> (es => LevenshteinCapped(es(0), es(1),
-      litInt(es(2), "levenshtein_capped", "k"))),
-    "levenshtein_within" -> (es => LevenshteinWithin(es(0), es(1),
-      litInt(es(2), "levenshtein_within", "k"))),
-    "bag_dist" -> (es => BagDist(es(0), es(1))),
-    "bag_within" -> (es => BagWithin(es(0), es(1),
-      litInt(es(2), "bag_within", "k"))),
-    "simhash64" -> (es => SimHash64(es(0))),
-    "repetition_counters" -> (es => RepetitionCounters(es(0))),
-    "simhash60_sha" -> (es => SimHashSha60(es(0))),
-    "cosine_sim" -> (es => CosineSim(es(0), es(1))),
-    "vec_dot" -> (es => VecDot(es(0), es(1))),
-    "vec_norm" -> (es => VecNorm(es(0))),
-    // numHashes / shingleK / family must be foldable literals; family is
-    // optional (defaults to the production xxhash64):
-    //   minhash_sig(tokens, 16) / minhash_sig(tokens, 16, 'sha256')
-    //   minhash_sig_chars(s, 3, 12) / minhash_sig_chars(s, 3, 12, 'sha256')
-    "minhash_sig" -> (es => MinHashSig(es(0),
-      litInt(es(1), "minhash_sig", "numHashes"),
-      if (es.length > 2) litStr(es(2), "minhash_sig", "family") else "xxhash64")),
-    "minhash_sig_chars" -> (es => MinHashSigChars(es(0),
-      litInt(es(1), "minhash_sig_chars", "shingleK"),
-      litInt(es(2), "minhash_sig_chars", "numHashes"),
-      if (es.length > 3) litStr(es(3), "minhash_sig_chars", "family") else "xxhash64")),
-    //   minhash_sig_oph(tokens) / minhash_sig_oph(tokens, 'sha256')
-    "minhash_sig_oph" -> (es => MinHashSigOph(es(0),
-      if (es.length > 1) litStr(es(1), "minhash_sig_oph", "family") else "xxhash64")),
-    //   clk_bits(s, 512, 4) / clk_sig(s, 512, 4) / bloom_dice(a, b)
-    "clk_bits" -> (es => ClkBits(es(0),
-      litInt(es(1), "clk_bits", "m"), litInt(es(2), "clk_bits", "g"),
-      if (es.length > 3) litStr(es(3), "clk_bits", "salt") else "")),
-    "clk_sig" -> (es => ClkSig(es(0),
-      litInt(es(1), "clk_sig", "m"), litInt(es(2), "clk_sig", "g"),
-      if (es.length > 3) litStr(es(3), "clk_sig", "salt") else "")),
-    "bloom_dice" -> (es => BloomDice(es(0), es(1))),
-    // k must be a foldable int literal: min_kgram_hash(text, 16)
-    "min_kgram_hash" -> (es => MinKGramHash(es(0),
-      litInt(es(1), "min_kgram_hash", "k"))),
-    "nysiis_key" -> (es => NysiisKey(es(0))),
-    "cologne_key" -> (es => CologneKey(es(0))),
-    "metaphone_key" -> (es => MetaphoneKey(es(0))),
-    "mra_codex" -> (es => MraCodex(es(0))),
-    "mra_similarity" -> (es => MraSimilarity(es(0), es(1))),
-    "mra_match" -> (es => MraMatch(es(0), es(1))),
-    // b must be a foldable literal in {4,8,16,32}: bbit_sig(sig, 8)
-    "bbit_sig" -> (es => BBitSig(es(0), litInt(es(1), "bbit_sig", "b"))),
-    "bbit_match_count" -> (es => BBitMatchCount(es(0), es(1),
-      litInt(es(2), "bbit_match_count", "b"))),
-    "bbit_jaccard_est" -> (es => BBitJaccardEst(es(0), es(1),
-      litInt(es(2), "bbit_jaccard_est", "b"))),
-    // form must be a foldable string literal: unicode_norm(name, 'NFC')
-    "unicode_norm" -> (es => UnicodeNorm(es(0),
-      litStr(es(1), "unicode_norm", "form"))),
-    "strip_accents" -> (es => StripAccents(es(0))),
-    "normalize_match" -> (es => normalizeMatchExpr(es(0))),
-    "fingerprint_key" -> (es => fingerprintExpr(es(0))),
-    // n must be a foldable literal in 1..8: ngram_fingerprint_key(name, 2)
-    "ngram_fingerprint_key" -> (es => ngramFingerprintExpr(es(0),
-      litInt(es(1), "ngram_fingerprint_key", "n"))),
-  )
+  /** Checks a SQL call's argument count before `build` reads it. */
+  private def arity(name: String, counts: Int*)(build: Seq[Expression] => Expression)
+      : (String, Seq[Expression] => Expression) =
+    name -> { es =>
+      if (!counts.contains(es.length)) throw GraftShims.wrongNumArgs(name, counts, es.length)
+      build(es)
+    }
+
+  /** A kernel's literal parameters, read from the arguments after (a, b). */
+  private def kernelCall(k: StrPairKernel)(es: Seq[Expression]): Expression =
+    k(es(0), es(1), k.params.zip(es.drop(2)).map[Any] {
+      case ((p, DoubleType), e) => litDouble(e, k.name, p)
+      case ((p, _), e) => litInt(e, k.name, p)
+    }: _*)
+
+  /** SQL function names → expression builders; each rejects a wrong
+    * argument count. One convention everywhere: every similarity kernel
+    * is `<name>_sim` (`levenshtein` alone would shadow Spark's built-in
+    * DISTANCE of the same name, and a mixed bare/suffixed surface invites
+    * silent semantic mixups — the suffix states these return a [0,1]
+    * similarity, not a distance). Every string-pair kernel registers from
+    * its [[StrPairKernel]] entry; literal arguments must be foldable. */
+  val sqlFunctions: Map[String, Seq[Expression] => Expression] = (
+    StrPairKernel.all.map(k => arity(k.name, 2 + k.params.size)(kernelCall(k))) ++ Seq(
+      // composed (not bespoke) kernels — SQL and Column paths share the one
+      // catalyst-level composition
+      arity("token_sort_ratio", 2)(es => tokenSortRatioExpr(es(0), es(1))),
+      arity("token_set_ratio", 2)(es => tokenSetRatioExpr(es(0), es(1))),
+      arity("token_jaccard_sim", 2)(es => tokenJaccardExpr(es(0), es(1))),
+      arity("token_overlap_sim", 2)(es => tokenOverlapExpr(es(0), es(1))),
+      arity("simhash64", 1)(es => SimHash64(es(0))),
+      arity("repetition_counters", 1)(es => RepetitionCounters(es(0))),
+      arity("simhash60_sha", 1)(es => SimHashSha60(es(0))),
+      arity("cosine_sim", 2)(es => CosineSim(es(0), es(1))),
+      arity("vec_dot", 2)(es => VecDot(es(0), es(1))),
+      arity("vec_norm", 1)(es => VecNorm(es(0))),
+      // numHashes / shingleK / family must be foldable literals; family is
+      // optional (defaults to the production xxhash64):
+      //   minhash_sig(tokens, 16) / minhash_sig(tokens, 16, 'sha256')
+      //   minhash_sig_chars(s, 3, 12) / minhash_sig_chars(s, 3, 12, 'sha256')
+      arity("minhash_sig", 2, 3)(es => MinHashSig(es(0),
+        litInt(es(1), "minhash_sig", "numHashes"),
+        if (es.length > 2) litStr(es(2), "minhash_sig", "family") else "xxhash64")),
+      arity("minhash_sig_chars", 3, 4)(es => MinHashSigChars(es(0),
+        litInt(es(1), "minhash_sig_chars", "shingleK"),
+        litInt(es(2), "minhash_sig_chars", "numHashes"),
+        if (es.length > 3) litStr(es(3), "minhash_sig_chars", "family") else "xxhash64")),
+      //   minhash_sig_oph(tokens) / minhash_sig_oph(tokens, 'sha256')
+      arity("minhash_sig_oph", 1, 2)(es => MinHashSigOph(es(0),
+        if (es.length > 1) litStr(es(1), "minhash_sig_oph", "family") else "xxhash64")),
+      //   clk_bits(s, 512, 4) / clk_sig(s, 512, 4) / bloom_dice(a, b)
+      arity("clk_bits", 3, 4)(es => ClkBits(es(0),
+        litInt(es(1), "clk_bits", "m"), litInt(es(2), "clk_bits", "g"),
+        if (es.length > 3) litStr(es(3), "clk_bits", "salt") else "")),
+      arity("clk_sig", 3, 4)(es => ClkSig(es(0),
+        litInt(es(1), "clk_sig", "m"), litInt(es(2), "clk_sig", "g"),
+        if (es.length > 3) litStr(es(3), "clk_sig", "salt") else "")),
+      arity("bloom_dice", 2)(es => BloomDice(es(0), es(1))),
+      // k must be a foldable int literal: min_kgram_hash(text, 16)
+      arity("min_kgram_hash", 2)(es => MinKGramHash(es(0),
+        litInt(es(1), "min_kgram_hash", "k"))),
+      arity("nysiis_key", 1)(es => NysiisKey(es(0))),
+      arity("cologne_key", 1)(es => CologneKey(es(0))),
+      arity("metaphone_key", 1)(es => MetaphoneKey(es(0))),
+      arity("mra_codex", 1)(es => MraCodex(es(0))),
+      // b must be a foldable literal in {4,8,16,32}: bbit_sig(sig, 8)
+      arity("bbit_sig", 2)(es => BBitSig(es(0), litInt(es(1), "bbit_sig", "b"))),
+      arity("bbit_match_count", 3)(es => BBitMatchCount(es(0), es(1),
+        litInt(es(2), "bbit_match_count", "b"))),
+      arity("bbit_jaccard_est", 3)(es => BBitJaccardEst(es(0), es(1),
+        litInt(es(2), "bbit_jaccard_est", "b"))),
+      // form must be a foldable string literal: unicode_norm(name, 'NFC')
+      arity("unicode_norm", 2)(es => UnicodeNorm(es(0),
+        litStr(es(1), "unicode_norm", "form"))),
+      arity("strip_accents", 1)(es => StripAccents(es(0))),
+      arity("normalize_match", 1)(es => normalizeMatchExpr(es(0))),
+      arity("fingerprint_key", 1)(es => fingerprintExpr(es(0))),
+      // n must be a foldable literal in 1..8: ngram_fingerprint_key(name, 2)
+      arity("ngram_fingerprint_key", 2)(es => ngramFingerprintExpr(es(0),
+        litInt(es(1), "ngram_fingerprint_key", "n"))),
+    )).toMap
 
   /** Register all kernels with the session's FunctionRegistry for SQL use. */
   def registerAll(spark: SparkSession): Unit =

@@ -67,8 +67,8 @@ object BlockingSelection {
     * AAAI'06 "Learning Blocking Schemes for Record Linkage"; Bilenko,
     * Kamath & Mooney, ICDM'06 "Adaptive Blocking"): from labeled
     * POSITIVE and NEGATIVE pairs, greedily assemble a disjunction of
-    * blocking terms (base families and, when `includeConjunctions`,
-    * their arity-2 conjunctions) that maximizes positive-pair coverage
+    * blocking terms (base families and all their arity-2
+    * conjunctions) that maximizes positive-pair coverage
     * subject to a budget on DISTINCT negative pairs co-blocked — the
     * supervised counterpart of [[greedySelection]], whose cost is
     * unlabeled pair volume. Greedy per step: among terms whose negative
@@ -89,16 +89,14 @@ object BlockingSelection {
     *         (step, family, marginal_pos, cumulative_pos, marginal_neg,
     *          cumulative_neg, total_pos, total_neg). */
   def learnScheme(keyed: DataFrame, posPairs: DataFrame,
-      negPairs: DataFrame, maxNegCovered: Long, maxTerms: Int,
-      includeConjunctions: Boolean = true): DataFrame = {
+      negPairs: DataFrame, maxNegCovered: Long, maxTerms: Int): DataFrame = {
     require(maxTerms > 0, "maxTerms must be positive")
     require(maxNegCovered >= 0, "maxNegCovered must be >= 0")
     val spark = keyed.sparkSession
     val base = keyed.select(col(keyed.columns(0)).as("family"),
       col(keyed.columns(1)).as("__id"), col(keyed.columns(2)).as("__key"))
     // the term pool feeds FOUR coverage joins (pa/pb × pos/neg)
-    val all = Frames.shared(
-      if (includeConjunctions) base.union(conjunctions(base)) else base)
+    val all = Frames.shared(base.union(conjunctions(base)))
 
     def pairsOf(df: DataFrame) = df
       .select(col(df.columns(0)).as("pa"), col(df.columns(1)).as("pb"))

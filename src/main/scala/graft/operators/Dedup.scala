@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
+
 /** Deduplication operators for a training-data pipeline, each with a
   * different cost/recall point:
   *
@@ -133,7 +135,7 @@ object Dedup {
     val bandCols = (0 until bands).map { bnd =>
       val elems = (0 until rows).map(r => element_at(col("sig"), bnd * rows + r + 1))
       val h =
-        if (hashFamily == "sha256") sha2(concat_ws("|", elems: _*), 256)
+        if (HashFamily.isSha256(hashFamily, "xxhash64")) sha2(concat_ws("|", elems: _*), 256)
         else xxhash64((lit(bnd) +: elems): _*)
       concat(lit(s"$bnd:"), h).as(s"band$bnd")
     }
@@ -558,7 +560,7 @@ object Dedup {
   private def simhashSigs(docs: DataFrame, idCol: String, textCol: String,
       hashFamily: String): DataFrame = {
     val sigExpr =
-      if (hashFamily == "sha256") graft.functions.simhash60_sha(col(textCol))
+      if (HashFamily.isSha256(hashFamily, "fnv")) graft.functions.simhash60_sha(col(textCol))
       else graft.functions.simhash64(col(textCol))
     docs
       .where(size(TextAnalysis.tokens(col(textCol))) > 0)
@@ -569,7 +571,7 @@ object Dedup {
     * [[simhashPairs]]. */
   private def simhashBanded(docs: DataFrame, idCol: String, textCol: String,
       hashFamily: String): DataFrame = {
-    val bandBits = if (hashFamily == "sha256") 15 else 16
+    val bandBits = if (HashFamily.isSha256(hashFamily, "fnv")) 15 else 16
     val mask = (1L << bandBits) - 1
     simhashSigs(docs, idCol, textCol, hashFamily)
       .select(col("id"), col("sig"),
@@ -751,10 +753,8 @@ object Dedup {
       k: Int = 8, w: Int = 4, hashFamily: String = "xxhash64"): DataFrame = {
     require(k >= 2 && k <= 64, s"k must be in [2,64], got $k")
     require(w >= 1 && w <= 256, s"w must be in [1,256], got $w")
-    require(hashFamily == "xxhash64" || hashFamily == "sha256",
-      s"hashFamily must be xxhash64 or sha256, got $hashFamily")
     val gram = expr(s"substring(t, pos, $k)")
-    val h = if (hashFamily == "sha256")
+    val h = if (HashFamily.isSha256(hashFamily, "xxhash64"))
       conv(substring(sha2(gram, 256), 1, 8), 16, 10).cast("long")
     else xxhash64(gram)
     val grams = docs

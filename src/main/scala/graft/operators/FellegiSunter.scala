@@ -378,18 +378,16 @@ object FellegiSunter {
     *
     * Only meaningful for equality-style gammas (the two sides share one
     * value, carried in `valueCol`); threshold/fuzzy gammas have no single
-    * agreed value to look up. `tf` is vocabulary-sized and broadcast by
-    * default; pass `broadcastTf = false` for pathological vocabularies
-    * (the unhinted plan degrades to a shuffle join). */
+    * agreed value to look up. `tf` is vocabulary-sized and always
+    * broadcast. */
   def tfAdjustLr(scored: DataFrame, model: Model, fieldIndex: Int,
       gammaCol: String, valueCol: String, tf: DataFrame,
-      lrCol: String = "lr", broadcastTf: Boolean = true): DataFrame = {
+      lrCol: String = "lr"): DataFrame = {
     require(fieldIndex >= 0 && fieldIndex < model.u.size,
       s"fieldIndex $fieldIndex out of range for a ${model.u.size}-field model")
     val u = model.u(fieldIndex)
     val tfSide = tf.select(col("value").as("__tf_value"), col("tf").as("__tf"))
-    val hinted = if (broadcastTf) broadcast(tfSide) else tfSide
-    scored.join(hinted, scored(valueCol) === col("__tf_value"), "left")
+    scored.join(broadcast(tfSide), scored(valueCol) === col("__tf_value"), "left")
       .withColumn("lr_tf",
         when(col(gammaCol) === 1 && col("__tf").isNotNull,
           col(lrCol) * (lit(u) / col("__tf")))

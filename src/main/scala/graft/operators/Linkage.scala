@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{bag_within, jaro_winkler_sim, levenshtein_within, sorensen_dice_sim}
+import graft.functions.{bag_within, jaro_winkler_sim, levenshtein_within, sorensen_dice_sim,
+  HashFamily}
 
 /** Record-linkage pipeline stages (north rule: blocking → pairwise scoring
   * → transitive clustering over Common-Crawl-style pages).
@@ -94,7 +95,7 @@ object Linkage {
     val bandCols = (0 until bands).map { b =>
       val elems = (0 until rows).map(r => element_at(col("sig"), b * rows + r + 1))
       val h =
-        if (hashFamily == "sha256") sha2(concat_ws("|", elems: _*), 256)
+        if (HashFamily.isSha256(hashFamily, "xxhash64")) sha2(concat_ws("|", elems: _*), 256)
         else xxhash64(elems: _*)
       concat(lit(s"mh$b:"), h).as(s"band$b")
     }

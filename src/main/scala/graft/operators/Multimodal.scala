@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFamily
+
 /** One decoded media item: id + fixed-dim feature vector (the shape a
   * downstream embedding/training stage consumes). */
 case class MediaFeatures(id: String, kind: String, features: Array[Float])
@@ -95,7 +97,7 @@ object Multimodal {
       binCol: String, dim: Int = 8, batchSize: Int = 64,
       hashFamily: String = "fnv"): Dataset[MediaFeatures] = {
     import spark.implicits._
-    val sha = hashFamily == "sha256"
+    val sha = HashFamily.isSha256(hashFamily, "fnv")
     // ONE projection: kind is a per-row expression over the same blob, so
     // (id, kind, bin) never leaves the scan pipeline — at 100 TB of media a
     // metadata-then-rejoin would shuffle every blob twice for nothing

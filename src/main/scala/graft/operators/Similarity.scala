@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.HashFamily
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (Array[Float]).
   *
@@ -160,7 +162,7 @@ object Similarity {
     // both Spark and ANSI SQL compute bit-equally, which (with iters=0)
     // makes the whole IVF index/probe path DuckDB-oracle-checkable.
     val ord =
-      if (hashOrder == "sha256")
+      if (HashFamily.isSha256(hashOrder, "xxhash64"))
         sha2(concat(col("id").cast("string"), lit(":" + seed)), 256)
       else xxhash64(col("id"), lit(seed))
     val rows = base

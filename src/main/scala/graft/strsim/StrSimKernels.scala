@@ -1279,6 +1279,15 @@ object StrSimKernels {
     math.max(n, m) - inter
   }
 
+  /** `bagDist(a, b) <= k`: the tier-0 admission filter in front of
+    * [[levenshteinWithin]]. */
+  def bagWithin(a: UTF8String, b: UTF8String, k: Int): Boolean = bagDist(a, b) <= k
+
+  /** `levenshteinCapped(a, b, k) <= k`: the exact "edit distance ≤ k" test,
+    * on the banded kernel. */
+  def levenshteinWithin(a: UTF8String, b: UTF8String, k: Int): Boolean =
+    levenshteinCapped(a, b, k) <= k
+
   // ------------------------------------------------------- String conveniences
 
   def levenshtein(a: String, b: String): Double =

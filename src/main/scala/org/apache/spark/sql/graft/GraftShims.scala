@@ -24,4 +24,9 @@ object GraftShims {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
   }
+
+  /** Spark's own error for a SQL function called with an argument count
+    * outside `counts`. */
+  def wrongNumArgs(name: String, counts: Seq[Int], actual: Int): Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors.wrongNumArgsError(name, counts, actual)
 }

@@ -28,13 +28,13 @@ class ConformanceSpec extends SparkFunSuite {
   )
 
   val exprBuilders: Map[String, (Expression, Expression) => Expression] = Map(
-    "levenshtein" -> (LevenshteinSim(_, _)),
-    "jaro" -> (JaroSim(_, _)),
-    "jaro_winkler" -> (JaroWinklerSim(_, _)),
-    "jaccard" -> (JaccardSim(_, _)),
-    "sorensen_dice" -> (SorensenDiceSim(_, _)),
-    "damerau_levenshtein" -> (DamerauLevenshteinSim(_, _)),
-    "hamming" -> (HammingSim(_, _)),
+    "levenshtein" -> (StrPairKernel.levenshtein(_, _)),
+    "jaro" -> (StrPairKernel.jaro(_, _)),
+    "jaro_winkler" -> (StrPairKernel.jaroWinkler(_, _)),
+    "jaccard" -> (StrPairKernel.jaccard(_, _)),
+    "sorensen_dice" -> (StrPairKernel.sorensenDice(_, _)),
+    "damerau_levenshtein" -> (StrPairKernel.damerauLevenshtein(_, _)),
+    "hamming" -> (StrPairKernel.hamming(_, _)),
   )
 
   val sqlName: Map[String, String] = Map(
@@ -101,7 +101,7 @@ class ConformanceSpec extends SparkFunSuite {
     val b = Array.fill(5000)(('a' + rnd.nextInt(26)).toChar).mkString
     assert(a.head != b.head && a.last != b.last) // no affix trim (seed-pinned)
     assert(java.lang.Double.isNaN(StrSimKernels.damerauLevenshtein(a, b)))
-    val e = DamerauLevenshteinSim(
+    val e = StrPairKernel.damerauLevenshtein(
       Literal(UTF8String.fromString(a), StringType),
       Literal(UTF8String.fromString(b), StringType))
     assert(e.eval(null) == null) // interpreted path

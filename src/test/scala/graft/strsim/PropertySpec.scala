@@ -46,13 +46,13 @@ class PropertySpec extends AnyFunSuite {
   )
 
   val exprBuilders: Map[String, (Expression, Expression) => Expression] = Map(
-    "levenshtein" -> (LevenshteinSim(_, _)),
-    "jaro" -> (JaroSim(_, _)),
-    "jaro_winkler" -> (JaroWinklerSim(_, _)),
-    "jaccard" -> (JaccardSim(_, _)),
-    "sorensen_dice" -> (SorensenDiceSim(_, _)),
-    "damerau_levenshtein" -> (DamerauLevenshteinSim(_, _)),
-    "hamming" -> (HammingSim(_, _)),
+    "levenshtein" -> (StrPairKernel.levenshtein(_, _)),
+    "jaro" -> (StrPairKernel.jaro(_, _)),
+    "jaro_winkler" -> (StrPairKernel.jaroWinkler(_, _)),
+    "jaccard" -> (StrPairKernel.jaccard(_, _)),
+    "sorensen_dice" -> (StrPairKernel.sorensenDice(_, _)),
+    "damerau_levenshtein" -> (StrPairKernel.damerauLevenshtein(_, _)),
+    "hamming" -> (StrPairKernel.hamming(_, _)),
   )
 
   for ((name, f) <- kernels) {
