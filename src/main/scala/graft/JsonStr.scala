@@ -1,6 +1,7 @@
 package graft
 
-/** Minimal JSON string escaping, shared by [[Verify]] and [[Bench]] (one
+/** Minimal JSON string escaping, shared by [[Verify]], [[Bench]] and the
+  * stage manifests of [[plans.Pipeline]] (one
   * escaper, one set of bugs): backslash, quote, and ALL control chars
   * (< 0x20) — a tab or CR in builder-authored SQL or an exception message
   * would otherwise break the driver's json.load. */

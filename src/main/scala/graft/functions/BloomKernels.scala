@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Bloom-filter privacy-preserving record linkage (PPRL) kernels —
@@ -26,12 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `Long.bitCount` — no per-bit rows anywhere in the hot path. */
 object BloomKernels {
 
-  private val MaxBits = 1 << 20
-
-  private[graft] def requireParams(m: Int, g: Int): Unit = {
-    require(m > 0 && m <= MaxBits, s"m must be in [1, $MaxBits], got $m")
-    require(g > 0 && g <= 64, s"g must be in [1, 64], got $g")
-  }
+  /** The largest filter size m, in bits. */
+  private[graft] val MaxBits = 1 << 20
 
   /** Underscore-padded code-point bigram byte spans of `s`: bigrams of
     * "_" ++ s ++ "_" — the sentinel padding Schnell's construction uses
@@ -135,78 +127,4 @@ object BloomKernels {
     }
     if (ca + cb == 0) 1.0 else 2.0 * inter / (ca + cb)
   }
-}
-
-/** Shared shape of the two CLK encoders: unary over string, fixed
-  * (m, g, salt). The salt keys the construction (sha256(salt || bigram))
-  * — unsalted CLKs are dictionary-attackable, so deployments agree on a
-  * secret salt per linkage project; "" reproduces the unkeyed form. */
-abstract class ClkExpression extends UnaryExpression with Serializable {
-  def m: Int
-  def g: Int
-  def salt: String
-  BloomKernels.requireParams(m, g)
-  protected lazy val saltBytes: Array[Byte] = salt.getBytes("UTF-8")
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${t.catalogString}")
-  }
-}
-
-/** clk_bits(s, m, g) → sorted distinct set-bit positions of the CLK Bloom
-  * filter (array<int>) — the oracle/debug form. */
-case class ClkBits(child: Expression, m: Int, g: Int, salt: String = "")
-    extends ClkExpression {
-  override def prettyName: String = "clk_bits"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def nullSafeEval(v: Any): Any =
-    BloomKernels.clkBits(v.asInstanceOf[UTF8String], m, g, saltBytes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val saltRef = ctx.addReferenceObj("clkSalt", saltBytes, "byte[]")
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.BloomKernels.clkBits($v, $m, $g, $saltRef)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** clk_sig(s, m, g) → packed CLK Bloom filter (array of m/64 longs) —
-  * the production form [[BloomDice]] compares with popcounts. */
-case class ClkSig(child: Expression, m: Int, g: Int, salt: String = "")
-    extends ClkExpression {
-  require(m % 64 == 0, s"clk_sig: m must be a multiple of 64, got $m")
-  override def prettyName: String = "clk_sig"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(v: Any): Any =
-    BloomKernels.clkSig(v.asInstanceOf[UTF8String], m, g, saltBytes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val saltRef = ctx.addReferenceObj("clkSalt", saltBytes, "byte[]")
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.BloomKernels.clkSig($v, $m, $g, $saltRef)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** bloom_dice(a, b) → Dice coefficient of two packed filters. */
-case class BloomDice(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-  override def prettyName: String = "bloom_dice"
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<bigint>, array<bigint>), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-    }
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    BloomKernels.bloomDice(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.BloomKernels.bloomDice($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }

@@ -2,11 +2,8 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass MinHash signature kernels.
@@ -35,12 +32,9 @@ object MinHashKernels {
 
   /** Precomputed "i:" lane prefixes — allocated once, not per shingle
     * per lane. Bounds the lane count; plenty for any real signature. */
-  private val MaxLanes = 256
+  private[graft] val MaxLanes = 256
   private val lanePrefix: Array[Array[Byte]] =
     Array.tabulate(MaxLanes)(i => s"$i:".getBytes("US-ASCII"))
-
-  private[graft] def requireLanes(k: Int): Unit =
-    require(k > 0 && k <= MaxLanes, s"numHashes must be in [1, $MaxLanes], got $k")
 
   private val HexChars = "0123456789abcdef".toCharArray
 
@@ -336,16 +330,6 @@ object MinHashKernels {
 
   // --------------------------------------------------------- b-bit MinHash
 
-  /** b must divide 64 (lanes never straddle words) and be a whole number
-    * of hex chars (so the sha-family lane parses from digest chars).
-    * b-bit minhash (Li & König 2010) keeps only the low b bits per lane:
-    * signature storage — and therefore every downstream shuffle byte —
-    * shrinks 64/b ×, at the cost of a 2^-b accidental-collision rate the
-    * estimator corrects for. */
-  private[graft] def requireB(b: Int): Unit =
-    require(b == 4 || b == 8 || b == 16 || b == 32,
-      s"b-bit minhash requires b in {4, 8, 16, 32}, got $b")
-
   private def requirePackable(k: Int, b: Int): Unit = {
     val lanesPerWord = 64 / b
     require(k % lanesPerWord == 0,
@@ -442,186 +426,4 @@ object HashFamily {
       s"hash family must be $production or sha256, got '$family'")
     family == "sha256"
   }
-}
-
-/** Base for the fused MinHash signature expressions: unary, deterministic,
-  * null-intolerant, single static kernel call inside whole-stage codegen. */
-abstract class MinHashSigExpression extends UnaryExpression with Serializable {
-  def family: String
-  def numHashes: Int
-  protected val sha: Boolean = HashFamily.isSha256(family, "xxhash64")
-  MinHashKernels.requireLanes(numHashes)
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    if (sha) ArrayType(StringType, containsNull = false)
-    else ArrayType(LongType, containsNull = false)
-}
-
-/** minhash_sig(tokens array<string>, k, family) → array of k lane minima
-  * over token 2-shingles. Null elements are skipped; a token-less input
-  * (empty array or all-null elements) yields NULL — not a shared sentinel
-  * signature that would band-collide every empty document (see
-  * [[MinHashKernels.nonNullTokens]]) — so the expression is nullable even
-  * over a non-null child. */
-case class MinHashSig(child: Expression, numHashes: Int, family: String)
-    extends MinHashSigExpression {
-  override def prettyName: String = "minhash_sig"
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${t.catalogString}")
-  }
-  private val kernelMethod =
-    if (sha) "sigTokensSha" else "sigTokensXx"
-  override protected def nullSafeEval(v: Any): Any =
-    if (sha) MinHashKernels.sigTokensSha(v.asInstanceOf[ArrayData], numHashes)
-    else MinHashKernels.sigTokensXx(v.asInstanceOf[ArrayData], numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => s"""
-      ${ev.value} = graft.functions.MinHashKernels.$kernelMethod($v, $numHashes);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** minhash_sig_chars(s string, shingleK, k, family) → array of k lane
-  * minima over code-point k-gram shingles (whole string when shorter). */
-case class MinHashSigChars(child: Expression, shingleK: Int, numHashes: Int,
-    family: String) extends MinHashSigExpression {
-  require(shingleK > 0)
-  override def prettyName: String = "minhash_sig_chars"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${t.catalogString}")
-  }
-  private val kernelMethod =
-    if (sha) "sigCharsSha" else "sigCharsXx"
-  override protected def nullSafeEval(v: Any): Any =
-    if (sha)
-      MinHashKernels.sigCharsSha(v.asInstanceOf[UTF8String], shingleK, numHashes)
-    else MinHashKernels.sigCharsXx(v.asInstanceOf[UTF8String], shingleK, numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.MinHashKernels.$kernelMethod($v, $shingleK, $numHashes)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** minhash_sig_oph(tokens array<string>, family) → 16-bin one-permutation
-  * MinHash signature with rotation densification
-  * ([[MinHashKernels.sigTokensShaOph]] /
-  * [[MinHashKernels.sigTokensXxOph]]): O(m) per document vs O(k·m) for
-  * [[MinHashSig]] — the scale path for long documents, where the classic
-  * signature's k lane hashes per shingle dominate the fingerprint pass.
-  * Same null semantics as [[MinHashSig]] (token-less → NULL, never a
-  * shared sentinel signature). */
-case class MinHashSigOph(child: Expression, family: String)
-    extends UnaryExpression with Serializable {
-  private val sha = HashFamily.isSha256(family, "xxhash64")
-  override def prettyName: String = "minhash_sig_oph"
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    if (sha) ArrayType(StringType, containsNull = false)
-    else ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${t.catalogString}")
-  }
-  private val kernelMethod =
-    if (sha) "sigTokensShaOph" else "sigTokensXxOph"
-  override protected def nullSafeEval(v: Any): Any =
-    if (sha)
-      MinHashKernels.sigTokensShaOph(v.asInstanceOf[ArrayData])
-    else MinHashKernels.sigTokensXxOph(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => s"""
-      ${ev.value} = graft.functions.MinHashKernels.$kernelMethod($v);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** b-bit MinHash packing ([[MinHashKernels.bbitPackXx]] /
-  * [[MinHashKernels.bbitPackSha]], Li & König 2010): keep only the low b
-  * bits of every lane, packed 64/b lanes per long — shrinking the
-  * signature (and every shuffle that moves it) 64/b ×. Accepts either
-  * hash family by input type: array<long> (xxhash64 lanes) or
-  * array<string> (sha256 hex lanes — low b bits of the digest). Null
-  * signature (token-less document) stays null. */
-case class BBitSig(child: Expression, b: Int)
-    extends UnaryExpression with Serializable {
-  MinHashKernels.requireB(b)
-  override def prettyName: String = "bbit_sig"
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) | ArrayType(StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<long> or array<string> (a minhash signature), got ${t.catalogString}")
-  }
-  // lazy: child.dataType is only legal after analysis resolves the child
-  private lazy val kernelMethod = child.dataType match {
-    case ArrayType(StringType, _) => "bbitPackSha"
-    case _ => "bbitPackXx"
-  }
-  override protected def nullSafeEval(v: Any): Any =
-    if (kernelMethod == "bbitPackSha")
-      MinHashKernels.bbitPackSha(v.asInstanceOf[ArrayData], b)
-    else MinHashKernels.bbitPackXx(v.asInstanceOf[ArrayData], b)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"graft.functions.MinHashKernels.$kernelMethod($v, $b)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Shared base for the packed-b-bit-signature comparators. */
-abstract class BBitCompareExpression
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with Serializable {
-  def b: Int
-  MinHashKernels.requireB(b)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<long> packed signatures, got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-    }
-}
-
-/** Count of agreeing b-bit lanes between two packed signatures. */
-case class BBitMatchCount(left: Expression, right: Expression, b: Int)
-    extends BBitCompareExpression {
-  override def prettyName: String = "bbit_match_count"
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    MinHashKernels.bbitMatchCount(
-      x.asInstanceOf[ArrayData], y.asInstanceOf[ArrayData], b)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (x, y) => s"graft.functions.MinHashKernels.bbitMatchCount($x, $y, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** Li-König unbiased Jaccard estimate from packed b-bit signatures:
-  * (f − 2^-b) / (1 − 2^-b); not clamped (see the kernel doc). */
-case class BBitJaccardEst(left: Expression, right: Expression, b: Int)
-    extends BBitCompareExpression {
-  override def prettyName: String = "bbit_jaccard_est"
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    MinHashKernels.bbitJaccardEst(
-      x.asInstanceOf[ArrayData], y.asInstanceOf[ArrayData], b)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (x, y) => s"graft.functions.MinHashKernels.bbitJaccardEst($x, $y, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }

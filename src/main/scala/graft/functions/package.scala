@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.GraftShims
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
 /** Public Column API for the strsim kernels (the Spark-native analogue of
   * `polars_strsim/__init__.py`'s five exported functions, extended to the
@@ -22,84 +22,87 @@ import org.apache.spark.sql.types.DoubleType
   * Literals broadcast via `lit(...)` (the reference's length-1 Series
   * broadcast, strsim.rs:61-66, is native to relational expressions).
   *
-  * Adding a string-pair kernel: write its static method in
-  * `graft.strsim.StrSimKernels` (or `TextKernels`), add one `bind` entry
-  * to [[StrPairKernel$]] naming it, and one Column function below that
-  * calls `pair`. The entry drives codegen, interpreted eval and the SQL
-  * registration in [[sqlFunctions]].
+  * Adding a kernel: write its static method (in `graft.strsim.StrSimKernels`,
+  * `TextKernels`, or a `*Kernels` object of this package), add one entry
+  * to [[Kernel$]] naming it — its SQL name, input and result types,
+  * literal parameters with their checks, and null rule — and one Column
+  * function below that calls `call`. The entry drives the type check,
+  * codegen, interpreted eval and the SQL registration in [[sqlFunctions]];
+  * no kernel has an Expression class of its own.
   */
 package object functions {
 
-  import StrPairKernel._
+  import Kernel._
 
   private def col(name: String): Column = org.apache.spark.sql.functions.col(name)
   private def wrap(e: Expression): Column = GraftShims.column(e)
   private def expr(c: Column): Expression = GraftShims.expression(c)
-  private def pair(k: StrPairKernel, a: Column, b: Column, args: Any*): Column =
-    wrap(k(expr(a), expr(b), args: _*))
+  /** Kernel `k` over its input Columns, then its literal parameters. */
+  private def call(k: Kernel, inputs: Any*): Column =
+    wrap(k(inputs.map { case c: Column => expr(c); case v => v }: _*))
 
-  def levenshtein_sim(a: Column, b: Column): Column = pair(levenshtein, a, b)
+  def levenshtein_sim(a: Column, b: Column): Column = call(levenshtein, a, b)
   def levenshtein_sim(a: String, b: String): Column = levenshtein_sim(col(a), col(b))
 
-  def jaro_sim(a: Column, b: Column): Column = pair(jaro, a, b)
+  def jaro_sim(a: Column, b: Column): Column = call(jaro, a, b)
   def jaro_sim(a: String, b: String): Column = jaro_sim(col(a), col(b))
 
-  def jaro_winkler_sim(a: Column, b: Column): Column = pair(jaroWinkler, a, b)
+  def jaro_winkler_sim(a: Column, b: Column): Column = call(jaroWinkler, a, b)
   def jaro_winkler_sim(a: String, b: String): Column = jaro_winkler_sim(col(a), col(b))
 
-  def jaccard_sim(a: Column, b: Column): Column = pair(jaccard, a, b)
+  def jaccard_sim(a: Column, b: Column): Column = call(jaccard, a, b)
   def jaccard_sim(a: String, b: String): Column = jaccard_sim(col(a), col(b))
 
-  def sorensen_dice_sim(a: Column, b: Column): Column = pair(sorensenDice, a, b)
+  def sorensen_dice_sim(a: Column, b: Column): Column = call(sorensenDice, a, b)
   def sorensen_dice_sim(a: String, b: String): Column = sorensen_dice_sim(col(a), col(b))
 
-  def damerau_levenshtein_sim(a: Column, b: Column): Column = pair(damerauLevenshtein, a, b)
+  def damerau_levenshtein_sim(a: Column, b: Column): Column = call(damerauLevenshtein, a, b)
   def damerau_levenshtein_sim(a: String, b: String): Column =
     damerau_levenshtein_sim(col(a), col(b))
 
-  def hamming_sim(a: Column, b: Column): Column = pair(hamming, a, b)
+  def hamming_sim(a: Column, b: Column): Column = call(hamming, a, b)
   def hamming_sim(a: String, b: String): Column = hamming_sim(col(a), col(b))
 
   /** Overlap (Szymkiewicz-Simpson) coefficient over code-point bags:
     * Σmin / min(|a|,|b|) — the containment scorer of the Jaccard family. */
-  def overlap_sim(a: Column, b: Column): Column = pair(overlap, a, b)
+  def overlap_sim(a: Column, b: Column): Column = call(overlap, a, b)
   def overlap_sim(a: String, b: String): Column = overlap_sim(col(a), col(b))
 
   /** Bag-cosine similarity over per-code-point counts (string kernel; the
     * embedding-vector cosine is [[cosine_sim]]). */
-  def cosine_bag_sim(a: Column, b: Column): Column = pair(cosineBag, a, b)
+  def cosine_bag_sim(a: Column, b: Column): Column = call(cosineBag, a, b)
   def cosine_bag_sim(a: String, b: String): Column = cosine_bag_sim(col(a), col(b))
 
   /** Normalized optimal-string-alignment (restricted Damerau-Levenshtein)
     * similarity: transposition-aware at linear memory — never NULL, unlike
     * [[damerau_levenshtein_sim]]'s quadratic-cap policy. */
-  def osa_sim(a: Column, b: Column): Column = pair(osa, a, b)
+  def osa_sim(a: Column, b: Column): Column = call(osa, a, b)
   def osa_sim(a: String, b: String): Column = osa_sim(col(a), col(b))
 
   /** Normalized LCS similarity: 2·|LCS|/(|a|+|b|) over code points —
     * order-preserving overlap that charges nothing for unmatched
     * interleaved material (middle names, titles). */
-  def lcs_sim(a: Column, b: Column): Column = pair(lcs, a, b)
+  def lcs_sim(a: Column, b: Column): Column = call(lcs, a, b)
   def lcs_sim(a: String, b: String): Column = lcs_sim(col(a), col(b))
 
   /** Needleman-Wunsch global-alignment similarity (match +1, mismatch −1,
     * gap −1; 0.5 + S/(2·max len)) — rewards matches, not only charging
     * edits: long shared runs dominate scattered mismatches. */
-  def needleman_wunsch_sim(a: Column, b: Column): Column = pair(needlemanWunsch, a, b)
+  def needleman_wunsch_sim(a: Column, b: Column): Column = call(needlemanWunsch, a, b)
   def needleman_wunsch_sim(a: String, b: String): Column =
     needleman_wunsch_sim(col(a), col(b))
 
   /** Smith-Waterman local-alignment similarity (best local window over
     * min(|a|,|b|)) — 1.0 on exact substring containment; the scorer for
     * one-side-truncated fields. */
-  def smith_waterman_sim(a: Column, b: Column): Column = pair(smithWaterman, a, b)
+  def smith_waterman_sim(a: Column, b: Column): Column = call(smithWaterman, a, b)
   def smith_waterman_sim(a: String, b: String): Column =
     smith_waterman_sim(col(a), col(b))
 
   /** Normalized q-gram profile similarity (Ukkonen): 1 − Σ|Δcount|/(nA+nB)
     * over code-point q-grams, q a 1..3 literal — the cheap edit-distance
     * lower-bound pre-filter (lev ≥ d/(2q)). */
-  def qgram_sim(a: Column, b: Column, q: Int): Column = pair(qgram, a, b, q)
+  def qgram_sim(a: Column, b: Column, q: Int): Column = call(qgram, a, b, q)
   def qgram_sim(a: String, b: String, q: Int): Column =
     qgram_sim(col(a), col(b), q)
 
@@ -108,19 +111,19 @@ package object functions {
     * deletions; 1 − dist/(2·max len)) — the edit-distance view of
     * phonetic matching, where [[nysiis_key]]/Soundex give only the
     * blocking-key view. */
-  def editex_sim(a: Column, b: Column): Column = pair(editex, a, b)
+  def editex_sim(a: Column, b: Column): Column = call(editex, a, b)
   def editex_sim(a: String, b: String): Column = editex_sim(col(a), col(b))
 
   /** Longest-common-substring similarity: |longest contiguous shared
     * run|/max(|a|,|b|) — strict under proper containment where
     * [[smith_waterman_sim]] saturates at 1.0. */
-  def lcsstr_sim(a: Column, b: Column): Column = pair(lcsstr, a, b)
+  def lcsstr_sim(a: Column, b: Column): Column = call(lcsstr, a, b)
   def lcsstr_sim(a: String, b: String): Column = lcsstr_sim(col(a), col(b))
 
   /** Affine-gap (Gotoh) global alignment similarity: match +1, mismatch
     * −1, gap of length L costs 1 + 0.5·(L−1) — one long gap beats many
     * scattered ones, unlike the unit-gap [[needleman_wunsch_sim]]. */
-  def affine_gap_sim(a: Column, b: Column): Column = pair(affineGap, a, b)
+  def affine_gap_sim(a: Column, b: Column): Column = call(affineGap, a, b)
   def affine_gap_sim(a: String, b: String): Column = affine_gap_sim(col(a), col(b))
 
   /** Bag similarity over code-point multisets: Σmin/max(|a|,|b|). Bag
@@ -128,13 +131,13 @@ package object functions {
     * is a sound (and the cheapest) admission filter in front of
     * `levenshtein_sim(a,b) >= θ` — below [[qgram_sim]] in the pre-filter
     * stack. */
-  def bag_sim(a: Column, b: Column): Column = pair(bag, a, b)
+  def bag_sim(a: Column, b: Column): Column = call(bag, a, b)
   def bag_sim(a: String, b: String): Column = bag_sim(col(a), col(b))
 
   /** Ratcliff-Obershelp (gestalt) similarity — Python difflib's
     * SequenceMatcher.ratio (without junk heuristics): 2·M/(|a|+|b|) over
     * recursively matched longest-common-substring blocks. */
-  def ratcliff_obershelp_sim(a: Column, b: Column): Column = pair(ratcliffObershelp, a, b)
+  def ratcliff_obershelp_sim(a: Column, b: Column): Column = call(ratcliffObershelp, a, b)
   def ratcliff_obershelp_sim(a: String, b: String): Column =
     ratcliff_obershelp_sim(col(a), col(b))
 
@@ -142,7 +145,7 @@ package object functions {
     * best-window variant): max gestalt ratio between the shorter string
     * and any same-length code-point window of the longer — 1.0 on
     * verbatim containment ("ibm" in "ibm corporation"). */
-  def partial_ratcliff_sim(a: Column, b: Column): Column = pair(partialRatcliff, a, b)
+  def partial_ratcliff_sim(a: Column, b: Column): Column = call(partialRatcliff, a, b)
   def partial_ratcliff_sim(a: String, b: String): Column =
     partial_ratcliff_sim(col(a), col(b))
 
@@ -150,13 +153,13 @@ package object functions {
     * substitutions between visually-confusable characters (O↔0, l↔1,
     * S↔5, …) cost half a regular edit; see
     * [[graft.strsim.StrSimKernels.ocrConfusions]]. */
-  def confusion_lev_sim(a: Column, b: Column): Column = pair(confusionLevSim, a, b)
+  def confusion_lev_sim(a: Column, b: Column): Column = call(confusionLevSim, a, b)
   def confusion_lev_sim(a: String, b: String): Column =
     confusion_lev_sim(col(a), col(b))
 
   /** Raw confusion-weighted edit distance (integer; 2× Levenshtein when
     * no confusable pair participates). */
-  def confusion_lev_dist(a: Column, b: Column): Column = pair(confusionLevDist, a, b)
+  def confusion_lev_dist(a: Column, b: Column): Column = call(confusionLevDist, a, b)
   def confusion_lev_dist(a: String, b: String): Column =
     confusion_lev_dist(col(a), col(b))
 
@@ -175,7 +178,7 @@ package object functions {
   /** Tversky index over code-point bags with literal weights α (a-only
     * mass) and β (b-only mass): α=β=1 is Jaccard, α=β=0.5 is Dice. */
   def tversky_sim(a: Column, b: Column, alpha: Double, beta: Double): Column =
-    pair(tversky, a, b, alpha, beta)
+    call(tversky, a, b, alpha, beta)
 
   // Token-ratio compositions are built at the CATALYST level (not the
   // Column functions API): Column-API nodes are UnresolvedFunction wrappers
@@ -273,65 +276,65 @@ package object functions {
 
   /** Monge-Elkan token similarity with Jaro-Winkler inner kernel
     * (asymmetric; mean over a's tokens of the best JW match in b). */
-  def monge_elkan_jw(a: Column, b: Column): Column = pair(mongeElkanJw, a, b)
+  def monge_elkan_jw(a: Column, b: Column): Column = call(mongeElkanJw, a, b)
   def monge_elkan_jw(a: String, b: String): Column = monge_elkan_jw(col(a), col(b))
 
   /** Exact code-point Levenshtein distance when ≤ k, else k+1 (banded
     * O(k·n) DP — the edit-distance pre-filter tier). */
-  def levenshtein_capped(a: Column, b: Column, k: Int): Column = pair(levenshteinCapped, a, b, k)
+  def levenshtein_capped(a: Column, b: Column, k: Int): Column = call(levenshteinCapped, a, b, k)
 
   /** `true` iff code-point Levenshtein distance ≤ k (banded kernel). */
-  def levenshtein_within(a: Column, b: Column, k: Int): Column = pair(levenshteinWithin, a, b, k)
+  def levenshtein_within(a: Column, b: Column, k: Int): Column = call(levenshteinWithin, a, b, k)
 
   /** Bag distance (integer face of [[bag_sim]]): max(|a|,|b|) − Σmin over
     * code-point multisets — a Levenshtein lower bound at sorted-merge
     * cost. */
-  def bag_dist(a: Column, b: Column): Column = pair(bagDist, a, b)
+  def bag_dist(a: Column, b: Column): Column = call(bagDist, a, b)
   def bag_dist(a: String, b: String): Column = bag_dist(col(a), col(b))
 
   /** `true` iff bag distance ≤ k — the tier-0 admission filter in front
     * of [[levenshtein_within]] (same k): bag distance lower-bounds edit
     * distance, so a bag rejection is a sound Levenshtein rejection and
     * the banded DP only runs on bag survivors. */
-  def bag_within(a: Column, b: Column, k: Int): Column = pair(bagWithin, a, b, k)
+  def bag_within(a: Column, b: Column, k: Int): Column = call(bagWithin, a, b, k)
 
   /** 64-bit SimHash over whitespace tokens (near-dup signature). */
-  def simhash64(c: Column): Column = wrap(SimHash64(expr(c)))
+  def simhash64(c: Column): Column = call(simHash64, c)
 
   /** 60-bit sha256-family SimHash (SQL-reproducible variant). */
-  def simhash60_sha(c: Column): Column = wrap(SimHashSha60(expr(c)))
+  def simhash60_sha(c: Column): Column = call(simHashSha60, c)
 
   /** Min rolling-hash fingerprint over byte k-grams (w-shingling). */
-  def min_kgram_hash(c: Column, k: Int): Column = wrap(MinKGramHash(expr(c), k))
+  def min_kgram_hash(c: Column, k: Int): Column = call(minKGramHash, c, k)
 
   /** b-bit MinHash packing (Li & König 2010): keep the low b bits of each
     * signature lane, packed 64/b lanes per long — the signature (and every
     * shuffle that moves it) shrinks 64/b ×. Input: a [[minhash_sig]] /
     * [[minhash_sig_oph]] array (either hash family; picked by input type).
     * b ∈ {4, 8, 16, 32}; lane count must fill whole words. */
-  def bbit_sig(sig: Column, b: Int): Column = wrap(BBitSig(expr(sig), b))
+  def bbit_sig(sig: Column, b: Int): Column = call(bbitSig, sig, b)
 
   /** Count of agreeing b-bit lanes between two [[bbit_sig]] outputs. */
   def bbit_match_count(a: Column, bCol: Column, b: Int): Column =
-    wrap(BBitMatchCount(expr(a), expr(bCol), b))
+    call(bbitMatchCount, a, bCol, b)
 
   /** Li-König unbiased Jaccard estimate from packed b-bit signatures:
     * (f − 2^-b)/(1 − 2^-b) with f the agreeing-lane fraction. Unclamped —
     * below-chance samples estimate negative by design. */
   def bbit_jaccard_est(a: Column, bCol: Column, b: Int): Column =
-    wrap(BBitJaccardEst(expr(a), expr(bCol), b))
+    call(bbitJaccardEst, a, bCol, b)
 
   /** Unicode normalization to a plan-time form (NFC/NFD/NFKC/NFKD) — run
     * it FIRST in any linkage pipeline: every downstream kernel, key, and
     * signature compares raw code points, so é (composed) and e+◌́
     * (decomposed) only match after canonicalization. */
   def unicode_norm(c: Column, form: String): Column =
-    wrap(UnicodeNorm(expr(c), form))
+    call(unicodeNorm, c, form)
 
   /** Accent strip (NFD → drop combining marks → NFC): Müller → Muller.
     * Matches DuckDB/ICU strip_accents on the Latin palette;
     * non-decomposable letters (ł ø ß æ) are kept. */
-  def strip_accents(c: Column): Column = wrap(StripAccents(expr(c)))
+  def strip_accents(c: Column): Column = call(stripAccents, c)
   def strip_accents(c: String): Column = strip_accents(col(c))
 
   /** Pinned match-normalization chain for name/title fields — the
@@ -348,7 +351,7 @@ package object functions {
     import org.apache.spark.sql.catalyst.expressions.{Literal, Lower,
       RegExpReplace, StringTrim}
     new StringTrim(RegExpReplace(
-      Lower(StripAccents(UnicodeNorm(e, "NFC"))),
+      Lower(stripAccents(unicodeNorm(e, "NFC"))),
       Literal("[^\\p{L}\\p{Nd}]+"), Literal(" ")))
   }
 
@@ -377,94 +380,93 @@ package object functions {
 
   private def ngramFingerprintExpr(e: Expression, n: Int): Expression = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, RegExpReplace}
-    NgramFingerprint(
-      RegExpReplace(normalizeMatchExpr(e), Literal(" "), Literal("")), n)
+    ngramFingerprint(RegExpReplace(normalizeMatchExpr(e), Literal(" "), Literal("")), n)
   }
 
   /** NYSIIS phonetic key (pinned variant; see TextKernels.nysiis). */
-  def nysiis_key(c: Column): Column = wrap(NysiisKey(expr(c)))
+  def nysiis_key(c: Column): Column = call(nysiis, c)
   def nysiis_key(c: String): Column = nysiis_key(col(c))
 
   /** Cologne phonetics (Kölner Phonetik) blocking key — variable-length
     * digit code, the German-tuned third phonetic family. */
-  def cologne_key(c: Column): Column = wrap(CologneKey(expr(c)))
+  def cologne_key(c: Column): Column = call(cologne, c)
   def cologne_key(c: String): Column = cologne_key(col(c))
 
   /** Original Metaphone blocking key (pinned positional variant; no
     * truncation) — fifth phonetic family. */
-  def metaphone_key(c: Column): Column = wrap(MetaphoneKey(expr(c)))
+  def metaphone_key(c: Column): Column = call(metaphone, c)
   def metaphone_key(c: String): Column = metaphone_key(col(c))
 
   /** Match Rating Approach codex — fourth phonetic key; compare with
     * [[mra_similarity]]/[[mra_match]], not key equality. */
-  def mra_codex(c: Column): Column = wrap(MraCodex(expr(c)))
+  def mra_codex(c: Column): Column = call(mraCodex, c)
   def mra_codex(c: String): Column = mra_codex(col(c))
 
   /** MRA comparison rating 0..6; NULL when MRA declares "no comparison"
     * (codex length gap >= 3). */
-  def mra_similarity(a: Column, b: Column): Column = pair(mraSimilarity, a, b)
+  def mra_similarity(a: Column, b: Column): Column = call(mraSimilarity, a, b)
   def mra_similarity(a: String, b: String): Column =
     mra_similarity(col(a), col(b))
 
   /** MRA decision: rating >= the combined-codex-length minimum; NULL =
     * "no comparison". */
-  def mra_match(a: Column, b: Column): Column = pair(mraMatch, a, b)
+  def mra_match(a: Column, b: Column): Column = call(mraMatch, a, b)
   def mra_match(a: String, b: String): Column = mra_match(col(a), col(b))
 
   /** Gopher-style repetition counters (array<long> of 6 — line instances,
     * dup line instances, dup line chars, total line chars, top bigram
     * coverage, total word chars); fractions derive by integer division. */
-  def repetition_counters(c: Column): Column = wrap(RepetitionCounters(expr(c)))
+  def repetition_counters(c: Column): Column = call(repetitionCounters, c)
 
   /** Fused codegen cosine similarity over array<float> columns. */
-  def cosine_sim(a: Column, b: Column): Column = wrap(CosineSim(expr(a), expr(b)))
+  def cosine_sim(a: Column, b: Column): Column = call(cosine, a, b)
 
   /** Fused left-fold dot product (the dot inside cosine_sim). */
-  def vec_dot(a: Column, b: Column): Column = wrap(VecDot(expr(a), expr(b)))
+  def vec_dot(a: Column, b: Column): Column = call(vecDot, a, b)
 
   /** Fused vector norm (the norm inside cosine_sim): precompute per
     * vector, then `vec_dot(a,b) / (norm_a * norm_b)` == cosine_sim(a,b)
     * bit-for-bit at a third of the per-pair flops. */
-  def vec_norm(v: Column): Column = wrap(VecNorm(expr(v)))
+  def vec_norm(v: Column): Column = call(vecNorm, v)
 
   /** Packed sign bits of one LSH band's hyperplane projections (fused).
     * The plane matrix is converted to immutable Seqs so structurally equal
     * calls build structurally equal expressions (plan canonicalization,
     * subexpression elimination, and exchange reuse all key on equals). */
   def hyperplane_sig(v: Column, planes: Array[Array[Double]]): Column =
-    wrap(HyperplaneSig(expr(v), planes.toSeq.map(_.toSeq)))
+    call(hyperplaneSig, v, planes.toSeq.map(_.toSeq))
 
   /** One-pass MinHash signature over token 2-shingles of an array<string>
     * column; family ∈ {xxhash64 (production), sha256 (oracle-checkable)}. */
   def minhash_sig(tokens: Column, numHashes: Int, family: String = "xxhash64"): Column =
-    wrap(MinHashSig(expr(tokens), numHashes, family))
+    call(minhashSig, tokens, numHashes, family)
 
   /** One-pass MinHash signature over code-point k-gram shingles of a
     * string column. */
   def minhash_sig_chars(s: Column, shingleK: Int, numHashes: Int,
       family: String = "xxhash64"): Column =
-    wrap(MinHashSigChars(expr(s), shingleK, numHashes, family))
+    call(minhashSigChars, s, shingleK, numHashes, family)
 
   /** One-permutation MinHash signature (16 bins, rotation-densified) over
     * token 2-shingles — O(m) per document vs O(k·m) for [[minhash_sig]];
     * family ∈ {xxhash64 (production), sha256 (oracle-checkable)}. */
   def minhash_sig_oph(tokens: Column, family: String = "xxhash64"): Column =
-    wrap(MinHashSigOph(expr(tokens), family))
+    call(minhashSigOph, tokens, family)
 
   /** CLK Bloom-filter PPRL encoder (Schnell-Bachteler-Reiher), set-bit
     * positions form: m-bit filter, g double-hashed sha256 positions per
     * padded code-point bigram. */
   def clk_bits(s: Column, m: Int, g: Int, salt: String = ""): Column =
-    wrap(ClkBits(expr(s), m, g, salt))
+    call(clkBits, s, m, g, salt)
 
   /** CLK Bloom-filter PPRL encoder, packed form (m/64 longs) — compare
     * with [[bloom_dice]]. */
   def clk_sig(s: Column, m: Int, g: Int, salt: String = ""): Column =
-    wrap(ClkSig(expr(s), m, g, salt))
+    call(clkSig, s, m, g, salt)
 
   /** Dice coefficient of two packed CLK filters (popcount arithmetic). */
   def bloom_dice(a: Column, b: Column): Column =
-    wrap(BloomDice(expr(a), expr(b)))
+    call(bloomDice, a, b)
 
   /** Extract a foldable non-negative integer literal argument, or raise a
     * CLEAR analysis-time error (a non-foldable column/expression would
@@ -508,73 +510,40 @@ package object functions {
       build(es)
     }
 
-  /** A kernel's literal parameters, read from the arguments after (a, b). */
-  private def kernelCall(k: StrPairKernel)(es: Seq[Expression]): Expression =
-    k(es(0), es(1), k.params.zip(es.drop(2)).map[Any] {
-      case ((p, DoubleType), e) => litDouble(e, k.name, p)
-      case ((p, _), e) => litInt(e, k.name, p)
-    }: _*)
+  /** A kernel's SQL builder: its inputs, then its literal parameters read
+    * from the remaining arguments (each must be foldable); an omitted
+    * trailing parameter takes its default. */
+  private def kernelCall(k: Kernel): (String, Seq[Expression] => Expression) = {
+    val required = k.params.count(_.default.isEmpty)
+    arity(k.name, k.arity + required to k.arity + k.params.size: _*) { es =>
+      val (inputs, lits) = es.splitAt(k.arity)
+      k(inputs ++ k.params.zipWithIndex.map { case (p, i) =>
+        lits.lift(i).fold(p.default.get)(e => p.tpe match {
+          case DoubleType => litDouble(e, k.name, p.name)
+          case StringType => litStr(e, k.name, p.name)
+          case _ => litInt(e, k.name, p.name)
+        })
+      }: _*)
+    }
+  }
 
   /** SQL function names → expression builders; each rejects a wrong
     * argument count. One convention everywhere: every similarity kernel
     * is `<name>_sim` (`levenshtein` alone would shadow Spark's built-in
     * DISTANCE of the same name, and a mixed bare/suffixed surface invites
     * silent semantic mixups — the suffix states these return a [0,1]
-    * similarity, not a distance). Every string-pair kernel registers from
-    * its [[StrPairKernel]] entry; literal arguments must be foldable. */
+    * similarity, not a distance). Every kernel registers from its
+    * [[Kernel]] entry, except the two with `sql = false`:
+    * `ngram_fingerprint` (SQL composes it as `ngram_fingerprint_key`) and
+    * `hyperplane_sig` (SQL has no literal for its plane matrix). */
   val sqlFunctions: Map[String, Seq[Expression] => Expression] = (
-    StrPairKernel.all.map(k => arity(k.name, 2 + k.params.size)(kernelCall(k))) ++ Seq(
+    Kernel.all.filter(_.sql).map(kernelCall) ++ Seq(
       // composed (not bespoke) kernels — SQL and Column paths share the one
       // catalyst-level composition
       arity("token_sort_ratio", 2)(es => tokenSortRatioExpr(es(0), es(1))),
       arity("token_set_ratio", 2)(es => tokenSetRatioExpr(es(0), es(1))),
       arity("token_jaccard_sim", 2)(es => tokenJaccardExpr(es(0), es(1))),
       arity("token_overlap_sim", 2)(es => tokenOverlapExpr(es(0), es(1))),
-      arity("simhash64", 1)(es => SimHash64(es(0))),
-      arity("repetition_counters", 1)(es => RepetitionCounters(es(0))),
-      arity("simhash60_sha", 1)(es => SimHashSha60(es(0))),
-      arity("cosine_sim", 2)(es => CosineSim(es(0), es(1))),
-      arity("vec_dot", 2)(es => VecDot(es(0), es(1))),
-      arity("vec_norm", 1)(es => VecNorm(es(0))),
-      // numHashes / shingleK / family must be foldable literals; family is
-      // optional (defaults to the production xxhash64):
-      //   minhash_sig(tokens, 16) / minhash_sig(tokens, 16, 'sha256')
-      //   minhash_sig_chars(s, 3, 12) / minhash_sig_chars(s, 3, 12, 'sha256')
-      arity("minhash_sig", 2, 3)(es => MinHashSig(es(0),
-        litInt(es(1), "minhash_sig", "numHashes"),
-        if (es.length > 2) litStr(es(2), "minhash_sig", "family") else "xxhash64")),
-      arity("minhash_sig_chars", 3, 4)(es => MinHashSigChars(es(0),
-        litInt(es(1), "minhash_sig_chars", "shingleK"),
-        litInt(es(2), "minhash_sig_chars", "numHashes"),
-        if (es.length > 3) litStr(es(3), "minhash_sig_chars", "family") else "xxhash64")),
-      //   minhash_sig_oph(tokens) / minhash_sig_oph(tokens, 'sha256')
-      arity("minhash_sig_oph", 1, 2)(es => MinHashSigOph(es(0),
-        if (es.length > 1) litStr(es(1), "minhash_sig_oph", "family") else "xxhash64")),
-      //   clk_bits(s, 512, 4) / clk_sig(s, 512, 4) / bloom_dice(a, b)
-      arity("clk_bits", 3, 4)(es => ClkBits(es(0),
-        litInt(es(1), "clk_bits", "m"), litInt(es(2), "clk_bits", "g"),
-        if (es.length > 3) litStr(es(3), "clk_bits", "salt") else "")),
-      arity("clk_sig", 3, 4)(es => ClkSig(es(0),
-        litInt(es(1), "clk_sig", "m"), litInt(es(2), "clk_sig", "g"),
-        if (es.length > 3) litStr(es(3), "clk_sig", "salt") else "")),
-      arity("bloom_dice", 2)(es => BloomDice(es(0), es(1))),
-      // k must be a foldable int literal: min_kgram_hash(text, 16)
-      arity("min_kgram_hash", 2)(es => MinKGramHash(es(0),
-        litInt(es(1), "min_kgram_hash", "k"))),
-      arity("nysiis_key", 1)(es => NysiisKey(es(0))),
-      arity("cologne_key", 1)(es => CologneKey(es(0))),
-      arity("metaphone_key", 1)(es => MetaphoneKey(es(0))),
-      arity("mra_codex", 1)(es => MraCodex(es(0))),
-      // b must be a foldable literal in {4,8,16,32}: bbit_sig(sig, 8)
-      arity("bbit_sig", 2)(es => BBitSig(es(0), litInt(es(1), "bbit_sig", "b"))),
-      arity("bbit_match_count", 3)(es => BBitMatchCount(es(0), es(1),
-        litInt(es(2), "bbit_match_count", "b"))),
-      arity("bbit_jaccard_est", 3)(es => BBitJaccardEst(es(0), es(1),
-        litInt(es(2), "bbit_jaccard_est", "b"))),
-      // form must be a foldable string literal: unicode_norm(name, 'NFC')
-      arity("unicode_norm", 2)(es => UnicodeNorm(es(0),
-        litStr(es(1), "unicode_norm", "form"))),
-      arity("strip_accents", 1)(es => StripAccents(es(0))),
       arity("normalize_match", 1)(es => normalizeMatchExpr(es(0))),
       arity("fingerprint_key", 1)(es => fingerprintExpr(es(0))),
       // n must be a foldable literal in 1..8: ngram_fingerprint_key(name, 2)

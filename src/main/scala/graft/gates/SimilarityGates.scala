@@ -23,7 +23,7 @@ private[graft] object SimilarityGates {
        |SELECT vec_id, neighbor_id, rank, cos FROM ranked WHERE rank <= 3""".stripMargin
 
   /** DuckDB cosine over two 64-dim float list columns — the same strict
-    * left folds as the fused CosineSim kernel (pattern proven bit-exact by
+    * left folds as the fused cosine_sim kernel (pattern proven bit-exact by
     * q_ann_bruteforce). */
   private def cosSql(a: String, b: String): String =
     s"""list_sum(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))

@@ -204,7 +204,7 @@ object Dedup {
     * [[bandIndex]] return the dropped buckets of this banding).
     *
     * The whole k-hash signature is ONE fused codegen expression per
-    * document ([[graft.functions.MinHashSig]]) — no shingle explode, no
+    * document ([[graft.functions.minhash_sig]]) — no shingle explode, no
     * k-column aggregate, no extra shuffle; the heaviest remaining shuffle
     * is the banded candidate join itself, which is the operator's point.
     *

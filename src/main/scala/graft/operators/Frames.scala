@@ -13,11 +13,18 @@ import DriverFinish.{Desc, Direction}
   * operator and query materializes through one of two entry points, with
   * no option to pick:
   *
-  *  - [[shared]]: a lazy local checkpoint. The first consumer's job
-  *    computes and stores the blocks; every later consumer, concurrent
-  *    AQE stages included, reads them. A frame that already is a
-  *    checkpoint (a `LogicalRDD` plan) comes back unchanged, so a caller's
-  *    materialization is never copied a second time.
+  *  - [[shared]]: a local checkpoint, lazy only in its final stage. The
+  *    call plans the frame and already runs its broadcasts and, under
+  *    AQE, its shuffle-map stages: `localCheckpoint(eager = false)`
+  *    executes the physical plan when it builds the checkpoint RDD.
+  *    SetSimJoinSpec's query count shows it: the probes' checkpoint in
+  *    `prefixContainmentPairs` is one SQL execution of its own, run before
+  *    any consumer (3 jobs under AQE, 1 with AQE off). The first
+  *    consumer's job computes and stores the final stage's blocks; every
+  *    later consumer, concurrent AQE stages included, reads them. ROADMAP
+  *    direction 8 is the plan to make every stage lazy. A frame that
+  *    already is a checkpoint (a `LogicalRDD` plan) comes back unchanged,
+  *    so a caller's materialization is never copied a second time.
   *  - [[round]]: for round state a loop joins back to itself every round.
   *    One count materializes the frame and sizes it; it is then rebuilt
   *    from the stored blocks, which drops the size estimate of the plan

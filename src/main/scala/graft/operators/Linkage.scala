@@ -70,7 +70,7 @@ object Linkage {
   /** Stage 2 — MinHash band keys over char k-shingles of the normalized
     * name (secondary blocking key; catches host misspellings the
     * normalized-url key misses). The whole signature is ONE fused codegen
-    * expression per row ([[graft.functions.MinHashSigChars]]) — the old
+    * expression per row ([[graft.functions.minhash_sig_chars]]) — the old
     * explode → k-column min-agg form paid a full shuffle of every shingle
     * row for nothing. `hashFamily` as in [[Dedup.minhashLshPairs]]:
     * `xxhash64` for production, `sha256` for the ANSI-SQL-reproducible
@@ -335,23 +335,16 @@ object Linkage {
   def blockingProfile(keys: DataFrame, bucketCap: Int = 200,
       hardCap: Int = 100000): DataFrame = {
     val sized = Tiers.sizes(keys, Seq("key"))
-    val cold = col("n") <= math.min(bucketCap, hardCap)
-    val pairs2 = col("n").cast("decimal(38,0)") *
-      (col("n") - 1).cast("decimal(38,0)")
-    sized.agg(
-      count(lit(1)).as("n_blocks"),
-      sum(col("n")).as("n_assignments"),
-      max(col("n")).as("max_block"),
-      sum(when(cold, 1L).otherwise(0L)).as("blocks_cold"),
-      sum(when(col("n") > bucketCap && col("n") <= hardCap, 1L)
-        .otherwise(0L)).as("blocks_salted"),
-      sum(when(col("n") > hardCap, 1L).otherwise(0L)).as("blocks_dropped"),
-      (sum(when(cold, pairs2).otherwise(lit(0)))
-        / lit(2)).cast("decimal(38,0)").as("pairs_cold"),
-      (sum(when(col("n") > bucketCap && col("n") <= hardCap, pairs2)
-        .otherwise(lit(0))) / lit(2)).cast("decimal(38,0)").as("pairs_salted"),
-      (sum(when(col("n") > hardCap, pairs2).otherwise(lit(0)))
-        / lit(2)).cast("decimal(38,0)").as("pairs_dropped"))
+    val n = col("n")
+    val tiers = Seq("cold" -> Tiers.isCold(n, bucketCap, hardCap),
+      "salted" -> Tiers.isSalted(n, bucketCap, hardCap), "dropped" -> Tiers.isDropped(n, hardCap))
+    val pairs2 = n.cast("decimal(38,0)") * (n - 1).cast("decimal(38,0)")
+    sized.agg(count(lit(1)).as("n_blocks"), Seq(sum(n).as("n_assignments"),
+      max(n).as("max_block")) ++
+      tiers.map { case (t, in) => sum(when(in, 1L).otherwise(0L)).as(s"blocks_$t") } ++
+      tiers.map { case (t, in) =>
+        (sum(when(in, pairs2).otherwise(lit(0))) / lit(2)).cast("decimal(38,0)").as(s"pairs_$t")
+      }: _*)
   }
 
   /** Sorted-neighborhood blocking (Hernández-Stolfo): order records by a

@@ -32,7 +32,7 @@ object Similarity {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity via the fused codegen kernel
-    * ([[graft.functions.CosineSim]]): bit-identical to
+    * ([[graft.functions.cosine_sim]]): bit-identical to
     * `dot / (norm * norm)` in left-fold doubles, ~20× faster than the
     * interpreted higher-order-function form. */
   def cosine(a: Column, b: Column): Column = graft.functions.cosine_sim(a, b)
@@ -352,7 +352,7 @@ object Similarity {
       dim: Int, bands: Int, planesPerBand: Int, seed: Long): DataFrame = {
     val planes = hyperplanes(dim, bands, planesPerBand, seed)
     val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-    // band signature = ONE fused codegen call per band (HyperplaneSig);
+    // band signature = ONE fused codegen call per band (hyperplane_sig);
     // the interpreted higher-order `dot` here used to dominate the whole
     // operator (~20× the fused cost). Bit semantics identical: bit p set
     // iff the left-fold double dot with plane p is > 0.

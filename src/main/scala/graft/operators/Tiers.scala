@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** An operator's output and the record of what its cap dropped, from one
@@ -63,6 +63,14 @@ private[operators] object Tiers {
       sized.where(col("n") > cap))
   }
 
+  /** The tier boundaries on a bucket size `n`, stated once for [[pairs]],
+    * [[probe]] and [[Linkage.blockingProfile]]: cold n ≤ min(`bucketCap`,
+    * `hardCap`); salted `bucketCap` < n ≤ `hardCap` (empty when `hardCap` ≤
+    * `bucketCap`); dropped n > `hardCap`. Each bucket is in exactly one. */
+  def isCold(n: Column, bucketCap: Int, hardCap: Int): Column = n <= math.min(bucketCap, hardCap)
+  def isSalted(n: Column, bucketCap: Int, hardCap: Int): Column = n > bucketCap && n <= hardCap
+  def isDropped(n: Column, hardCap: Int): Column = n > hardCap
+
   /** Canonical pairs (`<id>_a` < `<id>_b`) of members sharing a bucket, one
     * row per pair per shared bucket, cold and salted tiers unioned. Each
     * `payload` column rides along as `<p>_a`/`<p>_b`, aligned with the
@@ -82,16 +90,16 @@ private[operators] object Tiers {
     val keyed = members.join(bucketSizes, keys)
     val n = col("n")
     val cols = id +: payload
-    def side(s: String) = keyed.where(n <= math.min(bucketCap, hardCap))
+    def side(s: String) = keyed.where(isCold(n, bucketCap, hardCap))
       .select(keys.map(col) ++ cols.map(c => col(c).as(s"${c}_$s")): _*)
     val cold = side("a").join(side("b"), keys)
       .where(col(s"${id}_a") < col(s"${id}_b"))
       .select(cols.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
     val out = if (hardCap <= bucketCap) cold
       else cold.union(saltedSelfJoin(
-        keyed.where(n > bucketCap && n <= hardCap),
+        keyed.where(isSalted(n, bucketCap, hardCap)),
         keys, id, payload, saltGroups))
-    Capped(out, bucketSizes.where(n > hardCap))
+    Capped(out, bucketSizes.where(isDropped(n, hardCap)))
   }
 
   /** Probe rows joined with the index members sharing their key, one row
@@ -118,10 +126,10 @@ private[operators] object Tiers {
     val keyed = index.join(sized, keys)
     val n = col("n")
     val out = (keys ++ Seq(probeId, indexId) ++ probePayload).map(col)
-    val cold = keyed.where(n <= math.min(bucketCap, hardCap))
+    val cold = keyed.where(isCold(n, bucketCap, hardCap))
       .join(probes, keys).select(out: _*)
     val joined = if (hardCap <= bucketCap) cold else {
-      val hot = n > bucketCap && n <= hardCap
+      val hot = isSalted(n, bucketCap, hardCap)
       val idx = keyed.where(hot)
         .withColumn("__salt", pmod(xxhash64(col(indexId)), lit(saltGroups)))
       val prb = probes.join(sized.where(hot).select(keys.map(col): _*), keys)
@@ -130,7 +138,7 @@ private[operators] object Tiers {
             .as("__salt"): _*)
       cold.unionAll(idx.join(prb, keys :+ "__salt").select(out: _*))
     }
-    Capped(joined, sized.where(n > hardCap))
+    Capped(joined, sized.where(isDropped(n, hardCap)))
   }
 
   /** Salted (fragment-replicate grid) self-join: member u of bucket k with

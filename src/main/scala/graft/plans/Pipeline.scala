@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.JsonStr
 import graft.operators.Linkage
 
 /** Checkpointed, resumable record-linkage pipeline (north rule: every stage
@@ -77,14 +78,6 @@ object Pipeline {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes(StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Run one checkpointed stage: skip when a valid manifest matches the
     * fingerprint, else compute, persist, and commit the manifest (with
     * per-partition row counts = the lineage record). */
@@ -113,7 +106,7 @@ object Pipeline {
       .map(r => s"""{"pid":${r.getInt(0)},"rows":${r.getLong(1)}}""")
     val wallMs = (System.nanoTime() - t0) / 1000000
     val manifest =
-      s"""{"stage":${jsonStr(name)},"fingerprint":${jsonStr(fingerprint)},
+      s"""{"stage":${JsonStr(name)},"fingerprint":${JsonStr(fingerprint)},
          |"rows":$rows,"wallMs":$wallMs,
          |"partitions":[${partCounts.mkString(",")}]}""".stripMargin.replace("\n", "")
     Files.write(manifestPath, manifest.getBytes(StandardCharsets.UTF_8))

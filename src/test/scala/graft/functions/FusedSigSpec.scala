@@ -9,7 +9,7 @@ import graft.operators.Similarity
 
 /** The fused signature expressions must equal their de-fused definitions:
   * MinHash sha lanes == min over shingles of sha256("i:" ++ shingle), and
-  * HyperplaneSig == the sign pattern of per-plane left-fold dots. These are
+  * hyperplane_sig == the sign pattern of per-plane left-fold dots. These are
   * the same identities the DuckDB driver oracle re-derives in SQL. */
 class FusedSigSpec extends SparkFunSuite {
   import spark.implicits._
@@ -180,8 +180,8 @@ class FusedSigSpec extends SparkFunSuite {
       0, org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, containsNull = false),
       nullable = false)
-    val e1 = HyperplaneSig(child, p1.toSeq.map(_.toSeq))
-    val e2 = HyperplaneSig(child, p2.toSeq.map(_.toSeq))
+    val e1 = Kernel.hyperplaneSig(child, p1.toSeq.map(_.toSeq))
+    val e2 = Kernel.hyperplaneSig(child, p2.toSeq.map(_.toSeq))
     assert(e1 == e2, "structurally equal planes must compare equal")
     assert(e1.hashCode == e2.hashCode)
     assert(e1.semanticEquals(e2))

@@ -105,7 +105,7 @@ class OphSigSpec extends SparkFunSuite {
       .head().getSeq[String](0)
     assert(viaSql == viaCol)
     // interpreted path (no codegen) must agree with the codegen'd one
-    val interp = MinHashSigOph(
+    val interp = Kernel.minhashSigOph(
       org.apache.spark.sql.catalyst.expressions.Literal.create(
         Seq("alpha", "beta", "gamma"),
         org.apache.spark.sql.types.ArrayType(

@@ -54,4 +54,10 @@ class SqlAritySpec extends SparkFunSuite {
         s"$name with $n arguments: ${e.getMessage}")
     }
   }
+
+  test("a literal argument that fails its check names the function and the parameter") {
+    val e = intercept[IllegalArgumentException](
+      spark.sql("SELECT minhash_sig_chars('abc', 0, 12)").collect())
+    assert(e.getMessage.contains("minhash_sig_chars: shingleK must be > 0, got 0"), e.getMessage)
+  }
 }

@@ -118,8 +118,11 @@ class StrPairKernelSpec extends SparkFunSuite {
       pairs.zipWithIndex.map { case ((a, b), i) => Row(i, a, b) }, 3), schema)
   }
 
+  /** The kernels over `(string, string)`. */
+  private val pairKernels = Kernel.all.filter(_.variants.map(_.inputs) == Seq(Seq(StringType, StringType)))
+
   test("the table covers every bound kernel once") {
-    assert(fns.map(_.name).sorted == StrPairKernel.all.map(_.name).sorted)
+    assert(fns.map(_.name).sorted == pairKernels.map(_.name).sorted)
     assert(fns.size == 30)
   }
 
@@ -128,8 +131,8 @@ class StrPairKernelSpec extends SparkFunSuite {
       if (a == null || b == null) null else f.direct(a, b)
     })
     val interpreted = fns.map { f =>
-      val k = StrPairKernel.byName(f.name)
-      pairs.map { case (a, b) => k(lit(a), lit(b), f.args: _*).eval(null) }
+      val k = Kernel.byName(f.name)
+      pairs.map { case (a, b) => k(lit(a) +: lit(b) +: f.args: _*).eval(null) }
     }
     /** One column per function, rows in input order. */
     def byFunction(df: DataFrame): Seq[Seq[Any]] = {
@@ -140,8 +143,9 @@ class StrPairKernelSpec extends SparkFunSuite {
       val viaColumns = frame.select(col("id") +: fns.map(f => f.column(col("a"), col("b"))): _*)
       // every kernel is one static call inside the generated Java
       val java = codegenString(viaColumns.queryExecution.executedPlan)
-      StrPairKernel.all.foreach { k =>
-        assert(java.contains(s"${k.owner.getName}.${k.method}("), s"${k.name} not in codegen")
+      pairKernels.foreach { k =>
+        assert(java.contains(s"${k.owner.getName}.${k.variants.head.method}("),
+          s"${k.name} not in codegen")
       }
       frame.createOrReplaceTempView("str_pairs")
       val viaSql = spark.sql(fns.map(f => f.args.map(v => s", $v").mkString(s"${f.name}(a, b", "",
@@ -173,28 +177,59 @@ class StrPairKernelSpec extends SparkFunSuite {
 
   test("two kernels over the same children are not semantically equal") {
     val (a, b) = (lit("martha"), lit("marhta"))
-    assert(!StrPairKernel.jaroWinkler(a, b).semanticEquals(StrPairKernel.sorensenDice(a, b)))
-    assert(!StrPairKernel.qgram(a, b, 2).semanticEquals(StrPairKernel.qgram(a, b, 3)))
-    assert(StrPairKernel.jaroWinkler(a, b).semanticEquals(StrPairKernel.jaroWinkler(a, b)))
+    assert(!Kernel.jaroWinkler(a, b).semanticEquals(Kernel.sorensenDice(a, b)))
+    assert(!Kernel.qgram(a, b, 2).semanticEquals(Kernel.qgram(a, b, 3)))
+    assert(Kernel.jaroWinkler(a, b).semanticEquals(Kernel.jaroWinkler(a, b)))
   }
 
   test("one (string, string) type check in the main sources; functions/ calls pair kernels " +
       "only through the binding") {
     val main = Files.walk(Paths.get("src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toList
-    val typeCheck = scala.util.matching.Regex.quote("requires (string, string) arguments").r
+    // the one type check of every kernel, which words the (string, string) one
+    val typeCheck = scala.util.matching.Regex.quote("TypeCheckFailure(").r
     val typeChecks = main.map(p =>
       typeCheck.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8")).size).sum
     assert(typeChecks == 1)
-    val methods = StrPairKernel.all.map(_.method).distinct.mkString("|")
+    val methods = pairKernels.map(_.variants.head.method).distinct.mkString("|")
     val direct = s"""\\b(StrSimKernels|TextKernels)\\.($methods)\\b""".r
     val hits = main.filter(p => p.startsWith(Paths.get("src/main/scala/graft/functions")) &&
-        p.getFileName.toString != "StrSimExpressions.scala")
+        p.getFileName.toString != "Kernel.scala")
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
           case (line, i) if direct.findFirstIn(line).isDefined => s"$p:${i + 1}"
         }
       }
     assert(hits.isEmpty, hits.mkString("pair kernel named outside the binding: ", ", ", ""))
+  }
+
+  test("one binding expression: doGenCode once in the main sources, every kernel in " +
+      "sqlFunctions registers from its entry, no other Expression class under functions/") {
+    val main = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    def text(p: java.nio.file.Path) = new String(Files.readAllBytes(p), "UTF-8")
+    assert(main.map(p => "\\bdoGenCode\\b".r.findAllMatchIn(text(p)).size).sum == 1)
+    // the SQL registry holds each kernel under its entry's name, built by the entry
+    val x = Literal("x")
+    Kernel.all.foreach { k =>
+      assert(sqlFunctions.contains(k.name) == k.sql, k.name)
+      if (k.sql) {
+        val args = k.params.map(p => Literal(p.default.getOrElse(KernelSpec.good(p.name))))
+        sqlFunctions(k.name)(Seq.fill(k.arity)(x) ++ args) match {
+          case e: KernelExpression => assert(e.kernel eq k, k.name)
+          case e => fail(s"${k.name} builds $e")
+        }
+      }
+    }
+    val registry = text(Paths.get("src/main/scala/graft/functions/package.scala"))
+    Kernel.all.foreach(k => assert(!registry.contains(s"\"${k.name}\""), s"${k.name} named in package.scala"))
+    // every compiled class of the package, anonymous ones included
+    val dir = Paths.get(classOf[Kernel].getProtectionDomain.getCodeSource.getLocation.toURI)
+      .resolve("graft/functions")
+    val expressions = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".class")).map(f => Class.forName(s"graft.functions.${f.stripSuffix(".class")}",
+        false, getClass.getClassLoader))
+      .filter(classOf[Expression].isAssignableFrom).map(_.getSimpleName).toList
+    assert(expressions == List("KernelExpression"))
   }
 }

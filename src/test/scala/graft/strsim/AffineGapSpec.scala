@@ -126,7 +126,7 @@ class AffineGapSpec extends SparkFunSuite {
     assert(viaSql.toSeq == expected)
     // interpreted Expression.eval (non-codegen path)
     cases.filter(c => c._1 != null && c._2 != null).foreach { case (a, b) =>
-      val e = graft.functions.StrPairKernel.affineGap(
+      val e = graft.functions.Kernel.affineGap(
         Literal(UTF8String.fromString(a), StringType),
         Literal(UTF8String.fromString(b), StringType))
       assert(e.eval(null).asInstanceOf[Double] == StrSimKernels.affineGap(a, b))

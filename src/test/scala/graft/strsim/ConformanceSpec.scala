@@ -28,13 +28,13 @@ class ConformanceSpec extends SparkFunSuite {
   )
 
   val exprBuilders: Map[String, (Expression, Expression) => Expression] = Map(
-    "levenshtein" -> (StrPairKernel.levenshtein(_, _)),
-    "jaro" -> (StrPairKernel.jaro(_, _)),
-    "jaro_winkler" -> (StrPairKernel.jaroWinkler(_, _)),
-    "jaccard" -> (StrPairKernel.jaccard(_, _)),
-    "sorensen_dice" -> (StrPairKernel.sorensenDice(_, _)),
-    "damerau_levenshtein" -> (StrPairKernel.damerauLevenshtein(_, _)),
-    "hamming" -> (StrPairKernel.hamming(_, _)),
+    "levenshtein" -> (Kernel.levenshtein(_, _)),
+    "jaro" -> (Kernel.jaro(_, _)),
+    "jaro_winkler" -> (Kernel.jaroWinkler(_, _)),
+    "jaccard" -> (Kernel.jaccard(_, _)),
+    "sorensen_dice" -> (Kernel.sorensenDice(_, _)),
+    "damerau_levenshtein" -> (Kernel.damerauLevenshtein(_, _)),
+    "hamming" -> (Kernel.hamming(_, _)),
   )
 
   val sqlName: Map[String, String] = Map(
@@ -101,7 +101,7 @@ class ConformanceSpec extends SparkFunSuite {
     val b = Array.fill(5000)(('a' + rnd.nextInt(26)).toChar).mkString
     assert(a.head != b.head && a.last != b.last) // no affix trim (seed-pinned)
     assert(java.lang.Double.isNaN(StrSimKernels.damerauLevenshtein(a, b)))
-    val e = StrPairKernel.damerauLevenshtein(
+    val e = Kernel.damerauLevenshtein(
       Literal(UTF8String.fromString(a), StringType),
       Literal(UTF8String.fromString(b), StringType))
     assert(e.eval(null) == null) // interpreted path

@@ -46,13 +46,13 @@ class PropertySpec extends AnyFunSuite {
   )
 
   val exprBuilders: Map[String, (Expression, Expression) => Expression] = Map(
-    "levenshtein" -> (StrPairKernel.levenshtein(_, _)),
-    "jaro" -> (StrPairKernel.jaro(_, _)),
-    "jaro_winkler" -> (StrPairKernel.jaroWinkler(_, _)),
-    "jaccard" -> (StrPairKernel.jaccard(_, _)),
-    "sorensen_dice" -> (StrPairKernel.sorensenDice(_, _)),
-    "damerau_levenshtein" -> (StrPairKernel.damerauLevenshtein(_, _)),
-    "hamming" -> (StrPairKernel.hamming(_, _)),
+    "levenshtein" -> (Kernel.levenshtein(_, _)),
+    "jaro" -> (Kernel.jaro(_, _)),
+    "jaro_winkler" -> (Kernel.jaroWinkler(_, _)),
+    "jaccard" -> (Kernel.jaccard(_, _)),
+    "sorensen_dice" -> (Kernel.sorensenDice(_, _)),
+    "damerau_levenshtein" -> (Kernel.damerauLevenshtein(_, _)),
+    "hamming" -> (Kernel.hamming(_, _)),
   )
 
   for ((name, f) <- kernels) {
