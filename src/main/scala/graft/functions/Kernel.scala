@@ -54,8 +54,8 @@ object Pass {
   /** The static field of `cls` named by the value
     * (`java.text.Normalizer.Form.NFC`). */
   final case class Static(cls: Class[_]) extends Pass
-  /** A codegen reference object built once from the value (the CLK salt
-    * bytes, the plane matrix). */
+  /** A codegen reference object built from the value once per
+    * expression (the CLK salt bytes, the plane matrix). */
   final case class Ref(name: String, cls: Class[_], lower: Any => AnyRef) extends Pass
   /** Not passed: the value picks the [[Variant]] of that family. */
   case object Family extends Pass
@@ -483,7 +483,7 @@ object Kernel {
     * two calls over equal planes build equal expressions (plan
     * canonicalization, subexpression elimination and exchange reuse key on
     * equals); the kernel gets a primitive double[][] as a codegen
-    * reference object, built once per JVM. No SQL form: SQL has no
+    * reference object, built once per expression. No SQL form: SQL has no
     * literal for the matrix. */
   val hyperplaneSig = bind("hyperplane_sig", Vectors,
     Seq(Variant("sigBits", Seq(Floats), IntegerType)),

@@ -4,10 +4,10 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.debug.codegenString
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.GraftShims
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
