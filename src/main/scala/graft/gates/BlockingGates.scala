@@ -913,7 +913,7 @@ private[graft] object BlockingGates {
       val keys = c.select(col("c_custkey").as("url"),
         concat(col("c_mktsegment"), lit(":"), col("c_nationkey")).as("key"))
       val truePairs = suffixTruth(c, "url_a", "url_b")
-      bigintFace(graft.operators.Linkage.blockingQualitySweep(keys,
+      bigintFace(graft.operators.Evaluation.blockingQualitySweep(keys,
         truePairs, Seq(5L, 15L, 60L, 1000L)))
     },
       // PC/RR sweep: block sizes once, per-cap slot sums (BIGINT face),
@@ -1092,7 +1092,7 @@ private[graft] object BlockingGates {
       val cand = graft.operators.Linkage.candidatePairs(keys, bucketCap = 15,
         hardCap = 15)
       val truePairs = suffixTruth(c, "url_a", "url_b")
-      graft.operators.Linkage.blockingQuality(c, cand, truePairs)
+      graft.operators.Evaluation.blockingQuality(c, cand, truePairs)
     },
       """WITH keys AS (
         |  SELECT c_custkey AS id,

@@ -690,7 +690,7 @@ private[graft] object ClusteringGates {
           .otherwise(concat(col("c_nationkey") % 3, lit(":"),
             when(col("c_acctbal") >= 0, lit("p")).otherwise(lit("n"))))
           .as("cluster_id"))
-      graft.operators.Linkage.clusterDiff(oldA, newA, "id")
+      graft.operators.Evaluation.clusterDiff(oldA, newA, "id")
     },
       // Cluster diff: the same CASE cluster derivations, contingency
       // counts, cell-sized marginals, and the stable/merge/split/reshuffle

@@ -219,7 +219,7 @@ private[graft] object EvaluationGates {
     // blocking imposes, which is exactly what the curve should show.
     Gate("q_threshold_sweep", (s, dir) => {
       val (scored, labeled) = linkage(s, dir)
-      graft.operators.Linkage.thresholdSweep(scored, labeled,
+      graft.operators.Evaluation.thresholdSweep(scored, labeled,
         Seq(1.0, 1.1, 1.2, 1.3, 1.4, 1.5, 1.6, 1.7, 1.8, 1.9))
     },
       // Threshold sweep: per-θ confusion counts over the linkage scores vs

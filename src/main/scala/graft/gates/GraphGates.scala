@@ -99,7 +99,7 @@ private[graft] object GraphGates {
         .where(col("ka") < col("kb") && col("na") =!= col("nb") &&
           levenshtein_sim(col("na"), col("nb")) >= 0.94)
         .select(col("ka").as("url_a"), col("kb").as("url_b"))
-      graft.operators.Linkage.captureRecapture(capA, capB)
+      graft.operators.Evaluation.captureRecapture(capA, capB)
     },
       // dual-system estimation: the two captures rebuilt verbatim, then
       // the Lincoln-Petersen / Chapman formulas in the Scala's exact
@@ -159,7 +159,7 @@ private[graft] object GraphGates {
           levenshtein_sim(col("na"), col("nb")).as("score")))
       val asg = graft.operators.ConnectedComponents.run(
         scored.select(col("ka"), col("kb")))
-      graft.operators.Linkage.weakestLinks(scored, asg, "id",
+      graft.operators.Evaluation.weakestLinks(scored, asg, "id",
         clusterCol = "component")
     },
       // same recursive CC walk + an argmin window over the scored edges;
@@ -217,7 +217,7 @@ private[graft] object GraphGates {
         .join(cc, Seq("id"), "left")
         .select(col("id"), coalesce(col("component"), col("id"))
           .as("component"))
-      graft.operators.Linkage.nearMissPairs(scored, asg, "id",
+      graft.operators.Evaluation.nearMissPairs(scored, asg, "id",
         clusterCol = "component", k = 3)
     },
       // near misses: the same CC walk over the >= 0.94 match edges, the
@@ -270,7 +270,7 @@ private[graft] object GraphGates {
     // surface with degree 0 rather than vanishing.
     Gate("q_node_degrees", (s, dir) => {
       val (asg, edges) = matchGraph(s, dir)
-      graft.operators.Evaluation.nodeDegrees(asg, edges)
+      graft.operators.GraphMetrics.nodeDegrees(asg, edges)
     },
       // graph QA: normalize edges (least/greatest + distinct), keep only
       // same-cluster edges, degree = endpoint-exploded count, edgeless
@@ -289,7 +289,7 @@ private[graft] object GraphGates {
     // n-floors). Edgeless clusters are rows, not absences.
     Gate("q_graph_metrics", (s, dir) => {
       val (asg, edges) = matchGraph(s, dir)
-      graft.operators.Evaluation.graphMetrics(asg, edges)
+      graft.operators.GraphMetrics.graphMetrics(asg, edges)
     },
       // same graph, cluster level: Σdeg = 2E folds per cluster; density
       // and centralisation mirror the Scala's pinned all-double order.
@@ -321,7 +321,7 @@ private[graft] object GraphGates {
     // at both sf, so both flag values are load-bearing.
     Gate("q_bridge_edges", (s, dir) => {
       val (asg, edges) = matchGraph(s, dir)
-      graft.operators.Evaluation.bridgeEdges(asg, edges).out
+      graft.operators.GraphMetrics.bridgeEdges(asg, edges).out
     },
       // bridges: per excluded edge, a recursive reachability walk over the
       // remaining intra edges; the edge is a bridge iff its far endpoint
@@ -344,7 +344,7 @@ private[graft] object GraphGates {
     // Tarjan pass with q_bridge_edges' operator.
     Gate("q_articulation", (s, dir) => {
       val (asg, edges) = matchGraph(s, dir)
-      graft.operators.Evaluation.articulationRecords(asg, edges).out
+      graft.operators.GraphMetrics.articulationRecords(asg, edges).out
     },
       // articulation: per edge-incident record x, walk from its smallest
       // neighbor avoiding x; x cuts iff some neighbor stays unreached.
@@ -381,7 +381,7 @@ private[graft] object GraphGates {
         .select(col("ka").as("url_a"), col("kb").as("url_b"),
           jaro_winkler_sim(col("na"), col("nb")).as("score"))
         .where(col("score") >= 0.86)
-      graft.operators.Linkage.unlinkables(recs, scored,
+      graft.operators.Evaluation.unlinkables(recs, scored,
         Seq(0.86, 0.90, 0.94, 0.97, 0.99))
     },
       // unlinkables: per-record best incident score (NULL when no pair),
@@ -422,7 +422,7 @@ private[graft] object GraphGates {
     // and open wedge paths are both load-bearing.
     Gate("q_transitivity", (s, dir) => {
       val (asg, edges) = matchGraph(s, dir)
-      graft.operators.Evaluation.clusterTriangles(asg, edges)
+      graft.operators.GraphMetrics.clusterTriangles(asg, edges)
     },
       // triangles: u<v<w three-way self-join over the normalized intra
       // edges (each undirected triangle appears exactly once), wedges as
@@ -465,7 +465,7 @@ private[graft] object GraphGates {
     // load-bearing rows.
     Gate("q_core_numbers", (s, dir) => {
       val (asg, edges) = matchGraph(s, dir)
-      graft.operators.Evaluation.coreNumbers(asg, edges)
+      graft.operators.GraphMetrics.coreNumbers(asg, edges)
     },
       s"""${matchGraphSql(recursive = true)}, b AS (
         |  SELECT u, v FROM intra UNION ALL SELECT v, u FROM intra
@@ -509,7 +509,7 @@ private[graft] object GraphGates {
     // so the last emitted round IS the fixpoint.
     Gate("q_truss", (s, dir) => {
       val (asg, edges) = matchGraph(s, dir, minSim = 0.92)
-      graft.operators.Evaluation.trussEdges(asg, edges, k = 3)
+      graft.operators.GraphMetrics.trussEdges(asg, edges, k = 3)
     },
       // coreness: the same intra-cluster graph, then the h-index iteration
       // as a recursive CTE — each level recomputes every node's H-operator

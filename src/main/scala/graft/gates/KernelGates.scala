@@ -1157,10 +1157,8 @@ private[graft] object KernelGates {
       }),
 
     // composite scoring + threshold (stage: pairwise scoring, JW + Dice)
-    Gate("q_match_pairs", (s, dir) => partPairs(s, dir)
-      .select(col("ka"), col("kb"),
-        (jaro_winkler_sim(col("na"), col("nb")) +
-          sorensen_dice_sim(col("na"), col("nb"))).as("score"))
+    Gate("q_match_pairs", (s, dir) => graft.operators.Linkage
+      .composite(partPairs(s, dir), "ka", "kb", "na", "nb")
       .where(col("score") >= 1.75)
       .select(col("ka"), col("kb")),
       matchPairsSql()),

@@ -7,8 +7,8 @@ import org.apache.spark.sql.types._
 /** Greedy blocking-scheme recommendation: pick the SET of blocking-key
   * families that covers the most labeled true pairs within a total
   * candidate-pair budget — the capacity-planning decision
-  * [[Linkage.blockingQuality]] (one scheme's PC/RR) and
-  * [[Linkage.blockingQualitySweep]] (one scheme across caps) inform but
+  * [[Evaluation.blockingQuality]] (one scheme's PC/RR) and
+  * [[Evaluation.blockingQualitySweep]] (one scheme across caps) inform but
   * don't make. Budgeted maximum coverage is NP-hard; the standard greedy
   * (highest marginal coverage among families that still fit the budget)
   * carries the classic (1 − 1/e)-style guarantee and — crucially here —

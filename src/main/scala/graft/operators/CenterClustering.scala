@@ -139,8 +139,10 @@ object CenterClustering {
         iter += 1
       } else if (order.isDefined &&
           DriverFinish.fitsHashed(canon, Seq("la", "lb"), driverCap, liveCnt)) {
-        // frontier fits the bounded buffer → sequential finish, done
-        asg = Frames.round(asg.union(sequentialFinish(live)))._1
+        // frontier fits the bounded buffer → sequential finish, done; the
+        // loop ends, so the assignment is no round state: it feeds the
+        // singleton anti-join and the final union
+        asg = Frames.shared(asg.union(sequentialFinish(live)))
         alive = live
         drained = true
         iter += 1
@@ -209,7 +211,7 @@ object CenterClustering {
     // the edge frame feeds BOTH the centers() run and the merge edges
     val e0 = Frames.shared(edges)
     // the assignment feeds the center ids, the member edges and the labels
-    val asg = Frames.round(centers(e0, aCol, bCol, simCol, maxIter))._1
+    val asg = Frames.shared(centers(e0, aCol, bCol, simCol, maxIter))
     val centerIds = asg.where(col("id") === col("center_id"))
       .select(col("id").as("c"))
     val canon = e0.select(

@@ -124,14 +124,23 @@ object Dedup {
           jaccardOf(col("ta"), col("tb")).as("jaccard"))
         .where(greatest(col("containment_a"), col("containment_b")) >= tau))
 
-  /** (id, key) band rows from an already-computed `(id, sig)` frame —
-    * the banding step alone, shared by the classic k-lane signature
-    * ([[minhashBanded]]) and the one-permutation signature
-    * ([[ophBanded]]); only the signature expression differs upstream. */
-  private def bandKeysOf(sig: DataFrame, numHashes: Int, bands: Int,
+  /** (id, band key) rows of the MinHash-LSH banding of `docs`: each
+    * tokenful document's signature `sig` over its distinct tokens — the
+    * classic k-lane [[graft.functions.minhash_sig]] or the
+    * one-permutation [[graft.functions.minhash_sig_oph]] — cut into
+    * `bands` bands of numHashes / bands lanes, each hashed to a key. The
+    * banding of [[minhashLshPairs]], [[minhashOphLshPairs]], [[bandIndex]]
+    * and the incremental paths (and CappedSpec's reference for the drop
+    * record). */
+  private[operators] def minhashBanded(docs: DataFrame, idCol: String,
+      textCol: String, sig: Column => Column, numHashes: Int, bands: Int,
       hashFamily: String): DataFrame = {
     require(numHashes % bands == 0)
     val rows = numHashes / bands
+    val base = docs.select(col(idCol).as("id"), distinctTokens(textCol).as("toks"))
+    // token-less docs carry no shingle signal: exact dedup owns them
+    val sigs = base.where(size(col("toks")) > 0)
+      .select(col("id"), sig(col("toks")).as("sig"))
     val bandCols = (0 until bands).map { bnd =>
       val elems = (0 until rows).map(r => element_at(col("sig"), bnd * rows + r + 1))
       val h =
@@ -139,40 +148,14 @@ object Dedup {
         else xxhash64((lit(bnd) +: elems): _*)
       concat(lit(s"$bnd:"), h).as(s"band$bnd")
     }
-    sig.select(col("id") +: bandCols: _*)
+    sigs.select(col("id") +: bandCols: _*)
       .select(col("id"),
         explode(array((0 until bands).map(bnd => col(s"band$bnd")): _*)).as("key"))
   }
 
-  /** (id, band key) rows for the MinHash-LSH banding of
-    * [[minhashLshPairs]], [[bandIndex]] and the incremental paths (and
-    * CappedSpec's reference for the drop record). */
-  private[operators] def minhashBanded(docs: DataFrame, idCol: String,
-      textCol: String, numHashes: Int, bands: Int,
-      hashFamily: String): DataFrame = {
-    val toksOf = distinctTokens(textCol)
-    val base = docs.select(col(idCol).as("id"), toksOf.as("toks"))
-    // token-less docs carry no shingle signal: exact dedup owns them
-    val sig = base.where(size(col("toks")) > 0).select(col("id"),
-      graft.functions.minhash_sig(col("toks"), numHashes, hashFamily).as("sig"))
-    bandKeysOf(sig, numHashes, bands, hashFamily)
-  }
-
-  /** (id, band key) rows from the ONE-PERMUTATION signature
-    * ([[graft.functions.minhash_sig_oph]]: 16 rotation-densified bins,
-    * one hash per shingle): same banding as [[minhashBanded]], but the
-    * fingerprint pass is O(m) per document instead of O(k·m) — at corpus
-    * scale the difference between a hash-bound and an IO-bound scan.
-    * `bands` must divide 16. */
-  private def ophBanded(docs: DataFrame, idCol: String, textCol: String,
-      bands: Int, hashFamily: String): DataFrame = {
-    require(16 % bands == 0, s"bands must divide the 16 OPH bins, got $bands")
-    val toksOf = distinctTokens(textCol)
-    val base = docs.select(col(idCol).as("id"), toksOf.as("toks"))
-    val sig = base.where(size(col("toks")) > 0).select(col("id"),
-      graft.functions.minhash_sig_oph(col("toks"), hashFamily).as("sig"))
-    bandKeysOf(sig, 16, bands, hashFamily)
-  }
+  /** The classic k-lane signature of [[minhashBanded]]. */
+  private def kLane(numHashes: Int, hashFamily: String): Column => Column =
+    graft.functions.minhash_sig(_, numHashes, hashFamily)
 
   /** Shared tail of every banded-LSH dedup path: cap hot buckets
     * (observably — `dropped` is the (key, n) buckets over the cap),
@@ -215,16 +198,17 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       tau: Double, numHashes: Int = 16, bands: Int = 4,
       bucketCap: Int = 500, hashFamily: String = "xxhash64"): DataFrame =
-    minhashCapped(docs, idCol, textCol, tau, numHashes, bands, bucketCap,
-      hashFamily).out
+    lshCapped(docs, idCol, textCol, tau, kLane(numHashes, hashFamily),
+      numHashes, bands, bucketCap, hashFamily).out
 
-  /** [[minhashLshPairs]] with its dropped (key, n) band buckets. */
-  private def minhashCapped(docs: DataFrame, idCol: String, textCol: String,
-      tau: Double, numHashes: Int, bands: Int, bucketCap: Int,
-      hashFamily: String): Capped =
+  /** The verified pairs of a [[minhashBanded]] banding under signature
+    * `sig`, with its dropped (key, n) band buckets. */
+  private def lshCapped(docs: DataFrame, idCol: String, textCol: String,
+      tau: Double, sig: Column => Column, numHashes: Int, bands: Int,
+      bucketCap: Int, hashFamily: String): Capped =
     verifiedJaccardPairs(
       docs.select(col(idCol).as("id"), distinctTokens(textCol).as("toks")),
-      minhashBanded(docs, idCol, textCol, numHashes, bands, hashFamily),
+      minhashBanded(docs, idCol, textCol, sig, numHashes, bands, hashFamily),
       bucketCap, tau)
 
   /** MinHash-LSH near-dup candidates from the ONE-PERMUTATION signature —
@@ -238,10 +222,12 @@ object Dedup {
     * lists the (key, n) band buckets over the cap. */
   def minhashOphLshPairs(docs: DataFrame, idCol: String, textCol: String,
       tau: Double, bands: Int = 4, bucketCap: Int = 500,
-      hashFamily: String = "xxhash64"): Capped =
-    verifiedJaccardPairs(
-      docs.select(col(idCol).as("id"), distinctTokens(textCol).as("toks")),
-      ophBanded(docs, idCol, textCol, bands, hashFamily), bucketCap, tau)
+      hashFamily: String = "xxhash64"): Capped = {
+    require(16 % bands == 0, s"bands must divide the 16 OPH bins, got $bands")
+    lshCapped(docs, idCol, textCol, tau,
+      graft.functions.minhash_sig_oph(_, hashFamily), 16, bands, bucketCap,
+      hashFamily)
+  }
 
   /** The persistable `(key, id)` MinHash band index of a corpus, with the
     * `bucketCap` cut already applied (over-cap buckets excluded; `dropped`
@@ -266,7 +252,8 @@ object Dedup {
       hashFamily: String = "xxhash64"): Capped = {
     // the banded frame feeds the sizing and the join-back
     val banded = Frames.shared(
-      minhashBanded(corpus, idCol, textCol, numHashes, bands, hashFamily))
+      minhashBanded(corpus, idCol, textCol, kLane(numHashes, hashFamily),
+        numHashes, bands, hashFamily))
     Tiers.capped(banded, Seq("key"), bucketCap)
       .map(_.select(col("key"), col("id")))
   }
@@ -292,7 +279,8 @@ object Dedup {
       numHashes: Int = 16, bands: Int = 4,
       hashFamily: String = "xxhash64"): DataFrame = {
     val toksOf = distinctTokens(textCol)
-    val bBanded = minhashBanded(batch, idCol, textCol, numHashes, bands, hashFamily)
+    val bBanded = minhashBanded(batch, idCol, textCol,
+      kLane(numHashes, hashFamily), numHashes, bands, hashFamily)
     val cand = bBanded.select(col("key"), col("id").as("batch_id"))
       .join(index.select(col("key"), col("id").as("corpus_id")), "key")
       .select(col("batch_id"), col("corpus_id")).distinct()
@@ -545,8 +533,8 @@ object Dedup {
   def nearDupGroups(docs: DataFrame, idCol: String, textCol: String,
       tau: Double, numHashes: Int = 16, bands: Int = 4,
       bucketCap: Int = 500, hashFamily: String = "xxhash64"): Capped =
-    minhashCapped(docs, idCol, textCol, tau, numHashes, bands, bucketCap,
-        hashFamily).map { pairs =>
+    lshCapped(docs, idCol, textCol, tau, kLane(numHashes, hashFamily),
+        numHashes, bands, bucketCap, hashFamily).map { pairs =>
       val comp = ConnectedComponents.run(pairs.select(col("ia"), col("ib")))
       docs.select(col(idCol).as("id"))
         .join(comp, Seq("id"), "left")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.types._
 /** The driver-finish policy of the iterative operators
   * ([[ConnectedComponents]], [[CenterClustering]],
   * [[Linkage.greedyMatches]] (which [[Linkage.groupLinkage]] runs on
-  * group-scoped struct ids), [[Evaluation.coreNumbers]],
-  * [[Evaluation.trussEdges]], [[PivotClustering]]'s MIS,
+  * group-scoped struct ids), [[GraphMetrics.coreNumbers]],
+  * [[GraphMetrics.trussEdges]], [[PivotClustering]]'s MIS,
   * [[BlockingSelection]]). Each of them has
   * distributed rounds that are proven equal to an in-memory algorithm
   * (a sequential scan, a union-find, a peel); once the remaining

@@ -1,26 +1,23 @@
 package graft.operators
 
 import org.apache.spark.sql.expressions.{Window => W}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
-import scala.jdk.CollectionConverters._
 
-/** Classifier-style evaluation of pairwise match scores — the ROC view of
-  * a linkage scorer (complementing the θ-driven confusion counts of
-  * [[Linkage.thresholdSweep]] and the model-driven μ/λ calibration of
-  * [[FellegiSunter.calibrate]]) plus the pay-as-you-go recall curve of a
-  * PROGRESSIVE pair generator, and the cluster-agreement metrics of a
-  * predicted partition against a reference one (B-cubed, MUC, ARI, pair
-  * counting, information).
+/** Evaluation of a linkage run: blocking quality (reduction ratio, pairs
+  * completeness, the cap sweep, capture-recapture), label-driven views of
+  * pairwise match scores (θ sweep, unlinkables, ROC/PR, average
+  * precision) and of a PROGRESSIVE pair order (pay-as-you-go recall), the
+  * cluster review queues (weakest links, near misses), and the
+  * cluster-agreement metrics of a predicted partition against a reference
+  * one (exact match, B-cubed, MUC, ARI, pair counting, information, the
+  * generation diff). Graph metrics are [[GraphMetrics]].
   *
-  * Everything here is label-driven: `labeled` carries the true pairs
-  * (id_a, id_b) and the scored/ordered pair frame is the classifier
-  * output under evaluation. All counts are integer-exact (decimal(38,0)
-  * where products of corpus-sized counts can pass 2^63 — the
-  * [[Linkage.blockingQuality]] overflow lesson applied); every ratio is
-  * one exact integer→double division, so the DuckDB oracle reproduces
-  * each value bit-for-bit.
+  * `labeled` carries the true pairs (a, b); the scored/ordered pair frame
+  * is the classifier output under evaluation. All counts are integer-exact (decimal(38,0) where products of
+  * corpus-sized counts can pass 2^63 — the [[blockingQuality]] overflow
+  * lesson applied); every ratio is one exact integer→double division, so
+  * the DuckDB oracle reproduces each value bit-for-bit.
   *
   * Scale design: NO single-partition window over anything corpus-sized.
   * Cumulative counts and ranks are [[Frames.runningSums]] — a range
@@ -35,7 +32,7 @@ object Evaluation {
     *
     * Semantics: the population is exactly the scored pair set (standard
     * classifier ROC — pairs the blocker never generated are out of frame;
-    * [[Linkage.blockingQuality]] / [[Linkage.thresholdSweep]]'s `fn`
+    * [[blockingQuality]] / [[thresholdSweep]]'s `fn`
     * carry that ceiling). A scored pair is positive iff it appears in
     * `labeled` (dedup'd). Output per score s:
     *  - `n`, `t` — pairs / true pairs AT this exact score;
@@ -53,12 +50,8 @@ object Evaluation {
   def rocCurve(scored: DataFrame, labeled: DataFrame,
       aCol: String = "id_l", bCol: String = "id_r",
       scoreCol: String = "score", partitions: Int = 0): DataFrame = {
-    val flagged = scored.select(col(aCol), col(bCol), col(scoreCol))
-      .join(labeled.select(col(aCol), col(bCol), lit(1L).as("__t"))
-        .distinct(), Seq(aCol, bCol), "left")
-      .select(col(scoreCol).as("score"),
-        coalesce(col("__t"), lit(0L)).as("__t"))
-    val perScore = flagged.groupBy(col("score"))
+    val perScore = labelFlag(scored, labeled, col(scoreCol), aCol, bCol)
+      .groupBy(col("__v").as("score"))
       .agg(count(lit(1)).as("n"), sum(col("__t")).as("t"))
     val (cum, totals) = Frames.runningSums(perScore,
       Seq("score" -> DriverFinish.Desc),
@@ -172,51 +165,102 @@ object Evaluation {
     * the first B pairs, how much recall is already banked?" — the curve
     * that justifies stopping a 10^12-pair job early.
     *
-    * One pass, [[Linkage.thresholdSweep]]-shaped: each consumed pair fans
-    * out to the budgets it falls under (|budgets| small), partial
-    * aggregation folds map-side, recall = tp / |labeled| (NULL when no
-    * labels). Budgets with no consumed pairs still emit a row. */
+    * One [[sweep]] over the ranks: recall = tp / |labeled| (NULL when no
+    * labels); budgets with no consumed pairs still emit a row. */
   def progressiveCurve(pairs: DataFrame, labeled: DataFrame,
       budgets: Seq[Long], rankCol: String = "rank",
       aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
-    require(budgets.nonEmpty, "progressiveCurve needs at least one budget")
-    require(budgets.forall(_ >= 1) && budgets == budgets.sorted &&
-      budgets.distinct == budgets,
-      s"budgets must be >= 1, strictly increasing, got $budgets")
-    val budgetArr = array(budgets.map(lit(_)): _*)
-    val flagged = pairs.select(col(aCol), col(bCol), col(rankCol).as("__r"))
-      .join(labeled.select(col(aCol), col(bCol), lit(1L).as("__t"))
-        .distinct(), Seq(aCol, bCol), "left")
-      .select(col("__r"), coalesce(col("__t"), lit(0L)).as("__t"))
-    val per = flagged
-      .select(col("__r"), col("__t"), explode(budgetArr).as("budget"))
-      .where(col("__r") <= col("budget"))
-      .groupBy(col("budget"))
-      .agg(count(lit(1)).as("n_consumed"), sum(col("__t")).as("tp"))
-    val allBudgets = pairs.sparkSession.range(1)
-      .select(explode(budgetArr).as("budget"))
-    val nTrue = labeled.select(col(aCol), col(bCol)).distinct()
-      .agg(count(lit(1)).as("__ntrue"))
-    allBudgets.join(per, Seq("budget"), "left")
-      .crossJoin(broadcast(nTrue))
-      .select(col("budget"),
-        coalesce(col("n_consumed"), lit(0L)).as("n_consumed"),
-        coalesce(col("tp"), lit(0L)).as("tp"),
+    require(budgets.forall(_ >= 1),
+      s"progressiveCurve: budgets must be >= 1, got $budgets")
+    sweep("progressiveCurve", "budget", budgets, pairs, labeled,
+        col(rankCol), aCol, bCol)(_ <= _)
+      .select(col("budget"), col("n").as("n_consumed"), col("tp"),
         when(col("__ntrue") > 0,
-          coalesce(col("tp"), lit(0L)).cast("double") /
-            col("__ntrue").cast("double")).as("recall"))
+          col("tp").cast("double") / col("__ntrue").cast("double"))
+          .as("recall"))
   }
 
-  /** The (cluster, truth) contingency table every cluster-level
-    * metric below starts from: one row per non-empty cell, `(__g, __t,
-    * __ni)` with `__ni` its record count (one map-side-combined groupBy). */
+  /** (`__v`, `__t`) per row of `pairs`: `v` over the row, and `__t` = 1
+    * when its (aCol, bCol) pair is in `labeled` (a repeated label counts
+    * once), else 0 — one left join on the distinct labels. */
+  private def labelFlag(pairs: DataFrame, labeled: DataFrame, v: Column,
+      aCol: String, bCol: String): DataFrame =
+    pairs.select(col(aCol), col(bCol), v.as("__v"))
+      .join(labeled.select(col(aCol), col(bCol), lit(1L).as("__t"))
+        .distinct(), Seq(aCol, bCol), "left")
+      .select(col("__v"), coalesce(col("__t"), lit(0L)).as("__t"))
+
+  /** The literal array of `fn`'s sweep `points`, which must be non-empty
+    * and strictly increasing: a repeated point would fan each row out to
+    * one group twice and double that point's counts. */
+  private def sweepPoints[T](fn: String, what: String, points: Seq[T])(
+      implicit num: Numeric[T]): Column = {
+    require(points.nonEmpty, s"$fn needs at least one $what")
+    require(points.zip(points.drop(1)).forall { case (x, y) => num.lt(x, y) },
+      s"$fn: ${what}s must be strictly increasing, got $points")
+    array(points.map(lit(_)): _*)
+  }
+
+  /** One row per point p of [[sweepPoints]] (column `what`): `n` counts
+    * the rows of `pairs` whose `v` `hit`s p and `tp` the labeled ones
+    * among them ([[labelFlag]]), both 0 when none does; `__ntrue` is the
+    * number of distinct labeled pairs. Each row fans out to the points
+    * (explode over the literal array) and partial aggregation folds to
+    * |points| groups map-side — no per-point rescan, no window. */
+  private def sweep[T: Numeric](fn: String, what: String, points: Seq[T],
+      pairs: DataFrame, labeled: DataFrame, v: Column, aCol: String,
+      bCol: String)(hit: (Column, Column) => Column): DataFrame = {
+    val arr = sweepPoints(fn, what, points)
+    val per = labelFlag(pairs, labeled, v, aCol, bCol)
+      .select(col("__v"), col("__t"), explode(arr).as(what))
+      .where(hit(col("__v"), col(what)))
+      .groupBy(col(what))
+      .agg(count(lit(1)).as("n"), sum(col("__t")).as("tp"))
+    val nTrue = labeled.select(col(aCol), col(bCol)).distinct()
+      .agg(count(lit(1)).as("__ntrue"))
+    pairs.sparkSession.range(1).select(explode(arr).as(what))
+      .join(per, Seq(what), "left")
+      .crossJoin(broadcast(nTrue))
+      .select(col(what), coalesce(col("n"), lit(0L)).as("n"),
+        coalesce(col("tp"), lit(0L)).as("tp"), col("__ntrue"))
+  }
+
+  /** The (cluster, truth) contingency table of `assignments` — one row per
+    * non-empty cell, `cells` = (__g, __t, __ni) with `__ni` its record
+    * count (one map-side-combined groupBy) — and its two marginals over
+    * the cells, one row per cluster and per truth id: `byG` = (__g, __gn,
+    * __gk, __gsq) and `byT` = (__t, __tn, __tk, __tsq), each side's record
+    * count, non-empty cell count and sum of squared cell counts. A metric
+    * reads the aggregates it folds; column pruning drops the others. */
+  private case class Contingency(cells: DataFrame, byG: DataFrame,
+      byT: DataFrame)
+
   private def contingency(assignments: DataFrame, clusterCol: String,
-      truthCol: String): DataFrame =
-    assignments.groupBy(col(clusterCol).as("__g"), col(truthCol).as("__t"))
+      truthCol: String): Contingency = {
+    val cells = assignments
+      .groupBy(col(clusterCol).as("__g"), col(truthCol).as("__t"))
       .agg(count(lit(1)).as("__ni"))
+    def margin(k: String): DataFrame = cells.groupBy(col(k))
+      .agg(sum(col("__ni")).as(s"${k}n"), count(lit(1)).as(s"${k}k"),
+        sum(col("__ni") * col("__ni")).as(s"${k}sq"))
+    Contingency(cells, margin("__g"), margin("__t"))
+  }
 
   /** 2·C(x,2) = x·(x−1), decimal-exact. */
   private def pairs2(c: Column): Column = c.cast(dec) * (c.cast(dec) - 1)
+
+  /** One row of pair sums over `c`, each 2·ΣC(·,2) in decimal(38,0):
+    * `s2_ij` over the cells, `s2_a` over the clusters, `s2_b` over the
+    * truth classes; with the record count `__n` and the numbers of cells
+    * `v`, clusters `ca` and truth classes `cb`. Three 1-row aggregates,
+    * broadcast-cross-joined. */
+  private def pairSums(c: Contingency): DataFrame =
+    c.cells.agg(sum(pairs2(col("__ni"))).as("s2_ij"),
+        sum(col("__ni")).as("__n"), count(lit(1)).as("v"))
+      .crossJoin(broadcast(c.byG.agg(sum(pairs2(col("__gn"))).as("s2_a"),
+        count(lit(1)).as("ca"))))
+      .crossJoin(broadcast(c.byT.agg(sum(pairs2(col("__tn"))).as("s2_b"),
+        count(lit(1)).as("cb"))))
 
   /** Cluster-LEVEL evaluation of a predicted partition against a truth
     * partition (Menestrina-Whang-Garcia-Molina, "Evaluating entity
@@ -238,24 +282,20 @@ object Evaluation {
     * when the side is empty), f1 = 2·p·r/(p+r) with 0.0 at n_exact = 0.
     * Only ids carrying BOTH labels participate. Shapes: one contingency
     * groupBy (map-side combined) + two marginal groupBys over the
-    * cell-sized frame + cell-sized join-backs — the [[Linkage.clusterDiff]]
+    * cell-sized frame + cell-sized join-backs — the [[clusterDiff]]
     * plan with metric folds on top. Output: 1 row (n_records, n_pred,
     * n_truth, n_exact, cluster_precision, cluster_recall, cluster_f1,
     * gmd_splits, gmd_merges, gmd). */
   def clusterMetrics(assignment: DataFrame, clusterCol: String = "cluster_id",
       truthCol: String = "truth_id"): DataFrame = {
-    val ni = contingency(assignment, clusterCol, truthCol)
-    val pred = ni.groupBy(col("__g"))
-      .agg(sum(col("__ni")).as("__np"), count(lit(1)).as("__kp"))
-    val tru = ni.groupBy(col("__t"))
-      .agg(sum(col("__ni")).as("__nt"), count(lit(1)).as("__kt"))
-    val exact = ni.join(pred, "__g").join(tru, "__t")
-      .where(col("__ni") === col("__np") && col("__ni") === col("__nt"))
+    val c = contingency(assignment, clusterCol, truthCol)
+    val exact = c.cells.join(c.byG, "__g").join(c.byT, "__t")
+      .where(col("__ni") === col("__gn") && col("__ni") === col("__tn"))
       .agg(count(lit(1)).as("n_exact"))
-    val aggP = pred.agg(count(lit(1)).as("n_pred"),
-      sum(col("__kp") - 1).as("gmd_splits"), sum(col("__np")).as("n_records"))
-    val aggT = tru.agg(count(lit(1)).as("n_truth"),
-      sum(col("__kt") - 1).as("gmd_merges"))
+    val aggP = c.byG.agg(count(lit(1)).as("n_pred"),
+      sum(col("__gk") - 1).as("gmd_splits"), sum(col("__gn")).as("n_records"))
+    val aggT = c.byT.agg(count(lit(1)).as("n_truth"),
+      sum(col("__tk") - 1).as("gmd_merges"))
     aggP.crossJoin(broadcast(aggT)).crossJoin(broadcast(exact))
       .select(col("n_records"), col("n_pred"), col("n_truth"), col("n_exact"),
         when(col("n_pred") > 0, col("n_exact").cast("double") /
@@ -301,17 +341,14 @@ object Evaluation {
     * squared intersection size. ALL-INTEGER aggregates (count + sum of
     * products), so the frame is exactly reproducible regardless of
     * partitioning — the hash-gradable face of B-cubed; [[bCubed]] folds
-    * it into the scalar metrics. Shapes: two partial-combined groupBys
-    * over the (cluster, truth) contingency counts. */
+    * it into the scalar metrics. Shapes: the [[contingency]] marginals. */
   def bCubedStats(assignments: DataFrame, clusterCol: String = "cluster_id",
       truthCol: String = "truth_id"): DataFrame = {
-    val ni = contingency(assignments, clusterCol, truthCol)
-    def side(name: String, g: String): DataFrame = ni.groupBy(col(g))
-      .agg(sum(col("__ni")).as("n_g"),
-        sum(col("__ni") * col("__ni")).as("sum_ni2"))
-      .select(lit(name).as("side"), col(g).cast("string").as("gid"),
-        col("n_g"), col("sum_ni2"))
-    side("cluster", "__g").union(side("truth", "__t"))
+    val c = contingency(assignments, clusterCol, truthCol)
+    def side(name: String, margin: DataFrame, g: String): DataFrame =
+      margin.select(lit(name).as("side"), col(g).cast("string").as("gid"),
+        col(s"${g}n").as("n_g"), col(s"${g}sq").as("sum_ni2"))
+    side("cluster", c.byG, "__g").union(side("truth", c.byT, "__t"))
   }
 
   /** B-cubed precision / recall / F1 (Bagga & Baldwin 1998) of a predicted
@@ -346,23 +383,18 @@ object Evaluation {
     * zero weight — MUC's known blind spot, which is exactly why the three
     * metrics ship together.
     *
-    * One pass to the contingency counts (map-side combining groupBy),
-    * then two class-count aggregates folded to one row each and a 1-row
-    * broadcast cross join; the numerators/denominators are exact 64-bit
+    * The two [[contingency]] marginals, each folded to one row and
+    * broadcast-cross-joined; the numerators/denominators are exact 64-bit
     * integers, P/R one exact division each (null when the denominator is
     * 0 — all classes singleton = no evidence), f1 pinned to
     * 2·p·r/(p+r), 0.0 when p + r = 0, null if either side is null. */
   def mucStats(assignments: DataFrame, clusterCol: String = "cluster_id",
       truthCol: String = "truth_id"): DataFrame = {
-    val ni = contingency(assignments, clusterCol, truthCol)
-    val byT = ni.groupBy(col("__t"))
-      .agg(sum(col("__ni")).as("n"), count(lit(1)).as("p"))
-      .agg(sum(col("n") - col("p")).as("recall_num"),
-        sum(col("n") - 1).as("recall_den"))
-    val byG = ni.groupBy(col("__g"))
-      .agg(sum(col("__ni")).as("n"), count(lit(1)).as("q"))
-      .agg(sum(col("n") - col("q")).as("precision_num"),
-        sum(col("n") - 1).as("precision_den"))
+    val c = contingency(assignments, clusterCol, truthCol)
+    val byT = c.byT.agg(sum(col("__tn") - col("__tk")).as("recall_num"),
+      sum(col("__tn") - 1).as("recall_den"))
+    val byG = c.byG.agg(sum(col("__gn") - col("__gk")).as("precision_num"),
+      sum(col("__gn") - 1).as("precision_den"))
     byG.crossJoin(broadcast(byT))
       .withColumn("muc_precision", when(col("precision_den") > 0,
         col("precision_num").cast("double") / col("precision_den").cast("double")))
@@ -387,31 +419,22 @@ object Evaluation {
     * N = C(n,2) — the formula cleared of fractions so everything up to
     * the final division is INTEGER arithmetic. Pair sums are folded in
     * decimal(38,0) (long products overflow at ~3e9 records — the
-    * [[Linkage.blockingQuality]] lesson); the cleared products stay exact to
+    * [[blockingQuality]] lesson); the cleared products stay exact to
     * n ≈ 10^9 and the one double division is the only rounding anywhere.
     * NULL when the denominator is 0 (both partitions trivial — all
     * singletons or one block: chance correction is undefined).
     *
-    * Shapes: one groupBy over the (cluster, truth) contingency counts,
-    * two marginal groupBys over THAT (cell-count-sized) frame, three
-    * 1-row aggregates cross-joined — no window, no collect beyond the
-    * 1-row frames Spark folds itself. */
+    * Shapes: [[pairSums]] — no window, no collect beyond the 1-row frames
+    * Spark folds itself. */
   def adjustedRandStats(assignments: DataFrame,
       clusterCol: String = "cluster_id",
       truthCol: String = "truth_id"): DataFrame = {
-    val ni = contingency(assignments, clusterCol, truthCol)
-    val sij = ni.agg(sum(pairs2(col("__ni"))).as("s2_ij"),
-      sum(col("__ni")).as("__n"))
-    val sa = ni.groupBy(col("__g")).agg(sum(col("__ni")).as("__na"))
-      .agg(sum(pairs2(col("__na"))).as("s2_a"))
-    val sb = ni.groupBy(col("__t")).agg(sum(col("__ni")).as("__nb"))
-      .agg(sum(pairs2(col("__nb"))).as("s2_b"))
     // s2_* carry 2·ΣC(·,2); N2 = 2·C(n,2) = n·(n−1). Substituting into
     // the cleared form and scaling numerator and denominator to a common
     // factor of 8: ari = 2·(N2·s2_ij − s2_a·s2_b) /
     // (N2·(s2_a+s2_b) − 2·s2_a·s2_b) — every term a decimal INTEGER, no
     // intermediate division anywhere.
-    sij.crossJoin(broadcast(sa)).crossJoin(broadcast(sb))
+    pairSums(contingency(assignments, clusterCol, truthCol))
       .withColumn("__num",
         lit(2).cast(dec) * (col("__n").cast(dec) * (col("__n").cast(dec) - 1)
           * col("s2_ij") - col("s2_a") * col("s2_b")))
@@ -439,10 +462,7 @@ object Evaluation {
     * cluster counts, so it stays meaningful on singleton-heavy linkage
     * output where MUC goes null).
     *
-    * Same shapes and exactness discipline as [[adjustedRandStats]]: one
-    * contingency groupBy, two marginal groupBys over the cell-sized
-    * frame, three 1-row aggregates broadcast-cross-joined; pair sums
-    * folded in decimal(38,0) (long products overflow at ~3e9 records),
+    * Same [[pairSums]] and exactness discipline as [[adjustedRandStats]]:
     * every count exact, and the only rounding is the final double
     * division / sqrt (sqrt is IEEE-correctly-rounded, so any engine
     * replaying the same integer inputs reproduces the doubles bit-exactly).
@@ -463,15 +483,8 @@ object Evaluation {
   def partitionAgreementStats(assignments: DataFrame,
       clusterCol: String = "cluster_id",
       truthCol: String = "truth_id"): DataFrame = {
-    val ni = contingency(assignments, clusterCol, truthCol)
-    val cells = ni.agg(sum(pairs2(col("__ni"))).as("s2_ij"),
-      sum(col("__ni")).as("__n"), count(lit(1)).as("v"))
-    val sa = ni.groupBy(col("__g")).agg(sum(col("__ni")).as("__na"))
-      .agg(sum(pairs2(col("__na"))).as("s2_a"), count(lit(1)).as("ca"))
-    val sb = ni.groupBy(col("__t")).agg(sum(col("__ni")).as("__nb"))
-      .agg(sum(pairs2(col("__nb"))).as("s2_b"), count(lit(1)).as("cb"))
     val n2 = col("__n").cast(dec) * (col("__n").cast(dec) - 1) // 2·C(n,2)
-    cells.crossJoin(broadcast(sa)).crossJoin(broadcast(sb))
+    pairSums(contingency(assignments, clusterCol, truthCol))
       .select(
         col("__n").cast("long").as("n"), col("ca"), col("cb"), col("v"),
         (col("s2_ij") / 2).cast("long").as("tp"),
@@ -513,16 +526,13 @@ object Evaluation {
   def informationStats(assignments: DataFrame,
       clusterCol: String = "cluster_id",
       truthCol: String = "truth_id"): DataFrame = {
-    val ni = contingency(assignments, clusterCol, truthCol)
-    def hist(sized: DataFrame, c: String, side: String): DataFrame =
-      sized.groupBy(col(c).as("group_size"))
+    val c = contingency(assignments, clusterCol, truthCol)
+    def hist(sized: DataFrame, n: String, side: String): DataFrame =
+      sized.groupBy(col(n).as("group_size"))
         .agg(count(lit(1)).as("n_groups"))
         .select(lit(side).as("side"), col("group_size"), col("n_groups"))
-    hist(ni, "__ni", "cell")
-      .unionAll(hist(ni.groupBy(col("__g"))
-        .agg(sum(col("__ni")).as("__na")), "__na", "cluster"))
-      .unionAll(hist(ni.groupBy(col("__t"))
-        .agg(sum(col("__ni")).as("__nb")), "__nb", "truth"))
+    hist(c.cells, "__ni", "cell").unionAll(hist(c.byG, "__gn", "cluster"))
+      .unionAll(hist(c.byT, "__tn", "truth"))
   }
 
   /** Scalar information-theoretic agreement metrics folded from
@@ -543,7 +553,7 @@ object Evaluation {
     *  - `homogeneity` = 1 − H(B|A)/H(B), `completeness` = 1 − H(A|B)/H(A),
     *    `v_measure` = their harmonic mean (Rosenberg & Hirschberg 2007).
     *  Degenerate normalizers yield NULL, never a fake score (the
-    *  [[graphMetrics]] density/centralisation discipline;
+    *  [[GraphMetrics.graphMetrics]] density/centralisation discipline;
     *  sklearn's 0-or-1 conventions at the same spots are arbitrary):
     *  `nmi` NULL when H(A)+H(B) = 0, `homogeneity` NULL when H(B) = 0,
     *  `completeness` NULL when H(A) = 0, `v_measure` NULL when either
@@ -616,707 +626,356 @@ object Evaluation {
       Seq("rank" -> lit(1L)), partitions)._1.drop("__ord", "__tie")
   }
 
-  /** Canonical intra-cluster edge set shared by [[nodeDegrees]] and
-    * [[graphMetrics]]: edges are normalized to (u < v), self-loops and
-    * duplicates (either direction) removed, and ONLY edges whose two
-    * endpoints sit in the same cluster survive — an edge that crosses
-    * clusters (possible when `assignment` was produced by a different
-    * run or a manual override split a component) contributes to neither
-    * side's metrics rather than silently corrupting one. Columns:
-    * (__gu, __gv, __gc). */
-  private def intraClusterEdges(assignment: DataFrame, edges: DataFrame,
-      idCol: String, clusterCol: String,
-      aCol: String, bCol: String): DataFrame = {
-    val e = edges
-      .select(least(col(aCol), col(bCol)).as("__gu"),
-        greatest(col(aCol), col(bCol)).as("__gv"))
-      .where(col("__gu") =!= col("__gv"))
+  /** Blocking quality metrics, the standard pair before committing a
+    * blocking scheme at scale: REDUCTION RATIO (how much of the n(n−1)/2
+    * all-pairs space blocking pruned) and PAIRS COMPLETENESS (what fraction
+    * of known true pairs survive blocking — the recall ceiling every
+    * downstream scorer inherits). One output row; every input reduces to a
+    * count aggregate or a semi-join + count, then three 1-row broadcast
+    * cross joins — nothing here scales with the corpus beyond the
+    * already-materialized inputs. `truePairs` empty → pairs_completeness
+    * null (no evidence, not 100%). */
+  def blockingQuality(records: DataFrame, candidates: DataFrame,
+      truePairs: DataFrame, aCol: String = "url_a",
+      bCol: String = "url_b"): DataFrame = {
+    val n = records.agg(count(lit(1)).as("n_records"))
+    val cand = candidates.agg(count(lit(1)).as("n_candidates"))
+    val tp = truePairs.agg(count(lit(1)).as("n_true"))
+    val covered = truePairs.join(candidates, Seq(aCol, bCol), "left_semi")
+      .agg(count(lit(1)).as("n_true_covered"))
+    n.crossJoin(cand).crossJoin(tp).crossJoin(covered)
+      // n/2.0 first (exact in double — n/2 has <= 52 significant bits for
+      // any realistic corpus), THEN times (n-1): a long n*(n-1) overflows
+      // negative past n ~ 3.04e9, well inside the 10^12-record design
+      // range. The double product rounds above 2^53 total pairs — a
+      // documented, sign-correct rounding, vs. garbage from overflow.
+      // Exact (bit-identical to the old integer path) up to n ~ 9.4e7.
+      .withColumn("total_pairs",
+        (col("n_records").cast("double") / lit(2.0) *
+          (col("n_records") - 1).cast("double")).cast("long"))
+      .withColumn("reduction_ratio",
+        lit(1.0) - col("n_candidates").cast("double") / col("total_pairs").cast("double"))
+      .withColumn("pairs_completeness",
+        when(col("n_true") > 0,
+          col("n_true_covered").cast("double") / col("n_true").cast("double")))
+  }
+
+  /** Pairs-completeness / reduction tradeoff CURVE over candidate bucket
+    * caps — the capacity-planning sweep (Christen's PC/RR analysis) run
+    * BEFORE committing to a cap: for each cap c,
+    *
+    *  - `pair_slots` — Σ n(n−1)/2 over blocks with n ≤ c, in
+    *    decimal(38,0) (the [[Linkage.blockingProfile]] slot convention: per-block
+    *    pair slots BEFORE cross-key dedup — an upper bound on distinct
+    *    candidates, exact when keys don't overlap);
+    *  - `n_true_covered` / `pairs_completeness` — a labeled true pair
+    *    survives cap c iff its SMALLEST shared block fits (≤ c): exactly
+    *    the pairs [[Linkage.candidatePairs]]' cold tier would generate, counted
+    *    without materializing any pair set.
+    *
+    * One sizing groupBy over the key frame, two equi-joins landing the
+    * block size on each truth pair's shared keys, one min-fold per truth
+    * pair, then a |caps|-way exploded map-side-combined count (the
+    * [[thresholdSweep]] shape). Truth pairs sharing NO key count as
+    * never covered. Caps with no qualifying block still emit a row.
+    * Output: (cap, pair_slots, n_true, n_true_covered,
+    * pairs_completeness), one row per cap ascending. */
+  def blockingQualitySweep(keys: DataFrame, truePairs: DataFrame,
+      caps: Seq[Long], keyCol: String = "key", idCol: String = "url",
+      aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
+    require(caps.forall(_ >= 1),
+      s"blockingQualitySweep: caps must be >= 1, got $caps")
+    val capArr = sweepPoints("blockingQualitySweep", "cap", caps)
+    val sizes = keys.groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
+    val slots = sizes
+      .select(col("__n"), explode(capArr).as("cap"))
+      .groupBy(col("cap"))
+      .agg(sum(when(col("__n") <= col("cap"),
+        (col("__n").cast(dec) * (col("__n") - 1).cast(dec)) / 2)
+        .otherwise(lit(0))).cast(dec).as("pair_slots"))
+    val ka = keys.select(col(keyCol).as("__k"), col(idCol).as(aCol))
+    val kb = keys.select(col(keyCol).as("__k"), col(idCol).as(bCol))
+    val tp = truePairs.select(col(aCol), col(bCol)).distinct()
+    val minShared = tp
+      .join(ka, aCol).join(kb, Seq("__k", bCol))
+      .join(sizes.withColumnRenamed(keyCol, "__k"), "__k")
+      .groupBy(col(aCol), col(bCol)).agg(min(col("__n")).as("__minn"))
+    val cov = tp.join(minShared, Seq(aCol, bCol), "left")
+      .select(explode(capArr).as("cap"),
+        when(col("__minn").isNotNull && col("__minn") <= col("cap"), 1L)
+          .otherwise(0L).as("__c"))
+      .groupBy(col("cap")).agg(sum(col("__c")).as("n_true_covered"))
+    val nTrue = tp.agg(count(lit(1)).as("n_true"))
+    keys.sparkSession.range(1).select(explode(capArr).as("cap"))
+      .join(slots, Seq("cap"), "left")
+      .join(cov, Seq("cap"), "left")
+      .crossJoin(broadcast(nTrue))
+      .select(col("cap"),
+        coalesce(col("pair_slots"), lit(0).cast(dec)).as("pair_slots"),
+        col("n_true"),
+        coalesce(col("n_true_covered"), lit(0L)).as("n_true_covered"),
+        when(col("n_true") > 0, coalesce(col("n_true_covered"), lit(0L))
+          .cast("double") / col("n_true").cast("double"))
+          .as("pairs_completeness"))
+  }
+
+  /** Dual-system (capture-recapture) estimate of the TRUE match-pair
+    * count from two independently-designed blocking passes — the
+    * label-free complement to [[blockingQuality]] (which needs
+    * `truePairs`): run two blocking schemes built on unrelated evidence
+    * (say phonetic name keys vs address q-grams), score both candidate
+    * sets with the same matcher, and treat each scheme's accepted pairs
+    * as one "capture" of the unknown duplicate population. Under the
+    * standard independence assumption (a pair's chance of being caught by
+    * scheme A doesn't depend on being caught by B — the Lincoln-Petersen
+    * model, the same estimator census coverage evaluation uses), the
+    * overlap pins the population size:
+    *
+    *  - `lincoln_petersen` = n_a·n_b / n_both (NULL when the captures are
+    *    disjoint — no evidence, not infinity);
+    *  - `chapman` = (n_a+1)(n_b+1)/(n_both+1) − 1 — the bias-corrected
+    *    small-overlap variant, always defined;
+    *  - `est_missed` = chapman − n_union — the estimated count of true
+    *    pairs NEITHER scheme surfaced (the number that decides whether a
+    *    third blocking family is worth its candidate volume);
+    *  - `coverage_a` = n_both/n_b, `coverage_b` = n_both/n_a — each
+    *    scheme's estimated recall, measured by the other's capture.
+    *
+    * Correlated schemes (two spellings of the same key) violate
+    * independence and bias the estimate LOW on missed pairs — pick
+    * evidence-disjoint families, and read est_missed as a floor.
+    *
+    * Shapes: each side is normalized once (least/greatest + distinct,
+    * self-loops out), then ONE pair-keyed groupBy folds the side flags
+    * and ONE global aggregate reduces to the 1-row output — counts in
+    * long, every estimate a pinned-order double expression over them, so
+    * the oracle reproduces each value bit-for-bit. Nothing scales past
+    * the candidate sets themselves. */
+  def captureRecapture(pairsA: DataFrame, pairsB: DataFrame,
+      aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
+    def norm(df: DataFrame): DataFrame = df
+      .select(least(col(aCol), col(bCol)).as("__cru"),
+        greatest(col(aCol), col(bCol)).as("__crv"))
+      .where(col("__cru") =!= col("__crv"))
       .distinct()
-    val au = assignment.select(col(idCol).as("__gu"),
-      col(clusterCol).as("__gcu"))
-    val av = assignment.select(col(idCol).as("__gv"),
-      col(clusterCol).as("__gcv"))
-    e.join(au, "__gu").join(av, "__gv")
-      .where(col("__gcu") === col("__gcv"))
-      .select(col("__gu"), col("__gv"), col("__gcu").as("__gc"))
+    val tagged = norm(pairsA)
+      .select(col("__cru"), col("__crv"), lit(1L).as("__ca"), lit(0L).as("__cb"))
+      .unionAll(norm(pairsB)
+        .select(col("__cru"), col("__crv"), lit(0L).as("__ca"), lit(1L).as("__cb")))
+    val na = col("n_a").cast("double")
+    val nb = col("n_b").cast("double")
+    val m = col("n_both").cast("double")
+    tagged.groupBy(col("__cru"), col("__crv"))
+      .agg(max(col("__ca")).as("__ca"), max(col("__cb")).as("__cb"))
+      .agg(coalesce(sum(col("__ca")), lit(0L)).as("n_a"),
+        coalesce(sum(col("__cb")), lit(0L)).as("n_b"),
+        coalesce(sum(col("__ca") * col("__cb")), lit(0L)).as("n_both"),
+        count(lit(1)).as("n_union"))
+      .select(col("n_a"), col("n_b"), col("n_both"), col("n_union"),
+        when(col("n_both") > 0, na * nb / m).as("lincoln_petersen"),
+        ((na + 1.0) * (nb + 1.0) / (m + 1.0) - 1.0).as("chapman"),
+        ((na + 1.0) * (nb + 1.0) / (m + 1.0) - 1.0 -
+          col("n_union").cast("double")).as("est_missed"),
+        when(col("n_b") > 0, m / nb).as("coverage_a"),
+        when(col("n_a") > 0, m / na).as("coverage_b"))
   }
 
-  /** Per-record degree in the verified match graph — Splink's node-level
-    * `compute_graph_metrics` output. A record's degree counts its
-    * DISTINCT same-cluster match partners (edges are direction- and
-    * duplicate-normalized, self-loops dropped, cross-cluster edges
-    * excluded — see [[intraClusterEdges]]); records no edge touches
-    * (singletons, or members only connected by excluded edges) appear
-    * with degree 0, because "this record matched nothing" is exactly the
-    * row a review queue wants. Low degree inside a big cluster marks a
-    * record held in only by transitivity — the first candidates to
-    * re-examine when a cluster looks over-merged.
+  /** Decision-threshold sweep: for each θ in `thetas`, the confusion
+    * counts and P/R/F1 of "match ⇔ score ≥ θ" against `labeled` true
+    * pairs — the operating-curve view a θ choice should be read off
+    * (complements the model-driven μ/λ calibration in
+    * [[FellegiSunter.calibrate]] with a label-driven one).
     *
-    * Shapes: edge normalization is one edge-sized distinct; degrees are
-    * one map-side-combinable groupBy over the exploded endpoints; the
-    * final left join keys on the record id. Nothing pair-quadratic,
-    * nothing windowed. Output: (id, cluster_id, degree). */
-  def nodeDegrees(assignment: DataFrame, edges: DataFrame,
-      idCol: String = "id", clusterCol: String = "cluster_id",
-      aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
-    val e = intraClusterEdges(assignment, edges, idCol, clusterCol,
-      aCol, bCol)
-    val deg = e.select(col("__gu").as("__gid"))
-      .unionAll(e.select(col("__gv").as("__gid")))
-      .groupBy(col("__gid")).agg(count(lit(1)).as("__gdeg"))
-    assignment.select(col(idCol), col(clusterCol))
-      .join(deg, col(idCol) === col("__gid"), "left")
-      .select(col(idCol), col(clusterCol),
-        coalesce(col("__gdeg"), lit(0L)).as("degree"))
-  }
+    * One [[sweep]] over the scored pairs — ~|θ| comparisons per row over
+    * a single count. fn = n_true − tp
+    * against ALL labeled pairs, so truth lost by blocking shows up as
+    * irreducible fn (the recall ceiling [[blockingQuality]] measures).
+    *
+    * All counts are 64-bit integers; precision/recall are one exact
+    * long→double division each (null when the denominator is 0 — no
+    * evidence, not perfection); f1 = 2·p·r/(p+r) with that exact
+    * evaluation order, 0.0 when tp = 0. Output: (theta, n_pred, tp, fp,
+    * fn, precision, recall, f1), one row per θ, present even when
+    * nothing clears it. */
+  def thresholdSweep(scored: DataFrame, labeled: DataFrame,
+      thetas: Seq[Double], aCol: String = "id_l", bCol: String = "id_r",
+      scoreCol: String = "score"): DataFrame =
+    sweep("thresholdSweep", "theta", thetas, scored, labeled, col(scoreCol),
+        aCol, bCol)(_ >= _)
+      .withColumnRenamed("n", "n_pred")
+      .withColumn("fp", col("n_pred") - col("tp"))
+      .withColumn("fn", col("__ntrue") - col("tp"))
+      .withColumn("precision", when(col("n_pred") > 0,
+        col("tp").cast("double") / col("n_pred").cast("double")))
+      .withColumn("recall", when(col("__ntrue") > 0,
+        col("tp").cast("double") / col("__ntrue").cast("double")))
+      .withColumn("f1", when(col("tp") > 0,
+        lit(2.0) * col("precision") * col("recall") /
+          (col("precision") + col("recall"))).otherwise(lit(0.0)))
+      .select(col("theta"), col("n_pred"), col("tp"), col("fp"), col("fn"),
+        col("precision"), col("recall"), col("f1"))
 
-  /** Per-cluster graph metrics over the verified match edges — Splink's
-    * cluster-level `compute_graph_metrics`: size, edge count, density
-    * and Freeman degree centralisation. Reading: a large cluster with
-    * density near the 2/n spanning-tree floor is held together by a
-    * chain of single links (over-merge suspect — [[Linkage
-    * .weakestLinks]] names the link to cut); centralisation near 1 is a
-    * hub-and-spoke cluster whose hub record deserves a clerical look
-    * (one bad golden-ish record gluing strangers together); density 1 is
-    * a clique — every pair independently verified.
+  /** Unlinkables analysis — Splink's `unlinkables_chart` recast for a
+    * candidate-pair world: for each threshold θ, how many RECORDS have no
+    * scored pair at or above θ touching them at all. A record is
+    * unlinkable at θ when its best incident score is below θ — or when
+    * blocking never produced a pair for it (best = no evidence), which
+    * counts at EVERY θ. This is the per-record complement of
+    * [[thresholdSweep]]'s per-pair view: the sweep says how the pair
+    * decisions trade off, this says what fraction of the corpus a θ
+    * choice strands with zero matches — the curve read off before
+    * promising "every registry row links to the crawl".
     *
-    * Definitions (n = n_nodes, E = n_edges, deg over [[nodeDegrees]]'
-    * intra-cluster graph):
-    *  - `density` = 2E / (n(n−1)), NULL when n < 2 (a singleton has no
-    *    pair slots — no evidence, not 0);
-    *  - `centralisation` = Σᵢ(max_deg − degᵢ) / ((n−1)(n−2)) — Freeman's
-    *    normalization, NULL when n < 3 (the star denominator vanishes).
+    * Shapes: one endpoint-explode + map-side-combinable max per record
+    * (pair-sized in, record-sized out), one left join onto the record
+    * frame, then the [[thresholdSweep]] explode discipline — each record
+    * fans out to all |θ| literals and partial aggregation folds to |θ|
+    * groups map-side. No window, nothing quadratic; every θ row is
+    * present by construction (each record contributes to each θ group).
     *
-    * The gate face keeps the integer sufficient statistics (n_nodes,
-    * n_edges, max_degree) as longs; the two ratios are computed in
-    * pinned all-double order — numerator and denominator each a product
-    * of exact long→double casts, one divide — so an oracle mirroring the
-    * formula reproduces them bit-for-bit (and n(n−1) can never overflow
-    * a long on a 10^12-member pathological cluster, the
-    * [[Linkage.blockingQuality]] lesson). Σ(max−deg) folds as
-    * n·max − Σdeg without a second pass.
-    *
-    * Shapes: one edge-sized distinct, one endpoint-explode groupBy for
-    * degrees, one cluster groupBy each for node counts and degree
-    * aggregates, one cluster-count-sized join. Clusters are rows even
-    * when no edge survived (n_edges 0 — an assignment imported without
-    * its evidence shows up instead of vanishing). Output: (cluster_id,
-    * n_nodes, n_edges, max_degree, density, centralisation). */
-  def graphMetrics(assignment: DataFrame, edges: DataFrame,
-      idCol: String = "id", clusterCol: String = "cluster_id",
-      aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
-    val deg = nodeDegrees(assignment, edges, idCol, clusterCol, aCol, bCol)
-    val n = col("n_nodes").cast("double")
-    deg.groupBy(col(clusterCol))
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(col("degree")).as("__gsum"),
-        max(col("degree")).as("max_degree"))
-      .select(col(clusterCol), col("n_nodes"),
-        // every intra-cluster edge contributes exactly 2 to __gsum
-        (col("__gsum") / lit(2)).cast("long").as("n_edges"),
-        col("max_degree"), col("__gsum"))
-      .withColumn("density", when(col("n_nodes") >= 2,
-        col("__gsum").cast("double") / (n * (col("n_nodes") - 1)
-          .cast("double"))))
-      .withColumn("centralisation", when(col("n_nodes") >= 3,
-        (n * col("max_degree").cast("double") -
-          col("__gsum").cast("double")) /
-        ((col("n_nodes") - 1).cast("double") *
-          (col("n_nodes") - 2).cast("double"))))
-      .select(col(clusterCol), col("n_nodes"), col("n_edges"),
-        col("max_degree"), col("density"), col("centralisation"))
-  }
-
-  /** Bridge flags over the verified match graph — Splink's `is_bridge`
-    * edge metric: an intra-cluster edge is a bridge when removing it
-    * disconnects its cluster. Bridges are the single points of failure
-    * of an entity — each one is ONE pairwise decision holding two
-    * otherwise-unrelated record groups together, so the bridge list IS
-    * the clerical-review queue for over-merge suspects (where
-    * [[Linkage.weakestLinks]] ranks by score, this ranks by structure;
-    * an isolated verified pair is a bridge by definition — cutting it
-    * splits the 2-cluster).
-    *
-    * Semantics are over the SIMPLE intra-cluster graph of
-    * [[intraClusterEdges]] (direction/duplicate-normalized, self-loops
-    * and cross-cluster edges out) — duplicate rows of one verified pair
-    * are artifacts, not parallel evidence, so they must not fake a
-    * cycle.
-    *
-    * Scale shape: bridge-finding is inherently whole-component (every
-    * known algorithm walks the component), so the component is the unit
-    * of distribution — groups fan out across executors and each runs
-    * one O(V+E) iterative Tarjan lowlink pass in arrays local to ITS
-    * cluster (the [[graft.operators.Dedup]] lesson applied to graphs:
-    * per-bucket work bounded + observable, never corpus-global).
-    * Clusters with more than `maxClusterEdges` edges emit nothing here
-    * — the group reader stops buffering at the cap, so a monster
-    * cluster costs O(cap) memory, not O(cluster) — and `dropped` lists
-    * them as (clusterCol, n_edges) with exact sizes (same contract as
-    * every capped pair generator in the repo). At real cluster sizes (entity
-    * clusters are people/pages, not the corpus) the default cap is
-    * effectively "never".
-    *
-    * Output: (clusterCol, aCol, bCol, is_bridge) — one row per
-    * normalized intra-cluster edge, original id/cluster types
-    * preserved. */
-  def bridgeEdges(assignment: DataFrame, edges: DataFrame,
-      idCol: String = "id", clusterCol: String = "cluster_id",
+    * All counts are longs; `frac_unlinkable` is one exact long→double
+    * division. `records` must carry distinct ids (it is the corpus
+    * frame, not the pair frame). Output: (theta, n_records,
+    * n_unlinkable, frac_unlinkable), one row per θ. */
+  def unlinkables(records: DataFrame, scored: DataFrame,
+      thetas: Seq[Double], idCol: String = "url",
       aCol: String = "url_a", bCol: String = "url_b",
-      maxClusterEdges: Int = 1 << 20): Capped = {
-    val intra = intraClusterEdges(assignment, edges, idCol, clusterCol,
-      aCol, bCol)
-    val outSchema = StructType(Seq(
-      intra.schema("__gc").copy(name = clusterCol),
-      intra.schema("__gu").copy(name = aCol),
-      intra.schema("__gv").copy(name = bCol),
-      StructField("is_bridge", BooleanType, nullable = false)))
-    val flagged = perCluster(intra, maxClusterEdges, outSchema) {
-      (buf, nodes, eu, ev) =>
-        val bridge = simpleBridges(nodes.length, eu, ev)
-        buf.iterator.zipWithIndex.map { case (r, k) =>
-          Row(r.get(2), r.get(0), r.get(1), bridge(k))
-        }
-    }
-    Capped(flagged, overCapClusters(intra, clusterCol, maxClusterEdges))
+      scoreCol: String = "score"): DataFrame = {
+    val thetaArr = sweepPoints("unlinkables", "theta", thetas)
+    val best = scored.select(col(aCol).as("__uid"), col(scoreCol).as("__us"))
+      .unionAll(scored.select(col(bCol).as("__uid"),
+        col(scoreCol).as("__us")))
+      .groupBy(col("__uid")).agg(max(col("__us")).as("__ubest"))
+    records.select(col(idCol).as("__uid"))
+      .join(best, Seq("__uid"), "left")
+      .select(col("__ubest"), explode(thetaArr).as("theta"))
+      .groupBy(col("theta"))
+      .agg(count(lit(1)).as("n_records"),
+        count(when(col("__ubest").isNull || col("__ubest") < col("theta"),
+          lit(1))).as("n_unlinkable"))
+      .withColumn("frac_unlinkable",
+        col("n_unlinkable").cast("double") / col("n_records").cast("double"))
+      .select(col("theta"), col("n_records"), col("n_unlinkable"),
+        col("frac_unlinkable"))
   }
 
-  /** `f(edges, nodes, eu, ev)` per cluster of `intra`: its (__gu, __gv,
-    * __gc) edge rows, its distinct nodes in first-seen order, and each
-    * edge's endpoints as indices into `nodes` (ids compare by value,
-    * binary ids by content). Clusters are grouped by the SQL value of
-    * `__gc` — the grouping [[overCapClusters]] sizes — and at most
-    * `cap` + 1 rows are buffered: a cluster over the cap is detected and
-    * skipped without ever materializing past it. */
-  private def perCluster(intra: DataFrame, cap: Int, outSchema: StructType)(
-      f: (collection.IndexedSeq[Row], collection.IndexedSeq[Any],
-        Array[Int], Array[Int]) => Iterator[Row]): DataFrame =
-    intra.groupBy(col("__gc"))
-      .as[Row, Row](Encoders.row(intra.select(col("__gc")).schema),
-        Encoders.row(intra.schema))
-      .flatMapGroups { (_: Row, it: Iterator[Row]) =>
-        val buf = new scala.collection.mutable.ArrayBuffer[Row]()
-        while (it.hasNext && buf.length <= cap) buf += it.next()
-        if (buf.length > cap) Iterator.empty
-        else {
-          val index = new java.util.HashMap[Any, Integer]()
-          val nodes = new scala.collection.mutable.ArrayBuffer[Any]()
-          def of(x: Any): Int = {
-            val key = x match {
-              case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
-              case v => v
-            }
-            var i = index.get(key)
-            if (i == null) { i = nodes.length; index.put(key, i); nodes += x }
-            i
-          }
-          val m = buf.length
-          val eu = new Array[Int](m); val ev = new Array[Int](m)
-          var j = 0
-          while (j < m) {
-            eu(j) = of(buf(j).get(0)); ev(j) = of(buf(j).get(1)); j += 1
-          }
-          f(buf, nodes, eu, ev)
-        }
-      }(Encoders.row(outSchema))
-
-  /** (clusterCol, n_edges) of the clusters over `maxClusterEdges` — the
-    * ones the per-cluster passes skip, sized exactly by one map-side-
-    * combinable groupBy, nothing buffered. */
-  private def overCapClusters(intra: DataFrame, clusterCol: String,
-      maxClusterEdges: Int): DataFrame =
-    intra.groupBy(col("__gc")).agg(count(lit(1)).as("n_edges"))
-      .where(col("n_edges") > maxClusterEdges)
-      .select(col("__gc").as(clusterCol), col("n_edges"))
-
-  /** Bridge flags only — see [[lowlinkPass]]. */
-  private[operators] def simpleBridges(n: Int, eu: Array[Int],
-      ev: Array[Int]): Array[Boolean] = lowlinkPass(n, eu, ev)._1
-
-  /** ONE iterative Tarjan lowlink pass over an int-indexed simple graph
-    * in CSR arrays, computing bridges (per edge) AND cut vertices /
-    * articulation points (per node) together — explicit stack (a
-    * 10^5-node chain would blow the JVM stack recursively), parent
-    * skipped BY EDGE ID (robust even to parallel edges, though callers
-    * pass deduped sets). Bridge: tree edge with low(child) > disc(u);
-    * cut: non-root u with a tree child where low(child) ≥ disc(u), or a
-    * root with ≥ 2 tree children. O(V+E) time and memory, all primitive
-    * arrays. */
-  private[operators] def lowlinkPass(n: Int, eu: Array[Int],
-      ev: Array[Int]): (Array[Boolean], Array[Boolean]) = {
-    val m = eu.length
-    val deg = new Array[Int](n)
-    var j = 0
-    while (j < m) { deg(eu(j)) += 1; deg(ev(j)) += 1; j += 1 }
-    val start = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { start(i + 1) = start(i) + deg(i); i += 1 }
-    val pos = java.util.Arrays.copyOf(start, n)
-    val adjN = new Array[Int](2 * m); val adjE = new Array[Int](2 * m)
-    j = 0
-    while (j < m) {
-      adjN(pos(eu(j))) = ev(j); adjE(pos(eu(j))) = j; pos(eu(j)) += 1
-      adjN(pos(ev(j))) = eu(j); adjE(pos(ev(j))) = j; pos(ev(j)) += 1
-      j += 1
-    }
-    val disc = Array.fill(n)(-1); val low = new Array[Int](n)
-    val parentEdge = new Array[Int](n)
-    val stackNode = new Array[Int](n); val stackPtr = new Array[Int](n)
-    val isBridge = new Array[Boolean](m)
-    val isCut = new Array[Boolean](n)
-    var timer = 0
-    var root = 0
-    while (root < n) {
-      if (disc(root) == -1) {
-        var top = 0
-        var rootChildren = 0
-        stackNode(0) = root; stackPtr(0) = start(root)
-        parentEdge(root) = -1
-        disc(root) = timer; low(root) = timer; timer += 1
-        while (top >= 0) {
-          val u = stackNode(top)
-          if (stackPtr(top) < start(u + 1)) {
-            val p = stackPtr(top); stackPtr(top) += 1
-            val e = adjE(p); val w = adjN(p)
-            if (e != parentEdge(u)) {
-              if (disc(w) == -1) {
-                disc(w) = timer; low(w) = timer; timer += 1
-                parentEdge(w) = e
-                if (top == 0) rootChildren += 1
-                top += 1; stackNode(top) = w; stackPtr(top) = start(w)
-              } else if (disc(w) < low(u)) low(u) = disc(w)
-            }
-          } else {
-            top -= 1
-            if (top >= 0) {
-              val par = stackNode(top)
-              if (low(u) < low(par)) low(par) = low(u)
-              if (low(u) > disc(par)) isBridge(parentEdge(u)) = true
-              // non-root articulation: some tree child can't reach
-              // above par without par
-              if (top > 0 && low(u) >= disc(par)) isCut(par) = true
-            }
-          }
-        }
-        if (rootChildren >= 2) isCut(root) = true
-      }
-      root += 1
-    }
-    (isBridge, isCut)
+  /** Weakest intra-cluster match edge per entity cluster — the
+    * chain-break review queue: transitive clustering merges a~b~c even
+    * when a~c never scored, so if a cluster is over-merged the culprit
+    * is usually its lowest-scoring edge; this ranks WHERE to look
+    * (complementing [[Linkage.clusterRepair]], which applies the reviewer's
+    * verdicts once they've looked). One row per cluster with ≥ 1
+    * intra-cluster edge: (clusterCol, n_edges, weak_ia, weak_ib,
+    * weak_score) — the argmin edge, ties pinned to the smallest
+    * (ia, ib), so the queue is deterministic and
+    * partitioning-independent.
+    *
+    * Scale shape: two id-keyed equi-joins hang the cluster id on each
+    * edge endpoint, then ONE min-combinable struct aggregate — no
+    * window, no pair rematerialization; cost ∝ scored edges. */
+  def weakestLinks(scored: DataFrame, assignment: DataFrame,
+      idCol: String, clusterCol: String = "component",
+      iaCol: String = "ka", ibCol: String = "kb",
+      scoreCol: String = "score"): DataFrame = {
+    val a1 = assignment.select(col(idCol).as("__wia"),
+      col(clusterCol).as("__wca"))
+    val a2 = assignment.select(col(idCol).as("__wib"),
+      col(clusterCol).as("__wcb"))
+    scored.select(col(iaCol).as("__wia"), col(ibCol).as("__wib"),
+        col(scoreCol).as("__ws"))
+      .join(a1, "__wia").join(a2, "__wib")
+      .where(col("__wca") === col("__wcb"))
+      .groupBy(col("__wca"))
+      .agg(count(lit(1)).as("n_edges"),
+        min(struct(col("__ws").as("s"), col("__wia").as("a"),
+          col("__wib").as("b"))).as("__w"))
+      .select(col("__wca").as(clusterCol), col("n_edges"),
+        col("__w").getField("a").as("weak_ia"),
+        col("__w").getField("b").as("weak_ib"),
+        col("__w").getField("s").as("weak_score"))
   }
 
-  /** Articulation records (cut vertices) of the verified match graph —
-    * the node-level sibling of [[bridgeEdges]]: a record whose removal
-    * disconnects its cluster. Where a bridge is one fragile DECISION, an
-    * articulation record is one fragile RECORD — the classic over-merge
-    * culprit is a single bad row (a shared placeholder email, a
-    * tokenized-away name) that alone connects two real entities, and it
-    * is exactly a cut vertex even when its incident edges individually
-    * sit in cycles. Complements `centralisation` (which flags hubs only
-    * statistically) with the exact structural test.
+  /** Strongest CROSS-cluster scored pairs — the under-merge review queue,
+    * the dual of [[weakestLinks]]: weakestLinks asks "which edge barely
+    * holds this cluster together" (over-merge suspects); this asks
+    * "which scored pair ALMOST merged two clusters" (under-merge
+    * suspects — typically candidates that scored just below θ). Per
+    * unordered cluster pair connected by at least one cross edge, the
+    * top-k edges by (score DESC, ia, ib) plus the total cross-edge count
+    * `n_cross` — a cluster pair held apart by many near misses is the
+    * first merge a reviewer confirms.
     *
-    * Same distribution contract as [[bridgeEdges]]: per-cluster
-    * iterative Tarjan (ONE shared lowlink pass computes both metrics),
-    * groups buffered only to `maxClusterEdges` (+1 detection row),
-    * oversized clusters emit nothing here and are listed in `dropped`.
-    * Output: one row per record incident to
-    * ≥ 1 intra-cluster edge — an edgeless record can't cut anything —
-    * with its flag: (clusterCol, idCol, is_articulation). */
-  def articulationRecords(assignment: DataFrame, edges: DataFrame,
-      idCol: String = "id", clusterCol: String = "cluster_id",
-      aCol: String = "url_a", bCol: String = "url_b",
-      maxClusterEdges: Int = 1 << 20): Capped = {
-    val intra = intraClusterEdges(assignment, edges, idCol, clusterCol,
-      aCol, bCol)
-    val outSchema = StructType(Seq(
-      intra.schema("__gc").copy(name = clusterCol),
-      intra.schema("__gu").copy(name = idCol),
-      StructField("is_articulation", BooleanType, nullable = false)))
-    val flagged = perCluster(intra, maxClusterEdges, outSchema) {
-      (buf, nodes, eu, ev) =>
-        val cut = lowlinkPass(nodes.length, eu, ev)._2
-        nodes.iterator.zipWithIndex.map { case (id, k) =>
-          Row(buf.head.get(2), id, cut(k))
-        }
-    }
-    Capped(flagged, overCapClusters(intra, clusterCol, maxClusterEdges))
+    * Only records present in `assignment` participate (inner joins);
+    * callers who want never-matched singletons in the queue pass a
+    * completed assignment (id → singleton id) — the
+    * [[graft.operators.EntityIds]] convention.
+    *
+    * Output: (cluster_a, cluster_b, ia, ib, score, rank, n_cross) with
+    * cluster_a < cluster_b and rank 1-based per cluster pair.
+    *
+    * Scale shape: two id-keyed equi-joins hang cluster ids on the edge
+    * endpoints; the count is one map-side-combinable groupBy; the top-k
+    * window's ≤ k filter sits directly above row_number, so
+    * InferWindowGroupLimit bounds every map task to k rows per cluster
+    * pair before the shuffle. Cost ∝ scored edges; nothing quadratic in
+    * clusters or records. */
+  def nearMissPairs(scored: DataFrame, assignment: DataFrame,
+      idCol: String, clusterCol: String = "component",
+      iaCol: String = "ka", ibCol: String = "kb",
+      scoreCol: String = "score", k: Int = 3): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val a1 = assignment.select(col(idCol).as("__nia"),
+      col(clusterCol).as("__nca"))
+    val a2 = assignment.select(col(idCol).as("__nib"),
+      col(clusterCol).as("__ncb"))
+    val cross = scored.select(col(iaCol).as("__nia"), col(ibCol).as("__nib"),
+        col(scoreCol).as("__ns"))
+      .join(a1, "__nia").join(a2, "__nib")
+      .where(col("__nca") =!= col("__ncb"))
+      .select(least(col("__nca"), col("__ncb")).as("cluster_a"),
+        greatest(col("__nca"), col("__ncb")).as("cluster_b"),
+        col("__nia").as("ia"), col("__nib").as("ib"), col("__ns").as("score"))
+    val counts = cross.groupBy(col("cluster_a"), col("cluster_b"))
+      .agg(count(lit(1)).as("n_cross"))
+    cross
+      .withColumn("rank", row_number().over(
+        W.partitionBy(col("cluster_a"), col("cluster_b"))
+          .orderBy(col("score").desc, col("ia"), col("ib"))))
+      .where(col("rank") <= k)
+      .join(counts, Seq("cluster_a", "cluster_b"))
+      .select(col("cluster_a"), col("cluster_b"), col("ia"), col("ib"),
+        col("score"), col("rank"), col("n_cross"))
   }
 
-  /** Per-cluster triangle census over the verified match graph — the
-    * cohesion counterpart of [[graphMetrics]]' density: `transitivity`
-    * = 3·triangles / wedges (the global clustering coefficient,
-    * restricted to the cluster) measures how much of the evidence
-    * CLOSES. Reading: density says how many pairs were verified at all;
-    * transitivity says whether those verifications corroborate each
-    * other — a cluster can be moderately dense yet triangle-free (a
-    * bipartite-ish merge of two record groups, every wedge open), which
-    * is exactly the over-merge shape [[bridgeEdges]] flags edge-by-edge
-    * and this flags in one scalar. Triangle-rich clusters survive any
-    * single clerical reversal; transitivity 0 clusters are one
-    * retraction away from splitting.
+  /** Cluster-generation diff — the audit an incremental-ER deployment
+    * runs after every re-clustering: each (old cluster, new cluster)
+    * overlap cell with both marginal sizes and a classification:
+    * `stable` (the cell IS both clusters — the entity rode through
+    * unchanged), `merge` (the old cluster was absorbed whole into a
+    * larger new one), `split` (the new cluster was carved whole out of a
+    * larger old one), `reshuffle` (records crossed cluster boundaries
+    * both ways — the cells to eyeball before shipping). Only ids present
+    * in BOTH assignments participate (adds/removes are a plain anti-join
+    * the caller owns; mixing them in here would make every marginal
+    * ambiguous).
     *
-    * Scale shape: triangle counting NEVER enumerates per-vertex
-    * neighborhood squares blindly — edges are ORIENTED from
-    * lower-(degree, id) to higher-(degree, id) endpoint first (the
-    * MapReduce triangle-counting move of Suri & Vassilvitskii, WWW'11),
-    * so wedge enumeration is Σᵥ C(outdeg(v), 2) = O(E^{3/2}) total
-    * (Chiba-Nishizeki bound) regardless of skew — a hot record with
-    * degree d contributes d oriented IN-edges and only O(√E) out-edges.
-    * The pipeline is three equi-joins and two groupBys: degree join,
-    * oriented-wedge self-join on the source, closing-edge equi-join on
-    * (b, c) — no windows, no per-group buffering, no caps needed (the
-    * orientation IS the skew remedy, unlike the buffered Tarjan passes
-    * which cap). Wedge counts fold as Σ d(d−1)/2 in decimal(38,0)
-    * (the [[Linkage.blockingQuality]] overflow lesson — a degree-3e9
-    * record would overflow a long product).
-    *
-    * Semantics over the SIMPLE intra-cluster graph of
-    * [[intraClusterEdges]] (duplicates/self-loops/cross-cluster edges
-    * out — a duplicated verified pair must not fake a closed triangle).
-    * Every cluster in the assignment is a row (edgeless → 0 triangles,
-    * 0 wedges); `transitivity` = 3T/W as one pinned double division,
-    * NULL when the cluster has no wedge (a lone edge closes nothing —
-    * no evidence, not 0). Output: (clusterCol, n_triangles, n_wedges,
-    * transitivity). */
-  def clusterTriangles(assignment: DataFrame, edges: DataFrame,
-      idCol: String = "id", clusterCol: String = "cluster_id",
-      aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
-    val dec = "decimal(38,0)"
-    val intra = intraClusterEdges(assignment, edges, idCol, clusterCol,
-      aCol, bCol)
-    val (deg, tri) = triangles(intra, Seq("__gc"))
-    // wedges per cluster: each edge-incident node appears once per side
-    // it touches — distinct to once — then Σ d(d−1)/2 over the cluster
-    val wedges = intra.select(col("__gu").as("__tid"), col("__gc"))
-      .unionAll(intra.select(col("__gv").as("__tid"), col("__gc")))
-      .distinct()
-      .join(deg, "__tid")
-      .groupBy(col("__gc"))
-      .agg((sum(col("__tdeg").cast(dec) * (col("__tdeg").cast(dec) - 1))
-        / 2).cast("long").as("n_wedges"))
-    val nTri = tri.groupBy(col("__gc")).agg(count(lit(1)).as("n_triangles"))
-    assignment.select(col(clusterCol)).distinct()
-      .join(wedges.withColumnRenamed("__gc", clusterCol), Seq(clusterCol),
-        "left")
-      .join(nTri.withColumnRenamed("__gc", clusterCol), Seq(clusterCol),
-        "left")
-      .select(col(clusterCol),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
-        coalesce(col("n_wedges"), lit(0L)).as("n_wedges"))
-      .withColumn("transitivity", when(col("n_wedges") > 0,
-        lit(3.0) * col("n_triangles").cast("double") /
-          col("n_wedges").cast("double")))
-  }
-
-  /** Per-record core number (coreness) in the verified match graph — the
-    * k-core view of cluster robustness that degree alone misses: a
-    * record's core number is the largest k such that it survives
-    * repeatedly deleting every record with fewer than k remaining
-    * same-cluster matches. Reading for review queues: `core = 1` inside
-    * a big cluster marks a record dangling off the cluster by a single
-    * chain (the classic over-merge appendage — [[bridgeEdges]] names the
-    * edge, this names the whole tail); a high min-core cluster is
-    * edit-tolerant (no single clerical deletion can shed members).
-    *
-    * Algorithm: iterated h-index (Lü et al. 2016, "The H-index of a
-    * network node and its relation to degree and coreness" — public
-    * result): h₀(v) = deg(v), hₜ₊₁(v) = H({hₜ(u) : u ∈ N(v)}) where H is
-    * the largest h with ≥ h neighbors valued ≥ h. The sequence is
-    * monotone non-increasing and its fixpoint is exactly coreness, which
-    * makes it the distributed formulation of peeling: each round is two
-    * stock shuffles (join values onto the bidirected edge list, then a
-    * per-node window + groupBy for the H-operator) — no global priority
-    * queue, no sequential peel order. All values are integers, so the
-    * fixpoint is bit-exact and algorithm-independent: the DuckDB oracle
-    * replays the same iteration as a recursive CTE and must agree
-    * hash-for-hash.
-    *
-    * Scale shapes: the bidirected intra-cluster edge list is built once
-    * and reused every round ([[intraClusterEdges]] normalization:
-    * dedup'd, self-loops out, cross-cluster edges out); per-round state
-    * is one (id, h) frame, materialized by [[Frames.shared]] (the
-    * convergence aggregate right after is the single action per round)
-    * exactly like [[ConnectedComponents]]. The
-    * H-operator's window partitions by node id, so its cost is bounded
-    * by max degree, not cluster size; a 10^7-degree hub serializes one
-    * task for its own sort (AQE cannot split a window partition) — on
-    * graphs with such hubs, cap them upstream ([[Linkage]] pair caps
-    * already bound degree by construction). Rounds: ≤ a few dozen on
-    * real graphs (empirically O(√n) worst case, tiny on web-shaped
-    * graphs); `maxIter` is a job-killing `require`, not a silent
-    * truncation. Records with no surviving edge get core 0.
-    *
-    * Output: (idCol, clusterCol, core_number: Long). */
-  def coreNumbers(assignment: DataFrame, edges: DataFrame,
-      idCol: String = "id", clusterCol: String = "cluster_id",
-      aCol: String = "url_a", bCol: String = "url_b",
-      maxIter: Int = 200): DataFrame = {
-    val intra = intraClusterEdges(assignment, edges, idCol, clusterCol,
-      aCol, bCol)
-    // bidirected edge list, read by the finish and by every round
-    val b = Frames.shared(intra
-      .select(col("__gu").as("__cu"), col("__gv").as("__cv"))
-      .unionAll(intra.select(col("__gv").as("__cu"), col("__gu").as("__cv"))))
-
-    // Driver finish ([[DriverFinish]]): coreness is a unique integer
-    // function of the edge set (the h-index fixpoint IS coreness), so the
-    // classic O(E) peel over the collected bidirected edge list computes
-    // the same values as every distributed round (2 shuffles + a window +
-    // an action each). Ids are hashed, so only hashable id types finish.
-    val spark = assignment.sparkSession
-    val coreCap = DriverFinish.cap(spark, "core.driverFinishEdges")
-    val finished = DriverFinish.collected(b, Seq("__cu", "__cv"), coreCap).map { rows =>
-      val idx = new java.util.HashMap[Any, Integer]()
-      rows.foreach { r =>
-        idx.computeIfAbsent(r.get(0), _ => Integer.valueOf(idx.size))
-      }
-      val n = idx.size
-      val deg = new Array[Int](n)
-      rows.foreach(r => deg(idx.get(r.get(0))) += 1)
-      val adjStart = new Array[Int](n + 1)
-      var i = 0
-      while (i < n) { adjStart(i + 1) = adjStart(i) + deg(i); i += 1 }
-      val fill = adjStart.clone()
-      val adj = new Array[Int](rows.length)
-      rows.foreach { r =>
-        val u = idx.get(r.get(0)); adj(fill(u)) = idx.get(r.get(1))
-        fill(u) += 1
-      }
-      // Batagelj–Zaveršnik bucket peel: process nodes in nondecreasing
-      // degree; each processed node's coreness is its current degree,
-      // and its unprocessed higher-degree neighbors lose one
-      val core = deg.clone()
-      val maxDeg = if (n == 0) 0 else core.max
-      val bin = new Array[Int](maxDeg + 2)
-      core.foreach(d => bin(d) += 1)
-      var s = 0
-      var d = 0
-      while (d <= maxDeg) { val t = bin(d); bin(d) = s; s += t; d += 1 }
-      val vert = new Array[Int](n)
-      val posv = new Array[Int](n)
-      i = 0
-      while (i < n) {
-        posv(i) = bin(core(i)); vert(posv(i)) = i; bin(core(i)) += 1
-        i += 1
-      }
-      d = maxDeg
-      while (d > 0) { bin(d) = bin(d - 1); d -= 1 }
-      bin(0) = 0
-      i = 0
-      while (i < n) {
-        val v = vert(i)
-        var j = adjStart(v)
-        while (j < adjStart(v + 1)) {
-          val u = adj(j)
-          if (core(u) > core(v)) {
-            val du = core(u); val pu = posv(u)
-            val pw = bin(du); val w = vert(pw)
-            if (u != w) {
-              posv(u) = pw; vert(pu) = w; posv(w) = pu; vert(pw) = u
-            }
-            bin(du) += 1
-            core(u) -= 1
-          }
-          j += 1
-        }
-        i += 1
-      }
-      DriverFinish.frame(spark, new StructType()
-          .add("__cid", b.schema("__cu").dataType).add("__ch", LongType),
-        idx.asScala.toSeq.map { case (id, k) => Row(id, core(k).toLong) })
-    }
-
-    // round state: the empty probe and the first round's two joins
-    var h = finished.getOrElse(Frames.shared(b.groupBy(col("__cu").as("__cid"))
-      .agg(count(lit(1)).as("__ch"))))
-    var iter = 0
-    var done = finished.isDefined || h.isEmpty // edgeless: nothing to do
-    while (!done && iter < maxIter) {
-      // neighbor values: (node, h(neighbor)) for every directed edge
-      val nv = b.join(h, b("__cv") === h("__cid"))
-        .select(b("__cu").as("__cid"), col("__ch").as("__chv"))
-      // H-operator: rank neighbor values descending; H = max min(rank, v)
-      // (tie order among equal values cannot change min(rank, v)'s max)
-      val w = W.partitionBy(col("__cid")).orderBy(col("__chv").desc)
-      val hidx = nv.select(col("__cid"), col("__chv"),
-          row_number().over(w).cast("long").as("__crn"))
-        .groupBy(col("__cid"))
-        .agg(max(least(col("__crn"), col("__chv"))).as("__chh"))
-      // round state: the change count and the next round's two joins
-      val next = Frames.shared(h.join(hidx, Seq("__cid"), "left")
-        .select(col("__cid"), col("__ch").as("__cold"),
-          least(col("__ch"), coalesce(col("__chh"), lit(0L))).as("__ch")))
-      // single action per round: materializes `next` AND counts changes
-      val changed = next.agg(
-        sum(when(col("__ch") =!= col("__cold"), 1L).otherwise(0L)))
-        .head.getLong(0)
-      h = next.select(col("__cid"), col("__ch"))
-      done = changed == 0L
-      iter += 1
-    }
-    require(done, s"coreNumbers did not converge in $maxIter rounds")
-    assignment.select(col(idCol), col(clusterCol))
-      .join(h, col(idCol) === col("__cid"), "left")
-      .select(col(idCol), col(clusterCol),
-        coalesce(col("__ch"), lit(0L)).as("core_number"))
-  }
-
-  /** The triangles of a canonical (u < v) edge frame `(__gu, __gv, …)`
-    * by degree-oriented wedge enumeration: each edge is oriented toward
-    * its higher-(degree, id) end (u < v already holds, so equal degrees
-    * keep u → v), and each triangle is found ONCE from its lowest corner
-    * as an oriented wedge b ← src → c with rank(b) < rank(c), closed by
-    * the edge b → c (Σ outdeg² ≈ O(E^1.5) wedge candidates). Returns the
-    * degree frame `(__tid, __tdeg)` and the triangles `(__src, __b, __c,
-    * carry…)`, `carry` taken from the edge src → b. */
-  private def triangles(edges: DataFrame,
-      carry: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    val deg = edges.select(col("__gu").as("__tid"))
-      .unionAll(edges.select(col("__gv").as("__tid")))
-      .groupBy(col("__tid")).agg(count(lit(1)).as("__tdeg"))
-    val keep = col("__du") <= col("__dv")
-    val dirE = edges
-      .join(deg.select(col("__tid").as("__gu"), col("__tdeg").as("__du")),
-        "__gu")
-      .join(deg.select(col("__tid").as("__gv"), col("__tdeg").as("__dv")),
-        "__gv")
-      .select(Seq(when(keep, col("__gu")).otherwise(col("__gv")).as("__src"),
-        when(keep, col("__gv")).otherwise(col("__gu")).as("__dst"),
-        when(keep, col("__dv")).otherwise(col("__du")).as("__dd")) ++
-        carry.map(col): _*)
-    val x = dirE.select(Seq(col("__src"), col("__dst").as("__b"),
-      col("__dd").as("__db")) ++ carry.map(col): _*)
-    val y = dirE.select(col("__src"), col("__dst").as("__c"),
-      col("__dd").as("__dc"))
-    val tri = x.join(y, Seq("__src"))
-      .where(col("__db") < col("__dc") ||
-        (col("__db") === col("__dc") && col("__b") < col("__c")))
-      .join(dirE.select(col("__src").as("__b"), col("__dst").as("__c")),
-        Seq("__b", "__c"))
-      .select(Seq(col("__src"), col("__b"), col("__c")) ++ carry.map(col): _*)
-    (deg, tri)
-  }
-
-  /** Per-edge triangle support over a canonical (u < v) edge frame: each
-    * of its [[triangles]] credits all three of its edges. Edges in no
-    * triangle are absent (callers coalesce to 0). */
-  private def edgeSupport(cur: DataFrame): DataFrame = {
-    val (_, tri) = triangles(cur)
-    tri.select(least(col("__src"), col("__b")).as("__gu"),
-        greatest(col("__src"), col("__b")).as("__gv"))
-      .unionAll(tri.select(least(col("__src"), col("__c")).as("__gu"),
-        greatest(col("__src"), col("__c")).as("__gv")))
-      .unionAll(tri.select(least(col("__b"), col("__c")).as("__gu"),
-        greatest(col("__b"), col("__c")).as("__gv")))
-      .groupBy(col("__gu"), col("__gv"))
-      .agg(count(lit(1)).as("__sup"))
-  }
-
-  /** k-truss of the verified match graph, per cluster (Cohen 2008): the
-    * maximal subgraph in which EVERY surviving edge closes at least
-    * k−2 triangles with other surviving edges — the edge-cohesion
-    * complement to [[coreNumbers]] (a k-truss is always inside the
-    * (k−1)-core, but demands triangle evidence, not just degree):
-    * truss edges are links corroborated by mutual neighbors, exactly
-    * the redundancy a defensible ER merge wants, while bridges and
-    * chains peel away. Classic QA read: an over-merged cluster's
-    * k-truss (k ≥ 4) keeps its verified core and drops the spurious
-    * chain that glued two entities together.
-    *
-    * Algorithm: iterative peeling to the FIXED POINT — compute per-edge
-    * triangle support (degree-oriented wedge join, each triangle from
-    * its lowest-degree corner), delete edges with support < k−2,
-    * repeat until no deletion (peeling is monotone, so extra rounds
-    * are no-ops — which is also what makes the unrolled-SQL oracle
-    * exact with any generous round budget). Deterministic: deletions
-    * depend only on the current edge set, never on order. One action
-    * per round (the surviving-edge count), each round materialized by
-    * [[Frames.shared]], rounds bounded by `maxIter` (each round deletes
-    * ≥ 1 edge or stops, so ≤ |E| rounds; in practice a handful).
-    *
-    * Output: (cluster, u, v, support) — the surviving edges with their
-    * final (converged) support, support ≥ k−2 by construction. */
-  def trussEdges(assignment: DataFrame, edges: DataFrame, k: Int,
-      idCol: String = "id", clusterCol: String = "cluster_id",
-      aCol: String = "url_a", bCol: String = "url_b",
-      maxIter: Int = 10000): DataFrame = {
-    require(k >= 3, s"k must be >= 3, got $k")
-    // read by the count, the finish and the first round's support join
-    var cur = Frames.shared(intraClusterEdges(assignment, edges, idCol,
-      clusterCol, aCol, bCol))
-    var prev = cur.count()
-
-    // Driver finish ([[DriverFinish]]): the maximal k-truss is a UNIQUE
-    // subgraph of the edge set (peeling is confluent — deletions depend
-    // only on the current edge set, never order), so an in-process peel
-    // over adjacency sets of the collected intra-cluster edges computes
-    // the same survivors and final supports as O(rounds) wedge-join
-    // shuffles. Ids are hashed, so only hashable id types finish.
-    val spark = assignment.sparkSession
-    if (DriverFinish.fitsHashed(cur, Seq("__gu", "__gv"),
-        DriverFinish.cap(spark, "truss.driverFinishEdges"), prev)) {
-      val rows = cur.collect() // (__gu, __gv, __gc)
-      val live = new java.util.HashMap[(Any, Any), Any]() // edge -> cluster
-      val adj = new java.util.HashMap[Any, java.util.HashSet[Any]]()
-      def link(u: Any, v: Any): Unit =
-        adj.computeIfAbsent(u, _ => new java.util.HashSet[Any]()).add(v)
-      rows.foreach { r =>
-        live.put((r.get(0), r.get(1)), r.get(2))
-        link(r.get(0), r.get(1)); link(r.get(1), r.get(0))
-      }
-      def support(u: Any, v: Any): Long = {
-        val nu = adj.get(u); val nv = adj.get(v)
-        if (nu == null || nv == null) 0L
-        else {
-          val (small, big) = if (nu.size <= nv.size) (nu, nv) else (nv, nu)
-          var c = 0L
-          val it = small.iterator()
-          while (it.hasNext) if (big.contains(it.next())) c += 1
-          c
-        }
-      }
-      var changed = true
-      while (changed) {
-        changed = false
-        val doomed = new scala.collection.mutable.ArrayBuffer[(Any, Any)]()
-        val it = live.keySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          if (support(e._1, e._2) < k - 2) doomed += e
-        }
-        if (doomed.nonEmpty) {
-          changed = true
-          doomed.foreach { case (u, v) =>
-            live.remove((u, v))
-            val nu = adj.get(u); if (nu != null) nu.remove(v)
-            val nv = adj.get(v); if (nv != null) nv.remove(u)
-          }
-        }
-      }
-      val sch = cur.schema
-      return DriverFinish.frame(spark, new StructType()
-          .add(clusterCol, sch("__gc").dataType).add(aCol, sch("__gu").dataType)
-          .add(bCol, sch("__gv").dataType).add("support", LongType),
-        live.asScala.toSeq.map { case ((u, v), c) => Row(c, u, v, support(u, v)) })
-    }
-
-    var iter = 0
-    var done = prev == 0L
-    while (!done && iter < maxIter) {
-      // round state: the count and the next round's support join
-      val next = Frames.shared(cur
-        .join(edgeSupport(cur), Seq("__gu", "__gv"), "left")
-        .where(coalesce(col("__sup"), lit(0L)) >= k - 2)
-        .select(col("__gu"), col("__gv"), col("__gc")))
-      val n = next.count() // the round's single action; materializes next
-      cur = next
-      done = n == prev
-      prev = n
-      iter += 1
-    }
-    require(done, s"trussEdges did not converge in $maxIter rounds")
-    cur.join(edgeSupport(cur), Seq("__gu", "__gv"), "left")
-      .select(col("__gc").as(clusterCol), col("__gu").as(aCol),
-        col("__gv").as(bCol), coalesce(col("__sup"), lit(0L)).as("support"))
+    * Shapes: one equi-join on the record id, one contingency groupBy
+    * (map-side combine), two marginal groupBys over the CELL-sized
+    * frame, two cell-sized join-backs. Nothing corpus-sized is
+    * windowed. */
+  def clusterDiff(oldAsg: DataFrame, newAsg: DataFrame, idCol: String,
+      oldCol: String = "cluster_id", newCol: String = "cluster_id"): DataFrame = {
+    val o = oldAsg.select(col(idCol).as("__id"), col(oldCol).as("old_id"))
+    val n = newAsg.select(col(idCol).as("__id"), col(newCol).as("new_id"))
+    val c = contingency(o.join(n, "__id"), "old_id", "new_id")
+    c.cells.join(c.byG, "__g").join(c.byT, "__t")
+      .select(col("__g").as("old_id"), col("__t").as("new_id"),
+        col("__ni").as("n"), col("__gn").as("n_old"), col("__tn").as("n_new"))
+      .withColumn("kind",
+        when(col("n") === col("n_old") && col("n") === col("n_new"),
+          lit("stable"))
+          .when(col("n") === col("n_old"), lit("merge"))
+          .when(col("n") === col("n_new"), lit("split"))
+          .otherwise(lit("reshuffle")))
   }
 }

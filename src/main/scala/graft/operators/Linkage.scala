@@ -178,12 +178,16 @@ object Linkage {
         .join(names.withColumnRenamed("url", "url_b").withColumnRenamed("name_norm", "name_b"), "url_b")
     }
 
-  /** (url_a, url_b, jw, dice, score) over [[withNames]] output. */
-  private def composite(named: DataFrame): DataFrame =
+  /** (`idA`, `idB`, jw, dice, score): the one definition of the
+    * north-star composite of `named`'s names `nameA` and `nameB`, JW plus
+    * Dice, summed over the kernel columns so each kernel runs once. */
+  private[graft] def composite(named: DataFrame, idA: String = "url_a",
+      idB: String = "url_b", nameA: String = "name_a",
+      nameB: String = "name_b"): DataFrame =
     named
-      .select(col("url_a"), col("url_b"),
-        jaro_winkler_sim(col("name_a"), col("name_b")).as("jw"),
-        sorensen_dice_sim(col("name_a"), col("name_b")).as("dice"))
+      .select(col(idA), col(idB),
+        jaro_winkler_sim(col(nameA), col(nameB)).as("jw"),
+        sorensen_dice_sim(col(nameA), col(nameB)).as("dice"))
       .withColumn("score", col("jw") + col("dice"))
 
   /** Stage 4 (alternative) — Fellegi-Sunter comparison vectors for the
@@ -632,13 +636,9 @@ object Linkage {
     val rk = right.select(col(idCol).as("id"), col(keyCol).as("key"))
     val ln = left.select(col(idCol).as("id_l"), col(nameCol).as("__name_l"))
     val rn = right.select(col(idCol).as("id_r"), col(nameCol).as("__name_r"))
-    crossCandidatePairs(lk, rk, bucketPairCap).map(
-      _.join(ln, "id_l").join(rn, "id_r")
-        .select(col("id_l"), col("id_r"),
-          jaro_winkler_sim(col("__name_l"), col("__name_r")).as("jw"),
-          sorensen_dice_sim(col("__name_l"), col("__name_r")).as("dice"))
-        .withColumn("score", col("jw") + col("dice"))
-        .where(col("score") >= theta))
+    crossCandidatePairs(lk, rk, bucketPairCap).map(p =>
+      composite(p.join(ln, "id_l").join(rn, "id_r"), "id_l", "id_r",
+        "__name_l", "__name_r").where(col("score") >= theta))
   }
 
   /** Symmetric best match over scored two-corpus pairs: keep (l, r) iff r
@@ -826,101 +826,6 @@ object Linkage {
           .as("sim"))
   }
 
-  /** Blocking quality metrics, the standard pair before committing a
-    * blocking scheme at scale: REDUCTION RATIO (how much of the n(n−1)/2
-    * all-pairs space blocking pruned) and PAIRS COMPLETENESS (what fraction
-    * of known true pairs survive blocking — the recall ceiling every
-    * downstream scorer inherits). One output row; every input reduces to a
-    * count aggregate or a semi-join + count, then three 1-row broadcast
-    * cross joins — nothing here scales with the corpus beyond the
-    * already-materialized inputs. `truePairs` empty → pairs_completeness
-    * null (no evidence, not 100%). */
-  def blockingQuality(records: DataFrame, candidates: DataFrame,
-      truePairs: DataFrame, aCol: String = "url_a",
-      bCol: String = "url_b"): DataFrame = {
-    val n = records.agg(count(lit(1)).as("n_records"))
-    val cand = candidates.agg(count(lit(1)).as("n_candidates"))
-    val tp = truePairs.agg(count(lit(1)).as("n_true"))
-    val covered = truePairs.join(candidates, Seq(aCol, bCol), "left_semi")
-      .agg(count(lit(1)).as("n_true_covered"))
-    n.crossJoin(cand).crossJoin(tp).crossJoin(covered)
-      // n/2.0 first (exact in double — n/2 has <= 52 significant bits for
-      // any realistic corpus), THEN times (n-1): a long n*(n-1) overflows
-      // negative past n ~ 3.04e9, well inside the 10^12-record design
-      // range. The double product rounds above 2^53 total pairs — a
-      // documented, sign-correct rounding, vs. garbage from overflow.
-      // Exact (bit-identical to the old integer path) up to n ~ 9.4e7.
-      .withColumn("total_pairs",
-        (col("n_records").cast("double") / lit(2.0) *
-          (col("n_records") - 1).cast("double")).cast("long"))
-      .withColumn("reduction_ratio",
-        lit(1.0) - col("n_candidates").cast("double") / col("total_pairs").cast("double"))
-      .withColumn("pairs_completeness",
-        when(col("n_true") > 0,
-          col("n_true_covered").cast("double") / col("n_true").cast("double")))
-  }
-
-  /** Dual-system (capture-recapture) estimate of the TRUE match-pair
-    * count from two independently-designed blocking passes — the
-    * label-free complement to [[blockingQuality]] (which needs
-    * `truePairs`): run two blocking schemes built on unrelated evidence
-    * (say phonetic name keys vs address q-grams), score both candidate
-    * sets with the same matcher, and treat each scheme's accepted pairs
-    * as one "capture" of the unknown duplicate population. Under the
-    * standard independence assumption (a pair's chance of being caught by
-    * scheme A doesn't depend on being caught by B — the Lincoln-Petersen
-    * model, the same estimator census coverage evaluation uses), the
-    * overlap pins the population size:
-    *
-    *  - `lincoln_petersen` = n_a·n_b / n_both (NULL when the captures are
-    *    disjoint — no evidence, not infinity);
-    *  - `chapman` = (n_a+1)(n_b+1)/(n_both+1) − 1 — the bias-corrected
-    *    small-overlap variant, always defined;
-    *  - `est_missed` = chapman − n_union — the estimated count of true
-    *    pairs NEITHER scheme surfaced (the number that decides whether a
-    *    third blocking family is worth its candidate volume);
-    *  - `coverage_a` = n_both/n_b, `coverage_b` = n_both/n_a — each
-    *    scheme's estimated recall, measured by the other's capture.
-    *
-    * Correlated schemes (two spellings of the same key) violate
-    * independence and bias the estimate LOW on missed pairs — pick
-    * evidence-disjoint families, and read est_missed as a floor.
-    *
-    * Shapes: each side is normalized once (least/greatest + distinct,
-    * self-loops out), then ONE pair-keyed groupBy folds the side flags
-    * and ONE global aggregate reduces to the 1-row output — counts in
-    * long, every estimate a pinned-order double expression over them, so
-    * the oracle reproduces each value bit-for-bit. Nothing scales past
-    * the candidate sets themselves. */
-  def captureRecapture(pairsA: DataFrame, pairsB: DataFrame,
-      aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
-    def norm(df: DataFrame): DataFrame = df
-      .select(least(col(aCol), col(bCol)).as("__cru"),
-        greatest(col(aCol), col(bCol)).as("__crv"))
-      .where(col("__cru") =!= col("__crv"))
-      .distinct()
-    val tagged = norm(pairsA)
-      .select(col("__cru"), col("__crv"), lit(1L).as("__ca"), lit(0L).as("__cb"))
-      .unionAll(norm(pairsB)
-        .select(col("__cru"), col("__crv"), lit(0L).as("__ca"), lit(1L).as("__cb")))
-    val na = col("n_a").cast("double")
-    val nb = col("n_b").cast("double")
-    val m = col("n_both").cast("double")
-    tagged.groupBy(col("__cru"), col("__crv"))
-      .agg(max(col("__ca")).as("__ca"), max(col("__cb")).as("__cb"))
-      .agg(coalesce(sum(col("__ca")), lit(0L)).as("n_a"),
-        coalesce(sum(col("__cb")), lit(0L)).as("n_b"),
-        coalesce(sum(col("__ca") * col("__cb")), lit(0L)).as("n_both"),
-        count(lit(1)).as("n_union"))
-      .select(col("n_a"), col("n_b"), col("n_both"), col("n_union"),
-        when(col("n_both") > 0, na * nb / m).as("lincoln_petersen"),
-        ((na + 1.0) * (nb + 1.0) / (m + 1.0) - 1.0).as("chapman"),
-        ((na + 1.0) * (nb + 1.0) / (m + 1.0) - 1.0 -
-          col("n_union").cast("double")).as("est_missed"),
-        when(col("n_b") > 0, m / nb).as("coverage_a"),
-        when(col("n_a") > 0, m / na).as("coverage_b"))
-  }
-
   /** Common-neighbor link prediction over BIPARTITE evidence — the
     * collective-linkage signal textual comparators can't see: two entity
     * records that share many relational neighbors (suppliers shipping the
@@ -1045,158 +950,6 @@ object Linkage {
         .as("families"), count(lit(1)).as("n_keys"))
   }
 
-  /** Pairs-completeness / reduction tradeoff CURVE over candidate bucket
-    * caps — the capacity-planning sweep (Christen's PC/RR analysis) run
-    * BEFORE committing to a cap: for each cap c,
-    *
-    *  - `pair_slots` — Σ n(n−1)/2 over blocks with n ≤ c, in
-    *    decimal(38,0) (the [[blockingProfile]] slot convention: per-block
-    *    pair slots BEFORE cross-key dedup — an upper bound on distinct
-    *    candidates, exact when keys don't overlap);
-    *  - `n_true_covered` / `pairs_completeness` — a labeled true pair
-    *    survives cap c iff its SMALLEST shared block fits (≤ c): exactly
-    *    the pairs [[candidatePairs]]' cold tier would generate, counted
-    *    without materializing any pair set.
-    *
-    * One sizing groupBy over the key frame, two equi-joins landing the
-    * block size on each truth pair's shared keys, one min-fold per truth
-    * pair, then a |caps|-way exploded map-side-combined count (the
-    * [[thresholdSweep]] shape). Truth pairs sharing NO key count as
-    * never covered. Caps with no qualifying block still emit a row.
-    * Output: (cap, pair_slots, n_true, n_true_covered,
-    * pairs_completeness), one row per cap ascending. */
-  def blockingQualitySweep(keys: DataFrame, truePairs: DataFrame,
-      caps: Seq[Long], keyCol: String = "key", idCol: String = "url",
-      aCol: String = "url_a", bCol: String = "url_b"): DataFrame = {
-    require(caps.nonEmpty, "blockingQualitySweep needs at least one cap")
-    require(caps.forall(_ >= 1) && caps == caps.sorted &&
-      caps.distinct == caps,
-      s"caps must be >= 1, strictly increasing, got $caps")
-    val spark = keys.sparkSession
-    val capArr = array(caps.map(lit(_)): _*)
-    val dec = "decimal(38,0)"
-    val sizes = keys.groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
-    val slots = sizes
-      .select(col("__n"), explode(capArr).as("cap"))
-      .groupBy(col("cap"))
-      .agg(sum(when(col("__n") <= col("cap"),
-        (col("__n").cast(dec) * (col("__n") - 1).cast(dec)) / 2)
-        .otherwise(lit(0))).cast(dec).as("pair_slots"))
-    val ka = keys.select(col(keyCol).as("__k"), col(idCol).as(aCol))
-    val kb = keys.select(col(keyCol).as("__k"), col(idCol).as(bCol))
-    val tp = truePairs.select(col(aCol), col(bCol)).distinct()
-    val minShared = tp
-      .join(ka, aCol).join(kb, Seq("__k", bCol))
-      .join(sizes.withColumnRenamed(keyCol, "__k"), "__k")
-      .groupBy(col(aCol), col(bCol)).agg(min(col("__n")).as("__minn"))
-    val cov = tp.join(minShared, Seq(aCol, bCol), "left")
-      .select(explode(capArr).as("cap"),
-        when(col("__minn").isNotNull && col("__minn") <= col("cap"), 1L)
-          .otherwise(0L).as("__c"))
-      .groupBy(col("cap")).agg(sum(col("__c")).as("n_true_covered"))
-    val nTrue = tp.agg(count(lit(1)).as("n_true"))
-    val allCaps = spark.range(1).select(explode(capArr).as("cap"))
-    allCaps
-      .join(slots, Seq("cap"), "left")
-      .join(cov, Seq("cap"), "left")
-      .crossJoin(broadcast(nTrue))
-      .select(col("cap"),
-        coalesce(col("pair_slots"), lit(0).cast(dec)).as("pair_slots"),
-        col("n_true"),
-        coalesce(col("n_true_covered"), lit(0L)).as("n_true_covered"),
-        when(col("n_true") > 0, coalesce(col("n_true_covered"), lit(0L))
-          .cast("double") / col("n_true").cast("double"))
-          .as("pairs_completeness"))
-  }
-
-  /** Weakest intra-cluster match edge per entity cluster — the
-    * chain-break review queue: transitive clustering merges a~b~c even
-    * when a~c never scored, so if a cluster is over-merged the culprit
-    * is usually its lowest-scoring edge; this ranks WHERE to look
-    * (complementing [[ClusterRepair]], which applies the reviewer's
-    * verdicts once they've looked). One row per cluster with ≥ 1
-    * intra-cluster edge: (clusterCol, n_edges, weak_ia, weak_ib,
-    * weak_score) — the argmin edge, ties pinned to the smallest
-    * (ia, ib), so the queue is deterministic and
-    * partitioning-independent.
-    *
-    * Scale shape: two id-keyed equi-joins hang the cluster id on each
-    * edge endpoint, then ONE min-combinable struct aggregate — no
-    * window, no pair rematerialization; cost ∝ scored edges. */
-  def weakestLinks(scored: DataFrame, assignment: DataFrame,
-      idCol: String, clusterCol: String = "component",
-      iaCol: String = "ka", ibCol: String = "kb",
-      scoreCol: String = "score"): DataFrame = {
-    val a1 = assignment.select(col(idCol).as("__wia"),
-      col(clusterCol).as("__wca"))
-    val a2 = assignment.select(col(idCol).as("__wib"),
-      col(clusterCol).as("__wcb"))
-    scored.select(col(iaCol).as("__wia"), col(ibCol).as("__wib"),
-        col(scoreCol).as("__ws"))
-      .join(a1, "__wia").join(a2, "__wib")
-      .where(col("__wca") === col("__wcb"))
-      .groupBy(col("__wca"))
-      .agg(count(lit(1)).as("n_edges"),
-        min(struct(col("__ws").as("s"), col("__wia").as("a"),
-          col("__wib").as("b"))).as("__w"))
-      .select(col("__wca").as(clusterCol), col("n_edges"),
-        col("__w").getField("a").as("weak_ia"),
-        col("__w").getField("b").as("weak_ib"),
-        col("__w").getField("s").as("weak_score"))
-  }
-
-  /** Strongest CROSS-cluster scored pairs — the under-merge review queue,
-    * the dual of [[weakestLinks]]: weakestLinks asks "which edge barely
-    * holds this cluster together" (over-merge suspects); this asks
-    * "which scored pair ALMOST merged two clusters" (under-merge
-    * suspects — typically candidates that scored just below θ). Per
-    * unordered cluster pair connected by at least one cross edge, the
-    * top-k edges by (score DESC, ia, ib) plus the total cross-edge count
-    * `n_cross` — a cluster pair held apart by many near misses is the
-    * first merge a reviewer confirms.
-    *
-    * Only records present in `assignment` participate (inner joins);
-    * callers who want never-matched singletons in the queue pass a
-    * completed assignment (id → singleton id) — the
-    * [[graft.operators.EntityIds]] convention.
-    *
-    * Output: (cluster_a, cluster_b, ia, ib, score, rank, n_cross) with
-    * cluster_a < cluster_b and rank 1-based per cluster pair.
-    *
-    * Scale shape: two id-keyed equi-joins hang cluster ids on the edge
-    * endpoints; the count is one map-side-combinable groupBy; the top-k
-    * window's ≤ k filter sits directly above row_number, so
-    * InferWindowGroupLimit bounds every map task to k rows per cluster
-    * pair before the shuffle. Cost ∝ scored edges; nothing quadratic in
-    * clusters or records. */
-  def nearMissPairs(scored: DataFrame, assignment: DataFrame,
-      idCol: String, clusterCol: String = "component",
-      iaCol: String = "ka", ibCol: String = "kb",
-      scoreCol: String = "score", k: Int = 3): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val a1 = assignment.select(col(idCol).as("__nia"),
-      col(clusterCol).as("__nca"))
-    val a2 = assignment.select(col(idCol).as("__nib"),
-      col(clusterCol).as("__ncb"))
-    val cross = scored.select(col(iaCol).as("__nia"), col(ibCol).as("__nib"),
-        col(scoreCol).as("__ns"))
-      .join(a1, "__nia").join(a2, "__nib")
-      .where(col("__nca") =!= col("__ncb"))
-      .select(least(col("__nca"), col("__ncb")).as("cluster_a"),
-        greatest(col("__nca"), col("__ncb")).as("cluster_b"),
-        col("__nia").as("ia"), col("__nib").as("ib"), col("__ns").as("score"))
-    val counts = cross.groupBy(col("cluster_a"), col("cluster_b"))
-      .agg(count(lit(1)).as("n_cross"))
-    cross
-      .withColumn("rank", row_number().over(
-        W.partitionBy(col("cluster_a"), col("cluster_b"))
-          .orderBy(col("score").desc, col("ia"), col("ib"))))
-      .where(col("rank") <= k)
-      .join(counts, Seq("cluster_a", "cluster_b"))
-      .select(col("cluster_a"), col("cluster_b"), col("ia"), col("ib"),
-        col("score"), col("rank"), col("n_cross"))
-  }
-
   /** Pairwise precision/recall/F1 of predicted match pairs vs labeled true
     * pairs, both restricted to candidate pairs (= pairs sharing a blocking
     * key, per BASELINE.json:2,14). */
@@ -1212,108 +965,6 @@ object Linkage {
     val recall = if (tp + fn == 0) 1.0 else tp / (tp + fn)
     val f1 = if (precision + recall == 0) 0.0 else 2 * precision * recall / (precision + recall)
     (precision, recall, f1)
-  }
-
-  /** Decision-threshold sweep: for each θ in `thetas`, the confusion
-    * counts and P/R/F1 of "match ⇔ score ≥ θ" against `labeled` true
-    * pairs — the operating-curve view a θ choice should be read off
-    * (complements the model-driven μ/λ calibration in
-    * [[FellegiSunter.calibrate]] with a label-driven one).
-    *
-    * One pass over the scored pairs: each row fans out to the thresholds
-    * it clears (explode over a literal array, |θ| small) and partial
-    * aggregation folds to |θ| groups map-side, so the added cost over a
-    * single count is ~|θ| comparisons per row — no per-θ rescan, no
-    * window. `labeled` pairs carry a left-join flag; fn = n_true − tp
-    * against ALL labeled pairs, so truth lost by blocking shows up as
-    * irreducible fn (the recall ceiling [[blockingQuality]] measures).
-    *
-    * All counts are 64-bit integers; precision/recall are one exact
-    * long→double division each (null when the denominator is 0 — no
-    * evidence, not perfection); f1 = 2·p·r/(p+r) with that exact
-    * evaluation order, 0.0 when tp = 0. Output: (theta, n_pred, tp, fp,
-    * fn, precision, recall, f1), one row per θ, present even when
-    * nothing clears it. */
-  def thresholdSweep(scored: DataFrame, labeled: DataFrame,
-      thetas: Seq[Double], aCol: String = "id_l", bCol: String = "id_r",
-      scoreCol: String = "score"): DataFrame = {
-    require(thetas.nonEmpty, "thresholdSweep needs at least one threshold")
-    val thetaArr = array(thetas.map(lit(_)): _*)
-    val flagged = scored.select(col(aCol), col(bCol), col(scoreCol))
-      .join(labeled.select(col(aCol), col(bCol), lit(1L).as("__t"))
-        .distinct(), Seq(aCol, bCol), "left")
-      .select(col(scoreCol), coalesce(col("__t"), lit(0L)).as("__t"))
-    val perTheta = flagged
-      .select(col(scoreCol), col("__t"), explode(thetaArr).as("theta"))
-      .where(col(scoreCol) >= col("theta"))
-      .groupBy(col("theta"))
-      .agg(count(lit(1)).as("n_pred"), sum(col("__t")).as("tp"))
-    val allThetas = scored.sparkSession.range(1)
-      .select(explode(thetaArr).as("theta"))
-    val nTrue = labeled.select(col(aCol), col(bCol)).distinct()
-      .agg(count(lit(1)).as("__ntrue"))
-    allThetas.join(perTheta, Seq("theta"), "left")
-      .crossJoin(broadcast(nTrue))
-      .select(col("theta"),
-        coalesce(col("n_pred"), lit(0L)).as("n_pred"),
-        coalesce(col("tp"), lit(0L)).as("tp"),
-        col("__ntrue"))
-      .withColumn("fp", col("n_pred") - col("tp"))
-      .withColumn("fn", col("__ntrue") - col("tp"))
-      .withColumn("precision", when(col("n_pred") > 0,
-        col("tp").cast("double") / col("n_pred").cast("double")))
-      .withColumn("recall", when(col("__ntrue") > 0,
-        col("tp").cast("double") / col("__ntrue").cast("double")))
-      .withColumn("f1", when(col("tp") > 0,
-        lit(2.0) * col("precision") * col("recall") /
-          (col("precision") + col("recall"))).otherwise(lit(0.0)))
-      .select(col("theta"), col("n_pred"), col("tp"), col("fp"), col("fn"),
-        col("precision"), col("recall"), col("f1"))
-  }
-
-  /** Unlinkables analysis — Splink's `unlinkables_chart` recast for a
-    * candidate-pair world: for each threshold θ, how many RECORDS have no
-    * scored pair at or above θ touching them at all. A record is
-    * unlinkable at θ when its best incident score is below θ — or when
-    * blocking never produced a pair for it (best = no evidence), which
-    * counts at EVERY θ. This is the per-record complement of
-    * [[thresholdSweep]]'s per-pair view: the sweep says how the pair
-    * decisions trade off, this says what fraction of the corpus a θ
-    * choice strands with zero matches — the curve read off before
-    * promising "every registry row links to the crawl".
-    *
-    * Shapes: one endpoint-explode + map-side-combinable max per record
-    * (pair-sized in, record-sized out), one left join onto the record
-    * frame, then the [[thresholdSweep]] explode discipline — each record
-    * fans out to all |θ| literals and partial aggregation folds to |θ|
-    * groups map-side. No window, nothing quadratic; every θ row is
-    * present by construction (each record contributes to each θ group).
-    *
-    * All counts are longs; `frac_unlinkable` is one exact long→double
-    * division. `records` must carry distinct ids (it is the corpus
-    * frame, not the pair frame). Output: (theta, n_records,
-    * n_unlinkable, frac_unlinkable), one row per θ. */
-  def unlinkables(records: DataFrame, scored: DataFrame,
-      thetas: Seq[Double], idCol: String = "url",
-      aCol: String = "url_a", bCol: String = "url_b",
-      scoreCol: String = "score"): DataFrame = {
-    require(thetas.nonEmpty, "unlinkables needs at least one threshold")
-    val thetaArr = array(thetas.map(lit(_)): _*)
-    val best = scored.select(col(aCol).as("__uid"), col(scoreCol).as("__us"))
-      .unionAll(scored.select(col(bCol).as("__uid"),
-        col(scoreCol).as("__us")))
-      .groupBy(col("__uid")).agg(max(col("__us")).as("__ubest"))
-    records.select(col(idCol).as("__uid"))
-      .join(best, Seq("__uid"), "left")
-      .select(col("__ubest"), explode(thetaArr).as("theta"))
-      .groupBy(col("theta"))
-      .agg(count(lit(1)).as("n_records"),
-        count(when(col("__ubest").isNull || col("__ubest") < col("theta"),
-          lit(1))).as("n_unlinkable"))
-      .withColumn("frac_unlinkable",
-        col("n_unlinkable").cast("double") / col("n_records").cast("double"))
-      .select(col("theta"), col("n_records"), col("n_unlinkable"),
-        col("frac_unlinkable"))
   }
 
   /** Deterministic decision-rule cascade — the rule-based half of a
@@ -1350,41 +1001,6 @@ object Linkage {
     pairs.withColumn("rule_rank", rank)
       .where(col("rule_rank").isNotNull)
       .withColumn("rule", name)
-  }
-
-  /** Cluster-generation diff — the audit an incremental-ER deployment
-    * runs after every re-clustering: each (old cluster, new cluster)
-    * overlap cell with both marginal sizes and a classification:
-    * `stable` (the cell IS both clusters — the entity rode through
-    * unchanged), `merge` (the old cluster was absorbed whole into a
-    * larger new one), `split` (the new cluster was carved whole out of a
-    * larger old one), `reshuffle` (records crossed cluster boundaries
-    * both ways — the cells to eyeball before shipping). Only ids present
-    * in BOTH assignments participate (adds/removes are a plain anti-join
-    * the caller owns; mixing them in here would make every marginal
-    * ambiguous).
-    *
-    * Shapes: one equi-join on the record id, one contingency groupBy
-    * (map-side combine), two marginal groupBys over the CELL-sized
-    * frame, two cell-sized join-backs. Nothing corpus-sized is
-    * windowed. */
-  def clusterDiff(oldAsg: DataFrame, newAsg: DataFrame, idCol: String,
-      oldCol: String = "cluster_id", newCol: String = "cluster_id"): DataFrame = {
-    val o = oldAsg.select(col(idCol).as("__id"), col(oldCol).as("old_id"))
-    val n = newAsg.select(col(idCol).as("__id"), col(newCol).as("new_id"))
-    val cells = o.join(n, "__id").groupBy(col("old_id"), col("new_id"))
-      .agg(count(lit(1)).as("n"))
-    val oSize = cells.groupBy(col("old_id")).agg(sum(col("n")).as("n_old"))
-    val nSize = cells.groupBy(col("new_id")).agg(sum(col("n")).as("n_new"))
-    cells.join(oSize, "old_id").join(nSize, "new_id")
-      .withColumn("kind",
-        when(col("n") === col("n_old") && col("n") === col("n_new"),
-          lit("stable"))
-          .when(col("n") === col("n_old"), lit("merge"))
-          .when(col("n") === col("n_new"), lit("split"))
-          .otherwise(lit("reshuffle")))
-      .select(col("old_id"), col("new_id"), col("n"), col("n_old"),
-        col("n_new"), col("kind"))
   }
 
   /** Cluster repair from reviewer decisions — the write-back half of the

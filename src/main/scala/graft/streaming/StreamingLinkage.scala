@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.functions.{jaro_winkler_sim, sorensen_dice_sim}
 import graft.operators.Linkage
 
 /** Structured-Streaming face of the linkage engine: continuous page
@@ -57,12 +56,8 @@ object StreamingLinkage {
       col("block_key"))
     val idx = index.select(col("url").as("url_b"), col("name_norm").as("name_b"),
       col("block_key"))
-    s.join(idx, "block_key")
-      .where(col("url_a") =!= col("url_b"))
-      .select(col("url_a"), col("url_b"),
-        (jaro_winkler_sim(col("name_a"), col("name_b")) +
-          sorensen_dice_sim(col("name_a"), col("name_b"))).as("score"))
-      .where(col("score") >= theta)
+    scored(s.join(idx, "block_key").where(col("url_a") =!= col("url_b")),
+      theta)
   }
 
   /** Stream-STREAM windowed join: match records across two live streams
@@ -87,16 +82,20 @@ object StreamingLinkage {
     val r = right.select(col("url").as("url_b"), col("name_norm").as("name_b"),
       col("block_key").as("bk_b"), col("ts").as("ts_b"))
       .withWatermark("ts_b", watermark)
-    l.join(r,
+    scored(l.join(r,
       col("bk_a") === col("bk_b") &&
         col("url_a") =!= col("url_b") &&
         col("ts_b") >= col("ts_a") - expr(s"INTERVAL $maxDelaySeconds SECONDS") &&
-        col("ts_b") <= col("ts_a") + expr(s"INTERVAL $maxDelaySeconds SECONDS"))
-      .select(col("url_a"), col("url_b"),
-        (jaro_winkler_sim(col("name_a"), col("name_b")) +
-          sorensen_dice_sim(col("name_a"), col("name_b"))).as("score"))
-      .where(col("score") >= theta)
+        col("ts_b") <= col("ts_a") + expr(s"INTERVAL $maxDelaySeconds SECONDS")),
+      theta)
   }
+
+  /** (url_a, url_b, score) of the matched rows (url_a, url_b, name_a,
+    * name_b, …) whose [[Linkage.composite]] score clears `theta`. */
+  private def scored(matched: DataFrame, theta: Double): DataFrame =
+    Linkage.composite(matched)
+      .select(col("url_a"), col("url_b"), col("score"))
+      .where(col("score") >= theta)
 
   /** Stateful incremental matching: per block_key, keep the names seen so
     * far (capped) and emit a match for every new arrival that scores ≥

@@ -395,14 +395,14 @@ class BlockingSpec extends SparkFunSuite {
       .toDF("ka", "kb", "score")
     val asg = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L),
       (6L, 6L), (7L, 6L), (8L, 6L)).toDF("id", "component")
-    val got = Linkage.weakestLinks(scored, asg, "id")
+    val got = Evaluation.weakestLinks(scored, asg, "id")
       .orderBy("component").collect()
     assert(got.length == 3)
     assert(got(0).toSeq == Seq(1L, 2L, 2L, 3L, 0.6))
     assert(got(1).toSeq == Seq(4L, 1L, 4L, 5L, 0.8))
     assert(got(2).toSeq == Seq(6L, 2L, 6L, 7L, 0.5))
     // partitioning-independent
-    val again = Linkage.weakestLinks(scored.repartition(5), asg.repartition(3),
+    val again = Evaluation.weakestLinks(scored.repartition(5), asg.repartition(3),
       "id").orderBy("component").collect().map(_.toSeq).toSeq
     assert(again == got.map(_.toSeq).toSeq)
   }
@@ -417,7 +417,7 @@ class BlockingSpec extends SparkFunSuite {
     val newA = Seq((1L, "X"), (2L, "X"), (3L, "Y"), (4L, "Y"), (5L, "Z1"),
       (6L, "Z2"), (7L, "W"), (8L, "V"), (9L, "W"))
       .toDF("id", "cluster_id")
-    val got = Linkage.clusterDiff(oldA, newA, "id")
+    val got = Evaluation.clusterDiff(oldA, newA, "id")
       .collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getString(5))).toMap
@@ -432,7 +432,7 @@ class BlockingSpec extends SparkFunSuite {
     assert(got(("E", "V")) == ((1L, 2L, 1L, "split")))
     assert(got(("F", "W")) == ((1L, 1L, 2L, "merge")))
     // ids absent from either side never appear
-    val extra = Linkage.clusterDiff(
+    val extra = Evaluation.clusterDiff(
       oldA.union(Seq((99L, "GONE")).toDF("id", "cluster_id")), newA, "id")
     assert(!extra.collect().exists(_.getString(0) == "GONE"))
   }
@@ -444,7 +444,7 @@ class BlockingSpec extends SparkFunSuite {
     val records = (1L to 5L).map(i => (i, s"r$i")).toDF("id", "v")
     val candidates = Seq((1L, 2L), (3L, 4L)).toDF("url_a", "url_b")
     val truePairs = Seq((1L, 2L), (1L, 3L)).toDF("url_a", "url_b")
-    val r = Linkage.blockingQuality(records, candidates, truePairs).head()
+    val r = Evaluation.blockingQuality(records, candidates, truePairs).head()
     assert(r.getAs[Long]("n_records") == 5L)
     assert(r.getAs[Long]("n_candidates") == 2L)
     assert(r.getAs[Long]("total_pairs") == 10L)       // 5*4/2
@@ -459,7 +459,7 @@ class BlockingSpec extends SparkFunSuite {
     val records = (1L to 3L).map(i => (i, s"r$i")).toDF("id", "v")
     val candidates = Seq((1L, 2L)).toDF("url_a", "url_b")
     val truePairs = Seq.empty[(Long, Long)].toDF("url_a", "url_b")
-    val r = Linkage.blockingQuality(records, candidates, truePairs).head()
+    val r = Evaluation.blockingQuality(records, candidates, truePairs).head()
     assert(r.getAs[Long]("n_true") == 0L)
     assert(r.isNullAt(r.fieldIndex("pairs_completeness")))
   }
@@ -472,7 +472,7 @@ class BlockingSpec extends SparkFunSuite {
       (2L, 1L), (9L, 9L)).toDF("url_a", "url_b")
     val capB = Seq((1L, 2L), (3L, 4L), (10L, 11L),
       (3L, 4L)).toDF("url_a", "url_b")
-    val r = Linkage.captureRecapture(capA, capB).head()
+    val r = Evaluation.captureRecapture(capA, capB).head()
     assert(r.getAs[Long]("n_a") == 4L && r.getAs[Long]("n_b") == 3L)
     assert(r.getAs[Long]("n_both") == 2L && r.getAs[Long]("n_union") == 5L)
     assert(r.getAs[Double]("lincoln_petersen") == 4.0 * 3.0 / 2.0)
@@ -486,7 +486,7 @@ class BlockingSpec extends SparkFunSuite {
     import spark.implicits._
     val capA = Seq((1L, 2L)).toDF("url_a", "url_b")
     val capB = Seq((3L, 4L)).toDF("url_a", "url_b")
-    val r = Linkage.captureRecapture(capA, capB).head()
+    val r = Evaluation.captureRecapture(capA, capB).head()
     assert(r.getAs[Long]("n_both") == 0L)
     assert(r.isNullAt(r.fieldIndex("lincoln_petersen")))
     assert(r.getAs[Double]("chapman") == 2.0 * 2.0 / 1.0 - 1.0)
@@ -495,7 +495,7 @@ class BlockingSpec extends SparkFunSuite {
   test("captureRecapture: identical captures estimate zero missed") {
     import spark.implicits._
     val cap = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("url_a", "url_b")
-    val r = Linkage.captureRecapture(cap, cap).head()
+    val r = Evaluation.captureRecapture(cap, cap).head()
     assert(r.getAs[Long]("n_both") == 3L && r.getAs[Long]("n_union") == 3L)
     assert(r.getAs[Double]("lincoln_petersen") == 3.0)
     assert(r.getAs[Double]("coverage_a") == 1.0 &&

@@ -58,6 +58,7 @@ class CappedSpec extends SparkFunSuite {
     // rows equal the old derivation: the cap over a fresh banding
     val exact = spark.read.parquet(s"$workDir/03_exact")
     val reference = Tiers.sizes(Dedup.minhashBanded(exact, "doc_id", "text",
+      graft.functions.minhash_sig(_, cfg.numHashes, cfg.hashFamily),
       cfg.numHashes, cfg.bands, cfg.hashFamily), Seq("key"))
       .where(col("n") > cfg.bucketCap)
     val stage = r1.stages.find(_.name == "04_dropped").get

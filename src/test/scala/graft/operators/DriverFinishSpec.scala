@@ -121,9 +121,9 @@ class DriverFinishSpec extends SparkFunSuite {
     }
     same("centers.driverFinishEdges")(
       CenterClustering.centers(edges, "url_a", "url_b", "sim"))
-    val cores = same("core.driverFinishEdges")(Evaluation.coreNumbers(asg, edges))
+    val cores = same("core.driverFinishEdges")(GraphMetrics.coreNumbers(asg, edges))
     assert(cores.map(_(2)) == Set(2L))
-    val truss = same("truss.driverFinishEdges")(Evaluation.trussEdges(asg, edges, 3))
+    val truss = same("truss.driverFinishEdges")(GraphMetrics.trussEdges(asg, edges, 3))
     assert(truss.size == 6) // the two triangles 1-2-3 and 4-5-6
   }
 }

@@ -291,7 +291,7 @@ class EvaluationSpec extends SparkFunSuite {
     // (2,9) shares nothing
     val truth = Seq((1L, 2L), (4L, 5L), (1L, 4L), (2L, 9L))
       .toDF("url_a", "url_b")
-    val got = Linkage.blockingQualitySweep(keys, truth, Seq(1L, 2L, 3L))
+    val got = Evaluation.blockingQualitySweep(keys, truth, Seq(1L, 2L, 3L))
       .orderBy("cap")
       .select("cap", "pair_slots", "n_true", "n_true_covered")
       .collect().map(r => (r.getLong(0), r.getDecimal(1).longValueExact(),
@@ -300,7 +300,7 @@ class EvaluationSpec extends SparkFunSuite {
     // cap 2: k2+k3 fit -> 1+1 slots, covers (4,5) and (1,4)
     // cap 3: all fit -> 3+1+1 slots, covers 3 of 4
     assert(got == Seq((1L, 0L, 4L, 0L), (2L, 2L, 4L, 2L), (3L, 5L, 4L, 3L)))
-    val pc = Linkage.blockingQualitySweep(keys, truth, Seq(3L))
+    val pc = Evaluation.blockingQualitySweep(keys, truth, Seq(3L))
       .select("pairs_completeness").head().getDouble(0)
     assert(pc == 0.75)
   }

@@ -25,14 +25,14 @@ class GraphMetricsSpec extends SparkFunSuite {
     (1L, 2L), (3L, 2L), (4L, 4L), (4L, 5L)).toDF("url_a", "url_b")
 
   test("nodeDegrees: normalization, cross-cluster exclusion, zero rows") {
-    val got = Evaluation.nodeDegrees(asg, edges)
+    val got = GraphMetrics.nodeDegrees(asg, edges)
       .orderBy("id").as[(Long, String, Long)].collect().toSeq
     assert(got == Seq((1L, "A", 2L), (2L, "A", 2L), (3L, "A", 3L),
       (4L, "A", 1L), (5L, "B", 1L), (6L, "B", 1L), (7L, "C", 0L)))
   }
 
   test("graphMetrics: density/centralisation and their NULL floors") {
-    val rows = Evaluation.graphMetrics(asg, edges)
+    val rows = GraphMetrics.graphMetrics(asg, edges)
       .orderBy("cluster_id").collect()
     assert(rows.length == 3)
     // A: n=4, E=4, Σdeg=8, max=3
@@ -52,7 +52,7 @@ class GraphMetricsSpec extends SparkFunSuite {
 
   test("graphMetrics: edgeless cluster set — all zero/NULL, no absences") {
     val none = Seq.empty[(Long, Long)].toDF("url_a", "url_b")
-    val rows = Evaluation.graphMetrics(asg, none).collect()
+    val rows = GraphMetrics.graphMetrics(asg, none).collect()
     assert(rows.length == 3)
     assert(rows.forall(r => r.getLong(2) == 0L && r.getLong(3) == 0L))
   }
@@ -70,13 +70,13 @@ class GraphMetricsSpec extends SparkFunSuite {
     val refDeg = (1 to n).map { i =>
       (i.toLong, canon.count { case (a, b) => a == i || b == i }.toLong)
     }.toMap
-    val got = Evaluation.nodeDegrees(
+    val got = GraphMetrics.nodeDegrees(
         asgSeq.toDF("id", "cluster_id").repartition(5),
         edgeSeq.toDF("url_a", "url_b").repartition(7))
       .select("id", "degree").as[(Long, Long)].collect().toMap
     assert(got == refDeg)
     // and Σdeg = 2E per cluster, folded through graphMetrics
-    val gm = Evaluation.graphMetrics(asgSeq.toDF("id", "cluster_id"),
+    val gm = GraphMetrics.graphMetrics(asgSeq.toDF("id", "cluster_id"),
         edgeSeq.toDF("url_a", "url_b"))
       .select("cluster_id", "n_edges").as[(String, Long)].collect().toMap
     val refE = canon.groupBy(e => cluster(e._1)).map { case (c, es) =>
@@ -88,7 +88,7 @@ class GraphMetricsSpec extends SparkFunSuite {
     val recs = (1L to 5L).toDF("url")
     val scored = Seq((1L, 2L, 0.9), (2L, 3L, 0.5))
       .toDF("url_a", "url_b", "score")
-    val got = Linkage.unlinkables(recs, scored, Seq(0.4, 0.6, 0.95))
+    val got = Evaluation.unlinkables(recs, scored, Seq(0.4, 0.6, 0.95))
       .orderBy("theta").as[(Double, Long, Long, Double)].collect().toSeq
     // best: 1→0.9, 2→0.9, 3→0.5, 4/5→no evidence (count everywhere)
     assert(got == Seq((0.4, 5L, 2L, 0.4), (0.6, 5L, 3L, 0.6),
@@ -99,7 +99,7 @@ class GraphMetricsSpec extends SparkFunSuite {
     val recs = (1L to 4L).toDF("url")
     val scored = Seq.empty[(Long, Long, Double)]
       .toDF("url_a", "url_b", "score")
-    val got = Linkage.unlinkables(recs, scored, Seq(0.1, 0.9))
+    val got = Evaluation.unlinkables(recs, scored, Seq(0.1, 0.9))
       .orderBy("theta").as[(Double, Long, Long, Double)].collect().toSeq
     assert(got == Seq((0.1, 4L, 4L, 1.0), (0.9, 4L, 4L, 1.0)))
   }
@@ -107,16 +107,25 @@ class GraphMetricsSpec extends SparkFunSuite {
   test("unlinkables: boundary is strict (best == θ is linkable)") {
     val recs = (1L to 2L).toDF("url")
     val scored = Seq((1L, 2L, 0.7)).toDF("url_a", "url_b", "score")
-    val got = Linkage.unlinkables(recs, scored, Seq(0.7))
+    val got = Evaluation.unlinkables(recs, scored, Seq(0.7))
       .as[(Double, Long, Long, Double)].head()
     assert(got == ((0.7, 2L, 0L, 0.0)))
+  }
+
+  test("unlinkables: a repeated threshold is rejected, not counted twice") {
+    // one θ listed twice would count every record twice in its row
+    val recs = (1L to 2L).toDF("url")
+    val scored = Seq((1L, 2L, 0.7)).toDF("url_a", "url_b", "score")
+    val e = intercept[IllegalArgumentException](
+      Evaluation.unlinkables(recs, scored, Seq(0.7, 0.7)))
+    assert(e.getMessage.contains("unlinkables"), e.getMessage)
   }
 
   // ------------------------------------------------------- bridge edges
 
   private def bridgeSet(asgDf: org.apache.spark.sql.DataFrame,
       edgeDf: org.apache.spark.sql.DataFrame, cap: Int = 1 << 20) =
-    Evaluation.bridgeEdges(asgDf, edgeDf, maxClusterEdges = cap).out
+    GraphMetrics.bridgeEdges(asgDf, edgeDf, maxClusterEdges = cap).out
       .where(col("is_bridge"))
       .select("url_a", "url_b").as[(Long, Long)].collect().toSet
 
@@ -131,7 +140,7 @@ class GraphMetricsSpec extends SparkFunSuite {
     val pend = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
       .toDF("url_a", "url_b")
     assert(bridgeSet(chainAsg, pend) == Set((3L, 4L)))
-    assert(Evaluation.bridgeEdges(chainAsg, pend).out.count() == 4L)
+    assert(GraphMetrics.bridgeEdges(chainAsg, pend).out.count() == 4L)
   }
 
   test("bridgeEdges: duplicates/reversals don't fake a cycle; " +
@@ -180,7 +189,7 @@ class GraphMetricsSpec extends SparkFunSuite {
 
   private def cutSet(asgDf: org.apache.spark.sql.DataFrame,
       edgeDf: org.apache.spark.sql.DataFrame) =
-    Evaluation.articulationRecords(asgDf, edgeDf).out
+    GraphMetrics.articulationRecords(asgDf, edgeDf).out
       .where(col("is_articulation"))
       .select("id").as[Long].collect().toSet
 
@@ -199,7 +208,7 @@ class GraphMetricsSpec extends SparkFunSuite {
     assert(cutSet(asg5, twoTri) == Set(3L))
     assert(bridgeSet(asg5, twoTri) == Set.empty)
     // one row per edge-incident record, flag both ways
-    val all = Evaluation.articulationRecords(asg5, twoTri).out
+    val all = GraphMetrics.articulationRecords(asg5, twoTri).out
       .as[(String, Long, Boolean)].collect().toSet
     assert(all == Set(("A", 1L, false), ("A", 2L, false), ("A", 3L, true),
       ("A", 4L, false), ("A", 5L, false)))
@@ -246,12 +255,12 @@ class GraphMetricsSpec extends SparkFunSuite {
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("url_a", "url_b")
     assert(bridgeSet(asgDf, chain, cap = 3) == Set.empty)
-    val dropped = Evaluation.bridgeEdges(asgDf, chain,
+    val dropped = GraphMetrics.bridgeEdges(asgDf, chain,
         maxClusterEdges = 3).dropped
       .as[(String, Long)].collect().toSeq
     assert(dropped == Seq(("A", 4L)))
     // at cap ≥ size nothing drops
-    assert(Evaluation.bridgeEdges(asgDf, chain,
+    assert(GraphMetrics.bridgeEdges(asgDf, chain,
       maxClusterEdges = 4).dropped.count() == 0L)
   }
 
@@ -262,11 +271,11 @@ class GraphMetricsSpec extends SparkFunSuite {
     val asgDf = Seq((1L, ""), (2L, ""), (3L, ""), (4L, null), (5L, null),
       (6L, null)).toDF("id", "cluster_id")
     val e = Seq((1L, 2L), (2L, 3L), (4L, 5L), (5L, 6L)).toDF("url_a", "url_b")
-    val bridges = Evaluation.bridgeEdges(asgDf, e, maxClusterEdges = 3)
+    val bridges = GraphMetrics.bridgeEdges(asgDf, e, maxClusterEdges = 3)
     assert(bridges.out.as[(String, Long, Long, Boolean)].collect().toSet ==
       Set(("", 1L, 2L, true), ("", 2L, 3L, true)))
     assert(bridges.dropped.count() == 0L)
-    val cuts = Evaluation.articulationRecords(asgDf, e, maxClusterEdges = 3)
+    val cuts = GraphMetrics.articulationRecords(asgDf, e, maxClusterEdges = 3)
     assert(cuts.out.as[(String, Long, Boolean)].collect().toSet ==
       Set(("", 1L, false), ("", 2L, true), ("", 3L, false)))
     assert(cuts.dropped.count() == 0L)
@@ -283,11 +292,11 @@ class GraphMetricsSpec extends SparkFunSuite {
     val hexId = (c: String) => hex(bin(c))
     def flags(asg: org.apache.spark.sql.DataFrame,
         edges: org.apache.spark.sql.DataFrame, ids: String => Column) = (
-      Evaluation.bridgeEdges(asg, edges).out
+      GraphMetrics.bridgeEdges(asg, edges).out
         .select(col("cluster_id").cast("string"), ids("url_a"), ids("url_b"),
           col("is_bridge"))
         .as[(String, String, String, Boolean)].collect().toSet,
-      Evaluation.articulationRecords(asg, edges).out
+      GraphMetrics.articulationRecords(asg, edges).out
         .select(col("cluster_id").cast("string"), ids("id"),
           col("is_articulation"))
         .as[(String, String, Boolean)].collect().toSet)
@@ -312,7 +321,7 @@ class GraphMetricsSpec extends SparkFunSuite {
     // C: edgeless singleton → zero row. The shared `edges` frame carries
     // a duplicate, a reversal, a self-loop, and a cross-cluster edge —
     // none may fake a wedge or close a triangle.
-    val rows = Evaluation.clusterTriangles(asg, edges)
+    val rows = GraphMetrics.clusterTriangles(asg, edges)
       .orderBy("cluster_id").collect()
     assert(rows.length == 3)
     assert(rows(0).getLong(1) == 1L && rows(0).getLong(2) == 5L &&
@@ -328,7 +337,7 @@ class GraphMetricsSpec extends SparkFunSuite {
       .toDF("id", "cluster_id")
     val e = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (5L, 6L), (6L, 7L), (7L, 8L), (8L, 5L)).toDF("url_a", "url_b")
-    val got = Evaluation.clusterTriangles(asg2, e)
+    val got = GraphMetrics.clusterTriangles(asg2, e)
       .orderBy("cluster_id").collect()
     assert(got(0).getLong(1) == 4L && got(0).getLong(2) == 12L &&
       got(0).getDouble(3) == 1.0)
@@ -357,7 +366,7 @@ class GraphMetricsSpec extends SparkFunSuite {
         .groupBy(identity).view.mapValues(_.size.toLong).toSeq
         .groupBy { case (id, _) => cluster(id) }
         .view.mapValues(_.map { case (_, d) => d * (d - 1) / 2 }.sum).toMap
-      val got = Evaluation.clusterTriangles(
+      val got = GraphMetrics.clusterTriangles(
           asgSeq.toDF("id", "cluster_id").repartition(5),
           edgeSeq.toDF("url_a", "url_b").repartition(7))
         .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2))))
@@ -395,7 +404,7 @@ class GraphMetricsSpec extends SparkFunSuite {
     // A: triangle {1,2,3} + tail 3-4 → cores 2,2,2,1; B: edge → 1,1;
     // C: singleton → 0. Noise edges (dup/reverse/self/cross) must not
     // perturb anything.
-    val got = Evaluation.coreNumbers(asg, edges)
+    val got = GraphMetrics.coreNumbers(asg, edges)
       .orderBy("id").as[(Long, String, Long)].collect().toSeq
     assert(got == Seq((1L, "A", 2L), (2L, "A", 2L), (3L, "A", 2L),
       (4L, "A", 1L), (5L, "B", 1L), (6L, "B", 1L), (7L, "C", 0L)))
@@ -403,7 +412,7 @@ class GraphMetricsSpec extends SparkFunSuite {
 
   test("coreNumbers: edgeless graph converges immediately to all-zero") {
     val none = Seq.empty[(Long, Long)].toDF("url_a", "url_b")
-    val got = Evaluation.coreNumbers(asg, none)
+    val got = GraphMetrics.coreNumbers(asg, none)
       .select("core_number").as[Long].collect()
     assert(got.length == 7 && got.forall(_ == 0L))
   }
@@ -428,7 +437,7 @@ class GraphMetricsSpec extends SparkFunSuite {
     val n = 36
     val (asgSeq, edgeSeq, canon) = randomGraph(seed, n, 3, 150)
     val ref = peelCores((1 to n).map(_.toLong), canon)
-    val got = Evaluation.coreNumbers(
+    val got = GraphMetrics.coreNumbers(
         asgSeq.toDF("id", "cluster_id").repartition(5),
         edgeSeq.toDF("url_a", "url_b").repartition(7))
       .select("id", "core_number").as[(Long, Long)].collect().toMap
@@ -444,7 +453,7 @@ class GraphMetricsSpec extends SparkFunSuite {
     val asg6 = (1L to 6L).map((_, "A")).toDF("id", "cluster_id")
     val e6 = (for { u <- 1L to 6L; v <- (u + 1) to 6L
       if !(u == 1L && v == 2L) } yield (u, v)).toDF("url_a", "url_b")
-    val got = Evaluation.coreNumbers(asg6, e6)
+    val got = GraphMetrics.coreNumbers(asg6, e6)
       .select("core_number").as[Long].collect()
     assert(got.length == 6 && got.forall(_ == 4L))
   }
@@ -477,21 +486,21 @@ class GraphMetricsSpec extends SparkFunSuite {
       val asg = (1L to 5L).map((_, "A")).toDF("id", "cluster_id")
       val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
         .toDF("url_a", "url_b")
-      val k3 = Evaluation.trussEdges(asg, e, k = 3)
+      val k3 = GraphMetrics.trussEdges(asg, e, k = 3)
         .select("url_a", "url_b", "support").as[(Long, Long, Long)]
         .collect().toSet
       assert(k3 == Set((1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 2L),
         (2L, 4L, 1L), (3L, 4L, 1L)))
-      assert(Evaluation.trussEdges(asg, e, k = 4).count() == 0L)
+      assert(GraphMetrics.trussEdges(asg, e, k = 4).count() == 0L)
       // a K5 survives k=5 (every edge closes 3 triangles), dies at k=6
       val asg5 = (1L to 5L).map((_, "A")).toDF("id", "cluster_id")
       val e5 = (for { u <- 1L to 5L; v <- (u + 1) to 5L } yield (u, v))
         .toDF("url_a", "url_b")
-      val t5 = Evaluation.trussEdges(asg5, e5, k = 5)
+      val t5 = GraphMetrics.trussEdges(asg5, e5, k = 5)
       assert(t5.count() == 10L &&
         t5.select("support").as[Long].collect().forall(_ == 3L))
-      assert(Evaluation.trussEdges(asg5, e5, k = 6).count() == 0L)
-      intercept[IllegalArgumentException](Evaluation.trussEdges(asg, e, 2))
+      assert(GraphMetrics.trussEdges(asg5, e5, k = 6).count() == 0L)
+      intercept[IllegalArgumentException](GraphMetrics.trussEdges(asg, e, 2))
     }
     withConf("graft.truss.driverFinishEdges", "0")(bowtie())
     bowtie()
@@ -504,7 +513,7 @@ class GraphMetricsSpec extends SparkFunSuite {
       def nb(x: Long) = kept.collect { case (a, b) if a == x => b
                                        case (a, b) if b == x => a }
       val ref = kept.map { case (u, v) => (u, v, (nb(u) & nb(v)).size.toLong) }
-      val got = Evaluation.trussEdges(
+      val got = GraphMetrics.trussEdges(
           asgSeq.toDF("id", "cluster_id").repartition(5),
           edgeSeq.toDF("url_a", "url_b").repartition(7), k)
         .select("url_a", "url_b", "support").as[(Long, Long, Long)]

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
 
-/** Pins [[Linkage.nearMissPairs]] — the under-merge review queue (the
-  * dual of [[Linkage.weakestLinks]]): cross-cluster scored pairs, top-k
+/** Pins [[Evaluation.nearMissPairs]] — the under-merge review queue (the
+  * dual of [[Evaluation.weakestLinks]]): cross-cluster scored pairs, top-k
   * per unordered cluster pair by (score DESC, ia, ib), plus the total
   * cross-edge count. */
 class NearMissSpec extends SparkFunSuite {
@@ -28,7 +28,7 @@ class NearMissSpec extends SparkFunSuite {
   test("cross-cluster pairs ranked per cluster pair with counts") {
     import spark.implicits._
     val (scored, asg) = fixture
-    val got = Linkage.nearMissPairs(scored, asg, "id", k = 3)
+    val got = Evaluation.nearMissPairs(scored, asg, "id", k = 3)
       .as[(Long, Long, Long, Long, Double, Int, Long)].collect().toSet
     assert(got == Set(
       (1L, 3L, 1L, 4L, 0.95, 1, 2L),
@@ -40,7 +40,7 @@ class NearMissSpec extends SparkFunSuite {
   test("k = 1 keeps only the strongest edge; n_cross still totals") {
     import spark.implicits._
     val (scored, asg) = fixture
-    val got = Linkage.nearMissPairs(scored, asg, "id", k = 1)
+    val got = Evaluation.nearMissPairs(scored, asg, "id", k = 1)
       .as[(Long, Long, Long, Long, Double, Int, Long)].collect().toSet
     assert(got.map(r => (r._1, r._2)) == Set((1L, 3L), (3L, 5L), (5L, 6L)))
     assert(got.find(r => (r._1, r._2) == (1L, 3L)).get._7 == 2L)
@@ -54,7 +54,7 @@ class NearMissSpec extends SparkFunSuite {
       (3L, 4L, 0.9), (1L, 2L, 0.9), // same cluster pair, same score
       (1L, 99L, 0.99)               // 99 not assigned -> dropped
     ).toDF("ka", "kb", "score")
-    val got = Linkage.nearMissPairs(scored, asg, "id", k = 2)
+    val got = Evaluation.nearMissPairs(scored, asg, "id", k = 2)
       .orderBy("rank").select("ia", "ib", "rank")
       .as[(Long, Long, Int)].collect().toSeq
     assert(got == Seq((1L, 2L, 1), (3L, 4L, 2)))
@@ -63,13 +63,13 @@ class NearMissSpec extends SparkFunSuite {
   test("partitioning-independent and k >= 1 enforced") {
     import spark.implicits._
     val (scored, asg) = fixture
-    val a = Linkage.nearMissPairs(scored.repartition(7), asg, "id", k = 2)
+    val a = Evaluation.nearMissPairs(scored.repartition(7), asg, "id", k = 2)
       .collect().toSet
-    val b = Linkage.nearMissPairs(scored.repartition(1),
+    val b = Evaluation.nearMissPairs(scored.repartition(1),
       asg.repartition(3), "id", k = 2).collect().toSet
     assert(a == b && a.nonEmpty)
     intercept[IllegalArgumentException] {
-      Linkage.nearMissPairs(scored, asg, "id", k = 0)
+      Evaluation.nearMissPairs(scored, asg, "id", k = 0)
     }
   }
 }

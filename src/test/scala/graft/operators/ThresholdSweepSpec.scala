@@ -13,7 +13,7 @@ class ThresholdSweepSpec extends SparkFunSuite {
   private lazy val labeled = Seq((1L, 1L), (3L, 3L)).toDF("id_l", "id_r")
 
   test("confusion counts and P/R/F1 per threshold") {
-    val rows = Linkage.thresholdSweep(scored, labeled, Seq(0.6, 0.8, 0.95))
+    val rows = Evaluation.thresholdSweep(scored, labeled, Seq(0.6, 0.8, 0.95))
       .orderBy("theta").collect()
     assert(rows.length == 3)
     // θ=0.6: preds {0.9 tp, 0.7 fp}; truth (3,3) never scored → fn
@@ -34,7 +34,7 @@ class ThresholdSweepSpec extends SparkFunSuite {
   }
 
   test("empty labels → recall NULL, fp-only curve") {
-    val rows = Linkage.thresholdSweep(scored,
+    val rows = Evaluation.thresholdSweep(scored,
       Seq.empty[(Long, Long)].toDF("id_l", "id_r"), Seq(0.6)).collect()
     assert(rows.head.getLong(1) == 2 && rows.head.getLong(2) == 0)
     assert(rows.head.isNullAt(6))
@@ -42,7 +42,17 @@ class ThresholdSweepSpec extends SparkFunSuite {
 
   test("duplicate labeled pairs count once") {
     val dup = Seq((1L, 1L), (1L, 1L), (3L, 3L)).toDF("id_l", "id_r")
-    val r = Linkage.thresholdSweep(scored, dup, Seq(0.6)).collect().head
+    val r = Evaluation.thresholdSweep(scored, dup, Seq(0.6)).collect().head
     assert(r.getLong(2) == 1 && r.getLong(4) == 1)
+  }
+
+  test("a repeated threshold is rejected, not counted twice") {
+    // one θ listed twice would fan each pair out to its group twice:
+    // n_pred and tp doubled, fn = n_true − tp negative
+    val e = intercept[IllegalArgumentException](
+      Evaluation.thresholdSweep(scored, labeled, Seq(0.6, 0.6)))
+    assert(e.getMessage.contains("thresholdSweep"), e.getMessage)
+    intercept[IllegalArgumentException](
+      Evaluation.thresholdSweep(scored, labeled, Seq(0.8, 0.6)))
   }
 }
